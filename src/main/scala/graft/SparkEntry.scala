@@ -113,7 +113,7 @@ object SparkEntry {
       // 10% of edges ~ 5.7x |V| delta: far past the |D| > |V|/2 crossover,
       // so T1 runs the adjacency-intersect arm (same rows, same oracle)
       graft.functions.Graph.triangleCountDelta(half, delta,
-        t1ViaAdjacency = graft.Tuning.triDeltaAdjacency).orderBy("node")
+        t1ViaAdjacency = true).orderBy("node")
     },
     // The r15 partitioned-state MAINTAINER driven end-to-end at the gate
     // (the strongest IVM pattern: maintained state must land on the
@@ -166,7 +166,7 @@ object SparkEntry {
       // same 10%-of-edges delta as graph_triangles_delta: past the
       // |D| > |V|/2 crossover, T1 takes the adjacency-intersect arm
       val d = graft.functions.Graph.triangleCountDelta(half, half.filter(isDelta),
-        t1ViaAdjacency = graft.Tuning.triDeltaAdjacency)
+        t1ViaAdjacency = true)
       graft.functions.Graph.applyTriangleDelta(fullCounts, d, sign = -1L)
         .orderBy("node")
     },

@@ -1455,8 +1455,8 @@ object Curation {
     * BOTH slices — the per-(doc, src, frozen-flag, trigram)
     * multiplicities collapse to the frozen LM, the frozen per-doc
     * surprisal (and its tercile cuts), and the appended per-doc
-    * surprisal under that LM. The r17 form composed
-    * `ccnetFreezeCuts` + `ccnetCutsStalenessFrom`, paying two SEQUENTIAL
+    * surprisal under that LM. Composing `ccnetFreezeCuts` +
+    * `ccnetCutsStalenessFrom` gives the same row but pays two SEQUENTIAL
     * extraction chains (frozen 2/3, then appended 1/3, each a full
     * barrier pipeline); the arithmetic here is bit-identical — same
     * per-slice multiplicities, same literal-total surprisalQ10, same
@@ -1471,14 +1471,6 @@ object Curation {
       idCol: String,
       srcCol: String,
       isFrozen: Column): DataFrame = {
-    if (!graft.Tuning.ccnetOneExtract) {
-      // the r17 two-chain composition, kept for the A/B runner
-      val frozen = ccnetFreezeCuts(df.filter(isFrozen), textCol, idCol, srcCol)
-      val out = ccnetCutsStalenessFrom(frozen, df.filter(!isFrozen),
-        textCol, idCol, srcCol)
-      Checkpoints.unpersist(frozen.lmModel)
-      return out
-    }
     val base = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       col(srcCol).as("src"), isFrozen.as("__fr"))
     val td = TextAnalysis.charTrigrams(base, "__text", "doc_id",
@@ -1550,19 +1542,13 @@ object Curation {
     // through LogicalRDD, and per round only the node-sized label frame
     // shuffles to it. The half pin is released once the symmetric copy
     // is materialized (one resident edge copy, not two).
-    val edges =
-      if (!graft.Tuning.ccPrepartition)
-        half.union(half.select(col("dst").as("src"), col("src").as("dst")))
-      else {
-        val p = math.max(1L,
-          (2L * Checkpoints.storageBytes(half) + (64L << 20) - 1) / (64L << 20))
-        val s = half
-          .union(half.select(col("dst").as("src"), col("src").as("dst")))
-          .repartition(p.toInt, col("dst"))
-          .localCheckpoint()
-        Checkpoints.unpersist(half)
-        s
-      }
+    val p = math.max(1L,
+      (2L * Checkpoints.storageBytes(half) + (64L << 20) - 1) / (64L << 20))
+    val edges = half
+      .union(half.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(p.toInt, col("dst"))
+      .localCheckpoint()
+    Checkpoints.unpersist(half)
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint()
@@ -1607,12 +1593,10 @@ object Curation {
       it += 1
     }
     roundsOut.foreach(_.set(it))
-    // the final labels frame is checkpointed; the edge blocks (half, and
-    // the pre-partitioned symmetric copy when that branch ran) served
-    // only the (already-executed) iteration joins — release them now
-    // rather than waiting for the context cleaner
-    Checkpoints.unpersist(half)
-    if (graft.Tuning.ccPrepartition) Checkpoints.unpersist(edges)
+    // the final labels frame is checkpointed; the pre-partitioned edge
+    // blocks served only the (already-executed) iteration joins —
+    // release them now rather than waiting for the context cleaner
+    Checkpoints.unpersist(edges)
     // A silent exit via the iteration cap would hand the caller unmerged
     // (wrong) cluster labels; a chain-shaped component longer than
     // maxIters must fail loudly, not quietly.

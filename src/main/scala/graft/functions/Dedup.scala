@@ -246,16 +246,15 @@ object Dedup {
       .filter(least(col("na") - col("pa"), col("nb") - col("pb")) *
         (1000L + minJaccardMilli) >= (col("na") + col("nb")) * minJaccardMilli)
       .select(col("a"), col("b")).distinct()
-    // verify-tail spread (Tuning.pairVerifySpread scaladoc): pin the two
-    // verify exchanges — which the joins pay regardless — at the
-    // compute-slot count, so the byte-small but CPU-dense
-    // array_intersect rows never collapse to one AQE-coalesced task
+    // verify-tail spread: pin the two verify exchanges — which the joins
+    // pay regardless — at the compute-slot count. The candidate frame is
+    // byte-small but each row costs an array_intersect over full shingle
+    // sets, so AQE's byte-based coalescing would otherwise collapse each
+    // verify stage to ONE task; an explicit count AQE cannot coalesce
     val vp = df.sparkSession.sparkContext.defaultParallelism
-    def spread(f: DataFrame, k: String): DataFrame =
-      if (graft.Tuning.pairVerifySpread) f.repartition(vp, col(k)) else f
-    spread(cands, "a")
+    cands.repartition(vp, col("a"))
       .join(ordered.select(col("doc").as("a"), col("set").as("sa"), col("nd").as("na")), "a")
-      .transform(spread(_, "b"))
+      .repartition(vp, col("b"))
       .join(ordered.select(col("doc").as("b"), col("set").as("sb"), col("nd").as("nb")), "b")
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
       .withColumn("uni", col("na") + col("nb") - col("inter"))
@@ -646,47 +645,29 @@ object Dedup {
     IndexLayout.writeParams(df.sparkSession, path, Map(
       "n" -> n.toLong, "bands" -> bands.toLong,
       "rowsPerBand" -> rowsPerBand.toLong, "buckets" -> buckets.toLong))
-    // surgical build fill (r18): the band/shingle encode is crypto-dense
-    // and a single-split input runs it in ONE task (StageProf: 1.77 s +
-    // 0.54 s single-task of dedup_retract_labels' 12.6). Filled, the
-    // band write MUST re-align to the bucket tree (Tuning.buildFill
-    // caller contract) or the 32-task upstream writes tasks x buckets
-    // files; the shingle write lands in ONE batch dir, where a few
-    // dozen files is no explosion — left unaligned so the heavy shingle
-    // arrays write in parallel.
-    val filled = graft.Tuning.buildFill(df, idCol)
-    val src = filled.getOrElse(df)
     val spark = df.sparkSession
     def writeBands(keys: DataFrame): Unit = keys
       .select(col("doc"), col("band"), col("bh"))
       .withColumn("bucket", bandBucket(col("bh"), buckets))
       .withColumn("batch", lit(IndexLayout.BaseBatch))
-      // align the shuffle to the bucket tree (guide §6): one file per
-      // bucket dir instead of tasks x buckets small files; buckets are
-      // hash-even, so the write stays parallel at scale
-      .transform(b => if (filled.isDefined) b.repartition(col("bucket"))
-        else graft.Tuning.align(b, Seq("bucket")))
       .write.mode("overwrite").partitionBy("bucket", "batch").parquet(s"$path/bands")
-    def writeShingles(): Unit = withHashedShingles(src, textCol, n, "sh")
+    // ONE shingling pass: shingles land first and the band keys minhash
+    // the WRITTEN longs, so the hashed-shingle expression — the most
+    // expensive narrow transform in the dedup family — runs once, not
+    // twice (same sh -> same minhash -> same bands). Shingles-first is
+    // also the safer crash order: shingle rows without band rows are
+    // unreachable (candidate generation starts from bands).
+    withHashedShingles(df, textCol, n, "sh")
       .select(col(idCol).as("doc"), col("sh"))
       .filter(size(col("sh")) > 0)
       .withColumn("batch", lit(IndexLayout.BaseBatch))
       .write.mode("overwrite").partitionBy("batch").parquet(s"$path/shingles")
-    if (graft.Tuning.lshOnePass) {
-      // ONE shingling pass (Tuning.lshOnePass scaladoc): shingles land
-      // first, the band keys minhash the WRITTEN longs — the
-      // hashed-shingle expression runs once, not twice
-      writeShingles()
-      if (IndexLayout.hasBatchDirs(spark, s"$path/shingles"))
-        writeBands(bandKeysFromShingles(
-          spark.read.parquet(s"$path/shingles").select(col("doc"), col("sh")),
-          bands, rowsPerBand))
-      else // all-token-less corpus: no shingle files to read back
-        writeBands(bandKeys(src, textCol, idCol, n, bands, rowsPerBand))
-    } else { // two-scan form, kept for the A/B runner
-      writeBands(bandKeys(src, textCol, idCol, n, bands, rowsPerBand))
-      writeShingles()
-    }
+    if (IndexLayout.hasBatchDirs(spark, s"$path/shingles"))
+      writeBands(bandKeysFromShingles(
+        spark.read.parquet(s"$path/shingles").select(col("doc"), col("sh")),
+        bands, rowsPerBand))
+    else // all-token-less corpus: no shingle files to read back
+      writeBands(bandKeys(df, textCol, idCol, n, bands, rowsPerBand))
   }
 
   /** Append a document batch's band keys + shingle sets into an existing
@@ -730,28 +711,20 @@ object Dedup {
         .withColumn("bucket", bandBucket(col("bh"), buckets))
         .withColumn("batch", lit(id)),
       s"$path/bands", Seq("bucket", "batch"))
-    def writeShingles(): Unit = IndexLayout.overwriteBatchPartitions(
+    // ONE shingling pass per batch, shingles first (see writeLshIndex)
+    IndexLayout.overwriteBatchPartitions(
       withHashedShingles(df, textCol, n, "sh")
         .select(col(idCol).as("doc"), col("sh"))
         .filter(size(col("sh")) > 0)
         .withColumn("batch", lit(id)),
       s"$path/shingles", Seq("batch"))
-    if (graft.Tuning.lshOnePass) {
-      // ONE shingling pass per batch (Tuning.lshOnePass scaladoc);
-      // shingles-first is also the safer crash order — shingle rows
-      // without band rows are unreachable (candidates start from bands)
-      writeShingles()
-      if (IndexLayout.hasBatchDirs(spark, s"$path/shingles"))
-        writeBands(bandKeysFromShingles(
-          spark.read.parquet(s"$path/shingles")
-            .filter(col("batch").cast("long") === id)
-            .select(col("doc"), col("sh")),
-          bands, rowsPerBand))
-      else writeBands(bandKeys(df, textCol, idCol, n, bands, rowsPerBand))
-    } else { // two-scan form, kept for the A/B runner
-      writeBands(bandKeys(df, textCol, idCol, n, bands, rowsPerBand))
-      writeShingles()
-    }
+    if (IndexLayout.hasBatchDirs(spark, s"$path/shingles"))
+      writeBands(bandKeysFromShingles(
+        spark.read.parquet(s"$path/shingles")
+          .filter(col("batch").cast("long") === id)
+          .select(col("doc"), col("sh")),
+        bands, rowsPerBand))
+    else writeBands(bandKeys(df, textCol, idCol, n, bands, rowsPerBand))
   }
 
   /** Per-table outcome of a [[deleteFromLshIndex]]: the band table's and

@@ -901,8 +901,9 @@ object Graph {
     * BROADCAST (it is hinted onto both attaches; letting it sort-merge
     * would shuffle every delta row with its attached array, re-creating
     * the wedge fan-out in array clothing). The broadcast-fit caveat is
-    * ENFORCED since r18 by a two-level size gate
-    * ([[graft.Tuning.triAdjMaxBytes]], default 256 MB): a plan-stats
+    * ENFORCED since r18 by a two-level size gate (`adjMaxBytes`,
+    * default 256 MB: "a few hundred MB is usually fine" for a broadcast,
+    * and the arm broadcasts two projections of the table): a plan-stats
     * pre-gate (64x headroom for join-inflated local estimates) skips
     * the adjacency build outright for corpus-sized edge tables, and the
     * checkpointed adjacency's ACTUAL storage bytes decide the broadcast
@@ -912,7 +913,8 @@ object Graph {
     * graphs and across the gate's fallbacks).
     */
   def triangleCountDelta(halfWithDelta: DataFrame, deltaHalf: DataFrame,
-      pinDelta: Boolean = true, t1ViaAdjacency: Boolean = false): DataFrame = {
+      pinDelta: Boolean = true, t1ViaAdjacency: Boolean = false,
+      adjMaxBytes: Long = 256L << 20): DataFrame = {
     val d0 = deltaHalf.select(col("src").as("u"), col("dst").as("v"))
     val d = if (pinDelta) d0.localCheckpoint() else d0
     val full = halfWithDelta.select(col("src"), col("dst"))
@@ -939,10 +941,10 @@ object Graph {
       // (2) the precise gate on the checkpointed adjacency's ACTUAL
       // storage bytes (getRDDStorageInfo — the blocks just
       // materialized), which releases the build and falls back when it
-      // exceeds graft.Tuning.triAdjMaxBytes. Both fallbacks are the
+      // exceeds `adjMaxBytes`. Both fallbacks are the
       // wedge arm: bit-identical output (GraphOpsSpec pins all routes).
       else if (full.queryExecution.optimizedPlan.stats.sizeInBytes >
-          BigInt(64L) * graft.Tuning.triAdjMaxBytes) wedgeT1
+          BigInt(64L) * adjMaxBytes) wedgeT1
       else {
         // the adjacency rides as an EXPLICIT broadcast on both attaches:
         // size estimates put the array column past the auto threshold and
@@ -954,7 +956,7 @@ object Graph {
         val symAdj = sym.groupBy(col("src"))
           .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
           .localCheckpoint()
-        if (Checkpoints.storageBytes(symAdj) > graft.Tuning.triAdjMaxBytes) {
+        if (Checkpoints.storageBytes(symAdj) > adjMaxBytes) {
           Checkpoints.unpersist(symAdj)
           wedgeT1
         } else d
@@ -1424,13 +1426,12 @@ object Graph {
         // no-op pass the overlap pays for the ordering). oldOpt's file
         // listing snapshotted at frame creation, so the concurrent
         // batch=<id> write is invisible to the fold's scans.
-        def writeLog(): Unit = IndexLayout.overwriteBatchPartitions(
-          delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
         val writeF =
           if (delta.isEmpty) None
-          else if (!graft.Tuning.triOverlap) { writeLog(); None }
-          else Some(scala.concurrent.Future { writeLog() }(
-            scala.concurrent.ExecutionContext.global))
+          else Some(scala.concurrent.Future {
+            IndexLayout.overwriteBatchPartitions(
+              delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
+          }(scala.concurrent.ExecutionContext.global))
         val dAgg =
           try d.groupBy(col("node"))
             .agg(sum(col("tri_delta")).as("tri_cnt"))
@@ -1462,13 +1463,11 @@ object Graph {
           // same §2.6 overlap as the insert path: the resolved-set write
           // (crash-replay evidence, must land before the merge's marker)
           // runs on a pool thread under the delta fold
-          def writeResolved(): Unit =
-            resolved.write.mode("overwrite").parquet(delDir)
           val writeF =
             if (resolved.isEmpty) None
-            else if (!graft.Tuning.triOverlap) { writeResolved(); None }
-            else Some(scala.concurrent.Future { writeResolved() }(
-              scala.concurrent.ExecutionContext.global))
+            else Some(scala.concurrent.Future {
+              resolved.write.mode("overwrite").parquet(delDir)
+            }(scala.concurrent.ExecutionContext.global))
           val d = triangleCountDelta(
             oldOpt.getOrElse(resolved), resolved, pinDelta = false)
           val dAgg =

@@ -622,13 +622,9 @@ object Incremental {
           .select((keys :+ cnt).map(col): _*)
         mergeCounts(slice, deltaAgg.drop("__p"), keys, cnt)
       }
-    // re-derive __p (a pure function of the keys), align the write to the
-    // slice tree (one file per __p dir instead of tasks x slices — the
-    // guide §6 small-files rule; a maintainer stream otherwise grows the
-    // state's file count every micro-batch), and pin the result: Spark
-    // refuses to overwrite a path still feeding the running plan
-    val merged = graft.Tuning.align(merged0.select(col("*"), part), Seq("__p"))
-      .localCheckpoint()
+    // re-derive __p (a pure function of the keys) and pin the result:
+    // Spark refuses to overwrite a path still feeding the running plan
+    val merged = merged0.select(col("*"), part).localCheckpoint()
     val emptied = {
       val live = merged.select(col("__p")).distinct()
         .collect().map(_.getLong(0)).toSet
@@ -732,9 +728,8 @@ object Incremental {
             .select(col("*"), part)
             .unionByName(delta)
         }
-      // align the write to the slice tree (one file per __p dir — the
-      // mergeCountsPartitioned rule) before pinning
-      val merged = graft.Tuning.align(merged0, Seq("__p")).localCheckpoint()
+      // pinned: the overwrite below replaces slices this plan reads
+      val merged = merged0.localCheckpoint()
       try {
         if (!merged.isEmpty)
           merged.write.mode("overwrite")

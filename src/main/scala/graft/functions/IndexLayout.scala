@@ -235,15 +235,7 @@ private[graft] object IndexLayout {
     * append primitive. `partCols` must end with `batch`.
     */
   def overwriteBatchPartitions(df: DataFrame, path: String, partCols: Seq[String]): Unit = {
-    // Align the shuffle to the partition tree before the write (guide §6
-    // small-files rule): without it every upstream task holding rows of a
-    // partition value opens its own writer there, so one append lands
-    // tasks x dirs files (measured 32 x 64 on the bm25 postings path) and
-    // every later search pays the open-cost tax CompactionProbe measured
-    // at 9.6x. One exchange of the batch (appends are micro-batch-sized
-    // by contract) buys exactly one file per partition dir.
-    graft.Tuning.align(df, partCols)
-      .write
+    df.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCols: _*)

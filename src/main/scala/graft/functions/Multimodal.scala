@@ -283,9 +283,6 @@ object Multimodal {
     bandedPrints(hashes, maxHamming)
       .withColumn("bucket", printBucket(col("band"), col("bv"), buckets))
       .withColumn("batch", lit(IndexLayout.BaseBatch))
-      // align the shuffle to the bucket tree (guide §6): one file per
-      // bucket dir instead of tasks x buckets small files
-      .transform(graft.Tuning.align(_, Seq("bucket")))
       .write.mode("overwrite").partitionBy("bucket", "batch")
       .parquet(s"$path/prints")
   }
@@ -309,7 +306,6 @@ object Multimodal {
     try bandedPrints(hashes, maxHamming)
       .withColumn("bucket", printBucket(col("band"), col("bv"), buckets))
       .withColumn("batch", lit(batchId))
-      .transform(graft.Tuning.align(_, Seq("bucket"))) // one file per bucket dir (guide §6)
       .write.mode("overwrite").partitionBy("bucket", "batch")
       .parquet(s"$path/prints")
     finally prev match {

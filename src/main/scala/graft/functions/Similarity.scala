@@ -574,9 +574,6 @@ object Similarity {
       .select(col("vec_id"), col("j"), col("code"))
       .join(cells, "vec_id")
       .withColumn("batch", lit(IndexLayout.BaseBatch))
-      // align the shuffle to the cell tree (guide §6): one file per cell
-      // dir instead of tasks x cells small files
-      .transform(graft.Tuning.align(_, Seq("cell")))
       .write.mode("overwrite").partitionBy("cell", "batch").parquet(path)
   }
 
@@ -633,7 +630,6 @@ object Similarity {
         .select(col("vec_id"), col("j"), col("code"))
         .join(cells, "vec_id")
         .withColumn("batch", lit(through))
-        .transform(graft.Tuning.align(_, Seq("cell"))) // one file per cell dir (guide §6)
         .write.partitionBy("cell", "batch").parquet(staging)
     }
   }

@@ -213,59 +213,50 @@ object TextAnalysis {
       buckets: Int = 64): Unit = {
     val spark = df.sparkSession
     IndexLayout.writeParams(spark, path, Map("buckets" -> buckets.toLong))
-    // surgical build fill (r18): a single-split input tokenizes the
-    // whole corpus in ONE task; filled, the postings write re-aligns to
-    // the bucket tree (Tuning.buildFill caller contract)
-    val filled = graft.Tuning.buildFill(df, idCol)
-    val base = filled.getOrElse(df).select(col(idCol).as("doc_id"),
-      filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0).as("toks"))
-    if (graft.Tuning.idxOnePass) {
-      // ONE tokenize pass (Tuning.idxOnePass scaladoc): len rides the
-      // explode as a per-doc grouping constant — no lens join, no
-      // second/third corpus tokenize; stats derive from the written
-      // postings (tot = sum(tf)) + a column-pruned input count (n).
-      base.select(col("doc_id"), size(col("toks")).cast("long").as("len"),
-          explode(col("toks")).as("t"))
-        .groupBy(col("doc_id"), col("len"), col("t")).agg(count(lit(1)).as("tf"))
-        .select(col("doc_id"), col("t"), col("tf"), col("len"))
-        .withColumn("bucket", pmod(portableHash48(col("t")), lit(buckets.toLong)))
-        .withColumn("batch", lit(IndexLayout.BaseBatch))
-        // align the shuffle to the bucket tree (guide §6): one file per
-        // bucket dir instead of tasks x buckets small files
-        .transform(b => if (filled.isDefined) b.repartition(col("bucket"))
-          else graft.Tuning.align(b, Seq("bucket")))
-        .write.mode("overwrite").partitionBy("bucket", "batch")
-        .parquet(s"$path/postings")
-      val n = df.count() // == base.count() (row-preserving select), but
-      // never pays the buildFill exchange and prunes to a metadata count
-      // an all-token-less corpus lands no postings files at all; its
-      // tot is 0 by construction (AnalysisException = empty-dir schema
-      // inference, the only failure a just-written dir can produce)
-      val tot =
-        try spark.read.parquet(s"$path/postings")
-          .agg(coalesce(sum(col("tf")), lit(0L)).as("tot"))
-          .head().getAs[Long]("tot")
-        catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-      spark.range(1).select(lit(n).as("n"), lit(tot).as("tot"),
-          lit(buckets.toLong).as("buckets"))
-        .withColumn("batch", lit(IndexLayout.BaseBatch))
-        .write.mode("overwrite").partitionBy("batch").parquet(s"$path/stats")
-    } else {
-      // lens-join form, kept for the A/B runner
-      val lens = base.select(col("doc_id"), size(col("toks")).cast("long").as("len"))
-      base.select(col("doc_id"), explode(col("toks")).as("t"))
-        .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
-        .join(lens, "doc_id")
-        .withColumn("bucket", pmod(portableHash48(col("t")), lit(buckets.toLong)))
-        .withColumn("batch", lit(IndexLayout.BaseBatch))
-        .transform(b => if (filled.isDefined) b.repartition(col("bucket"))
-          else graft.Tuning.align(b, Seq("bucket")))
-        .write.mode("overwrite").partitionBy("bucket", "batch").parquet(s"$path/postings")
-      lens.agg(count(lit(1)).as("n"), coalesce(sum(col("len")), lit(0L)).as("tot"),
-          lit(buckets.toLong).as("buckets"))
-        .withColumn("batch", lit(IndexLayout.BaseBatch))
-        .write.mode("overwrite").partitionBy("batch").parquet(s"$path/stats")
-    }
+    postingsOf(df, textCol, idCol, buckets, IndexLayout.BaseBatch)
+      .write.mode("overwrite").partitionBy("bucket", "batch")
+      .parquet(s"$path/postings")
+    batchStats(df, path, buckets, IndexLayout.BaseBatch)
+      .write.mode("overwrite").partitionBy("batch").parquet(s"$path/stats")
+  }
+
+  /** One batch's postings (doc_id, t, tf, len, bucket, batch) in ONE
+    * tokenize pass: len rides the explode as a per-doc grouping constant,
+    * so there is no lens join and no second tokenize of the input.
+    */
+  private def postingsOf(df: DataFrame, textCol: String, idCol: String,
+      buckets: Int, batch: Long): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+        filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0).as("toks"))
+      .select(col("doc_id"), size(col("toks")).cast("long").as("len"),
+        explode(col("toks")).as("t"))
+      .groupBy(col("doc_id"), col("len"), col("t")).agg(count(lit(1)).as("tf"))
+      .select(col("doc_id"), col("t"), col("tf"), col("len"))
+      .withColumn("bucket", pmod(portableHash48(col("t")), lit(buckets.toLong)))
+      .withColumn("batch", lit(batch))
+
+  /** One batch's stats row (n, tot, buckets, batch), taken AFTER its
+    * postings are written: tot = sum(tf) over the written partitions
+    * (every token contributes exactly 1 to its (doc, t) posting) and
+    * n = a column-pruned count of the input (token-less docs hold no
+    * postings but count toward n). The caller writes it LAST — the
+    * batch's commit marker.
+    */
+  private def batchStats(df: DataFrame, path: String, buckets: Int,
+      batch: Long): DataFrame = {
+    val spark = df.sparkSession
+    val n = df.count()
+    // an all-token-less batch lands no postings files at all; its tot is
+    // 0 by construction (AnalysisException = empty-dir schema inference,
+    // the only failure a just-written dir can produce)
+    val tot =
+      try spark.read.parquet(s"$path/postings")
+        .filter(col("batch").cast("long") === batch)
+        .agg(coalesce(sum(col("tf")), lit(0L)).as("tot"))
+        .head().getAs[Long]("tot")
+      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    spark.range(1).select(lit(n).as("n"), lit(tot).as("tot"),
+      lit(buckets.toLong).as("buckets"), lit(batch).as("batch"))
   }
 
   /** Append a document batch into an existing [[writeInvertedIndex]]
@@ -337,56 +328,11 @@ object TextAnalysis {
       require(id > t,
         s"batch $id was consumed by a compaction (through=$t) — a replay " +
           "here would duplicate its rows; appends must resume above it"))
-    val base = df.select(col(idCol).as("doc_id"),
-      filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0).as("toks"))
-    if (graft.Tuning.idxOnePass) {
-      // ONE tokenize pass (Tuning.idxOnePass scaladoc) — the same shape
-      // as the base writer: len rides the explode, stats derive from the
-      // written batch partitions + a column-pruned input count; the
-      // stats row still lands LAST (the batch's commit marker).
-      IndexLayout.overwriteBatchPartitions(
-        base.select(col("doc_id"), size(col("toks")).cast("long").as("len"),
-            explode(col("toks")).as("t"))
-          .groupBy(col("doc_id"), col("len"), col("t")).agg(count(lit(1)).as("tf"))
-          .select(col("doc_id"), col("t"), col("tf"), col("len"))
-          .withColumn("bucket", pmod(portableHash48(col("t")), lit(buckets.toLong)))
-          .withColumn("batch", lit(id)),
-        s"$path/postings", Seq("bucket", "batch"))
-      val n = df.count() // == base.count(), pruned to a metadata count
-      val tot =
-        try spark.read.parquet(s"$path/postings")
-          .filter(col("batch").cast("long") === id)
-          .agg(coalesce(sum(col("tf")), lit(0L)).as("tot"))
-          .head().getAs[Long]("tot")
-        catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-      IndexLayout.overwriteBatchPartitions(
-        spark.range(1).select(lit(n).as("n"), lit(tot).as("tot"),
-          lit(buckets.toLong).as("buckets"), lit(id).as("batch")),
-        s"$path/stats", Seq("batch"))
-      return
-    }
-    // lens-join form, kept for the A/B runner
-    val lens = base.select(col("doc_id"), size(col("toks")).cast("long").as("len"))
-      .localCheckpoint() // feeds both the postings join and the stats row
-    try {
-      IndexLayout.overwriteBatchPartitions(
-        base.select(col("doc_id"), explode(col("toks")).as("t"))
-          .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
-          .join(lens, "doc_id")
-          .withColumn("bucket", pmod(portableHash48(col("t")), lit(buckets.toLong)))
-          .withColumn("batch", lit(id)),
-        s"$path/postings", Seq("bucket", "batch"))
-      IndexLayout.overwriteBatchPartitions(
-        lens.agg(count(lit(1)).as("n"), coalesce(sum(col("len")), lit(0L)).as("tot"),
-            lit(buckets.toLong).as("buckets"))
-          .withColumn("batch", lit(id)),
-        s"$path/stats", Seq("batch"))
-    } finally {
-      // a days-long bm25IngestStream calls this per micro-batch: without
-      // the unpersist each call pins a dead checkpoint block pair until
-      // driver GC (the dedupIngestStream rule)
-      Checkpoints.unpersist(lens); ()
-    }
+    IndexLayout.overwriteBatchPartitions(
+      postingsOf(df, textCol, idCol, buckets, id),
+      s"$path/postings", Seq("bucket", "batch"))
+    IndexLayout.overwriteBatchPartitions(
+      batchStats(df, path, buckets, id), s"$path/stats", Seq("batch"))
   }
 
   /** GDPR-style delete from a [[writeInvertedIndex]] layout — the
@@ -1437,33 +1383,18 @@ object TextAnalysis {
         // both priors) — each re-read the corpus text and re-hashed it
         // for the train split; the cube is <= 4 x |labels| rows and every
         // former aggregate is an exact partial re-sum of it (counts
-        // partitioned then summed — bit-identical). The switch keeps the
-        // three-scan form callable for the A/B runner.
-        val cubeOpt =
-          if (graft.Tuning.nbPriorCube) Some(flagged
-            .groupBy(col("__fr"), col("__tr"), col("__label"))
-            .agg(count(lit(1)).as("n")).localCheckpoint())
-          else None
-        val (cnt, priorsF, priorsA) = cubeOpt match {
-          case Some(cube) =>
-            (cube.agg(
-              sum(when(col("__fr"), col("n")).otherwise(lit(0L))).as("n_frozen"),
-              sum(when(!col("__fr"), col("n")).otherwise(lit(0L))).as("n_appended"))
-              .head(),
-              cube.filter(col("__fr") && col("__tr"))
-                .groupBy(col("__label").as("c")).agg(sum(col("n")).as("d_c")),
-              cube.filter(!col("__fr") && col("__tr"))
-                .groupBy(col("__label").as("c")).agg(sum(col("n")).as("d_c")))
-          case None => (
-            flagged.agg(
-              sum(when(col("__fr"), lit(1L)).otherwise(lit(0L))).as("n_frozen"),
-              sum(when(!col("__fr"), lit(1L)).otherwise(lit(0L))).as("n_appended"))
-              .head(),
-            flagged.filter(col("__fr") && col("__tr"))
-              .groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c")),
-            flagged.filter(!col("__fr") && col("__tr"))
-              .groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c")))
-        }
+        // partitioned then summed — bit-identical).
+        val cube = flagged
+          .groupBy(col("__fr"), col("__tr"), col("__label"))
+          .agg(count(lit(1)).as("n")).localCheckpoint()
+        val cnt = cube.agg(
+            sum(when(col("__fr"), col("n")).otherwise(lit(0L))).as("n_frozen"),
+            sum(when(!col("__fr"), col("n")).otherwise(lit(0L))).as("n_appended"))
+          .head()
+        val priorsF = cube.filter(col("__fr") && col("__tr"))
+          .groupBy(col("__label").as("c")).agg(sum(col("n")).as("d_c"))
+        val priorsA = cube.filter(!col("__fr") && col("__tr"))
+          .groupBy(col("__label").as("c")).agg(sum(col("n")).as("d_c"))
         // ccF feeds the frozen model AND the frozen mass: pin the bounded
         // cube so the extraction is not replayed per consumer
         val ccFp = ccF.localCheckpoint()
@@ -1487,7 +1418,7 @@ object TextAnalysis {
             buckets = buckets)
         } finally {
           Checkpoints.unpersist(ccFp)
-          cubeOpt.foreach(Checkpoints.unpersist)
+          Checkpoints.unpersist(cube)
           ()
         }
       } finally { Checkpoints.unpersist(triA); () }

@@ -267,13 +267,7 @@ object Lake {
       // a fully-emptied affected set has nothing to overwrite with —
       // skip the write (it would only churn a _SUCCESS at the root)
       if (survivorKeys.nonEmpty)
-        // align the rewrite to the partition tree (guide §6): one file
-        // per rewritten dir instead of tasks x dirs — the write stage
-        // otherwise spends its wall opening/closing a writer per (task,
-        // dir) pair (measured 9.9 s task time at 1.2 s CPU on the bm25
-        // delete row), and every later read pays the file-count tax
-        graft.Tuning.align(survivors, partCols)
-          .write.mode("overwrite")
+        survivors.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partCols: _*).parquet(dir)
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

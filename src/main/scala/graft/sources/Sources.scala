@@ -101,8 +101,7 @@ object Tables {
   private def fillScanParallelism(
       spark: SparkSession, path: String, df: DataFrame,
       idCol: String): DataFrame = {
-    val target = graft.Tuning.scanFill(spark.sparkContext.defaultParallelism)
-      .getOrElse(return df)
+    val target = spark.sparkContext.defaultParallelism
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     val p = new org.apache.hadoop.fs.Path(path)

@@ -536,56 +536,77 @@ class FunctionsSpec extends SparkSpec {
     assert(ex.getMessage.contains("buckets"))
   }
 
-  test("idxOnePass / lshOnePass: the one-pass index builds (r18) land " +
-      "bit-identical tables to the lens-join / two-scan forms — " +
-      "postings+stats and bands+shingles, base build AND append, " +
-      "including token-less docs (count toward n, hold no postings)") {
-    val all = (0L until 120L).map { i =>
+  test("one-pass index builds land exactly the reference tables — " +
+      "postings+stats vs a plain tokenize, bands+shingles vs bandKeys / " +
+      "withHashedShingles, base build AND append, including token-less " +
+      "docs (count toward n, hold no postings)") {
+    val docs = (0L until 120L).map { i =>
       val rare = if (i % 20 == 0) " zeta" else ""
       // every 37th doc tokenizes to NOTHING — the n-vs-postings edge
       val text = if (i % 37 == 0) ""
         else s"alpha filler words w${i % 7} w${i % 11} here$rare"
       (i, text)
-    }.toDF("doc_id", "text")
+    }
+    val all = docs.toDF("doc_id", "text")
     val base = all.filter(col("doc_id") < 80)
     val b1 = all.filter(col("doc_id") >= 80)
-    def rows(path: String, cols: Seq[String]): Seq[String] =
-      spark.read.parquet(path).select(cols.map(col): _*)
-        .collect().map(_.toString).sorted.toSeq
-    def flipped[A](key: String, flag: String)(body: => A): A = {
-      System.setProperty(key, flag)
-      try body finally System.clearProperty(key)
-    }
-    def buildInv(flag: String): (Seq[String], Seq[String]) =
-      flipped("graft.idxOnePass", flag) {
-        val idx = java.nio.file.Files
-          .createTempDirectory(s"graft-op-inv$flag").toString
-        TextAnalysis.writeInvertedIndex(base, "text", "doc_id", idx, buckets = 8)
-        TextAnalysis.appendToInvertedIndex(b1, "text", "doc_id", idx,
-          buckets = 8, batchId = Some(0L))
-        (rows(s"$idx/postings",
-          Seq("doc_id", "t", "tf", "len", "bucket", "batch")),
-          rows(s"$idx/stats", Seq("n", "tot", "buckets", "batch")))
+    def batchOf(id: Long): Long = if (id < 80) IndexLayout.BaseBatch else 0L
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def read(path: String, cols: Seq[String]): Seq[String] =
+      rows(spark.read.parquet(path).select(cols.map(col): _*))
+    // bucket of a 12-hex-digit hash prefix, computed outside Spark
+    def bucketOfHex(hex: String): Long = java.lang.Long.parseLong(hex.take(12), 16) % 8
+    def md5Hex(s: String): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+
+    // inverted index vs a plain-Scala tokenize of the same 120 docs
+    val inv = java.nio.file.Files.createTempDirectory("graft-op-inv").toString
+    TextAnalysis.writeInvertedIndex(base, "text", "doc_id", inv, buckets = 8)
+    TextAnalysis.appendToInvertedIndex(b1, "text", "doc_id", inv,
+      buckets = 8, batchId = Some(0L))
+    val toks = docs.map { case (id, text) =>
+      id -> text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq }
+    assert(toks.count(_._2.isEmpty) === 4, "fixture lost its token-less docs")
+    val refPostings = toks.flatMap { case (id, ts) =>
+      ts.groupBy(identity).toSeq.map { case (t, occ) =>
+        (id, t, occ.size.toLong, ts.size.toLong, bucketOfHex(md5Hex(t)), batchOf(id))
       }
-    val (p1, s1) = buildInv("1")
-    val (p0, s0) = buildInv("0")
-    assert(p1 === p0, "one-pass postings diverged from the lens-join form")
-    assert(s1 === s0, "one-pass stats diverged from the lens-join form")
-    def buildLsh(flag: String): (Seq[String], Seq[String]) =
-      flipped("graft.lshOnePass", flag) {
-        val idx = java.nio.file.Files
-          .createTempDirectory(s"graft-op-lsh$flag").toString
-        Dedup.writeLshIndex(base, "text", "doc_id", idx,
-          n = 3, bands = 4, rowsPerBand = 4, buckets = 8)
-        Dedup.appendToLshIndex(b1, "text", "doc_id", idx,
-          n = 3, bands = 4, rowsPerBand = 4, buckets = 8, batchId = Some(0L))
-        (rows(s"$idx/bands", Seq("doc", "band", "bh", "bucket", "batch")),
-          rows(s"$idx/shingles", Seq("doc", "sh", "batch")))
-      }
-    val (bb1, sh1) = buildLsh("1")
-    val (bb0, sh0) = buildLsh("0")
-    assert(bb1 === bb0, "one-pass bands diverged from the two-scan form")
-    assert(sh1 === sh0, "one-pass shingles diverged from the two-scan form")
+    }.toDF("doc_id", "t", "tf", "len", "bucket", "batch")
+    val postingCols = Seq("doc_id", "t", "tf", "len", "bucket", "batch")
+    assert(read(s"$inv/postings", postingCols) ===
+      rows(refPostings.select(postingCols.map(col): _*)),
+      "postings diverged from the plain tokenize")
+    val refStats = toks.groupBy { case (id, _) => batchOf(id) }.toSeq
+      .map { case (b, ds) => (ds.size.toLong, ds.map(_._2.size.toLong).sum, 8L, b) }
+      .toDF("n", "tot", "buckets", "batch")
+    assert(read(s"$inv/stats", Seq("n", "tot", "buckets", "batch")) === rows(refStats),
+      "stats diverged from the plain tokenize (token-less docs count toward n)")
+
+    // LSH index vs bandKeys / withHashedShingles over the same docs
+    val lsh = java.nio.file.Files.createTempDirectory("graft-op-lsh").toString
+    Dedup.writeLshIndex(base, "text", "doc_id", lsh,
+      n = 3, bands = 4, rowsPerBand = 4, buckets = 8)
+    Dedup.appendToLshIndex(b1, "text", "doc_id", lsh,
+      n = 3, bands = 4, rowsPerBand = 4, buckets = 8, batchId = Some(0L))
+    val slices = Seq(base -> IndexLayout.BaseBatch, b1 -> 0L)
+    val refBands = slices.map { case (df, b) =>
+      Dedup.bandKeys(df, "text", "doc_id", n = 3, bands = 4, rowsPerBand = 4)
+        .select(col("doc"), col("band"), col("bh"), lit(b).as("batch"))
+    }.reduce(_ unionAll _)
+    assert(read(s"$lsh/bands", Seq("doc", "band", "bh", "batch")) === rows(refBands),
+      "bands diverged from bandKeys")
+    val bucketed = spark.read.parquet(s"$lsh/bands")
+      .select(col("bh"), col("bucket").cast("long")).as[(String, Long)].collect()
+    assert(bucketed.nonEmpty && bucketed.forall { case (bh, k) => k == bucketOfHex(bh) },
+      "a band row landed outside its bh-prefix bucket")
+    val refShingles = slices.map { case (df, b) =>
+      Dedup.withHashedShingles(df, "text", 3, "sh")
+        .select(col("doc_id").as("doc"), col("sh"), lit(b).as("batch"))
+        .filter(size(col("sh")) > 0)
+    }.reduce(_ unionAll _)
+    assert(read(s"$lsh/shingles", Seq("doc", "sh", "batch")) === rows(refShingles),
+      "shingles diverged from withHashedShingles")
   }
 
   test("appendToInvertedIndex crash window: orphan postings (no stats " +

@@ -552,7 +552,7 @@ class GraphOpsSpec extends SparkSpec {
       // wedge-join arm on the same (graph, delta) — the gate rows run it
       assert(same(Graph.triangleCountDelta(full, delta, t1ViaAdjacency = true), d),
         s"seed $seed mod $fracMod: adjacency T1 arm diverged from the wedge join")
-      // r18 broadcast size gate: past graft.triAdjMaxBytes a REQUESTED
+      // r18 broadcast size gate: past `adjMaxBytes` a REQUESTED
       // adjacency arm falls back to the wedge join instead of
       // broadcasting a full-graph table. Bound 1 exercises the
       // plan-stats PRE-gate (64x headroom still sits below a local
@@ -560,13 +560,10 @@ class GraphOpsSpec extends SparkSpec {
       // 100 passes the pre-gate and exercises the precise
       // storage-bytes gate on the checkpointed adjacency. Both routes
       // must stay bit-identical.
-      for (bound <- Seq("1", "100")) {
-        System.setProperty("graft.triAdjMaxBytes", bound)
-        try assert(
-          same(Graph.triangleCountDelta(full, delta, t1ViaAdjacency = true), d),
+      for (bound <- Seq(1L, 100L))
+        assert(same(Graph.triangleCountDelta(full, delta, t1ViaAdjacency = true,
+            adjMaxBytes = bound), d),
           s"seed $seed mod $fracMod bound $bound: size-gated fallback diverged")
-        finally System.clearProperty("graft.triAdjMaxBytes")
-      }
       // the planted all-delta triangle is visible in the delta itself
       assert(d.filter(col("node").isin(100L, 101L, 102L))
         .count() === 3L, s"seed $seed mod $fracMod: T3 term missing")
