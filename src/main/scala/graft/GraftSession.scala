@@ -13,6 +13,16 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Hadoop's `file` scheme served by [[LocalFs]] through both filesystem
+    * APIs: `FileSystem` (parquet, lake and index writes) and `FileContext`
+    * (Spark's streaming checkpoints and state store). The test session and
+    * the oracle gate apply it too, so they run on the filesystem the apps
+    * ship with.
+    */
+  val localFs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystemImpl].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.FileContextImpl].getName)
+
   def local(
       cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       appName: String = "graft"): SparkSession = {
@@ -37,9 +47,7 @@ object GraftSession {
       // (localCheckpoint in the CC rounds) pay per-task overhead that
       // AQE never sees — 16x cores measured the 250k curation DAG at
       // 3.5x its 4x-cores cost.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          (cores * 4).toString))
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (cores * 4).toString)
       // 128 MB scan splits: with ~2-4x expansion from parquet decode, a
       // task's working set stays well inside a typical 4-8 GB executor
       // heap share, so scans neither spill nor starve parallelism at any
@@ -49,7 +57,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.statefulOperator.stateRebalancing.enabled", "true")
+      .config(localFs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
