@@ -43,14 +43,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      ±0.05s noise, indistinguishable from same-protocol run-to-run
   *      jitter. So: slow queries (previous median >= 1s, or never
   *      measured) each get a FRESH session; fast queries run
-  *      CONCURRENTLY across 2-3 session clones of one scrubbed context
+  *      CONCURRENTLY across 3 session clones of one scrubbed context
   *      (r11 — they are read-only over the same parquet, their wall is
   *      dominated by driver-side planning/scheduling latency that
   *      concurrency overlaps, and the scrub is coordinated through a
   *      ReadWriteLock so a context-global unpersist never hits another
   *      group's in-flight query). `SPARK_GRAFT_BENCH_ISOLATE=1` restores
-  *      full per-query isolation (the A/B reference protocol);
-  *      `SPARK_GRAFT_BENCH_FASTGROUPS=1` the sequential r10 fast phase.
+  *      full per-query isolation (the A/B reference protocol).
   *   2. Timing also splits by cost. Fast queries: prev >= 0.4s get the
   *      MEDIAN of 3 no-warm-up runs (the cold first run is the max and
   *      the median discards it; at sub-second scale GC jitter is
@@ -119,18 +118,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      inflates only the main -> resolves).
   */
 object Bench {
-  private[graft] def newSession(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Concurrent session clones the fast phase runs on (protocol note 1). */
+  private val fastGroups = 3
 
   /** (medianSeconds, allRunsSucceeded) over `runs` timed executions. */
   private def timed(runs: Int)(body: => Unit): (Double, Boolean) = {
@@ -214,7 +203,7 @@ object Bench {
       graft.operators.CoreOps.sessionSummaryChunked(
         skewCorpus(spark, n), "user_id", "ts", 14400000000L, 21600000000L, "value")))
 
-  /** Slow-phase queries the DriftAB adjudications flagged as JIT-TIERING
+  /** Slow-phase queries the r11 drift adjudications flagged as JIT-TIERING
     * (their plans keep speeding up across FULL-SCALE runs — iterative
     * LSH/k-means/LM/pagerank shapes; `dedup_embedding_lsh` measured
     * 6.8 → 1.9 → 1.3 s within ONE fresh session): a single unconfirmed
@@ -236,7 +225,7 @@ object Bench {
     * same-plan warm form exists, ONE timed full-scale run, and the
     * in-phase adaptive convergence loop (re-run while still descending
     * >20%, cap 4) whenever the first run drifts beyond the trigger vs
-    * the previous round's median — tighter trigger for DriftAB-flagged
+    * the previous round's median — tighter trigger for the flagged
     * JIT-tiering plans. Falls back to 2-run-min when no warm form
     * exists.
     */
@@ -319,7 +308,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
     // the previous round's numbers — read BEFORE this run overwrites them
@@ -343,7 +331,7 @@ object Bench {
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val canaryResults: Seq[(String, Double)] = {
-      val s0 = newSession(cpus)
+      val s0 = graft.tools.HostCanary.session()
       val out = graft.tools.HostCanary.measure(s0)
       s0.stop()
       System.gc()
@@ -408,7 +396,7 @@ object Bench {
       }
     val results =
       if (isolate) allQueries.map { case (name, fn) =>
-        val spark = newSession(cpus)
+        val spark = GraftSession.local()
         try exec(fn(spark, sfDir)) catch { case _: Throwable => () } // warm-up
         val (sec, ok) = timed(runs)(exec(fn(spark, sfDir)))
         spark.stop()
@@ -455,7 +443,7 @@ object Bench {
         val familyResults =
           if (famQs.isEmpty) Nil
           else {
-            val sB = newSession(cpus)
+            val sB = GraftSession.local()
             // the stored tables are written many-file (hash on src —
             // deterministic, no pre-sort): the AQE-coalesced build
             // otherwise lands 1-4 files, and every family row's scan
@@ -500,7 +488,7 @@ object Bench {
             sB.stop()
             System.gc()
             val out = famQs.zipWithIndex.map { case ((name, _), i) =>
-              val spark = newSession(cpus)
+              val spark = GraftSession.local()
               val fn = SparkEntry.graphFamilyQueries(name)
               def frames(kind: String) = SparkEntry.CopurchaseFrames(
                 spark.read.parquet(s"$famDir/$kind/edges"),
@@ -524,7 +512,7 @@ object Bench {
         // inflations on unchanged queries; the r11 A/B measured heavy
         // plans still tiering at run 3: 6.8 -> 1.9 -> 1.3 s).
         val slowResults = slowQs.zipWithIndex.map { case ((name, fn), i) =>
-          val spark = newSession(cpus)
+          val spark = GraftSession.local()
           val warm = if (warmOk) Some(() => exec(fn(spark, warmDir))) else None
           val (sec, ok) = slowTimed(name, prev, runs, warm,
             () => exec(fn(spark, sfDir)))
@@ -542,14 +530,11 @@ object Bench {
         // scrub is context-GLOBAL (unpersist-all would kill another
         // group's in-flight localCheckpoint), so scrubs run under the
         // write side of a ReadWriteLock every ~12 completions while each
-        // timed query holds the read side. SPARK_GRAFT_BENCH_FASTGROUPS=1
-        // restores the sequential r10 protocol.
-        val nGroups = math.max(1, math.min(4,
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_FASTGROUPS", "3").toInt))
-        val spark = newSession(cpus)
-        val groups = Array.fill(nGroups)(
+        // timed query holds the read side.
+        val spark = GraftSession.local()
+        val groups = Array.fill(fastGroups)(
           scala.collection.mutable.ArrayBuffer.empty[(String, (SparkSession, String) => DataFrame)])
-        val groupCost = Array.fill(nGroups)(0.0)
+        val groupCost = Array.fill(fastGroups)(0.0)
         fastQs.sortBy { case (n, _) => -prev.getOrElse(n, 0.5) }.foreach { q =>
           val g = groupCost.indices.minBy(groupCost)
           groups(g) += q; groupCost(g) += prev.getOrElse(q._1, 0.5)
@@ -577,24 +562,21 @@ object Bench {
           }
           (name, inflate(name, sec), ok)
         }
-        val fastResults =
-          if (nGroups == 1)
-            groups(0).toSeq.map { case (n, f) => fastOne(spark, n, f) }
-          else {
-            import scala.concurrent.{Await, Future, ExecutionContext}
-            import scala.concurrent.duration.Duration
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(nGroups)
-            implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-            val futs = groups.toSeq.map { g =>
-              Future {
-                val sess = spark.newSession()
-                g.toSeq.map { case (n, f) => fastOne(sess, n, f) }
-              }
+        val fastResults = {
+          import scala.concurrent.{Await, Future, ExecutionContext}
+          import scala.concurrent.duration.Duration
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(fastGroups)
+          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+          val futs = groups.toSeq.map { g =>
+            Future {
+              val sess = spark.newSession()
+              g.toSeq.map { case (n, f) => fastOne(sess, n, f) }
             }
-            val out = futs.flatMap(Await.result(_, Duration.Inf))
-            pool.shutdown()
-            out
           }
+          val out = futs.flatMap(Await.result(_, Duration.Inf))
+          pool.shutdown()
+          out
+        }
         spark.stop()
         System.gc()
         phaseDone("fast")
@@ -665,7 +647,7 @@ object Bench {
           TextAnalysis.bm25SearchFromIndex(s, s"$idx/bm25",
             Seq("window", "hash", "stream", "dup"), topK = 50)))
     }
-    val sparkSrv = newSession(cpus)
+    val sparkSrv = GraftSession.local()
     val (servedResults, servedBuilds) = {
       import org.apache.spark.sql.functions._
       import graft.functions.{Similarity, TextAnalysis}
@@ -694,12 +676,10 @@ object Bench {
       // src-bucketed catalog table (the 100 TB layout), then pageRank
       // with broadcastRanks=false + checkpointEdges=false — per round
       // only the node-sized rank frame shuffles to the edge bucketing
-      // (zero edge-side exchanges, GraphScaleProbe-pinned; bit-equality
-      // with the direct path pinned in GraphOpsSpec). HITS joins edges
-      // on BOTH keys, so its serving layout is the same edge set stored
-      // TWICE — bucketed by src and by dst (the r12 `edgesByDst` path;
-      // bit-equality pinned in GraphOpsSpec, zero-exchange plan in
-      // GraphScaleProbe).
+      // (zero edge-side exchanges and bit-equality with the direct path,
+      // both pinned in GraphOpsSpec). HITS joins edges on BOTH keys, so
+      // its serving layout is the same edge set stored TWICE — bucketed
+      // by src and by dst (the r12 `edgesByDst` path; same two pins).
       sparkSrv.sql("DROP TABLE IF EXISTS graft_bench_edges")
       sparkSrv.sql("DROP TABLE IF EXISTS graft_bench_edges_dst")
       val copurchase = graft.functions.Graph.copurchaseEdges(
@@ -729,7 +709,7 @@ object Bench {
     // 2M warm-up pass stays: dropping it was measured +80% on the chunked
     // form (3.6s vs 2.0s) — the 16M run-1 "warm-up" is too expensive to
     // waste on codegen, the 2M pass buys the same compilation for ~2s. ----
-    val spark2 = newSession(cpus)
+    val spark2 = GraftSession.local()
     skewPair(spark2, 2000000L).foreach { case (_, fn) =>
       try exec(fn()) catch { case _: Throwable => () } // warm-up (JIT only)
     }
@@ -748,7 +728,7 @@ object Bench {
     // A query's group placement shades its median (group-boundary
     // artifacts measured at ±30% on unchanged code), so any query whose
     // delta vs the previous BENCH_FULL exceeds 15% (and is big enough
-    // for the delta to mean anything) is re-timed TimeQ-style in one
+    // for the delta to mean anything) is re-timed in one
     // fresh session; both numbers land in the artifact so a reader can
     // separate engine changes from harness placement. ----
     val retimed: Seq[(String, Double)] = {
@@ -783,7 +763,7 @@ object Bench {
         val (heavyNow, fastNow) =
           flagged.partition(n => currentSec.get(n).exists(_ >= slowCut))
         val heavyOut = heavyNow.map { name =>
-          val s3 = newSession(cpus)
+          val s3 = GraftSession.local()
           val fn = SparkEntry.queries(name)
           try exec(fn(s3, sfDir)) catch { case _: Throwable => () } // warm-up
           val (sec, ok) = timedMin(math.min(runs, 2))(exec(fn(s3, sfDir)))
@@ -791,7 +771,7 @@ object Bench {
           (name, if (ok) inflate(name, sec, rerun = true) else -1.0)
         }
         val fastOut = if (fastNow.isEmpty) Nil else {
-          val s3 = newSession(cpus)
+          val s3 = GraftSession.local()
           val out = fastNow.map { name =>
             val fn = SparkEntry.queries(name)
             try exec(fn(s3, sfDir)) catch { case _: Throwable => () } // warm-up
@@ -846,7 +826,7 @@ object Bench {
       case (n, s, true) if prevServed.get(n).exists(p => rowAnomalous(s, p)) => n -> s }
     val servedNameSet = servedResults.map(_._1).toSet
     def rerunRow(name: String): (Double, Boolean) = {
-      val s = newSession(cpus)
+      val s = GraftSession.local()
       try {
         if (servedNameSet(name)) {
           val fn = servedDefs(s, register = true).toMap.apply(name)
@@ -915,7 +895,7 @@ object Bench {
     // LAST makes mid-run drift a published number, folded into
     // `run_quality` below.
     val canaryEndResults: Seq[(String, Double)] = {
-      val sE = newSession(cpus)
+      val sE = graft.tools.HostCanary.session()
       val out = graft.tools.HostCanary.measure(sE)
       sE.stop()
       System.gc()
@@ -1045,7 +1025,7 @@ object Bench {
     // under 0.4s, 2-3 concurrent session clones; served = median-of-3;
     // skew = warm(2M)+1.
     val protocol = "family:stored-edges warm2+1;slow:warm2+1(conv<=4 on drift);fast:med3|min2 x" +
-      (if (isolate) "isolated" else s"${math.max(1, math.min(4, sys.env.getOrElse("SPARK_GRAFT_BENCH_FASTGROUPS", "3").toInt))}grp") +
+      (if (isolate) "isolated" else s"${fastGroups}grp") +
       ";served:med3;skew:warm+1"
     val fullJson =
       s"""{"metric":"total","value":${ms3(total)},"unit":"sec",$windowQs,"queries":${entries(okResults).mkString("{", ",", "}")},"served":$servedQs,"served_build":$servedBuildQs,"family_build":$familyBuildQs,"retimed":$retimedQs,"skew_demo":$skewQs,"runs_per_query":"$protocol","errors":$errors,"sf":"$sfDir"}"""

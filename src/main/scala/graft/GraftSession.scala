@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Tuned for the container's `local[32]` single-JVM mode, but every setting
+  * Tuned for single-JVM `local[n]` mode, but every setting
   * here is what we would ship to a 1000-executor cluster as well:
   * AQE on (runtime re-planning, skew-join splitting, partition coalescing),
   * shuffle partitions sized to the parallelism actually available instead of
@@ -15,17 +15,30 @@ object GraftSession {
 
   /** Hadoop's `file` scheme served by [[LocalFs]] through both filesystem
     * APIs: `FileSystem` (parquet, lake and index writes) and `FileContext`
-    * (Spark's streaming checkpoints and state store). The test session and
-    * the oracle gate apply it too, so they run on the filesystem the apps
-    * ship with.
+    * (Spark's streaming checkpoints and state store).
     */
   val localFs: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystemImpl].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.FileContextImpl].getName)
 
+  /** Cores a session runs on when its caller names none:
+    * `SPARK_GRAFT_CPUS`, otherwise every core the JVM sees.
+    */
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session builder in the engine: the apps, the oracle gate
+    * (`Verify`), the test session, `Bench`, `streambench` and the tools
+    * all run on this config. `conf` is applied after the shipped keys
+    * and is for a harness's explicit overrides only (the test session's
+    * temp warehouse dir; [[graft.tools.HostCanary]]'s pinned
+    * `initialPartitionNum`).
+    */
   def local(
-      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      appName: String = "graft"): SparkSession = {
+      cores: Int = defaultCores,
+      appName: String = "graft",
+      conf: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -58,6 +71,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config(localFs)
+      .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -95,8 +95,8 @@ object SparkEntry {
     },
     // Per-node triangle counts via degree-ordered orientation — the
     // bounded-fan-out shape that survives power-law hubs. r11: the
-    // adjacency-intersection plan (Graph.triangleCountsAdj) — TriangleProbe
-    // proved the wedge JOIN was 73-92% of wall, and replacing it with
+    // adjacency-intersection plan (Graph.triangleCountsAdj) — a stage
+    // split showed the wedge JOIN was 73-92% of wall, and replacing it with
     // explode(array_intersect) over sqrt(E)-bounded adjacency arrays cut
     // the query 55% (8.55 -> 3.81 s at sf0.1), hash unchanged.
     "graph_triangles" -> { f =>

@@ -63,7 +63,8 @@ object Graph {
     // scan per round is exactly the shuffle-free cluster pattern
     // (pair with broadcastRanks = false for node sets beyond executor
     // memory: per round the node-sized rank frame alone shuffles to the
-    // edge table's bucketing — GraphScaleProbe measures both paths).
+    // edge table's bucketing — GraphOpsSpec pins the plan, SCALING.md
+    // has both paths' 1M-node timings).
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = if (checkpointEdges) e0.localCheckpoint() else e0
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
@@ -146,8 +147,8 @@ object Graph {
     * snapshot's ranks (`init`) and iterates the same integer fixed-point
     * map only until the largest per-node move is <= `tolMicro`. A small
     * delta perturbs the fixed point slightly, so the warm path converges
-    * in a fraction of the cold rounds (GraphScaleProbe `warm` mode
-    * measures it at 1M nodes; SCALING.md has the row).
+    * in a fraction of the cold rounds (measured at 1M nodes; SCALING.md
+    * has the row).
     *
     * Returns (ranks, roundsRun). Unlike the fixed-`iterations` gate
     * forms, each round here pays a MATERIALIZATION (localCheckpoint +
@@ -427,7 +428,7 @@ object Graph {
       assumeSymmetric: Boolean = false,
       checkpointEdges: Boolean = true): DataFrame = {
     require(rounds >= 1, "communityLabels needs at least one round")
-    // cluster path (GraphScaleProbe `lpa` mode): feed a PRE-symmetrized
+    // cluster path (plan pinned in GraphOpsSpec): feed a PRE-symmetrized
     // edge table stored bucketed by dst with assumeSymmetric = true,
     // checkpointEdges = false — the symmetrize+distinct (an edge-sized
     // shuffle) is paid once at write time and the per-round label join
@@ -567,7 +568,7 @@ object Graph {
     * `communityLabels(edgesAfter, k)` (GraphOpsSpec, random graphs +
     * planted bridge shapes).
     *
-    * Cost honesty (the EdgeMaintainProbe rule): delta-local only while
+    * Cost honesty (don't maintain what is cheaper to recompute): delta-local only while
     * the 2k-hop ball stays small — on a small-diameter graph the 2k-ball
     * saturates to the corpus and the cold recompute is the better tier
     * (SCALING.md prices the crossover on the co-purchase graph).
@@ -799,15 +800,12 @@ object Graph {
         half.select(col("dst").as("src"), col("src").as("dst"), col("w"))))
 
   /** [[triangleCounts]] over the HALF-edge form (each {u,v} once,
-    * src < dst): degrees come from one incidence explode instead of the
-    * symmetric groupBy, and the orientation is a branchless struct pick
-    * (no filter discarding half the rows — there is no mirrored half to
-    * discard). Same oriented edge set, bit-identical (node, tri_cnt)
-    * output; gate-checked against the same `graph_triangles` oracle.
-    */
-  /** [[triangleCountsHalf]] with the wedge join replaced by per-edge
-    * adjacency intersection (the edge-iterator algorithm): group the
-    * oriented edges into out-adjacency arrays (bounded by the oriented
+    * src < dst), with the wedge join replaced by per-edge adjacency
+    * intersection (the edge-iterator algorithm). Degrees come from one
+    * incidence explode instead of the symmetric groupBy, and the
+    * orientation is a branchless struct pick (no mirrored half to
+    * discard); then group the oriented edges into out-adjacency arrays
+    * (bounded by the oriented
     * out-degree, O(sqrt E) even on power-law hubs), attach both
     * endpoints' arrays to every oriented edge, and emit the closing
     * vertices as `explode(array_intersect(adj(u), adj(v)))`.
@@ -2021,8 +2019,8 @@ object Graph {
         ()
       }
 
-  /** The shared degree-ordered orientation of [[triangleCountsHalf]] /
-    * [[triangleCountsAdj]]: each {u,v} once as (lower, higher) by
+  /** The degree-ordered orientation of [[triangleCountsAdj]]: each
+    * {u,v} once as (lower, higher) by
     * (degree, id) — every triangle survives as exactly one directed
     * wedge, fan-out bounded by the oriented out-degree.
     */
@@ -2038,29 +2036,6 @@ object Graph {
           struct(col("src").as("a"), col("dst").as("b")))
         .otherwise(struct(col("dst").as("a"), col("src").as("b"))).as("e"))
       .select(col("e.a").as("src"), col("e.b").as("dst"))
-  }
-
-  def triangleCountsHalf(half: DataFrame): DataFrame = {
-    val h = half.select(col("src"), col("dst"))
-    val deg = h.select(explode(array(col("src"), col("dst"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val oriented = h
-      .join(deg.select(col("v").as("src"), col("d").as("ds")), "src")
-      .join(deg.select(col("v").as("dst"), col("d").as("dd")), "dst")
-      // src < dst in the half form, so the (degree, id) tie-break keeps
-      // (src, dst) exactly when ds <= dd — same set triangleCounts keeps
-      .select(when(col("ds") < col("dd") ||
-          (col("ds") === col("dd") && col("src") < col("dst")),
-          struct(col("src").as("a"), col("dst").as("b")))
-        .otherwise(struct(col("dst").as("a"), col("src").as("b"))).as("e"))
-      .select(col("e.a").as("src"), col("e.b").as("dst"))
-      .localCheckpoint() // consumed by both sides of the wedge join
-    val wedges = oriented.select(col("src").as("a"), col("dst").as("b"))
-      .join(oriented.select(col("src").as("b"), col("dst").as("c")), "b")
-    val tris = wedges.join(oriented
-        .select(col("src").as("a"), col("dst").as("c")), Seq("a", "c"))
-    tris.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("tri_cnt"))
   }
 
   /** k-core of a SYMMETRIC edge list by synchronous peeling: `rounds`
@@ -2153,8 +2128,8 @@ object Graph {
     // layout (broadcastDead = false — round 1's dead set is node-scale
     // when k peels aggressively) is the hits edgesByDst device: the half
     // table stored twice, bucketed by src and by dst, each join riding
-    // its own bucketing with zero edge-side exchanges (GraphScaleProbe
-    // `kcore` mode asserts the plans and measures the A/B)
+    // its own bucketing with zero edge-side exchanges (GraphOpsSpec
+    // asserts the plans; SCALING.md has the 1M-node A/B)
     val eDst = halfByDst.map(_.select(col("src"), col("dst"))).getOrElse(e)
     // losses toward BOTH endpoints from edges whose other endpoint died
     def loss(dead: DataFrame): DataFrame = {
@@ -2272,8 +2247,8 @@ object Graph {
     * as `edgesByDst`) — and set `checkpointEdges = false` +
     * `broadcastScores = false`. Each half-step then joins its own
     * pre-bucketed scan, so per round only the node-sized score frames
-    * shuffle and the edge side has ZERO exchanges (GraphScaleProbe
-    * measures this at 1M nodes / 40M edges and asserts the plan).
+    * shuffle and the edge side has ZERO exchanges (GraphOpsSpec asserts
+    * the plan; SCALING.md has the 1M-node / 40M-edge timings).
     * Output: (node, hub_m, auth_m) for every node in the edge list,
     * zeros for nodes a score never reached.
     *
@@ -2374,8 +2349,8 @@ object Graph {
     * and `init` seeds the hub frame from a previous run's scores so a
     * maintained-graph refresh re-ranks from the old fixed point instead
     * of from uniform — rounds paid scale with how far the delta moved
-    * the fixed point, not with the cold mixing time (GraphScaleProbe
-    * `warm` mode prices it; GraphOpsSpec pins tol-validity: one more
+    * the fixed point, not with the cold mixing time (SCALING.md prices
+    * it; GraphOpsSpec pins tol-validity: one more
     * round from the converged answer moves nothing beyond tol).
     *
     * `init` is a previous [[hits]]/[[hitsUntil]] scores frame

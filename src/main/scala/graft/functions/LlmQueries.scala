@@ -744,7 +744,7 @@ object LlmQueries {
       // the delete and the search — the oracle is unchanged (same
       // surviving docs), so the hash certifies the collapse is
       // invisible to ranking; it also cuts the row's small-file tax
-      // (CompactionProbe measured the fragmentation tax at 9.6x).
+      // (measured at 9.6x, SCALING "Index compaction").
       TextAnalysis.compactInvertedIndex(s, idx)
       TextAnalysis.bm25SearchFromIndex(s, idx,
         Seq("window", "hash", "stream", "dup"), topK = 50)

@@ -750,7 +750,7 @@ object CoreOps {
     *
     * One column-pruned scan, a partial-agg `groupBy(key).count`, a 1-row
     * global agg, a 1-row collect: nothing driver-side scales with the
-    * data. Cost accounting (ProbeCost/SkewProbe at 16M rows): the probe
+    * data. Cost accounting (16M rows, SCALING "Skewed keys"): the probe
     * IS the key-column scan — row-sampling does not avoid it (measured
     * sampled 1.1 s vs exact 1.1 s; the per-row RNG cancels the smaller
     * agg), so the default is the exact, deterministic probe. On parquet

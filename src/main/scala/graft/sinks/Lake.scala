@@ -191,8 +191,8 @@ object Lake {
     * string form (the numeric bucket/cell/batch columns all do); same
     * crash-atomicity caveat as [[deleteWhere]].
     *
-    * OPERATING RULE (measured, `graft.tools.DeletionProbe` / SCALING
-    * "Delete-family pricing"): the discovery scan is the
+    * OPERATING RULE (measured, SCALING "Delete-family pricing"): the
+    * discovery scan is the
     * corpus-proportional term and EVERY call pays it, while the rewrite
     * is flat per affected fixed-size partition — so N pending deletes
     * batched into ONE call cost one scan where N calls cost N (measured

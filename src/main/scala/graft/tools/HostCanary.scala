@@ -24,13 +24,13 @@ import org.apache.spark.sql.functions._
 object HostCanary {
 
   /** Pinned reference seconds, measured IN PROTOCOL POSITION (the
-    * phase-0 fresh `Bench.newSession` of the r12 idle-window full run:
-    * 0.476 / 1.979). The session config is load-bearing: the same
-    * shuffle canary reads ~3.3 s under `GraftSession.local` (AQE
-    * `initialPartitionNum = 4x cores` pays per-partition overhead the
-    * Bench session doesn't), which is why [[main]] builds the
-    * Bench-identical session rather than GraftSession — references and
-    * measurements must share one config or the factor is meaningless.
+    * phase-0 fresh session of the r12 idle-window full run: 0.476 /
+    * 1.979). The session config is load-bearing: the same shuffle canary
+    * reads ~3.3 s at the shipped AQE `initialPartitionNum = 4x cores`
+    * (per-partition overhead the r12 session, which left it at `cores`,
+    * did not pay), which is why [[session]] overrides that one key —
+    * references and measurements must share one config or the factor is
+    * meaningless.
     *
     * `canary_scan` (r14, verdict directive 3) prices cold-ish parquet
     * scan throughput of a table written earlier in the same session —
@@ -65,6 +65,14 @@ object HostCanary {
     "canary_cpu" -> 0.32,
     "canary_shuffle" -> 1.78,
     "canary_scan" -> 1.05)
+
+  /** The factory session with AQE's `initialPartitionNum` pinned to
+    * `cores`, the config the references in [[ref]] were measured on.
+    * Bench's phase-0 and end canaries run on it too.
+    */
+  def session(cores: Int = graft.GraftSession.defaultCores): SparkSession =
+    graft.GraftSession.local(cores, "host-canary", Map(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> cores.toString))
 
   /** The fixed workloads; `n` rows of `spark.range`. Aggregates are
     * overflow-free (max / pmod'd sums): ANSI mode is on, and a wrapped
@@ -168,9 +176,7 @@ object HostCanary {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // the Bench phase-0 session, NOT GraftSession.local — see `ref`
-    val spark = graft.Bench.newSession(cpus)
+    val spark = session()
     val rs = measure(spark)
     val qs = rs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     println(f"""{"canary":$qs,"window_factor":${factor(rs)}%.3f}""")
@@ -179,7 +185,7 @@ object HostCanary {
     // same JVM, like Bench's phase 4)
     if (args.contains("repeat")) {
       spark.stop()
-      val s2 = graft.Bench.newSession(cpus)
+      val s2 = session()
       val rs2 = measure(s2)
       val qs2 = rs2.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
       println(f"""{"canary_warm":$qs2,"window_factor_end":${factorEnd(rs2)}%.3f}""")

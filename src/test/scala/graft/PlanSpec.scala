@@ -84,6 +84,17 @@ class PlanSpec extends SparkSpec {
       s"expected partial aggregation in the rewrite:\n$p")
   }
 
+  test("tpch_q21: the aggregate rewrite returns the textbook EXISTS/NOT-EXISTS answer") {
+    // the oracle's textbook formulation, run by Spark over the same
+    // tables: the rewrite must not change the answer
+    graft.sources.Catalog.registerAll(spark, d)
+    val want = spark.sql(SparkEntry.oracleSql("tpch_q21_waiting_supp"))
+    val got = SparkEntry.queries("tpch_q21_waiting_supp")(spark, d)
+      .select(want.columns.map(org.apache.spark.sql.functions.col).toSeq: _*)
+    assert(want.count() > 0, "sf0.001 has no waiting supplier")
+    assert(got.collect().toSeq === want.collect().toSeq)
+  }
+
   test("tpch_q2/q20: the correlated min/total is a part-partitioned window") {
     // inspect the operator, not the plan string — a string match on the
     // partition spec goes vacuously green when the printed form drifts,
@@ -220,7 +231,7 @@ class PlanSpec extends SparkSpec {
     // the r11 plan: two edge-vs-adjacency attach joins + an in-row
     // array_intersect explode. The r10 wedge-join plan carried a THIRD
     // join (the closing (a,c) join over wedge-volume rows) — the
-    // scale-killer TriangleProbe measured at 73-92% of wall. Guard both
+    // scale-killer, measured at 73-92% of wall. Guard both
     // properties so a refactor can't silently reintroduce it.
     val p = plan("graph_triangles")
     assert(p.contains("array_intersect"), s"intersection not in-row:\n$p")

@@ -31,6 +31,41 @@ class GraphOpsSpec extends SparkSpec {
     alive.map(n => n -> (adj(n) & alive).size.toLong).toMap
   }
 
+  /** Shuffle exchanges in a printed physical plan. The lookbehinds drop
+    * `BroadcastExchange` (its node name embeds the word) and
+    * `ReusedExchange` (a reuse of either kind moves no new rows).
+    */
+  private def shuffleExchanges(plan: String): Int =
+    "(?<!Broadcast)(?<!Reused)Exchange ".r.findAllIn(plan).length
+
+  /** The served-path layout property: a per-round step that joins a
+    * stored bucketed edge table on its bucket key shuffles at most the
+    * node-sized side (one Exchange), and the edge scan reads bucketed.
+    * Broadcast joins are off while planning, so a small node frame
+    * cannot hide an edge-side exchange behind a broadcast.
+    */
+  private def assertEdgeSideUnshuffled(
+      steps: (String, org.apache.spark.sql.DataFrame)*): Unit = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try steps.foreach { case (name, step) =>
+      val plan = step.queryExecution.executedPlan.toString
+      assert(shuffleExchanges(plan) <= 1, s"$name: edge side must not shuffle:\n$plan")
+      assert(plan.contains("Bucketed: true"), s"$name: edge scan must read bucketed:\n$plan")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  /** The smoke corpus the served-path tests build their graphs from. */
+  private lazy val lineitem = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001")
+
+  /** `df` written as a catalog table bucketed (8 buckets) on `key`. */
+  private def bucketed(df: org.apache.spark.sql.DataFrame, table: String,
+      key: String): org.apache.spark.sql.DataFrame = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val path = java.nio.file.Files.createTempDirectory(s"graft-$table").toString
+    graft.sinks.Lake.writeBucketed(df, table, path, Seq(key), numBuckets = 8)
+    spark.table(table)
+  }
+
   test("kCore equals naive synchronous peeling on random graphs") {
     for (seed <- Seq(23L, 29L); k <- Seq(2, 3, 4)) {
       val (sym, adj) = randomGraph(seed, 24, 90)
@@ -183,9 +218,9 @@ class GraphOpsSpec extends SparkSpec {
     // the cluster form doubled for hits' two propagation directions: the
     // SAME edge set stored twice (bucketed by src for the authority
     // half-step, by dst for the hub half-step), broadcastScores=false +
-    // checkpointEdges=false — bit-equality with the direct path; the
-    // zero-edge-side-exchange plan is asserted at 1M nodes in
-    // GraphScaleProbe
+    // checkpointEdges=false — bit-equality with the direct path, and
+    // each half-step's join leaves the edge side unshuffled
+    import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val edges = Graph.copurchaseEdges(graft.sources.Tables.lineitem(spark, d))
     val direct = Graph.hits(edges, "src", "dst", iterations = 3)
@@ -202,6 +237,17 @@ class GraphOpsSpec extends SparkSpec {
         edgesByDst = Some(spark.table("hits_edges_dst")))
       .as[(Long, Long, Long)].collect().toSet
     assert(served === direct, "bucketed hits serving path diverges from direct")
+    val eSrc = spark.table("hits_edges_src")
+    val eDst = spark.table("hits_edges_dst")
+    val score = eSrc.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(1000000L).as("s")).localCheckpoint()
+    assertEdgeSideUnshuffled(
+      "auth(src)" -> eSrc
+        .join(score.select(col("node").as("src"), col("s").as("h")), "src")
+        .select(col("dst"), col("h")),
+      "hub(dst)" -> eDst
+        .join(score.select(col("node").as("dst"), col("s").as("a")), "dst")
+        .select(col("src"), col("a")))
   }
 
   test("skipGramPairs: window band, both directions, repeat counting") {
@@ -355,9 +401,10 @@ class GraphOpsSpec extends SparkSpec {
     // the cluster serving form: edges written once via Lake.writeBucketed
     // (catalog-backed, bucketed on src), then pageRank with
     // broadcastRanks=false + checkpointEdges=false — per round only the
-    // node-sized rank frame shuffles to the edge bucketing
-    // (GraphScaleProbe asserts the zero-ShuffleExchange plan at 1M nodes;
-    // here: fixed-point bit-equality on the real co-purchase graph)
+    // node-sized rank frame shuffles to the edge bucketing: fixed-point
+    // bit-equality on the real co-purchase graph, and the per-round
+    // rank join leaves the edge side unshuffled
+    import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val edges = Graph.copurchaseEdges(graft.sources.Tables.lineitem(spark, d))
     val direct = Graph.pageRank(edges, "src", "dst", iterations = 5)
@@ -370,6 +417,11 @@ class GraphOpsSpec extends SparkSpec {
         iterations = 5, broadcastRanks = false, checkpointEdges = false)
       .as[(Long, Long)].collect().toMap
     assert(served === direct, "bucketed serving path diverges from direct pageRank")
+    val edgesB = spark.table("pr_edges_spec")
+    val rankFrame = edgesB.groupBy(col("src")).agg(count(lit(1)).as("outd"))
+      .select(col("src"), lit(1000000L).as("r"), col("outd")).localCheckpoint()
+    assertEdgeSideUnshuffled("rank join" -> edgesB.join(rankFrame, "src")
+      .select(col("dst"), expr("r div outd").as("c")))
   }
 
   test("bfsHops: chain distances, unreached nodes absent, seeds at hop 0") {
@@ -382,10 +434,9 @@ class GraphOpsSpec extends SparkSpec {
 
   test("node2vecWalks served from a bucketed edge table equals the direct path") {
     // the cluster serving form (r13): src-bucketed stored edges with
-    // broadcastFrontier=false + checkpointEdges=false — GraphScaleProbe's
-    // `walks` mode asserts the zero-edge-exchange plan and measures it at
-    // 1M nodes; here the fixed-point bit-equality is pinned in CI on the
-    // real co-purchase graph
+    // broadcastFrontier=false + checkpointEdges=false — bit-equality on
+    // the real co-purchase graph, and the per-step candidate join moves
+    // only the frontier
     import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val edges = Graph.copurchaseEdges(graft.sources.Tables.lineitem(spark, d))
@@ -406,6 +457,78 @@ class GraphOpsSpec extends SparkSpec {
       .as[(Long, Int, Long)].collect().toSet
     assert(served === direct,
       "bucketed/non-broadcast node2vec serving path diverges from direct walks")
+    val frontier = bucketed.select(col("src").as("wid"),
+        col("src").as("prev"), col("src").as("cur"))
+      .distinct().localCheckpoint()
+    assertEdgeSideUnshuffled("candidate join" ->
+      bucketed.join(frontier, bucketed("src") === frontier("cur"))
+        .select(col("wid"), col("prev"), col("dst")))
+  }
+
+  test("kCoreHalf served from src- and dst-bucketed half-edge tables equals direct") {
+    // the hits device for the k-core loss step: the half table stored
+    // twice, each loss join riding its own bucketing with
+    // broadcastDead=false + checkpointEdges=false
+    import org.apache.spark.sql.functions._
+    val half = Graph.copurchaseHalfEdges(lineitem).localCheckpoint()
+    val direct = Graph.kCoreHalf(half, k = 3, rounds = 5)
+      .as[(Long, Long)].collect().toSet
+    assert(direct.nonEmpty, "the 3-core of the sf0.001 co-purchase graph is empty")
+    val eSrc = bucketed(half, "kcore_half_src", "src")
+    val eDst = bucketed(half, "kcore_half_dst", "dst")
+    val served = Graph.kCoreHalf(eSrc, k = 3, rounds = 5, broadcastDead = false,
+        checkpointEdges = false, halfByDst = Some(eDst))
+      .as[(Long, Long)].collect().toSet
+    assert(served === direct, "bucketed kCoreHalf serving path diverges from direct")
+    val dead = eSrc.select(col("src").as("node")).distinct()
+      .select(col("node"), (col("node") * 2).as("pay")).localCheckpoint()
+    assertEdgeSideUnshuffled(
+      "loss(dst)" -> eDst.join(dead, eDst("dst") === dead("node"))
+        .select(eDst("src").as("n")),
+      "loss(src)" -> eSrc.join(dead, eSrc("src") === dead("node"))
+        .select(eSrc("dst").as("n")))
+  }
+
+  test("communityLabels served from a dst-bucketed symmetric edge table equals direct") {
+    // pre-symmetrized edges stored bucketed by dst with
+    // assumeSymmetric=true + checkpointEdges=false: the per-round vote
+    // join moves only the label frame
+    import org.apache.spark.sql.functions._
+    val direct = Graph.communityLabels(Graph.copurchaseHalfEdges(lineitem), "src", "dst",
+        rounds = 3)
+      .as[(Long, Long)].collect().toSet
+    val sym = bucketed(Graph.copurchaseEdges(lineitem), "lpa_sym_spec", "dst")
+    val served = Graph.communityLabels(sym, "src", "dst", rounds = 3,
+        assumeSymmetric = true, checkpointEdges = false)
+      .as[(Long, Long)].collect().toSet
+    assert(served === direct, "bucketed LPA serving path diverges from direct")
+    val labels = sym.select(col("dst").as("node")).distinct()
+      .withColumn("label", col("node")).localCheckpoint()
+    assertEdgeSideUnshuffled("vote join" -> sym
+      .join(labels.select(col("node").as("dst"), col("label")), "dst")
+      .select(col("src"), col("label")))
+  }
+
+  test("bfsHops served from a src-bucketed edge table equals direct") {
+    // broadcastFrontier=false + checkpointEdges=false over the stored
+    // table: per hop only the frontier shuffles to the edge bucketing
+    import org.apache.spark.sql.functions._
+    val edges = Graph.copurchaseEdges(lineitem)
+    val seeds = edges.select(col("src")).distinct().orderBy("src")
+      .as[Long].take(5).toSeq
+    val direct = Graph.bfsHops(edges, "src", "dst", seeds, maxHops = 3)
+      .as[(Long, Int)].collect().toMap
+    assert(direct.values.exists(_ > 1), "fixture never reaches hop 2")
+    val edgesB = bucketed(edges, "bfs_edges_spec", "src")
+    val served = Graph.bfsHops(edgesB, "src", "dst", seeds, maxHops = 3,
+        broadcastFrontier = false, checkpointEdges = false)
+      .as[(Long, Int)].collect().toMap
+    assert(served === direct, "bucketed bfs serving path diverges from direct")
+    val frontier = edgesB.select(col("src").as("node")).distinct()
+      .select(col("node"), (col("node") * 2).as("p1"), (col("node") * 3).as("p2"))
+      .localCheckpoint()
+    assertEdgeSideUnshuffled("hop join" ->
+      edgesB.join(frontier, edgesB("src") === frontier("node")).select(col("dst")))
   }
 
   test("sgnsNegatives: exactly k per pair; the bucketed equi-join equals " +
@@ -1242,10 +1365,11 @@ class GraphOpsSpec extends SparkSpec {
     assert(Graph.maintainCopurchaseWeights(spark, stateDir,
       li.filter(isDelta), partitions = 16, batchId = 1L))
     val snap1 = Graph.readCopurchaseWeights(spark, stateDir).get
-    val Graph.PageRankRun(_, kCold, _) = Graph.pageRankUntil(snap1, "src", "dst", tol,
+    val Graph.PageRankRun(_, kCold, coldConv) = Graph.pageRankUntil(snap1, "src", "dst", tol,
       weightCol = Some("w"))
-    val Graph.PageRankRun(warm, kWarm, _) = Graph.pageRankUntil(snap1, "src", "dst", tol,
+    val Graph.PageRankRun(warm, kWarm, warmConv) = Graph.pageRankUntil(snap1, "src", "dst", tol,
       init = Some(ranks0), weightCol = Some("w"))
+    assert(coldConv && warmConv, "a re-rank of the maintained table hit maxRounds")
     assert(kWarm < kCold,
       s"warm refresh ($kWarm rounds) did not beat cold ($kCold)")
     // tol-validity of the warm answer on the refreshed graph

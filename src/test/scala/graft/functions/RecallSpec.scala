@@ -1,10 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.sources.Tables
-import graft.tools.RecallEval
 
 /** IVF ANN recall floor vs the exact brute-force top-k, at the shipped
   * query's configuration (k=5, centroidEvery=25, nprobe=3) on the sf0.01
@@ -19,6 +19,13 @@ class RecallSpec extends SparkSpec {
 
   private val d = "/root/testdata/sf0.01"
 
+  /** recall@k = |ann hits ∩ exact hits| / |exact hits| over all queries. */
+  private def recallAtK(exact: DataFrame, ann: DataFrame): Double = {
+    val truth = exact.select(col("qid"), col("vec_id")).distinct()
+    val hits = ann.select(col("qid"), col("vec_id")).distinct()
+    truth.join(hits, Seq("qid", "vec_id")).count().toDouble / truth.count()
+  }
+
   test("IVF recall@5 clears 2x the probe fraction; k-means refinement holds the floor") {
     val emb = Tables.embeddings(spark, d)
     val queries = emb.filter(col("vec_id") < 20)
@@ -27,9 +34,9 @@ class RecallSpec extends SparkSpec {
 
     val brute = Similarity.bruteForceTopK(queries, corpus, 5).cache()
     try {
-      val rMod = RecallEval.recallAtK(
+      val rMod = recallAtK(
         brute, Similarity.ivfTopK(queries, corpus, 5, centroidEvery = 25, nprobe = 3))
-      val rKm = RecallEval.recallAtK(
+      val rKm = recallAtK(
         brute,
         Similarity.ivfTopKWithCentroids(
           queries, corpus, Similarity.kmeansCentroids(corpus, 25, 3), 5, 3))
@@ -62,9 +69,9 @@ class RecallSpec extends SparkSpec {
       aggregate(zip_with(qd, vd, (a, b) => (a - b) * (a - b)),
         lit(0.0), (acc, x) => acc + x), asc = true).cache()
     try {
-      val rInt8 = RecallEval.recallAtK(exactIp,
+      val rInt8 = recallAtK(exactIp,
         Similarity.int8TopK(queries, corpus, 5))
-      val rAdc = RecallEval.recallAtK(exactL2,
+      val rAdc = recallAtK(exactL2,
         Similarity.adcTopK(queries, corpus, 5, centroidEvery = 25, m = 8, dim = 64))
       info(f"int8 recall@5 vs exact IP = $rInt8%.3f")
       info(f"ADC recall@5 vs exact L2  = $rAdc%.3f")
@@ -98,9 +105,9 @@ class RecallSpec extends SparkSpec {
       .select(col("vec_id").as("qid"), col("vec").as("qvec"))
     val brute = Similarity.bruteForceTopK(queries, corpus, 5).cache()
     try {
-      val rMod = RecallEval.recallAtK(
+      val rMod = recallAtK(
         brute, Similarity.ivfTopK(queries, corpus, 5, centroidEvery = 25, nprobe = 2))
-      val rKm = RecallEval.recallAtK(
+      val rKm = recallAtK(
         brute,
         Similarity.ivfTopKWithCentroids(
           queries, corpus, Similarity.kmeansCentroids(corpus, 25, 3), 5, 2))

@@ -38,6 +38,12 @@ class BucketingSpec extends SparkSpec {
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
       assert(exchanges <= 1, s"join sides must not shuffle:\n$plan")
       assert(joined.collect().map(_.getLong(1)).sum === 6000L)
+      // same answer as the join of the unbucketed tables
+      val plain = Tables.lineitem(spark, d)
+        .join(Tables.orders(spark, d), col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_orderstatus")).count()
+      assert(joined.orderBy("o_orderstatus").collect().toSeq ===
+        plain.orderBy("o_orderstatus").collect().toSeq)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
