@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
-"""Compare two BENCH_FULL.json artifacts per query.
+"""Compare two BENCH_FULL.json artifacts per row; the cross-round judge.
 
 Usage: python3 scripts/bench_compare.py <old.json> <new.json> [threshold_pct] [--force]
 
 Prints queries whose |delta| exceeds the threshold (default 15%) on a
-meaningful base (max(old, new) > 0.2s), plus totals. Exit 0 iff none exceed.
+meaningful base (max(old, new) > 0.2s), plus totals.
 
 Window normalization: when BOTH artifacts carry `window_factor` (the
 fixed synthetic canary timed first in a fresh session; 1.0 = the pinned
@@ -14,21 +14,22 @@ reference window), every new-side time is divided by the factor RATIO
 The raw (unnormalized) numbers are still what gets printed, alongside
 the ratio, so nothing is hidden by the adjustment.
 
-Run quality (r12 verdict directive 8): every comparison prints each
-side's `run_quality` verdict — the artifact's own field when present
-(r13+ artifacts carry it), else derived here from the retimed block
-(undercuts: retime > 20% and > 0.3s BELOW the main number — the
-documented contamination signature; >= 3 undercuts = degraded,
->= 1 = suspect). A DEGRADED side makes the whole comparison
-meaningless (the r12 snapshot seeded exactly this confusion), so the
-script REFUSES (exit 2) unless --force is given, and then annotates
+Run quality: every comparison prints each side's own `run_quality`
+verdict. An artifact without one cannot be qualified, and a DEGRADED
+side makes the whole comparison meaningless, so the script REFUSES
+(exit 2) in either case unless --force is given, and then annotates
 every line as tainted.
 
-The retimed block of the NEW artifact, when present, is used to adjudicate:
-a flagged query whose retime lands back inside the threshold is reported as
-a placement artifact, not a regression.
+Row screen: a row of `queries`, `served` or `skew_demo` whose seconds
+on one side are more than 3x AND more than 1 s above the other side's
+prints a ROW ANOMALY line (with each side's timed-run range when both
+artifacts carry a `runs` block) and forces a nonzero exit.
+
+Exit: 2 refused, 1 a FLAG or a ROW ANOMALY, 0 otherwise.
 """
 import json, os, sys
+
+BLOCKS = ("queries", "served", "skew_demo")
 
 def load(path):
     """A bench artifact: either the engine's own full format (has a
@@ -59,31 +60,29 @@ def load(path):
           f"TRUNCATED query map ({len(p['queries'])} rows)")
     return p
 
-def run_quality(art):
-    """(verdict, n_undercuts, label): the artifact's own field, else derived.
+def anomalous(hi, lo):
+    return hi > 3 * lo and hi - lo > 1.0
 
-    r14+ artifacts drop the always-zero published-undercut field (retime
-    publication makes it definitionally 0 — r13 ADVICE); the raw
-    pre-publication count is the informative number where present. The
-    label says WHICH count is being shown: a pre-r14 artifact's
-    `retime_undercuts` is the published (post-substitution) count, ~0 by
-    construction — printing it as "raw" would misread an old run's fast
-    phase as uninflamed when its raw diagnostic was never recorded.
-    """
-    q = art.get("queries", {})
-    retimed = art.get("retimed", {})
-    under = sum(1 for k, r in retimed.items()
-                if r and r > 0 and k in q and q[k] - r > 0.3 and r < 0.8 * q[k])
-    own = art.get("run_quality")
-    if own:
-        if "retime_undercuts_raw" in art:
-            return own, art["retime_undercuts_raw"], "raw retime undercuts"
-        if "retime_undercuts" in art:
-            return own, art["retime_undercuts"], ("published retime undercuts" +
-                " (pre-r14 artifact; raw count was not recorded)")
-        return own, under, "derived retime undercuts"
-    return ("degraded" if under >= 3 else "suspect" if under >= 1 else "ok"
-            ), under, "derived retime undercuts"
+def run_range(art, row):
+    runs = art.get("runs", {}).get(row)
+    return f"{min(runs):.2f}-{max(runs):.2f}s" if runs else "n/a"
+
+def row_anomalies(old, new):
+    """(block, row, old_sec, new_sec) for every shared row where one side
+    is more than 3x and more than 1 s above the other."""
+    out = []
+    for block in BLOCKS:
+        ob, nb = old.get(block, {}), new.get(block, {})
+        for k in sorted(set(ob) & set(nb)):
+            a, b = ob[k], nb[k]
+            if anomalous(a, b) or anomalous(b, a):
+                out.append((block, k, a, b))
+    return out
+
+def quality_note(art):
+    q = art.get("run_quality", "none")
+    drift = art.get("canary_drift")
+    return q + (f" (canary_drift {drift:.3f})" if isinstance(drift, (int, float)) else "")
 
 def main():
     args = [a for a in sys.argv[1:] if a != "--force"]
@@ -92,68 +91,51 @@ def main():
     new = load(args[1])
     thr = float(args[2]) / 100 if len(args) > 2 else 0.15
     oq, nq = old["queries"], new["queries"]
-    retimed = new.get("retimed", {})
     wf_old, wf_new = old.get("window_factor", 0), new.get("window_factor", 0)
     wratio = (wf_new / wf_old) if wf_old and wf_new and wf_old > 0 and wf_new > 0 else 1.0
 
-    q_old, u_old, l_old = run_quality(old)
-    q_new, u_new, l_new = run_quality(new)
-    print(f"run_quality old: {q_old} ({u_old} {l_old}"
-          + (f", wf {old['window_factor']:.2f}->{old['window_factor_end']:.2f}"
-             if "window_factor_end" in old else "") + ")"
-          f"  new: {q_new} ({u_new} {l_new}"
-          + (f", wf {new['window_factor']:.2f}->{new['window_factor_end']:.2f}"
-             if "window_factor_end" in new else "") + ")")
-    # r14+: rows whose automatic fresh-session re-run did not resolve a
-    # >3x-vs-history reading — per-row implausibility inside a window the
-    # canaries may still call flat (the r13 9-19x blind spot)
+    print(f"run_quality old: {quality_note(old)}  new: {quality_note(new)}")
     for side, art in (("old", old), ("new", new)):
-        anoms = art.get("row_anomalies", [])
-        if anoms:
-            reruns = art.get("row_reruns", {})
-            detail = ", ".join(
-                f"{a} (rerun {reruns[a]:.2f}s)" if reruns.get(a, -1) > 0 else a
-                for a in anoms)
-            print(f"ROW ANOMALIES ({side}): {detail} — these rows read >3x "
-                  f"their previous median and a fresh-session re-run did not "
-                  f"resolve them; treat their deltas as unadjudicated")
-    degraded = [s for s, v in (("old", q_old), ("new", q_new)) if v == "degraded"]
-    if degraded:
-        msg = (f"REFUSING comparison: {' and '.join(degraded)} artifact(s) are "
-               f"run_quality=degraded — the documented discard rule; re-run the "
-               f"bench in a recovered window (pass --force to compare anyway)")
+        if art.get("row_anomalies"):
+            print(f"within-run row anomalies ({side}): {', '.join(art['row_anomalies'])}")
+    refused = [(s, "has no run_quality field") for s, a in (("old", old), ("new", new))
+               if "run_quality" not in a]
+    refused += [(s, "is run_quality=degraded") for s, a in (("old", old), ("new", new))
+                if a.get("run_quality") == "degraded"]
+    if refused:
+        why = "; ".join(f"the {s} artifact {r}" for s, r in refused)
         if not force:
-            print(msg)
+            print(f"REFUSING comparison: {why} (pass --force to compare anyway)")
             sys.exit(2)
-        print(msg.replace("REFUSING", "WARNING (--force): proceeding with a") +
-              " — every delta below is TAINTED")
+        print(f"WARNING (--force): comparing although {why} — every delta below is TAINTED")
+    taint = " [TAINTED]" if refused else ""
 
     shared = sorted(set(oq) & set(nq))
-    flagged, artifacts = [], []
+    flagged = []
     for k in shared:
         a, b = oq[k], nq[k]
         if max(a, b) <= 0.2:
             continue
         d = (b / wratio - a) / a
         if abs(d) > thr:
-            r = retimed.get(k)
-            if r is not None and r > 0 and abs(r / wratio - a) / a <= thr:
-                artifacts.append((k, a, b, r))
-            else:
-                flagged.append((k, a, b, d))
-    taint = " [TAINTED: degraded side]" if degraded else ""
+            flagged.append((k, a, b, d))
     print(f"shared queries: {len(shared)}  old total: {sum(oq[k] for k in shared):.1f}s"
           f"  new total: {sum(nq[k] for k in shared):.1f}s"
           + (f"  window ratio new/old: {wratio:.2f} (normalized)" if wratio != 1.0
              else "  (no window normalization)") + taint)
-    for k, a, b, r in artifacts:
-        print(f"  placement-artifact {k}: {a:.2f} -> {b:.2f} (retimed {r:.2f}, inside threshold){taint}")
     for k, a, b, d in sorted(flagged, key=lambda x: -abs(x[3])):
         print(f"  FLAG {k}: {a:.2f} -> {b:.2f} ({d*100:+.0f}% window-normalized){taint}")
+    anomalies = row_anomalies(old, new)
+    both_runs = "runs" in old and "runs" in new
+    for block, k, a, b in anomalies:
+        ranges = (f"  runs old {run_range(old, k)}, new {run_range(new, k)}"
+                  if both_runs else "")
+        print(f"  ROW ANOMALY {block}.{k}: {a:.2f} -> {b:.2f} (one side > 3x and "
+              f"> 1 s above the other){ranges}{taint}")
     new_only = sorted(set(nq) - set(oq))
     if new_only:
         print(f"new-only queries: {', '.join(new_only)}")
-    sys.exit(1 if flagged else 0)
+    sys.exit(1 if flagged or anomalies else 0)
 
 if __name__ == "__main__":
     main()

@@ -295,7 +295,7 @@ object SparkEntry {
   /** The self-contained gate forms of the graph family: one body
     * ([[graphFamilyQueries]]) applied to a per-query [[copurchaseFrames]]
     * build — what Verify runs (oracle isolation: the build is part of
-    * the query) and what `SPARK_GRAFT_BENCH_ISOLATE=1` times.
+    * the query) and what `Probe time` times.
     */
   private val graphFamilyOneShot: Map[String, (SparkSession, String) => DataFrame] =
     graphFamilyQueries.map { case (name, fn) =>

@@ -3,13 +3,16 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Host-window canary (r11 verdict directive 2): two fixed SYNTHETIC
-  * workloads — one codegen'd scan/CPU shape, one 1M-group shuffle shape
-  * — timed first in a fresh session. `window_factor` = geometric mean
-  * of (now / reference) qualifies the virtualized host's current window
-  * (three same-day r11 runs on identical code read 146/223/344 s; the
-  * factor makes cross-round artifacts numerically comparable —
-  * `bench_compare.py` normalizes deltas by the factor ratio).
+/** Host-window canary: three fixed SYNTHETIC workloads — a codegen'd
+  * scan/CPU shape, a 1M-group shuffle shape and a parquet scan — timed
+  * in a fresh session. `window_factor` = geometric mean of (now /
+  * reference) qualifies the virtualized host's current window against
+  * pinned references (three same-day r11 runs on identical code read
+  * 146/223/344 s; `bench_compare.py` normalizes cross-artifact deltas by
+  * the factor ratio). The references were measured at `local[32]`, so
+  * on another core count the factor also reads the core count; Bench's
+  * `canary_drift` is therefore taken against a second reading of the
+  * same run ([[drift]]), never against the pinned references.
   *
   * Synthetic rather than engine queries so the canary prices the HOST,
   * never the round's code changes: the pinned reference survives every
@@ -17,9 +20,9 @@ import org.apache.spark.sql.functions._
   * in the 2026-08-15 (r12) window via `runMain graft.tools.HostCanary`;
   * factor ~1.0 = that window, >1.3 = degraded host.
   *
-  * Standalone use — check the window BEFORE committing to a 5-minute
-  * bench run: `sbt 'runMain graft.tools.HostCanary'` prints one JSON
-  * line with the two timings and the factor.
+  * Standalone use — check the window BEFORE committing to a bench run:
+  * `sbt 'runMain graft.tools.HostCanary [repeat]'` prints one JSON line
+  * with the timings and the factor (and a second, warm reading).
   */
 object HostCanary {
 
@@ -44,31 +47,9 @@ object HostCanary {
     "canary_shuffle" -> 1.98,
     "canary_scan" -> 1.00)
 
-  /** Pinned references for the END-of-run canary position (r13). The end
-    * canary runs in the bench's ~12-minute-old JVM where Spark's shuffle
-    * and codegen machinery is fully JIT-warm, so its readings are
-    * systematically ~30-40% below the cold-JVM phase-0 numbers on an
-    * UNCHANGED host window (measured across the six r13 full runs:
-    * end-position walls 5-8 s vs phase-0 17-25 s, cpu 0.29-0.43 vs
-    * 0.41-1.21). Comparing an end reading against the phase-0 reference
-    * therefore manufactures 20-30% phantom "drift" on a flat window —
-    * each position needs its own reference. Pinned as the median
-    * end-position readings of those six runs (cpu 0.347/0.288/0.301/
-    * 0.322/0.425/0.286; shuffle 1.929/1.786/1.782/1.906/1.426/1.293).
-    */
-  /** The scan workload shows NO warm-JVM speedup (I/O-bound, unlike the
-    * cpu/shuffle pair's 30-40%): its end reference sits at ~its cold
-    * reference (r14 calibration: cold 0.78-1.02, warm 1.10 in the same
-    * ~0.8-1.0 window; both positions' refs set from those medians).
-    */
-  val refEnd: Seq[(String, Double)] = Seq(
-    "canary_cpu" -> 0.32,
-    "canary_shuffle" -> 1.78,
-    "canary_scan" -> 1.05)
-
   /** The factory session with AQE's `initialPartitionNum` pinned to
     * `cores`, the config the references in [[ref]] were measured on.
-    * Bench's phase-0 and end canaries run on it too.
+    * Every Bench canary reading runs on it too.
     */
   def session(cores: Int = graft.GraftSession.defaultCores): SparkSession =
     graft.GraftSession.local(cores, "host-canary", Map(
@@ -150,23 +131,33 @@ object HostCanary {
       } catch { case _: Throwable => (name, -1.0) }
     }
 
+  /** [[measure]] in a fresh [[session]], stopped afterwards. */
+  def measureFresh(): Seq[(String, Double)] = {
+    val s = session()
+    try measure(s) finally { s.stop(); System.gc() }
+  }
+
   /** Geometric mean of now/ref over the successful workloads; -1.0 when
     * none succeeded. Results pair with their reference BY NAME (not by
     * position): a caller passing a filtered or reordered seq — e.g. one
     * with failed -1.0 entries removed — must not silently pair a timing
     * with the wrong pinned reference.
     */
-  def factor(results: Seq[(String, Double)]): Double =
-    factorAgainst(results, ref)
+  def factor(results: Seq[(String, Double)]): Double = ratio(results, ref)
 
-  /** [[factor]] against the end-of-run pinned references — use for
-    * measurements taken in the warm-JVM end position. */
-  def factorEnd(results: Seq[(String, Double)]): Double =
-    factorAgainst(results, refEnd)
+  /** How far `later` moved from `earlier`, two readings of the workloads
+    * in the same run: |geometric mean of later/earlier - 1| over the
+    * workloads both read successfully; -1.0 when there are none. A
+    * same-run reference carries the host's core count and the JVM's
+    * warmth with it, so neither reads as drift.
+    */
+  def drift(earlier: Seq[(String, Double)], later: Seq[(String, Double)]): Double = {
+    val r = ratio(later, earlier)
+    if (r < 0) -1.0 else math.abs(r - 1)
+  }
 
-  private def factorAgainst(
-      results: Seq[(String, Double)], refs: Seq[(String, Double)]): Double = {
-    val refByName = refs.toMap
+  private def ratio(results: Seq[(String, Double)], refs: Seq[(String, Double)]): Double = {
+    val refByName = refs.filter(_._2 > 0).toMap
     val ratios = results.collect {
       case (name, sec) if sec > 0 && refByName.contains(name) =>
         sec / refByName(name)
@@ -175,21 +166,19 @@ object HostCanary {
     else math.exp(ratios.map(math.log).sum / ratios.size)
   }
 
+  private def json(rs: Seq[(String, Double)]): String =
+    rs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+
+  /** Prints the cold reading and its `window_factor`; with `repeat`, a
+    * second reading in a fresh session of the now-warm JVM (Bench's
+    * `canary_warm`, the drift reference).
+    */
   def main(args: Array[String]): Unit = {
-    val spark = session()
-    val rs = measure(spark)
-    val qs = rs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    println(f"""{"canary":$qs,"window_factor":${factor(rs)}%.3f}""")
-    // `repeat`: measure again in the now-JIT-warm JVM — the END-position
-    // protocol shape (used to calibrate refEnd; a fresh session in the
-    // same JVM, like Bench's phase 4)
+    val cold = measureFresh()
+    println(f"""{"canary":${json(cold)},"window_factor":${factor(cold)}%.3f}""")
     if (args.contains("repeat")) {
-      spark.stop()
-      val s2 = session()
-      val rs2 = measure(s2)
-      val qs2 = rs2.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-      println(f"""{"canary_warm":$qs2,"window_factor_end":${factorEnd(rs2)}%.3f}""")
-      s2.stop()
-    } else spark.stop()
+      val warm = measureFresh()
+      println(s"""{"canary_warm":${json(warm)}}""")
+    }
   }
 }
