@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.Checkpoints
 import graft.tools.HostCanary
 
 /** Benchmark main: times every [[SparkEntry.queries]] row against
@@ -22,7 +23,8 @@ import graft.tools.HostCanary
   * graph-family row runs off edge tables stored once per run (their
   * build attributed in `family_build`) and warms on the sibling's
   * tables; a skew row warms on a 2M-row corpus; a served row has no
-  * warm form.
+  * warm form. A row and each of its runs are checkpoint scopes; a row
+  * that ends holding a persisted RDD is an error (`layers.rdds_held`).
   *
   * Nothing is read from a previous artifact: rows are timed and judged
   * only by evidence from this run (see [[runQuality]]). Judging rows
@@ -51,21 +53,27 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
 
   /** One timed row: every run's seconds, whether all of them succeeded,
-    * and the formatted plan of its timed form ("" when none was built).
+    * the formatted plan of its timed form ("" when none was built) and
+    * the persisted RDDs its session still held after it.
     */
-  final case class Row(name: String, runs: Seq[Double], ok: Boolean, plan: String = "") {
+  final case class Row(name: String, runs: Seq[Double], ok: Boolean, plan: String = "",
+      rddsHeld: Int = 0) {
     def sec: Double = runs.min
+    /** The row after its session was found holding `n` persisted RDDs. */
+    def held(n: Int): Row = copy(rddsHeld = n, ok = ok && n == 0)
   }
 
   /** The protocol's clock: `warm` twice off the clock (a failing warm is
     * ignored; the timed runs report the failure), then [[timedRuns]]
-    * timed `run`s. The row fails when any timed run throws.
+    * timed `run`s, each a checkpoint scope. The row fails when any timed
+    * run throws.
     */
   def timeRuns(name: String, warm: Option[() => Unit], run: () => Unit): Row = {
-    warm.foreach(w => try { w(); w() } catch { case _: Throwable => () })
+    warm.foreach(w => try { Checkpoints.scoped(w()); Checkpoints.scoped(w()) }
+      catch { case _: Throwable => () })
     val times = (1 to timedRuns).map { _ =>
       val t0 = System.nanoTime()
-      val ok = try { run(); true } catch { case _: Throwable => false }
+      val ok = try { Checkpoints.scoped(run()); true } catch { case _: Throwable => false }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
     Row(name, times.map(_._1), times.forall(_._2))
@@ -83,15 +91,18 @@ object Bench {
       run: SparkSession => () => DataFrame): Row = {
     val s = GraftSession.local()
     try {
-      val (warmForm, runForm) = (warm(s), run(s))
-      var last: Option[DataFrame] = None
-      val row = timeRuns(name, warmForm.map(w => () => exec(w())),
-        () => { val df = runForm(); last = Some(df); exec(df) })
-      val plan = last.map { df =>
-        try df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-        catch { case _: Throwable => "" }
+      val row = Checkpoints.scoped {
+        val (warmForm, runForm) = (warm(s), run(s))
+        var last: Option[DataFrame] = None
+        val row = timeRuns(name, warmForm.map(w => () => exec(w())),
+          () => { val df = runForm(); last = Some(df); exec(df) })
+        val plan = last.map { df =>
+          try df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+          catch { case _: Throwable => "" }
+        }
+        row.copy(plan = plan.getOrElse(""))
       }
-      row.copy(plan = plan.getOrElse(""))
+      row.held(s.sparkContext.getPersistentRDDs.size)
     } catch { case _: Throwable => Row(name, Nil, ok = false) }
     finally { s.stop(); System.gc() }
   }
@@ -183,6 +194,7 @@ object Bench {
 
     def fullJson: String = {
       val runs = obj(ok(queries ++ served ++ skew).map(r => r.name -> r.runs.map(num).mkString("[", ",", "]")))
+      val layers = obj((queries ++ served ++ skew).map(r => r.name -> s"""{"rdds_held":${r.rddsHeld}}"""))
       s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
         s""""canary":${canaryJson(canary)},"window_factor":${num(windowFactor)},""" +
         s""""canary_warm":${canaryJson(canaryWarm)},"canary_end":${canaryJson(canaryEnd)},""" +
@@ -191,7 +203,8 @@ object Bench {
         s""""load_avg":${num(loadAvg)},"queries":${published(queries)},""" +
         s""""served":${published(served)},"served_build":${secs(servedBuild)},""" +
         s""""family_build":${secs(familyBuild)},"skew_demo":${published(skew)},""" +
-        s""""runs":$runs,"runs_per_query":"$protocol","errors":${strs(errors)},"sf":"$sf"}"""
+        s""""runs":$runs,"layers":$layers,"runs_per_query":"$protocol",""" +
+        s""""errors":${strs(errors)},"sf":"$sf"}"""
     }
 
     /** Slowest rows first, so whatever fits is the informative part. The
@@ -315,8 +328,8 @@ object Bench {
       }
       val corpus = graft.sources.Tables.embeddings(s, sfDir)
         .select(col("vec_id"), col("embedding").as("vec"))
-      val copurchase = graft.functions.Graph.copurchaseEdges(
-        graft.sources.Tables.lineitem(s, sfDir)).localCheckpoint()
+      val copurchase = Checkpoints.local(graft.functions.Graph.copurchaseEdges(
+        graft.sources.Tables.lineitem(s, sfDir)))
       Seq(
         built("int8")(Similarity.writeInt8Index(corpus, s"$idx/int8")),
         built("ivfpq")(Similarity.writeIvfPqIndex(corpus, s"$idx/ivfpq",
@@ -344,10 +357,9 @@ object Bench {
         s"$idx/edges_$by", "src BIGINT, dst BIGINT", Seq(by), 32)
       s.table(s"graft_bench_edges_$by")
     }
-    def probes(s: SparkSession): DataFrame = graft.sources.Tables.embeddings(s, sfDir)
-      .filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      .localCheckpoint()
+    def probes(s: SparkSession): DataFrame = Checkpoints.local(
+      graft.sources.Tables.embeddings(s, sfDir).filter(col("vec_id") < 20)
+        .select(col("vec_id").as("qid"), col("embedding").as("qvec")))
     Seq(
       "graph_pagerank_served" -> { s =>
         val e = edges(s, "src")

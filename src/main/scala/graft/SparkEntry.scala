@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CoreOps
 import graft.sources.Tables
+import graft.functions.Checkpoints.Owned
 
 /** Driver contract (see SURVEY.md §7 and the build plan).
   *
@@ -130,7 +131,7 @@ object SparkEntry {
         .filter(pmod(col("src"), lit(10)) === 0 &&
           pmod(col("dst"), lit(10)) === 0)
         .select(col("src"), col("dst"))
-        .localCheckpoint() // consumed by 3 insert batches + the delete
+        .checkpointed() // consumed by 3 insert batches + the delete
       val s = half.sparkSession
       val stateDir = java.nio.file.Files
         .createTempDirectory("graft-tri-gate").toString

@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.functions.Checkpoints
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,11 +22,21 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed += name -> Option(e.getMessage).getOrElse(e.getClass.getName)
+      // each query is a unit of work: its scope owns every checkpoint it
+      // makes, and a query that ends holding anything persisted fails
+      // (what it held is released, so the next query starts clean)
+      val error =
+        try {
+          Checkpoints.scoped(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name"))
+          None
+        } catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName)) }
+      val held = spark.sparkContext.getPersistentRDDs.values.toSeq.sortBy(_.id)
+      held.foreach(_.unpersist(blocking = false))
+      error.orElse(Option.when(held.nonEmpty)(s"ended holding ${held.size} persisted " +
+        s"RDD(s) (ids ${held.map(_.id).mkString(",")})")).foreach { msg =>
+        System.err.println(s"[verify] $name failed: $msg")
+        failed += name -> msg
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,53 +1,134 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
 
-/** Release helper for iterative localCheckpoint loops (BPE rounds, Lloyd
-  * iterations, label propagation): each round checkpoints a new working
-  * set, and WITHOUT unpersisting the previous round's blocks executor
-  * storage grows linearly with the iteration count. Call
-  * [[unpersist]] on the PREVIOUS frame only after the next checkpoint has
-  * materialized — a localCheckpoint'd RDD's lineage is truncated, so its
-  * blocks must never be dropped while still reachable from live plans.
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The one owner of `localCheckpoint` blocks: every checkpoint is made
+  * through [[local]] (`.checkpointed()` in a chain), and a [[scoped]]
+  * block owns the ones made on its thread while it is open.
+  *  - Registration is thread-local and explicit: only [[local]] calls
+  *    register, to the innermost scope on their own thread. A raw
+  *    `localCheckpoint()` is never touched by any scope.
+  *  - On exit a scope releases every checkpoint it owns that its result
+  *    does not reach, and passes the rest to the enclosing scope. Reach
+  *    is the `LogicalRDD`s in a frame's plan (subqueries included) plus
+  *    their transitive `rdd.dependencies`, so a lazy checkpoint keeps its
+  *    inputs until it runs. A tuple, case class or collection reaches
+  *    what its frames reach; any other result reaches nothing.
+  *  - A checkpoint made with no scope open, or escaping the outermost
+  *    one, is the caller's, released with [[unpersist]].
+  *  - A scope that exits by an exception releases everything it owns.
+  *  - Units of work open a scope (each foreachBatch body, Verify query,
+  *    Bench row and run, test), so state a callback keeps past its batch
+  *    must be materialized by the callback (its own raw checkpoint).
   *
-  * THIS HELPER IS THE ONLY RELEASE THAT WORKS (measured on the shipped
-  * Spark 4.1.2, pinned by CheckpointsSpec): `Dataset.unpersist` routes
-  * through the CacheManager, which only drops `persist()`/`cache()`
-  * entries — on a localCheckpoint'd frame it is a silent NO-OP and the
-  * RDD blocks stay resident until driver GC collects the Dataset.
-  * Plain `.unpersist()` on a checkpointed frame is therefore always a
-  * bug (r17 third review); route through here instead.
+  * Release goes through the RDD: `Dataset.unpersist` only drops
+  * CacheManager entries and is a silent no-op on a checkpoint (measured
+  * on Spark 4.1.2, pinned by CheckpointsSpec).
   */
 private[graft] object Checkpoints {
 
-  /** The checkpointed RDD behind a localCheckpoint'd DataFrame — ONLY
-    * when the frame IS the checkpoint (optionally behind one Project,
-    * e.g. after a `.drop`). A deep search would also match checkpoints
-    * merely REFERENCED further down the plan (a filter over a shared
-    * cached working set) and release blocks other frames still need —
-    * exactly the bug this strictness prevents (a loop's `prev` on round
-    * one is usually a projection over the shared input, not a checkpoint
-    * of its own).
+  /** This thread's open scopes, innermost first: the RDDs each owns. */
+  private val open = new ThreadLocal[List[mutable.LinkedHashMap[Int, RDD[_]]]] {
+    override def initialValue() = Nil
+  }
+
+  /** `ds.localCheckpoint(eager)`, owned by the innermost open scope. */
+  def local[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
+    val c = ds.localCheckpoint(eager)
+    open.get.headOption.foreach(s => rddOf(c.toDF()).foreach(r => s(r.id) = r))
+    c
+  }
+
+  /** `ds.checkpointed()`: [[local]] in a chain. */
+  implicit class Owned[T](private val ds: Dataset[T]) extends AnyVal {
+    def checkpointed(eager: Boolean = true): Dataset[T] = local(ds, eager)
+  }
+
+  /** Run `body` in a scope owning the checkpoints [[local]] makes on this
+    * thread meanwhile (the contract above).
     */
-  def rddOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        p.child match {
-          case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-          case _ => None
-        }
+  def scoped[T](body: => T): T = {
+    val scope = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    val outer = open.get
+    open.set(scope :: outer)
+    val result =
+      try body
+      catch { case t: Throwable =>
+        open.set(outer)
+        scope.values.foreach(_.unpersist(blocking = false))
+        throw t
+      }
+    open.set(outer)
+    val kept = reached(result)
+    val (pass, drop) = scope.partition { case (id, _) => kept(id) }
+    drop.values.foreach(_.unpersist(blocking = false))
+    outer.headOption.foreach(_ ++= pass)
+    result
+  }
+
+  /** Ids of the RDDs `result`'s frames scan, with their dependencies. */
+  private def reached(result: Any): Set[Int] = {
+    val seen = mutable.Set.empty[Int]
+    val todo = mutable.Stack.empty[RDD[_]]
+    def walk(x: Any): Unit = x match {
+      case ds: Dataset[_] =>
+        ds.queryExecution.logical.collectWithSubqueries { case l: LogicalRDD => l.rdd }
+          .foreach(todo.push)
+      case i: Iterable[_] => i.foreach(walk)
+      case p: Product => p.productIterator.foreach(walk)
+      case _ => ()
+    }
+    walk(result)
+    while (todo.nonEmpty) {
+      val r = todo.pop()
+      if (seen.add(r.id)) r.dependencies.foreach(d => todo.push(d.rdd))
+    }
+    seen.toSet
+  }
+
+  /** The RDD behind a frame that IS a checkpoint: the `LogicalRDD`, under
+    * Projects that only keep or rename its columns (`.drop`, `.select`).
+    * Strict on purpose: a filter over a shared working set, or a computed
+    * column over a checkpoint, is a new frame, and releasing the
+    * checkpoint under it would free blocks other frames still need.
+    */
+  def rddOf(df: DataFrame): Option[RDD[_]] = {
+    def keepsColumns(p: Project) = p.projectList.forall {
+      case _: Attribute | Alias(_: Attribute, _) => true
+      case _ => false
+    }
+    @scala.annotation.tailrec
+    def strip(plan: LogicalPlan): Option[RDD[_]] = plan match {
+      case l: LogicalRDD => Some(l.rdd)
+      case p: Project if keepsColumns(p) => strip(p.child)
       case _ => None
     }
+    strip(df.queryExecution.logical)
+  }
 
-  def unpersist(df: DataFrame): Unit = rddOf(df).foreach(_.unpersist(false))
+  /** Release `df`'s checkpoint now: a loop's superseded round, or a
+    * caller-owned frame. One an ENCLOSING scope owns is left to it, so a
+    * nested scope never frees its caller's blocks.
+    */
+  def unpersist(df: DataFrame): Unit = rddOf(df).foreach { r =>
+    val scopes = open.get
+    if (!scopes.drop(1).exists(_.contains(r.id))) {
+      scopes.headOption.foreach(_.remove(r.id))
+      r.unpersist(blocking = false)
+    }
+  }
 
-  /** ACTUAL storage footprint (memory + disk bytes) of a
-    * localCheckpoint'd frame's materialized blocks — the precise input
-    * to a broadcast-fit decision, where plan statistics are either
-    * join-inflated (local derived frames) or absent (LogicalRDD stats
-    * default). 0 for a frame that is not a checkpoint (strict
-    * [[rddOf]]) or whose blocks are gone.
+  /** ACTUAL storage footprint (memory + disk bytes) of a checkpointed
+    * frame's materialized blocks — the precise input to a broadcast-fit
+    * decision, where plan statistics are either join-inflated (local
+    * derived frames) or absent (LogicalRDD stats default). 0 for a frame
+    * that is not a checkpoint (strict [[rddOf]]) or whose blocks are gone.
     */
   def storageBytes(df: DataFrame): Long = rddOf(df).map { rdd =>
     df.sparkSession.sparkContext.getRDDStorageInfo

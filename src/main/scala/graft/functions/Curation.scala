@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Checkpoints.Owned
 
 /** Corpus-curation operators for training-data pipelines, beyond dedup:
   * benchmark-contamination detection, deterministic stratified sampling,
@@ -371,7 +372,7 @@ object Curation {
     // smoke, 98 s -> 15.3 s at 50x, from this checkpoint alone)
     val q = docs.select(col(idCol).as("doc_id"), col(srcCol).as("source"),
       TextAnalysis.qualityMilli(col(textCol)).as("q_milli"))
-      .localCheckpoint()
+      .checkpointed()
     val hs = q.groupBy(col("source"), col("q_milli")).agg(count(lit(1)).as("c"))
     val ns = hs.groupBy(col("source")).agg(sum(col("c")).as("n"))
     // dense per-source CDF over the full score alphabet: the grid
@@ -429,7 +430,7 @@ object Curation {
     // the pair frame (typically a full LSH build) feeds CC AND three
     // pairing branches — cut its lineage once so the build executes once,
     // not per consumer (cluster equivalent: a stored pair table)
-    val pairsOnce = pairs.localCheckpoint()
+    val pairsOnce = pairs.checkpointed()
     val clusters = connectedComponents(pairsOnce, aCol, bCol)
     val p = pairsOnce.select(col(aCol).as("anchor_id"), col(bCol).as("pos_id"))
       .withColumn("shard", pmod(hash48(col("anchor_id")), lit(shards)))
@@ -483,10 +484,10 @@ object Curation {
       valPermille: Int = 100,
       testPermille: Int = 50): DataFrame = {
     // one corpus pass shared by all three gates + the final split
-    val d = docs.localCheckpoint()
+    val d = docs.checkpointed()
     // stage 1 — quality: surprisal within 1.25x the corpus mean
     val sur = TextAnalysis.lmSurprisalScore(d, textCol, idCol)
-      .localCheckpoint()
+      .checkpointed()
     val mean = sur.agg(expr("sum(avg_surprisal_q10) div count(1)").as("mean_q10"))
     val qual = sur.crossJoin(broadcast(mean))
       .filter(col("avg_surprisal_q10") * 100 <= col("mean_q10") * 125)
@@ -810,7 +811,7 @@ object Curation {
       .withColumn("__chunk", longDiv(col(idCol).cast("long"), chunkDiv))
       .select(col(idCol), col(srcCol), col(qualityCol),
         col(tokensCol), col("__chunk"))
-      .localCheckpoint()
+      .checkpointed()
     // 1. tokens in strictly-better quality levels, per source: a window
     // over the <= 1001-row-per-source SUMMARY (quality values are unique
     // after the groupBy, so "rows up to the previous one" under a DESC
@@ -885,7 +886,7 @@ object Curation {
       .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(buckets)))
       .groupBy(col("doc_id"), col("__tgt"), col("b"))
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint(false)
+      .checkpointed(eager = false)
     // target and raw bucket models in ONE re-aggregate of the shared frame
     val model = td.groupBy(col("b"))
       .agg(sum(when(col("__tgt"), col("k")).otherwise(lit(0L))).as("ct"),
@@ -989,7 +990,7 @@ object Curation {
       targetPred: Column,
       buckets: Int = 4096): DsirFrozenModel = {
     val m = dsirTrainModel(df, textCol, idCol, targetPred, buckets)
-      .localCheckpoint()
+      .checkpointed()
     val (tt, tr) = dsirModelTotals(m)
     DsirFrozenModel(m, tt, tr, df.count())
   }
@@ -1044,7 +1045,7 @@ object Curation {
       textCol: String,
       idCol: String,
       targetPred: Column,
-      buckets: Int = 4096): DataFrame = {
+      buckets: Int = 4096): DataFrame = Checkpoints.scoped {
     val spark = appended.sparkSession
     val base = appended.select(col(idCol).as("doc_id"),
       col(textCol).as("__text"), targetPred.cast("boolean").as("__tgt"))
@@ -1054,79 +1055,75 @@ object Curation {
       .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(buckets)))
       .groupBy(col("doc_id"), col("__tgt"), col("b"))
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint() // consumed by the appended model AND the scorer
-    try {
-      val mA = tdA.groupBy(col("b"))
-        .agg(sum(when(col("__tgt"), col("k")).otherwise(lit(0L))).as("ct"),
-          sum(col("k")).as("cr"))
-        .localCheckpoint() // bounded (<= buckets rows); merge + drift + totals
-      try {
-        val (ttA, trA) = dsirModelTotals(mA)
-        val mF = frozen.model
-        // the fresh model is merge(frozen, appended) — the additive
-        // monoid the r14 directive named; two bounded tables, no retrain
-        val mN = mF.unionByName(mA).groupBy(col("b"))
-          .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-        val (ttN, trN) = (frozen.targetTotal + ttA, frozen.rawTotal + trA)
-        val l = TextAnalysis.log2Q10Sql _
-        val cF = TextAnalysis.log2Q10(frozen.rawTotal + buckets) -
-          TextAnalysis.log2Q10(frozen.targetTotal + buckets)
-        val cN = TextAnalysis.log2Q10(trN + buckets) -
-          TextAnalysis.log2Q10(ttN + buckets)
-        // both arms in ONE pass over the shared per-(doc, bucket) counts
-        // — term-for-term the dsirScoreAgainst formula per arm
-        val scored = tdA
-          .join(broadcast(mF.select(col("b"),
-            col("ct").as("ctf"), col("cr").as("crf"))), Seq("b"), "left")
-          .join(broadcast(mN.select(col("b"),
-            col("ct").as("ctn"), col("cr").as("crn"))), Seq("b"), "left")
-          .withColumn("s1f", col("k") * expr(
-            s"${l("(coalesce(ctf, 0) + 1)")} - ${l("(coalesce(crf, 0) + 1)")}"))
-          .withColumn("s1n", col("k") * expr(
-            s"${l("(coalesce(ctn, 0) + 1)")} - ${l("(coalesce(crn, 0) + 1)")}"))
-          .groupBy(col("doc_id"))
-          .agg(sum(col("k")).as("n_tri"),
-            sum(col("s1f")).as("sf"), sum(col("s1n")).as("sn"))
-          .select(col("doc_id"),
-            expr(s"cast(sf + n_tri * $cF as bigint)").as("wf"),
-            expr(s"cast(sn + n_tri * $cN as bigint)").as("wn"))
-        val ero = scored.agg(count(lit(1)).as("n_scored"),
-          sum(when((col("wf") >= 0) =!= (col("wn") >= 0), lit(1L))
-            .otherwise(lit(0L))).as("n_flips"),
-          expr("sum(abs(wf - wn)) div count(1)").as("mean_abs_w_gap_q10"))
-          .head()
-        require(ero.getAs[Long]("n_scored") > 0L,
-          "dsirModelStalenessReport: the appended slice has no scorable " +
-            "docs (no >= 3-char texts, or isFrozen matched every doc)")
-        // per-bucket RAW-mass share drift, frozen vs appended — the
-        // nbStalenessCore block over the models' own cr columns
-        val share = mF.select(col("b"), col("cr").as("k"))
-          .withColumn("__fr", lit(true))
-          .unionByName(mA.select(col("b"), col("cr").as("k"))
-            .withColumn("__fr", lit(false)))
-        val drift = share
-          .join(share.groupBy(col("__fr")).agg(sum(col("k")).as("tk")), "__fr")
-          .select(col("__fr"), col("b"), expr("k * 1000000 div tk").as("s_q6"))
-          .groupBy(col("b"))
-          .agg(sum(when(col("__fr"), col("s_q6"))).as("sf"),
-            sum(when(!col("__fr"), col("s_q6"))).as("sa"))
-          .select(abs(coalesce(col("sa"), lit(0L)) -
-            coalesce(col("sf"), lit(0L))).as("ad"))
-          .agg(max(col("ad")).as("max_share_delta_q6"),
-            expr("sum(ad) div count(1)").as("mean_share_delta_q6"))
-          .head()
-        spark.range(1).select(
-          lit(frozen.nDocs).as("n_frozen"),
-          lit(nAppended).as("n_appended"),
-          lit(drift.getAs[Long]("max_share_delta_q6")).as("max_share_delta_q6"),
-          lit(drift.getAs[Long]("mean_share_delta_q6")).as("mean_share_delta_q6"),
-          lit(ero.getAs[Long]("n_scored")).as("n_scored"),
-          lit(ero.getAs[Long]("n_flips")).as("n_flips"),
-          lit(ero.getAs[Long]("n_flips") * 1000L /
-            ero.getAs[Long]("n_scored")).as("flip_q3"),
-          lit(ero.getAs[Long]("mean_abs_w_gap_q10")).as("mean_abs_w_gap_q10"))
-      } finally { Checkpoints.unpersist(mA); () }
-    } finally { Checkpoints.unpersist(tdA); () }
+      .checkpointed() // consumed by the appended model AND the scorer
+    val mA = tdA.groupBy(col("b"))
+      .agg(sum(when(col("__tgt"), col("k")).otherwise(lit(0L))).as("ct"),
+        sum(col("k")).as("cr"))
+      .checkpointed() // bounded (<= buckets rows); merge + drift + totals
+    val (ttA, trA) = dsirModelTotals(mA)
+    val mF = frozen.model
+    // the fresh model is merge(frozen, appended) — the additive
+    // monoid the r14 directive named; two bounded tables, no retrain
+    val mN = mF.unionByName(mA).groupBy(col("b"))
+      .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
+    val (ttN, trN) = (frozen.targetTotal + ttA, frozen.rawTotal + trA)
+    val l = TextAnalysis.log2Q10Sql _
+    val cF = TextAnalysis.log2Q10(frozen.rawTotal + buckets) -
+      TextAnalysis.log2Q10(frozen.targetTotal + buckets)
+    val cN = TextAnalysis.log2Q10(trN + buckets) -
+      TextAnalysis.log2Q10(ttN + buckets)
+    // both arms in ONE pass over the shared per-(doc, bucket) counts
+    // — term-for-term the dsirScoreAgainst formula per arm
+    val scored = tdA
+      .join(broadcast(mF.select(col("b"),
+        col("ct").as("ctf"), col("cr").as("crf"))), Seq("b"), "left")
+      .join(broadcast(mN.select(col("b"),
+        col("ct").as("ctn"), col("cr").as("crn"))), Seq("b"), "left")
+      .withColumn("s1f", col("k") * expr(
+        s"${l("(coalesce(ctf, 0) + 1)")} - ${l("(coalesce(crf, 0) + 1)")}"))
+      .withColumn("s1n", col("k") * expr(
+        s"${l("(coalesce(ctn, 0) + 1)")} - ${l("(coalesce(crn, 0) + 1)")}"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("k")).as("n_tri"),
+        sum(col("s1f")).as("sf"), sum(col("s1n")).as("sn"))
+      .select(col("doc_id"),
+        expr(s"cast(sf + n_tri * $cF as bigint)").as("wf"),
+        expr(s"cast(sn + n_tri * $cN as bigint)").as("wn"))
+    val ero = scored.agg(count(lit(1)).as("n_scored"),
+      sum(when((col("wf") >= 0) =!= (col("wn") >= 0), lit(1L))
+        .otherwise(lit(0L))).as("n_flips"),
+      expr("sum(abs(wf - wn)) div count(1)").as("mean_abs_w_gap_q10"))
+      .head()
+    require(ero.getAs[Long]("n_scored") > 0L,
+      "dsirModelStalenessReport: the appended slice has no scorable " +
+        "docs (no >= 3-char texts, or isFrozen matched every doc)")
+    // per-bucket RAW-mass share drift, frozen vs appended — the
+    // nbStalenessCore block over the models' own cr columns
+    val share = mF.select(col("b"), col("cr").as("k"))
+      .withColumn("__fr", lit(true))
+      .unionByName(mA.select(col("b"), col("cr").as("k"))
+        .withColumn("__fr", lit(false)))
+    val drift = share
+      .join(share.groupBy(col("__fr")).agg(sum(col("k")).as("tk")), "__fr")
+      .select(col("__fr"), col("b"), expr("k * 1000000 div tk").as("s_q6"))
+      .groupBy(col("b"))
+      .agg(sum(when(col("__fr"), col("s_q6"))).as("sf"),
+        sum(when(!col("__fr"), col("s_q6"))).as("sa"))
+      .select(abs(coalesce(col("sa"), lit(0L)) -
+        coalesce(col("sf"), lit(0L))).as("ad"))
+      .agg(max(col("ad")).as("max_share_delta_q6"),
+        expr("sum(ad) div count(1)").as("mean_share_delta_q6"))
+      .head()
+    spark.range(1).select(
+      lit(frozen.nDocs).as("n_frozen"),
+      lit(nAppended).as("n_appended"),
+      lit(drift.getAs[Long]("max_share_delta_q6")).as("max_share_delta_q6"),
+      lit(drift.getAs[Long]("mean_share_delta_q6")).as("mean_share_delta_q6"),
+      lit(ero.getAs[Long]("n_scored")).as("n_scored"),
+      lit(ero.getAs[Long]("n_flips")).as("n_flips"),
+      lit(ero.getAs[Long]("n_flips") * 1000L /
+        ero.getAs[Long]("n_scored")).as("flip_q3"),
+      lit(ero.getAs[Long]("mean_abs_w_gap_q10")).as("mean_abs_w_gap_q10"))
   }
 
   /** Self-contained gate form of the DSIR staleness monitor: freeze on
@@ -1140,15 +1137,13 @@ object Curation {
       idCol: String,
       targetPred: Column,
       isFrozen: Column,
-      buckets: Int = 4096): DataFrame = {
+      buckets: Int = 4096): DataFrame = Checkpoints.scoped {
     val frozen = dsirFreezeStaleness(df.filter(isFrozen), textCol, idCol,
       targetPred, buckets)
     // the report row is literal-valued (every field forced by a head()),
-    // so the frozen model's checkpoint can be released immediately
-    val out = dsirModelStalenessReportFrom(frozen, df.filter(!isFrozen),
+    // so the scope releases the frozen model's checkpoint on return
+    dsirModelStalenessReportFrom(frozen, df.filter(!isFrozen),
       textCol, idCol, targetPred, buckets)
-    Checkpoints.unpersist(frozen.model)
-    out
   }
 
   /** Gopher-style composite quality gate (Rae et al. 2021, Table A1):
@@ -1251,7 +1246,7 @@ object Curation {
       textCol: String,
       idCol: String,
       srcCol: String): DataFrame = {
-    val sc = surprisalFrame(docs, textCol, idCol, srcCol).localCheckpoint(false)
+    val sc = surprisalFrame(docs, textCol, idCol, srcCol).checkpointed(eager = false)
     sc.join(broadcast(surprisalTerciles(sc)), "src")
       .select(col("doc_id"), col("src").as("source"),
         col("s").as("avg_surprisal_q10"),
@@ -1316,7 +1311,7 @@ object Curation {
       df: DataFrame,
       textCol: String,
       idCol: String,
-      srcCol: String): CcnetFrozenCuts = {
+      srcCol: String): CcnetFrozenCuts = Checkpoints.scoped {
     // ONE trigram extraction feeds BOTH frozen artifacts (r17
     // optimization round): the LM counts are the per-(doc, trigram)
     // multiplicities re-aggregated, and the cuts' per-doc surprisal is
@@ -1334,24 +1329,22 @@ object Curation {
       carryCols = Seq("src"))
       .groupBy(col("doc_id"), col("src"), col("t"))
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint()
-    try {
-      val lm = td.groupBy(col("t")).agg(sum(col("k")).as("cnt"))
-        .localCheckpoint()
-      val totalRow = lm.agg(sum(col("cnt")).as("t")).head()
-      require(!totalRow.isNullAt(0) && totalRow.getAs[Long]("t") > 0L,
-        "ccnetFreezeCuts: the frozen slice has no trigrams")
-      val total = totalRow.getAs[Long]("t")
-      val sur = td.join(lm, "t")
-        .withColumn("s_q10", TextAnalysis.surprisalQ10("cnt", total))
-        .groupBy(col("doc_id"), col("src"))
-        .agg(sum(col("k")).as("n_tri"),
-          sum(col("k") * col("s_q10")).as("sum_s"))
-        .select(col("doc_id"), col("src"),
-          expr("cast(sum_s div n_tri as bigint)").as("s"))
-      CcnetFrozenCuts(lm, total,
-        surprisalTerciles(sur).localCheckpoint(), df.count())
-    } finally { Checkpoints.unpersist(td); () }
+      .checkpointed()
+    val lm = td.groupBy(col("t")).agg(sum(col("k")).as("cnt"))
+      .checkpointed()
+    val totalRow = lm.agg(sum(col("cnt")).as("t")).head()
+    require(!totalRow.isNullAt(0) && totalRow.getAs[Long]("t") > 0L,
+      "ccnetFreezeCuts: the frozen slice has no trigrams")
+    val total = totalRow.getAs[Long]("t")
+    val sur = td.join(lm, "t")
+      .withColumn("s_q10", TextAnalysis.surprisalQ10("cnt", total))
+      .groupBy(col("doc_id"), col("src"))
+      .agg(sum(col("k")).as("n_tri"),
+        sum(col("k") * col("s_q10")).as("sum_s"))
+      .select(col("doc_id"), col("src"),
+        expr("cast(sum_s div n_tri as bigint)").as("s"))
+    CcnetFrozenCuts(lm, total,
+      surprisalTerciles(sur).checkpointed(), df.count())
   }
 
   /** Persist / load the [[CcnetFrozenCuts]] bundle. The LM + cuts tables
@@ -1411,7 +1404,7 @@ object Curation {
         sum(col("k") * col("s_q10")).as("sum_s"))
       .withColumn("s", expr("cast(sum_s div n_tri as bigint)"))
       .select(col("doc_id"), col("src"), col("s"))
-      .localCheckpoint() // consumed by the fresh cuts AND both bucketings
+      .checkpointed() // consumed by the fresh cuts AND both bucketings
     ccnetCutsTail(sA, frozen.cuts)
   }
 
@@ -1470,40 +1463,36 @@ object Curation {
       textCol: String,
       idCol: String,
       srcCol: String,
-      isFrozen: Column): DataFrame = {
+      isFrozen: Column): DataFrame = Checkpoints.scoped {
     val base = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       col(srcCol).as("src"), isFrozen.as("__fr"))
     val td = TextAnalysis.charTrigrams(base, "__text", "doc_id",
       carryCols = Seq("src", "__fr"))
       .groupBy(col("doc_id"), col("src"), col("__fr"), col("t"))
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint() // consumed by the LM, the frozen surprisal, and sA
-    try {
-      val tdF = td.filter(col("__fr"))
-      val lm = tdF.groupBy(col("t")).agg(sum(col("k")).as("cnt"))
-        .localCheckpoint()
-      try {
-        val totalRow = lm.agg(sum(col("cnt")).as("t")).head()
-        require(!totalRow.isNullAt(0) && totalRow.getAs[Long]("t") > 0L,
-          "ccnetCutsStaleness: the frozen slice has no trigrams")
-        val total = totalRow.getAs[Long]("t")
-        def docSurprisal(slice: DataFrame, frozenSide: Boolean): DataFrame =
-          (if (frozenSide) slice.join(lm, "t") // every frozen t is in lm
-          else slice.join(broadcast(lm), Seq("t"), "left")
-            .withColumn("cnt", coalesce(col("cnt"), lit(1L)))) // unseen: 1
-            .withColumn("s_q10", TextAnalysis.surprisalQ10("cnt", total))
-            .groupBy(col("doc_id"), col("src"))
-            .agg(sum(col("k")).as("n_tri"),
-              sum(col("k") * col("s_q10")).as("sum_s"))
-            .select(col("doc_id"), col("src"),
-              expr("cast(sum_s div n_tri as bigint)").as("s"))
-        val cutsF = surprisalTerciles(docSurprisal(tdF, frozenSide = true))
-          .localCheckpoint()
-        val sA = docSurprisal(td.filter(!col("__fr")), frozenSide = false)
-          .localCheckpoint()
-        ccnetCutsTail(sA, cutsF)
-      } finally { Checkpoints.unpersist(lm); () }
-    } finally { Checkpoints.unpersist(td); () }
+      .checkpointed() // consumed by the LM, the frozen surprisal, and sA
+    val tdF = td.filter(col("__fr"))
+    val lm = tdF.groupBy(col("t")).agg(sum(col("k")).as("cnt"))
+      .checkpointed()
+    val totalRow = lm.agg(sum(col("cnt")).as("t")).head()
+    require(!totalRow.isNullAt(0) && totalRow.getAs[Long]("t") > 0L,
+      "ccnetCutsStaleness: the frozen slice has no trigrams")
+    val total = totalRow.getAs[Long]("t")
+    def docSurprisal(slice: DataFrame, frozenSide: Boolean): DataFrame =
+      (if (frozenSide) slice.join(lm, "t") // every frozen t is in lm
+      else slice.join(broadcast(lm), Seq("t"), "left")
+        .withColumn("cnt", coalesce(col("cnt"), lit(1L)))) // unseen: 1
+        .withColumn("s_q10", TextAnalysis.surprisalQ10("cnt", total))
+        .groupBy(col("doc_id"), col("src"))
+        .agg(sum(col("k")).as("n_tri"),
+          sum(col("k") * col("s_q10")).as("sum_s"))
+        .select(col("doc_id"), col("src"),
+          expr("cast(sum_s div n_tri as bigint)").as("s"))
+    val cutsF = surprisalTerciles(docSurprisal(tdF, frozenSide = true))
+      .checkpointed()
+    val sA = docSurprisal(td.filter(!col("__fr")), frozenSide = false)
+      .checkpointed()
+    ccnetCutsTail(sA, cutsF)
   }
 
   /** Connected components over an undirected pair list (the
@@ -1523,35 +1512,37 @@ object Curation {
       aCol: String,
       bCol: String,
       maxIters: Int = 20,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None): DataFrame = {
+      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None)
+      : DataFrame = Checkpoints.scoped {
     // checkpoint the HALF pair frame, not the symmetric union: the union
     // reads `pairs` twice, and for the common caller shape
     // connectedComponents(minhashLshPairs(...)) that re-executed the
     // whole LSH build once per direction (measured ~17% of
     // contrastive_pairs' wall). The mirror is a narrow map over the
     // materialized blocks, recomputed per iteration for free.
-    val half = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint()
-    // r18 (guide §2.4, remove shuffles outright): every propagation
-    // round joins the SYMMETRIC edge frame on `dst` — left as a lazy
-    // union it re-shuffles edge-sized bytes once per round. Materialize
-    // it ONCE, hash-partitioned on the join key with a DATA-SIZED
-    // partition count (actual checkpoint bytes / 64 MB, floor 1 — never
-    // the core count), so no round ever exchanges the edge side again:
-    // a localCheckpoint preserves the physical plan's outputPartitioning
-    // through LogicalRDD, and per round only the node-sized label frame
-    // shuffles to it. The half pin is released once the symmetric copy
-    // is materialized (one resident edge copy, not two).
-    val p = math.max(1L,
-      (2L * Checkpoints.storageBytes(half) + (64L << 20) - 1) / (64L << 20))
-    val edges = half
-      .union(half.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(p.toInt, col("dst"))
-      .localCheckpoint()
-    Checkpoints.unpersist(half)
+    val edges = Checkpoints.scoped {
+      val half = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+        .checkpointed()
+      // r18 (guide §2.4, remove shuffles outright): every propagation
+      // round joins the SYMMETRIC edge frame on `dst` — left as a lazy
+      // union it re-shuffles edge-sized bytes once per round. Materialize
+      // it ONCE, hash-partitioned on the join key with a DATA-SIZED
+      // partition count (actual checkpoint bytes / 64 MB, floor 1 — never
+      // the core count), so no round ever exchanges the edge side again:
+      // a localCheckpoint preserves the physical plan's outputPartitioning
+      // through LogicalRDD, and per round only the node-sized label frame
+      // shuffles to it. The half pin is released (its scope exits) once the
+      // symmetric copy is materialized (one resident edge copy, not two).
+      val p = math.max(1L,
+        (2L * Checkpoints.storageBytes(half) + (64L << 20) - 1) / (64L << 20))
+      half
+        .union(half.select(col("dst").as("src"), col("src").as("dst")))
+        .repartition(p.toInt, col("dst"))
+        .checkpointed()
+    }
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-      .localCheckpoint()
+      .checkpointed()
     var it = 0
     var converged = false
     while (!converged && it < maxIters) {
@@ -1574,14 +1565,14 @@ object Curation {
       // component would otherwise need O(diameter) rounds.
       var mid: Option[DataFrame] = None
       val next = (if (it < 3) merged else {
-        val m = merged.localCheckpoint(false)
+        val m = merged.checkpointed(eager = false)
         mid = Some(m)
         val byNode = m.select(col("node").as("pn"), col("label").as("plabel"))
         m.join(byNode, m("label") === byNode("pn"), "left")
           .select(m("node"),
             least(m("label"), coalesce(col("plabel"), m("label"))).as("label"),
             col("__old"))
-      }).localCheckpoint(false)
+      }).checkpointed(eager = false)
       val changed = next.filter(col("label") =!= col("__old")).count()
       // `next` is materialized by the count above; the previous round's
       // checkpoint blocks (and the jump intermediate) are now unreachable
@@ -1593,10 +1584,6 @@ object Curation {
       it += 1
     }
     roundsOut.foreach(_.set(it))
-    // the final labels frame is checkpointed; the pre-partitioned edge
-    // blocks served only the (already-executed) iteration joins —
-    // release them now rather than waiting for the context cleaner
-    Checkpoints.unpersist(edges)
     // A silent exit via the iteration cap would hand the caller unmerged
     // (wrong) cluster labels; a chain-shaped component longer than
     // maxIters must fail loudly, not quietly.
@@ -1640,7 +1627,8 @@ object Curation {
       newPairs: DataFrame,
       aCol: String = "a",
       bCol: String = "b",
-      mergeEdgesOut: Option[java.util.concurrent.atomic.AtomicLong] = None): DataFrame = {
+      mergeEdgesOut: Option[java.util.concurrent.atomic.AtomicLong] = None)
+      : DataFrame = Checkpoints.scoped {
     // ONE scan of newPairs (r18): the union form read the (often
     // expensive — a derived pair pipeline) frame twice; the explode is
     // the same row set from a single pass
@@ -1652,18 +1640,16 @@ object Curation {
     // member id, so its own row is among these (no phantom super-nodes)
     val affectedMembers = existing.join(affectedClusters, "cluster_id")
       .select(col("node"), col("cluster_id"))
-      .localCheckpoint()
+      .checkpointed()
     val mergeEdges = newPairs.select(col(aCol).as("a"), col(bCol).as("b"))
       .unionByName(affectedMembers.select(col("node").as("a"), col("cluster_id").as("b")))
-      .localCheckpoint()
+      .checkpointed()
     mergeEdgesOut.foreach(_.set(mergeEdges.count()))
     val relabeled = connectedComponents(mergeEdges, "a", "b")
     val untouched = existing.join(affectedClusters, Seq("cluster_id"), "left_anti")
-    val out = untouched.select(col("node"), col("cluster_id"))
+    // the relabeled checkpoint passes to the caller with the result
+    untouched.select(col("node"), col("cluster_id"))
       .unionByName(relabeled.select(col("node"), col("cluster_id")))
-    Checkpoints.unpersist(affectedMembers)
-    Checkpoints.unpersist(mergeEdges)
-    out
   }
 
   /** The DELETION direction of [[refreshClusters]]: retract a batch of
@@ -1707,7 +1693,8 @@ object Curation {
       existing: DataFrame,
       deletedIds: DataFrame,
       pairsAmong: DataFrame => DataFrame,
-      mergeEdgesOut: Option[java.util.concurrent.atomic.AtomicLong] = None): DataFrame = {
+      mergeEdgesOut: Option[java.util.concurrent.atomic.AtomicLong] = None)
+      : DataFrame = Checkpoints.scoped {
     val dead = Similarity.oneIdCol(deletedIds, "node")
     val affectedClusters = existing
       .join(broadcast(dead), Seq("node"), "left_semi")
@@ -1716,19 +1703,16 @@ object Curation {
       .join(broadcast(affectedClusters), Seq("cluster_id"), "left_semi")
       .join(broadcast(dead), Seq("node"), "left_anti")
       .select(col("node"))
-      .localCheckpoint()
+      .checkpointed()
     val mergeEdges = pairsAmong(survivors)
       .select(col("a"), col("b"))
-      .localCheckpoint()
+      .checkpointed()
     mergeEdgesOut.foreach(_.set(mergeEdges.count()))
     val relabeled = connectedComponents(mergeEdges, "a", "b")
     val untouched = existing
       .join(broadcast(affectedClusters), Seq("cluster_id"), "left_anti")
-    val out = untouched.select(col("node"), col("cluster_id"))
+    untouched.select(col("node"), col("cluster_id"))
       .unionByName(relabeled.select(col("node"), col("cluster_id")))
-    Checkpoints.unpersist(survivors)
-    Checkpoints.unpersist(mergeEdges)
-    out
   }
 
   /** Per-source dataset card — the corpus-stats bundle a pipeline
@@ -1842,7 +1826,7 @@ object Curation {
       budgetTokens: Long): DataFrame = {
     val tok = df.select(col(idCol), col(srcCol),
       TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-      .localCheckpoint()
+      .checkpointed()
     val st = tok.groupBy(col(srcCol)).agg(sum(col("n_tokens")).as("t"))
       .filter(col("t") > 0)
       .withColumn("w", floor(sqrt(col("t"))).cast("long"))

@@ -87,10 +87,10 @@ object CurationArtifacts {
     // ever re-running LSH+CC. Dup-population-sized (one row per doc in a
     // multi-member cluster), the same corpus-proportional class as
     // keep_best; maintain incrementally via `Curation.refreshClusters`.
-    val cc = Curation.connectedComponents(
+    val cc = Checkpoints.local(Curation.connectedComponents(
       Dedup.minhashLshPairs(docs, textCol, idCol,
         shingleN, lshBands, lshRowsPerBand, minJaccardMilli),
-      "a", "b").localCheckpoint()
+      "a", "b"))
     cc.write.mode("overwrite").parquet(s"$dir/clusters")
     Curation.keepBestFromClusters(docs, textCol, idCol, cc)
       .write.mode("overwrite").parquet(s"$dir/keep_best")

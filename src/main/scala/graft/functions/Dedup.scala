@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import TextAnalysis.{normalize, tokens}
+import graft.functions.Checkpoints.Owned
 
 /** Deduplication operators for training-data pipelines, in increasing
   * sophistication: exact (hash group-by), n-gram Jaccard (exact set
@@ -226,7 +227,7 @@ object Dedup {
       .drop("oset")
       // consumed three times (prefix probe + both verify sides): pay the
       // shingle hash + df join + per-doc sort once, not per consumer
-      .localCheckpoint()
+      .checkpointed()
     val probe = ordered
       .select(col("doc"), col("nd"),
         posexplode(slice(col("set"), lit(1), col("plen"))).as(Seq("pos", "s")))
@@ -854,7 +855,7 @@ object Dedup {
       rowsPerBand: Int,
       minJaccardMilli: Int,
       buckets: Int = 64,
-      excludeBatchId: Option[Long] = None): DataFrame = {
+      excludeBatchId: Option[Long] = None): DataFrame = Checkpoints.scoped {
     // reader params must match the layout's, or the bucket partition
     // filter prunes the TRUE candidates away — zero errors, zero dups
     IndexLayout.requireParams(spark, indexPath, Map(
@@ -865,7 +866,7 @@ object Dedup {
     val newBk = bandKeys(newDocs, textCol, idCol, n, bands, rowsPerBand)
       .select(col("doc"), col("band"), col("bh"))
       .withColumn("bucket", bandBucket(col("bh"), buckets))
-      .localCheckpoint()
+      .checkpointed()
     val newSh = withHashedShingles(newDocs, textCol, n, "sh")
       .select(col(idCol).as("doc"), col("sh"))
       .filter(size(col("sh")) > 0)
@@ -886,11 +887,9 @@ object Dedup {
       .select(col("x.doc").as("a"), col("y.doc").as("b"))
       .dropDuplicates("a", "b")
       // candidate-volume-bounded pin: materializing the candidate ids
-      // here lets newBk release NOW instead of backing the lazily
-      // returned frame — a per-micro-batch caller otherwise pins one
-      // batch-sized band-key block per batch forever (r17 fourth review)
-      .localCheckpoint()
-    Checkpoints.unpersist(newBk)
+      // here lets the scope release newBk on return instead of it backing
+      // the lazily returned frame (r17 fourth review)
+      .checkpointed()
     val corpusSh = spark.read.parquet(s"$indexPath/shingles").filter(notOwnBatch)
     candIds
       .join(newSh.select(col("doc").as("a"), col("sh").as("sha")), "a")

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Checkpoints.Owned
 
 /** Iterative graph computation on DataFrames — the pregel-shaped family
   * beyond [[Curation.connectedComponents]]'s pointer jumping.
@@ -66,9 +67,9 @@ object Graph {
     // edge table's bucketing — GraphOpsSpec pins the plan, SCALING.md
     // has both paths' 1M-node timings).
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
-      .localCheckpoint()
+      .checkpointed()
     val base = (1000L - dampMilli) * 1000L
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
     for (i <- 1 to iterations) {
@@ -88,7 +89,7 @@ object Graph {
       // previous agg exactly once), so cut lineage only periodically —
       // an every-round checkpoint serializes a full materialization job
       // per round for nothing
-      if (i % checkpointEvery == 0 && i < iterations) rank = rank.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < iterations) rank = rank.checkpointed()
     }
     rank.select(col("node"), col("r").as("rank_micro"))
   }
@@ -127,14 +128,14 @@ object Graph {
     require(iterations >= 1 && dampMilli >= 0 && dampMilli <= 1000)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(weightCol).cast("long").as("w"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     val deg = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
-      .localCheckpoint()
+      .checkpointed()
     val base = (1000L - dampMilli) * 1000L
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
     for (i <- 1 to iterations) {
       rank = weightedRound(e, deg, rank, base, dampMilli, broadcastRanks)
-      if (i % checkpointEvery == 0 && i < iterations) rank = rank.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < iterations) rank = rank.checkpointed()
     }
     rank.select(col("node"), col("r").as("rank_micro"))
   }
@@ -212,7 +213,7 @@ object Graph {
       weightCol: Option[String] = None,
       dampMilli: Int = 850,
       broadcastRanks: Boolean = true,
-      checkpointEdges: Boolean = true): PageRankRun = {
+      checkpointEdges: Boolean = true): PageRankRun = Checkpoints.scoped {
     require(tolMicro >= 0 && maxRounds >= 1 && dampMilli >= 0 && dampMilli <= 1000)
     val e0 = weightCol match {
       case Some(w) => edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
@@ -220,9 +221,9 @@ object Graph {
       case None => edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         lit(1L).as("w"))
     }
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     val deg = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
-      .localCheckpoint()
+      .checkpointed()
     val base = (1000L - dampMilli) * 1000L
     var rank = init match {
       case Some(prev) =>
@@ -231,15 +232,15 @@ object Graph {
         deg.select(col("src").as("node"))
           .join(prev.select(col("node"), col("rank_micro").as("r")), Seq("node"), "left")
           .select(col("node"), coalesce(col("r"), lit(1000000L)).as("r"))
-          .localCheckpoint()
+          .checkpointed()
       case None => deg.select(col("src").as("node"), lit(1000000L).as("r"))
-        .localCheckpoint()
+        .checkpointed()
     }
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
       val next = weightedRound(e, deg, rank, base, dampMilli, broadcastRanks)
-        .localCheckpoint()
+        .checkpointed()
       // nodes with in-edges that never held a rank row yet (first round
       // of a warm start on a delta-born sink) count their full entry as
       // the move — one extra round settles them
@@ -257,8 +258,6 @@ object Graph {
       rank = next
     }
     // the returned frame reads only the final rank checkpoint
-    if (checkpointEdges) Checkpoints.unpersist(e)
-    Checkpoints.unpersist(deg)
     PageRankRun(
       rank.select(col("node"), col("r").as("rank_micro")), rounds, converged)
   }
@@ -287,9 +286,9 @@ object Graph {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
+      .checkpointed()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
-      .localCheckpoint()
+      .checkpointed()
     val base = (1000L - dampMilli) * 1000L
     val seedDf = seeds.toDF("node").select(col("node"), lit(base).as("sb"))
     var rank = seeds.toDF("node")
@@ -305,7 +304,7 @@ object Graph {
       rank = seedDf.join(contrib, Seq("node"), "full_outer")
         .select(col("node"),
           (coalesce(col("sb"), lit(0L)) + coalesce(col("cr"), lit(0L))).as("r"))
-      if (i % 8 == 0 && i < iterations) rank = rank.localCheckpoint()
+      if (i % 8 == 0 && i < iterations) rank = rank.checkpointed()
     }
     rank.select(col("node"), col("r").as("rank_micro"))
   }
@@ -337,7 +336,7 @@ object Graph {
       .filter(col("ds") < col("dd") ||
         (col("ds") === col("dd") && col("src") < col("dst")))
       .select(col("src"), col("dst"))
-      .localCheckpoint() // consumed by both sides of the wedge join
+      .checkpointed() // consumed by both sides of the wedge join
     val wedges = oriented.select(col("src").as("a"), col("dst").as("b"))
       .join(oriented.select(col("src").as("b"), col("dst").as("c")), "b")
     val tris = wedges.join(oriented
@@ -386,11 +385,11 @@ object Graph {
     // re-exchanges; the checkpoint is only right for in-memory inputs
     val edges0 = knn
       .select(col("qid").as("node"), col("vec_id").as("nbr"), col("rank"))
-    val edges = if (checkpointEdges) edges0.localCheckpoint() else edges0
+    val edges = if (checkpointEdges) edges0.checkpointed() else edges0
     var labels = seeds
       .select(col("node"), col("label").cast("long").as("label"),
         lit(0L).as("hops"))
-      .localCheckpoint()
+      .checkpointed()
     for (r <- 1 to rounds) {
       val votes = edges
         .join(labels.select(col("node").as("nbr"), col("label")), "nbr")
@@ -402,7 +401,7 @@ object Graph {
         .filter(col("rn") === 1)
         .join(labels.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), col("label"), lit(r.toLong).as("hops"))
-      labels = labels.unionByName(picked).localCheckpoint()
+      labels = labels.unionByName(picked).checkpointed()
     }
     labels
   }
@@ -426,7 +425,7 @@ object Graph {
       bCol: String,
       rounds: Int,
       assumeSymmetric: Boolean = false,
-      checkpointEdges: Boolean = true): DataFrame = {
+      checkpointEdges: Boolean = true): DataFrame = Checkpoints.scoped {
     require(rounds >= 1, "communityLabels needs at least one round")
     // cluster path (plan pinned in GraphOpsSpec): feed a PRE-symmetrized
     // edge table stored bucketed by dst with assumeSymmetric = true,
@@ -439,10 +438,10 @@ object Graph {
       else edges.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct()
-    val sym = if (checkpointEdges) sym0.localCheckpoint() else sym0
+    val sym = if (checkpointEdges) sym0.checkpointed() else sym0
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-      .localCheckpoint()
+      .checkpointed()
     for (_ <- 1 to rounds) {
       val next = sym
         .join(labels.select(col("node").as("dst"), col("label")), "dst")
@@ -451,7 +450,7 @@ object Graph {
         .groupBy(col("src"))
         .agg(max(struct(col("n"), (-col("label")).as("neg"))).as("b"))
         .select(col("src").as("node"), (-col("b.neg")).as("label"))
-        .localCheckpoint()
+        .checkpointed()
       // superseded round frames release as the chain advances — a
       // per-micro-batch caller (the refresh router's cold arm) would
       // otherwise pin `rounds` node-sized blocks per refresh until GC
@@ -459,7 +458,6 @@ object Graph {
       labels = next
     }
     // the returned labels are a self-contained checkpoint
-    if (checkpointEdges) Checkpoints.unpersist(sym)
     labels
   }
 
@@ -511,26 +509,26 @@ object Graph {
       maxRounds: Int,
       init: Option[DataFrame] = None,
       assumeSymmetric: Boolean = false,
-      checkpointEdges: Boolean = true): LpaRun = {
+      checkpointEdges: Boolean = true): LpaRun = Checkpoints.scoped {
     require(maxRounds >= 1, "communityLabelsUntil needs at least one round")
     val sym0 =
       if (assumeSymmetric) edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       else edges.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct()
-    val sym = if (checkpointEdges) sym0.localCheckpoint() else sym0
-    val nodes = sym.select(col("src").as("node")).distinct().localCheckpoint()
+    val sym = if (checkpointEdges) sym0.checkpointed() else sym0
+    val nodes = sym.select(col("src").as("node")).distinct().checkpointed()
     var labels = (init match {
       case Some(prev) =>
         nodes
           .join(prev.select(col("node"), col("label").as("l0")), Seq("node"), "left")
           .select(col("node"), coalesce(col("l0"), col("node")).as("label"))
       case None => nodes.withColumn("label", col("node"))
-    }).localCheckpoint()
+    }).checkpointed()
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val next = lpaVote(sym, labels).localCheckpoint()
+      val next = lpaVote(sym, labels).checkpointed()
       converged = next.as("n")
         .join(labels.as("o"), col("n.node") === col("o.node"))
         .filter(col("n.label") =!= col("o.label"))
@@ -540,8 +538,6 @@ object Graph {
       labels = next      // convergence check above was its last consumer)
     }
     // the returned labels are a self-contained checkpoint
-    if (checkpointEdges) Checkpoints.unpersist(sym)
-    Checkpoints.unpersist(nodes)
     LpaRun(labels, rounds, converged)
   }
 
@@ -581,7 +577,7 @@ object Graph {
       rounds: Int,
       oldLabels: DataFrame,
       deltaEdges: DataFrame,
-      assumeSymmetric: Boolean = false): DataFrame = {
+      assumeSymmetric: Boolean = false): DataFrame = Checkpoints.scoped {
     require(rounds >= 1, "communityLabelsDelta needs at least one round")
     val sym0 =
       if (assumeSymmetric)
@@ -589,15 +585,12 @@ object Graph {
       else edgesAfter.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(edgesAfter.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct()
-    val sym = sym0.localCheckpoint()
+    val sym = sym0.checkpointed()
     val seeds = deltaEdges
       .select(explode(array(col(aCol), col(bCol))).as("node")).distinct()
-    val hops0 = seeds.select(col("node"), lit(0).as("hop")).localCheckpoint()
-    try communityLabelsDeltaFrom(sym, rounds, oldLabels, hops0, hopsDone = 0)
-    finally {
-      // the returned frame is a self-contained checkpoint — these fed it
-      Checkpoints.unpersist(sym); Checkpoints.unpersist(hops0); ()
-    }
+    val hops0 = seeds.select(col("node"), lit(0).as("hop")).checkpointed()
+    // a self-contained checkpoint: the scope releases sym and hops0
+    communityLabelsDeltaFrom(sym, rounds, oldLabels, hops0, hopsDone = 0)
   }
 
   /** [[communityLabelsDelta]]'s core with the delta-endpoint ball BFS
@@ -614,17 +607,16 @@ object Graph {
     * implementation, so the `hopsDone` resume contract cannot drift).
     * Superseded per-hop checkpoints unpersist as the chain advances (a
     * per-micro-batch caller would otherwise pin one dead ball frame per
-    * hop until driver GC — the dedupIngestStream rule). The RETURNED
-    * frame is the one live checkpoint UNLESS the loop never grew the
-    * ball (saturated resume, isolated seeds), in which case it is
-    * `hops0` itself — release it only behind an `ne hops0` guard, as
-    * both in-package callers do.
+    * hop until garbage collection — the dedupIngestStream rule). `hops0` belongs
+    * to the caller's scope, so the first swap leaves it alone; the
+    * returned frame (`hops0` itself when the loop never grew the ball)
+    * passes to the caller's scope.
     */
   private[graft] def ballBfs(
       sym: DataFrame,
       hops0: DataFrame,
       fromHop: Int,
-      maxH: Int): DataFrame = {
+      maxH: Int): DataFrame = Checkpoints.scoped {
     var hops = hops0
     var h = fromHop
     var frontierLive = !hops.filter(col("hop") === h).isEmpty
@@ -635,8 +627,8 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(hops, Seq("node"), "left_anti")
         .withColumn("hop", lit(h + 1))
-      val grown = hops.unionAll(nxt).localCheckpoint()
-      if (hops ne hops0) { Checkpoints.unpersist(hops); () }
+      val grown = hops.unionAll(nxt).checkpointed()
+      Checkpoints.unpersist(hops)
       hops = grown
       h += 1
       frontierLive = !hops.filter(col("hop") === h).isEmpty
@@ -649,7 +641,7 @@ object Graph {
       rounds: Int,
       oldLabels: DataFrame,
       hops0: DataFrame,
-      hopsDone: Int): DataFrame = {
+      hopsDone: Int): DataFrame = Checkpoints.scoped {
     val maxH = 2 * rounds
     // multi-source BFS ball of the delta endpoints over the post-insert
     // graph (frontier-only expansion, the bfsHops shape with a FRAME of
@@ -662,31 +654,27 @@ object Graph {
     val coneEdges = sym.join(
         hops.filter(col("hop") <= maxH - 1).select(col("node").as("src")),
         Seq("src"), "left_semi")
-      .localCheckpoint()
+      .checkpointed()
     // cone recompute: round-0 labels are ids over the full 2k-ball
     var labels = hops.select(col("node"), col("node").as("label"))
-      .localCheckpoint()
+      .checkpointed()
     for (j <- 1 to rounds) {
       val domain = hops.filter(col("hop") <= maxH - j)
         .select(col("node").as("src"))
       val next = lpaVote(
         coneEdges.join(domain, Seq("src"), "left_semi"), labels)
-        .localCheckpoint()
+        .checkpointed()
       Checkpoints.unpersist(labels)
       labels = next
     }
     val ballK = hops.filter(col("hop") <= rounds).select(col("node"))
-    // pin the merged answer, then release every cone-internal frame: a
-    // per-micro-batch caller (maintainCommunityLabels) must not
+    // pin the merged answer; the scope then releases every cone-internal
+    // frame: a per-micro-batch caller (maintainCommunityLabels) must not
     // accumulate a checkpoint pair per refresh until driver GC
-    val out = labels.join(ballK, Seq("node"), "left_semi")
+    labels.join(ballK, Seq("node"), "left_semi")
       .unionAll(oldLabels.select(col("node"), col("label"))
         .join(ballK, Seq("node"), "left_anti"))
-      .localCheckpoint()
-    Checkpoints.unpersist(labels)
-    Checkpoints.unpersist(coneEdges)
-    if (hops ne hops0) { Checkpoints.unpersist(hops); () }
-    out
+      .checkpointed()
   }
 
   /** Undirected co-purchase part graph, each edge {u,v} ONCE as
@@ -829,10 +817,10 @@ object Graph {
     // oriented feeds the adjacency build AND both join probes; adj feeds
     // both sides of the attach — cut lineage once each (cluster
     // equivalent: a stored table, as the pageRank checkpointEdges doc)
-    val oriented = orientHalf(half).localCheckpoint()
+    val oriented = orientHalf(half).checkpointed()
     val adj = oriented.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint()
+      .checkpointed()
     val tris = oriented
       .join(adj.select(col("src"), col("nbrs").as("nu")), "src")
       .join(adj.select(col("src").as("dst"), col("nbrs").as("nv")), "dst")
@@ -872,11 +860,9 @@ object Graph {
     * Returns (node, tri_delta) for affected nodes only (tri_delta > 0).
     *
     * `pinDelta = false`: the caller passes an ALREADY-pinned delta
-    * (consumed up to six times across T1/T2/T3) and owns its lifecycle —
-    * [[maintainTriangleCounts]] checkpoints the delta itself and
-    * unpersists it after consumption; re-checkpointing here would pin
-    * one orphan block set per call, a per-micro-batch leak in a
-    * long-lived stream (r14 ADVICE).
+    * (consumed up to six times across T1/T2/T3) —
+    * [[maintainTriangleCounts]] checkpoints the delta itself; pinning
+    * it again here would materialize it twice per batch (r14 ADVICE).
     *
     * `t1ViaAdjacency` (r17 optimization round): T1's default shape fans
     * every delta edge out to its endpoints' full neighbor lists and
@@ -914,7 +900,7 @@ object Graph {
       pinDelta: Boolean = true, t1ViaAdjacency: Boolean = false,
       adjMaxBytes: Long = 256L << 20): DataFrame = {
     val d0 = deltaHalf.select(col("src").as("u"), col("dst").as("v"))
-    val d = if (pinDelta) d0.localCheckpoint() else d0
+    val d = if (pinDelta) d0.checkpointed() else d0
     val full = halfWithDelta.select(col("src"), col("dst"))
     val sym = full.unionAll(
       full.select(col("dst").as("src"), col("src").as("dst")))
@@ -951,17 +937,18 @@ object Graph {
         // the wedge fan-out in array clothing (measured 14 s vs the wedge
         // join's 10 s before this hint). Broadcast, both attaches stream
         // the batch-sized delta and NOTHING array-laden ever shuffles.
-        val symAdj = sym.groupBy(col("src"))
-          .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-          .localCheckpoint()
-        if (Checkpoints.storageBytes(symAdj) > adjMaxBytes) {
-          Checkpoints.unpersist(symAdj)
-          wedgeT1
-        } else d
-          .join(broadcast(symAdj.select(col("src").as("u"), col("nbrs").as("nu"))), "u")
-          .join(broadcast(symAdj.select(col("src").as("v"), col("nbrs").as("nv"))), "v")
-          .select(col("u"), col("v"),
-            explode(array_intersect(col("nu"), col("nv"))).as("w"))
+        // scoped: the fallback does not reach the build, released here
+        Checkpoints.scoped {
+          val symAdj = sym.groupBy(col("src"))
+            .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
+            .checkpointed()
+          if (Checkpoints.storageBytes(symAdj) > adjMaxBytes) wedgeT1
+          else d
+            .join(broadcast(symAdj.select(col("src").as("u"), col("nbrs").as("nu"))), "u")
+            .join(broadcast(symAdj.select(col("src").as("v"), col("nbrs").as("nv"))), "v")
+            .select(col("u"), col("v"),
+              explode(array_intersect(col("nu"), col("nv"))).as("w"))
+        }
       }
     // T2: two delta edges sharing w, the (u, v) pair closed by any full
     // half-edge (u < v matches the half form's key directly)
@@ -1042,8 +1029,8 @@ object Graph {
       s"oldCore is not a converged k=$k core (min in-core degree " +
         s"${minDeg.getLong(0)} < $k) — kCoreDelta's member-immortality " +
         "argument requires the fixpoint; re-peel with a larger round budget")
-    val e = halfAfter.select(col("src"), col("dst")).localCheckpoint()
-    val core = oldCore.select(col("node")).localCheckpoint()
+    val e = halfAfter.select(col("src"), col("dst")).checkpointed()
+    val core = oldCore.select(col("node")).checkpointed()
     val marked = e
       .join(core.select(col("node").as("src"), lit(1).as("si")), Seq("src"), "left")
       .join(core.select(col("node").as("dst"), lit(1).as("di")), Seq("dst"), "left")
@@ -1055,13 +1042,13 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("b"))
     // the peel subgraph: edges among non-core nodes
     val h = marked.filter(col("si").isNull && col("di").isNull)
-      .select(col("src"), col("dst")).localCheckpoint()
+      .select(col("src"), col("dst")).checkpointed()
     val degH = h.select(explode(array(col("src"), col("dst"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("dh"))
     val deg0 = base.join(degH, Seq("node"), "full_outer")
       .select(col("node"),
         (coalesce(col("b"), lit(0L)) + coalesce(col("dh"), lit(0L))).as("d"))
-      .localCheckpoint()
+      .checkpointed()
     // broadcastDead = false: the kCoreHalf escape for the regime where
     // the dead set is node-scale (small old core, aggressive k) — then
     // pre-bucket h by src and dst like kCoreHalf's halfByDst layout
@@ -1078,13 +1065,13 @@ object Graph {
     // probe and the loss build) measured 1.05-1.10x WORSE interleaved —
     // the tiny per-round materialization is cheaper than re-filtering
     // node-sized blocks inside the round's dominant join job
-    var newDead = deg0.filter(col("d") < k).select(col("node")).localCheckpoint()
+    var newDead = deg0.filter(col("d") < k).select(col("node")).checkpointed()
     var r = 0
     while (r < maxRounds && !newDead.isEmpty) {
       val upd = degAlive.join(loss(newDead), degAlive("node") === col("n"), "left")
         .select(col("node"), (col("d") - coalesce(col("l"), lit(0L))).as("d"))
-        .localCheckpoint()
-      newDead = upd.filter(col("d") < k).select(col("node")).localCheckpoint()
+        .checkpointed()
+      newDead = upd.filter(col("d") < k).select(col("node")).checkpointed()
       degAlive = upd.filter(col("d") >= k)
       r += 1
     }
@@ -1093,7 +1080,7 @@ object Graph {
     // the exact new core; in-core degrees need one pass over the full
     // edge list (old members' degrees grew with the delta and the
     // promotions — their stored core_deg is stale by construction)
-    val newCore = core.unionAll(degAlive.select(col("node"))).localCheckpoint()
+    val newCore = core.unionAll(degAlive.select(col("node"))).checkpointed()
     e.join(newCore.select(col("node").as("src")), Seq("src"), "left_semi")
       .join(newCore.select(col("node").as("dst")), Seq("dst"), "left_semi")
       .select(explode(array(col("src"), col("dst"))).as("node"))
@@ -1177,7 +1164,7 @@ object Graph {
       deltaEdges: DataFrame,
       saturationFraction: Double = 0.2,
       probeHops: Int = 2,
-      assumeSymmetric: Boolean = false): Routed = {
+      assumeSymmetric: Boolean = false): Routed = Checkpoints.scoped {
     require(rounds >= 1 && probeHops >= 1)
     val sym0 =
       if (assumeSymmetric)
@@ -1185,34 +1172,27 @@ object Graph {
       else edgesAfter.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(edgesAfter.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct()
-    val sym = sym0.localCheckpoint()
+    val sym = sym0.checkpointed()
     val seeds = deltaEdges
       .select(explode(array(col(aCol), col(bCol))).as("node")).distinct()
     // the probe ball carries hop numbers so the delta route can RESUME
     // the cone's BFS from it instead of re-expanding the same hops —
     // one shared [[ballBfs]] implementation keeps the resume contract
-    val hops0 = seeds.select(col("node"), lit(0).as("hop")).localCheckpoint()
+    val hops0 = seeds.select(col("node"), lit(0).as("hop")).checkpointed()
     val hops = math.min(probeHops, 2 * rounds)
     val ball = ballBfs(sym, hops0, fromHop = 0, maxH = hops)
     val n = math.max(1L, oldLabels.count())
     val saturated = ball.count().toDouble / n >= saturationFraction
-    try {
-      if (saturated)
-        // checkpointEdges = false: sym is already pinned here — the cold
-        // arm's per-round label checkpoints are eager, so by return the
-        // result is self-contained and sym can release below
-        Routed(communityLabels(sym, "src", "dst", rounds,
-          assumeSymmetric = true, checkpointEdges = false), "cold")
-      else
-        Routed(communityLabelsDeltaFrom(sym, rounds, oldLabels, ball,
-          hopsDone = hops), "delta")
-    } finally {
-      // both arms return checkpoint-backed frames; the probe's pins are
-      // dead on return (a per-micro-batch caller must not accumulate an
-      // edge-sized checkpoint per refresh — the dedupIngestStream rule)
-      Checkpoints.unpersist(sym); Checkpoints.unpersist(hops0)
-      if (ball ne hops0) { Checkpoints.unpersist(ball); () }
-    }
+    // both arms return self-contained checkpoints: the scope releases
+    // the probe's pins on return
+    if (saturated)
+      // checkpointEdges = false: sym is already pinned here — the cold
+      // arm's per-round label checkpoints are eager
+      Routed(communityLabels(sym, "src", "dst", rounds,
+        assumeSymmetric = true, checkpointEdges = false), "cold")
+    else
+      Routed(communityLabelsDeltaFrom(sym, rounds, oldLabels, ball,
+        hopsDone = hops), "delta")
   }
 
   /** Incremental multi-source BFS under edge INSERTIONS — the third
@@ -1248,7 +1228,7 @@ object Graph {
       checkpointEdges: Boolean = true): DataFrame = {
     require(maxHops >= 1)
     val e0 = edgesAfter.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     val d = deltaEdges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     def improvements(cand: DataFrame, hops: DataFrame): DataFrame = cand
       .filter(col("cand") <= maxHops)
@@ -1256,8 +1236,8 @@ object Graph {
       .join(hops, Seq("node"), "left")
       .filter(col("hop").isNull || col("cand") < col("hop"))
       .select(col("node"), col("cand").cast("int").as("hop"))
-      .localCheckpoint()
-    var hops = oldHops.select(col("node"), col("hop")).localCheckpoint()
+      .checkpointed()
+    var hops = oldHops.select(col("node"), col("hop")).checkpointed()
     var frontier = improvements(
       d.join(hops.select(col("node").as("src"), col("hop").as("hs")), "src")
         .select(col("dst").as("node"), (col("hs") + 1).as("cand")),
@@ -1269,7 +1249,7 @@ object Graph {
           Seq("node"), "full_outer")
         .select(col("node"), coalesce(least(col("hop"), col("hn")),
           col("hop"), col("hn")).as("hop"))
-        .localCheckpoint()
+        .checkpointed()
       frontier = improvements(
         broadcast(frontier).join(e, frontier("node") === e("src"))
           .select(col("dst").as("node"), (frontier("hop") + 1).as("cand")),
@@ -1407,85 +1387,77 @@ object Graph {
         Some(spark.read.parquet(edgesDir)
           .filter(col("batch") < batchId).select(col("src"), col("dst")))
       else None
-    if (sign == 1L) {
+    if (sign == 1L) Checkpoints.scoped {
       val delta = oldOpt.map(old => canon.join(old, Seq("src", "dst"), "left_anti"))
         .getOrElse(canon)
-        .localCheckpoint() // consumed by the log write, T1/T2/T3, and full
-      try {
-        val full = oldOpt.map(_.unionAll(delta)).getOrElse(delta)
-        val d = triangleCountDelta(full, delta, pinDelta = false)
-        // §2.6 overlap (r18): the edge-log write and the DOMINANT job of
-        // the batch — folding the T1-T2+T3 triangle delta — are
-        // independent; only the counts merge (whose applied/ marker
-        // commits the batch) must follow the completed edge write (the
-        // crash-ordering contract above). The log write runs on a pool
-        // thread while this thread folds the delta into its checkpoint;
-        // the merge then re-aggregates the tiny node-delta frame (a
-        // no-op pass the overlap pays for the ordering). oldOpt's file
-        // listing snapshotted at frame creation, so the concurrent
-        // batch=<id> write is invisible to the fold's scans.
+        .checkpointed() // consumed by the log write, T1/T2/T3, and full
+      val full = oldOpt.map(_.unionAll(delta)).getOrElse(delta)
+      val d = triangleCountDelta(full, delta, pinDelta = false)
+      // §2.6 overlap (r18): the edge-log write and the DOMINANT job of
+      // the batch — folding the T1-T2+T3 triangle delta — are
+      // independent; only the counts merge (whose applied/ marker
+      // commits the batch) must follow the completed edge write (the
+      // crash-ordering contract above). The log write runs on a pool
+      // thread while this thread folds the delta into its checkpoint;
+      // the merge then re-aggregates the tiny node-delta frame (a
+      // no-op pass the overlap pays for the ordering). oldOpt's file
+      // listing snapshotted at frame creation, so the concurrent
+      // batch=<id> write is invisible to the fold's scans.
+      val writeF =
+        if (delta.isEmpty) None
+        else Some(scala.concurrent.Future {
+          IndexLayout.overwriteBatchPartitions(
+            delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
+        }(scala.concurrent.ExecutionContext.global))
+      val dAgg =
+        try d.groupBy(col("node"))
+          .agg(sum(col("tri_delta")).as("tri_cnt"))
+          .filter(col("tri_cnt") =!= 0)
+          .checkpointed()
+        catch { case t: Throwable =>
+          // the pool write must land (or fail) before the scope
+          // releases the delta blocks it reads
+          writeF.foreach(f => scala.concurrent.Await.ready(f,
+            scala.concurrent.duration.Duration.Inf))
+          throw t
+        }
+      writeF.foreach(f => scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration.Inf))
+      Incremental.mergeCountsPartitioned(spark, countsDir,
+        dAgg.select(col("node"), col("tri_cnt")),
+        Seq("node"), "tri_cnt", partitions, batchId)
+    } else {
+      val delDir = s"$stateDir/deletes/batch=$batchId"
+      if (!countsApplied) Checkpoints.scoped {
+        val resolved = oldOpt
+          .map(old => canon.join(old, Seq("src", "dst"), "left_semi"))
+          .getOrElse(canon.limit(0))
+          .checkpointed() // consumed by the delete-set write + T1/T2/T3
+        // same §2.6 overlap as the insert path: the resolved-set write
+        // (crash-replay evidence, must land before the merge's marker)
+        // runs on a pool thread under the delta fold
         val writeF =
-          if (delta.isEmpty) None
+          if (resolved.isEmpty) None
           else Some(scala.concurrent.Future {
-            IndexLayout.overwriteBatchPartitions(
-              delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
+            resolved.write.mode("overwrite").parquet(delDir)
           }(scala.concurrent.ExecutionContext.global))
+        val d = triangleCountDelta(
+          oldOpt.getOrElse(resolved), resolved, pinDelta = false)
         val dAgg =
           try d.groupBy(col("node"))
-            .agg(sum(col("tri_delta")).as("tri_cnt"))
+            .agg((-sum(col("tri_delta"))).as("tri_cnt"))
             .filter(col("tri_cnt") =!= 0)
-            .localCheckpoint()
+            .checkpointed()
           catch { case t: Throwable =>
-            // the pool write must land (or fail) before the caller's
-            // finally releases the delta blocks it reads
             writeF.foreach(f => scala.concurrent.Await.ready(f,
               scala.concurrent.duration.Duration.Inf))
             throw t
           }
-        try {
-          writeF.foreach(f => scala.concurrent.Await.result(f,
-            scala.concurrent.duration.Duration.Inf))
-          Incremental.mergeCountsPartitioned(spark, countsDir,
-            dAgg.select(col("node"), col("tri_cnt")),
-            Seq("node"), "tri_cnt", partitions, batchId)
-        } finally { Checkpoints.unpersist(dAgg); () }
-      } finally { Checkpoints.unpersist(delta); () }
-    } else {
-      val delDir = s"$stateDir/deletes/batch=$batchId"
-      if (!countsApplied) {
-        val resolved = oldOpt
-          .map(old => canon.join(old, Seq("src", "dst"), "left_semi"))
-          .getOrElse(canon.limit(0))
-          .localCheckpoint() // consumed by the delete-set write + T1/T2/T3
-        try {
-          // same §2.6 overlap as the insert path: the resolved-set write
-          // (crash-replay evidence, must land before the merge's marker)
-          // runs on a pool thread under the delta fold
-          val writeF =
-            if (resolved.isEmpty) None
-            else Some(scala.concurrent.Future {
-              resolved.write.mode("overwrite").parquet(delDir)
-            }(scala.concurrent.ExecutionContext.global))
-          val d = triangleCountDelta(
-            oldOpt.getOrElse(resolved), resolved, pinDelta = false)
-          val dAgg =
-            try d.groupBy(col("node"))
-              .agg((-sum(col("tri_delta"))).as("tri_cnt"))
-              .filter(col("tri_cnt") =!= 0)
-              .localCheckpoint()
-            catch { case t: Throwable =>
-              writeF.foreach(f => scala.concurrent.Await.ready(f,
-                scala.concurrent.duration.Duration.Inf))
-              throw t
-            }
-          try {
-            writeF.foreach(f => scala.concurrent.Await.result(f,
-              scala.concurrent.duration.Duration.Inf))
-            Incremental.mergeCountsPartitioned(spark, countsDir,
-              dAgg.select(col("node"), col("tri_cnt")),
-              Seq("node"), "tri_cnt", partitions, batchId)
-          } finally { Checkpoints.unpersist(dAgg); () }
-        } finally { Checkpoints.unpersist(resolved); () }
+        writeF.foreach(f => scala.concurrent.Await.result(f,
+          scala.concurrent.duration.Duration.Inf))
+        Incremental.mergeCountsPartitioned(spark, countsDir,
+          dAgg.select(col("node"), col("tri_cnt")),
+          Seq("node"), "tri_cnt", partitions, batchId)
       }
       // log rewrite — idempotent from the on-disk resolved set: an
       // already-rewritten partition simply stops matching the join. The
@@ -1499,20 +1471,18 @@ object Graph {
         val affected = log.join(delSet, Seq("src", "dst"))
           .select(col("batch").cast("long")).distinct()
           .collect().map(_.getLong(0)) // bounded by the batch count
-        if (affected.nonEmpty) {
+        if (affected.nonEmpty) Checkpoints.scoped {
           val survivors = log
             .filter(col("batch").isin(affected: _*))
             .join(delSet, Seq("src", "dst"), "left_anti")
-            .localCheckpoint() // consumed by liveness accounting + write
+            .checkpointed() // consumed by liveness accounting + write
           val live = survivors.select(col("batch").cast("long")).distinct()
             .collect().map(_.getLong(0)).toSet
-          try {
-            if (!survivors.isEmpty)
-              IndexLayout.overwriteBatchPartitions(
-                survivors, edgesDir, Seq("batch"))
-            affected.filterNot(live).foreach(b =>
-              fs.delete(new Path(edgesDir, s"batch=$b"), true))
-          } finally { Checkpoints.unpersist(survivors); () }
+          if (!survivors.isEmpty)
+            IndexLayout.overwriteBatchPartitions(
+              survivors, edgesDir, Seq("batch"))
+          affected.filterNot(live).foreach(b =>
+            fs.delete(new Path(edgesDir, s"batch=$b"), true))
         }
       }
       fs.mkdirs(doneMarker)
@@ -1558,7 +1528,7 @@ object Graph {
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
       edgesHalf: DataFrame,
-      partitions: Int = 64): Unit = {
+      partitions: Int = 64): Unit = Checkpoints.scoped {
     import org.apache.hadoop.fs.Path
     val fs = new Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1573,17 +1543,14 @@ object Graph {
         greatest(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint() // consumed by the log write + the cold count
-    try {
-      if (!canon.isEmpty)
-        IndexLayout.overwriteBatchPartitions(
-          canon.withColumn("batch", lit(0L)), s"$stateDir/edges", Seq("batch"))
-      Incremental.mergeCountsPartitioned(spark, s"$stateDir/counts",
-        triangleCountsAdj(canon)
-          .select(col("node"), col("tri_cnt")),
-        Seq("node"), "tri_cnt", partitions, batchId = 0L)
-      ()
-    } finally { Checkpoints.unpersist(canon); () }
+      .checkpointed() // consumed by the log write + the cold count
+    if (!canon.isEmpty)
+      IndexLayout.overwriteBatchPartitions(
+        canon.withColumn("batch", lit(0L)), s"$stateDir/edges", Seq("batch"))
+    Incremental.mergeCountsPartitioned(spark, s"$stateDir/counts",
+      triangleCountsAdj(canon)
+        .select(col("node"), col("tri_cnt")),
+      Seq("node"), "tri_cnt", partitions, batchId = 0L)
   }
 
   /** DISASTER-RECOVERY rebuild of the maintained count table from the
@@ -1867,92 +1834,79 @@ object Graph {
         Some(spark.read.parquet(edgesDir)
           .filter(col("batch") < batchId).select(col("src"), col("dst")))
       else None
-    if (sign == 1L) {
+    if (sign == 1L) Checkpoints.scoped {
+      // the scope releases the delta pin and the refresh result
       val delta = oldOpt.map(old => canon.join(old, Seq("src", "dst"), "left_anti"))
         .getOrElse(canon)
-        .localCheckpoint() // consumed by the log write, the router, the union
-      try {
-        val after = oldOpt.map(_.unionAll(delta)).getOrElse(delta)
-        if (!delta.isEmpty)
-          IndexLayout.overwriteBatchPartitions(
-            delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
-        val oldLabels =
-          Incremental.readCountsPartitioned(spark, labelsDir, Seq("node"), "label")
-        val fresh = oldLabels match {
-          case None => communityLabels(after, "src", "dst", rounds)
-          case Some(old) => communityLabelsRefreshAuto(after, "src", "dst",
-            rounds, old, delta, saturationFraction).result
-        }
-        // only CHANGED assignments upsert — ball-sized under the cone route
-        val changed = oldLabels match {
-          case None => fresh
-          case Some(old) => fresh.exceptAll(old)
-        }
-        val applied = Incremental.upsertPartitioned(spark, labelsDir,
-          changed.select(col("node"), col("label")),
-          Seq("node"), "label", partitions, batchId)
-        // the refresh result is a checkpoint-backed frame, fully consumed
-        // by the upsert — release its BLOCKS (Dataset.unpersist is a
-        // no-op on checkpoint blocks; Checkpoints.unpersist is strict,
-        // so a non-checkpoint cone result stays untouched)
-        Checkpoints.unpersist(fresh)
-        applied
-      } finally { Checkpoints.unpersist(delta); () }
+        .checkpointed() // consumed by the log write, the router, the union
+      val after = oldOpt.map(_.unionAll(delta)).getOrElse(delta)
+      if (!delta.isEmpty)
+        IndexLayout.overwriteBatchPartitions(
+          delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
+      val oldLabels =
+        Incremental.readCountsPartitioned(spark, labelsDir, Seq("node"), "label")
+      val fresh = oldLabels match {
+        case None => communityLabels(after, "src", "dst", rounds)
+        case Some(old) => communityLabelsRefreshAuto(after, "src", "dst",
+          rounds, old, delta, saturationFraction).result
+      }
+      // only CHANGED assignments upsert — ball-sized under the cone route
+      val changed = oldLabels match {
+        case None => fresh
+        case Some(old) => fresh.exceptAll(old)
+      }
+      Incremental.upsertPartitioned(spark, labelsDir,
+        changed.select(col("node"), col("label")),
+        Seq("node"), "label", partitions, batchId)
     } else {
       val delDir = s"$stateDir/deletes/batch=$batchId"
-      if (!labelsApplied) {
+      val nothingResolved = !labelsApplied && Checkpoints.scoped {
         val resolved = oldOpt
           .map(old => canon.join(old, Seq("src", "dst"), "left_semi"))
           .getOrElse(canon.limit(0))
-          .localCheckpoint() // consumed by the delete-set write + refresh
-        try {
-          if (resolved.isEmpty) {
-            // nothing matched the log (a re-issued GDPR batch, or edges
-            // that never existed): the surviving log IS the old log and
-            // by the maintained invariant the stored labels already
-            // equal its cold recompute — commit the marker without
-            // paying a whole-graph fixed-round pass (r17 review)
-            Incremental.upsertPartitioned(spark, labelsDir,
-              canon.select(col("src").as("node"), col("src").as("label"))
-                .limit(0),
-              Seq("node"), "label", partitions, batchId)
-            fs.mkdirs(doneMarker)
-            return true
-          }
+          .checkpointed() // consumed by the delete-set write + refresh
+        if (resolved.isEmpty) {
+          // nothing matched the log (a re-issued GDPR batch, or edges
+          // that never existed): the surviving log IS the old log and
+          // by the maintained invariant the stored labels already
+          // equal its cold recompute — commit the marker without
+          // paying a whole-graph fixed-round pass (r17 review)
+          Incremental.upsertPartitioned(spark, labelsDir,
+            canon.select(col("src").as("node"), col("src").as("label"))
+              .limit(0),
+            Seq("node"), "label", partitions, batchId)
+          true
+        } else {
           resolved.write.mode("overwrite").parquet(delDir)
           val surviving = oldOpt
             .map(_.join(resolved, Seq("src", "dst"), "left_anti"))
             .getOrElse(resolved.limit(0))
-            .localCheckpoint() // consumed by emptiness probe + recompute
-          try {
-            val oldLabels = Incremental.readCountsPartitioned(
-              spark, labelsDir, Seq("node"), "label")
-            // label deletions are non-local: COLD fixed-round recompute
-            // over the surviving log (the dispatcher's cold arm — a cone
-            // cannot bound a removal's influence)
-            // communityLabels' result is already checkpoint-backed (the
-            // insert path's unpersist note); the empty frame is free
-            val fresh =
-              if (surviving.isEmpty)
-                surviving.select(col("src").as("node"), col("src").as("label"))
-              else communityLabels(surviving, "src", "dst", rounds)
-            try {
-              val changed = oldLabels match {
-                case None => fresh
-                case Some(old) => fresh.exceptAll(old)
-              }
-              // a node that lost its last edge leaves the label table —
-              // a stale row would diverge from the cold recompute forever
-              val vanished = oldLabels.map(_.select(col("node"))
-                .join(fresh.select(col("node")), Seq("node"), "left_anti"))
-              Incremental.upsertPartitioned(spark, labelsDir,
-                changed.select(col("node"), col("label")),
-                Seq("node"), "label", partitions, batchId,
-                dropKeys = vanished)
-            } finally { Checkpoints.unpersist(fresh); () }
-          } finally { Checkpoints.unpersist(surviving); () }
-        } finally { Checkpoints.unpersist(resolved); () }
+            .checkpointed() // consumed by emptiness probe + recompute
+          val oldLabels = Incremental.readCountsPartitioned(
+            spark, labelsDir, Seq("node"), "label")
+          // label deletions are non-local: COLD fixed-round recompute
+          // over the surviving log (the dispatcher's cold arm — a cone
+          // cannot bound a removal's influence); the empty frame is free
+          val fresh =
+            if (surviving.isEmpty)
+              surviving.select(col("src").as("node"), col("src").as("label"))
+            else communityLabels(surviving, "src", "dst", rounds)
+          val changed = oldLabels match {
+            case None => fresh
+            case Some(old) => fresh.exceptAll(old)
+          }
+          // a node that lost its last edge leaves the label table —
+          // a stale row would diverge from the cold recompute forever
+          val vanished = oldLabels.map(_.select(col("node"))
+            .join(fresh.select(col("node")), Seq("node"), "left_anti"))
+          Incremental.upsertPartitioned(spark, labelsDir,
+            changed.select(col("node"), col("label")),
+            Seq("node"), "label", partitions, batchId,
+            dropKeys = vanished)
+          false
+        }
       }
+      if (nothingResolved) { fs.mkdirs(doneMarker); return true }
       // log rewrite — idempotent from the on-disk resolved set (the
       // triangle maintainer's block): an already-rewritten partition
       // simply stops matching the join
@@ -1964,20 +1918,18 @@ object Graph {
         val affected = log.join(delSet, Seq("src", "dst"))
           .select(col("batch").cast("long")).distinct()
           .collect().map(_.getLong(0)) // bounded by the batch count
-        if (affected.nonEmpty) {
+        if (affected.nonEmpty) Checkpoints.scoped {
           val survivors = log
             .filter(col("batch").isin(affected: _*))
             .join(delSet, Seq("src", "dst"), "left_anti")
-            .localCheckpoint() // consumed by liveness accounting + write
+            .checkpointed() // consumed by liveness accounting + write
           val live = survivors.select(col("batch").cast("long")).distinct()
             .collect().map(_.getLong(0)).toSet
-          try {
-            if (!survivors.isEmpty)
-              IndexLayout.overwriteBatchPartitions(
-                survivors, edgesDir, Seq("batch"))
-            affected.filterNot(live).foreach(b =>
-              fs.delete(new Path(edgesDir, s"batch=$b"), true))
-          } finally { Checkpoints.unpersist(survivors); () }
+          if (!survivors.isEmpty)
+            IndexLayout.overwriteBatchPartitions(
+              survivors, edgesDir, Seq("batch"))
+          affected.filterNot(live).foreach(b =>
+            fs.delete(new Path(edgesDir, s"batch=$b"), true))
         }
       }
       fs.mkdirs(doneMarker)
@@ -2067,7 +2019,7 @@ object Graph {
       checkpointEdges: Boolean = true): DataFrame = {
     require(k >= 1 && rounds >= 1)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     def degrees(ed: DataFrame): DataFrame =
       ed.groupBy(col("src")).agg(count(lit(1)).as("d"))
     def surviving(ed: DataFrame, alive: DataFrame): DataFrame = {
@@ -2082,11 +2034,11 @@ object Graph {
     // pageRank's once-per-round rank frame (linear growth, periodic
     // cuts), here the cut must be per-round.
     var alive = degrees(e).filter(col("d") >= k).select(col("src").as("node"))
-      .localCheckpoint()
+      .checkpointed()
     for (_ <- 1 to rounds)
       alive = degrees(surviving(e, alive))
         .filter(col("d") >= k).select(col("src").as("node"))
-        .localCheckpoint()
+        .checkpointed()
     degrees(surviving(e, alive))
       .select(col("src").as("node"), col("d").as("core_deg"))
   }
@@ -2123,7 +2075,7 @@ object Graph {
     // checkpointEdges = false: keep a stored bucketed table's scan (a
     // checkpoint erases bucketing and reinstates the per-round Exchange)
     val e0 = half.select(col("src"), col("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     // the loss step joins the edge list on BOTH keys, so the cluster
     // layout (broadcastDead = false — round 1's dead set is node-scale
     // when k peels aggressively) is the hits edgesByDst device: the half
@@ -2143,15 +2095,15 @@ object Graph {
         .select(col("node"), (col("d") - coalesce(col("l"), lit(0L))).as("d"))
     val deg0 = e.select(explode(array(col("src"), col("dst"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+      .checkpointed()
     var degAlive = deg0.filter(col("d") >= k)
     // newDead stays EAGERLY checkpointed (see kCoreDelta's note: the
     // lazy form measured 1.05-1.10x worse interleaved)
-    var newDead = deg0.filter(col("d") < k).select(col("node")).localCheckpoint()
+    var newDead = deg0.filter(col("d") < k).select(col("node")).checkpointed()
     var r = 0
     while (r < rounds && !newDead.isEmpty) {
-      val upd = minus(degAlive, loss(newDead)).localCheckpoint()
-      newDead = upd.filter(col("d") < k).select(col("node")).localCheckpoint()
+      val upd = minus(degAlive, loss(newDead)).checkpointed()
+      newDead = upd.filter(col("d") < k).select(col("node")).checkpointed()
       degAlive = upd.filter(col("d") >= k)
       r += 1
     }
@@ -2196,7 +2148,7 @@ object Graph {
       topK: Int): DataFrame = {
     require(degCap >= 2 && topK >= 1)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
+      .checkpointed()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // incidence rows at capped-degree pivot nodes only: (b, x, d(b))
     val inc = e.join(deg.filter(col("d") <= degCap), "src")
@@ -2284,7 +2236,7 @@ object Graph {
       broadcastScores: Boolean = true,
       checkpointEdges: Boolean = true,
       edgesByDst: Option[DataFrame] = None,
-      verifyEdgeSets: Boolean = false): DataFrame = {
+      verifyEdgeSets: Boolean = false): DataFrame = Checkpoints.scoped {
     require(iterations >= 1)
     if (verifyEdgeSets) edgesByDst.foreach { d =>
       val (ne, nd) = (edges.count(), d.count())
@@ -2295,7 +2247,7 @@ object Graph {
     def hint(df: DataFrame): DataFrame =
       if (broadcastScores) broadcast(df) else df
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     // the dst half-step's edge side: the same edge SET, ideally stored
     // bucketed by dst (a src-bucketed scan still shuffles on the dst key)
     val eD = edgesByDst
@@ -2303,7 +2255,7 @@ object Graph {
       .getOrElse(e)
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct().checkpointed()
     def rescaled(r: DataFrame, keyCol: String, vCol: String): DataFrame =
       rescaledScores(r, keyCol, vCol)
     var hub = nodes.select(col("node"), lit(1000000L).as("s"))
@@ -2315,11 +2267,11 @@ object Graph {
         .groupBy(col("dst")).agg(sum(col("h")).as("ra"))
       // consumed twice only in the final round (hub chain + the reported
       // authority) — cut it just there
-      val rawA = if (i == iterations) rawA0.localCheckpoint() else rawA0
+      val rawA = if (i == iterations) rawA0.checkpointed() else rawA0
       val rawH = eD.join(
           hint(rawA.select(col("dst"), col("ra").as("a"))), "dst")
         .groupBy(col("src")).agg(sum(col("a")).as("rh"))
-        .localCheckpoint()
+        .checkpointed()
       // the previous round's rawH backed the old hub; this round's
       // checkpoint just consumed it — release (the LAST rawH stays: it
       // backs the returned hub scores; r17 fourth review)
@@ -2329,7 +2281,6 @@ object Graph {
       if (i == iterations) auth = rescaled(rawA, "dst", "ra")
     }
     // the returned frame reads nodes + the final rawH/rawA checkpoints
-    if (checkpointEdges) Checkpoints.unpersist(e)
     nodes
       .join(hub.select(col("node"), col("s").as("hub_m")), Seq("node"), "left")
       .join(auth.select(col("node"), col("s").as("auth_m")), Seq("node"), "left")
@@ -2376,24 +2327,24 @@ object Graph {
       init: Option[DataFrame] = None,
       broadcastScores: Boolean = true,
       checkpointEdges: Boolean = true,
-      edgesByDst: Option[DataFrame] = None): HitsRun = {
+      edgesByDst: Option[DataFrame] = None): HitsRun = Checkpoints.scoped {
     require(tolMicro >= 0 && maxRounds >= 1)
     def hint(df: DataFrame): DataFrame =
       if (broadcastScores) broadcast(df) else df
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     val eD = edgesByDst
       .map(_.select(col(srcCol).as("src"), col(dstCol).as("dst")))
       .getOrElse(e)
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct().checkpointed()
     var hub = init match {
       case Some(prev) =>
         nodes
           .join(prev.select(col("node"), col("hub_m").as("h0")), Seq("node"), "left")
           .select(col("node"), coalesce(col("h0"), lit(1000000L)).as("s"))
-          .localCheckpoint()
+          .checkpointed()
       case None => nodes.select(col("node"), lit(1000000L).as("s"))
     }
     // round 1's hub EXIT baseline: the previously SERVED hub frame (its
@@ -2402,13 +2353,13 @@ object Graph {
     // absent, so they can never register a spurious exit). A cold run
     // has none: within one graph the scored key set never shrinks.
     var hubServed: Option[DataFrame] =
-      init.map(p => p.select(col("node"), col("hub_m").as("s")).localCheckpoint())
+      init.map(p => p.select(col("node"), col("hub_m").as("s")).checkpointed())
     // round 1's auth residual baseline; a cold start has none (auth
     // first exists after round 1), so a cold run can never converge in
     // round 1 — which preserves cold-k bit-identity (scores are the
     // round's scores either way)
     var prevAuth: Option[DataFrame] =
-      init.map(p => p.select(col("node"), col("auth_m").as("s")).localCheckpoint())
+      init.map(p => p.select(col("node"), col("auth_m").as("s")).checkpointed())
     var auth: DataFrame = null
     var rounds = 0
     var converged = false
@@ -2440,13 +2391,13 @@ object Graph {
       val rawA = e.join(
           hint(hub.select(col("node").as("src"), col("s").as("h"))), "src")
         .groupBy(col("dst")).agg(sum(col("h")).as("ra"))
-        .localCheckpoint() // consumed by the hub chain AND the auth rescale
+        .checkpointed() // consumed by the hub chain AND the auth rescale
       val rawH = eD.join(
           hint(rawA.select(col("dst"), col("ra").as("a"))), "dst")
         .groupBy(col("src")).agg(sum(col("a")).as("rh"))
-        .localCheckpoint()
-      val nextHub = rescaledScores(rawH, "src", "rh").localCheckpoint()
-      val nextAuth = rescaledScores(rawA, "dst", "ra").localCheckpoint()
+        .checkpointed()
+      val nextHub = rescaledScores(rawH, "src", "rh").checkpointed()
+      val nextAuth = rescaledScores(rawA, "dst", "ra").checkpointed()
       // entry baselines differ per frame: a key missing from the old hub
       // held the cold initial 10^6, but a key missing from the old AUTH
       // frame SERVED 0 (the final coalesce) — a delta-born node swinging
@@ -2462,18 +2413,12 @@ object Graph {
       rounds += 1
       converged = move <= tolMicro
       // every frame superseded by this round is fully consumed (the
-      // residual head() and the next frames' checkpoints are eager) —
-      // release the checkpoint BLOCKS via Checkpoints.unpersist:
-      // Dataset.unpersist is a measured NO-OP on a localCheckpoint's
-      // RDD blocks (it only uncaches cached plans; r17 third review),
-      // which is what made the r16-ADVICE leak real. The hub release is
-      // guarded: the COLD path's round-1 hub is a Projection over the
-      // shared `nodes` checkpoint, whose blocks the final join still
-      // needs — warm round-1 and every later round's hub are their own
-      // checkpoints.
+      // residual head() and the next frames' checkpoints are eager). The
+      // COLD round-1 hub is a computed column over `nodes`, which the
+      // strict matcher leaves alone (the final join needs `nodes`).
       Checkpoints.unpersist(rawA)
       Checkpoints.unpersist(rawH)
-      if (rounds > 1 || init.isDefined) Checkpoints.unpersist(hub)
+      Checkpoints.unpersist(hub)
       prevAuth.foreach(Checkpoints.unpersist)
       hub = nextHub
       hubServed.foreach(Checkpoints.unpersist)
@@ -2481,10 +2426,7 @@ object Graph {
       auth = nextAuth
       prevAuth = Some(nextAuth)
     }
-    // the edge checkpoint fed only the (eagerly materialized) rounds —
-    // the final join reads nodes/hub/auth alone; release OUR pin only
-    // (a caller-supplied frame is not ours to free)
-    if (checkpointEdges) Checkpoints.unpersist(e)
+    // the final join reads nodes/hub/auth alone: the scope releases e
     HitsRun(
       nodes
         .join(hub.select(col("node"), col("s").as("hub_m")), Seq("node"), "left")
@@ -2528,9 +2470,9 @@ object Graph {
     // per-step edge Exchange (the pageRank lesson) — skip it when the
     // input is already a cheap-to-rescan src-bucketed table
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     var frontier = seeds.select(col("node").as("wid"), col("node").as("cur"))
-      .localCheckpoint()
+      .checkpointed()
     var walks = frontier.select(col("wid"), lit(0).as("step"), col("cur").as("node"))
     for (s <- 1 to steps) {
       val f = if (broadcastFrontier) broadcast(frontier) else frontier
@@ -2544,7 +2486,7 @@ object Graph {
       frontier = cand.groupBy(col("wid"))
         .agg(min(struct(col("h"), col("dst"))).as("pick"))
         .select(col("wid"), col("pick.dst").as("cur"))
-        .localCheckpoint()
+        .checkpointed()
       walks = walks.unionAll(
         frontier.select(col("wid"), lit(s).as("step"), col("cur").as("node")))
     }
@@ -2582,7 +2524,7 @@ object Graph {
     // checkpointEdges = false: keep a stored bucketed table's scan (a
     // checkpoint erases bucketing and reinstates the per-round Exchange)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     var visited = seeds.toDF("node").select(col("node"), lit(0).as("hop"))
     var frontier = visited.select(col("node"))
     for (h <- 1 to maxHops) {
@@ -2590,7 +2532,7 @@ object Graph {
       val next = e.join(f, e("src") === f("node"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .localCheckpoint()
+        .checkpointed()
       visited = visited.unionAll(next.select(col("node"), lit(h).as("hop")))
       frontier = next
     }
@@ -2638,15 +2580,15 @@ object Graph {
       checkpointEdges: Boolean = true): DataFrame = {
     require(steps >= 1 && retPermille >= 1 && inPermille >= 1 && outPermille >= 1)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.localCheckpoint() else e0
+    val e = if (checkpointEdges) e0.checkpointed() else e0
     // node-sized adjacency for the distance-1 test, built once — per-step
     // probes join it on the walk's previous node, never the edge list
     val adj = e.groupBy(col("src").as("prev"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint()
+      .checkpointed()
     var frontier = seeds
       .select(col("node").as("wid"), col("node").as("prev"), col("node").as("cur"))
-      .localCheckpoint()
+      .checkpointed()
     var walks = frontier.select(col("wid"), lit(0).as("step"), col("cur").as("node"))
     for (s <- 1 to steps) {
       val f = if (broadcastFrontier) broadcast(frontier) else frontier
@@ -2687,7 +2629,7 @@ object Graph {
         .groupBy(col("wid"), col("cur"))
         .agg(min(struct(col("k"), col("dst"))).as("pick"))
         .select(col("wid"), col("cur").as("prev"), col("pick.dst").as("cur"))
-        .localCheckpoint()
+        .checkpointed()
       walks = walks.unionAll(
         frontier.select(col("wid"), lit(s).as("step"), col("cur").as("node")))
     }
@@ -2807,7 +2749,7 @@ object Graph {
       negatives: Int,
       buckets: Int = 1024): DataFrame = {
     require(negatives >= 1 && buckets >= 1)
-    val noise = sgnsNoiseTable(walks).localCheckpoint() // vocab-sized
+    val noise = sgnsNoiseTable(walks).checkpointed() // vocab-sized
     val total = noise.agg(max(col("hi"))).head().getLong(0)
     val bw = (total + buckets - 1) / buckets // bucket width, >= 1
     val intervals = noise

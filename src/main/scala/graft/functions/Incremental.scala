@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.CoreOps
+import graft.functions.Checkpoints.Owned
 
 /** Incremental view maintenance (IVM) for the distributive aggregates —
   * the 100 TB answer to "a 1 GB delta arrived; do not rescan the lake".
@@ -590,62 +591,58 @@ object Incremental {
         fs.mkdirs(new Path(s"$stateDir/meta/partitions=$partitions"))
     }
     val part = pmod(xxhash64(keys.map(col): _*), lit(partitions)).as("__p")
-    // pre-aggregate the delta to one row per key BEFORE the merge (the
-    // delta may carry repeats), then pin it: it is consumed up to three
-    // times (affected-partition listing, merge, survivor accounting)
-    val deltaAgg = delta.select((keys :+ cnt).map(col): _*)
-      .groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))
-      .filter(col(cnt) =!= 0)
-      .select(col("*"), part)
-      .localCheckpoint()
-    val affected = deltaAgg.select(col("__p")).distinct()
-      .collect().map(_.getLong(0)) // bounded by `partitions`, never key-sized
-    if (affected.isEmpty) {
+    // the scope releases both pins on return (a days-long maintainer
+    // stream would otherwise grow one block set per micro-batch)
+    Checkpoints.scoped {
+      // pre-aggregate the delta to one row per key BEFORE the merge (the
+      // delta may carry repeats), then pin it: it is consumed up to three
+      // times (affected-partition listing, merge, survivor accounting)
+      val deltaAgg = delta.select((keys :+ cnt).map(col): _*)
+        .groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))
+        .filter(col(cnt) =!= 0)
+        .select(col("*"), part)
+        .checkpointed()
+      val affected = deltaAgg.select(col("__p")).distinct()
+        .collect().map(_.getLong(0)) // bounded by `partitions`, never key-sized
       // empty or fully-cancelling delta (streaming routinely delivers
       // empty micro-batches): writing an empty frame would create a
       // schemaless data/ dir that poisons every later read — commit the
       // marker and touch nothing
-      Checkpoints.unpersist(deltaAgg)
-      fs.mkdirs(marker)
-      return true
-    }
-    // state exists only when actual partition data survives — an
-    // all-cancelling batch can empty the table to a bare _SUCCESS, and
-    // reading that fails with "unable to infer schema"
-    val hasState = hasLivePartitions(spark, dataDir, "__p=")
-    val merged0 =
-      if (!hasState) deltaAgg.drop("__p")
-      else {
-        // partition-pruned read of ONLY the affected state slices
-        val slice = spark.read.parquet(dataDir)
-          .where(col("__p").isin(affected: _*))
-          .select((keys :+ cnt).map(col): _*)
-        mergeCounts(slice, deltaAgg.drop("__p"), keys, cnt)
+      if (affected.nonEmpty) {
+        // state exists only when actual partition data survives — an
+        // all-cancelling batch can empty the table to a bare _SUCCESS, and
+        // reading that fails with "unable to infer schema"
+        val hasState = hasLivePartitions(spark, dataDir, "__p=")
+        val merged0 =
+          if (!hasState) deltaAgg.drop("__p")
+          else {
+            // partition-pruned read of ONLY the affected state slices
+            val slice = spark.read.parquet(dataDir)
+              .where(col("__p").isin(affected: _*))
+              .select((keys :+ cnt).map(col): _*)
+            mergeCounts(slice, deltaAgg.drop("__p"), keys, cnt)
+          }
+        // re-derive __p (a pure function of the keys) and pin the result:
+        // Spark refuses to overwrite a path still feeding the running plan
+        val merged = merged0.select(col("*"), part).checkpointed()
+        val emptied = {
+          val live = merged.select(col("__p")).distinct()
+            .collect().map(_.getLong(0)).toSet
+          affected.filterNot(live)
+        }
+        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try
+          merged.write.mode("overwrite").partitionBy("__p").parquet(dataDir)
+        finally prev match {
+          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        }
+        emptied.foreach(p => fs.delete(new Path(dataDir, s"__p=$p"), true))
       }
-    // re-derive __p (a pure function of the keys) and pin the result:
-    // Spark refuses to overwrite a path still feeding the running plan
-    val merged = merged0.select(col("*"), part).localCheckpoint()
-    val emptied = {
-      val live = merged.select(col("__p")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      affected.filterNot(live)
+      fs.mkdirs(marker)
+      true
     }
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      merged.write.mode("overwrite").partitionBy("__p").parquet(dataDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    emptied.foreach(p => fs.delete(new Path(dataDir, s"__p=$p"), true))
-    fs.mkdirs(marker)
-    // both pins are fully consumed (merge checkpointed, write + emptied
-    // collect done) — release them, or a days-long maintainer stream
-    // grows one block set per micro-batch (r17 fourth review)
-    Checkpoints.unpersist(deltaAgg)
-    Checkpoints.unpersist(merged)
-    true
   }
 
   /** UPSERT sibling of [[mergeCountsPartitioned]] for NON-monoid state
@@ -692,13 +689,14 @@ object Incremental {
         fs.mkdirs(new Path(s"$stateDir/meta/partitions=$partitions"))
     }
     val part = pmod(xxhash64(keys.map(col): _*), lit(partitions)).as("__p")
-    val delta = rows.select((keys :+ valCol).map(col): _*)
-      .select(col("*"), part)
-      .localCheckpoint() // consumed by the dup check, listing, and merge
-    val drops = dropKeys.map(_.select(keys.map(col): _*)
-      .distinct().select(col("*"), part)
-      .localCheckpoint()) // consumed by the overlap check, listing, merge
-    try {
+    // the scope releases the delta and drop pins on return
+    Checkpoints.scoped {
+      val delta = rows.select((keys :+ valCol).map(col): _*)
+        .select(col("*"), part)
+        .checkpointed() // consumed by the dup check, listing, and merge
+      val drops = dropKeys.map(_.select(keys.map(col): _*)
+        .distinct().select(col("*"), part)
+        .checkpointed()) // consumed by the overlap check, listing, merge
       val nRows = delta.count()
       val nKeys = delta.select(keys.map(col): _*).distinct().count()
       require(nRows == nKeys,
@@ -715,22 +713,21 @@ object Incremental {
         drops.map(_.select(col("__p"))).toSeq)
         .reduce(_.unionAll(_)).distinct()
         .collect().map(_.getLong(0)) // bounded by `partitions`
-      if (affected.isEmpty) { fs.mkdirs(marker); return true }
-      val merged0 =
-        if (!hasLivePartitions(spark, dataDir, "__p=")) delta
-        else {
-          val survivors0 = spark.read.parquet(dataDir)
-            .where(col("__p").isin(affected: _*))
-            .select((keys :+ valCol).map(col): _*)
-            .join(delta.select(keys.map(col): _*), keys, "left_anti")
-          drops.fold(survivors0)(dr =>
-              survivors0.join(dr.select(keys.map(col): _*), keys, "left_anti"))
-            .select(col("*"), part)
-            .unionByName(delta)
-        }
-      // pinned: the overwrite below replaces slices this plan reads
-      val merged = merged0.localCheckpoint()
-      try {
+      if (affected.nonEmpty) {
+        val merged0 =
+          if (!hasLivePartitions(spark, dataDir, "__p=")) delta
+          else {
+            val survivors0 = spark.read.parquet(dataDir)
+              .where(col("__p").isin(affected: _*))
+              .select((keys :+ valCol).map(col): _*)
+              .join(delta.select(keys.map(col): _*), keys, "left_anti")
+            drops.fold(survivors0)(dr =>
+                survivors0.join(dr.select(keys.map(col): _*), keys, "left_anti"))
+              .select(col("*"), part)
+              .unionByName(delta)
+          }
+        // pinned: the overwrite below replaces slices this plan reads
+        val merged = merged0.checkpointed()
         if (!merged.isEmpty)
           merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -747,13 +744,9 @@ object Incremental {
           affected.filterNot(live).foreach(p =>
             fs.delete(new Path(dataDir, s"__p=$p"), true))
         }
-        fs.mkdirs(marker)
-        true
-      } finally { Checkpoints.unpersist(merged); () }
-    } finally {
-      Checkpoints.unpersist(delta)
-      drops.foreach(Checkpoints.unpersist)
-      ()
+      }
+      fs.mkdirs(marker)
+      true
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.functions.Checkpoints.Owned
 
 /** LLM-data-pipeline operators wired into the driver's correctness gate:
   * dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash / embedding),
@@ -1142,7 +1143,7 @@ object LlmQueries {
       // and the gate projection — without it the trigram pipeline runs
       // twice
       val sur = TextAnalysis.lmSurprisalScore(Tables.documents(s, d), "text", "doc_id")
-        .localCheckpoint()
+        .checkpointed()
       val mean = sur.agg(expr("sum(avg_surprisal_q10) div count(1)").as("mean_q10"))
       sur.crossJoin(broadcast(mean))
         .select(col("doc_id"), col("avg_surprisal_q10"),
@@ -1387,7 +1388,7 @@ object LlmQueries {
           Seq("qid", "vec_id"))
         .filter(col("qid") < col("vec_id"))
         .select(col("qid").as("a"), col("vec_id").as("b"))
-        .localCheckpoint() // consumed by the base labels, delta, and cone
+        .checkpointed() // consumed by the base labels, delta, and cone
       val isDelta = pmod(col("a") * 13 + col("b"), lit(5)) === 0
       val old = Graph.communityLabels(
         mutual.filter(!isDelta), "a", "b", rounds = 2)

@@ -330,9 +330,8 @@ object Multimodal {
       excludeBatchId: Option[Long] = None): DataFrame = {
     IndexLayout.requireParams(spark, path, Map(
       "maxHamming" -> maxHamming.toLong, "buckets" -> buckets.toLong))
-    val newBk = bandedPrints(newHashes, maxHamming)
-      .withColumn("bucket", printBucket(col("band"), col("bv"), buckets))
-      .localCheckpoint()
+    val newBk = Checkpoints.local(bandedPrints(newHashes, maxHamming)
+      .withColumn("bucket", printBucket(col("band"), col("bv"), buckets)))
     val qBuckets = newBk.select(col("bucket")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val notOwnBatch = excludeBatchId

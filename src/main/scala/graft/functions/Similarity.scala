@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expressions.VectorExpressions.{dotProduct, dotProductL, l2Norm, squaredL2Q6}
+import graft.functions.Checkpoints.Owned
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -43,12 +44,6 @@ object Similarity {
     val bd = toDouble(b)
     dot(ad, bd) / (norm(ad) * norm(bd))
   }
-
-  /** Cosine quantized to 1e-4 (BIGINT) for order-stable, engine-exact
-    * comparisons.
-    */
-  def cosineQ4(a: Column, b: Column): Column =
-    floor(cosine(a, b) * 10000).cast("long")
 
   private def q4(dotCol: Column, na: Column, nb: Column): Column =
     floor(dotCol / (na * nb) * 10000).cast("long")
@@ -845,12 +840,12 @@ object Similarity {
   def kmeansCentroids(
       corpus: DataFrame,
       centroidEvery: Int,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame = Checkpoints.scoped {
     // materialize the normalized working set once: every Lloyd iteration
     // reads it twice (assignment + means) and recomputing norms + the
     // scan per pass dominates the index build (iterative-kmeans caching,
     // same practice as MLlib's)
-    val c = withNorm(corpus, "vec", "v").localCheckpoint()
+    val c = withNorm(corpus, "vec", "v").checkpointed()
     var cent = c
       .filter(col("vec_id") % centroidEvery === 0)
       .select(col("vec_id").as("cid"), col("vd").as("cd"), col("vn").as("cn"))
@@ -875,7 +870,7 @@ object Similarity {
           col("cid"),
           coalesce(col("cd"), col("cd0")).as("cd"),
           coalesce(col("cn"), col("cn0")).as("cn"))
-        .localCheckpoint() // cut the per-iteration lineage growth
+        .checkpointed() // cut the per-iteration lineage growth
       Checkpoints.unpersist(prev) // release the previous iteration's blocks
     }
     cent
@@ -1204,7 +1199,7 @@ object Similarity {
     val freshCent = cents(emb)
     // exact truth, consumed by both intersection counts
     val truth = bruteForceTopK(queries, emb, k)
-      .select(col("qid"), col("vec_id")).localCheckpoint()
+      .select(col("qid"), col("vec_id")).checkpointed()
     val frozenHits = ivfTopKWithCentroids(queries, emb, frozenCent, k, nprobe)
       .select(col("qid"), col("vec_id"))
     val freshHits = ivfTopKWithCentroids(queries, emb, freshCent, k, nprobe)

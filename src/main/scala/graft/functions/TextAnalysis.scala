@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Checkpoints.Owned
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, language ID, quality scoring, token-count estimation,
@@ -775,7 +776,7 @@ object TextAnalysis {
     // qt feeds both the driver-side term collect and the postings join
     val qt = queries.select(col("qid"),
         explode(filter(split(lower(col("terms")), "\\s+"), t => length(t) > 0)).as("t"))
-      .distinct().localCheckpoint()
+      .distinct().checkpointed()
     val terms = qt.select(col("t")).distinct()
       .collect().map(_.getString(0)).toSeq
     if (terms.isEmpty)
@@ -891,7 +892,7 @@ object TextAnalysis {
     * Output: (step, lhs, rhs, merged, pair_cnt) — the merge table a
     * tokenizer runtime consumes, in training order.
     */
-  def bpeTrain(df: DataFrame, textCol: String, merges: Int): DataFrame = {
+  def bpeTrain(df: DataFrame, textCol: String, merges: Int): DataFrame = Checkpoints.scoped {
     val spark = df.sparkSession
     import spark.implicits._
     val words = df.select(explode(filter(split(lower(col(textCol)), "\\s+"),
@@ -900,7 +901,7 @@ object TextAnalysis {
     var cur = words.select(
       concat(concat_ws(" ", filter(split(col("w"), ""), c => length(c) > 0)),
         lit(" </w>")).as("s"),
-      col("cnt")).localCheckpoint()
+      col("cnt")).checkpointed()
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -924,7 +925,7 @@ object TextAnalysis {
           call_function("replace", c, lit(s" $a $b "), lit(s" $a$b "))
         val next = cur.select(
           trim(merge(merge(concat(lit(" "), col("s"), lit(" "))))).as("s"),
-          col("cnt")).localCheckpoint() // eager: materialized before the
+          col("cnt")).checkpointed() // eager: materialized before the
         Checkpoints.unpersist(cur)      // old round's blocks are dropped
         cur = next
         step += 1
@@ -1051,7 +1052,7 @@ object TextAnalysis {
     // both uses; AQE sizes the join from the real runtime bytes.
     val td = tri.groupBy(col("doc_id"), col("t"))
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint(false)
+      .checkpointed(eager = false)
     val cnt = td.groupBy(col("t")).agg(sum(col("k")).as("cnt"))
     val total = cnt.agg(sum(col("cnt")).as("total")) // one row, broadcast
     td.join(cnt, "t")
@@ -1106,7 +1107,7 @@ object TextAnalysis {
       .withColumn("b", pmod(portableHash48(col("t")), lit(buckets)))
       .groupBy(col("doc_id"), col("__label"), col("__train"), col("b"))
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint(false)
+      .checkpointed(eager = false)
     val m = td.filter(col("__train"))
       .groupBy(col("__label").as("c"), col("b"))
       .agg(sum(col("k")).as("n_cb"))
@@ -1250,26 +1251,22 @@ object TextAnalysis {
       idCol: String,
       labelCol: String,
       trainPermille: Int = 800,
-      buckets: Int = 4096): NbFrozenModel = {
+      buckets: Int = 4096): NbFrozenModel = Checkpoints.scoped {
     val cc = nbClassBucketCounts(df, textCol, idCol, labelCol,
-      trainPermille, buckets).localCheckpoint()
-    try {
-      val model = cc.filter(col("__tr"))
-        .select(col("__label").as("c"), col("b"), col("k").as("n_cb"))
-        .localCheckpoint()
-      val mass = cc.groupBy(col("b")).agg(sum(col("k")).as("k"))
-        .localCheckpoint()
-      val docAgg = df.select(col(labelCol).as("__label"),
-          (pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille)
-            .as("__tr"))
-        .localCheckpoint()
-      val priors = docAgg.filter(col("__tr"))
-        .groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c"))
-        .localCheckpoint()
-      val n = docAgg.count()
-      Checkpoints.unpersist(docAgg)
-      NbFrozenModel(model, priors, mass, n)
-    } finally { Checkpoints.unpersist(cc); () }
+      trainPermille, buckets).checkpointed()
+    val model = cc.filter(col("__tr"))
+      .select(col("__label").as("c"), col("b"), col("k").as("n_cb"))
+      .checkpointed()
+    val mass = cc.groupBy(col("b")).agg(sum(col("k")).as("k"))
+      .checkpointed()
+    val docAgg = df.select(col(labelCol).as("__label"),
+        (pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille)
+          .as("__tr"))
+      .checkpointed()
+    val priors = docAgg.filter(col("__tr"))
+      .groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c"))
+      .checkpointed()
+    NbFrozenModel(model, priors, mass, docAgg.count())
   }
 
   /** Persist / reload the frozen bundle (tiny parquet tables + a 1-row
@@ -1366,7 +1363,7 @@ object TextAnalysis {
     // are narrow doc-level aggregates over the source scan — pinning the
     // corpus TEXT to save those would trade cheap scans for a
     // corpus-sized checkpoint, a non-plan at 100 TB
-    locally {
+    Checkpoints.scoped {
       // one extraction per slice (each doc extracted exactly ONCE; the
       // r15 form paid four): frozen collapses straight to the bounded
       // (label, split, bucket) cube; appended keeps per-doc rows because
@@ -1376,52 +1373,44 @@ object TextAnalysis {
         "__text", "doc_id", "__label", 800, buckets)
       val triA = nbDocBucketCounts(flagged.filter(!col("__fr")),
         "__text", "doc_id", "__label", 800, buckets)
-        .localCheckpoint()
-      try {
-        // ONE (fr, tr, label)-cube scan (r18, guide §1.2) replaces three
-        // separate doc-level scans of the source (the slice-count agg +
-        // both priors) — each re-read the corpus text and re-hashed it
-        // for the train split; the cube is <= 4 x |labels| rows and every
-        // former aggregate is an exact partial re-sum of it (counts
-        // partitioned then summed — bit-identical).
-        val cube = flagged
-          .groupBy(col("__fr"), col("__tr"), col("__label"))
-          .agg(count(lit(1)).as("n")).localCheckpoint()
-        val cnt = cube.agg(
-            sum(when(col("__fr"), col("n")).otherwise(lit(0L))).as("n_frozen"),
-            sum(when(!col("__fr"), col("n")).otherwise(lit(0L))).as("n_appended"))
-          .head()
-        val priorsF = cube.filter(col("__fr") && col("__tr"))
-          .groupBy(col("__label").as("c")).agg(sum(col("n")).as("d_c"))
-        val priorsA = cube.filter(!col("__fr") && col("__tr"))
-          .groupBy(col("__label").as("c")).agg(sum(col("n")).as("d_c"))
-        // ccF feeds the frozen model AND the frozen mass: pin the bounded
-        // cube so the extraction is not replayed per consumer
-        val ccFp = ccF.localCheckpoint()
-        try {
-          nbStalenessCore(spark,
-            NbFrozenModel(
-              ccFp.filter(col("__tr"))
-                .select(col("__label").as("c"), col("b"), col("k").as("n_cb")),
-              priorsF,
-              ccFp.groupBy(col("b")).agg(sum(col("k")).as("k")),
-              cnt.getAs[Long]("n_frozen")),
-            appendedModel = triA.filter(col("__tr"))
-              .groupBy(col("__label").as("c"), col("b"))
-              .agg(sum(col("k")).as("n_cb")),
-            appendedPriors = priorsA,
-            appendedMass = triA.groupBy(col("b")).agg(sum(col("k")).as("k")),
-            appendedTri = triA.select(col("doc_id"), col("b"), col("k")),
-            appendedLabels = flagged.filter(!col("__fr"))
-              .select(col("doc_id"), col("__label")),
-            nAppended = cnt.getAs[Long]("n_appended"),
-            buckets = buckets)
-        } finally {
-          Checkpoints.unpersist(ccFp)
-          Checkpoints.unpersist(cube)
-          ()
-        }
-      } finally { Checkpoints.unpersist(triA); () }
+        .checkpointed()
+      // ONE (fr, tr, label)-cube scan (r18, guide §1.2) replaces three
+      // separate doc-level scans of the source (the slice-count agg +
+      // both priors) — each re-read the corpus text and re-hashed it
+      // for the train split; the cube is <= 4 x |labels| rows and every
+      // former aggregate is an exact partial re-sum of it (counts
+      // partitioned then summed — bit-identical).
+      val cube = flagged
+        .groupBy(col("__fr"), col("__tr"), col("__label"))
+        .agg(count(lit(1)).as("n")).checkpointed()
+      val cnt = cube.agg(
+          sum(when(col("__fr"), col("n")).otherwise(lit(0L))).as("n_frozen"),
+          sum(when(!col("__fr"), col("n")).otherwise(lit(0L))).as("n_appended"))
+        .head()
+      val priorsF = cube.filter(col("__fr") && col("__tr"))
+        .groupBy(col("__label").as("c")).agg(sum(col("n")).as("d_c"))
+      val priorsA = cube.filter(!col("__fr") && col("__tr"))
+        .groupBy(col("__label").as("c")).agg(sum(col("n")).as("d_c"))
+      // ccF feeds the frozen model AND the frozen mass: pin the bounded
+      // cube so the extraction is not replayed per consumer
+      val ccFp = ccF.checkpointed()
+      nbStalenessCore(spark,
+        NbFrozenModel(
+          ccFp.filter(col("__tr"))
+            .select(col("__label").as("c"), col("b"), col("k").as("n_cb")),
+          priorsF,
+          ccFp.groupBy(col("b")).agg(sum(col("k")).as("k")),
+          cnt.getAs[Long]("n_frozen")),
+        appendedModel = triA.filter(col("__tr"))
+          .groupBy(col("__label").as("c"), col("b"))
+          .agg(sum(col("k")).as("n_cb")),
+        appendedPriors = priorsA,
+        appendedMass = triA.groupBy(col("b")).agg(sum(col("k")).as("k")),
+        appendedTri = triA.select(col("doc_id"), col("b"), col("k")),
+        appendedLabels = flagged.filter(!col("__fr"))
+          .select(col("doc_id"), col("__label")),
+        nAppended = cnt.getAs[Long]("n_appended"),
+        buckets = buckets)
     }
   }
 
@@ -1442,31 +1431,29 @@ object TextAnalysis {
       idCol: String,
       labelCol: String,
       trainPermille: Int = 800,
-      buckets: Int = 4096): DataFrame = {
+      buckets: Int = 4096): DataFrame = Checkpoints.scoped {
     val spark = appended.sparkSession
     val triA = nbDocBucketCounts(appended, textCol, idCol, labelCol,
-      trainPermille, buckets).localCheckpoint()
-    try {
-      nbStalenessCore(spark, frozen,
-        appendedModel = triA.filter(col("__tr"))
-          .groupBy(col("__label").as("c"), col("b"))
-          .agg(sum(col("k")).as("n_cb")),
-        appendedPriors = appended
-          .filter(pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille)
-          .groupBy(col(labelCol).as("c")).agg(count(lit(1)).as("d_c")),
-        appendedMass = triA.groupBy(col("b")).agg(sum(col("k")).as("k")),
-        appendedTri = triA.select(col("doc_id"), col("b"), col("k")),
-        appendedLabels = appended
-          .select(col(idCol).as("doc_id"), col(labelCol).as("__label")),
-        nAppended = appended.count(),
-        buckets = buckets)
-    } finally { Checkpoints.unpersist(triA); () }
+      trainPermille, buckets).checkpointed()
+    nbStalenessCore(spark, frozen,
+      appendedModel = triA.filter(col("__tr"))
+        .groupBy(col("__label").as("c"), col("b"))
+        .agg(sum(col("k")).as("n_cb")),
+      appendedPriors = appended
+        .filter(pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille)
+        .groupBy(col(labelCol).as("c")).agg(count(lit(1)).as("d_c")),
+      appendedMass = triA.groupBy(col("b")).agg(sum(col("k")).as("k")),
+      appendedTri = triA.select(col("doc_id"), col("b"), col("k")),
+      appendedLabels = appended
+        .select(col(idCol).as("doc_id"), col(labelCol).as("__label")),
+      nAppended = appended.count(),
+      buckets = buckets)
   }
 
   /** The staleness report's shared tail: score the appended docs with
     * the frozen model and with the MERGED (= retrained, bit-equal) fresh
     * model, fold the erosion and drift aggregates EAGERLY (inputs may be
-    * checkpoint-backed frames the caller unpersists on return; the
+    * checkpoint-backed frames the caller's scope releases on return; the
     * returned frame is literals only), and emit the one report row.
     */
   private def nbStalenessCore(

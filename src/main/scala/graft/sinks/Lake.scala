@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.functions.Checkpoints
+import graft.functions.Checkpoints.Owned
 
 /** Lake-maintenance operators for a partitioned parquet corpus: targeted
   * (GDPR-style) deletion and small-file compaction, both copy-on-write
@@ -144,7 +146,7 @@ object Lake {
     val survivors = surviveOf(
       spark.read.parquet(dir)
         .where(col(partCol).cast("string").isin(affected: _*)))
-      .localCheckpoint()
+      .checkpointed()
 
     val perPart = survivors
       .groupBy(col(partCol).cast("string").as(partCol)).agg(count(lit(1)).as("n"))
@@ -254,9 +256,10 @@ object Lake {
         pruned.join(broadcast(keyStrs.toDF("__k")),
           keyCol === col("__k"), "left_semi")
       }
-    val survivors = slice.join(broadcast(ids), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    try {
+    // the scope releases the survivor pin once the rewrite is done
+    Checkpoints.scoped {
+      val survivors = slice.join(broadcast(ids), Seq(idCol), "left_anti")
+        .checkpointed()
       val rowsDeleted = rowsDeletedKnown.getOrElse(
         slice.count() - survivors.count())
       val survivorKeys = survivors
@@ -277,7 +280,7 @@ object Lake {
       }
       DeleteStats(rowsDeleted, keys.length.toLong, emptied.length.toLong,
         allParts - keys.length)
-    } finally { graft.functions.Checkpoints.unpersist(survivors); () }
+    }
   }
 
   /** Compact the named partitions of the lake at `dir` down to
@@ -372,7 +375,7 @@ object Lake {
     val salt = pmod(hash(raw.columns.map(col): _*), lit(filesPerPartition))
     val slice = raw
       .repartition(partitions.length * filesPerPartition, col(partCol), salt)
-      .localCheckpoint()
+      .checkpointed()
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try

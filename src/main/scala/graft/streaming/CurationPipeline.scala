@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.functions.{Dedup, IndexLayout}
+import graft.functions.{Checkpoints, Dedup, IndexLayout}
 import graft.sinks.Sinks
+import graft.functions.Checkpoints.Owned
 
 /** The streaming-curation CAPSTONE: one document stream fanned into the
   * two pipelines a training-data ingest actually runs, from a single
@@ -52,27 +53,23 @@ object CurationPipeline {
       bands: Int,
       rowsPerBand: Int,
       minJaccardMilli: Int,
-      buckets: Int): Unit = {
-    // localCheckpoint: the batch feeds the dup probe (twice: bucket
-    // collect + candidate join), the anti-join, and the index append
-    val b = gated.localCheckpoint()
-    try {
-      val dups = Dedup.nearDupsAgainstIndex(
-        b.sparkSession, b, textCol, idCol, indexPath,
-        n, bands, rowsPerBand, minJaccardMilli, buckets,
-        excludeBatchId = Some(batchId)).localCheckpoint()
-      try {
-        IndexLayout.overwriteBatchPartitions(
-          dups.withColumn("batch", lit(batchId)), dupsPath, Seq("batch"))
-        val clean = b.join(
-          dups.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
-        IndexLayout.overwriteBatchPartitions(
-          clean.withColumn("batch", lit(batchId)), keptPath, Seq("batch"))
-        Dedup.appendToLshIndex(
-          clean, textCol, idCol, indexPath, n, bands, rowsPerBand, buckets,
-          batchId = Some(batchId))
-      } finally { graft.functions.Checkpoints.unpersist(dups); () }
-    } finally { graft.functions.Checkpoints.unpersist(b); () }
+      buckets: Int): Unit = Checkpoints.scoped {
+    // pinned: the batch feeds the dup probe (twice: bucket collect +
+    // candidate join), the anti-join, and the index append
+    val b = gated.checkpointed()
+    val dups = Dedup.nearDupsAgainstIndex(
+      b.sparkSession, b, textCol, idCol, indexPath,
+      n, bands, rowsPerBand, minJaccardMilli, buckets,
+      excludeBatchId = Some(batchId)).checkpointed()
+    IndexLayout.overwriteBatchPartitions(
+      dups.withColumn("batch", lit(batchId)), dupsPath, Seq("batch"))
+    val clean = b.join(
+      dups.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
+    IndexLayout.overwriteBatchPartitions(
+      clean.withColumn("batch", lit(batchId)), keptPath, Seq("batch"))
+    Dedup.appendToLshIndex(
+      clean, textCol, idCol, indexPath, n, bands, rowsPerBand, buckets,
+      batchId = Some(batchId))
   }
 
   /** Per-batch body of the metrics branch: per-language doc/token counts
@@ -92,7 +89,7 @@ object CurationPipeline {
       metricsPath: String,
       textCol: String = "text",
       idCol: String = "doc_id",
-      nbRouting: Option[(DataFrame, DataFrame)] = None): Unit = {
+      nbRouting: Option[(DataFrame, DataFrame)] = None): Unit = Checkpoints.scoped {
     val routed = nbRouting match {
       case Some((model, classes)) =>
         gated.join(

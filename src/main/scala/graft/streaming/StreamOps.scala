@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Checkpoints
+import graft.functions.Checkpoints.Owned
 
 /** Streaming formulations of the reference's windowed pipelines
   * (SURVEY §2.4/§2.6/§2.7). Each returns an unstarted streaming DataFrame;
@@ -257,9 +259,10 @@ object StreamOps {
       k: Int)(
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     queryStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => Checkpoints.scoped {
         if (!batch.isEmpty) emit(graft.functions.Similarity.int8TopKFromIndex(
           batch.sparkSession, batch.toDF(), indexPath, k))
+      }
     }
 
   /** Keyword-search serving: every micro-batch of queries (`qid`,
@@ -293,11 +296,12 @@ object StreamOps {
       graft.functions.TextAnalysis.indexStatsSnapshot(
         queryStream.sparkSession, indexPath)
     queryStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => Checkpoints.scoped {
         if (!batch.isEmpty)
           emit(graft.functions.TextAnalysis.bm25SearchManyFromIndex(
             batch.sparkSession, indexPath, batch.toDF(), topK = topK,
             statsRow = Some(snapshot._1), committedIds = Some(snapshot._2)))
+      }
     }
   }
 
@@ -321,10 +325,11 @@ object StreamOps {
       indexPath: String,
       buckets: Int = 64): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) => Checkpoints.scoped {
         graft.functions.TextAnalysis.appendToInvertedIndex(
           batch.toDF(), textCol, idCol, indexPath, buckets,
           batchId = Some(batchId))
+      }
     }
 
   /** Deletion half of [[bm25IngestStream]]: a stream of doc ids (one
@@ -347,33 +352,14 @@ object StreamOps {
       idCol: String,
       indexPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     ids.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) => Checkpoints.scoped {
         if (!batch.isEmpty) {
           graft.functions.TextAnalysis.deleteFromInvertedIndex(
             batch.sparkSession, batch.toDF().select(col(idCol)), indexPath,
             batchId = Some(batchId))
           ()
         }
-    }
-
-  /** Deletion half of [[dedupIngestStream]]: a stream of doc ids is
-    * deleted from the materialized LSH index per micro-batch
-    * (`Dedup.deleteFromLshIndex` — band partitions first, then shingles,
-    * so a crash window is invisible to probes). Re-deleting on replay is
-    * a natural no-op (no matching rows → no rewrites), so no batch-id
-    * state is needed.
-    */
-  def dedupDeleteStream(
-      ids: DataFrame,
-      idCol: String,
-      indexPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    ids.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.Dedup.deleteFromLshIndex(
-            batch.sparkSession, batch.toDF().select(col(idCol)), indexPath)
-          ()
-        }
+      }
     }
 
   /** Deletion half of [[clusterMaintenanceStream]] — ONE streamed delete
@@ -390,7 +376,7 @@ object StreamOps {
     * no-ops, the retraction still finds its affected clusters); once the
     * state is saved, a full replay is a no-op end-to-end. `saveState`
     * atomicity is the caller's contract, as in
-    * [[clusterMaintenanceStream]].
+    * [[clusterMaintenanceStream]], and so is materializing what it keeps.
     */
   def clusterRetractStream(
       ids: DataFrame,
@@ -400,18 +386,17 @@ object StreamOps {
       loadState: () => DataFrame,
       saveState: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     ids.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => Checkpoints.scoped {
         if (!batch.isEmpty) {
-          val dead = batch.toDF().select(col(idCol)).localCheckpoint()
-          try {
-            graft.functions.Dedup.deleteFromLshIndex(
-              batch.sparkSession, dead, indexPath)
-            saveState(graft.functions.Curation.refreshClustersRetract(
-              loadState(), dead,
-              survivors => graft.functions.Dedup.pairsAmongFromIndex(
-                batch.sparkSession, survivors, indexPath, minJaccardMilli)))
-          } finally { graft.functions.Checkpoints.unpersist(dead); () }
+          val dead = batch.toDF().select(col(idCol)).checkpointed()
+          graft.functions.Dedup.deleteFromLshIndex(
+            batch.sparkSession, dead, indexPath)
+          saveState(graft.functions.Curation.refreshClustersRetract(
+            loadState(), dead,
+            survivors => graft.functions.Dedup.pairsAmongFromIndex(
+              batch.sparkSession, survivors, indexPath, minJaccardMilli)))
         }
+      }
     }
 
   /** Deletion half of [[int8AppendStream]] / [[indexAppendStream]]: a
@@ -428,7 +413,7 @@ object StreamOps {
       indexPath: String,
       cellPartitioned: Boolean): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     ids.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => Checkpoints.scoped {
         if (!batch.isEmpty) {
           val vecIds = batch.toDF().select(col(idCol))
           if (cellPartitioned)
@@ -439,6 +424,7 @@ object StreamOps {
               batch.sparkSession, vecIds, indexPath)
           ()
         }
+      }
     }
 
   /** Continuous dedup ingest: every micro-batch of documents (`idCol`,
@@ -468,34 +454,28 @@ object StreamOps {
       buckets: Int = 64)(
       emitDups: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) => Checkpoints.scoped {
         if (!batch.isEmpty) {
-          // unpersist in finally: a days-long stream would otherwise
-          // accumulate one dead checkpoint block pair per micro-batch
-          // until driver GC happens to run (the CurationPipeline shape)
-          val b = batch.toDF().localCheckpoint()
-          try {
-            // excludeBatchId: a replay of this micro-batch must score
-            // against exactly the index attempt 1 saw — never against the
-            // batch's own (possibly half-committed) index rows
-            val dups = graft.functions.Dedup.nearDupsAgainstIndex(
-              b.sparkSession, b, textCol, idCol, indexPath,
-              n, bands, rowsPerBand, minJaccardMilli, buckets,
-              excludeBatchId = Some(batchId)).localCheckpoint()
-            try {
-              emitDups(dups)
-              val clean = b.join(
-                dups.select(col("new_id").as(idCol)).distinct(),
-                Seq(idCol), "left_anti")
-              // batchId makes a replayed micro-batch overwrite its own index
-              // partitions instead of appending duplicates (at-least-once
-              // foreachBatch -> exactly-once index contents)
-              graft.functions.Dedup.appendToLshIndex(
-                clean, textCol, idCol, indexPath, n, bands, rowsPerBand, buckets,
-                batchId = Some(batchId))
-            } finally { graft.functions.Checkpoints.unpersist(dups); () }
-          } finally { graft.functions.Checkpoints.unpersist(b); () }
+          val b = batch.toDF().checkpointed()
+          // excludeBatchId: a replay of this micro-batch must score
+          // against exactly the index attempt 1 saw — never against the
+          // batch's own (possibly half-committed) index rows
+          val dups = graft.functions.Dedup.nearDupsAgainstIndex(
+            b.sparkSession, b, textCol, idCol, indexPath,
+            n, bands, rowsPerBand, minJaccardMilli, buckets,
+            excludeBatchId = Some(batchId)).checkpointed()
+          emitDups(dups)
+          val clean = b.join(
+            dups.select(col("new_id").as(idCol)).distinct(),
+            Seq(idCol), "left_anti")
+          // batchId makes a replayed micro-batch overwrite its own index
+          // partitions instead of appending duplicates (at-least-once
+          // foreachBatch -> exactly-once index contents)
+          graft.functions.Dedup.appendToLshIndex(
+            clean, textCol, idCol, indexPath, n, bands, rowsPerBand, buckets,
+            batchId = Some(batchId))
         }
+      }
     }
 
   /** Continuous CLUSTER maintenance — the keep-list companion of
@@ -515,7 +495,10 @@ object StreamOps {
     * id rule), `excludeBatchId` keeps a replayed score pass blind to the
     * batch's own index rows, and `refreshClusters` is IDEMPOTENT under
     * re-applied pairs (re-adding edges that are already reflected in the
-    * state re-derives the same labels — spec-proven).
+    * state re-derives the same labels — spec-proven). Materialize what
+    * you keep: the handed frame reads the batch's checkpoints, released
+    * when the batch ends, so `saveState` keeps its own raw
+    * `localCheckpoint()` (or a table write), never the frame itself.
     */
   def clusterMaintenanceStream(
       docs: DataFrame,
@@ -530,22 +513,19 @@ object StreamOps {
       loadState: () => DataFrame,
       saveState: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) => Checkpoints.scoped {
         if (!batch.isEmpty) {
-          val b = batch.toDF().localCheckpoint()
-          try {
-            val pairs = graft.functions.Dedup.newBatchPairs(
-              b.sparkSession, b, textCol, idCol, indexPath,
-              n, bands, rowsPerBand, minJaccardMilli, buckets,
-              excludeBatchId = Some(batchId)).localCheckpoint()
-            try {
-              saveState(graft.functions.Curation.refreshClusters(loadState(), pairs))
-              graft.functions.Dedup.appendToLshIndex(
-                b, textCol, idCol, indexPath, n, bands, rowsPerBand, buckets,
-                batchId = Some(batchId))
-            } finally { graft.functions.Checkpoints.unpersist(pairs); () }
-          } finally { graft.functions.Checkpoints.unpersist(b); () }
+          val b = batch.toDF().checkpointed()
+          val pairs = graft.functions.Dedup.newBatchPairs(
+            b.sparkSession, b, textCol, idCol, indexPath,
+            n, bands, rowsPerBand, minJaccardMilli, buckets,
+            excludeBatchId = Some(batchId)).checkpointed()
+          saveState(graft.functions.Curation.refreshClusters(loadState(), pairs))
+          graft.functions.Dedup.appendToLshIndex(
+            b, textCol, idCol, indexPath, n, bands, rowsPerBand, buckets,
+            batchId = Some(batchId))
         }
+      }
     }
 
   /** Write-side twin of [[int8SearchStream]]: a stream of new corpus
@@ -558,10 +538,11 @@ object StreamOps {
       newVecStream: DataFrame,
       path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     newVecStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) => Checkpoints.scoped {
         if (!batch.isEmpty)
           graft.functions.Similarity.appendToInt8Index(
             batch.toDF(), path, batchId = Some(batchId))
+      }
     }
 
   /** Write-side twin for the IVF+PQ family: a stream of NEW corpus
@@ -582,10 +563,11 @@ object StreamOps {
       m: Int,
       dim: Int): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     newVecStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) => Checkpoints.scoped {
         if (!batch.isEmpty)
           graft.functions.Similarity.appendToIvfPqIndex(
             baseCorpus, batch.toDF(), path, centroidEvery, m, dim,
             batchId = Some(batchId))
+      }
     }
 }

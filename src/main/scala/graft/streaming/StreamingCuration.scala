@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Curation, Dedup, TextAnalysis}
+import graft.functions.{Checkpoints, Curation, Dedup, TextAnalysis}
 
 /** The curation pipeline as a STREAMING flow — documents arriving
   * continuously (file drops, a queue) are annotated, gated, deduplicated
@@ -129,10 +129,11 @@ object StreamingCuration {
       cuts: DataFrame)(
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => Checkpoints.scoped {
         if (!batch.isEmpty)
-          emit(graft.functions.Similarity.diversityAssign(
-            batch.toDF(), centroids, cuts))
+        emit(graft.functions.Similarity.diversityAssign(
+          batch.toDF(), centroids, cuts))
+      }
     }
 
   def nbClassifyStream(
@@ -144,10 +145,11 @@ object StreamingCuration {
       buckets: Int = 4096)(
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => Checkpoints.scoped {
         if (!batch.isEmpty)
-          emit(TextAnalysis.nbScoreAgainst(
-            batch.toDF(), textCol, idCol, model, classes, buckets))
+        emit(TextAnalysis.nbScoreAgainst(
+          batch.toDF(), textCol, idCol, model, classes, buckets))
+      }
     }
 
   /** Train-batch / score-stream DSIR importance weighting (the same
@@ -230,9 +232,10 @@ object StreamingCuration {
       idCol: String)(
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => Checkpoints.scoped {
         if (!batch.isEmpty)
-          emit(Curation.gopherRules(batch.toDF(), textCol, idCol))
+        emit(Curation.gopherRules(batch.toDF(), textCol, idCol))
+      }
     }
 
   /** Train-batch / score-stream CCNet perplexity bucketing (the same

@@ -160,6 +160,21 @@ class BenchSpec extends AnyFunSuite {
     Seq("window_factor_end", "retimed", "row_reruns").foreach(f => assert(!j.has(f), f))
   }
 
+  test("layers block: every row publishes rdds_held; a row that held any is an error") {
+    val leaky = Row("leaky_row", Seq(1.0, 1.1, 1.2), ok = true).held(2)
+    assert(!leaky.ok && leaky.rddsHeld === 2)
+    assert(Row("r", Seq(1.0), ok = true).held(0).ok)
+    val art = artifact(Seq(Row("clean_row", Seq(0.5, 0.6, 0.7), ok = true), leaky))
+    val j = mapper.readTree(art.fullJson)
+    val layers = j.get("layers")
+    assert(layers.get("clean_row").get("rdds_held").asInt === 0)
+    assert(layers.get("leaky_row").get("rdds_held").asInt === 2)
+    assert(layers.get("graph_pagerank_served").get("rdds_held").asInt === 0)
+    assert(layers.size === 4)
+    assert(art.errors === Seq("leaky_row"))
+    assert(!j.get("queries").has("leaky_row"))
+  }
+
   test("Bench.scala reads no file and no previous artifact; src/main reads three env vars") {
     val src = Files.readString(Paths.get("src/main/scala/graft/Bench.scala"))
     Seq("readAllBytes", "readString", "readAllLines", "Files.lines", "newBufferedReader",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.sources.Tables
+import graft.functions.Checkpoints.Owned
 
 /** Round-trip fidelity of the persisted gate artifacts: every scorer
   * must produce bit-identical output from the LOADED bundle and from
@@ -15,7 +16,7 @@ class CurationArtifactsSpec extends SparkSpec {
 
   test("loaded artifacts score bit-identically to the in-memory frames") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "lang", "text").localCheckpoint()
+      .select("doc_id", "source", "lang", "text").checkpointed()
     val dir = java.nio.file.Files.createTempDirectory("graft_artifacts").toString
     val isBench = pmod(col("doc_id"), lit(20)) === 0
     CurationArtifacts.train(docs, "text", "doc_id", "source", "lang",

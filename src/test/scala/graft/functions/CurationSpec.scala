@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.Checkpoints.Owned
 
 /** Unit coverage for the curation operators whose corpus queries can't
   * exercise every path (the synthetic documents contain no PII) plus
@@ -388,7 +389,7 @@ class CurationSpec extends SparkSpec {
     val mergeEdges = new java.util.concurrent.atomic.AtomicLong(-1)
     val retracted = Curation.refreshClustersRetract(
       state0, dead.toDF("node"), pairsAmong, Some(mergeEdges))
-      .localCheckpoint()
+      .checkpointed()
     val full = Curation.connectedComponents(surviving.toDF("a", "b"), "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(retracted.as[(Long, Long)].collect().toMap === full)

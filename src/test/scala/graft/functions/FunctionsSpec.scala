@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.Checkpoints.Owned
 
 /** Property tests for the LLM-pipeline operators on planted inputs. */
 class FunctionsSpec extends SparkSpec {
@@ -1818,7 +1819,7 @@ class FunctionsSpec extends SparkSpec {
       .select(col("vec_id").as("qid"), col("vec").as("qvec"))
     val dead = Seq(13L, 57L, 88L)
     val survivors = vecs.filter(!col("vec_id").isin(dead: _*))
-      .localCheckpoint()
+      .checkpointed()
 
     // a lived-in index: base + append + delete, then the staleness alarm
     // fires and the operator rebuilds over the survivors

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.functions.Checkpoints.Owned
 
 /** Property tests for the round-11 graph additions: k-core peeling,
   * common-neighbor link prediction, multi-source BFS. Each operator is
@@ -240,7 +241,7 @@ class GraphOpsSpec extends SparkSpec {
     val eSrc = spark.table("hits_edges_src")
     val eDst = spark.table("hits_edges_dst")
     val score = eSrc.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1000000L).as("s")).localCheckpoint()
+      .select(col("node"), lit(1000000L).as("s")).checkpointed()
     assertEdgeSideUnshuffled(
       "auth(src)" -> eSrc
         .join(score.select(col("node").as("src"), col("s").as("h")), "src")
@@ -419,7 +420,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(served === direct, "bucketed serving path diverges from direct pageRank")
     val edgesB = spark.table("pr_edges_spec")
     val rankFrame = edgesB.groupBy(col("src")).agg(count(lit(1)).as("outd"))
-      .select(col("src"), lit(1000000L).as("r"), col("outd")).localCheckpoint()
+      .select(col("src"), lit(1000000L).as("r"), col("outd")).checkpointed()
     assertEdgeSideUnshuffled("rank join" -> edgesB.join(rankFrame, "src")
       .select(col("dst"), expr("r div outd").as("c")))
   }
@@ -459,7 +460,7 @@ class GraphOpsSpec extends SparkSpec {
       "bucketed/non-broadcast node2vec serving path diverges from direct walks")
     val frontier = bucketed.select(col("src").as("wid"),
         col("src").as("prev"), col("src").as("cur"))
-      .distinct().localCheckpoint()
+      .distinct().checkpointed()
     assertEdgeSideUnshuffled("candidate join" ->
       bucketed.join(frontier, bucketed("src") === frontier("cur"))
         .select(col("wid"), col("prev"), col("dst")))
@@ -470,7 +471,7 @@ class GraphOpsSpec extends SparkSpec {
     // twice, each loss join riding its own bucketing with
     // broadcastDead=false + checkpointEdges=false
     import org.apache.spark.sql.functions._
-    val half = Graph.copurchaseHalfEdges(lineitem).localCheckpoint()
+    val half = Graph.copurchaseHalfEdges(lineitem).checkpointed()
     val direct = Graph.kCoreHalf(half, k = 3, rounds = 5)
       .as[(Long, Long)].collect().toSet
     assert(direct.nonEmpty, "the 3-core of the sf0.001 co-purchase graph is empty")
@@ -481,7 +482,7 @@ class GraphOpsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(served === direct, "bucketed kCoreHalf serving path diverges from direct")
     val dead = eSrc.select(col("src").as("node")).distinct()
-      .select(col("node"), (col("node") * 2).as("pay")).localCheckpoint()
+      .select(col("node"), (col("node") * 2).as("pay")).checkpointed()
     assertEdgeSideUnshuffled(
       "loss(dst)" -> eDst.join(dead, eDst("dst") === dead("node"))
         .select(eDst("src").as("n")),
@@ -503,7 +504,7 @@ class GraphOpsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(served === direct, "bucketed LPA serving path diverges from direct")
     val labels = sym.select(col("dst").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
+      .withColumn("label", col("node")).checkpointed()
     assertEdgeSideUnshuffled("vote join" -> sym
       .join(labels.select(col("node").as("dst"), col("label")), "dst")
       .select(col("src"), col("label")))
@@ -526,7 +527,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(served === direct, "bucketed bfs serving path diverges from direct")
     val frontier = edgesB.select(col("src").as("node")).distinct()
       .select(col("node"), (col("node") * 2).as("p1"), (col("node") * 3).as("p2"))
-      .localCheckpoint()
+      .checkpointed()
     assertEdgeSideUnshuffled("hop join" ->
       edgesB.join(frontier, edgesB("src") === frontier("node")).select(col("dst")))
   }
@@ -539,10 +540,10 @@ class GraphOpsSpec extends SparkSpec {
     val seeds = e.select(col("src").as("node")).distinct()
       .filter(pmod(col("node"), lit(40)) === 0)
     val walks = Graph.deterministicWalks(e, "src", "dst", seeds, steps = 4)
-      .localCheckpoint()
+      .checkpointed()
     val k = 4
     val got = Graph.sgnsNegatives(walks, window = 2, negatives = k, buckets = 64)
-      .localCheckpoint()
+      .checkpointed()
     // every (center, context) pair emits exactly k negatives — i.e. each
     // draw lands in exactly ONE noise interval through the bucketed join
     val nPairs = Graph.skipGramPairs(walks, window = 2).count()
@@ -552,7 +553,7 @@ class GraphOpsSpec extends SparkSpec {
       .filter(col("n") =!= k || col("r") =!= k).count() === 0L)
     // the bucketed equi-join must assign each draw to the same interval a
     // naive range join would (recall-loss-free bucketing)
-    val noise = Graph.sgnsNoiseTable(walks).localCheckpoint()
+    val noise = Graph.sgnsNoiseTable(walks).checkpointed()
     val total = noise.agg(max(col("hi"))).head().getLong(0)
     val naive = Graph.skipGramPairs(walks, window = 2)
       .withColumn("neg_rank", explode(expr(s"sequence(1L, ${k}L)")))
@@ -588,7 +589,7 @@ class GraphOpsSpec extends SparkSpec {
       "communityLabels assumeSymmetric, labelPropagation checkpointEdges") {
     import org.apache.spark.sql.functions._
     val (sym, _) = randomGraph(seed = 77L, nodes = 120, draws = 900)
-    val symDf = sym.toDF("src", "dst").localCheckpoint()
+    val symDf = sym.toDF("src", "dst").checkpointed()
     val half = symDf.filter(col("src") < col("dst"))
     // kCoreHalf: the two-table non-broadcast path (the probe's cluster
     // layout) must be bit-identical to the default single-frame path

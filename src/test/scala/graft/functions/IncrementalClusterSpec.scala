@@ -7,6 +7,7 @@ import scala.util.Random
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.Checkpoints.Owned
 
 /** Incremental keep-list maintenance (round-9 directive): an appended
   * near-dup must update the cluster state / keep list WITHOUT a full CC
@@ -88,7 +89,7 @@ class IncrementalClusterSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val newPairs = Dedup.newBatchPairs(spark, batch, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 500, buckets = 16)
-      .localCheckpoint()
+      .checkpointed()
     val mergeEdges = new AtomicLong(-1)
     val refreshed = Curation.refreshClusters(state0, newPairs,
       mergeEdgesOut = Some(mergeEdges))
@@ -163,7 +164,11 @@ class IncrementalClusterSpec extends SparkSpec {
       in.toDF().toDF("doc_id", "text"), "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 500, buckets = 16)(
       loadState = () => state,
-      saveState = s => { state = s.localCheckpoint() })
+      saveState = s => {
+        val old = state
+        state = s.localCheckpoint()
+        Checkpoints.unpersist(old)
+      })
       .start()
     try {
       // batch 1 grows the seeded cluster; batch 2 is a near-dup of a doc
@@ -180,7 +185,56 @@ class IncrementalClusterSpec extends SparkSpec {
         "text", "doc_id", n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 500))
       assert(got === full)
       assert(got === Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 20L -> 1L))
-    } finally q.stop()
+    } finally { q.stop(); Checkpoints.unpersist(state) }
+  }
+
+  test("cluster maintenance + retraction streams: between batches the " +
+      "session holds exactly the caller's one state checkpoint") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val tpl = "the quick brown fox jumps over the lazy dog every single day"
+    val corpus = Seq((1L, tpl), (2L, tpl.replace("day", "night")))
+      .toDF("doc_id", "text")
+    val idx = java.nio.file.Files.createTempDirectory("graft-inc-held").toString
+    Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
+      n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
+    // the caller keeps its state as its own raw checkpoint and releases
+    // the superseded one (the streambench saveState)
+    var state = Curation.connectedComponents(
+      Dedup.minhashLshPairs(corpus, "text", "doc_id",
+        n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 500),
+      "a", "b").localCheckpoint()
+    val sc = spark.sparkContext
+    // whatever the seeding left is not the streams' doing
+    val seeded = sc.getPersistentRDDs.keySet - Checkpoints.rddOf(state).get.id
+    def heldNow: Set[Int] = sc.getPersistentRDDs.keySet.toSet -- seeded
+    val save = (s: org.apache.spark.sql.DataFrame) => {
+      val old = state
+      state = s.localCheckpoint()
+      Checkpoints.unpersist(old)
+    }
+    val docs = MemoryStream[(Long, String)]
+    val dead = MemoryStream[Long]
+    val qIn = graft.streaming.StreamOps.clusterMaintenanceStream(
+      docs.toDF().toDF("doc_id", "text"), "text", "doc_id", idx,
+      n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 500, buckets = 16)(
+      () => state, save).start()
+    val qOut = graft.streaming.StreamOps.clusterRetractStream(
+      dead.toDF().toDF("doc_id"), "doc_id", idx, minJaccardMilli = 500)(
+      () => state, save).start()
+    try {
+      for ((word, k) <- Seq("morning", "evening", "noon").zipWithIndex) {
+        docs.addData((10L + k, tpl.replace("day", word)))
+        qIn.processAllAvailable()
+        assert(heldNow === Set(Checkpoints.rddOf(state).get.id),
+          s"after ingest batch ${k + 1}")
+        dead.addData(10L + k)
+        qOut.processAllAvailable()
+        assert(heldNow === Set(Checkpoints.rddOf(state).get.id),
+          s"after retraction batch ${k + 1}")
+      }
+      assert(state.as[(Long, Long)].collect().toMap === Map(1L -> 1L, 2L -> 1L))
+    } finally { qIn.stop(); qOut.stop(); Checkpoints.unpersist(state) }
   }
 
   test("retraction end-to-end over the LSH index: delete via " +
@@ -203,7 +257,7 @@ class IncrementalClusterSpec extends SparkSpec {
       Dedup.minhashLshPairs(docs, "text", "doc_id",
         n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 500)
     val state0 = Curation.connectedComponents(pairsOf(corpus), "a", "b")
-      .localCheckpoint()
+      .checkpointed()
     assert(state0.as[(Long, Long)].collect().toMap ===
       Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 4L -> 4L, 5L -> 4L))
 
@@ -228,9 +282,9 @@ class IncrementalClusterSpec extends SparkSpec {
     val retracted = Curation.refreshClustersRetract(
       state0, dead.toDF("node"),
       survivors => Dedup.pairsAmongFromIndex(spark, survivors, idx, 500),
-      Some(mergeEdges)).localCheckpoint()
+      Some(mergeEdges)).checkpointed()
     val survivingDocs = corpus.filter(!col("doc_id").isin(dead: _*))
-      .localCheckpoint()
+      .checkpointed()
     val full = Curation.connectedComponents(pairsOf(survivingDocs), "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(retracted.as[(Long, Long)].collect().toMap === full,
@@ -319,7 +373,11 @@ class IncrementalClusterSpec extends SparkSpec {
     val q = graft.streaming.StreamOps.clusterRetractStream(
       in.toDF().toDF("doc_id"), "doc_id", idx, minJaccardMilli = 500)(
       loadState = () => state,
-      saveState = s => { state = s.localCheckpoint() })
+      saveState = s => {
+        val old = state
+        state = s.localCheckpoint()
+        Checkpoints.unpersist(old)
+      })
       .start()
     try {
       in.addData(1L)
@@ -336,6 +394,6 @@ class IncrementalClusterSpec extends SparkSpec {
       // doc 2 band-collides with the probe; doc 10's membership was
       // transitive (via pairs (1,2),(2,10)), so the probe need not hit it
       assert(verdicts.contains(2L))
-    } finally q.stop()
+    } finally { q.stop(); Checkpoints.unpersist(state) }
   }
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.Checkpoints.Owned
 
 /** The IVM contract: a stored summary merged with a delta summary must be
   * bit-identical to recomputing over the whole input — per batch split,
@@ -112,7 +113,7 @@ class IncrementalSpec extends SparkSpec {
     val delIds = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
       .select("doc_id").as[Long].collect().toSeq
     val deletedSlice = docs.filter(col("doc_id").isin(delIds: _*))
-      .localCheckpoint() // must be captured BEFORE the lake rewrite
+      .checkpointed() // must be captured BEFORE the lake rewrite
     val stats = graft.sinks.Lake.deleteByIds(spark, lakeDir, "source", "doc_id", delIds)
     assert(stats.rowsDeleted === delIds.size)
     val downdated = Incremental.mergeDatasheetStates(state0,
@@ -343,7 +344,7 @@ class IncrementalSpec extends SparkSpec {
     val before = fileCrcs()
     // second delta: a handful of docs — few digest keys, so they hash
     // into a strict subset of the partitions
-    val delta1 = digests(b1.orderBy("doc_id").limit(5)).localCheckpoint()
+    val delta1 = digests(b1.orderBy("doc_id").limit(5)).checkpointed()
     val affected = delta1
       .select(pmod(xxhash64(col("source"), col("digest")), lit(parts)).as("p"))
       .distinct().as[Long].collect().toSet

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.sources.Tables
+import graft.functions.Checkpoints.Owned
 
 /** IVF ANN recall floor vs the exact brute-force top-k, at the shipped
   * query's configuration (k=5, centroidEvery=25, nprobe=3) on the sf0.01
@@ -290,7 +291,7 @@ class RecallSpec extends SparkSpec {
     val frozen = (0L until 300L).map(i => (i, baseVec(i))).toDF("vec_id", "vec")
     val drifted = (1000L until 1240L).map(i => (i, driftVec(i)))
     val emb = frozen.unionByName(drifted.toDF("vec_id", "vec"))
-      .localCheckpoint()
+      .checkpointed()
     val queries = drifted.take(20).toDF("qid", "qvec")
     val truth = Similarity.bruteForceTopK(queries, emb, 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet

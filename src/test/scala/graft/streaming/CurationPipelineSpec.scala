@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.functions.Dedup
+import graft.functions.Checkpoints.Owned
 
 /** The streaming-curation capstone's exactly-once story, end to end:
   *
@@ -131,12 +132,12 @@ class CurationPipelineSpec extends SparkSpec {
   test("metrics branch with NB routing groups by the trained router's labels") {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "lang", "text").localCheckpoint()
+      .select("doc_id", "source", "lang", "text").checkpointed()
     // route by SOURCE (domain routing): guaranteed to disagree with the
     // heuristic language label, so the swap is observable in the metrics
     val (m, c) = graft.functions.TextAnalysis.nbTrainModel(docs, "text", "source")
     val gated = StreamingCuration.annotateAndGate(docs, "text", minQualityMilli = 0)
-      .localCheckpoint()
+      .checkpointed()
     val dir = Files.createTempDirectory("graft_nbmetrics").toString
     CurationPipeline.metricsBatch(gated, 0L, dir, "text", "doc_id", Some((m, c)))
     val got = spark.read.parquet(dir)

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.SparkSpec
 import graft.model.AuditTrail
 import graft.sinks.Sinks
+import graft.functions.Checkpoints.Owned
 
 final case class DocEv(ts: Timestamp, fp: String, payload: String)
 
@@ -31,7 +32,7 @@ class StreamingExtrasSpec extends SparkSpec {
     val corpus = vecs.toDF("vec_id", "vec")
     val cent = Similarity.kmeansCentroids(corpus, centroidEvery = 20, iters = 1)
     val cuts = Similarity.diversityCuts(corpus, cent, keepPermille = 500)
-      .localCheckpoint()
+      .checkpointed()
     // batch fidelity on the frozen corpus: stateless verdicts equal the
     // rank-based keep flags (this corpus has no boundary ties — pinned,
     // so the equality below is total, not vacuously filtered)
@@ -638,7 +639,7 @@ class StreamingExtrasSpec extends SparkSpec {
 
   test("gopherGateStream flags equal the batch gopherRules row-for-row") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text").localCheckpoint()
+      .select("doc_id", "text").checkpointed()
     val rows = docs.as[(Long, String)].collect().sortBy(_._1)
     val input = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long, Long)]
@@ -661,13 +662,13 @@ class StreamingExtrasSpec extends SparkSpec {
 
   test("ccnetAssignStream buckets equal the batch ccnetBuckets on the frozen corpus") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text").localCheckpoint()
+      .select("doc_id", "source", "text").checkpointed()
     // train tier: freeze the trigram LM + the per-source tercile cuts
     val model = graft.functions.TextAnalysis
       .trigramModel(docs, "text", "doc_id").cache()
     val total = model.agg(sum(col("cnt"))).as[Long].head()
     val cuts = graft.functions.Curation
-      .ccnetThresholds(docs, "text", "doc_id", "source").localCheckpoint()
+      .ccnetThresholds(docs, "text", "doc_id", "source").checkpointed()
     val rows = docs.select("doc_id", "source", "text")
       .as[(Long, String, String)].collect().sortBy(_._1)
     val base = 1704067200000000L
@@ -756,11 +757,11 @@ class StreamingExtrasSpec extends SparkSpec {
   test("quantileNormAssignStream equals the batch normalization row-for-row") {
     val d = "/root/testdata/sf0.001"
     val docs = graft.sources.Tables.documents(spark, d)
-      .select("doc_id", "source", "text").localCheckpoint()
+      .select("doc_id", "source", "text").checkpointed()
     val (perSrc, inv) = graft.functions.Curation.quantileNormTables(
       docs, "text", "doc_id", "source")
-    val frozenSrc = perSrc.localCheckpoint()
-    val frozenInv = inv.localCheckpoint()
+    val frozenSrc = perSrc.checkpointed()
+    val frozenInv = inv.checkpointed()
     val rows = docs.as[(Long, String, String)].collect().sortBy(_._1)
     val input = MemoryStream[(Long, String, String)]
     val scored = StreamingCuration.quantileNormAssignStream(
@@ -784,7 +785,7 @@ class StreamingExtrasSpec extends SparkSpec {
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("ts_us"))
-      .localCheckpoint()
+      .checkpointed()
     val cols = Seq("event_id" -> "long", "user_id" -> "long",
       "event_type" -> "string", "value" -> "double_centi")
     val rows = ev.as[(Long, Long, String, Double, Long)].collect().sortBy(_._1)
@@ -825,7 +826,7 @@ class StreamingExtrasSpec extends SparkSpec {
 
   test("datasheetStream card equals the batch corpus_datasheet on the frozen corpus") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "lang", "text").localCheckpoint()
+      .select("doc_id", "source", "lang", "text").checkpointed()
     val rows = docs.as[(Long, String, String, String)].collect().sortBy(_._1)
     // every corpus doc lands in ONE 1-minute window (ids are micros
     // offsets << 60s); the far-future sentinel closes it
@@ -870,10 +871,10 @@ class StreamingExtrasSpec extends SparkSpec {
     // frozen reference, odd vec_ids arrive as the candidate stream — all
     // inside ONE 1-minute window, closed by a far-future sentinel
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
+      .select(col("vec_id"), col("embedding")).checkpointed()
     val refMeans = graft.functions.Profiling
       .dimMeans(emb.filter(col("vec_id") % 2 === 0), "embedding")
-      .localCheckpoint()
+      .checkpointed()
     val cand = emb.filter(col("vec_id") % 2 =!= 0)
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val base = 1704067200000000L
@@ -911,16 +912,16 @@ class StreamingExtrasSpec extends SparkSpec {
     // the batch diff's 'removed' rows, unobservable in a stream), plus
     // planted brand-new ids — so all three streaming statuses occur
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text").localCheckpoint()
+      .select("doc_id", "source", "text").checkpointed()
     val candDf = docs.filter(col("doc_id") % 7 =!= 0)
       .select(col("doc_id"), col("source"),
         when(col("doc_id") % 5 === 0, concat(col("text"), lit(" EDITED")))
           .otherwise(col("text")).as("text"))
       .unionAll(docs.filter(col("doc_id") % 11 === 0)
         .select(col("doc_id") + 1000000L, col("source"), col("text")))
-      .localCheckpoint()
+      .checkpointed()
     val refDg = graft.functions.Profiling.refDigests(docs, "doc_id", "text")
-      .localCheckpoint()
+      .checkpointed()
     val cand = candDf.as[(Long, String, String)].collect().sortBy(_._1)
     val base = 1704067200000000L
     val input = MemoryStream[(Long, String, String, Long)]
