@@ -20,6 +20,12 @@ side makes the whole comparison meaningless, so the script REFUSES
 (exit 2) in either case unless --force is given, and then annotates
 every line as tainted.
 
+Same machine shape: the two sides must record the same `cores` and the
+same scale factor (`sf`, compared by its directory name, e.g. `sf0.1`).
+A side missing either field, or a mismatch, is refused the same way: a
+4-core run against a 32-core run, or sf0.01 against sf0.1, measures the
+host, not the engine.
+
 Row screen: a row of `queries`, `served` or `skew_demo` whose seconds
 on one side are more than 3x AND more than 1 s above the other side's
 prints a ROW ANOMALY line (with each side's timed-run range when both
@@ -34,7 +40,8 @@ BLOCKS = ("queries", "served", "skew_demo")
 def load(path):
     """A bench artifact: either the engine's own full format (has a
     `queries` map) or the driver's wrapper `{n, rc, tail, parsed}` —
-    BENCH_r{N}.json wraps the run and truncates `parsed.queries`, with
+    e.g. `git show 88ece81:BENCH_r14.json` — which wraps
+    the run and truncates `parsed.queries`, with
     `parsed.full` naming the full artifact the driver committed beside
     it. Resolve the pointer (same directory, value-matched so a later
     run overwriting that file can't masquerade as this one); fall back
@@ -102,6 +109,12 @@ def main():
                if "run_quality" not in a]
     refused += [(s, "is run_quality=degraded") for s, a in (("old", old), ("new", new))
                 if a.get("run_quality") == "degraded"]
+    for field, norm in (("cores", lambda v: v),
+                        ("sf", lambda v: os.path.basename(os.path.normpath(str(v))))):
+        missing = [s for s, a in (("old", old), ("new", new)) if field not in a]
+        refused += [(s, f"has no {field} field") for s in missing]
+        if not missing and norm(old[field]) != norm(new[field]):
+            refused.append(("new", f"has {field}={new[field]} against the old {old[field]}"))
     if refused:
         why = "; ".join(f"the {s} artifact {r}" for s, r in refused)
         if not force:

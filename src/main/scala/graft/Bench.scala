@@ -167,6 +167,7 @@ object Bench {
     */
   final case class Artifact(
       sf: String,
+      cores: Int,
       full: String,
       queries: Seq[Row],
       served: Seq[Row],
@@ -204,7 +205,7 @@ object Bench {
         s""""served":${published(served)},"served_build":${secs(servedBuild)},""" +
         s""""family_build":${secs(familyBuild)},"skew_demo":${published(skew)},""" +
         s""""runs":$runs,"layers":$layers,"runs_per_query":"$protocol",""" +
-        s""""errors":${strs(errors)},"sf":"$sf"}"""
+        s""""errors":${strs(errors)},"sf":"$sf","cores":$cores}"""
     }
 
     /** Slowest rows first, so whatever fits is the informative part. The
@@ -222,9 +223,9 @@ object Bench {
           s""""family_build":${secs(familyBuild)},"skew_demo":$skew,""" +
           s""""runs_per_query":"$protocol","errors":$errs,""" +
           s""""n_queries":${ok(queries).size},"n_errors":${queries.size - ok(queries).size},""" +
-          s""""full":"$full","sf":"$sf"}"""
+          s""""full":"$full","sf":"$sf","cores":$cores}"""
       def minimal(qs: String) =
-        s"""{"metric":"total","value":${num(total)},"unit":"sec","run_quality":"$quality","queries":$qs,"sf":"$sf"}"""
+        s"""{"metric":"total","value":${num(total)},"unit":"sec","run_quality":"$quality","queries":$qs,"sf":"$sf","cores":$cores}"""
       budgeted(ok(queries).map(r => r.name -> r.sec), Seq(
         form(published(skew), strs(errors)), form(published(skew), "[]"),
         form("{}", "[]"), minimal))
@@ -461,8 +462,8 @@ object Bench {
     val canaryEnd = HostCanary.measureFresh()
     phaseDone("canary-end")
 
-    val art = Artifact(sfDir, fullPath, queries, served, skew, servedBuild, familyBuild,
-      canary, canaryWarm, canaryEnd, loadAvg)
+    val art = Artifact(sfDir, GraftSession.defaultCores, fullPath, queries, served, skew,
+      servedBuild, familyBuild, canary, canaryWarm, canaryEnd, loadAvg)
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val plans = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$fullPath.plans"))
     (queries ++ served ++ skew).filter(_.plan.nonEmpty).foreach { r =>

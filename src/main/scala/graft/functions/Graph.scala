@@ -72,6 +72,7 @@ object Graph {
       .checkpointed()
     val base = (1000L - dampMilli) * 1000L
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
+    var cut: Option[DataFrame] = None // the last periodic cut, read by `rank`
     for (i <- 1 to iterations) {
       // the rank side is node-sized; checkpointed frames carry no size
       // stats, so without the explicit hint the optimizer shuffles the
@@ -89,7 +90,11 @@ object Graph {
       // previous agg exactly once), so cut lineage only periodically —
       // an every-round checkpoint serializes a full materialization job
       // per round for nothing
-      if (i % checkpointEvery == 0 && i < iterations) rank = rank.checkpointed()
+      if (i % checkpointEvery == 0 && i < iterations) {
+        rank = rank.checkpointed()
+        cut.foreach(Checkpoints.unpersist)
+        cut = Some(rank)
+      }
     }
     rank.select(col("node"), col("r").as("rank_micro"))
   }
@@ -133,9 +138,14 @@ object Graph {
       .checkpointed()
     val base = (1000L - dampMilli) * 1000L
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
+    var cut: Option[DataFrame] = None // the last periodic cut, read by `rank`
     for (i <- 1 to iterations) {
       rank = weightedRound(e, deg, rank, base, dampMilli, broadcastRanks)
-      if (i % checkpointEvery == 0 && i < iterations) rank = rank.checkpointed()
+      if (i % checkpointEvery == 0 && i < iterations) {
+        rank = rank.checkpointed()
+        cut.foreach(Checkpoints.unpersist)
+        cut = Some(rank)
+      }
     }
     rank.select(col("node"), col("r").as("rank_micro"))
   }
@@ -401,7 +411,9 @@ object Graph {
         .filter(col("rn") === 1)
         .join(labels.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), col("label"), lit(r.toLong).as("hops"))
-      labels = labels.unionByName(picked).checkpointed()
+      val next = labels.unionByName(picked).checkpointed()
+      Checkpoints.unpersist(labels) // superseded: `next` is materialized
+      labels = next
     }
     labels
   }
@@ -1066,13 +1078,18 @@ object Graph {
     // the tiny per-round materialization is cheaper than re-filtering
     // node-sized blocks inside the round's dominant join job
     var newDead = deg0.filter(col("d") < k).select(col("node")).checkpointed()
+    var degHeld = deg0 // the checkpoint `degAlive` filters
     var r = 0
     while (r < maxRounds && !newDead.isEmpty) {
       val upd = degAlive.join(loss(newDead), degAlive("node") === col("n"), "left")
         .select(col("node"), (col("d") - coalesce(col("l"), lit(0L))).as("d"))
         .checkpointed()
+      // the round's inputs are superseded once `upd` is materialized
+      Checkpoints.unpersist(degHeld)
+      Checkpoints.unpersist(newDead)
       newDead = upd.filter(col("d") < k).select(col("node")).checkpointed()
       degAlive = upd.filter(col("d") >= k)
+      degHeld = upd
       r += 1
     }
     require(newDead.isEmpty,
@@ -1245,15 +1262,20 @@ object Graph {
     var round = 0
     while (round < maxHops && !frontier.isEmpty) {
       // merge the strict improvements, then relax them one hop outward
-      hops = hops.join(frontier.select(col("node"), col("hop").as("hn")),
+      val merged = hops.join(frontier.select(col("node"), col("hop").as("hn")),
           Seq("node"), "full_outer")
         .select(col("node"), coalesce(least(col("hop"), col("hn")),
           col("hop"), col("hn")).as("hop"))
         .checkpointed()
-      frontier = improvements(
+      val next = improvements(
         broadcast(frontier).join(e, frontier("node") === e("src"))
           .select(col("dst").as("node"), (frontier("hop") + 1).as("cand")),
-        hops)
+        merged)
+      // superseded: both replacements are materialized
+      Checkpoints.unpersist(hops)
+      Checkpoints.unpersist(frontier)
+      hops = merged
+      frontier = next
       round += 1
     }
     hops
@@ -2035,10 +2057,13 @@ object Graph {
     // cuts), here the cut must be per-round.
     var alive = degrees(e).filter(col("d") >= k).select(col("src").as("node"))
       .checkpointed()
-    for (_ <- 1 to rounds)
-      alive = degrees(surviving(e, alive))
+    for (_ <- 1 to rounds) {
+      val next = degrees(surviving(e, alive))
         .filter(col("d") >= k).select(col("src").as("node"))
         .checkpointed()
+      Checkpoints.unpersist(alive) // superseded: `next` is materialized
+      alive = next
+    }
     degrees(surviving(e, alive))
       .select(col("src").as("node"), col("d").as("core_deg"))
   }
@@ -2100,11 +2125,17 @@ object Graph {
     // newDead stays EAGERLY checkpointed (see kCoreDelta's note: the
     // lazy form measured 1.05-1.10x worse interleaved)
     var newDead = deg0.filter(col("d") < k).select(col("node")).checkpointed()
+    var degHeld = deg0 // the checkpoint `degAlive` filters
     var r = 0
     while (r < rounds && !newDead.isEmpty) {
       val upd = minus(degAlive, loss(newDead)).checkpointed()
+      // the round's inputs are superseded once `upd` is materialized;
+      // `fin` reads only the last round's `upd` and `newDead`
+      Checkpoints.unpersist(degHeld)
+      Checkpoints.unpersist(newDead)
       newDead = upd.filter(col("d") < k).select(col("node")).checkpointed()
       degAlive = upd.filter(col("d") >= k)
+      degHeld = upd
       r += 1
     }
     val fin =
@@ -2532,9 +2563,13 @@ object Graph {
       val next = e.join(f, e("src") === f("node"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
+      // one cut per round, of the visited set itself: the frontier is
+      // its newest hop, so no earlier round's blocks stay reachable
+      val grown = visited.unionAll(next.select(col("node"), lit(h).as("hop")))
         .checkpointed()
-      visited = visited.unionAll(next.select(col("node"), lit(h).as("hop")))
-      frontier = next
+      Checkpoints.unpersist(visited)
+      visited = grown
+      frontier = visited.filter(col("hop") === h).select(col("node"))
     }
     visited
   }

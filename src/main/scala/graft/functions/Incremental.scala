@@ -25,8 +25,9 @@ import graft.functions.Checkpoints.Owned
   * maintained via SUPPORT COUNTS — the classic IVM device: keep one
   * counted row per distinct key, derive `count(DISTINCT ...)` as "rows
   * with cnt > 0". The support table is distinct-value-sized (the
-  * intrinsic floor for EXACT distinct maintenance; swap in the HLL
-  * sketch union from [[Sketches]] when approximate is acceptable), and
+  * intrinsic floor for EXACT distinct maintenance; swap in a DataSketches
+  * HLL union, `hll_sketch_agg` + `hll_union_agg` as in
+  * `weekly_active_users_sketch`, when approximate is acceptable), and
   * each delta touches only its own keys.
   *
   * `IncrementalSpec` proves merge(base, delta) is bit-identical to the
@@ -167,7 +168,7 @@ object Incremental {
     *    "rows with cnt > 0". Distinct-content-sized — the intrinsic
     *    state floor for EXACT distinct maintenance (store it as a table;
     *    each delta's merge touches only its own keys). When approximate
-    *    is acceptable, the mergeable HLL union in [[Sketches]] replaces
+    *    is acceptable, a mergeable DataSketches HLL union (`hll_union_agg`) replaces
     *    this table with a fixed-width register set.
     *  - `langs` (source, lang, cnt): same device at |sources × langs|
     *    rows.
@@ -256,8 +257,8 @@ object Incremental {
     * per-day event-count monoid, `users` one counted row per (day,
     * user). DAU derives as "user rows with cnt > 0 per day", exact
     * under both inserts and retractions. State is |days × active users|
-    * — the intrinsic exact-distinct floor; the `Sketches` HLL per-day
-    * union is the fixed-width approximate escape.
+    * — the intrinsic exact-distinct floor; a DataSketches HLL per-day
+    * union (`hll_union_agg`) is the fixed-width approximate escape.
     */
   final case class DauState(days: DataFrame, users: DataFrame)
 
@@ -456,8 +457,8 @@ object Incremental {
     * graduates the digests frame to [[mergeCountsPartitioned]]'s
     * hash-partitioned state table (only the partitions holding the
     * delta's keys rewrite — delta-sized maintenance, IncrementalSpec
-    * proves untouched partitions stay byte-identical), or swaps in the
-    * [[Sketches]] HLL union when approximate uniqueness is acceptable;
+    * proves untouched partitions stay byte-identical), or swaps in a
+    * DataSketches HLL union (`hll_union_agg`) when approximate uniqueness is acceptable;
     * the merge algebra is identical in all three layouts.
     */
   def maintainDatasheet(
@@ -523,8 +524,8 @@ object Incremental {
     * want P in the hundreds of thousands; trade against small-file
     * pressure on the store). When deltas are corpus-sized fractions
     * (millions of keys), every partition is touched regardless and the
-    * versioned full rewrite ([[maintainDatasheet]]) or the [[Sketches]]
-    * HLL union is the better layout — the merge algebra is identical,
+    * versioned full rewrite ([[maintainDatasheet]]) or a DataSketches
+    * HLL union (`hll_union_agg`) is the better layout — the merge algebra is identical,
     * so switching layouts is free.
     *
     * Returns true when the batch applied, false when its marker already

@@ -680,8 +680,8 @@ object LlmQueries {
         .join(hits, Seq("doc_id"), "left_anti")
         .orderBy("doc_id")
     },
-    // Exact corpus heavy hitters (the oracle twin of the Count-Min
-    // library path, `functions.Sketches`): top tokens by frequency.
+    // Exact corpus heavy hitters (the oracle twin of
+    // `top_terms_sketch`): top tokens by frequency.
     "top_terms" -> { (s, d) =>
       Tables.documentsRaw(s, d)
         .select(explode(filter(split(lower(col("text")), "\\s+"),

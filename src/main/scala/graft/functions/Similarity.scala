@@ -27,23 +27,10 @@ import graft.functions.Checkpoints.Owned
   */
 object Similarity {
 
-  /** Sequential-fold dot product (double arrays). */
-  def dot(a: Column, b: Column): Column = dotProduct(a, b)
-
-  /** Sequential-fold L2 norm (double array). */
-  def norm(a: Column): Column = l2Norm(a)
-
   // Cast, not transform(_.cast): Cast on arrays is a native codegen'd
   // element loop; the HOF form is interpreted per element (float->double
   // widening is exact either way).
   private def toDouble(a: Column): Column = a.cast("array<double>")
-
-  /** Cosine similarity (inputs cast to double element-wise). */
-  def cosine(a: Column, b: Column): Column = {
-    val ad = toDouble(a)
-    val bd = toDouble(b)
-    dot(ad, bd) / (norm(ad) * norm(bd))
-  }
 
   private def q4(dotCol: Column, na: Column, nb: Column): Column =
     floor(dotCol / (na * nb) * 10000).cast("long")

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object CoreOps {
 
-  /** Exact integer-scaled value: `floor(x * 10^scale)` as BIGINT.
+  /** Exact integer-scaled values: `floor(x * 1000)` and `floor(x * 100)`
+    * as BIGINT.
     *
     * Double summation is order-sensitive, so cross-engine result comparison
     * (and even Spark-vs-itself across partitionings) of `sum(double)` is
@@ -25,9 +26,6 @@ object CoreOps {
     * integer first makes every aggregate bit-exact and order-independent —
     * the IEEE multiply+floor is identical in any engine.
     */
-  def scaled(c: Column, scale: Int): Column =
-    floor(c * pow(lit(10), lit(scale))).cast("long")
-
   def scaledMilli(c: Column): Column = floor(c * 1000).cast("long")
   def scaledCenti(c: Column): Column = floor(c * 100).cast("long")
 
@@ -402,7 +400,7 @@ object CoreOps {
   // over epoch micros, not a ROWS frame: rows tying on (key, ts) are
   // frame PEERS in both engines, so the output is deterministic under
   // ties by construction. Sum is over [[scaledMilli]]-quantized longs —
-  // bit-exact and order-independent cross-engine (see [[scaled]]).
+  // bit-exact and order-independent cross-engine.
   //
   // Scale: one shuffle on `key`; the frame is evaluated in a single sort
   // pass per partition with a sliding accumulator (Spark's bounded-frame

@@ -21,20 +21,11 @@ object Tables {
     *
     * CAVEAT: the cached relation snapshots the file listing at first
     * access. If a parquet path's contents are regenerated or appended to
-    * within the same JVM, call [[invalidate]] first or the stale listing
-    * is silently served.
+    * under the same session, the stale listing is silently served; a new
+    * session resolves the path afresh.
     */
   private val planCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** Drop cached plans under `dir` (use after rewriting files in place).
-    * Also evicts the normalized-events cache so a regenerated corpus gets a
-    * fresh epoch-unit probe, not the previous encoding's classification.
-    */
-  def invalidate(dir: String): Unit = {
-    planCache.filterInPlace { case ((_, p), _) => !p.startsWith(dir) }
-    eventsCache.filterInPlace { case ((_, p), _) => !p.startsWith(dir) }
-  }
 
   /** Tables whose consumers run crypto-hash-dense narrow pipelines
     * (shingle/minhash/char-trigram/vector math — md5 per element) where
@@ -233,10 +224,6 @@ object Sources {
   /** S1: monitor a directory of text files; one `value: String` row per line. */
   def fileLines(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.format("text").load(dir)
-
-  /** Batch twin of [[fileLines]] for replaying a captured directory. */
-  def fileLinesBatch(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format("text").load(dir)
 
   /** S2: Kafka topic as a stream of string values.
     * Mirrors `WindowingOperations.java:44-60` (bootstrap `localhost:9092`,

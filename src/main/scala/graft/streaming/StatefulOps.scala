@@ -59,108 +59,6 @@ object StatefulOps {
       }
   }
 
-  /** ST1 via Spark 4's `transformWithState` (StatefulProcessor API) —
-    * the successor to `flatMapGroupsWithState` with named state variables
-    * registered in `init`, mirroring the reference's
-    * `ValueStateDescriptor`-in-`open()` shape
-    * (`StatefulOperations.java:92-101`) even more directly.
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`).
-    */
-  class BurstProcessor(thresholdMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, AuditTrail, BurstAlert] {
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TTLConfig, TimeMode, TimerValues, ValueState}
-
-    @transient private var lastDelete: ValueState[Long] = _
-
-    override def init(outputMode: OM, timeMode: TimeMode): Unit =
-      lastDelete = getHandle.getValueState[Long](
-        "lastDelete", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(
-        user: String,
-        rows: Iterator[AuditTrail],
-        timerValues: TimerValues): Iterator[BurstAlert] = {
-      val out = Seq.newBuilder[BurstAlert]
-      var last = if (lastDelete.exists()) Some(lastDelete.get()) else None
-      rows.toSeq.filter(_.operation == "Delete").sortBy(_.timestamp).foreach { e =>
-        last.foreach { prev =>
-          val diff = e.timestamp - prev
-          if (diff < thresholdMs) out += BurstAlert(user, e.timestamp, diff)
-        }
-        last = Some(e.timestamp)
-      }
-      last.foreach(lastDelete.update)
-      out.result().iterator
-    }
-  }
-
-  /** ST1 on the Spark 4 `transformWithState` API (see [[BurstProcessor]]). */
-  def deleteBurstAlertsTws(
-      audits: Dataset[AuditTrail],
-      thresholdMs: Long = 10000L): Dataset[BurstAlert] = {
-    implicit val alertEnc = Encoders.product[BurstAlert]
-    implicit val stringEnc = Encoders.STRING
-    audits
-      .filter((a: AuditTrail) => a.operation == "Delete") // before the shuffle
-      .groupByKey((a: AuditTrail) => a.user)
-      .transformWithState(
-        new BurstProcessor(thresholdMs),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append)
-  }
-
-  /** ST2 on `transformWithState` — same semantics as [[actionDurations]];
-    * the named ValueState mirrors the two `ValueStateDescriptor`s of
-    * `CourseUseCase.java:122-143` as one product state.
-    */
-  class DurationProcessor(loginAction: String, logoutAction: String)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, BrowserEvent, ActionDuration] {
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TTLConfig, TimeMode, TimerValues, ValueState}
-
-    @transient private var sess: ValueState[SessionState] = _
-
-    override def init(outputMode: OM, timeMode: TimeMode): Unit =
-      sess = getHandle.getValueState[SessionState](
-        "sess", Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        user: String,
-        evs: Iterator[BrowserEvent],
-        timerValues: TimerValues): Iterator[ActionDuration] = {
-      val out = Seq.newBuilder[ActionDuration]
-      var st = if (sess.exists()) Some(sess.get()) else None
-      evs.toSeq.sortBy(_.timestamp).foreach { e =>
-        st.foreach { s =>
-          if (e.action != loginAction)
-            out += ActionDuration(user, s.lastAction, e.timestamp - s.lastTs)
-        }
-        st = if (e.action == logoutAction) None
-        else Some(SessionState(e.action, e.timestamp))
-      }
-      st match {
-        case Some(s) => sess.update(s)
-        case None => sess.clear()
-      }
-      out.result().iterator
-    }
-  }
-
-  /** ST2 on the Spark 4 `transformWithState` API (see [[DurationProcessor]]). */
-  def actionDurationsTws(
-      events: Dataset[BrowserEvent],
-      loginAction: String = "Login",
-      logoutAction: String = "Logout"): Dataset[ActionDuration] = {
-    implicit val outEnc = Encoders.product[ActionDuration]
-    implicit val stringEnc = Encoders.STRING
-    events
-      .groupByKey((e: BrowserEvent) => e.user)
-      .transformWithState(
-        new DurationProcessor(loginAction, logoutAction),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append)
-  }
-
   final case class RollingEvent(key: Long, tsUs: Long, id: Long, vMilli: Long)
   final case class RollingItem(id: Long, tsUs: Long, vMilli: Long)
   final case class RollingState(win: Seq[RollingItem], pend: Seq[RollingItem])

@@ -24,7 +24,7 @@ class BenchSpec extends AnyFunSuite {
       warm: Seq[(String, Double)] = canary,
       end: Seq[(String, Double)] = canary,
       skew: Seq[Row] = Nil) =
-    Artifact("/data/sf0.1", "BENCH_FULL.json", queries,
+    Artifact("/data/sf0.1", 4, "BENCH_FULL.json", queries,
       served = Seq(Row("graph_pagerank_served", Seq(0.72, 0.70, 0.71), ok = true),
         Row("search_bm25_served", Seq(0.21, 0.20, 0.22), ok = true)),
       skew = skew,
@@ -123,6 +123,7 @@ class BenchSpec extends AnyFunSuite {
     assert(j.get("run_quality").asText === art.quality)
     assert(j.get("n_queries").asInt === 180)
     assert(j.get("n_errors").asInt === 20)
+    assert(j.get("sf").asText === "/data/sf0.1" && j.get("cores").asInt === 4)
     assert(j.get("value").asDouble === rows.filter(_.ok).map(_.sec).sum +- 0.01)
     val kept = j.get("queries").fieldNames.asScala.toSeq
     val slowest = rows.filter(_.ok).sortBy(-_.sec).map(_.name)
@@ -137,6 +138,7 @@ class BenchSpec extends AnyFunSuite {
     val j = mapper.readTree(line)
     assert(j.get("queries").size > 0)
     assert(j.get("n_errors").asInt === 100)
+    assert(j.get("sf").asText === "/data/sf0.1" && j.get("cores").asInt === 4)
   }
 
   test("full artifact: every ok row of every block publishes its min and all its runs") {
@@ -157,6 +159,7 @@ class BenchSpec extends AnyFunSuite {
     assert(j.get("errors").size === 4)
     Seq("canary", "window_factor", "canary_warm", "canary_end", "canary_drift", "row_anomalies",
       "run_quality", "served_build", "family_build").foreach(f => assert(j.has(f), f))
+    assert(j.get("sf").asText === "/data/sf0.1" && j.get("cores").asInt === 4)
     Seq("window_factor_end", "retimed", "row_reruns").foreach(f => assert(!j.has(f), f))
   }
 

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.model.{AuditTrail, BrowserEvent}
-import graft.sources.Sources
 
 /** CSV codec + fixture expectations from FIXTURES.md §1 (hand-computed from
   * the reference's own sample data).
@@ -11,10 +10,10 @@ import graft.sources.Sources
 class ModelSpec extends SparkSpec {
 
   lazy val audits = AuditTrail.fromLines(
-    Sources.fileLinesBatch(spark, resourcePath("raw_audit_trail")))
+    spark.read.text(resourcePath("raw_audit_trail")))
 
   lazy val browser = BrowserEvent.fromLines(
-    Sources.fileLinesBatch(spark, resourcePath("raw_browser_events")))
+    spark.read.text(resourcePath("raw_browser_events")))
 
   test("audit trail fixture parses 11 rows with quote-strip semantics") {
     assert(audits.count() === 11)

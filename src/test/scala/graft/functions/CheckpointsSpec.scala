@@ -183,6 +183,49 @@ class CheckpointsSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("the iterative graph loops hold a round-independent number of checkpoints") {
+    // a 400-node chain plus a 50-node ring: with k = 2 the chain peels
+    // one node per end per round and the ring is the core, so every
+    // loop below still runs at 8 rounds
+    val chain = (0L until 399L).map(i => (i, i + 1))
+    val ring = (0L until 50L).map(i => (1000L + i, 1000L + (i + 1) % 50))
+    val half = (chain ++ ring).toDF("src", "dst")
+    val sym = half.union(half.select($"dst".as("src"), $"src".as("dst")))
+    val knn = sym.select($"src".as("qid"), $"dst".as("vec_id"), lit(1L).as("rank"))
+    val seeds = Seq((0L, 7L)).toDF("node", "label")
+    // the delta forms peel or relax only what a delta touched, so their
+    // round count is set by the delta: a pendant chain of `r` nodes off
+    // the ring, and a shortcut from the seed to the chain's middle
+    def pendant(r: Int) = (0 until r).map(i => (2000L + i, if (i == 0) 1000L else 1999L + i))
+    val shortcut = Seq((0L, 200L), (200L, 0L)).toDF("src", "dst")
+    val loops: Seq[(String, Int => DataFrame)] = Seq(
+      "kCore" -> (r => Graph.kCore(sym, "src", "dst", k = 2, rounds = r)),
+      "kCoreHalf" -> (r => Graph.kCoreHalf(half, k = 2, rounds = r)),
+      "kCoreDelta" -> { r =>
+        val before = ring.toDF("src", "dst")
+        val old = Graph.kCoreHalf(before, k = 2, rounds = 4)
+        Graph.kCoreDelta(before.union(pendant(r).toDF("src", "dst")), old, k = 2)
+      },
+      "bfsHops" -> (r => Graph.bfsHops(sym, "src", "dst", Seq(0L), maxHops = r)),
+      "bfsHopsDelta" -> { r =>
+        val old = Graph.bfsHops(sym, "src", "dst", Seq(0L), maxHops = r)
+        Graph.bfsHopsDelta(sym.union(shortcut), "src", "dst", old, shortcut, maxHops = r)
+      },
+      "labelPropagation" -> (r => Graph.labelPropagation(knn, seeds, rounds = r)),
+      "pageRank" -> (r => Graph.pageRank(sym, "src", "dst", iterations = r, checkpointEvery = 2)))
+    val sc = spark.sparkContext
+    def heldAfter(f: Int => DataFrame, rounds: Int): Int = Checkpoints.scoped {
+      val before = sc.getPersistentRDDs.size
+      f(rounds).count()
+      sc.getPersistentRDDs.size - before
+    }
+    val grew = loops.flatMap { case (name, f) =>
+      val (at4, at8) = (heldAfter(f, 4), heldAfter(f, 8))
+      if (at8 > at4) Some(s"$name held $at4 at 4 rounds, $at8 at 8") else None
+    }
+    assert(grew.isEmpty, grew.mkString("; "))
+  }
+
   test(".localCheckpoint( appears in src/main only in Checkpoints.scala") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")

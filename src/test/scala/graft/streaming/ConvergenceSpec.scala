@@ -200,12 +200,14 @@ class ConvergenceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  /** Replay the corpus through the ST2 transformWithState twin in
-    * `chunkSize`-event micro-batches; returns the streamed output sorted.
+  /** Replay the corpus through the shipped ST2 operator
+    * (`StatefulOps.actionDurations`, the one streambench and
+    * `ChapterApps` run) in `chunkSize`-event micro-batches; returns the
+    * streamed output sorted.
     */
   private def st2Replay(chunkSize: Int): Seq[(String, String, Long)] = {
     val input = MemoryStream[BrowserEvent]
-    val durations = StatefulOps.actionDurationsTws(
+    val durations = StatefulOps.actionDurations(
       input.toDS(), loginAction = "signup", logoutAction = "error")
     val name = s"conv_st2_$chunkSize"
     val q = durations.writeStream.format("memory").queryName(name)
@@ -223,60 +225,57 @@ class ConvergenceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("ST2 streaming replay (transformWithState) converges to the batch answer") {
+  test("ST2 streaming replay converges to the batch answer") {
+    val batch = graft.SparkEntry.queries("st2_action_durations")(spark, d)
+      .select(col("user_id").cast("string"), col("action"), col("duration_us"))
+      .as[(String, String, Long)].collect().toSeq.sorted
+    assert(batch.nonEmpty)
+    // three chunkings cut users' sessions at DIFFERENT micro-batch
+    // boundaries (700 and 3701 are coprime to every session length in
+    // the corpus, so plenty of sessions split mid-flight: state carries
+    // the open action across the boundary). Convergence must not depend
+    // on where the batch boundary lands.
+    Seq(700, batchSize).foreach { chunk =>
+      assert(st2Replay(chunk) === batch, s"chunk size $chunk diverged from batch")
+    }
+    // the last chunking runs on the RocksDB state store provider, the
+    // candidate replacement for the default HDFS-backed store
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batch = graft.SparkEntry.queries("st2_action_durations")(spark, d)
-        .select(col("user_id").cast("string"), col("action"), col("duration_us"))
-        .as[(String, String, Long)].collect().toSeq.sorted
-      assert(batch.nonEmpty)
-      // three chunkings cut users' sessions at DIFFERENT micro-batch
-      // boundaries (700 and 3701 are coprime to every session length in
-      // the corpus, so plenty of sessions split mid-flight: state carries
-      // the open action across the boundary). Convergence must not depend
-      // on where the batch boundary lands.
-      Seq(700, batchSize, 3701).foreach { chunk =>
-        val streamed = st2Replay(chunk)
-        assert(streamed === batch, s"chunk size $chunk diverged from batch")
-      }
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    try assert(st2Replay(3701) === batch, "chunk size 3701 (RocksDB) diverged from batch")
+    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("ST2 session split across three micro-batches (login/action/logout)") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val input = MemoryStream[BrowserEvent]
+    val q = StatefulOps.actionDurations(input.toDS())
+      .writeStream.format("memory").queryName("conv_st2_split")
+      .outputMode(OutputMode.Append).start()
     try {
-      val input = MemoryStream[BrowserEvent]
-      val q = StatefulOps.actionDurationsTws(input.toDS())
-        .writeStream.format("memory").queryName("conv_st2_split")
-        .outputMode(OutputMode.Append).start()
-      try {
-        // one user's session deliberately cut at every stage boundary:
-        // Login arrives in batch 1, actions in batches 2-3, Logout in 4
-        input.addData(BrowserEvent(1, "u1", "Login", 1000L))
-        q.processAllAvailable()
-        input.addData(BrowserEvent(2, "u1", "browse", 2000L))
-        q.processAllAvailable()
-        input.addData(BrowserEvent(3, "u1", "buy", 3500L))
-        q.processAllAvailable()
-        input.addData(BrowserEvent(4, "u1", "Logout", 5000L))
-        q.processAllAvailable()
-        val got = spark.table("conv_st2_split")
-          .select("user", "action", "durationMs").as[(String, String, Long)]
-          .collect().toSeq
-        // each emission is the PREVIOUS action's duration; state crossed
-        // three batch boundaries to produce them
-        assert(got === Seq(
-          ("u1", "Login", 1000L),
-          ("u1", "browse", 1500L),
-          ("u1", "buy", 1500L)))
-        // after Logout the state is cleared: a fresh action emits nothing
-        input.addData(BrowserEvent(5, "u1", "browse", 9000L))
-        q.processAllAvailable()
-        assert(spark.table("conv_st2_split").count() === 3L)
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      // one user's session deliberately cut at every stage boundary:
+      // Login arrives in batch 1, actions in batches 2-3, Logout in 4
+      input.addData(BrowserEvent(1, "u1", "Login", 1000L))
+      q.processAllAvailable()
+      input.addData(BrowserEvent(2, "u1", "browse", 2000L))
+      q.processAllAvailable()
+      input.addData(BrowserEvent(3, "u1", "buy", 3500L))
+      q.processAllAvailable()
+      input.addData(BrowserEvent(4, "u1", "Logout", 5000L))
+      q.processAllAvailable()
+      val got = spark.table("conv_st2_split")
+        .select("user", "action", "durationMs").as[(String, String, Long)]
+        .collect().toSeq
+      // each emission is the PREVIOUS action's duration; state crossed
+      // three batch boundaries to produce them
+      assert(got === Seq(
+        ("u1", "Login", 1000L),
+        ("u1", "browse", 1500L),
+        ("u1", "buy", 1500L)))
+      // after Logout the state is cleared: a fresh action emits nothing
+      input.addData(BrowserEvent(5, "u1", "browse", 9000L))
+      q.processAllAvailable()
+      assert(spark.table("conv_st2_split").count() === 3L)
+    } finally q.stop()
   }
 
   test("A1/A6 streaming tumbling counts converge to the batch answer") {

@@ -5,7 +5,6 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
 import graft.model.{AuditTrail, BrowserEvent}
-import graft.sources.Sources
 
 /** MemoryStream-driven micro-batch tests for the keyed state machines
   * (ST1/ST2) — asserts cross-batch state retention and in-batch ordering.
@@ -15,7 +14,7 @@ class StatefulOpsSpec extends SparkSpec {
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def fixtureAudits: Seq[AuditTrail] =
-    Sources.fileLinesBatch(spark, resourcePath("raw_audit_trail"))
+    spark.read.text(resourcePath("raw_audit_trail"))
       .collect()
       .map(r => {
         val p = r.getString(0).replace("\"", "").split(",")
@@ -58,32 +57,6 @@ class StatefulOpsSpec extends SparkSpec {
         StatefulOps.BurstAlert("Bob", 2000L, 1000L),
         StatefulOps.BurstAlert("Bob", 3000L, 1000L)))
     } finally q.stop()
-  }
-
-  test("ST2 via transformWithState matches the flatMapGroupsWithState output") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[BrowserEvent]
-      val durations = StatefulOps.actionDurationsTws(input.toDS())
-      val q = durations.writeStream.format("memory").queryName("st2_tws")
-        .outputMode(OutputMode.Append).start()
-      try {
-        input.addData(Seq(
-          BrowserEvent(0, "Tom", "Login", 1000L),
-          BrowserEvent(1, "Tom", "ViewVideo", 3000L)))
-        q.processAllAvailable()
-        input.addData(Seq(
-          BrowserEvent(2, "Tom", "Logout", 6000L),
-          BrowserEvent(3, "Tom", "ViewLink", 7000L)))
-        q.processAllAvailable()
-        val out = spark.table("st2_tws").as[StatefulOps.ActionDuration].collect()
-          .sortBy(_.durationMs)
-        assert(out.toSeq === Seq(
-          StatefulOps.ActionDuration("Tom", "Login", 2000L),
-          StatefulOps.ActionDuration("Tom", "ViewVideo", 3000L)))
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("ST2: login/logout state machine across batches") {

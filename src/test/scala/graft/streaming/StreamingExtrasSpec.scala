@@ -7,14 +7,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
-import graft.model.AuditTrail
 import graft.sinks.Sinks
 import graft.functions.Checkpoints.Owned
 
 final case class DocEv(ts: Timestamp, fp: String, payload: String)
 
-/** Streaming dedup, single-pass fanout sink, and the Spark 4
-  * transformWithState ST1 variant.
+/** Streaming dedup, single-pass fanout sink, and the index and
+  * curation stream wrappers.
   */
 class StreamingExtrasSpec extends SparkSpec {
   import spark.implicits._
@@ -479,29 +478,6 @@ class StreamingExtrasSpec extends SparkSpec {
     val (bHigh, rHigh) = lshParams(0.9, 16)
     assert(rLow < rHigh, "low thresholds need fewer rows per band")
     assert(bLow > bHigh)
-  }
-
-  test("ST1 via transformWithState matches the flatMapGroupsWithState semantics") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[AuditTrail]
-      val alerts = StatefulOps.deleteBurstAlertsTws(input.toDS())
-      val q = alerts.writeStream.format("memory").queryName("tws_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        input.addData(Seq(
-          AuditTrail(0, "Bob", "Customer", "Delete", 1000L, 1, 1),
-          AuditTrail(1, "Bob", "Customer", "Query", 1500L, 1, 1)))
-        q.processAllAvailable()
-        input.addData(Seq(
-          AuditTrail(2, "Bob", "Customer", "Delete", 5000L, 1, 1),   // 4 s after -> alert
-          AuditTrail(3, "Tom", "Customer", "Delete", 6000L, 1, 1)))  // first for Tom
-        q.processAllAvailable()
-        val out = spark.table("tws_out").as[StatefulOps.BurstAlert].collect()
-        assert(out.toSeq === Seq(StatefulOps.BurstAlert("Bob", 5000L, 4000L)))
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("bm25SearchStream serves batch-identical rankings from the index") {
