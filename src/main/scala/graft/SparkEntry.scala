@@ -552,8 +552,8 @@ object SparkEntry {
           unix_micros(col("ts_r")).as("last_purchase_ts_us"))
         .orderBy("user_id", "click_id")
     },
-    // Z-order layout key: the interleaved-bit clustering key
-    // `Lake.writeZOrdered` sorts by — surfaced as a query so the exact
+    // Z-order layout key: the interleaved-bit clustering key of
+    // `Lake.zOrderValue` — surfaced as a query so the exact
     // bit math (span quantization + Morton interleave) is oracle-gated,
     // not just spec'd. Spans derive from the data (1-row min/max agg,
     // eager like the Bloom gate) and the oracle re-derives them with the

@@ -195,45 +195,6 @@ object Curation {
         col("containment_milli"))
   }
 
-  /** Build the bench-set shingle Bloom filter ONCE (an eager batch
-    * aggregate — a benchmark suite is a fixed few MB, so this is cheap
-    * and refreshed on its own cadence). The returned bytes ride any later
-    * plan as a literal: see [[benchHitCount]] and
-    * `StreamingCuration.contaminationGate`.
-    */
-  def benchShingleBloom(
-      bench: DataFrame,
-      textCol: String,
-      n: Int,
-      bloomItems: Long = 1L << 18,
-      bloomBits: Long = 1L << 22): Array[Byte] = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val ex = Dedup.withHashedShingles(bench, textCol, n, "sh")
-      .select(explode(col("sh")).as("g"))
-    val bloomAgg = ColumnBridge.column(
-      new BloomFilterAggregate(ColumnBridge.expression(col("g")),
-        Literal(bloomItems), Literal(bloomBits)).toAggregateExpression())
-    ex.agg(bloomAgg.as("bf")).head().getAs[Array[Byte]](0)
-  }
-
-  /** Per-row count of this text's n-gram shingles that hit the bench
-    * Bloom ([[benchShingleBloom]]) — a NARROW column (bloom as a plan
-    * literal, no join, no shuffle, no state), which is what makes it
-    * usable as a per-micro-batch streaming gate. False positives only
-    * (never false negatives), so a `hits == 0` guarantee is exact.
-    */
-  def benchHitCount(text: Column, bloomBytes: Array[Byte], n: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    size(filter(
-      graft.expressions.TextExpressions.hashedShingles(text, n),
-      g => ColumnBridge.column(BloomFilterMightContain(
-        Literal(bloomBytes, BinaryType), ColumnBridge.expression(g)))))
-  }
-
   /** Deterministic stratified sampling: keep a row iff
     * `hash48(id) mod 1000 < rateMilli(stratum)` — reproducible across
     * engines and runs, no RNG, and exactly mirrorable in SQL. The standard
@@ -338,25 +299,6 @@ object Curation {
       .join(broadcast(inv), Seq("permille"))
       .select(col("doc_id"), col("source"), col("q_milli"),
         col("permille"), col("q_norm_milli"))
-  }
-
-  /** The FROZEN scoring tables of [[quantileNormalizeQuality]] — what a
-    * serving tier ships so a stream can normalize arriving docs against
-    * the training snapshot's distributions
-    * ([[graft.streaming.StreamingCuration.quantileNormAssignStream]]):
-    * `(per-source permille table, permille -> global-score inverse)`.
-    * The per-source table is DENSE over the whole [0, 1000] score
-    * alphabet (sources x 1001 rows — broadcastable at any corpus size),
-    * so an arriving doc whose exact score never occurred in training
-    * still maps to its correct <=-CDF permille instead of missing.
-    */
-  def quantileNormTables(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      srcCol: String): (DataFrame, DataFrame) = {
-    val (_, scdf, inv) = quantileNormTablesWithScores(docs, textCol, idCol, srcCol)
-    (scdf, inv)
   }
 
   private def quantileNormTablesWithScores(
@@ -906,10 +848,7 @@ object Curation {
 
   /** Train-half of [[dsirWeights]]: the frozen target/raw bucket model
     * `(b, ct, cr)` — at most `buckets` rows, broadcastable — plus its
-    * totals via [[dsirModelTotals]]. The serving split (see
-    * `graft.streaming.StreamingCuration.dsirWeightStream`): estimate the
-    * two hashed-trigram distributions ONCE on the batch tier, score
-    * arriving docs with one broadcast lookup per trigram.
+    * totals via [[dsirModelTotals]].
     */
   def dsirTrainModel(
       df: DataFrame,
@@ -934,97 +873,12 @@ object Curation {
     (r.getAs[Long]("tt"), r.getAs[Long]("tr"))
   }
 
-  /** Score-half of [[dsirWeights]]: weight `docs` against a FROZEN model.
-    * Buckets the model never saw count as 0 in both distributions (the
-    * add-one smoothing absorbs them), so out-of-corpus text degrades
-    * gracefully. Totals are Scala Longs ([[TextAnalysis.log2Q10]] is
-    * bit-identical to the SQL form), so the scorer is a single narrow
-    * pass + broadcast join + one per-doc aggregate — no crossJoin, which
-    * is what lets the streaming twin run it as one watermarked agg.
-    * Scoring the training corpus against its own model reproduces
-    * [[dsirWeights]] exactly (spec-gated).
-    */
-  def dsirScoreAgainst(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      model: DataFrame,
-      targetTotal: Long,
-      rawTotal: Long,
-      buckets: Int = 4096): DataFrame = {
-    val l = TextAnalysis.log2Q10Sql _
-    val perDocConst =
-      TextAnalysis.log2Q10(rawTotal + buckets) - TextAnalysis.log2Q10(targetTotal + buckets)
-    val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    TextAnalysis.charTrigrams(base, "__text", "doc_id")
-      .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(buckets)))
-      .join(broadcast(model), Seq("b"), "left")
-      .withColumn("s1", expr(
-        s"${l("(coalesce(ct, 0) + 1)")} - ${l("(coalesce(cr, 0) + 1)")}"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tri"), sum(col("s1")).as("sum_s"))
-      .withColumn("dsir_w_q10",
-        expr(s"cast(sum_s + n_tri * $perDocConst as bigint)"))
-      .select(col("doc_id"), col("n_tri"), col("dsir_w_q10"))
-  }
-
-  /** Frozen-DSIR staleness bundle: the (b, ct, cr) hashed-trigram bucket
-    * model ([[dsirTrainModel]], localCheckpoint-pinned and broadcastable
-    * — at most `buckets` rows), its instance totals, and the frozen doc
-    * count — everything [[dsirModelStalenessReportFrom]] needs without
-    * ever rescanning the frozen corpus.
-    */
-  final case class DsirFrozenModel(
-      model: DataFrame, targetTotal: Long, rawTotal: Long, nDocs: Long)
-
-  /** Train the [[DsirFrozenModel]] bundle on the reference corpus — the
-    * freeze-tier half of the DSIR staleness monitor (the
-    * [[graft.functions.TextAnalysis.nbFreezeStaleness]] pattern: DSIR's
-    * target/raw models are the same trigram count monoid as NB's class
-    * counts, so the frozen artifact is two bounded count columns).
-    */
-  def dsirFreezeStaleness(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      targetPred: Column,
-      buckets: Int = 4096): DsirFrozenModel = {
-    val m = dsirTrainModel(df, textCol, idCol, targetPred, buckets)
-      .checkpointed()
-    val (tt, tr) = dsirModelTotals(m)
-    DsirFrozenModel(m, tt, tr, df.count())
-  }
-
-  /** Persist / load the [[DsirFrozenModel]] bundle — the
-    * [[graft.functions.TextAnalysis.saveNbFrozenModel]] convention, so
-    * the serving tier monitors from disk without the frozen corpus.
-    */
-  def saveDsirFrozenModel(m: DsirFrozenModel, dir: String): Unit = {
-    val spark = m.model.sparkSession
-    m.model.coalesce(1).write.mode("overwrite").parquet(s"$dir/dsir_model")
-    spark.range(1).select(lit(m.targetTotal).as("tt"), lit(m.rawTotal).as("tr"),
-        lit(m.nDocs).as("n_docs"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/dsir_totals")
-  }
-
-  def loadDsirFrozenModel(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): DsirFrozenModel = {
-    val t = spark.read.parquet(s"$dir/dsir_totals").head()
-    DsirFrozenModel(
-      model = spark.read.parquet(s"$dir/dsir_model"),
-      targetTotal = t.getAs[Long]("tt"), rawTotal = t.getAs[Long]("tr"),
-      nDocs = t.getAs[Long]("n_docs"))
-  }
-
-  /** Frozen-DSIR-model staleness monitor, SERVING form — the
-    * importance-weighting twin of
-    * [[graft.functions.TextAnalysis.nbModelStalenessReportFrom]]:
-    * APPENDED-SLICE-sized by construction (one trigram extraction of the
-    * appended docs feeds the appended model, the share-drift comparison,
-    * and both scoring arms; the fresh model is the count-monoid MERGE of
-    * two bounded bucket tables, never a corpus retrain). One
-    * integer-exact row:
+  /** Frozen-DSIR-model staleness monitor: train the (b, ct, cr) bucket
+    * model ([[dsirTrainModel]]) on the `isFrozen` slice, then report
+    * against the rest. The appended side is one trigram extraction that
+    * feeds the appended model, the share-drift comparison, and both
+    * scoring arms; the fresh model is the count-monoid MERGE of two
+    * bounded bucket tables, never a corpus retrain. One integer-exact row:
     *
     *   - `max/mean_share_delta_q6` — per-bucket RAW trigram-mass share
     *     drift, frozen vs appended distribution (the "did the data
@@ -1036,16 +890,22 @@ object Curation {
     *     through [[dsirWeights]]-driven selection;
     *   - `mean_abs_w_gap_q10` — mean absolute weight disagreement.
     *
-    * Scoring both arms reproduces [[dsirScoreAgainst]] term-for-term
-    * (spec-pinned), so the DuckDB oracle replays every integer.
+    * Both arms use the [[dsirWeights]] scoring formula term-for-term, so
+    * the DuckDB oracle replays every integer.
     */
-  def dsirModelStalenessReportFrom(
-      frozen: DsirFrozenModel,
-      appended: DataFrame,
+  def dsirModelStalenessReport(
+      df: DataFrame,
       textCol: String,
       idCol: String,
       targetPred: Column,
+      isFrozen: Column,
       buckets: Int = 4096): DataFrame = Checkpoints.scoped {
+    val frozenDocs = df.filter(isFrozen)
+    val mF = dsirTrainModel(frozenDocs, textCol, idCol, targetPred, buckets)
+      .checkpointed()
+    val (ttF, trF) = dsirModelTotals(mF)
+    val nFrozen = frozenDocs.count()
+    val appended = df.filter(!isFrozen)
     val spark = appended.sparkSession
     val base = appended.select(col(idCol).as("doc_id"),
       col(textCol).as("__text"), targetPred.cast("boolean").as("__tgt"))
@@ -1061,19 +921,18 @@ object Curation {
         sum(col("k")).as("cr"))
       .checkpointed() // bounded (<= buckets rows); merge + drift + totals
     val (ttA, trA) = dsirModelTotals(mA)
-    val mF = frozen.model
     // the fresh model is merge(frozen, appended) — the additive
     // monoid the r14 directive named; two bounded tables, no retrain
     val mN = mF.unionByName(mA).groupBy(col("b"))
       .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-    val (ttN, trN) = (frozen.targetTotal + ttA, frozen.rawTotal + trA)
+    val (ttN, trN) = (ttF + ttA, trF + trA)
     val l = TextAnalysis.log2Q10Sql _
-    val cF = TextAnalysis.log2Q10(frozen.rawTotal + buckets) -
-      TextAnalysis.log2Q10(frozen.targetTotal + buckets)
+    val cF = TextAnalysis.log2Q10(trF + buckets) -
+      TextAnalysis.log2Q10(ttF + buckets)
     val cN = TextAnalysis.log2Q10(trN + buckets) -
       TextAnalysis.log2Q10(ttN + buckets)
     // both arms in ONE pass over the shared per-(doc, bucket) counts
-    // — term-for-term the dsirScoreAgainst formula per arm
+    // — term-for-term the dsirWeights formula per arm, unseen buckets counting 0
     val scored = tdA
       .join(broadcast(mF.select(col("b"),
         col("ct").as("ctf"), col("cr").as("crf"))), Seq("b"), "left")
@@ -1115,7 +974,7 @@ object Curation {
         expr("sum(ad) div count(1)").as("mean_share_delta_q6"))
       .head()
     spark.range(1).select(
-      lit(frozen.nDocs).as("n_frozen"),
+      lit(nFrozen).as("n_frozen"),
       lit(nAppended).as("n_appended"),
       lit(drift.getAs[Long]("max_share_delta_q6")).as("max_share_delta_q6"),
       lit(drift.getAs[Long]("mean_share_delta_q6")).as("mean_share_delta_q6"),
@@ -1124,26 +983,6 @@ object Curation {
       lit(ero.getAs[Long]("n_flips") * 1000L /
         ero.getAs[Long]("n_scored")).as("flip_q3"),
       lit(ero.getAs[Long]("mean_abs_w_gap_q10")).as("mean_abs_w_gap_q10"))
-  }
-
-  /** Self-contained gate form of the DSIR staleness monitor: freeze on
-    * the `isFrozen` slice, report against the rest — one extraction per
-    * slice (the r16 rule), identical row to the serving form by
-    * construction (it IS the serving form over a just-frozen bundle).
-    */
-  def dsirModelStalenessReport(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      targetPred: Column,
-      isFrozen: Column,
-      buckets: Int = 4096): DataFrame = Checkpoints.scoped {
-    val frozen = dsirFreezeStaleness(df.filter(isFrozen), textCol, idCol,
-      targetPred, buckets)
-    // the report row is literal-valued (every field forced by a head()),
-    // so the scope releases the frozen model's checkpoint on return
-    dsirModelStalenessReportFrom(frozen, df.filter(!isFrozen),
-      textCol, idCol, targetPred, buckets)
   }
 
   /** Gopher-style composite quality gate (Rae et al. 2021, Table A1):
@@ -1228,9 +1067,8 @@ object Curation {
     * values); thresholds are a 2-column-per-source broadcast back.
     * Output: (doc_id, source, avg_surprisal_q10, ppl_bucket).
     */
-  /** The shared (doc_id, src, s) per-doc surprisal frame both the batch
-    * buckets and the frozen serving cuts derive from — one definition so
-    * they can never diverge.
+  /** The (doc_id, src, s) per-doc surprisal frame the buckets derive
+    * from.
     */
   private def surprisalFrame(
       docs: DataFrame,
@@ -1281,137 +1119,10 @@ object Curation {
         min(when(col("cum") >= expr("(2 * n) div 3"), col("s"))).as("t2"))
   }
 
-  /** The CCNet tercile cuts as a standalone train-tier artifact:
-    * (src, t1, t2) per source, frozen from a reference corpus so
-    * [[graft.streaming.StreamingCuration.ccnetAssignStream]] can bucket
-    * arriving documents against them (one bounded row per source —
-    * broadcastable at any corpus size). Cuts computed on a corpus equal
-    * the cuts [[ccnetBuckets]] derives internally on the same corpus.
-    */
-  def ccnetThresholds(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      srcCol: String): DataFrame =
-    surprisalTerciles(surprisalFrame(docs, textCol, idCol, srcCol))
-
-  /** Frozen-CCNet staleness bundle: the char-trigram LM counts
-    * ([[graft.functions.TextAnalysis.trigramModel]], bounded by
-    * |charset|^3), their total, and the per-source tercile cuts — the
-    * exact tables `ccnetAssignStream` serves from, so the monitor
-    * watches precisely what the serving tier holds frozen.
-    */
-  final case class CcnetFrozenCuts(
-      lmModel: DataFrame, lmTotal: Long, cuts: DataFrame, nDocs: Long)
-
-  /** Train the [[CcnetFrozenCuts]] bundle on the reference corpus (the
-    * freeze-tier half of [[ccnetCutsStalenessFrom]]).
-    */
-  def ccnetFreezeCuts(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      srcCol: String): CcnetFrozenCuts = Checkpoints.scoped {
-    // ONE trigram extraction feeds BOTH frozen artifacts (r17
-    // optimization round): the LM counts are the per-(doc, trigram)
-    // multiplicities re-aggregated, and the cuts' per-doc surprisal is
-    // the same frame joined back to those counts — the build form paid
-    // two full extractions over the frozen slice (trigramModel +
-    // ccnetThresholds' own lmSurprisalScore), guide §1.2's "don't
-    // compute things twice". Arithmetic is bit-identical: same
-    // multiplicities, same counts, same log2Q10 surprisal
-    // ([[TextAnalysis.surprisalQ10]] with the literal total equals the
-    // 1-row-frame form, the log2Q10/log2Q10Sql parity contract), so the
-    // frozen bundle — and the gate hash — are unchanged.
-    val base = df.select(col(idCol).as("doc_id"),
-      col(textCol).as("__text"), col(srcCol).as("src"))
-    val td = TextAnalysis.charTrigrams(base, "__text", "doc_id",
-      carryCols = Seq("src"))
-      .groupBy(col("doc_id"), col("src"), col("t"))
-      .agg(count(lit(1)).as("k"))
-      .checkpointed()
-    val lm = td.groupBy(col("t")).agg(sum(col("k")).as("cnt"))
-      .checkpointed()
-    val totalRow = lm.agg(sum(col("cnt")).as("t")).head()
-    require(!totalRow.isNullAt(0) && totalRow.getAs[Long]("t") > 0L,
-      "ccnetFreezeCuts: the frozen slice has no trigrams")
-    val total = totalRow.getAs[Long]("t")
-    val sur = td.join(lm, "t")
-      .withColumn("s_q10", TextAnalysis.surprisalQ10("cnt", total))
-      .groupBy(col("doc_id"), col("src"))
-      .agg(sum(col("k")).as("n_tri"),
-        sum(col("k") * col("s_q10")).as("sum_s"))
-      .select(col("doc_id"), col("src"),
-        expr("cast(sum_s div n_tri as bigint)").as("s"))
-    CcnetFrozenCuts(lm, total,
-      surprisalTerciles(sur).checkpointed(), df.count())
-  }
-
-  /** Persist / load the [[CcnetFrozenCuts]] bundle. The LM + cuts tables
-    * match [[CurationArtifacts]]' `lm_model` / `ccnet_cuts` shapes, so a
-    * pipeline already publishing that bundle can monitor from it.
-    */
-  def saveCcnetFrozenCuts(m: CcnetFrozenCuts, dir: String): Unit = {
-    val spark = m.lmModel.sparkSession
-    m.lmModel.coalesce(1).write.mode("overwrite").parquet(s"$dir/lm_model")
-    m.cuts.coalesce(1).write.mode("overwrite").parquet(s"$dir/ccnet_cuts")
-    spark.range(1).select(lit(m.lmTotal).as("total"), lit(m.nDocs).as("n_docs"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/ccnet_meta")
-  }
-
-  def loadCcnetFrozenCuts(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): CcnetFrozenCuts = {
-    val meta = spark.read.parquet(s"$dir/ccnet_meta").head()
-    CcnetFrozenCuts(
-      lmModel = spark.read.parquet(s"$dir/lm_model"),
-      lmTotal = meta.getAs[Long]("total"),
-      cuts = spark.read.parquet(s"$dir/ccnet_cuts"),
-      nDocs = meta.getAs[Long]("n_docs"))
-  }
-
-  /** Frozen-CCNet-cuts staleness monitor, SERVING form — do the frozen
-    * tercile cuts still tercile the ARRIVING data? APPENDED-SLICE-sized
-    * by construction: appended docs are scored under the FROZEN LM (the
-    * `ccnetAssignStream` contract — unseen trigrams count 1, nothing
-    * frozen is rescanned), fresh cuts are the terciles of THAT appended
-    * surprisal distribution, and the actionable signal is the
-    * BUCKET-FLIP rate — the permille of appended docs whose
-    * head/middle/tail verdict differs between the frozen cuts and cuts
-    * fit to the data actually arriving. One integer-exact row per
-    * source: (source, n_appended, t1_frozen, t2_frozen, t1_fresh,
-    * t2_fresh, d_t1_q10, d_t2_q10, n_flips, flip_q3). A source absent
-    * from the frozen cuts buckets as unknown (every doc a flip) — the
-    * re-freeze-to-admit signal, not a silent drop.
-    */
-  def ccnetCutsStalenessFrom(
-      frozen: CcnetFrozenCuts,
-      appended: DataFrame,
-      textCol: String,
-      idCol: String,
-      srcCol: String): DataFrame = {
-    val base = appended.select(col(idCol).as("doc_id"),
-      col(textCol).as("__text"), col(srcCol).as("src"))
-    val sA = TextAnalysis.charTrigrams(base, "__text", "doc_id",
-      carryCols = Seq("src"))
-      .groupBy(col("doc_id"), col("src"), col("t"))
-      .agg(count(lit(1)).as("k"))
-      .join(broadcast(frozen.lmModel), Seq("t"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(1L)))
-      .withColumn("s_q10", TextAnalysis.surprisalQ10("cnt", frozen.lmTotal))
-      .groupBy(col("doc_id"), col("src"))
-      .agg(sum(col("k")).as("n_tri"),
-        sum(col("k") * col("s_q10")).as("sum_s"))
-      .withColumn("s", expr("cast(sum_s div n_tri as bigint)"))
-      .select(col("doc_id"), col("src"), col("s"))
-      .checkpointed() // consumed by the fresh cuts AND both bucketings
-    ccnetCutsTail(sA, frozen.cuts)
-  }
-
-  /** Shared report tail of the two cuts-staleness forms: fresh terciles
-    * of the appended surprisal frame, both bucketings, the per-source
-    * flip row. `sA` must be `(doc_id, src, s)` (checkpointed by the
-    * caller — consumed by the terciles AND the bucketing).
+  /** Report tail of [[ccnetCutsStaleness]]: fresh terciles of the
+    * appended surprisal frame, both bucketings, the per-source flip row.
+    * `sA` must be `(doc_id, src, s)` (checkpointed by the caller —
+    * consumed by the terciles AND the bucketing).
     */
   private def ccnetCutsTail(sA: DataFrame, frozenCuts: DataFrame): DataFrame = {
     val cutsN = surprisalTerciles(sA)
@@ -1440,23 +1151,13 @@ object Curation {
         expr("n_flips * 1000 div n_appended").as("flip_q3"))
   }
 
-  /** Self-contained gate form of the CCNet cuts monitor: freeze on the
-    * `isFrozen` slice, report against the rest (semantically the serving
-    * form over a just-frozen bundle — identical row, spec-pinned).
+  /** CCNet cuts staleness monitor: freeze the LM and the per-source
+    * tercile cuts on the `isFrozen` slice, report against the rest.
     *
-    * r18 (guide §1.2 compute-once): ONE corpus trigram extraction feeds
-    * BOTH slices — the per-(doc, src, frozen-flag, trigram)
-    * multiplicities collapse to the frozen LM, the frozen per-doc
-    * surprisal (and its tercile cuts), and the appended per-doc
-    * surprisal under that LM. Composing `ccnetFreezeCuts` +
-    * `ccnetCutsStalenessFrom` gives the same row but pays two SEQUENTIAL
-    * extraction chains (frozen 2/3, then appended 1/3, each a full
-    * barrier pipeline); the arithmetic here is bit-identical — same
-    * per-slice multiplicities, same literal-total surprisalQ10, same
-    * tercile and flip algebra (the oracle row rides unchanged). The
-    * serving tier keeps the From form (appended-slice-sized); this form
-    * exists for the one-shot gate, where freeze + report always run
-    * together.
+    * ONE corpus trigram extraction feeds BOTH slices — the per-(doc, src,
+    * frozen-flag, trigram) multiplicities collapse to the frozen LM, the
+    * frozen per-doc surprisal (and its tercile cuts), and the appended
+    * per-doc surprisal under that LM.
     */
   def ccnetCutsStaleness(
       df: DataFrame,
@@ -1719,9 +1420,8 @@ object Curation {
     * publishes with every snapshot (doc/token volume, exact-dup rate via
     * distinct content digests, integer quality mass, language spread).
     * One partial-aggregating groupBy; the two count-distincts expand
-    * rows 3x map-side but stay fully distributed. Shared by the
-    * `corpus_datasheet` gate query, the streaming datasheet twin's batch
-    * anchor, and the [[CurationArtifacts]] bundle.
+    * rows 3x map-side but stay fully distributed. Used by the
+    * `corpus_datasheet` gate query.
     */
   def datasheet(
       docs: DataFrame,
@@ -1739,9 +1439,9 @@ object Curation {
     * near-dup cluster keep the HIGHEST-quality member (tie-break min id);
     * singletons are their own cluster. One row_number window PARTITIONED
     * BY cluster_id — partitions are dup-group-sized, never global.
-    * Shared by the `dedup_keep_best` gate query and the
-    * [[CurationArtifacts]] bundle; feed it [[connectedComponents]] or an
-    * incrementally [[refreshClusters]]-maintained state.
+    * Used by the `dedup_keep_best` gate query; feed it
+    * [[connectedComponents]] or an incrementally
+    * [[refreshClusters]]-maintained state.
     */
   def keepBestFromClusters(
       docs: DataFrame,

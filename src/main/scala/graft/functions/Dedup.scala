@@ -988,13 +988,6 @@ object Dedup {
       .drop("__mb")
   }
 
-  /** 60-bit SimHash over whitespace tokens (60 bits so every intermediate
-    * stays positive in signed 64-bit math in any engine). Bit j of the
-    * fingerprint is 1 iff the sum over tokens of (bit j of h48/60(token)
-    * ? +1 : -1) is positive.
-    */
-  def simhash60(text: Column): Column = simhash60FromHashes(tokenHashes60(text))
-
   /** 60-bit portable token hashes (first 15 hex digits of md5). Compute
     * this once into a column, then fold with [[simhash60FromHashes]] —
     * avoids re-hashing the token list for every fingerprint bit.
@@ -1054,7 +1047,7 @@ object Dedup {
 
   /** Per-token 60-bit hashes for fingerprint half `half`: half 0 is the
     * unsalted [[tokenHashes60]] stream (so half 0 of the wide print IS
-    * [[simhash60]]); half i >= 1 salts each token with `#i` before
+    * the 60-bit SimHash); half i >= 1 salts each token with `#i` before
     * hashing, giving an independent 60-bit draw per half.
     */
   private def saltedTokenHashes60(toks: Column, half: Int): Column =
@@ -1071,24 +1064,6 @@ object Dedup {
     array((0 until halves).map(h =>
       simhash60FromHashes(saltedTokenHashes60(toks, h))): _*)
 
-  /** Width chosen so [[simhashPairsWide]]'s candidate volume stays linear
-    * at block size `n`: the smallest `halves` whose band width
-    * (`60 / ceil((maxHamming+1) / halves)` bits) is >= log2(n) + 5 — the
-    * same rule the sign-LSH near-dup path applies (`rowsPerBand ~ log2 n`).
-    * With band space >= 32 * n, a random pair collides on some band with
-    * probability <= bands * n / 2^(width) = O(bands / 32), so expected
-    * random candidates are O(n) and the measured cand/item stays flat
-    * (SCALING.md §candidate-volume). Caps at 11 halves (660 bits, 60-bit
-    * bands) — enough for blocks up to ~2^55 documents.
-    */
-  def simhashHalvesFor(n: Long, maxHamming: Int = 10): Int = {
-    val target = math.log(math.max(n, 2L).toDouble) / math.log(2.0) + 5.0
-    (1 to 11).find { h =>
-      val bandsPerHalf = ((maxHamming + 1) + h - 1) / h
-      h == 11 || 60.0 / bandsPerHalf >= target
-    }.get
-  }
-
   /** Scale-safe SimHash near-dup pairs over a WIDE fingerprint
     * (`60 * halves` bits, [[simhashWideFromTokens]]) — the fix for the
     * fixed-width banding trap of [[simhashPairs]].
@@ -1101,8 +1076,7 @@ object Dedup {
     * the sign-LSH path uses: keep the absolute hamming budget fixed and
     * WIDEN the fingerprint, so each of the `maxHamming + 1` pigeonhole
     * bands carries ~`60 * halves / (maxHamming + 1)` bits and random
-    * band collisions die off as 2^-width. [[simhashHalvesFor]] picks the
-    * width for a block size; at `halves = 6` (360-bit print, 30-bit
+    * band collisions die off as 2^-width. At `halves = 6` (360-bit print, 30-bit
     * bands) random collisions are ~2^-26 per band per pair.
     *
     * Banding: each 60-bit half is tiled by `ceil((maxHamming+1)/halves)`

@@ -150,51 +150,9 @@ object Graph {
     rank.select(col("node"), col("r").as("rank_micro"))
   }
 
-  /** Convergence-driven PageRank with WARM START — the serving form of
-    * [[pageRank]]/[[pageRankWeighted]] that closes the loop r14's
-    * maintained edge table opened: when [[maintainCopurchaseWeights]]
-    * folds an order delta into the stored graph, the next rank snapshot
-    * does not need to start from uniform — it starts from the PREVIOUS
-    * snapshot's ranks (`init`) and iterates the same integer fixed-point
-    * map only until the largest per-node move is <= `tolMicro`. A small
-    * delta perturbs the fixed point slightly, so the warm path converges
-    * in a fraction of the cold rounds (measured at 1M nodes; SCALING.md
-    * has the row).
-    *
-    * Returns (ranks, roundsRun). Unlike the fixed-`iterations` gate
-    * forms, each round here pays a MATERIALIZATION (localCheckpoint +
-    * one max-abs-move aggregate) — the residual cannot be known without
-    * executing the round, so the linear-lineage trick does not apply.
-    * That is the price of adaptivity; the win is the rounds you skip.
-    *
-    * Semantics per round are EXACTLY [[pageRank]]'s (or
-    * [[pageRankWeighted]]'s when `weightCol` is set) — same floor-div
-    * integer recurrence, so a cold run (`init = None`) that happens to
-    * use k rounds lands bit-identically on `pageRank(..., iterations=k)`
-    * (spec-pinned). Two runs converged under the same `tolMicro` from
-    * different starts agree only within the tolerance band, not
-    * bit-for-bit — the documented serving trade-off (the gate's
-    * hash-compared queries keep the fixed-round forms).
-    *
-    * Warm-start bookkeeping: source nodes ABSENT from `init` (born by
-    * the delta) enter at the cold initial 10^6 so their out-mass is not
-    * silently zero in round 1; `init` rows whose node lost all edges
-    * stop contributing (they vanish from the degree frame) and drop
-    * from the output, matching the cold form's node set.
-    */
-  /** Result of [[pageRankUntil]]. `converged = false` means `maxRounds`
-    * was exhausted with the residual still above tol — `ranks` is the
-    * last iterate, NOT a fixed point; a serving loop must treat it as
-    * truncated (re-run with a larger budget or publish the residual),
-    * not as a converged snapshot.
-    */
-  final case class PageRankRun(ranks: DataFrame, rounds: Int, converged: Boolean)
-
   /** One synchronous weighted-PageRank round over an edge list carrying
-    * (src, dst, w) and a degree frame (src, tw) — THE shared recurrence
-    * body of [[pageRankWeighted]] and [[pageRankUntil]], so their
-    * spec-pinned bit-identity is structural (one body), not maintained
-    * by parallel edits. [[pageRank]] keeps its specialized w-free body
+    * (src, dst, w) and a degree frame (src, tw) — the recurrence body of
+    * [[pageRankWeighted]]. [[pageRank]] keeps its specialized w-free body
     * (`r div outd` — the most-benched gate plan, value-identical to
     * this with w = 1).
     */
@@ -211,65 +169,6 @@ object Graph {
       .select(col("dst").as("node"), expr("(r * w) div tw").as("c"))
       .groupBy(col("node"))
       .agg(expr(s"${base}L + ($dampMilli * sum(c)) div 1000").as("r"))
-  }
-
-  def pageRankUntil(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      tolMicro: Long,
-      maxRounds: Int = 50,
-      init: Option[DataFrame] = None,
-      weightCol: Option[String] = None,
-      dampMilli: Int = 850,
-      broadcastRanks: Boolean = true,
-      checkpointEdges: Boolean = true): PageRankRun = Checkpoints.scoped {
-    require(tolMicro >= 0 && maxRounds >= 1 && dampMilli >= 0 && dampMilli <= 1000)
-    val e0 = weightCol match {
-      case Some(w) => edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(w).cast("long").as("w"))
-      case None => edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        lit(1L).as("w"))
-    }
-    val e = if (checkpointEdges) e0.checkpointed() else e0
-    val deg = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
-      .checkpointed()
-    val base = (1000L - dampMilli) * 1000L
-    var rank = init match {
-      case Some(prev) =>
-        // left join from the CURRENT source set: delta-born nodes get
-        // the cold initial value, stale init rows drop out
-        deg.select(col("src").as("node"))
-          .join(prev.select(col("node"), col("rank_micro").as("r")), Seq("node"), "left")
-          .select(col("node"), coalesce(col("r"), lit(1000000L)).as("r"))
-          .checkpointed()
-      case None => deg.select(col("src").as("node"), lit(1000000L).as("r"))
-        .checkpointed()
-    }
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = weightedRound(e, deg, rank, base, dampMilli, broadcastRanks)
-        .checkpointed()
-      // nodes with in-edges that never held a rank row yet (first round
-      // of a warm start on a delta-born sink) count their full entry as
-      // the move — one extra round settles them
-      val residRow = next.as("n")
-        .join(rank.as("o"), col("n.node") === col("o.node"), "left")
-        .agg(max(abs(col("n.r") - coalesce(col("o.r"), lit(1000000L)))))
-        .head()
-      // null max = empty rank frame (edgeless input): converged trivially
-      val resid = if (residRow.isNullAt(0)) 0L else residRow.getLong(0)
-      rounds += 1
-      converged = resid <= tolMicro
-      // superseded round frame: the residual head() was its last
-      // consumer and `next` is materialized (r17 fourth review)
-      Checkpoints.unpersist(rank)
-      rank = next
-    }
-    // the returned frame reads only the final rank checkpoint
-    PageRankRun(
-      rank.select(col("node"), col("r").as("rank_micro")), rounds, converged)
   }
 
   /** Personalized PageRank: the teleport mass lands ONLY on `seeds`
@@ -473,10 +372,8 @@ object Graph {
     labels
   }
 
-  final case class LpaRun(labels: DataFrame, rounds: Int, converged: Boolean)
-
   /** The shared per-round LPA vote of [[communityLabels]] /
-    * [[communityLabelsUntil]] / [[communityLabelsDelta]]: majority label
+    * [[communityLabelsDelta]]: majority label
     * of the neighbors (count desc, min label), one edge-vs-label join +
     * a map-side-combinable max(struct) argmax.
     */
@@ -488,70 +385,6 @@ object Graph {
       .groupBy(col("src"))
       .agg(max(struct(col("n"), (-col("label")).as("neg"))).as("b"))
       .select(col("src").as("node"), (-col("b.neg")).as("label"))
-
-  /** Convergence-driven / WARM-START [[communityLabels]] — the LPA
-    * member of the `*Until` serving family ([[pageRankUntil]],
-    * [[hitsUntil]]): the per-round vote is IDENTICAL (a cold run of k
-    * rounds is BIT-identical to `communityLabels(_, k)`, spec-pinned —
-    * an early label fixpoint makes the remaining rounds the identity
-    * map, so convergence can only ever match the fixed-round form), and
-    * `init` seeds labels from a previous run so a maintained-graph
-    * refresh re-votes from the old assignment instead of from
-    * one-label-per-node — rounds paid scale with how far the delta
-    * moved the labels.
-    *
-    * Labels are DISCRETE: `converged = true` means a genuine fixpoint
-    * of the synchronous label map (one more round changes nothing — the
-    * tol-validity analog), but synchronous LPA is not guaranteed to
-    * converge at all (2-cycles oscillate forever) — `maxRounds` is the
-    * honest cap and the flag reports which case happened. A warm run's
-    * fixpoint is a VALID stable assignment reachable from the
-    * maintained one; it need not be bit-equal to a cold run's
-    * fixed-round labels (label propagation is path-dependent — the
-    * discrete analog of pageRankUntil's "within the contraction band").
-    * For the EXACT fixed-round refresh, use [[communityLabelsDelta]].
-    *
-    * `init` rule as everywhere in the family: delta-born nodes enter at
-    * the cold value (their own id), stale init rows drop out.
-    */
-  def communityLabelsUntil(
-      edges: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxRounds: Int,
-      init: Option[DataFrame] = None,
-      assumeSymmetric: Boolean = false,
-      checkpointEdges: Boolean = true): LpaRun = Checkpoints.scoped {
-    require(maxRounds >= 1, "communityLabelsUntil needs at least one round")
-    val sym0 =
-      if (assumeSymmetric) edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      else edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct()
-    val sym = if (checkpointEdges) sym0.checkpointed() else sym0
-    val nodes = sym.select(col("src").as("node")).distinct().checkpointed()
-    var labels = (init match {
-      case Some(prev) =>
-        nodes
-          .join(prev.select(col("node"), col("label").as("l0")), Seq("node"), "left")
-          .select(col("node"), coalesce(col("l0"), col("node")).as("label"))
-      case None => nodes.withColumn("label", col("node"))
-    }).checkpointed()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = lpaVote(sym, labels).checkpointed()
-      converged = next.as("n")
-        .join(labels.as("o"), col("n.node") === col("o.node"))
-        .filter(col("n.label") =!= col("o.label"))
-        .isEmpty
-      rounds += 1
-      Checkpoints.unpersist(labels) // superseded round frame (the
-      labels = next      // convergence check above was its last consumer)
-    }
-    // the returned labels are a self-contained checkpoint
-    LpaRun(labels, rounds, converged)
-  }
 
   /** EXACT incremental refresh of the FIXED-ROUND [[communityLabels]]
     * under edge INSERTIONS — the maintenance story for the one
@@ -1110,53 +943,6 @@ object Graph {
     * fact, never a correctness one.
     */
   final case class Routed(result: DataFrame, route: String)
-
-  /** Auto-dispatched k-core refresh — the r15 engagement rule
-    * (SCALING.md "decremental recompute pricing") promoted from prose to
-    * a router: [[kCoreDelta]] LOSES ~10x to a shallow cold peel (its
-    * fixed full-edge passes dwarf a 1-2-round early exit) and wins only
-    * in the cascade-deep regime (many peel rounds), so the caller should
-    * not have to read SCALING to choose. The probe is ONE degree
-    * aggregate over the post-insert graph — the same pass the cold
-    * peel's first round pays, so a cold route wastes nothing, and its
-    * cost is priced in the spec's plan note: nodes whose degree sits in
-    * `[k, k + cascadeMargin)` are the cascade fuel (each is one lost
-    * neighbor away from peeling), and a graph where fewer than
-    * `cascadeDeepFraction` of nodes are fuel early-exits its cold peel.
-    * Falls back cold when the old core is empty (the delta path's
-    * restricted peel would just re-run the full peel with extra joins)
-    * or not converged (kCoreDelta's immortality precondition). Inherits
-    * [[kCoreDelta]]'s insert-only contract on the delta route.
-    */
-  def kCoreRefreshAuto(
-      halfAfter: DataFrame,
-      oldCore: DataFrame,
-      k: Int,
-      rounds: Int = 64,
-      cascadeMargin: Int = 2,
-      cascadeDeepFraction: Double = 0.05): Routed = {
-    require(k >= 1 && rounds >= 1 && cascadeMargin >= 1)
-    // no checkpoint here: the probe consumes the frame once (one
-    // aggregate scan) and BOTH arms eagerly pin their own edge frame
-    // internally — pinning it here too would just materialize the edge
-    // set twice per refresh (r16 self-review)
-    val half = halfAfter.select(col("src"), col("dst"))
-    val s = half.select(explode(array(col("src"), col("dst"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("d") >= k && col("d") < k + cascadeMargin, lit(1L))
-          .otherwise(lit(0L))).as("at_risk"))
-      .head()
-    val n = s.getAs[Long]("n")
-    val atRisk = s.getAs[Long]("at_risk")
-    val oldMin = oldCore.agg(min(col("core_deg"))).head()
-    val oldConverged = !oldMin.isNullAt(0) && oldMin.getLong(0) >= k
-    val deep = n > 0 && atRisk.toDouble / n >= cascadeDeepFraction
-    if (deep && oldConverged)
-      Routed(kCoreDelta(half, oldCore, k, maxRounds = rounds), "delta")
-    else
-      Routed(kCoreHalf(half, k, rounds), "cold")
-  }
 
   /** Auto-dispatched fixed-round LPA refresh — the r15 cone-refresh
     * engagement rule ("2k-ball small relative to the corpus": 1.3x win
@@ -2244,7 +2030,7 @@ object Graph {
     * wrong. `verifyEdgeSets = true` adds a debug count-equality guard
     * (two extra passes over the edge tables; leave off in production).
     */
-  /** The shared max-rescale of [[hits]] / [[hitsUntil]] — one broadcast
+  /** The max-rescale of [[hits]] — one broadcast
     * 1-row aggregate; input must be cheap to consume twice (checkpointed
     * or a thin projection of a checkpoint).
     */
@@ -2318,154 +2104,6 @@ object Graph {
       .select(col("node"),
         coalesce(col("hub_m"), lit(0L)).as("hub_m"),
         coalesce(col("auth_m"), lit(0L)).as("auth_m"))
-  }
-
-  final case class HitsRun(scores: DataFrame, rounds: Int, converged: Boolean)
-
-  /** Convergence-driven / WARM-START [[hits]] — the fixed-point serving
-    * twin that [[pageRankUntil]] is for PageRank: the per-round
-    * recurrence is IDENTICAL (same rawA/rawH sums, same DECIMAL-widened
-    * max-rescale — a cold run of k rounds is BIT-identical to
-    * `hits(iterations = k)`, spec-pinned), but rounds run until the
-    * largest per-node move of BOTH rescaled frames is <= `tolMicro`,
-    * and `init` seeds the hub frame from a previous run's scores so a
-    * maintained-graph refresh re-ranks from the old fixed point instead
-    * of from uniform — rounds paid scale with how far the delta moved
-    * the fixed point, not with the cold mixing time (SCALING.md prices
-    * it; GraphOpsSpec pins tol-validity: one more
-    * round from the converged answer moves nothing beyond tol).
-    *
-    * `init` is a previous [[hits]]/[[hitsUntil]] scores frame
-    * (node, hub_m, auth_m): hub warm-seeds from `hub_m` via a left join
-    * from the CURRENT source set (delta-born nodes enter at the cold
-    * 10^6, stale init rows drop out — the [[pageRankUntil]] rule);
-    * `auth_m` serves only as round 1's residual baseline, because auth
-    * is re-derived from hub inside every round. Deltas may DELETE edges:
-    * a node that lost its last out-/in-edge falls to served-0, and that
-    * move counts against `tolMicro` via the exit residual (round 1
-    * checks the full previously-served key set — r15 ADVICE), so a warm
-    * run cannot declare converged past a drop larger than the tolerance.
-    *
-    * Same `edgesByDst` cluster posture as [[hits]] (the edge set stored
-    * twice, each half-step riding its own bucketing).
-    */
-  def hitsUntil(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      tolMicro: Long,
-      maxRounds: Int = 50,
-      init: Option[DataFrame] = None,
-      broadcastScores: Boolean = true,
-      checkpointEdges: Boolean = true,
-      edgesByDst: Option[DataFrame] = None): HitsRun = Checkpoints.scoped {
-    require(tolMicro >= 0 && maxRounds >= 1)
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastScores) broadcast(df) else df
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.checkpointed() else e0
-    val eD = edgesByDst
-      .map(_.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-      .getOrElse(e)
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node")))
-      .distinct().checkpointed()
-    var hub = init match {
-      case Some(prev) =>
-        nodes
-          .join(prev.select(col("node"), col("hub_m").as("h0")), Seq("node"), "left")
-          .select(col("node"), coalesce(col("h0"), lit(1000000L)).as("s"))
-          .checkpointed()
-      case None => nodes.select(col("node"), lit(1000000L).as("s"))
-    }
-    // round 1's hub EXIT baseline: the previously SERVED hub frame (its
-    // key set includes nodes the delta removed — which `hub` above, being
-    // restricted to the new graph's nodes, cannot see; new nodes are
-    // absent, so they can never register a spurious exit). A cold run
-    // has none: within one graph the scored key set never shrinks.
-    var hubServed: Option[DataFrame] =
-      init.map(p => p.select(col("node"), col("hub_m").as("s")).checkpointed())
-    // round 1's auth residual baseline; a cold start has none (auth
-    // first exists after round 1), so a cold run can never converge in
-    // round 1 — which preserves cold-k bit-identity (scores are the
-    // round's scores either way)
-    var prevAuth: Option[DataFrame] =
-      init.map(p => p.select(col("node"), col("auth_m").as("s")).checkpointed())
-    var auth: DataFrame = null
-    var rounds = 0
-    var converged = false
-    // max |next - old| over next's keys PLUS exits from the served frame;
-    // a key newly entering counts its full value as the move (coalesce vs
-    // the cold initial), the pageRankUntil convention, and a key DROPPING
-    // OUT of the served frame (a warm refresh where a node lost its last
-    // out-/in-edge — init graphs are not restricted to insert-only
-    // deltas) counts its old score: its served value falls to 0 via the
-    // final coalesce, and without the exit term a warm run could declare
-    // converged at a tolerance the dropped node violates (r15 ADVICE).
-    // Cold runs are unaffected: between cold rounds the scored key set
-    // never shrinks, and oldExit is None in round 1. null max = empty.
-    def resid(next: DataFrame, oldEnter: DataFrame,
-        oldExit: Option[DataFrame], entry: Long): Long = {
-      val r = next.as("n")
-        .join(oldEnter.as("o"), col("n.node") === col("o.node"), "left")
-        .agg(max(abs(col("n.s") - coalesce(col("o.s"), lit(entry)))))
-        .head()
-      val enterMove = if (r.isNullAt(0)) 0L else r.getLong(0)
-      val exitMove = oldExit.map { o =>
-        val x = o.join(next, Seq("node"), "left_anti")
-          .agg(max(abs(col("s")))).head()
-        if (x.isNullAt(0)) 0L else x.getLong(0)
-      }.getOrElse(0L)
-      math.max(enterMove, exitMove)
-    }
-    while (!converged && rounds < maxRounds) {
-      val rawA = e.join(
-          hint(hub.select(col("node").as("src"), col("s").as("h"))), "src")
-        .groupBy(col("dst")).agg(sum(col("h")).as("ra"))
-        .checkpointed() // consumed by the hub chain AND the auth rescale
-      val rawH = eD.join(
-          hint(rawA.select(col("dst"), col("ra").as("a"))), "dst")
-        .groupBy(col("src")).agg(sum(col("a")).as("rh"))
-        .checkpointed()
-      val nextHub = rescaledScores(rawH, "src", "rh").checkpointed()
-      val nextAuth = rescaledScores(rawA, "dst", "ra").checkpointed()
-      // entry baselines differ per frame: a key missing from the old hub
-      // held the cold initial 10^6, but a key missing from the old AUTH
-      // frame SERVED 0 (the final coalesce) — a delta-born node swinging
-      // to top authority must count its full move, not |10^6 - new|
-      // exits can only fire in (warm) round 1: from round 2 on, old and
-      // next are consecutive rounds over the SAME graph, whose scored
-      // key sets never shrink — skip the anti-join actions there
-      val move = math.max(
-        resid(nextHub, hub, hubServed, 1000000L),
-        prevAuth.map(pa =>
-          resid(nextAuth, pa, if (rounds == 0) Some(pa) else None, 0L))
-          .getOrElse(Long.MaxValue))
-      rounds += 1
-      converged = move <= tolMicro
-      // every frame superseded by this round is fully consumed (the
-      // residual head() and the next frames' checkpoints are eager). The
-      // COLD round-1 hub is a computed column over `nodes`, which the
-      // strict matcher leaves alone (the final join needs `nodes`).
-      Checkpoints.unpersist(rawA)
-      Checkpoints.unpersist(rawH)
-      Checkpoints.unpersist(hub)
-      prevAuth.foreach(Checkpoints.unpersist)
-      hub = nextHub
-      hubServed.foreach(Checkpoints.unpersist)
-      hubServed = None
-      auth = nextAuth
-      prevAuth = Some(nextAuth)
-    }
-    // the final join reads nodes/hub/auth alone: the scope releases e
-    HitsRun(
-      nodes
-        .join(hub.select(col("node"), col("s").as("hub_m")), Seq("node"), "left")
-        .join(auth.select(col("node"), col("s").as("auth_m")), Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("hub_m"), lit(0L)).as("hub_m"),
-          coalesce(col("auth_m"), lit(0L)).as("auth_m")),
-      rounds, converged)
   }
 
   /** Deterministic random-walk sampling (the DeepWalk/node2vec corpus

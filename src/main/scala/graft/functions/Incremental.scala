@@ -16,10 +16,7 @@ import graft.functions.Checkpoints.Owned
   * same algebra Spark's own partial aggregates exploit map-side, lifted
   * to a STORED summary table. Maintenance cost is sized by the delta
   * (one scan of the new rows + a merge on |keys| rows), never the lake.
-  * Deletions/retractions follow the same algebra with NEGATED counts —
-  * [[negateDatasheetState]] composes with [[graft.sinks.Lake.deleteByIds]]
-  * so a COW delete downdates the maintained view without a rescan
-  * (IncrementalSpec's retraction case).
+  * Deletions/retractions follow the same algebra with NEGATED counts.
   *
   * Non-monoid aggregates (the datasheet's exact distinct counts) are
   * maintained via SUPPORT COUNTS — the classic IVM device: keep one
@@ -173,9 +170,9 @@ object Incremental {
     *  - `langs` (source, lang, cnt): same device at |sources × langs|
     *    rows.
     *
-    * Insertions merge with positive counts; retractions merge the
-    * DELETED rows' state through [[negateDatasheetState]] — support
-    * counts make deletion exact (a digest's count drops to 0 only when
+    * Insertions merge with positive counts; retractions would merge the
+    * DELETED rows' state with negated counts — support counts make
+    * deletion exact (a digest's count drops to 0 only when
     * its last copy dies), which is what a scalar distinct-count summary
     * can never do.
     */
@@ -221,19 +218,6 @@ object Incremental {
           col("source"), col("lang"), col("cnt")))
         .groupBy(col("source"), col("lang")).agg(sum(col("cnt")).as("cnt"))
         .filter(col("cnt") =!= 0))
-
-  /** The retraction form: the state of the DELETED rows with every count
-    * and sum negated — merge it to downdate the maintained view after a
-    * [[graft.sinks.Lake.deleteByIds]] copy-on-write delete, no rescan of
-    * the surviving corpus.
-    */
-  def negateDatasheetState(s: DatasheetState): DatasheetState = DatasheetState(
-    scalars = s.scalars.select(col("source"),
-      (-col("n_docs")).as("n_docs"),
-      (-col("n_tokens")).as("n_tokens"),
-      (-col("sum_quality_milli")).as("sum_quality_milli")),
-    digests = s.digests.select(col("source"), col("digest"), (-col("cnt")).as("cnt")),
-    langs = s.langs.select(col("source"), col("lang"), (-col("cnt")).as("cnt")))
 
   /** Derive the exact [[Curation.datasheet]] frame from a maintained
     * state: distinct counts are support-row counts per source (cnt > 0
@@ -285,11 +269,6 @@ object Incremental {
         col("day_start"), col("user_id"), col("cnt")))
       .groupBy(col("day_start"), col("user_id")).agg(sum(col("cnt")).as("cnt"))
       .filter(col("cnt") =!= 0))
-
-  /** Retraction form: negated counts for a deleted event slice. */
-  def negateDauState(s: DauState): DauState = DauState(
-    days = s.days.select(col("day_start"), (-col("n")).as("n")),
-    users = s.users.select(col("day_start"), col("user_id"), (-col("cnt")).as("cnt")))
 
   /** The exact (day_start, dau, n) dashboard from a maintained state. */
   def dauFromState(s: DauState): DataFrame = {
@@ -351,7 +330,7 @@ object Incremental {
     * AGGREGATE state without ever re-materializing the view. Each state
     * row carries its integer `sumCols` partials plus a support count
     * `n` (rows of the view feeding the key), so retractions are exact:
-    * merge the deleted view slice's [[negateJoinAggState]] and a key
+    * merge the deleted view slice's state with negated counts and a key
     * vanishes precisely when its last view row dies. The
     * `join_agg_incremental` gate row lands the merged base+delta state
     * on the PLAIN full join+aggregate oracle hash.
@@ -381,61 +360,6 @@ object Incremental {
       .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
       .filter(col("n") =!= 0)
   }
-
-  /** Retraction form: the state of a DELETED view slice with the support
-    * count and every sum negated — merge it to downdate the maintained
-    * aggregate after deleting rows from a base side (the deleted view
-    * slice is `deletedA ⋈ B` — one delta-sized join, never a rescan).
-    */
-  def negateJoinAggState(
-      s: DataFrame, keys: Seq[String], sumCols: Seq[String]): DataFrame =
-    s.select(keys.map(col) ++ sumCols.map(c => (-col(c)).as(c)) :+
-      (-col("n")).as("n"): _*)
-
-  /** Streaming maintainer for the join+aggregate view γ(A ⋈ B) — the
-    * foreachBatch twin of the batch-proven [[joinAggState]] fold, on
-    * [[maintainPricingSummary]]'s versioned-snapshot scheme: per
-    * micro-batch the A-side delta joins the stored dimension once
-    * (ΔV = ΔA ⋈ B, the one live term of [[deltaJoinView]] when only A
-    * streams), its [[joinAggState]] merges with the latest COMMITTED
-    * state strictly below this batch id, and the result lands at
-    * `stateDir/v=<batchId>` — deterministic per batch id, so an
-    * at-least-once replay re-reads exactly the pre-batch state and
-    * regenerates identical contents (exactly-once without transactions).
-    * Only `_SUCCESS`-marked versions count as committed ([[latestSummary]]
-    * does the listing), so readers racing a write never see a partial
-    * snapshot.
-    *
-    * Scale shape per micro-batch: one delta-vs-dimension join (broadcast
-    * the delta when it fits; a [[graft.sinks.Lake.writeBucketed]] B makes
-    * the probe exchange-free), a delta-keys-sized aggregate, and a
-    * |keys|-row merge + snapshot — the full view is never stored or
-    * rescanned. Retractions stay a batch-tier concern: fold the deleted
-    * slice's [[negateJoinAggState]] with [[mergeJoinAggStates]] and write
-    * the next version (same algebra, IncrementalSpec's retraction case).
-    */
-  def maintainJoinAggView(
-      deltaA: DataFrame,
-      b: DataFrame,
-      joinKey: String,
-      keys: Seq[String],
-      sumCols: Seq[String],
-      stateDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltaA.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        val deltaState = joinAggState(batch.toDF().join(b, joinKey), keys, sumCols)
-        val merged = latestSummary(batch.sparkSession, stateDir,
-            beforeBatch = Some(batchId))
-          .map(mergeJoinAggStates(_, deltaState, keys, sumCols))
-          .getOrElse(deltaState)
-        // |keys| rows: one file is the right layout for a summary table
-        merged.coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        ()
-      }
 
   private val datasheetParts = Seq("scalars", "digests", "langs")
 

@@ -288,7 +288,7 @@ object LlmQueries {
   /** Parametrized NB classification CTE pair against model CTE `$m`
     * (c, b, n_cb) and class CTE `$cls` (c, n_c, d_c), over appended-doc
     * trigram counts `tda(doc_id, b, k)` — ends in `${p}p(doc_id, pred)`.
-    * Same l1024 scoring as the `nb_langid` oracle / `nbScoreAgainst`.
+    * Same l1024 scoring as the `nb_langid` oracle.
     */
   private def nbPredCtes(p: String, m: String, cls: String): String =
     s"""${p}sc AS (SELECT t.doc_id, $cls.c,
@@ -447,7 +447,7 @@ object LlmQueries {
         .orderBy("a", "b")
     },
     // the scale-safe wide-fingerprint form (120-bit here; production picks
-    // halves from the block size via Dedup.simhashHalvesFor). Run
+    // more halves for larger blocks). Run
     // UN-blocked — wide bands make whole-corpus candidate generation
     // affordable, which is the point: it also catches the cross-source
     // near-dups that source-blocking by construction misses.
@@ -845,8 +845,7 @@ object LlmQueries {
         pmod(col("doc_id"), lit(3)) =!= 0)
     },
     // Frozen-CCNet-cuts staleness monitor (r17): appended docs scored
-    // under the FROZEN trigram LM (the ccnetAssignStream serving
-    // contract), fresh tercile cuts fit to that arriving distribution,
+    // under the FROZEN trigram LM, fresh tercile cuts fit to that arriving distribution,
     // and the per-source bucket-flip rate as the re-freeze alarm.
     "ccnet_cuts_staleness" -> { (s, d) =>
       Curation.ccnetCutsStaleness(Tables.documents(s, d),

@@ -37,7 +37,7 @@ object Profiling {
     * TIMESTAMP_NTZ; the cast is an identity under the engine's pinned
     * UTC session TZ. Shared with the streaming profile twin.
     */
-  private[graft] def repr(kind: String, agg: Column): Column = kind match {
+  private def repr(kind: String, agg: Column): Column = kind match {
     case "long"         => agg.cast("string")
     case "string"       => agg
     case "double_centi" => floor(agg * lit(100)).cast("long").cast("string")
@@ -69,14 +69,6 @@ object Profiling {
       .select(explode(array(rows: _*)).as("p"))
       .select("p.*")
   }
-
-  /** Frozen per-document digests — the thin reference side of
-    * [[graft.streaming.StreamingCuration.snapshotDiffStream]]: the same
-    * md5-of-text digest [[snapshotDiff]] compares, one (id, digest) row
-    * per reference document.
-    */
-  def refDigests(ref: DataFrame, idCol: String, textCol: String): DataFrame =
-    ref.select(col(idCol).as("ref_id"), md5(col(textCol)).as("ref_dg"))
 
   /** Corpus snapshot diff: classify every document id across two corpus
     * snapshots as added / removed / changed / unchanged (by content
@@ -110,20 +102,6 @@ object Profiling {
       .groupBy(col("source"), col("status"))
       .agg(count(lit(1)).as("n_docs"))
   }
-
-  /** Frozen per-dimension reference means — the broadcastable reference
-    * side of [[graft.streaming.StreamingCuration.embeddingDriftStream]].
-    * Same quantization (`floor(x*1e6)` before summing) and truncating
-    * integer division as [[embeddingDrift]], so the streaming monitor's
-    * deltas are bit-comparable with the batch report's. ≤ dims rows out.
-    */
-  def dimMeans(emb: DataFrame, vecCol: String): DataFrame =
-    emb.select(posexplode(col(vecCol)).as(Seq("dim", "x")))
-      .select(col("dim"),
-        floor(col("x").cast("double") * lit(1000000)).cast("long").as("q"))
-      .groupBy(col("dim"))
-      .agg(count(lit(1)).as("n_ref"), sum(col("q")).as("sref"))
-      .select(col("dim"), col("n_ref"), expr("sref div n_ref").as("ref_mean_q6"))
 
   /** Embedding-space drift report between two corpus slices (e.g. the
     * training snapshot vs a fresh crawl): per-dimension counts, quantized

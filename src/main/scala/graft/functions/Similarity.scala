@@ -1069,56 +1069,6 @@ object Similarity {
             col("rn") === 1L, lit(1L)).otherwise(lit(0L)).as("keep"))
   }
 
-  /** Frozen per-cell diversity cuts — the broadcastable serving side of
-    * [[graft.streaming.StreamingCuration.diversityAssignStream]]: for
-    * each cell, the max prototypicality among KEPT rows and the min
-    * among DROPPED rows of a [[diversitySample]] pass. One row per cell
-    * (bounded by the centroid count at any corpus size).
-    */
-  def diversityCuts(
-      corpus: DataFrame,
-      centroids: DataFrame,
-      keepPermille: Int): DataFrame =
-    diversitySample(corpus, centroids, keepPermille)
-      .groupBy(col("cid"))
-      .agg(
-        max(when(col("keep") === 1L, col("proto_q4"))).as("keep_max_q4"),
-        min(when(col("keep") === 0L, col("proto_q4"))).as("drop_min_q4"))
-
-  /** Score a batch of vectors against FROZEN centroids + [[diversityCuts]]
-    * — the stateless serving form of [[diversitySample]]: same argmax
-    * assignment, then a per-cell threshold compare instead of the
-    * batch-relative rank. Verdicts: `keep` (proto strictly below the
-    * cell's first dropped value, or the cell dropped nothing), `drop`
-    * (at or above it), and `boundary` for the one undecidable case — the
-    * kept/dropped frontier sat ON a prototypicality tie at freeze time,
-    * where the batch decision was id-rank-dependent and a stateless twin
-    * must route the row explicitly rather than guess (vanishingly rare
-    * on real embeddings; zero on the fixture corpus, spec-pinned). A
-    * cell with no cut row (a centroid that owned nothing at freeze)
-    * keeps its first occupant — most diverse by definition.
-    */
-  def diversityAssign(
-      batch: DataFrame,
-      centroids: DataFrame,
-      cuts: DataFrame): DataFrame = {
-    val c = withNorm(batch, "vec", "v")
-    val assigned = c.join(broadcast(centroids))
-      .withColumn("a_score_q4", q4(dotProduct(col("cd"), col("vd")), col("cn"), col("vn")))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("a_score_q4"), (-col("cid")).as("neg_cid"))).as("best"))
-      .select(col("vec_id"), (-col("best.neg_cid")).as("cid"),
-        col("best.a_score_q4").as("proto_q4"))
-    assigned
-      .join(broadcast(cuts), Seq("cid"), "left")
-      .select(col("vec_id"), col("cid"), col("proto_q4"),
-        when(col("drop_min_q4").isNull || col("proto_q4") < col("drop_min_q4"),
-          lit("keep"))
-          .when(col("proto_q4") === col("drop_min_q4") &&
-            col("keep_max_q4") === col("drop_min_q4"), lit("boundary"))
-          .otherwise(lit("drop")).as("verdict"))
-  }
-
   def semDedupKeep(
       corpus: DataFrame,
       centroids: DataFrame,

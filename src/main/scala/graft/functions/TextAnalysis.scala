@@ -1099,7 +1099,6 @@ object TextAnalysis {
       labelCol: String,
       trainPermille: Int = 800,
       buckets: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       col(labelCol).as("__label"),
       (pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille).as("__train"))
@@ -1119,75 +1118,6 @@ object TextAnalysis {
     val classes = classTot.join(priors, "c")
     nbScoreCore(td.select(col("doc_id"), col("b"), col("k")), m, classes, buckets)
   }
-
-  /** Train-half of [[nbClassify]] — the model a serving tier freezes
-    * (see `graft.streaming.StreamingCuration.nbClassifyStream`): the
-    * per-(class, bucket) trigram counts `(c, b, n_cb)` and the class
-    * table `(c, n_c, d_c)`, both bounded by |classes| x `buckets` /
-    * |classes| rows (broadcastable by construction). Same content-hash
-    * train split and arithmetic as [[nbClassify]]; the trigram pass here
-    * skips the per-doc collapse (the model only needs per-(class,
-    * bucket) occurrence totals, and summing per-doc multiplicities is
-    * the same integer).
-    */
-  def nbTrainModel(
-      df: DataFrame,
-      textCol: String,
-      labelCol: String,
-      trainPermille: Int = 800,
-      buckets: Int = 4096): (DataFrame, DataFrame) = {
-    val base = df.select(col(textCol).as("__text"), col(labelCol).as("__label"))
-      .filter(pmod(Curation.hash48(col("__text")), lit(1000)) < trainPermille)
-    val m = charTrigrams(base.withColumn("__id", col("__label")), "__text", "__id")
-      .withColumn("b", pmod(portableHash48(col("t")), lit(buckets)))
-      .groupBy(col("doc_id").as("c"), col("b"))
-      .agg(count(lit(1)).as("n_cb"))
-    val classTot = m.groupBy(col("c")).agg(sum(col("n_cb")).as("n_c"))
-    val priors = base.groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c"))
-    (m, classTot.join(priors, "c"))
-  }
-
-  /** Score-half of [[nbClassify]]: classify `docs` against a FROZEN
-    * model (the `(model, classes)` pair from [[nbTrainModel]]). Buckets
-    * absent from the model score via the same add-one smoothing, so
-    * out-of-vocabulary text degrades gracefully instead of erroring.
-    * Scoring the training corpus against its own model reproduces
-    * [[nbClassify]] exactly (spec-gated) — the batch/serving split
-    * changes WHEN the model is built, never a score bit.
-    */
-  def nbScoreAgainst(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      model: DataFrame,
-      classes: DataFrame,
-      buckets: Int = 4096): DataFrame = {
-    val td = charTrigrams(
-      docs.select(col(idCol).as("doc_id"), col(textCol).as("__text")),
-      "__text", "doc_id")
-      .withColumn("b", pmod(portableHash48(col("t")), lit(buckets)))
-      .groupBy(col("doc_id"), col("b"))
-      .agg(count(lit(1)).as("k"))
-    nbScoreCore(td, model, classes, buckets)
-  }
-
-  /** The frozen bundle [[nbModelStalenessReportFrom]] monitors against —
-    * everything the staleness report needs from the frozen slice, all
-    * bounded or 1-row except nothing (model <= |C| x buckets rows,
-    * priors <= |C|, mass <= buckets): the [[nbTrainModel]] count table,
-    * the per-class TRAIN-DOC counts (kept separately from the
-    * classes-table join so a class whose every frozen doc is
-    * trigram-less still contributes its prior to a later merge), the
-    * per-bucket trigram mass over ALL frozen docs (the drift baseline),
-    * and the frozen doc count. Freeze once ([[nbFreezeStaleness]] — one
-    * frozen-corpus trigram pass), then every staleness report is
-    * APPENDED-SLICE-SIZED.
-    */
-  final case class NbFrozenModel(
-      model: DataFrame,   // (c, b, n_cb)
-      priors: DataFrame,  // (c, d_c)
-      mass: DataFrame,    // (b, k)
-      nDocs: Long)
 
   /** Bounded (__label, __tr, b, k) trigram-bucket counts — ONE
     * extraction pass whose aggregate output is <= 2 x |C| x `buckets`
@@ -1236,67 +1166,11 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("__label"), col("__tr"), col("b"))
       .agg(count(lit(1)).as("k"))
 
-  /** Freeze the staleness bundle from the frozen slice: ONE trigram pass
-    * whose aggregate stays bounded (model counts from the train split,
-    * drift mass from all docs — both slices of the same (label, split,
-    * bucket) count cube) plus one doc-level pass (priors, doc count).
-    * The returned bounded frames are pinned (localCheckpoint) so serving
-    * them never re-reads the frozen corpus; [[saveNbFrozenModel]]
-    * persists them beside the [[CurationArtifacts]] bundle for a tier
-    * that reloads across sessions.
-    */
-  def nbFreezeStaleness(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      labelCol: String,
-      trainPermille: Int = 800,
-      buckets: Int = 4096): NbFrozenModel = Checkpoints.scoped {
-    val cc = nbClassBucketCounts(df, textCol, idCol, labelCol,
-      trainPermille, buckets).checkpointed()
-    val model = cc.filter(col("__tr"))
-      .select(col("__label").as("c"), col("b"), col("k").as("n_cb"))
-      .checkpointed()
-    val mass = cc.groupBy(col("b")).agg(sum(col("k")).as("k"))
-      .checkpointed()
-    val docAgg = df.select(col(labelCol).as("__label"),
-        (pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille)
-          .as("__tr"))
-      .checkpointed()
-    val priors = docAgg.filter(col("__tr"))
-      .groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c"))
-      .checkpointed()
-    NbFrozenModel(model, priors, mass, docAgg.count())
-  }
-
-  /** Persist / reload the frozen bundle (tiny parquet tables + a 1-row
-    * doc count) — the [[CurationArtifacts]] convention applied to the
-    * staleness monitor's inputs.
-    */
-  def saveNbFrozenModel(m: NbFrozenModel, dir: String): Unit = {
-    val spark = m.model.sparkSession
-    m.model.coalesce(1).write.mode("overwrite").parquet(s"$dir/nb_model")
-    m.priors.coalesce(1).write.mode("overwrite").parquet(s"$dir/nb_priors")
-    m.mass.coalesce(1).write.mode("overwrite").parquet(s"$dir/nb_mass")
-    spark.range(1).select(lit(m.nDocs).as("n_docs"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/nb_ndocs")
-  }
-
-  def loadNbFrozenModel(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): NbFrozenModel =
-    NbFrozenModel(
-      model = spark.read.parquet(s"$dir/nb_model"),
-      priors = spark.read.parquet(s"$dir/nb_priors"),
-      mass = spark.read.parquet(s"$dir/nb_mass"),
-      nDocs = spark.read.parquet(s"$dir/nb_ndocs")
-        .head().getAs[Long]("n_docs"))
-
   /** NB counts are an ADDITIVE MONOID: the model a retrain over
     * `frozen-slice ∪ appended-slice` would produce is exactly
     * merge(frozen counts, appended counts) — per-(class, bucket) trigram
     * counts sum, per-class train-doc priors sum, and the classes table
-    * re-derives from the sums with [[nbTrainModel]]'s own inner join
+    * re-derives from the sums with an inner join
     * (a class enters scoring iff it has >= 1 train trigram anywhere,
     * with its prior counting ALL its train docs). Bit-equality to the
     * retrained model is spec-pinned (NbDsirSpec). Inputs/outputs are the
@@ -1316,11 +1190,9 @@ object TextAnalysis {
   }
 
   /** Frozen-NB-model staleness monitor — the TEXT-tier twin of
-    * [[graft.functions.Similarity.indexStalenessReport]] (r14 verdict #7
-    * named "NB/DSIR/CCNet models" alongside the ANN artifacts): a
-    * serving tier freezes the [[nbTrainModel]] pair
-    * (`StreamingCuration.nbClassifyStream`), and nothing said WHEN
-    * corpus drift had eroded it. One integer-exact row composes:
+    * [[graft.functions.Similarity.indexStalenessReport]]: an NB model
+    * trained on the `isFrozen` slice, and WHEN corpus drift has eroded
+    * it. One integer-exact row composes:
     *
     *  - distribution drift: per-bucket trigram-MASS share (per-mille^2,
     *    q6) of the appended slice vs the frozen slice, summarized to
@@ -1335,13 +1207,9 @@ object TextAnalysis {
     *    appended docs are unscorable by construction and excluded by
     *    both engines identically).
     *
-    * Cost (the r15 `weak`, fixed): this self-contained form pays ONE
-    * corpus trigram pass (model counts, drift mass, and both scoring
-    * arms' input all derive from the same [[nbTriBuckets]] scan — the
-    * r15 form re-trained BOTH models from separate corpus scans); the
-    * serving tier should instead freeze once and call
-    * [[nbModelStalenessReportFrom]], which is APPENDED-SLICE-SIZED.
-    * Both forms produce the identical row (spec-pinned). Gate-faced as
+    * Cost: ONE trigram extraction per slice (model counts, drift mass,
+    * and both scoring arms' input derive from it — the r15 form
+    * re-trained BOTH models from separate corpus scans). Gate-faced as
     * `nb_model_staleness` with the DuckDB oracle replaying both model
     * builds, both argmax classifications, and the share-drift
     * aggregate. Fails loudly when the appended slice has no scorable
@@ -1395,12 +1263,11 @@ object TextAnalysis {
       // cube so the extraction is not replayed per consumer
       val ccFp = ccF.checkpointed()
       nbStalenessCore(spark,
-        NbFrozenModel(
-          ccFp.filter(col("__tr"))
-            .select(col("__label").as("c"), col("b"), col("k").as("n_cb")),
-          priorsF,
-          ccFp.groupBy(col("b")).agg(sum(col("k")).as("k")),
-          cnt.getAs[Long]("n_frozen")),
+        frozenModel = ccFp.filter(col("__tr"))
+          .select(col("__label").as("c"), col("b"), col("k").as("n_cb")),
+        frozenPriors = priorsF,
+        frozenMass = ccFp.groupBy(col("b")).agg(sum(col("k")).as("k")),
+        nFrozen = cnt.getAs[Long]("n_frozen"),
         appendedModel = triA.filter(col("__tr"))
           .groupBy(col("__label").as("c"), col("b"))
           .agg(sum(col("k")).as("n_cb")),
@@ -1414,43 +1281,7 @@ object TextAnalysis {
     }
   }
 
-  /** [[nbModelStalenessReport]] for a SERVING tier holding the frozen
-    * bundle ([[nbFreezeStaleness]] / [[loadNbFrozenModel]]): the frozen
-    * corpus is never touched — one trigram pass over the APPENDED slice
-    * feeds the appended model counts, the drift comparison, and both
-    * scoring arms, and the fresh model is [[nbMergeModels]] of two
-    * bounded count tables. Produces the IDENTICAL row to the
-    * self-contained form over `frozen-slice ∪ appended-slice`
-    * (spec-pinned, NbDsirSpec) at appended-slice cost — the operating
-    * shape for a 100 TB corpus with a trickle of arrivals.
-    */
-  def nbModelStalenessReportFrom(
-      frozen: NbFrozenModel,
-      appended: DataFrame,
-      textCol: String,
-      idCol: String,
-      labelCol: String,
-      trainPermille: Int = 800,
-      buckets: Int = 4096): DataFrame = Checkpoints.scoped {
-    val spark = appended.sparkSession
-    val triA = nbDocBucketCounts(appended, textCol, idCol, labelCol,
-      trainPermille, buckets).checkpointed()
-    nbStalenessCore(spark, frozen,
-      appendedModel = triA.filter(col("__tr"))
-        .groupBy(col("__label").as("c"), col("b"))
-        .agg(sum(col("k")).as("n_cb")),
-      appendedPriors = appended
-        .filter(pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille)
-        .groupBy(col(labelCol).as("c")).agg(count(lit(1)).as("d_c")),
-      appendedMass = triA.groupBy(col("b")).agg(sum(col("k")).as("k")),
-      appendedTri = triA.select(col("doc_id"), col("b"), col("k")),
-      appendedLabels = appended
-        .select(col(idCol).as("doc_id"), col(labelCol).as("__label")),
-      nAppended = appended.count(),
-      buckets = buckets)
-  }
-
-  /** The staleness report's shared tail: score the appended docs with
+  /** The staleness report's tail: score the appended docs with
     * the frozen model and with the MERGED (= retrained, bit-equal) fresh
     * model, fold the erosion and drift aggregates EAGERLY (inputs may be
     * checkpoint-backed frames the caller's scope releases on return; the
@@ -1458,7 +1289,10 @@ object TextAnalysis {
     */
   private def nbStalenessCore(
       spark: org.apache.spark.sql.SparkSession,
-      frozen: NbFrozenModel,
+      frozenModel: DataFrame, // (c, b, n_cb)
+      frozenPriors: DataFrame, // (c, d_c)
+      frozenMass: DataFrame, // (b, k)
+      nFrozen: Long,
       appendedModel: DataFrame,
       appendedPriors: DataFrame,
       appendedMass: DataFrame,
@@ -1466,11 +1300,11 @@ object TextAnalysis {
       appendedLabels: DataFrame,
       nAppended: Long,
       buckets: Int): DataFrame = {
-    val clsF = frozen.model.groupBy(col("c")).agg(sum(col("n_cb")).as("n_c"))
-      .join(frozen.priors, "c")
+    val clsF = frozenModel.groupBy(col("c")).agg(sum(col("n_cb")).as("n_c"))
+      .join(frozenPriors, "c")
     val (mR, clsR) =
-      nbMergeModels(frozen.model, frozen.priors, appendedModel, appendedPriors)
-    val sF = nbScoreCore(appendedTri, frozen.model, clsF, buckets)
+      nbMergeModels(frozenModel, frozenPriors, appendedModel, appendedPriors)
+    val sF = nbScoreCore(appendedTri, frozenModel, clsF, buckets)
     val sR = nbScoreCore(appendedTri, mR, clsR, buckets)
     // the erosion row is forced eagerly: n_scored = 0 must fail loudly
     // here (the repo's fail-loud convention; the oracle's floor division
@@ -1492,7 +1326,7 @@ object TextAnalysis {
     // per-bucket trigram-mass share per slice (ALL docs of each slice —
     // distribution monitoring, not the train split). k * 10^6 stays far
     // below int64 for any per-bucket trigram mass a shard can hold.
-    val share = frozen.mass.withColumn("__fr", lit(true))
+    val share = frozenMass.withColumn("__fr", lit(true))
       .unionByName(appendedMass.withColumn("__fr", lit(false)))
     val drift = share
       .join(share.groupBy(col("__fr")).agg(sum(col("k")).as("tk")), "__fr")
@@ -1506,7 +1340,7 @@ object TextAnalysis {
         expr("sum(ad) div count(1)").as("mean_share_delta_q6"))
       .head()
     spark.range(1).select(
-      lit(frozen.nDocs).as("n_frozen"),
+      lit(nFrozen).as("n_frozen"),
       lit(nAppended).as("n_appended"),
       lit(drift.getAs[Long]("max_share_delta_q6")).as("max_share_delta_q6"),
       lit(drift.getAs[Long]("mean_share_delta_q6")).as("mean_share_delta_q6"),

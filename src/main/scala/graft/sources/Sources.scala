@@ -189,23 +189,6 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
-/** SQL catalog surface: register every corpus table as a temp view so the
-  * whole engine is reachable through `spark.sql(...)` as well as the
-  * DataFrame API (the reference exposes no SQL — this is part of the
-  * beyond-reference surface).
-  */
-object Catalog {
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings")
-
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    tableNames.foreach {
-      case "events" => Tables.events(spark, dir).createOrReplaceTempView("events")
-      case n => Tables.table(spark, dir, n).createOrReplaceTempView(n)
-    }
-}
-
 /** Streaming sources, mirroring the reference's source surface:
   *
   *  - S1 file-monitor text source (`chapter2/BasicStreamingOperations.java:52-60`,
@@ -215,9 +198,6 @@ object Catalog {
   *    to the trigger interval chosen at `writeStream` time.
   *  - S2 Kafka source (`chapter3/WindowingOperations.java:44-60`): the
   *    `kafka` streaming source with `startingOffsets=latest`.
-  *  - S3 rate source for deterministic load generation in tests (the
-  *    reference uses ad-hoc generator threads,
-  *    `datasource/FileStreamDataGenerator.java:32-107`).
   */
 object Sources {
 
@@ -256,15 +236,6 @@ object Sources {
       "kafka.bootstrap.servers" -> bootstrap,
       "subscribe" -> topic,
       "startingOffsets" -> startingOffsets)
-
-  /** S3: deterministic event-rate source (replaces the reference's
-    * sleep-driven generator threads for tests/demos).
-    */
-  def rate(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream
-      .format("rate")
-      .option("rowsPerSecond", rowsPerSecond.toString)
-      .load()
 
   /** Streaming view of a parquet directory with an explicit schema —
     * used to drive the `events` table as a stream in tests/benchmarks.

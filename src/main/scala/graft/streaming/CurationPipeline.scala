@@ -74,37 +74,13 @@ object CurationPipeline {
 
   /** Per-batch body of the metrics branch: per-language doc/token counts
     * and mean quality, one row set per micro-batch.
-    *
-    * `nbRouting = Some((model, classes))` swaps the heuristic `lang_pred`
-    * for the TRAINED router's prediction
-    * ([[graft.functions.TextAnalysis.nbScoreAgainst]] against a frozen,
-    * e.g. [[graft.functions.CurationArtifacts]]-loaded, model) — the
-    * serving-position classifier inside the live pipeline. Docs the
-    * scorer can't place (no trigrams) keep the heuristic label, so the
-    * branch stays total.
     */
   def metricsBatch(
       gated: DataFrame,
       batchId: Long,
-      metricsPath: String,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      nbRouting: Option[(DataFrame, DataFrame)] = None): Unit = Checkpoints.scoped {
-    val routed = nbRouting match {
-      case Some((model, classes)) =>
-        gated.join(
-          // the scorer normalizes its id column to "doc_id"
-          graft.functions.TextAnalysis.nbScoreAgainst(
-            gated, textCol, idCol, model, classes)
-            .select(col("doc_id").as(idCol), col("pred_label")),
-          Seq(idCol), "left")
-          .withColumn("lang_pred",
-            coalesce(col("pred_label"), col("lang_pred")))
-          .drop("pred_label")
-      case None => gated
-    }
+      metricsPath: String): Unit = Checkpoints.scoped {
     IndexLayout.overwriteBatchPartitions(
-      routed.groupBy("lang_pred")
+      gated.groupBy("lang_pred")
         .agg(
           count(lit(1)).as("docs"),
           sum("n_tokens").as("tokens"),
@@ -130,8 +106,7 @@ object CurationPipeline {
       bands: Int = 4,
       rowsPerBand: Int = 4,
       minJaccardMilli: Int = 600,
-      buckets: Int = 16,
-      nbRouting: Option[(DataFrame, DataFrame)] = None): DataStreamWriter[Row] = {
+      buckets: Int = 16): DataStreamWriter[Row] = {
     val gated = StreamingCuration.annotateAndGate(docs, textCol, minQualityMilli)
     Sinks.fanoutSinkById(gated, Seq(
       "curate" -> ((b: DataFrame, id: Long) =>
@@ -140,6 +115,6 @@ object CurationPipeline {
             n, bands, rowsPerBand, minJaccardMilli, buckets)),
       "metrics" -> ((b: DataFrame, id: Long) =>
         if (!b.isEmpty)
-          metricsBatch(b, id, metricsPath, textCol, idCol, nbRouting))))
+          metricsBatch(b, id, metricsPath))))
   }
 }

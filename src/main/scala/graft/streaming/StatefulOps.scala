@@ -193,7 +193,7 @@ object StatefulOps {
                   if (Ordering[(Long, Long)].compare(
                       (e.tsUs, e.vCenti), (s.bestTsUs, s.bestVc)) > 0)
                     st = Some(s.copy(bestTsUs = e.tsUs, bestVc = e.vCenti))
-                case Some(s) =>
+                case Some(_) =>
                   closeThrough(cell)
                   st = Some(ResampleState(cell, e.tsUs, e.vCenti))
                 case None =>

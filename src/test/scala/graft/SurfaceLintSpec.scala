@@ -10,10 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `operators`, `streaming`, `sinks`, `sources`) has a caller in
   * `src/main` or `streambench/src`, or an entry here that says why not.
   *
-  * A caller is an identifier match in the comment- and string-stripped
-  * sources outside the def's own definition (a scaladoc `[[name]]` is not
-  * a caller; an overload's body or another object's use is). A def with
-  * no caller must be in [[kept]], with a reason citing one of the rules:
+  * A caller is a use in the comment- and string-stripped sources outside
+  * the def's own definition that resolves to the def's object: `Obj.name`,
+  * `name` inside `Obj`'s own file, or `name` in a file importing `Obj._`
+  * or `Obj.name` (a scaladoc `[[name]]` is not a caller; an overload's
+  * body or another object's use is; a namesake is not). A def with no
+  * caller must be in [[kept]], with a reason citing one of the rules:
   *  - (a) ConvergenceSpec replays it against an oracle-gated query;
   *  - (b) it is a writer, reader, compaction, rebuild or foreachBatch
   *    stream entry of a maintained-state protocol (the crash-point
@@ -40,6 +42,7 @@ class SurfaceLintSpec extends AnyFunSuite {
     "StreamOps.sessionPathsStream" -> "(a) twin of the session-paths top-50",
     "StreamOps.streamStreamIntervalJoin" -> "(a) J2 twin of the interval join",
     "StreamingCuration.lmSurprisalStream" -> "(a) twin of the LM surprisal score",
+    "TextAnalysis.trigramModel" -> "(a) builds the model lmSurprisalStream's replay scores with",
     "Dedup.compactLshIndex" -> "(b) LSH index compaction",
     "Graph.maintainCopurchaseWeights" -> "(b) co-purchase count-table writer",
     "Graph.readCopurchaseWeights" -> "(b) co-purchase count-table reader",
@@ -72,57 +75,13 @@ class SurfaceLintSpec extends AnyFunSuite {
     "Sources.kafkaLines" -> "(d) Kafka source")
 
   private val deferred: Map[String, String] = Map(
-    "Curation.dsirScoreAgainst" -> "NbDsirSpec 1",
-    "Curation.saveDsirFrozenModel" -> "NbDsirSpec 1",
-    "Curation.loadDsirFrozenModel" -> "NbDsirSpec 1",
-    "Curation.ccnetFreezeCuts" -> "NbDsirSpec 1",
-    "Curation.saveCcnetFrozenCuts" -> "NbDsirSpec 1",
-    "Curation.loadCcnetFrozenCuts" -> "NbDsirSpec 1",
-    "Curation.ccnetCutsStalenessFrom" -> "NbDsirSpec 1",
-    "CurationArtifacts.train" -> "CurationArtifactsSpec 1",
     "Dedup.lshParams" -> "StreamingExtrasSpec 1",
-    "Dedup.simhashHalvesFor" -> "FunctionsSpec 1",
-    "Graph.pageRankUntil" -> "GraphOpsSpec 2",
-    "Graph.communityLabelsUntil" -> "GraphOpsSpec 1",
-    "Graph.kCoreRefreshAuto" -> "GraphOpsSpec 1",
-    "Graph.hitsUntil" -> "GraphOpsSpec 2",
-    "Incremental.negateDatasheetState" -> "IncrementalSpec 1",
-    "Incremental.negateDauState" -> "IncrementalSpec 1",
-    "Incremental.negateJoinAggState" -> "IncrementalSpec 1",
-    "Incremental.maintainJoinAggView" -> "IncrementalSpec 1",
-    "Multimodal.decodeBatchedStub" -> "FunctionsSpec 1",
-    "Multimodal.imageDHashes" -> "FunctionsSpec 1",
-    "Multimodal.imageNearDupPairs" -> "FunctionsSpec 2",
-    "Multimodal.writeHashIndex" -> "FunctionsSpec 1",
-    "Multimodal.appendToHashIndex" -> "FunctionsSpec 1",
-    "Multimodal.nearDupsAgainstHashIndex" -> "FunctionsSpec 1",
-    "Multimodal.audioFingerprints" -> "FunctionsSpec 1",
-    "Multimodal.decodeBatched" -> "FunctionsSpec 3",
-    "Multimodal.decodeFramesBatched" -> "FunctionsSpec 1",
-    "Profiling.dimMeans" -> "StreamingExtrasSpec 1",
-    "Similarity.diversityCuts" -> "StreamingExtrasSpec 1",
-    "TextAnalysis.nbFreezeStaleness" -> "NbDsirSpec 2",
-    "TextAnalysis.saveNbFrozenModel" -> "NbDsirSpec 1",
-    "TextAnalysis.loadNbFrozenModel" -> "NbDsirSpec 1",
-    "TextAnalysis.nbModelStalenessReportFrom" -> "NbDsirSpec 1",
     "Skew.saltedCountSum" -> "InvariantSpec 1",
     "Skew.saltedJoin" -> "InvariantSpec 1",
     "Lake.writeZOrdered" -> "LayoutSpec 1",
     "Sinks.fanoutSink" -> "StreamingExtrasSpec 1",
-    "Catalog.registerAll" -> "ModelSpec 3, PlanSpec 1",
     "StreamOps.streamingDedup" -> "StreamingExtrasSpec 1",
-    "StreamOps.streamingNearDupPairs" -> "StreamingExtrasSpec 1",
-    "StreamingCuration.diversityAssignStream" -> "StreamingExtrasSpec 1",
-    "StreamingCuration.nbClassifyStream" -> "NbDsirSpec 1",
-    "StreamingCuration.dsirWeightStream" -> "NbDsirSpec 1",
-    "StreamingCuration.contaminationGate" -> "StreamingCurationSpec 1",
-    "StreamingCuration.gopherGateStream" -> "StreamingExtrasSpec 1",
-    "StreamingCuration.ccnetAssignStream" -> "StreamingExtrasSpec 1",
-    "StreamingCuration.datasheetStream" -> "StreamingExtrasSpec 1",
-    "StreamingCuration.quantileNormAssignStream" -> "StreamingExtrasSpec 1",
-    "StreamingCuration.profileStream" -> "StreamingExtrasSpec 1",
-    "StreamingCuration.embeddingDriftStream" -> "StreamingExtrasSpec 1",
-    "StreamingCuration.snapshotDiffStream" -> "StreamingExtrasSpec 1")
+    "StreamOps.streamingNearDupPairs" -> "StreamingExtrasSpec 1")
 
   /** `src` with comments and string-literal text blanked (offsets and
     * newlines kept). Code inside an interpolation (`$name`, `${...}`)
@@ -274,6 +233,46 @@ class SurfaceLintSpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  /** `Object.def` keys of the defs of `engine` files with no caller in `code`.
+    *
+    * A use of `name` counts as a call of `Obj.name` only when it is
+    * written `Obj.name`, is unqualified inside `Obj`'s own file, or is
+    * unqualified in a file that imports `Obj._` or `Obj.name`. So a
+    * namesake (another object's def, a local val, a method on a value)
+    * is no caller.
+    */
+  private def uncalledIn(code: Map[Path, String], engine: Set[Path]): Set[String] = {
+    val defs = for {
+      p <- engine.toSeq
+      d <- objectDefs(code(p))
+    } yield (p, d, defEnd(code(p), d.start))
+    // every identifier occurrence, by name: (file, offset)
+    val uses = code.toSeq.flatMap { case (p, c) =>
+      """[A-Za-z_][A-Za-z0-9_]*""".r.findAllMatchIn(c).map(m => (m.matched, (p, m.start)))
+    }.groupMap(_._1)(_._2)
+    val before = """(?:\b([A-Za-z_][A-Za-z0-9_]*)\s*)?(\.)?\s*$""".r
+    def qualifier(c: String, at: Int): Option[Option[String]] = // None: unqualified
+      before.findFirstMatchIn(c.substring(math.max(0, at - 80), at))
+        .flatMap(m => Option(m.group(2)).map(_ => Option(m.group(1))))
+    def imports(c: String, obj: String, name: String): Boolean =
+      ("""\bimport\s+[\w.]*\b""" + obj + """\.(_|""" + name + """\b|\{[^}]*\b""" + name +
+        """\b[^}]*\})""").r.findFirstIn(c).isDefined
+    val defToken = """def\s+$""".r
+    defs.groupBy(_._2.key).collect { case (key, spans) if {
+      val (home, d0, _) = spans.head
+      val obj = key.stripSuffix("." + d0.name)
+      uses.getOrElse(d0.name, Nil).forall { case (p, at) =>
+        val c = code(p)
+        val call = qualifier(c, at) match {
+          case Some(q) => q.contains(obj)
+          case None => p == home || imports(c, obj, d0.name)
+        }
+        !call || spans.exists { case (dp, d, end) => dp == p && at >= d.start && at < end } ||
+          defToken.findFirstIn(c.substring(math.max(0, at - 12), at)).isDefined
+      }
+    } => key }.toSet
+  }
+
   /** `Object.def` keys of the engine-package defs with no caller. */
   private lazy val uncalled: Set[String] = {
     val roots = Seq(Paths.get("src/main/scala"), Paths.get("streambench/src"))
@@ -283,21 +282,7 @@ class SurfaceLintSpec extends AnyFunSuite {
       val rel = Paths.get("src/main/scala/graft").relativize(p)
       !rel.startsWith("..") && rel.getNameCount == 2 && packages.contains(rel.getName(0).toString)
     }
-    val defs = for {
-      p <- engine.toSeq
-      d <- objectDefs(code(p))
-    } yield (p, d, defEnd(code(p), d.start))
-    // every identifier occurrence, by name: (file, offset)
-    val uses = code.toSeq.flatMap { case (p, c) =>
-      """[A-Za-z_][A-Za-z0-9_]*""".r.findAllMatchIn(c).map(m => (m.matched, (p, c, m.start)))
-    }.groupMap(_._1)(_._2)
-    val defToken = """def\s+$""".r
-    defs.groupBy(_._2.key).collect { case (key, spans) if {
-      uses.getOrElse(spans.head._2.name, Nil).forall { case (p, c, at) =>
-        spans.exists { case (dp, d, end) => dp == p && at >= d.start && at < end } ||
-          defToken.findFirstIn(c.substring(math.max(0, at - 12), at)).isDefined
-      }
-    } => key }.toSet
+    uncalledIn(code, engine.toSet)
   }
 
   test("every engine def without a caller is kept by a rule or deferred with its tests") {
@@ -335,5 +320,24 @@ class SurfaceLintSpec extends AnyFunSuite {
     val a = objectDefs(code).head
     val body = code.substring(a.start, defEnd(code, a.start))
     assert(body.contains("x }") && !body.contains("hidden"), body)
+  }
+
+  test("lint self-check: a namesake is no caller") {
+    // P.run and Q.run share a name; only Q.run is called. Uses that
+    // reach no object (a local val, a method on a value, a file with no
+    // import) must not keep P.run alive.
+    val p = Paths.get("p/P.scala")
+    val q = Paths.get("q/Q.scala")
+    def lint(files: (String, String)*) =
+      uncalledIn(files.map { case (k, v) => Paths.get(k) -> strip(v) }.toMap, Set(p, q))
+    val base = Seq(
+      "p/P.scala" -> "object P {\n  def run(x: Int): Int = x\n}",
+      "q/Q.scala" -> "object Q {\n  def run(x: Int): Int = x\n  def solo(): Int = run(0)\n}",
+      "u/U.scala" -> "object U {\n  val run = 1\n  def go(t: T) = t.run + run\n}")
+    assert(lint(base: _*) === Set("P.run", "Q.solo"))
+    assert(lint(base :+ ("u/I.scala" -> "import q.Q._\nobject I { def go() = solo() }"): _*) ===
+      Set("P.run"))
+    assert(lint(base :+ ("u/V.scala" -> "object V { def go() = P\n    .run(1) + solo() }"): _*) ===
+      Set("Q.solo"))
   }
 }

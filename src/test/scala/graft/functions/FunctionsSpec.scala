@@ -293,11 +293,6 @@ class FunctionsSpec extends SparkSpec {
     val h60 = Dedup.simhashPairs(wide, "text", "doc_id", "source", maxHamming = 10)
       .as[(Long, Long, Long)].collect().toSet
     assert(h1 === h60)
-
-    // the width rule: bands widen as blocks grow, capped at 60-bit bands
-    assert(Dedup.simhashHalvesFor(500L) >= 2)
-    assert(Dedup.simhashHalvesFor(500000L) === 6)
-    assert(Dedup.simhashHalvesFor(1L << 58) === 11)
   }
 
   test("brute-force top-k: identical vector ranks first with cosine 1") {
@@ -938,269 +933,6 @@ class FunctionsSpec extends SparkSpec {
     assert(got === Map(1L -> "en", 2L -> "fr", 3L -> "de"))
     val q = t.select(TextAnalysis.qualityMilli(col("text"))).as[Long].collect()
     assert(q.forall(v => v >= 0 && v <= 1000))
-  }
-
-  test("multimodal: batched mapPartitions decode feeds similarity search") {
-    import Multimodal.{DecodedMedia, MediaRecord}
-    val media = docs.collect().map(r =>
-      MediaRecord(r.getLong(0), "image", r.getString(1).getBytes("UTF-8")))
-    val ds = spark.createDataset(media.toSeq)(
-      org.apache.spark.sql.Encoders.product[MediaRecord]).repartition(3)
-    val decoded = Multimodal.decodeBatchedStub(ds, batchSize = 2)
-    val rows = decoded.collect().sortBy(_.media_id)
-    assert(rows.length === 4)
-    assert(rows.forall(_.feature.length === 16))
-    // identical payloads (doc 0 and 3) decode to identical features
-    assert(rows(0).feature.toSeq === rows(3).feature.toSeq)
-    assert(rows(0).width === rows(3).width)
-    // decoded features compose with the similarity operators
-    val corpus = decoded.select(col("media_id").as("vec_id"), col("feature").as("vec"))
-    val queries = corpus.filter(col("vec_id") === 0)
-      .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    val top = Similarity.bruteForceTopK(queries, corpus, 1).collect()
-    assert(top.head.getAs[Long]("vec_id") === 3L)      // the exact dup wins
-    assert(top.head.getAs[Long]("score_q4") >= 9999L)  // cosine 1 up to fp rounding
-  }
-
-  test("multimodal: real PNG payloads decode to true dimensions via javax.imageio") {
-    import Multimodal.MediaRecord
-    def png(w: Int, h: Int, rgb: Int): Array[Byte] = {
-      val im = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) im.setRGB(x, y, rgb)
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(im, "png", out)
-      out.toByteArray
-    }
-    val media = Seq(
-      MediaRecord(1L, "image", png(37, 21, 0xffffff)),  // white
-      MediaRecord(2L, "image", png(128, 64, 0x000000)), // black
-      MediaRecord(3L, "image", "not an image".getBytes("UTF-8")), // stub fallback
-      MediaRecord(4L, "audio", png(50, 50, 0x123456)))  // wrong modality -> stub
-    val ds = spark.createDataset(media)(
-      org.apache.spark.sql.Encoders.product[MediaRecord]).repartition(2)
-    val rows = Multimodal.decodeBatched(ds, batchSize = 2)
-      .collect().map(r => r.media_id -> r).toMap
-    assert(rows(1L).width === 37L && rows(1L).height === 21L && rows(1L).n_frames === 1L)
-    assert(rows(2L).width === 128L && rows(2L).height === 64L)
-    // mean-luma grid features: white ~ +0.5, black ~ -0.5 per cell
-    assert(rows(1L).feature.forall(f => math.abs(f - 0.5f) < 0.01f))
-    assert(rows(2L).feature.forall(f => math.abs(f + 0.5f) < 0.01f))
-    // non-image bytes and non-image modalities take the stub path
-    // (hash-derived dims land in [64, 512))
-    assert(rows(3L).width >= 64L && rows(3L).width < 512L)
-    assert(rows(4L).width >= 64L && rows(4L).width < 512L)
-  }
-
-  test("multimodal: dHash image near-dup pairs find the perturbed twin, not the stranger") {
-    import Multimodal.MediaRecord
-    // seeded random-block image; `noise` perturbs every pixel by a few
-    // luma steps (a re-encode-like distortion that must NOT break dHash)
-    def img(seed: Long, noise: Int): Array[Byte] = {
-      val rnd = new scala.util.Random(seed)
-      val w = 72; val h = 48
-      val im = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      // 9x8 blocks with well-separated luma levels so mild noise can't
-      // flip a gradient comparison
-      val levels = Array.fill(8, 9)(32 + rnd.nextInt(6) * 36)
-      for (y <- 0 until h; x <- 0 until w) {
-        val v0 = levels(y * 8 / h)(x * 9 / w)
-        val v = math.max(0, math.min(255,
-          v0 + (if (noise > 0) rnd.nextInt(2 * noise + 1) - noise else 0)))
-        im.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(im, "png", out)
-      out.toByteArray
-    }
-    val media = Seq(
-      MediaRecord(1L, "image", img(seed = 42L, noise = 0)),
-      MediaRecord(2L, "image", img(seed = 42L, noise = 4)),  // near-dup of 1
-      MediaRecord(3L, "image", img(seed = 99L, noise = 0)),  // unrelated
-      MediaRecord(4L, "image", "not an image".getBytes("UTF-8")), // undecodable: drops
-      MediaRecord(5L, "audio", img(seed = 7L, noise = 0)))   // wrong modality: drops
-    val ds = spark.createDataset(media)(
-      org.apache.spark.sql.Encoders.product[MediaRecord]).repartition(2)
-    val hashes = Multimodal.imageDHashes(ds)
-    val hs = hashes.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hs.keySet === Set(1L, 2L, 3L)) // only decodable images fingerprint
-    assert(java.lang.Long.bitCount(hs(1L) ^ hs(2L)) <= 6,
-      "perturbed twin drifted too far in dHash space")
-    assert(java.lang.Long.bitCount(hs(1L) ^ hs(3L)) > 10,
-      "unrelated images landed too close for the test to discriminate")
-    val pairs = Multimodal.imageNearDupPairs(hashes, maxHamming = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.toSeq === Seq((1L, 2L)))
-    // exact-recall property of the banding at the verified threshold:
-    // identical prints always pair (hamming 0 shares every band)
-    val dup = Multimodal.imageNearDupPairs(
-      hashes.union(spark.createDataFrame(Seq((10L, hs(1L)))).toDF("media_id", "dhash")),
-      maxHamming = 6).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dup.contains((1L, 10L)))
-  }
-
-  test("multimodal: hash index probes find corpus near-dups; appends idempotent") {
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-hashidx").toString
-    def flip(h: Long, bits: Int*): Long = bits.foldLeft(h)((x, b) => x ^ (1L << b))
-    val hA = 0x123456789ABCDEF0L
-    val hB = 0x0F0F0F0F0F0F0F0FL // far from hA
-    val corpus = spark.createDataFrame(Seq((1L, hA), (2L, hB)))
-      .toDF("media_id", "dhash")
-    Multimodal.writeHashIndex(corpus, dir, maxHamming = 6)
-    // a probe 2 bits off hA pairs with 1, never with 2
-    val probe = spark.createDataFrame(Seq((10L, flip(hA, 3, 40))))
-      .toDF("media_id", "dhash")
-    val hits = Multimodal.nearDupsAgainstHashIndex(spark, probe, dir, maxHamming = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(hits.toSeq === Seq((10L, 1L, 2L)))
-    // append a batch; a later probe sees both the base corpus AND the batch
-    Multimodal.appendToHashIndex(
-      spark.createDataFrame(Seq((11L, flip(hA, 60)))).toDF("media_id", "dhash"),
-      dir, batchId = 0L, maxHamming = 6)
-    Multimodal.appendToHashIndex( // replay of batch 0 — must not duplicate
-      spark.createDataFrame(Seq((11L, flip(hA, 60)))).toDF("media_id", "dhash"),
-      dir, batchId = 0L, maxHamming = 6)
-    val probe2 = spark.createDataFrame(Seq((12L, hA))).toDF("media_id", "dhash")
-    val hits2 = Multimodal.nearDupsAgainstHashIndex(spark, probe2, dir, maxHamming = 6)
-      .orderBy(col("b")).collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(hits2.toSeq === Seq((12L, 1L), (12L, 11L)))
-    // wrong params fail loudly instead of silently pruning wrong buckets
-    intercept[IllegalArgumentException] {
-      Multimodal.nearDupsAgainstHashIndex(spark, probe2, dir, maxHamming = 10)
-    }
-  }
-
-  test("multimodal: audio fingerprints pair the volume-scaled twin via hamming bands") {
-    import Multimodal.MediaRecord
-    // amplitude-modulated sine: `env` shapes segment energies, `gain`
-    // scales volume (a re-encode-like distortion the gradient bits must
-    // survive)
-    def wav(envHz: Double, gain: Double, seed: Int): Array[Byte] = {
-      val n = 13000
-      val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-      val data = new Array[Byte](n * 2)
-      for (i <- 0 until n) {
-        val env = 0.4 + 0.35 * math.sin(i * envHz + seed)
-        val s = (math.sin(i * 0.21) * env * gain * 30000).toInt.toShort
-        data(i * 2) = (s & 0xff).toByte
-        data(i * 2 + 1) = ((s >> 8) & 0xff).toByte
-      }
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(data), fmt, n.toLong)
-      val out = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(
-        ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-      out.toByteArray
-    }
-    val media = Seq(
-      MediaRecord(1L, "audio", wav(0.004, 1.0, 0)),
-      MediaRecord(2L, "audio", wav(0.004, 0.8, 0)),  // volume-scaled twin
-      MediaRecord(3L, "audio", wav(0.013, 1.0, 5)),  // different envelope
-      MediaRecord(4L, "audio", "not audio".getBytes("UTF-8")), // drops
-      MediaRecord(5L, "image", wav(0.004, 1.0, 0)))  // wrong modality: drops
-    val ds = spark.createDataset(media)(
-      org.apache.spark.sql.Encoders.product[MediaRecord]).repartition(2)
-    val prints = Multimodal.audioFingerprints(ds)
-    val hs = prints.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hs.keySet === Set(1L, 2L, 3L))
-    assert(java.lang.Long.bitCount(hs(1L) ^ hs(2L)) <= 6,
-      "volume scaling must not move the gradient fingerprint")
-    assert(java.lang.Long.bitCount(hs(1L) ^ hs(3L)) > 10,
-      "different envelopes landed too close to discriminate")
-    val pairs = Multimodal.imageNearDupPairs(prints, maxHamming = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.toSeq === Seq((1L, 2L)))
-  }
-
-  test("multimodal: real WAV payloads decode to true rate/channels/frames") {
-    import Multimodal.MediaRecord
-    def wav(rateHz: Int, nSamples: Int): Array[Byte] = {
-      val fmt = new javax.sound.sampled.AudioFormat(rateHz.toFloat, 16, 1, true, false)
-      val data = new Array[Byte](nSamples * 2)
-      for (i <- 0 until nSamples) {
-        val s = (math.sin(i * 0.1) * 20000).toInt.toShort
-        data(i * 2) = (s & 0xff).toByte
-        data(i * 2 + 1) = ((s >> 8) & 0xff).toByte
-      }
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(data), fmt, nSamples.toLong)
-      val out = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(
-        ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-      out.toByteArray
-    }
-    val media = Seq(
-      MediaRecord(1L, "audio", wav(8000, 800)),
-      MediaRecord(2L, "audio", wav(44100, 4410)),
-      MediaRecord(3L, "audio", "not audio".getBytes("UTF-8"))) // stub fallback
-    val ds = spark.createDataset(media)(
-      org.apache.spark.sql.Encoders.product[MediaRecord]).repartition(2)
-    val rows = Multimodal.decodeBatched(ds, batchSize = 2)
-      .collect().map(r => r.media_id -> r).toMap
-    assert(rows(1L).width === 8000L && rows(1L).height === 1L && rows(1L).n_frames === 800L)
-    assert(rows(2L).width === 44100L && rows(2L).n_frames === 4410L)
-    // a 20000/32768-amplitude sine has mean |s| well above zero in every segment
-    assert(rows(1L).feature.forall(f => f > 0.1f && f <= 1.0f))
-    assert(rows(3L).width >= 64L && rows(3L).width < 512L) // hash-derived stub dims
-  }
-
-  test("multimodal: animated GIFs decode real frame counts + per-frame features") {
-    import Multimodal.MediaRecord
-    // multi-frame GIF via the JDK's own writer (writeToSequence): each
-    // frame a solid gray level, brightening frame to frame
-    def animatedGif(w: Int, h: Int, grays: Seq[Int]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(out)
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      grays.foreach { g =>
-        val im = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val rgb = (g << 16) | (g << 8) | g
-        for (y <- 0 until h; x <- 0 until w) im.setRGB(x, y, rgb)
-        writer.writeToSequence(new javax.imageio.IIOImage(im, null, null), null)
-      }
-      writer.endWriteSequence()
-      writer.dispose()
-      ios.close()
-      out.toByteArray
-    }
-    val gif3 = animatedGif(24, 16, Seq(0, 128, 255))
-    val media = Seq(
-      MediaRecord(1L, "video", gif3),
-      MediaRecord(2L, "video", animatedGif(8, 8, Seq(200))), // single frame
-      MediaRecord(3L, "video", "not a gif".getBytes("UTF-8"))) // stub fallback
-    val ds = spark.createDataset(media)(
-      org.apache.spark.sql.Encoders.product[MediaRecord]).repartition(2)
-
-    // whole-payload decode: REAL frame count + frame-0 feature
-    val rows = Multimodal.decodeBatched(ds, batchSize = 2)
-      .collect().map(r => r.media_id -> r).toMap
-    assert(rows(1L).width === 24L && rows(1L).height === 16L && rows(1L).n_frames === 3L)
-    assert(rows(2L).n_frames === 1L)
-    assert(rows(1L).feature.forall(f => math.abs(f + 0.5f) < 0.02f),
-      "frame 0 is black: every luma cell ~ -0.5")
-    assert(rows(3L).n_frames >= 1L && rows(3L).n_frames <= 16L, "stub fallback")
-
-    // per-frame rows: one feature per frame, brightening monotonically;
-    // undecodable payloads contribute no rows
-    val frames = Multimodal.decodeFramesBatched(ds, everyN = 1, batchSize = 2)
-      .collect().sortBy(r => (r.media_id, r.frame_idx))
-    assert(frames.map(r => (r.media_id, r.frame_idx)).toSeq ===
-      Seq((1L, 0L), (1L, 1L), (1L, 2L), (2L, 0L)))
-    val lumas = frames.filter(_.media_id == 1L).map(_.feature(0))
-    assert(lumas(0) < lumas(1) && lumas(1) < lumas(2),
-      s"frames must brighten: ${lumas.toSeq}")
-    // GIF color quantization keeps levels approximate; the grid cells
-    // within one solid frame still agree with each other exactly
-    frames.foreach(r => assert(r.feature.forall(f => f === r.feature(0))))
-    // every-2nd-frame sampling keeps frames 0 and 2
-    val sampled = Multimodal.decodeFramesBatched(ds, everyN = 2)
-      .filter(col("media_id") === 1L).collect().map(_.frame_idx).sorted
-    assert(sampled.toSeq === Seq(0L, 2L))
   }
 
   test("multimodal: stub decode is deterministic and frame sampling explodes") {

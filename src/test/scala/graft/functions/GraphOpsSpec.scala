@@ -980,114 +980,6 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
-  test("pageRankUntil: a cold run of k rounds is bit-identical to " +
-      "pageRank(iterations = k); warm start after a small delta converges " +
-      "in fewer rounds to a tolerance-valid fixed point") {
-    import org.apache.spark.sql.functions._
-    // 60 nodes so the delta below stays SMALL relative to the graph —
-    // a 24-node fixture gave warm start no room to win (the new node's
-    // cold-entry mass perturbs a third of the graph)
-    val (sym, _) = randomGraph(31L, 60, 400)
-    val tol = 10000L // 1% of the 10^6 initial mass
-    val damp = 850
-    val g = sym.toDF("src", "dst")
-    val Graph.PageRankRun(cold, kCold, coldConv) = Graph.pageRankUntil(g, "src", "dst", tol,
-      maxRounds = 60, dampMilli = damp)
-    assert(coldConv && kCold > 1 && kCold < 60, s"cold rounds $kCold")
-    // round-for-round the recurrence is the gate form's: same rounds =
-    // same bits
-    val fixedK = Graph.pageRank(g, "src", "dst", iterations = kCold,
-      dampMilli = damp)
-    assert(cold.exceptAll(fixedK).isEmpty && fixedK.exceptAll(cold).isEmpty,
-      "convergence-driven cold run diverged from the fixed-round form")
-
-    // delta: connect a BRAND-NEW node 100 into the graph (symmetric) and
-    // add one cross edge — the maintained-edge-table refresh shape
-    val delta = Seq((100L, 0L), (0L, 100L), (100L, 5L), (5L, 100L),
-      (3L, 17L), (17L, 3L))
-    val g2 = (sym ++ delta).distinct.toDF("src", "dst")
-    val Graph.PageRankRun(coldNew, kColdNew, _) = Graph.pageRankUntil(g2, "src", "dst", tol,
-      maxRounds = 60, dampMilli = damp)
-    val Graph.PageRankRun(warm, kWarm, warmConv) = Graph.pageRankUntil(g2, "src", "dst", tol,
-      maxRounds = 60, init = Some(cold), dampMilli = damp)
-    assert(warmConv && kWarm < kColdNew,
-      s"warm start ($kWarm rounds) did not beat cold ($kColdNew) on the delta")
-    // the delta-born node entered at the cold initial value and holds a rank
-    assert(warm.filter(col("node") === 100L).count() === 1L)
-    // tolerance validity: one more application of the map moves nothing
-    // beyond tol (run exactly one round from the warm answer)
-    val Graph.PageRankRun(oneMore, _, _) = Graph.pageRankUntil(g2, "src", "dst",
-      tolMicro = Long.MaxValue, maxRounds = 1, init = Some(warm),
-      dampMilli = damp)
-    val maxMove = oneMore.as("a")
-      .join(warm.as("b"), col("a.node") === col("b.node"))
-      .agg(max(abs(col("a.rank_micro") - col("b.rank_micro"))))
-      .head().getLong(0)
-    assert(maxMove <= tol, s"warm answer not a tol-valid fixed point: $maxMove")
-    // warm and cold answers agree within the contraction band (both are
-    // tol-valid fixed points of the same map; they need not be bit-equal)
-    val gap = warm.as("a").join(coldNew.as("b"), col("a.node") === col("b.node"))
-      .agg(max(abs(col("a.rank_micro") - col("b.rank_micro"))))
-      .head().getLong(0)
-    assert(gap <= 4 * tol, s"warm/cold fixed points too far apart: $gap")
-
-    // the weighted path: same rounds = same bits vs pageRankWeighted
-    val wg = sym.map { case (s, d) => (s, d, 1L + (s + d) % 3) }
-      .toDF("src", "dst", "w")
-    val Graph.PageRankRun(wUntil, kw, _) = Graph.pageRankUntil(wg, "src", "dst", tol,
-      maxRounds = 60, weightCol = Some("w"), dampMilli = damp)
-    val wFixed = Graph.pageRankWeighted(wg, "src", "dst", "w",
-      iterations = kw, dampMilli = damp)
-    assert(wUntil.exceptAll(wFixed).isEmpty && wFixed.exceptAll(wUntil).isEmpty,
-      "weighted convergence run diverged from the fixed-round weighted form")
-  }
-
-  test("hitsUntil: a cold run of k rounds is bit-identical to " +
-      "hits(iterations = k); warm start after a small delta converges in " +
-      "fewer rounds to a tol-valid fixed point") {
-    import org.apache.spark.sql.functions._
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    val (sym, _) = randomGraph(37L, 60, 400)
-    val g = sym.toDF("src", "dst")
-    // tight enough that a cold start pays real mixing rounds — HITS
-    // rescales by the max each round, so a small delta still moves every
-    // node a little and a LOOSE tol lets cold converge as fast as warm
-    val tol = 2000L // 0.2% of the 10^6 rescaled range
-    val Graph.HitsRun(cold, kCold, coldConv) =
-      Graph.hitsUntil(g, "src", "dst", tol, maxRounds = 60)
-    assert(coldConv && kCold > 1 && kCold < 60, s"cold rounds $kCold")
-    // round-for-round the recurrence is the gate form's: same rounds =
-    // same bits
-    val fixedK = Graph.hits(g, "src", "dst", iterations = kCold)
-    assert(same(cold, fixedK),
-      "convergence-driven cold run diverged from the fixed-round form")
-    // delta: a brand-new node into the graph + one cross edge (the
-    // maintained-edge-table refresh shape, as the pageRankUntil spec)
-    val delta = Seq((100L, 0L), (0L, 100L), (100L, 5L), (5L, 100L),
-      (3L, 17L), (17L, 3L))
-    val g2 = (sym ++ delta).distinct.toDF("src", "dst")
-    val Graph.HitsRun(_, kColdNew, _) =
-      Graph.hitsUntil(g2, "src", "dst", tol, maxRounds = 60)
-    val Graph.HitsRun(warm, kWarm, warmConv) =
-      Graph.hitsUntil(g2, "src", "dst", tol, maxRounds = 60,
-        init = Some(cold))
-    assert(warmConv && kWarm < kColdNew,
-      s"warm start ($kWarm rounds) did not beat cold ($kColdNew) on the delta")
-    // the delta-born node holds scores
-    assert(warm.filter(col("node") === 100L).count() === 1L)
-    // tol validity: one more application of the round map moves neither
-    // frame beyond tol
-    val Graph.HitsRun(oneMore, _, _) = Graph.hitsUntil(g2, "src", "dst",
-      tolMicro = Long.MaxValue, maxRounds = 1, init = Some(warm))
-    val move = oneMore.as("a")
-      .join(warm.as("b"), col("a.node") === col("b.node"))
-      .agg(max(greatest(abs(col("a.hub_m") - col("b.hub_m")),
-        abs(col("a.auth_m") - col("b.auth_m")))))
-      .head().getLong(0)
-    assert(move <= tol, s"warm answer not a tol-valid fixed point: $move")
-  }
-
   test("compactTriangleLog / compactCommunityLabelsLog: maintained state " +
       "byte-identical across the log fold; consumed ids refuse loudly; " +
       "maintenance (incl. a delete) continues on the folded log") {
@@ -1161,42 +1053,6 @@ class GraphOpsSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lpa))
   }
 
-  test("kCoreRefreshAuto: routes cold on a shallow-peel graph and delta " +
-      "on a cascade-deep graph — both arms bit-identical to the cold " +
-      "recompute (dispatch is a cost decision, never a correctness one)") {
-    import org.apache.spark.sql.functions._
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    // shallow: dense random graph, k far below typical degree — nobody
-    // near the threshold, the cold peel early-exits
-    val (sym, _) = randomGraph(59L, 40, 320)
-    val half0 = sym.filter(p => p._1 < p._2)
-    val preHalf = half0.toDF("src", "dst")
-    val oldCoreShallow = Graph.kCoreHalf(preHalf, k = 3, rounds = 32)
-    val ins = Seq((0L, 39L), (1L, 38L)).filterNot(half0.toSet)
-    val afterShallow = (half0 ++ ins).toDF("src", "dst")
-    val rShallow = Graph.kCoreRefreshAuto(afterShallow, oldCoreShallow, k = 3)
-    assert(rShallow.route === "cold",
-      "dense graph with nobody near threshold must take the cold peel")
-    assert(same(rShallow.result, Graph.kCoreHalf(afterShallow, 3, 32)))
-    // cascade-deep: a cycle at exactly degree k — every node is cascade
-    // fuel, and the converged old core (the whole cycle) lets the
-    // restricted peel engage
-    val m = 30L
-    val cycle = (0L until m).map(i => (i, (i + 1) % m))
-      .map(p => (math.min(p._1, p._2), math.max(p._1, p._2)))
-    val oldCoreDeep = Graph.kCoreHalf(cycle.toDF("src", "dst"), k = 2, rounds = 32)
-    assert(oldCoreDeep.count() === m, "fixture: the cycle IS the 2-core")
-    // delta: a pendant chain (peels away) + one chord (survives)
-    val afterDeep = (cycle ++ Seq((0L, 100L), (100L, 101L), (5L, 15L)))
-      .toDF("src", "dst")
-    val rDeep = Graph.kCoreRefreshAuto(afterDeep, oldCoreDeep, k = 2)
-    assert(rDeep.route === "delta",
-      "at-threshold cycle must take the restricted delta peel")
-    assert(same(rDeep.result, Graph.kCoreHalf(afterDeep, 2, 32)),
-      "delta route diverged from the cold recompute")
-  }
-
   test("communityLabelsRefreshAuto: routes delta on a delta-local ring " +
       "and cold on a hub graph — both arms bit-identical to the cold " +
       "fixed-round recompute") {
@@ -1225,83 +1081,6 @@ class GraphOpsSpec extends SparkSpec {
       "star delta's 2-hop ball saturates: must take the cold recompute")
     assert(same(rStar.result,
       Graph.communityLabels(starAfter, "src", "dst", rounds)))
-  }
-
-  test("hitsUntil exit residual: a warm refresh where nodes LOST all " +
-      "their edges cannot declare converged at a tolerance the dropped " +
-      "nodes' served-0 fall violates") {
-    import org.apache.spark.sql.functions._
-    val (sym, _) = randomGraph(41L, 40, 260)
-    val main = sym.toDF("src", "dst")
-    // base = the main component + an IDENTICAL disconnected copy (ids
-    // offset by 1000): both halves carry the same score profile and the
-    // global max-rescale is attained in both, so deleting the copy
-    // leaves the main component's scores BIT-identical — the only move
-    // is the dropped copy's fall to served 0, exactly the move the r15
-    // ADVICE said went uncounted
-    val copy = sym.map { case (a, b) => (a + 1000L, b + 1000L) }
-    val base = (sym ++ copy).toDF("src", "dst")
-    val Graph.HitsRun(cold, _, coldConv) =
-      Graph.hitsUntil(base, "src", "dst", tolMicro = 2000L, maxRounds = 60)
-    assert(coldConv)
-    val dropped = cold.filter(col("node") >= 1000L)
-      .select(greatest(col("hub_m"), col("auth_m"))).as[Long].collect().max
-    assert(dropped > 2000L, s"fixture vacuous: dropped score $dropped within tol")
-    // sanity: the main component's warm round-1 is genuinely quiet
-    // (scores already at the fixed point) — pre-fix this run converged
-    // in 1 round, silently absorbing the drop
-    val run1 = Graph.hitsUntil(main, "src", "dst",
-      tolMicro = dropped - 1L, maxRounds = 1, init = Some(cold))
-    assert(!run1.converged,
-      s"converged past a dropped node whose old score $dropped exceeds tol")
-    // at a tolerance that PERMITS the drop, the same round converges —
-    // the exit term is the only thing between the two runs
-    val run2 = Graph.hitsUntil(main, "src", "dst",
-      tolMicro = dropped, maxRounds = 1, init = Some(cold))
-    assert(run2.converged,
-      "exit residual overshoots: blocked convergence the drop permits")
-    // the served frame no longer carries the dropped nodes at all
-    assert(run2.scores.filter(col("node") >= 1000L).isEmpty)
-  }
-
-  test("communityLabelsUntil: a cold run of k rounds is bit-identical to " +
-      "communityLabels(rounds = k); warm start after a delta converges in " +
-      "fewer rounds to a genuine label fixpoint") {
-    import org.apache.spark.sql.functions._
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    // two planted cliques joined by ONE bridge edge: sync LPA converges
-    // (locally-dense neighborhoods — the operator's stated use case)
-    val cliqueA = for (i <- 0 until 8; j <- (i + 1) until 8)
-      yield (i.toLong, j.toLong)
-    val cliqueB = for (i <- 10 until 18; j <- (i + 1) until 18)
-      yield (i.toLong, j.toLong)
-    val base = cliqueA ++ cliqueB ++ Seq((7L, 10L))
-    val g = base.toDF("src", "dst")
-    val Graph.LpaRun(cold, kCold, coldConv) =
-      Graph.communityLabelsUntil(g, "src", "dst", maxRounds = 20)
-    assert(coldConv && kCold < 20, s"cold did not converge: $kCold rounds")
-    assert(same(cold, Graph.communityLabels(g, "src", "dst", rounds = kCold)),
-      "convergence-driven cold run diverged from the fixed-round form")
-    // fixpoint persistence: extra rounds are the identity map
-    assert(same(cold, Graph.communityLabels(g, "src", "dst", rounds = kCold + 2)))
-    // delta: a new node joins clique A
-    val delta = Seq((100L, 0L), (100L, 1L), (100L, 2L))
-    val g2 = (base ++ delta).toDF("src", "dst")
-    val Graph.LpaRun(_, kColdNew, _) =
-      Graph.communityLabelsUntil(g2, "src", "dst", maxRounds = 20)
-    val Graph.LpaRun(warm, kWarm, warmConv) =
-      Graph.communityLabelsUntil(g2, "src", "dst", maxRounds = 20,
-        init = Some(cold))
-    assert(warmConv && kWarm < kColdNew,
-      s"warm start ($kWarm rounds) did not beat cold ($kColdNew) on the delta")
-    // genuine fixpoint: one more vote round changes nothing (the
-    // tol-validity analog for discrete labels)
-    val Graph.LpaRun(oneMore, _, conv1) =
-      Graph.communityLabelsUntil(g2, "src", "dst", maxRounds = 1,
-        init = Some(warm))
-    assert(conv1 && same(oneMore, warm),
-      "warm answer is not a fixpoint of the label map")
   }
 
   test("communityLabelsDelta: the shrinking-cone refresh is bit-identical " +
@@ -1348,40 +1127,4 @@ class GraphOpsSpec extends SparkSpec {
     assert(same(farGot, farOld), "far-from-delta labels were not preserved")
   }
 
-  test("pageRankUntil warm start serves the MAINTAINED co-purchase table: " +
-      "after an order batch lands via mergeCountsPartitioned, re-ranking " +
-      "from the previous snapshot needs fewer rounds than from scratch") {
-    import org.apache.spark.sql.functions._
-    val d = "/root/testdata/sf0.001"
-    val li = graft.sources.Tables.lineitem(spark, d)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-cpw-warm").toString
-    val tol = 10000L
-    // seed: ~97% of orders; delta: the remaining ~3% (complete baskets)
-    val isDelta = pmod(col("l_orderkey"), lit(32)) === 0
-    assert(Graph.maintainCopurchaseWeights(spark, stateDir,
-      li.filter(!isDelta), partitions = 16, batchId = 0L))
-    val snap0 = Graph.readCopurchaseWeights(spark, stateDir).get
-    val Graph.PageRankRun(ranks0, _, _) = Graph.pageRankUntil(snap0, "src", "dst", tol,
-      weightCol = Some("w"))
-    assert(Graph.maintainCopurchaseWeights(spark, stateDir,
-      li.filter(isDelta), partitions = 16, batchId = 1L))
-    val snap1 = Graph.readCopurchaseWeights(spark, stateDir).get
-    val Graph.PageRankRun(_, kCold, coldConv) = Graph.pageRankUntil(snap1, "src", "dst", tol,
-      weightCol = Some("w"))
-    val Graph.PageRankRun(warm, kWarm, warmConv) = Graph.pageRankUntil(snap1, "src", "dst", tol,
-      init = Some(ranks0), weightCol = Some("w"))
-    assert(coldConv && warmConv, "a re-rank of the maintained table hit maxRounds")
-    assert(kWarm < kCold,
-      s"warm refresh ($kWarm rounds) did not beat cold ($kCold)")
-    // tol-validity of the warm answer on the refreshed graph
-    val Graph.PageRankRun(oneMore, _, _) = Graph.pageRankUntil(snap1, "src", "dst",
-      tolMicro = Long.MaxValue, maxRounds = 1, init = Some(warm),
-      weightCol = Some("w"))
-    val maxMove = oneMore.as("a")
-      .join(warm.as("b"), col("a.node") === col("b.node"))
-      .agg(max(abs(col("a.rank_micro") - col("b.rank_micro"))))
-      .head().getLong(0)
-    assert(maxMove <= tol, s"warm refresh not tol-valid: $maxMove")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir))
-  }
 }

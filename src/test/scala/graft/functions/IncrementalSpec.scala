@@ -97,6 +97,15 @@ class IncrementalSpec extends SparkSpec {
     assert(collectDatasheet(Incremental.datasheetFromState(foldedR)) === full)
   }
 
+  /** A datasheet state with every count negated: merging it retracts
+    * the rows it was built from.
+    */
+  private def negated(s: Incremental.DatasheetState) = Incremental.DatasheetState(
+    scalars = s.scalars.select(col("source"), (-col("n_docs")).as("n_docs"),
+      (-col("n_tokens")).as("n_tokens"), (-col("sum_quality_milli")).as("sum_quality_milli")),
+    digests = s.digests.select(col("source"), col("digest"), (-col("cnt")).as("cnt")),
+    langs = s.langs.select(col("source"), col("lang"), (-col("cnt")).as("cnt")))
+
   test("retraction: a COW delete composes with a negated-state downdate") {
     // the GDPR path end-to-end: a corpus lake partitioned by source, a
     // maintained datasheet state, then Lake.deleteByIds removes docs and
@@ -117,8 +126,7 @@ class IncrementalSpec extends SparkSpec {
     val stats = graft.sinks.Lake.deleteByIds(spark, lakeDir, "source", "doc_id", delIds)
     assert(stats.rowsDeleted === delIds.size)
     val downdated = Incremental.mergeDatasheetStates(state0,
-      Incremental.negateDatasheetState(
-        Incremental.datasheetState(deletedSlice, "text", "source", "lang")))
+      negated(Incremental.datasheetState(deletedSlice, "text", "source", "lang")))
     val survivors = spark.read.parquet(lakeDir)
     assert(collectDatasheet(Incremental.datasheetFromState(downdated)) ===
       collectDatasheet(Curation.datasheet(survivors, "text", "source", "lang")),
@@ -129,8 +137,7 @@ class IncrementalSpec extends SparkSpec {
       .as[String].collect().toList.sorted: @unchecked
     val goneSlice = survivors.filter(col("source") === srcGone)
     val downdated2 = Incremental.mergeDatasheetStates(downdated,
-      Incremental.negateDatasheetState(
-        Incremental.datasheetState(goneSlice, "text", "source", "lang")))
+      negated(Incremental.datasheetState(goneSlice, "text", "source", "lang")))
     val view2 = collectDatasheet(Incremental.datasheetFromState(downdated2))
     assert(!view2.exists(_._1 == srcGone), "fully-retracted source survived")
     assert(view2 === collectDatasheet(Curation.datasheet(
@@ -219,8 +226,10 @@ class IncrementalSpec extends SparkSpec {
     // over the remainder — including users whose LAST event of a day
     // died (dau drops) vs users with other same-day events (dau holds)
     val gone = ev.filter(pmod(col("event_id"), lit(3)) === 2)
-    val down = Incremental.mergeDauStates(folded,
-      Incremental.negateDauState(Incremental.dauState(gone)))
+    val g = Incremental.dauState(gone)
+    val down = Incremental.mergeDauStates(folded, Incremental.DauState(
+      days = g.days.select(col("day_start"), (-col("n")).as("n")),
+      users = g.users.select(col("day_start"), col("user_id"), (-col("cnt")).as("cnt"))))
     val remainder = ev.filter(pmod(col("event_id"), lit(3)) =!= 2)
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(countDistinct(col("user_id")).as("dau"), count(lit(1)).as("n"))
@@ -260,60 +269,13 @@ class IncrementalSpec extends SparkSpec {
     // delta-sized join; its negated state downdates the aggregate exactly,
     // including customers whose LAST order dies (key drops from the view)
     val dead = a.filter(pmod(col("o_orderkey"), lit(5)) === 0)
+    val deadState = Incremental.joinAggState(dead.join(b, "custkey"), keys, sums)
     val down = Incremental.mergeJoinAggStates(state,
-      Incremental.negateJoinAggState(
-        Incremental.joinAggState(dead.join(b, "custkey"), keys, sums),
-        keys, sums),
+      deadState.select(keys.map(col) ++ sums.map(c => (-col(c)).as(c)) :+
+        (-col("n")).as("n"): _*),
       keys, sums)
     assert(view(down) === full(a.filter(pmod(col("o_orderkey"), lit(5)) =!= 0)),
       "negated-sum retraction diverges from the survivor recompute")
-  }
-
-  test("streaming join+agg maintenance: micro-batched state equals the " +
-      "full join+aggregate, and a replayed batch is a no-op") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.CoreOps.scaledCenti
-    val a = graft.sources.Tables.orders(spark, d).select(
-      col("o_custkey").as("custkey"), col("o_orderkey"),
-      scaledCenti(col("o_totalprice")).as("p_c"))
-    val b = graft.sources.Tables.customer(spark, d).select(
-      col("c_custkey").as("custkey"), col("c_name"))
-    val keys = Seq("custkey", "c_name")
-    val sums = Seq("p_c")
-    def view(df: org.apache.spark.sql.DataFrame) =
-      df.select("custkey", "c_name", "p_c", "n")
-        .orderBy("custkey").as[(Long, String, Long, Long)].collect().toSeq
-    val want = view(Incremental.joinAggState(a.join(b, "custkey"), keys, sums))
-    val base = java.nio.file.Files.createTempDirectory("graft-joinagg").toString
-    val rows = a.as[(Long, Long, Long)].collect().toSeq
-    val input = MemoryStream[(Long, Long, Long)]
-    val delta = input.toDF().toDF("custkey", "o_orderkey", "p_c")
-    val q = Incremental.maintainJoinAggView(delta, b, "custkey", keys, sums,
-      s"$base/state", s"$base/ck").start()
-    try {
-      val (b1, rest) = rows.splitAt(rows.size / 3)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      for (bx <- Seq(b1, b2, b3)) { input.addData(bx); q.processAllAvailable() }
-    } finally q.stop()
-    val got = Incremental.latestSummary(spark, s"$base/state")
-    assert(got.isDefined)
-    assert(view(got.get) === want,
-      "streamed join+agg state diverges from the full join+aggregate")
-    // replay batch 0 by hand (the foreachBatch at-least-once case): the
-    // beforeBatch=0 read finds NO earlier committed version, so the
-    // regenerated v=0 holds exactly batch 0's own state — and the LATEST
-    // version (v=2) that readers consult is untouched
-    val b1df = rows.take(rows.size / 3).toDF("custkey", "o_orderkey", "p_c")
-    val replayed = Incremental.latestSummary(spark, s"$base/state",
-        beforeBatch = Some(0L))
-      .map(Incremental.mergeJoinAggStates(_,
-        Incremental.joinAggState(b1df.join(b, "custkey"), keys, sums), keys, sums))
-      .getOrElse(Incremental.joinAggState(b1df.join(b, "custkey"), keys, sums))
-    replayed.coalesce(1).write.mode("overwrite").parquet(s"$base/state/v=0")
-    val after = Incremental.latestSummary(spark, s"$base/state")
-    assert(after.isDefined && view(after.get) === want,
-      "replayed batch 0 changed the served join+agg state")
   }
 
   test("partitioned count table: a delta rewrites only its own partitions " +

@@ -87,50 +87,29 @@ class NbDsirSpec extends SparkSpec {
     // appended: a new class AND more docs of an existing class, so the
     // merge exercises both the new-key and the sum path
     val appendedDocs = mk(zhWords, "zh", 1000L, 30) ++ mk(enWords, "en", 1100L, 10)
-    val fz = TextAnalysis.nbFreezeStaleness(
-      frozenDocs.toDF("doc_id", "text", "lang"), "text", "doc_id", "lang")
-    val fa = TextAnalysis.nbFreezeStaleness(
-      appendedDocs.toDF("doc_id", "text", "lang"), "text", "doc_id", "lang")
-    val (mM, cM) = TextAnalysis.nbMergeModels(fz.model, fz.priors, fa.model, fa.priors)
-    val (mR, cR) = TextAnalysis.nbTrainModel(
-      (frozenDocs ++ appendedDocs).toDF("doc_id", "text", "lang"),
-      "text", "lang")
+    // reference train: per-(class, bucket) trigram counts and per-class
+    // train-doc priors over the content-hash train split
+    def train(rows: Seq[(Long, String, String)]) = {
+      val base = rows.toDF("doc_id", "text", "lang")
+        .select(col("text").as("__text"), col("lang").as("__label"))
+        .filter(pmod(Curation.hash48(col("__text")), lit(1000)) < 800)
+      val m = TextAnalysis.charTrigrams(
+          base.withColumn("__id", col("__label")), "__text", "__id")
+        .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(4096)))
+        .groupBy(col("doc_id").as("c"), col("b")).agg(count(lit(1)).as("n_cb"))
+      (m, base.groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c")))
+    }
+    val (mF, pF) = train(frozenDocs)
+    val (mA, pA) = train(appendedDocs)
+    val (mM, cM) = TextAnalysis.nbMergeModels(mF, pF, mA, pA)
+    val (mR, pR) = train(frozenDocs ++ appendedDocs)
+    val cR = mR.groupBy(col("c")).agg(sum(col("n_cb")).as("n_c")).join(pR, "c")
     assert(mM.as[(String, Long, Long)].collect().toSet ===
       mR.as[(String, Long, Long)].collect().toSet,
       "merged (c, b, n_cb) table diverges from the retrain")
     assert(cM.as[(String, Long, Long)].collect().toSet ===
       cR.as[(String, Long, Long)].collect().toSet,
       "merged classes table diverges from the retrain")
-  }
-
-  test("nbModelStalenessReportFrom: the frozen-artifact serving form " +
-      "produces the IDENTICAL report row to the self-contained form, " +
-      "including through a save/load round-trip") {
-    def mk(words: Seq[String], label: String, base: Long, n: Int) =
-      (0 until n).map { i =>
-        val txt = (0 until 12).map(j => words((i * 7 + j * 3) % words.size))
-          .mkString(" ")
-        (base + i, txt, label)
-      }
-    val frozenDocs = mk(enWords, "en", 0L, 40) ++ mk(frWords, "fr", 100L, 40)
-    val appendedDocs = mk(zhWords, "zh", 1000L, 30) ++ mk(enWords, "en", 1100L, 10)
-    def row(df: org.apache.spark.sql.DataFrame): Seq[Any] = df.head().toSeq
-    val self = row(TextAnalysis.nbModelStalenessReport(
-      (frozenDocs ++ appendedDocs).toDF("doc_id", "text", "lang"),
-      "text", "doc_id", "lang", col("doc_id") < 1000L))
-    val fz = TextAnalysis.nbFreezeStaleness(
-      frozenDocs.toDF("doc_id", "text", "lang"), "text", "doc_id", "lang")
-    val appended = appendedDocs.toDF("doc_id", "text", "lang")
-    val fromArtifacts = row(TextAnalysis.nbModelStalenessReportFrom(
-      fz, appended, "text", "doc_id", "lang"))
-    assert(fromArtifacts === self,
-      "appended-sized serving form diverges from the self-contained report")
-    val dir = java.nio.file.Files.createTempDirectory("graft-nbfz").toString
-    TextAnalysis.saveNbFrozenModel(fz, dir)
-    val loaded = TextAnalysis.loadNbFrozenModel(spark, dir)
-    assert(row(TextAnalysis.nbModelStalenessReportFrom(
-      loaded, appended, "text", "doc_id", "lang")) === self,
-      "save/load round-trip changed the report")
   }
 
   test("nbClassify separates planted languages and scores every doc once") {
@@ -168,102 +147,6 @@ class NbDsirSpec extends SparkSpec {
     assert(weights.forall(_ === 0L), s"got nonzero: ${weights.filter(_ != 0L).take(5).toSeq}")
   }
 
-  test("nbScoreAgainst on a frozen model reproduces nbClassify bit-for-bit") {
-    val docs = planted
-    val (model, classes) = TextAnalysis.nbTrainModel(docs, "text", "lang")
-    val viaModel = TextAnalysis.nbScoreAgainst(docs, "text", "doc_id", model, classes)
-      .as[(Long, String, Long)].collect().sortBy(_._1)
-    val direct = TextAnalysis.nbClassify(docs, "text", "doc_id", "lang")
-      .as[(Long, String, Long)].collect().sortBy(_._1)
-    assert(viaModel.nonEmpty)
-    assert(viaModel === direct)
-  }
-
-  test("nbScoreAgainst smooths unseen buckets instead of erroring") {
-    val (model, classes) = TextAnalysis.nbTrainModel(planted, "text", "lang")
-    val oov = Seq((999L, "zzqj xvwk bbfg qqpl")).toDF("doc_id", "text")
-    val out = TextAnalysis.nbScoreAgainst(oov, "text", "doc_id", model, classes)
-      .as[(Long, String, Long)].collect()
-    assert(out.length === 1, "out-of-vocabulary text still gets one prediction")
-  }
-
-  test("dsirScoreAgainst on a frozen model reproduces dsirWeights bit-for-bit") {
-    val docs = planted
-    val model = Curation.dsirTrainModel(docs, "text", "doc_id", col("lang") === "en")
-      .cache()
-    val (tt, tr) = Curation.dsirModelTotals(model)
-    val viaModel = Curation.dsirScoreAgainst(docs, "text", "doc_id", model, tt, tr)
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    val direct = Curation.dsirWeights(docs, "text", "doc_id", col("lang") === "en")
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    assert(viaModel.nonEmpty)
-    assert(viaModel === direct)
-    model.unpersist()
-  }
-
-  test("streamed NB classification converges to the batch classifier") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val docs = planted
-    val (model, classes) =
-      TextAnalysis.nbTrainModel(docs, "text", "lang") match {
-        case (m, c) => (m.cache(), c.cache())
-      }
-    val rows = docs.select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
-    val input = MemoryStream[(Long, String)]
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val q = graft.streaming.StreamingCuration.nbClassifyStream(
-      input.toDF().toDF("doc_id", "text"), model, classes, "text", "doc_id") {
-      out => got ++= out.as[(Long, String, Long)](
-        org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.scalaLong))
-        .collect()
-    }.start()
-    try {
-      rows.grouped(25).foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
-      val batch = TextAnalysis.nbClassify(docs, "text", "doc_id", "lang")
-        .as[(Long, String, Long)].collect().sortBy(_._1)
-      assert(got.nonEmpty)
-      assert(got.sortBy(_._1).toArray === batch)
-    } finally { q.stop(); model.unpersist(); classes.unpersist() }
-  }
-
-  test("streamed DSIR weights converge to the batch weights") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val docs = planted
-    val model = Curation.dsirTrainModel(docs, "text", "doc_id",
-      col("lang") === "en").cache()
-    val (tt, tr) = Curation.dsirModelTotals(model)
-    val rows = docs.select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
-    val base = 1700000000000000L
-    val input = MemoryStream[(Long, String, Long)]
-    val scored = graft.streaming.StreamingCuration.dsirWeightStream(
-      input.toDF().toDF("doc_id", "text", "ts_us")
-        .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us"),
-      model, tt, tr, "text", "doc_id", "ts",
-      horizon = "1 second", windowDur = "1 minute")
-    val q = scored.writeStream.format("memory").queryName("conv_dsir")
-      .outputMode(OutputMode.Append).start()
-    try {
-      rows.grouped(25).foreach { b =>
-        input.addData(b.map { case (id, t) => (id, t, base + id) }.toSeq)
-        q.processAllAvailable()
-      }
-      input.addData((-1L, "flush sentinel document", base + 365L * 86400000000L))
-      q.processAllAvailable()
-      val streamed = spark.table("conv_dsir").filter(col("doc_id") >= 0)
-        .select(col("doc_id"), col("n_tri"), col("dsir_w_q10"))
-        .as[(Long, Long, Long)].collect().sortBy(_._1)
-      val batch = Curation.dsirWeights(docs, "text", "doc_id",
-        col("lang") === "en")
-        .as[(Long, Long, Long)].collect().sortBy(_._1)
-      assert(streamed.nonEmpty)
-      assert(streamed === batch)
-    } finally { q.stop(); model.unpersist() }
-  }
-
   private val newWords = Seq("zorx", "blivet", "quux", "fnord", "glorp",
     "snarf", "wibble", "plugh", "vroom", "kzzrt")
 
@@ -277,7 +160,7 @@ class NbDsirSpec extends SparkSpec {
   test("dsirModelStalenessReport: appended NON-target docs in an unseen " +
       "vocabulary fire sign flips and share drift (the frozen model would " +
       "mis-route them as target-like); a same-distribution control reads " +
-      "quiet; the serving From-form reproduces the row bit-for-bit") {
+      "quiet") {
     val frozenDocs = mkDocs(enWords, "en", 0L, 40) ++ mkDocs(frWords, "fr", 100L, 40)
     def report(appended: Seq[(Long, String, String)]) =
       Curation.dsirModelStalenessReport(
@@ -302,27 +185,11 @@ class NbDsirSpec extends SparkSpec {
     assert(dMax >= 5L * math.max(1L, cMax),
       s"share drift did not fire: planted $dMax vs control $cMax")
     assert(dGap > 0L)
-    // serving form over a pre-frozen bundle == the self-contained row,
-    // including through a save/load round-trip (the NB convention)
-    val fr = Curation.dsirFreezeStaleness(
-      frozenDocs.toDF("doc_id", "text", "lang"), "text", "doc_id",
-      col("lang") === "en")
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsir-frz").toString
-    Curation.saveDsirFrozenModel(fr, dir)
-    fr.model.unpersist()
-    val fromRow = Curation.dsirModelStalenessReportFrom(
-      Curation.loadDsirFrozenModel(spark, dir),
-      drifted.toDF("doc_id", "text", "lang"), "text", "doc_id",
-      col("lang") === "en")
-      .as[(Long, Long, Long, Long, Long, Long, Long, Long)].head()
-    assert(fromRow === report(drifted),
-      "serving From-form through save/load diverges from the " +
-        "self-contained report")
   }
 
   test("ccnetCutsStaleness: a shifted appended distribution fires the " +
       "bucket-flip rate and cut drift; a verbatim same-distribution " +
-      "control reads exactly quiet; From-form == self-contained") {
+      "control reads exactly quiet") {
     val frozenDocs = mkDocs(enWords, "en", 0L, 40) ++ mkDocs(frWords, "fr", 100L, 40)
     val src = "web"
     def df(rows: Seq[(Long, String, String)]) =
@@ -348,20 +215,6 @@ class NbDsirSpec extends SparkSpec {
     val (_, _, _, _, _, _, cDt1, cDt2, cFlips, _) = report(control)
     assert(cFlips === 0L && cDt1 === 0L && cDt2 === 0L,
       s"verbatim control not quiet: flips $cFlips d_t1 $cDt1 d_t2 $cDt2")
-    // serving form over a pre-frozen bundle == the self-contained row,
-    // including through a save/load round-trip
-    val fz = Curation.ccnetFreezeCuts(df(frozenDocs), "text", "doc_id", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccnet-frz").toString
-    Curation.saveCcnetFrozenCuts(fz, dir)
-    fz.lmModel.unpersist(); fz.cuts.unpersist()
-    val fromRow = Curation.ccnetCutsStalenessFrom(
-      Curation.loadCcnetFrozenCuts(spark, dir), df(drifted),
-      "text", "doc_id", "source")
-      .as[(String, Long, Long, Long, Long, Long, Long, Long, Long, Long)]
-      .head()
-    assert(fromRow === report(drifted),
-      "serving From-form through save/load diverges from the " +
-        "self-contained report")
   }
 
   test("dsirWeights ranks target-like docs strictly above the rest") {

@@ -3,13 +3,11 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.functions.Dedup
-import graft.functions.Checkpoints.Owned
 
 /** The streaming-curation capstone's exactly-once story, end to end:
   *
@@ -127,37 +125,6 @@ class CurationPipelineSpec extends SparkSpec {
     assert(bandRows(a) === bandRows(b), "index band content identical modulo batch")
     assert(metricTotals(a) === metricTotals(b))
     assert(metricTotals(a)("en")._1 === 6L, "junk doc gated before metrics")
-  }
-
-  test("metrics branch with NB routing groups by the trained router's labels") {
-    import spark.implicits._
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "lang", "text").checkpointed()
-    // route by SOURCE (domain routing): guaranteed to disagree with the
-    // heuristic language label, so the swap is observable in the metrics
-    val (m, c) = graft.functions.TextAnalysis.nbTrainModel(docs, "text", "source")
-    val gated = StreamingCuration.annotateAndGate(docs, "text", minQualityMilli = 0)
-      .checkpointed()
-    val dir = Files.createTempDirectory("graft_nbmetrics").toString
-    CurationPipeline.metricsBatch(gated, 0L, dir, "text", "doc_id", Some((m, c)))
-    val got = spark.read.parquet(dir)
-      .select("lang_pred", "docs")
-      .as[(String, Long)].collect().sortBy(_._1)
-    // expected: the batch scorer's labels, heuristic fallback for unscored
-    val expected = gated.join(
-      graft.functions.TextAnalysis.nbScoreAgainst(gated, "text", "doc_id", m, c)
-        .select(col("doc_id"), col("pred_label")),
-      Seq("doc_id"), "left")
-      .withColumn("lp", coalesce(col("pred_label"), col("lang_pred")))
-      .groupBy("lp").agg(count(lit(1)).as("docs"))
-      .as[(String, Long)].collect().sortBy(_._1)
-    assert(got.nonEmpty)
-    assert(got === expected)
-    // the trained router must actually disagree somewhere with the
-    // heuristic on this corpus — otherwise the test proves nothing
-    val heuristic = gated.groupBy("lang_pred").agg(count(lit(1)).as("docs"))
-      .as[(String, Long)].collect().sortBy(_._1)
-    assert(got !== heuristic)
   }
 
   test("replaying a micro-batch with the same batch id changes nothing") {

@@ -3,17 +3,17 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
 
 final case class CurDoc(doc_id: Long, source: String, text: String, ts: Timestamp)
 
-/** The curation pipeline running as a stream: quality gate, exact dedup
-  * within the watermark horizon, deterministic sampling and PII scrub all
-  * compose on a MemoryStream of documents, with duplicates dropped across
-  * micro-batches.
+/** The shipped curation stages running as a stream: the quality gate,
+  * exact dedup on the gate's fingerprint within the watermark horizon,
+  * deterministic sampling and PII scrub all compose on a MemoryStream of
+  * documents, with duplicates dropped across micro-batches and a row's
+  * keep decision independent of the micro-batch it arrives in.
   */
 class StreamingCurationSpec extends SparkSpec {
   import spark.implicits._
@@ -25,12 +25,14 @@ class StreamingCurationSpec extends SparkSpec {
       "through the field and the sun is warm on the grass today"
 
   test("streaming pipeline gates, dedups across batches, samples and scrubs") {
+    import graft.functions.Curation
     val input = MemoryStream[CurDoc]
-    val out = StreamingCuration.pipeline(
-      input.toDF(), "doc_id", "text", "source", "ts",
-      minQualityMilli = 400,
-      ratesMilli = Map("keepall" -> 1000), defaultRateMilli = 1000,
-      horizon = "1 minute")
+    val gated = StreamingCuration.annotateAndGate(input.toDF(), "text", minQualityMilli = 400)
+    val out = Curation.piiScrub(
+      Curation.stratifiedSample(
+        gated.withWatermark("ts", "1 minute").dropDuplicatesWithinWatermark("fp"),
+        "doc_id", "source", Map("keepall" -> 1000), 1000),
+      "text")
     val q = out.writeStream.format("memory").queryName("cur_out")
       .outputMode(OutputMode.Append).start()
     try {
@@ -55,11 +57,10 @@ class StreamingCurationSpec extends SparkSpec {
     val docs = (1L to 200L).map(i =>
       CurDoc(i, if (i % 2 == 0) "even" else "odd", goodText + " " + i, t(i)))
     val input = MemoryStream[CurDoc]
-    val out = StreamingCuration.pipeline(
-      input.toDF(), "doc_id", "text", "source", "ts",
-      minQualityMilli = 1,
-      ratesMilli = Map("even" -> 300), defaultRateMilli = 700,
-      horizon = "1 minute")
+    // the shipped gate, then the sampler, on a stream
+    val out = graft.functions.Curation.stratifiedSample(
+      StreamingCuration.annotateAndGate(input.toDF(), "text", minQualityMilli = 1),
+      "doc_id", "source", Map("even" -> 300), 700)
     val q = out.writeStream.format("memory").queryName("cur_sample")
       .outputMode(OutputMode.Append).start()
     try {
@@ -70,32 +71,6 @@ class StreamingCurationSpec extends SparkSpec {
         docs.toDF(), "doc_id", "source", Map("even" -> 300), 700)
         .select("doc_id").as[Long].collect().toSet
       assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("streaming contamination gate holds out bench-overlapping docs") {
-    val bench = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
-      .toDF("bench_id", "text")
-    val bloom = graft.functions.Curation.benchShingleBloom(bench, "text", n = 3)
-
-    val leaky = "intro words then alpha beta gamma delta epsilon as in the benchmark"
-    val clean = "wholly unrelated content about rivers mountains and weather patterns"
-    val input = MemoryStream[CurDoc]
-    val out = StreamingCuration.contaminationGate(
-      input.toDF(), "text", bloom, n = 3, maxBenchShingles = 1)
-    val q = out.writeStream.format("memory").queryName("cont_gate")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(CurDoc(10L, "s", leaky, t(1)), CurDoc(11L, "s", clean, t(2)))
-      q.processAllAvailable()
-      input.addData(CurDoc(12L, "s", clean + " again", t(3)))
-      q.processAllAvailable()
-      val kept = spark.table("cont_gate").select("doc_id").as[Long].collect().sorted
-      assert(kept.toSeq === Seq(11L, 12L), "leaky doc must be held out")
-      // the kept docs' hit counts are zero (bloom has no false negatives,
-      // and these shingle sets are disjoint from the bench)
-      val hits = spark.table("cont_gate").select("bench_hits").as[Int].collect()
-      assert(hits.forall(_ === 0))
     } finally q.stop()
   }
 }

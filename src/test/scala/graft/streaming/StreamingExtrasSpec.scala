@@ -8,61 +8,18 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
 import graft.sinks.Sinks
-import graft.functions.Checkpoints.Owned
 
 final case class DocEv(ts: Timestamp, fp: String, payload: String)
 
 /** Streaming dedup, single-pass fanout sink, and the index and
-  * curation stream wrappers.
+  * maintained-state stream wrappers: each streamed run converges to its
+  * batch answer.
   */
 class StreamingExtrasSpec extends SparkSpec {
   import spark.implicits._
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def t(sec: Long) = new Timestamp(sec * 1000)
-
-  test("diversityAssignStream: frozen-cut verdicts equal the batch " +
-      "sampler on the frozen corpus, streamed == batch scorer") {
-    import graft.functions.Similarity
-    val vecs = (0L until 100L).map { id =>
-      (id, Array.tabulate(16)(i =>
-        (((id * 2654435761L + i * 40503L) % 1009L) / 500.0f) - 1.0f))
-    }
-    val corpus = vecs.toDF("vec_id", "vec")
-    val cent = Similarity.kmeansCentroids(corpus, centroidEvery = 20, iters = 1)
-    val cuts = Similarity.diversityCuts(corpus, cent, keepPermille = 500)
-      .checkpointed()
-    // batch fidelity on the frozen corpus: stateless verdicts equal the
-    // rank-based keep flags (this corpus has no boundary ties — pinned,
-    // so the equality below is total, not vacuously filtered)
-    val served = Similarity.diversityAssign(corpus, cent, cuts)
-      .select("vec_id", "verdict").as[(Long, String)].collect().toMap
-    assert(!served.values.exists(_ == "boundary"),
-      "fixture corpus must be boundary-free")
-    val batch = Similarity.diversitySample(corpus, cent, keepPermille = 500)
-      .select("vec_id", "keep").as[(Long, Long)].collect().toMap
-    assert(batch.keySet === served.keySet)
-    batch.foreach { case (id, keep) =>
-      assert(served(id) === (if (keep == 1L) "keep" else "drop"),
-        s"vec $id: batch keep=$keep served=${served(id)}")
-    }
-    // streamed micro-batches equal the batch scorer row-for-row
-    val input = MemoryStream[(Long, Array[Float])]
-    val got = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, String)]()
-    val q = graft.streaming.StreamingCuration.diversityAssignStream(
-      input.toDF().toDF("vec_id", "vec"), cent, cuts) { res =>
-        got ++= res.as[(Long, Long, Long, String)].collect()
-      }.start()
-    try {
-      input.addData(vecs.take(60): _*)
-      q.processAllAvailable()
-      input.addData(vecs.drop(60): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val batchAll = Similarity.diversityAssign(corpus, cent, cuts)
-      .as[(Long, Long, Long, String)].collect().toSet
-    assert(got.toSet === batchAll && got.size === 100)
-  }
 
   test("maintainTriangleCountsStream: micro-batched edge ingest maintains " +
       "per-node triangle counts equal to the full recompute; a DELETE " +
@@ -452,25 +409,6 @@ class StreamingExtrasSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("progress listener captures batch metrics and state rows") {
-    val logger = Observability.attach(spark)
-    val input = MemoryStream[DocEv]
-    val agg = input.toDF().groupBy("fp").count()
-    val q = agg.writeStream.format("memory").queryName("obs_out")
-      .outputMode(OutputMode.Complete).start()
-    try {
-      input.addData(DocEv(t(1), "A", "x"), DocEv(t(2), "B", "y"))
-      q.processAllAvailable()
-      // listener events are async; wait briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (logger.snapshots.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      val withRows = logger.snapshots.filter(_.numInputRows > 0)
-      assert(withRows.nonEmpty)
-      assert(withRows.exists(_.stateRows > 0))
-    } finally { q.stop(); Observability.detach(spark, logger) }
-  }
-
   test("lshParams picks sensible band splits for the threshold") {
     import graft.functions.Dedup.lshParams
     assert(lshParams(0.7, 16) === (4, 4))
@@ -613,77 +551,6 @@ class StreamingExtrasSpec extends SparkSpec {
     assert(indexed === Set(1L, 10L, 21L))
   }
 
-  test("gopherGateStream flags equal the batch gopherRules row-for-row") {
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text").checkpointed()
-    val rows = docs.as[(Long, String)].collect().sortBy(_._1)
-    val input = MemoryStream[(Long, String)]
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, Long, Long, Long)]
-    val q = StreamingCuration.gopherGateStream(
-      input.toDF().toDF("doc_id", "text"), "text", "doc_id") { out =>
-      got ++= out.select("doc_id", "n_words", "r_nwords", "r_wordlen",
-        "r_alpha", "r_stop", "r_rep", "keep")
-        .as[(Long, Long, Long, Long, Long, Long, Long, Long)].collect()
-    }.start()
-    try {
-      rows.grouped(40).foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
-      val batch = graft.functions.Curation.gopherRules(docs, "text", "doc_id")
-        .select("doc_id", "n_words", "r_nwords", "r_wordlen",
-          "r_alpha", "r_stop", "r_rep", "keep")
-        .as[(Long, Long, Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-      assert(got.nonEmpty)
-      assert(got.sortBy(_._1).toArray === batch)
-    } finally q.stop()
-  }
-
-  test("ccnetAssignStream buckets equal the batch ccnetBuckets on the frozen corpus") {
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text").checkpointed()
-    // train tier: freeze the trigram LM + the per-source tercile cuts
-    val model = graft.functions.TextAnalysis
-      .trigramModel(docs, "text", "doc_id").cache()
-    val total = model.agg(sum(col("cnt"))).as[Long].head()
-    val cuts = graft.functions.Curation
-      .ccnetThresholds(docs, "text", "doc_id", "source").checkpointed()
-    val rows = docs.select("doc_id", "source", "text")
-      .as[(Long, String, String)].collect().sortBy(_._1)
-    val base = 1704067200000000L
-    val input = MemoryStream[(Long, String, String, Long)]
-    val assigned = StreamingCuration.ccnetAssignStream(
-      input.toDF().toDF("doc_id", "source", "text", "ts_us")
-        .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us"),
-      model, total, cuts, "text", "doc_id", "source", "ts",
-      horizon = "1 second", windowDur = "1 minute")
-    val q = assigned.writeStream.format("memory").queryName("ccnet_assign")
-      .outputMode(OutputMode.Append).start()
-    try {
-      rows.grouped(40).foreach { b =>
-        input.addData(b.map { case (id, src, txt) => (id, src, txt, base + id) }.toSeq)
-        q.processAllAvailable()
-      }
-      // a source the cuts have never seen must surface as "unknown",
-      // not silently drop
-      input.addData((999999L, "srcX", "document from a brand new source",
-        base + 999999L))
-      input.addData((-1L, "src0", "flush sentinel document",
-        base + 365L * 86400000000L))
-      q.processAllAvailable()
-      val streamed = spark.table("ccnet_assign")
-        .filter(col("doc_id") >= 0 && col("doc_id") < 999999L)
-        .select("doc_id", "source", "avg_surprisal_q10", "ppl_bucket")
-        .as[(Long, String, Long, String)].collect().sortBy(_._1)
-      val unknown = spark.table("ccnet_assign").filter(col("doc_id") === 999999L)
-        .select("ppl_bucket").as[String].collect()
-      val batch = graft.functions.Curation
-        .ccnetBuckets(docs, "text", "doc_id", "source")
-        .select("doc_id", "source", "avg_surprisal_q10", "ppl_bucket")
-        .as[(Long, String, Long, String)].collect().sortBy(_._1)
-      assert(streamed.nonEmpty)
-      assert(streamed === batch)
-      assert(unknown.toSeq === Seq("unknown"))
-    } finally { q.stop(); model.unpersist() }
-  }
-
   test("indexAppendStream converges to the one-shot batch index") {
     import graft.functions.Similarity
     // clustered fixture shared with the PQ batch spec: 4 clusters, 16 dims
@@ -730,203 +597,4 @@ class StreamingExtrasSpec extends SparkSpec {
     assert(got.exists(_ >= 60L), s"appended vectors must be searchable, got ${got.toSeq}")
   }
 
-  test("quantileNormAssignStream equals the batch normalization row-for-row") {
-    val d = "/root/testdata/sf0.001"
-    val docs = graft.sources.Tables.documents(spark, d)
-      .select("doc_id", "source", "text").checkpointed()
-    val (perSrc, inv) = graft.functions.Curation.quantileNormTables(
-      docs, "text", "doc_id", "source")
-    val frozenSrc = perSrc.checkpointed()
-    val frozenInv = inv.checkpointed()
-    val rows = docs.as[(Long, String, String)].collect().sortBy(_._1)
-    val input = MemoryStream[(Long, String, String)]
-    val scored = StreamingCuration.quantileNormAssignStream(
-      input.toDF().toDF("doc_id", "source", "text"),
-      "text", "doc_id", "source", frozenSrc, frozenInv)
-    val q = scored.writeStream.format("memory").queryName("qnorm_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      rows.grouped(70).foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    val streamed = spark.table("qnorm_stream")
-      .as[(Long, String, Long, Long, Long)].collect().sortBy(_._1)
-    val batch = graft.functions.Curation.quantileNormalizeQuality(
-      docs, "text", "doc_id", "source")
-      .as[(Long, String, Long, Long, Long)].collect().sortBy(_._1)
-    assert(streamed.nonEmpty)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("profileStream equals the exact batch profile (HLL uniq within 5%)") {
-    val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("ts_us"))
-      .checkpointed()
-    val cols = Seq("event_id" -> "long", "user_id" -> "long",
-      "event_type" -> "string", "value" -> "double_centi")
-    val rows = ev.as[(Long, Long, String, Double, Long)].collect().sortBy(_._1)
-    // all rows into ONE 1-minute window keyed off a fixed base instant
-    val base = 1704067200000000L
-    val input = MemoryStream[(Long, Long, String, Double, Long)]
-    val prof = StreamingCuration.profileStream(
-      input.toDF().toDF("event_id", "user_id", "event_type", "value", "seq")
-        .withColumn("ts", timestamp_micros(lit(base) + col("seq"))).drop("seq"),
-      "ts", cols, horizon = "1 second", windowDur = "1 minute")
-    val q = prof.writeStream.format("memory").queryName("profile_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      rows.grouped(300).zipWithIndex.foreach { case (b, i) =>
-        input.addData(b.map { case (id, u, t, v, _) => (id, u, t, v, id) }.toSeq)
-        q.processAllAvailable()
-      }
-      input.addData((-1L, -1L, "flush", 0.0, 365L * 86400000000L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("profile_stream")
-      .filter(col("column") =!= lit("flush")) // (flush lands in a later window)
-      .filter(col("window_start") === timestamp_micros(lit(base)))
-      .select("column", "n_rows", "n_nulls", "approx_distinct",
-        "min_repr", "max_repr")
-      .as[(String, Long, Long, Long, String, String)].collect().sortBy(_._1)
-    val batch = graft.functions.Profiling.tableProfile(ev, cols)
-      .select("column", "n_rows", "n_nulls", "n_distinct", "min_repr", "max_repr")
-      .as[(String, Long, Long, Long, String, String)].collect().sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === batch.map(_._1).toSeq)
-    streamed.zip(batch).foreach {
-      case ((c, nr, nn, uniq, mn, mx), (_, bnr, bnn, bexact, bmn, bmx)) =>
-        assert(nr === bnr && nn === bnn && mn === bmn && mx === bmx, c)
-        assert(math.abs(uniq - bexact) <= math.max(1L, bexact / 20),
-          s"$c approx $uniq vs exact $bexact")
-    }
-  }
-
-  test("datasheetStream card equals the batch corpus_datasheet on the frozen corpus") {
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "lang", "text").checkpointed()
-    val rows = docs.as[(Long, String, String, String)].collect().sortBy(_._1)
-    // every corpus doc lands in ONE 1-minute window (ids are micros
-    // offsets << 60s); the far-future sentinel closes it
-    val base = 1704067200000000L
-    val input = MemoryStream[(Long, String, String, String, Long)]
-    val card = StreamingCuration.datasheetStream(
-      input.toDF().toDF("doc_id", "source", "lang", "text", "ts_us")
-        .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us"),
-      "text", "source", "lang", "ts",
-      horizon = "1 second", windowDur = "1 minute")
-    val q = card.writeStream.format("memory").queryName("datasheet_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      rows.grouped(100).foreach { b =>
-        input.addData(b.map { case (id, src, lg, txt) => (id, src, lg, txt, base + id) }.toSeq)
-        q.processAllAvailable()
-      }
-      input.addData((-1L, "srcflush", "en", "flush sentinel",
-        base + 365L * 86400000000L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("datasheet_stream")
-      .filter(col("source") =!= "srcflush")
-      .select("source", "n_docs", "n_tokens", "approx_uniq_texts",
-        "sum_quality_milli", "n_langs")
-      .as[(String, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    val batch = graft.functions.LlmQueries.queries("corpus_datasheet")(
-      spark, "/root/testdata/sf0.001")
-      .as[(String, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === batch.map(_._1).toSeq)
-    streamed.zip(batch).foreach {
-      case ((src, nd, nt, uniq, sq, nl), (_, bnd, bnt, buniq, bsq, bnl)) =>
-        assert(nd === bnd && nt === bnt && sq === bsq && nl === bnl, src)
-        // HLL estimate within 5% of the exact distinct count
-        assert(math.abs(uniq - buniq) <= math.max(1L, buniq / 20),
-          s"$src approx $uniq vs exact $buniq")
-    }
-  }
-
-  test("embeddingDriftStream equals the batch embeddingDrift on the frozen corpus") {
-    // same split as the embedding_drift gate query: even vec_ids are the
-    // frozen reference, odd vec_ids arrive as the candidate stream — all
-    // inside ONE 1-minute window, closed by a far-future sentinel
-    val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select(col("vec_id"), col("embedding")).checkpointed()
-    val refMeans = graft.functions.Profiling
-      .dimMeans(emb.filter(col("vec_id") % 2 === 0), "embedding")
-      .checkpointed()
-    val cand = emb.filter(col("vec_id") % 2 =!= 0)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val base = 1704067200000000L
-    val input = MemoryStream[(Long, Array[Float], Long)]
-    val drift = StreamingCuration.embeddingDriftStream(
-      input.toDF().toDF("vec_id", "embedding", "ts_us")
-        .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us"),
-      "ts", "embedding", refMeans,
-      horizon = "1 second", windowDur = "1 minute")
-    val q = drift.writeStream.format("memory").queryName("drift_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      cand.grouped(100).foreach { b =>
-        input.addData(b.map { case (id, v) => (id, v, base + id) }.toSeq)
-        q.processAllAvailable()
-      }
-      input.addData((-1L, Array(0.0f), base + 365L * 86400000000L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("drift_stream")
-      .filter(col("window_start") === timestamp_micros(lit(base)))
-      .select("dim", "n_ref", "n_cand", "ref_mean_q6", "cand_mean_q6", "delta_q6")
-      .as[(Int, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    val batch = graft.functions.Profiling
-      .embeddingDrift(emb, "embedding", col("vec_id") % 2 === 0)
-      .select("dim", "n_ref", "n_cand", "ref_mean_q6", "cand_mean_q6", "delta_q6")
-      .as[(Int, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    assert(streamed.nonEmpty)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("snapshotDiffStream equals the batch snapshotDiff minus 'removed' on the frozen corpus") {
-    // reference = the corpus; candidate stream = a deterministic edit:
-    // every 5th doc's text changed, every 7th doc dropped (those become
-    // the batch diff's 'removed' rows, unobservable in a stream), plus
-    // planted brand-new ids — so all three streaming statuses occur
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text").checkpointed()
-    val candDf = docs.filter(col("doc_id") % 7 =!= 0)
-      .select(col("doc_id"), col("source"),
-        when(col("doc_id") % 5 === 0, concat(col("text"), lit(" EDITED")))
-          .otherwise(col("text")).as("text"))
-      .unionAll(docs.filter(col("doc_id") % 11 === 0)
-        .select(col("doc_id") + 1000000L, col("source"), col("text")))
-      .checkpointed()
-    val refDg = graft.functions.Profiling.refDigests(docs, "doc_id", "text")
-      .checkpointed()
-    val cand = candDf.as[(Long, String, String)].collect().sortBy(_._1)
-    val base = 1704067200000000L
-    val input = MemoryStream[(Long, String, String, Long)]
-    val diff = StreamingCuration.snapshotDiffStream(
-      input.toDF().toDF("doc_id", "source", "text", "ts_us")
-        .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us"),
-      "ts", "doc_id", "text", "source", refDg,
-      horizon = "1 second", windowDur = "1 minute")
-    val q = diff.writeStream.format("memory").queryName("snapdiff_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      cand.zipWithIndex.grouped(100).foreach { b =>
-        input.addData(b.map { case ((id, src, txt), i) => (id, src, txt, base + i) }.toSeq)
-        q.processAllAvailable()
-      }
-      input.addData((-1L, "srcflush", "flush", base + 365L * 86400000000L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("snapdiff_stream")
-      .filter(col("source") =!= "srcflush")
-      .select("source", "status", "n_docs")
-      .as[(String, String, Long)].collect().sortBy(r => (r._1, r._2))
-    val batch = graft.functions.Profiling
-      .snapshotDiff(docs, candDf, "doc_id", "text", "source")
-      .filter(col("status") =!= "removed")
-      .as[(String, String, Long)].collect().sortBy(r => (r._1, r._2))
-    assert(streamed.nonEmpty)
-    assert(streamed.count(_._2 == "added") > 0)
-    assert(streamed.count(_._2 == "changed") > 0)
-    assert(streamed.toSeq === batch.toSeq)
-  }
 }
