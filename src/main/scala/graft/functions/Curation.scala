@@ -138,9 +138,7 @@ object Curation {
       isBench: Column,
       n: Int,
       maxShingleDf: Int,
-      minContainMilli: Int,
-      bloomItems: Long = 1L << 18,
-      bloomBits: Long = 1L << 22): DataFrame = {
+      minContainMilli: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -151,9 +149,11 @@ object Curation {
       .filter(size(col("sh")) > 0)
     val ex = sh.select(col("doc"), col("is_bench"), explode(col("sh")).as("g"))
 
+    // sized for ~262k distinct bench shingles in a 4 Mbit filter
+    val bloomItems = 1L << 18
     val bloomAgg = ColumnBridge.column(
       new BloomFilterAggregate(ColumnBridge.expression(col("g")),
-        Literal(bloomItems), Literal(bloomBits)).toAggregateExpression())
+        Literal(bloomItems), Literal(1L << 22)).toAggregateExpression())
     // NOTE: eager — this runs a Spark action (one aggregate over the
     // bench-side shingles) at DataFrame-CONSTRUCTION time, because
     // BloomFilterMightContain requires its bloom side as a foldable
@@ -167,9 +167,8 @@ object Curation {
     if (benchShingles > bloomItems)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"contaminationPairsBloom: ~$benchShingles distinct bench shingles " +
-          s"exceed bloomItems=$bloomItems — FP rate degrades and the " +
-          "prefilter passes more corpus shingles (correctness unaffected); " +
-          "raise bloomItems/bloomBits to restore selectivity")
+          s"exceed the bloom's $bloomItems items — FP rate degrades and the " +
+          "prefilter passes more corpus shingles (correctness unaffected)")
     val mightContain = ColumnBridge.column(BloomFilterMightContain(
       Literal(bloomBytes, BinaryType), ColumnBridge.expression(col("g"))))
 
@@ -410,21 +409,17 @@ object Curation {
     * measured separately in SCALING.md — the DAG's cost is their sum
     * plus three id-only joins).
     *
+    * Thresholds: 3-gram shingles; LSH 4 bands x 4 rows, pairs at Jaccard
+    * >= 0.5; contamination over shingles in <= 50 docs at containment
+    * >= 0.1; a 10% validation and 5% test split.
+    *
     * Output: (doc_id, bucket, split) for every surviving document.
     */
   def curationKeep(
       docs: DataFrame,
       textCol: String,
       idCol: String,
-      isBench: Column,
-      n: Int = 3,
-      bands: Int = 4,
-      rowsPerBand: Int = 4,
-      minJaccardMilli: Int = 500,
-      maxShingleDf: Int = 50,
-      minContainMilli: Int = 100,
-      valPermille: Int = 100,
-      testPermille: Int = 50): DataFrame = {
+      isBench: Column): DataFrame = {
     // one corpus pass shared by all three gates + the final split
     val d = docs.checkpointed()
     // stage 1 — quality: surprisal within 1.25x the corpus mean
@@ -441,26 +436,24 @@ object Curation {
     // 250k-doc smoke in an 8 GB harness (executor OOMs). Each consumer
     // recomputes the narrow shingle expression from the checkpointed
     // corpus text — cheap relative to the joins it feeds.
-    val shf = Dedup.withHashedShingles(d, textCol, n, "sh")
+    val shf = Dedup.withHashedShingles(d, textCol, 3, "sh")
       .select(col(idCol).as("doc"), isBench.as("is_bench"), col("sh"))
       .filter(size(col("sh")) > 0)
     // stage 2 — near-dedup: LSH cluster non-representatives lose
     val losers = connectedComponents(
-      Dedup.minhashLshPairsFromShingles(shf.select("doc", "sh"),
-        bands, rowsPerBand, minJaccardMilli),
+      Dedup.minhashLshPairsFromShingles(shf.select("doc", "sh"), 4, 4, 500),
       "a", "b")
       .filter(col("node") =!= col("cluster_id"))
       .select(col("node").as(idCol))
     // stage 3 — decontamination: benchmark docs and their leaks drop
-    val hits = contaminationPairsFromShingles(shf,
-        maxShingleDf = maxShingleDf, minContainMilli = minContainMilli)
+    val hits = contaminationPairsFromShingles(shf, maxShingleDf = 50, minContainMilli = 100)
       .select(col("doc_id").as(idCol)).distinct()
     // stage 4 — leakage-aware split of the surviving corpus
     val kept = d.filter(!isBench)
       .join(qual, Seq(idCol), "left_semi")
       .join(losers, Seq(idCol), "left_anti")
       .join(hits, Seq(idCol), "left_anti")
-    datasetSplit(kept, textCol, valPermille, testPermille)
+    datasetSplit(kept, textCol, 100, 50)
   }
 
   /** Sequence packing: assign documents (in deterministic `idCol` order
@@ -801,7 +794,7 @@ object Curation {
     *
     * Per-occurrence contribution for a trigram hashing to bucket b:
     * `log2 p_tgt(b) - log2 p_raw(b)` with add-one smoothing over
-    * `buckets` features; the per-doc weight is the sum over its trigram
+    * `DsirBuckets` features; the per-doc weight is the sum over its trigram
     * occurrences. All integer Q10 log2 (see [[TextAnalysis.log2Q10Sql]]),
     * so the DuckDB oracle matches bit-for-bit. With `targetPred` true for
     * every doc the two models coincide and every weight is exactly 0 —
@@ -809,7 +802,7 @@ object Curation {
     *
     * Scale shape: one corpus-sized trigram explode collapsed immediately
     * to per-(doc, bucket) multiplicities (lazily checkpointed — both
-    * models and the scorer share it); the model frame is <= `buckets`
+    * models and the scorer share it); the model frame is <= `DsirBuckets`
     * rows and the totals one row, both broadcast back; the weight is one
     * per-doc re-aggregate. Nothing scales worse than the corpus itself.
     *
@@ -820,12 +813,11 @@ object Curation {
       df: DataFrame,
       textCol: String,
       idCol: String,
-      targetPred: Column,
-      buckets: Int = 4096): DataFrame = {
+      targetPred: Column): DataFrame = {
     val base = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       targetPred.cast("boolean").as("__tgt"))
     val td = TextAnalysis.charTrigrams(base, "__text", "doc_id", carryCols = Seq("__tgt"))
-      .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(buckets)))
+      .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(DsirBuckets)))
       .groupBy(col("doc_id"), col("__tgt"), col("b"))
       .agg(count(lit(1)).as("k"))
       .checkpointed(eager = false)
@@ -842,24 +834,26 @@ object Curation {
       .groupBy(col("doc_id"), col("tt"), col("tr"))
       .agg(sum(col("t1")).as("s1"), sum(col("k")).as("n_tri"))
       .withColumn("dsir_w_q10", expr(
-        s"cast(s1 + n_tri * (${l(s"(tr + $buckets)")} - ${l(s"(tt + $buckets)")}) as bigint)"))
+        s"cast(s1 + n_tri * (${l(s"(tr + $DsirBuckets)")} - ${l(s"(tt + $DsirBuckets)")}) as bigint)"))
       .select(col("doc_id"), col("n_tri"), col("dsir_w_q10"))
   }
 
+  /** Hashed trigram buckets of every DSIR model (the feature width). */
+  private val DsirBuckets = 4096
+
   /** Train-half of [[dsirWeights]]: the frozen target/raw bucket model
-    * `(b, ct, cr)` — at most `buckets` rows, broadcastable — plus its
+    * `(b, ct, cr)` — at most `DsirBuckets` rows, broadcastable — plus its
     * totals via [[dsirModelTotals]].
     */
   def dsirTrainModel(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      targetPred: Column,
-      buckets: Int = 4096): DataFrame = {
+      targetPred: Column): DataFrame = {
     val base = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       targetPred.cast("boolean").as("__tgt"))
     TextAnalysis.charTrigrams(base, "__text", "doc_id", carryCols = Seq("__tgt"))
-      .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(buckets)))
+      .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(DsirBuckets)))
       .groupBy(col("b"))
       .agg(sum(when(col("__tgt"), lit(1L)).otherwise(lit(0L))).as("ct"),
         count(lit(1)).as("cr"))
@@ -898,10 +892,9 @@ object Curation {
       textCol: String,
       idCol: String,
       targetPred: Column,
-      isFrozen: Column,
-      buckets: Int = 4096): DataFrame = Checkpoints.scoped {
+      isFrozen: Column): DataFrame = Checkpoints.scoped {
     val frozenDocs = df.filter(isFrozen)
-    val mF = dsirTrainModel(frozenDocs, textCol, idCol, targetPred, buckets)
+    val mF = dsirTrainModel(frozenDocs, textCol, idCol, targetPred)
       .checkpointed()
     val (ttF, trF) = dsirModelTotals(mF)
     val nFrozen = frozenDocs.count()
@@ -912,14 +905,14 @@ object Curation {
     val nAppended = base.count()
     val tdA = TextAnalysis.charTrigrams(base, "__text", "doc_id",
       carryCols = Seq("__tgt"))
-      .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(buckets)))
+      .withColumn("b", pmod(TextAnalysis.portableHash48(col("t")), lit(DsirBuckets)))
       .groupBy(col("doc_id"), col("__tgt"), col("b"))
       .agg(count(lit(1)).as("k"))
       .checkpointed() // consumed by the appended model AND the scorer
     val mA = tdA.groupBy(col("b"))
       .agg(sum(when(col("__tgt"), col("k")).otherwise(lit(0L))).as("ct"),
         sum(col("k")).as("cr"))
-      .checkpointed() // bounded (<= buckets rows); merge + drift + totals
+      .checkpointed() // bounded (<= DsirBuckets rows); merge + drift + totals
     val (ttA, trA) = dsirModelTotals(mA)
     // the fresh model is merge(frozen, appended) — the additive
     // monoid the r14 directive named; two bounded tables, no retrain
@@ -927,10 +920,10 @@ object Curation {
       .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
     val (ttN, trN) = (ttF + ttA, trF + trA)
     val l = TextAnalysis.log2Q10Sql _
-    val cF = TextAnalysis.log2Q10(trF + buckets) -
-      TextAnalysis.log2Q10(ttF + buckets)
-    val cN = TextAnalysis.log2Q10(trN + buckets) -
-      TextAnalysis.log2Q10(ttN + buckets)
+    val cF = TextAnalysis.log2Q10(trF + DsirBuckets) -
+      TextAnalysis.log2Q10(ttF + DsirBuckets)
+    val cN = TextAnalysis.log2Q10(trN + DsirBuckets) -
+      TextAnalysis.log2Q10(ttN + DsirBuckets)
     // both arms in ONE pass over the shared per-(doc, bucket) counts
     // — term-for-term the dsirWeights formula per arm, unseen buckets counting 0
     val scored = tdA
@@ -957,7 +950,7 @@ object Curation {
       "dsirModelStalenessReport: the appended slice has no scorable " +
         "docs (no >= 3-char texts, or isFrozen matched every doc)")
     // per-bucket RAW-mass share drift, frozen vs appended — the
-    // nbStalenessCore block over the models' own cr columns
+    // nbModelStalenessReport block over the models' own cr columns
     val share = mF.select(col("b"), col("cr").as("k"))
       .withColumn("__fr", lit(true))
       .unionByName(mA.select(col("b"), col("cr").as("k"))
@@ -1119,38 +1112,6 @@ object Curation {
         min(when(col("cum") >= expr("(2 * n) div 3"), col("s"))).as("t2"))
   }
 
-  /** Report tail of [[ccnetCutsStaleness]]: fresh terciles of the
-    * appended surprisal frame, both bucketings, the per-source flip row.
-    * `sA` must be `(doc_id, src, s)` (checkpointed by the caller —
-    * consumed by the terciles AND the bucketing).
-    */
-  private def ccnetCutsTail(sA: DataFrame, frozenCuts: DataFrame): DataFrame = {
-    val cutsN = surprisalTerciles(sA)
-    def bucketOf(t1: Column, t2: Column): Column =
-      when(col("s") <= t1, lit(0L)).when(col("s") <= t2, lit(1L))
-        .otherwise(lit(2L))
-    sA
-      .join(broadcast(frozenCuts.select(col("src"),
-        col("t1").as("t1f"), col("t2").as("t2f"))), Seq("src"), "left")
-      .join(broadcast(cutsN.select(col("src"),
-        col("t1").as("t1n"), col("t2").as("t2n"))), Seq("src"))
-      .withColumn("bf", when(col("t1f").isNull, lit(-1L))
-        .otherwise(bucketOf(col("t1f"), col("t2f"))))
-      .withColumn("bn", bucketOf(col("t1n"), col("t2n")))
-      .groupBy(col("src"))
-      .agg(count(lit(1)).as("n_appended"),
-        max(col("t1f")).as("t1_frozen"), max(col("t2f")).as("t2_frozen"),
-        max(col("t1n")).as("t1_fresh"), max(col("t2n")).as("t2_fresh"),
-        sum(when(col("bf") =!= col("bn"), lit(1L)).otherwise(lit(0L)))
-          .as("n_flips"))
-      .select(col("src").as("source"), col("n_appended"),
-        col("t1_frozen"), col("t2_frozen"), col("t1_fresh"), col("t2_fresh"),
-        (col("t1_fresh") - col("t1_frozen")).as("d_t1_q10"),
-        (col("t2_fresh") - col("t2_frozen")).as("d_t2_q10"),
-        col("n_flips"),
-        expr("n_flips * 1000 div n_appended").as("flip_q3"))
-  }
-
   /** CCNet cuts staleness monitor: freeze the LM and the per-source
     * tercile cuts on the `isFrozen` slice, report against the rest.
     *
@@ -1191,9 +1152,34 @@ object Curation {
           expr("cast(sum_s div n_tri as bigint)").as("s"))
     val cutsF = surprisalTerciles(docSurprisal(tdF, frozenSide = true))
       .checkpointed()
+    // the report: fresh terciles of the appended surprisal, both
+    // bucketings, the per-source flip row
     val sA = docSurprisal(td.filter(!col("__fr")), frozenSide = false)
-      .checkpointed()
-    ccnetCutsTail(sA, cutsF)
+      .checkpointed() // consumed by the terciles AND the bucketing
+    val cutsN = surprisalTerciles(sA)
+    def bucketOf(t1: Column, t2: Column): Column =
+      when(col("s") <= t1, lit(0L)).when(col("s") <= t2, lit(1L))
+        .otherwise(lit(2L))
+    sA
+      .join(broadcast(cutsF.select(col("src"),
+        col("t1").as("t1f"), col("t2").as("t2f"))), Seq("src"), "left")
+      .join(broadcast(cutsN.select(col("src"),
+        col("t1").as("t1n"), col("t2").as("t2n"))), Seq("src"))
+      .withColumn("bf", when(col("t1f").isNull, lit(-1L))
+        .otherwise(bucketOf(col("t1f"), col("t2f"))))
+      .withColumn("bn", bucketOf(col("t1n"), col("t2n")))
+      .groupBy(col("src"))
+      .agg(count(lit(1)).as("n_appended"),
+        max(col("t1f")).as("t1_frozen"), max(col("t2f")).as("t2_frozen"),
+        max(col("t1n")).as("t1_fresh"), max(col("t2n")).as("t2_fresh"),
+        sum(when(col("bf") =!= col("bn"), lit(1L)).otherwise(lit(0L)))
+          .as("n_flips"))
+      .select(col("src").as("source"), col("n_appended"),
+        col("t1_frozen"), col("t2_frozen"), col("t1_fresh"), col("t2_fresh"),
+        (col("t1_fresh") - col("t1_frozen")).as("d_t1_q10"),
+        (col("t2_fresh") - col("t2_frozen")).as("d_t2_q10"),
+        col("n_flips"),
+        expr("n_flips * 1000 div n_appended").as("flip_q3"))
   }
 
   /** Connected components over an undirected pair list (the
@@ -1205,16 +1191,14 @@ object Curation {
     * iterations, each one bounded-size shuffle on node ids (never
     * materializing pairs-of-pairs). Near-dup graphs are overwhelmingly
     * star/clique shaped (diameter 2-3), so the loop converges in a few
-    * rounds; `maxIters` only guards pathological chains. Iterations are
+    * rounds; a 20-round cap only guards pathological chains. Iterations are
     * `localCheckpoint`ed so lineage stays flat.
     */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String,
-      bCol: String,
-      maxIters: Int = 20,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None)
-      : DataFrame = Checkpoints.scoped {
+      bCol: String): DataFrame = Checkpoints.scoped {
+    val maxIters = 20
     // checkpoint the HALF pair frame, not the symmetric union: the union
     // reads `pairs` twice, and for the common caller shape
     // connectedComponents(minhashLshPairs(...)) that re-executed the
@@ -1284,14 +1268,13 @@ object Curation {
       converged = changed == 0
       it += 1
     }
-    roundsOut.foreach(_.set(it))
     // A silent exit via the iteration cap would hand the caller unmerged
     // (wrong) cluster labels; a chain-shaped component longer than
     // maxIters must fail loudly, not quietly.
     if (!converged) throw new IllegalStateException(
       s"connectedComponents: labels still changing after $maxIters " +
         "iterations (component diameter exceeds ~2^maxIters with " +
-        "pointer-jumping); raise maxIters")
+        "pointer-jumping)")
     labels.select(col("node"), col("label").as("cluster_id"))
   }
 

@@ -324,25 +324,6 @@ object Dedup {
   def minhashA(i: Int): Long = 1234567L + 2L * i
   def minhashB(i: Int): Long = 987654L + i
 
-  /** (bands, rowsPerBand) for a target Jaccard threshold under a hash
-    * budget, via the standard S-curve rule t ≈ (1/bands)^(1/rows): among
-    * divisor splits of `numHashes`, pick the one whose inflection point
-    * is closest to the threshold. Low thresholds need few rows (recall),
-    * high thresholds need many rows (candidate-volume control) — see
-    * SCALING.md for the cost model.
-    */
-  def lshParams(threshold: Double, numHashes: Int): (Int, Int) = {
-    require(threshold > 0 && threshold < 1 && numHashes > 0)
-    val (b, r, _) = (1 to numHashes)
-      .filter(numHashes % _ == 0)
-      .map { r =>
-        val b = numHashes / r
-        (b, r, math.pow(1.0 / b, 1.0 / r))
-      }
-      .minBy { case (_, _, t) => math.abs(t - threshold) }
-    (b, r)
-  }
-
   /** MinHash signature over hashed shingles. */
   def minhashSignature(hashedShinglesCol: Column, numHashes: Int): Column = {
     val reduced = transform(hashedShinglesCol, h => h % MinhashPrime)
@@ -361,10 +342,9 @@ object Dedup {
     * Output: (a, b, jaccard_milli).
     */
   /** Per-document LSH band keys: one (doc, band, bh) row per band, plus
-    * the shingle set (`sh`) and any `passthrough` columns. The shared
-    * core of batch [[minhashLshPairs]] and the streaming near-dup join
-    * (`StreamOps.streamingNearDupPairs`) — works on a static frame or a
-    * stream (stateless narrow transform).
+    * the shingle set (`sh`). The shared
+    * core of batch [[minhashLshPairs]] and the maintained LSH index —
+    * works on a static frame or a stream (stateless narrow transform).
     */
   def bandKeys(
       df: DataFrame,
@@ -372,15 +352,14 @@ object Dedup {
       idCol: String,
       n: Int,
       bands: Int,
-      rowsPerBand: Int,
-      passthrough: Seq[String] = Nil): DataFrame =
+      rowsPerBand: Int): DataFrame =
     bandKeysFromShingles(
       withHashedShingles(df, textCol, n, "sh")
-        .select(col(idCol).as("doc") +: col("sh") +: passthrough.map(col): _*)
+        .select(col(idCol).as("doc"), col("sh"))
         .filter(size(col("sh")) > 0),
-      bands, rowsPerBand, passthrough)
+      bands, rowsPerBand)
 
-  /** [[bandKeys]] over a PRE-SHINGLED frame (`doc`, `sh` + passthrough):
+  /** [[bandKeys]] over a PRE-SHINGLED frame (`doc`, `sh`):
     * lets a multi-stage pipeline (e.g. `Curation.curationKeep`) shingle
     * the corpus once and feed the same checkpointed frame to LSH banding,
     * contamination, and anything else shingle-shaped — the shingle
@@ -391,8 +370,7 @@ object Dedup {
   def bandKeysFromShingles(
       sh: DataFrame,
       bands: Int,
-      rowsPerBand: Int,
-      passthrough: Seq[String] = Nil): DataFrame = {
+      rowsPerBand: Int): DataFrame = {
     val numHashes = bands * rowsPerBand
     sh.withColumn("sig", minhashSignature(col("sh"), numHashes))
       .withColumn("bb",
@@ -402,8 +380,7 @@ object Dedup {
             md5(array_join(
               transform(slice(col("sig"), k * rowsPerBand + 1, lit(rowsPerBand)),
                 x => x.cast("string")), ",")).as("bh")))))
-      .select(col("doc") +: col("sh") +: col("bb.band").as("band") +:
-        col("bb.bh").as("bh") +: passthrough.map(col): _*)
+      .select(col("doc"), col("sh"), col("bb.band").as("band"), col("bb.bh").as("bh"))
   }
 
   /** [[minhashLshPairs]] plus the SIGNATURE-estimated Jaccard next to the
@@ -1088,10 +1065,6 @@ object Dedup {
     * near-dup notion than over 60 bits (10/360 vs 10/60 of the bits) —
     * the wide form is the production dedup setting, the 60-bit form the
     * small-block/compat one.
-    *
-    * `verifyMaxHamming` (default: `maxHamming`) separates the banding
-    * budget from the verification threshold — the scale-curve tool opens
-    * it to `60 * halves` to count raw band-collision candidates.
     * Output: (a, b, hamming) — hamming over the full wide print.
     */
   def simhashPairsWide(
@@ -1100,13 +1073,11 @@ object Dedup {
       idCol: String,
       blockCol: String,
       maxHamming: Int,
-      halves: Int,
-      verifyMaxHamming: Int = -1): DataFrame = {
+      halves: Int): DataFrame = {
     require(halves >= 1 && halves <= 11, s"halves must be in [1, 11], got $halves")
     val bandsPerHalf = ((maxHamming + 1) + halves - 1) / halves
     require(bandsPerHalf >= 1 && bandsPerHalf <= 60,
       s"maxHamming=$maxHamming needs $bandsPerHalf bands/half, max 60")
-    val verify = if (verifyMaxHamming < 0) maxHamming else verifyMaxHamming
     val baseLen = 60 / bandsPerHalf
     val rem = 60 % bandsPerHalf
     val lens = Seq.tabulate(bandsPerHalf)(i => baseLen + (if (i < rem) 1 else 0))
@@ -1132,7 +1103,7 @@ object Dedup {
         col("x.blk") === col("y.blk") && col("x.band") === col("y.band") &&
           col("x.bv") === col("y.bv") && col("x.doc") < col("y.doc"))
       .select(col("x.doc").as("a"), col("y.doc").as("b"), ham.as("hamming"))
-      .filter(col("hamming") <= verify) // verify BEFORE dedup: shrinks the shuffle
+      .filter(col("hamming") <= maxHamming) // verify BEFORE dedup: shrinks the shuffle
       .dropDuplicates("a", "b")
       .select(col("a"), col("b"), col("hamming"))
   }

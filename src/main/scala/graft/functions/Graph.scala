@@ -14,13 +14,16 @@ import graft.functions.Checkpoints.Owned
   */
 object Graph {
 
+  /** PageRank damping in thousandths (0.85), shared by every PageRank form. */
+  private val DampMilli = 850
+
   /** PageRank over an edge list, `iterations` synchronous rounds.
     *
     * Semantics (fixed-point, per node v with at least one in-edge):
     * {{{
     *   r_0(v)   = 1_000_000                       // 1.0 in micro-units
-    *   r_k+1(v) = (1000 - dampMilli) * 1000
-    *            + (dampMilli * Σ_{u→v} (r_k(u) div outdeg(u))) div 1000
+    *   r_k+1(v) = (1000 - DampMilli) * 1000
+    *            + (DampMilli * Σ_{u→v} (r_k(u) div outdeg(u))) div 1000
     * }}}
     * Floor division at both steps makes every iterate a pure function of
     * longs — no float drift, no engine-specific rounding. Callers that
@@ -47,13 +50,10 @@ object Graph {
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      dampMilli: Int = 850,
       broadcastRanks: Boolean = true,
       checkpointEvery: Int = 8,
       checkpointEdges: Boolean = true): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1 (got $iterations)")
-    require(dampMilli >= 0 && dampMilli <= 1000,
-      s"dampMilli must be in [0, 1000] (got $dampMilli)")
     // materialize the edge list ONCE — it is re-read every round, and an
     // un-checkpointed caller frame (e.g. a distinct() over a self-join)
     // would re-execute its whole lineage per iteration. EXCEPTION
@@ -70,7 +70,7 @@ object Graph {
     val e = if (checkpointEdges) e0.checkpointed() else e0
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
       .checkpointed()
-    val base = (1000L - dampMilli) * 1000L
+    val base = (1000L - DampMilli) * 1000L
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
     var cut: Option[DataFrame] = None // the last periodic cut, read by `rank`
     for (i <- 1 to iterations) {
@@ -85,7 +85,7 @@ object Graph {
         .join(if (broadcastRanks) broadcast(ranks) else ranks, "src")
         .select(col("dst").as("node"), expr("r div outd").as("c"))
         .groupBy(col("node"))
-        .agg(expr(s"${base}L + ($dampMilli * sum(c)) div 1000").as("r"))
+        .agg(expr(s"${base}L + ($DampMilli * sum(c)) div 1000").as("r"))
       // the plan grows LINEARLY with rounds (each round consumes the
       // previous agg exactly once), so cut lineage only periodically —
       // an every-round checkpoint serializes a full materialization job
@@ -103,8 +103,8 @@ object Graph {
     * real-graph form: co-purchase counts, interaction strengths, link
     * multiplicities):
     * {{{
-    *   r_k+1(v) = (1000 - dampMilli) * 1000
-    *            + (dampMilli * Σ_{u→v} ((r_k(u) * w(u,v)) div W(u))) div 1000
+    *   r_k+1(v) = (1000 - DampMilli) * 1000
+    *            + (DampMilli * Σ_{u→v} ((r_k(u) * w(u,v)) div W(u))) div 1000
     * }}}
     * with W(u) = Σ out-weights of u — floor division throughout, so the
     * iterate stays a pure function of longs and the unrolled SQL twin
@@ -117,58 +117,39 @@ object Graph {
     * form, one multiply wider.
     *
     * Plan per round is [[pageRank]]'s exactly: one edge-vs-rank join
-    * (broadcast or bucketed via `broadcastRanks`/`checkpointEdges`) +
-    * one partial-agg groupBy; the weight rides the edge row.
+    * (rank side broadcast) + one partial-agg groupBy; the weight rides
+    * the edge row. [[pageRank]] keeps its specialized w-free body
+    * (`r div outd` — the most-benched gate plan, value-identical to this
+    * with w = 1).
     */
   def pageRankWeighted(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       weightCol: String,
-      iterations: Int,
-      dampMilli: Int = 850,
-      broadcastRanks: Boolean = true,
-      checkpointEvery: Int = 8,
-      checkpointEdges: Boolean = true): DataFrame = {
-    require(iterations >= 1 && dampMilli >= 0 && dampMilli <= 1000)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w"))
-    val e = if (checkpointEdges) e0.checkpointed() else e0
+      iterations: Int): DataFrame = {
+    require(iterations >= 1)
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      col(weightCol).cast("long").as("w")).checkpointed()
     val deg = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
       .checkpointed()
-    val base = (1000L - dampMilli) * 1000L
+    val base = (1000L - DampMilli) * 1000L
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
     var cut: Option[DataFrame] = None // the last periodic cut, read by `rank`
     for (i <- 1 to iterations) {
-      rank = weightedRound(e, deg, rank, base, dampMilli, broadcastRanks)
-      if (i % checkpointEvery == 0 && i < iterations) {
+      val ranks = deg.join(rank, deg("src") === rank("node"))
+        .select(col("src"), col("tw"), col("r"))
+      rank = e.join(broadcast(ranks), "src")
+        .select(col("dst").as("node"), expr("(r * w) div tw").as("c"))
+        .groupBy(col("node"))
+        .agg(expr(s"${base}L + ($DampMilli * sum(c)) div 1000").as("r"))
+      if (i % 8 == 0 && i < iterations) {
         rank = rank.checkpointed()
         cut.foreach(Checkpoints.unpersist)
         cut = Some(rank)
       }
     }
     rank.select(col("node"), col("r").as("rank_micro"))
-  }
-
-  /** One synchronous weighted-PageRank round over an edge list carrying
-    * (src, dst, w) and a degree frame (src, tw) — the recurrence body of
-    * [[pageRankWeighted]]. [[pageRank]] keeps its specialized w-free body
-    * (`r div outd` — the most-benched gate plan, value-identical to
-    * this with w = 1).
-    */
-  private def weightedRound(
-      e: DataFrame,
-      deg: DataFrame,
-      rank: DataFrame,
-      base: Long,
-      dampMilli: Int,
-      broadcastRanks: Boolean): DataFrame = {
-    val ranks = deg.join(rank, deg("src") === rank("node"))
-      .select(col("src"), col("tw"), col("r"))
-    e.join(if (broadcastRanks) broadcast(ranks) else ranks, "src")
-      .select(col("dst").as("node"), expr("(r * w) div tw").as("c"))
-      .groupBy(col("node"))
-      .agg(expr(s"${base}L + ($dampMilli * sum(c)) div 1000").as("r"))
   }
 
   /** Personalized PageRank: the teleport mass lands ONLY on `seeds`
@@ -187,18 +168,16 @@ object Graph {
       srcCol: String,
       dstCol: String,
       seeds: Seq[Long],
-      iterations: Int,
-      dampMilli: Int = 850,
-      broadcastRanks: Boolean = true): DataFrame = {
+      iterations: Int): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs at least one seed")
-    require(iterations >= 1 && dampMilli >= 0 && dampMilli <= 1000)
+    require(iterations >= 1)
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .checkpointed()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
       .checkpointed()
-    val base = (1000L - dampMilli) * 1000L
+    val base = (1000L - DampMilli) * 1000L
     val seedDf = seeds.toDF("node").select(col("node"), lit(base).as("sb"))
     var rank = seeds.toDF("node")
       .select(col("node"), lit(1000000L).as("r"))
@@ -206,10 +185,10 @@ object Graph {
       val ranks = deg.join(rank, deg("src") === rank("node"))
         .select(col("src"), col("outd"), col("r"))
       val contrib = e
-        .join(if (broadcastRanks) broadcast(ranks) else ranks, "src")
+        .join(broadcast(ranks), "src")
         .select(col("dst").as("node"), expr("r div outd").as("c"))
         .groupBy(col("node"))
-        .agg(expr(s"($dampMilli * sum(c)) div 1000").as("cr"))
+        .agg(expr(s"($DampMilli * sum(c)) div 1000").as("cr"))
       rank = seedDf.join(contrib, Seq("node"), "full_outer")
         .select(col("node"),
           (coalesce(col("sb"), lit(0L)) + coalesce(col("cr"), lit(0L))).as("r"))
@@ -284,17 +263,12 @@ object Graph {
     * @return `(node, label, hops)` for every node reachable within
     *         `rounds` hops of a seed (unreached nodes are absent)
     */
-  def labelPropagation(knn: DataFrame, seeds: DataFrame, rounds: Int,
-      checkpointEdges: Boolean = true): DataFrame = {
+  def labelPropagation(knn: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
     import org.apache.spark.sql.expressions.Window
-    // checkpointEdges = false: keep a stored table's bucketing on vec_id
-    // (the per-round join key after the rename — alias-aware output
-    // partitioning carries it through) so the edge side never
-    // re-exchanges; the checkpoint is only right for in-memory inputs
-    val edges0 = knn
+    val edges = knn
       .select(col("qid").as("node"), col("vec_id").as("nbr"), col("rank"))
-    val edges = if (checkpointEdges) edges0.checkpointed() else edges0
+      .checkpointed()
     var labels = seeds
       .select(col("node"), col("label").cast("long").as("label"),
         lit(0L).as("hops"))
@@ -346,9 +320,7 @@ object Graph {
     // node-sized label frame moves per round
     val sym0 =
       if (assumeSymmetric) edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      else edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct()
+      else symmetrized(edges, aCol, bCol)
     val sym = if (checkpointEdges) sym0.checkpointed() else sym0
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
@@ -371,6 +343,12 @@ object Graph {
     // the returned labels are a self-contained checkpoint
     labels
   }
+
+  /** `(a, b)` edges in both directions, each directed pair once. */
+  private def symmetrized(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    edges.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
+      .distinct()
 
   /** The shared per-round LPA vote of [[communityLabels]] /
     * [[communityLabelsDelta]]: majority label
@@ -421,16 +399,9 @@ object Graph {
       bCol: String,
       rounds: Int,
       oldLabels: DataFrame,
-      deltaEdges: DataFrame,
-      assumeSymmetric: Boolean = false): DataFrame = Checkpoints.scoped {
+      deltaEdges: DataFrame): DataFrame = Checkpoints.scoped {
     require(rounds >= 1, "communityLabelsDelta needs at least one round")
-    val sym0 =
-      if (assumeSymmetric)
-        edgesAfter.select(col(aCol).as("src"), col(bCol).as("dst"))
-      else edgesAfter.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(edgesAfter.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct()
-    val sym = sym0.checkpointed()
+    val sym = symmetrized(edgesAfter, aCol, bCol).checkpointed()
     val seeds = deltaEdges
       .select(explode(array(col(aCol), col(bCol))).as("node")).distinct()
     val hops0 = seeds.select(col("node"), lit(0).as("hop")).checkpointed()
@@ -853,16 +824,15 @@ object Graph {
     * had already lost, and the no-member-ever-peels argument breaks).
     * Insertions only: deletions shrink the core non-locally and re-run
     * the cold peel (the documented batch-tier recompute). The restricted
-    * peel iterates to ITS fixpoint (it is non-core-sized; `maxRounds`
-    * is a loud-failure cap, not a truncation budget).
+    * peel iterates to ITS fixpoint (it is non-core-sized; the 64-round
+    * cap is a loud-failure guard, not a truncation budget).
     */
   def kCoreDelta(
       halfAfter: DataFrame,
       oldCore: DataFrame,
-      k: Int,
-      maxRounds: Int = 64,
-      broadcastDead: Boolean = true): DataFrame = {
-    require(k >= 1 && maxRounds >= 1)
+      k: Int): DataFrame = {
+    require(k >= 1)
+    val maxRounds = 64
     // the immortality proof's exact sufficient condition, cheaply
     // checkable from the input's own column: every old-core member must
     // hold >= k in-core neighbors. A NON-converged kCoreHalf frame (its
@@ -894,11 +864,8 @@ object Graph {
       .select(col("node"),
         (coalesce(col("b"), lit(0L)) + coalesce(col("dh"), lit(0L))).as("d"))
       .checkpointed()
-    // broadcastDead = false: the kCoreHalf escape for the regime where
-    // the dead set is node-scale (small old core, aggressive k) — then
-    // pre-bucket h by src and dst like kCoreHalf's halfByDst layout
     def loss(dead: DataFrame): DataFrame = {
-      val nb = if (broadcastDead) broadcast(dead) else dead
+      val nb = broadcast(dead)
       h.join(nb, h("dst") === dead("node")).select(h("src").as("n"))
         .unionAll(
           h.join(nb, h("src") === dead("node")).select(h("dst").as("n")))
@@ -948,12 +915,12 @@ object Graph {
     * engagement rule ("2k-ball small relative to the corpus": 1.3x win
     * on the high-diameter lattice, 0.48x LOSS on the small-diameter hub
     * graph) promoted to a router. The probe expands the delta
-    * endpoints' BFS ball `probeHops` hops over the post-insert graph:
+    * endpoints' BFS ball 2 hops over the post-insert graph:
     * delta-sized exactly when the graph is delta-local (the regime
     * where the cone wins), and bounded by a couple of frontier passes
     * even on a hub graph (where the 2-hop ball is already node-scale
     * and the probe's answer is "go cold"). Saturation — ball size vs
-    * `saturationFraction` of the old label table's node count — routes
+    * 20% of the old label table's node count — routes
     * to the cold fixed-round recompute; otherwise the exact cone
     * refresh ([[communityLabelsDelta]]) runs, REUSING the probe's
     * symmetrized edge frame so symmetrization is paid once.
@@ -964,28 +931,19 @@ object Graph {
       bCol: String,
       rounds: Int,
       oldLabels: DataFrame,
-      deltaEdges: DataFrame,
-      saturationFraction: Double = 0.2,
-      probeHops: Int = 2,
-      assumeSymmetric: Boolean = false): Routed = Checkpoints.scoped {
-    require(rounds >= 1 && probeHops >= 1)
-    val sym0 =
-      if (assumeSymmetric)
-        edgesAfter.select(col(aCol).as("src"), col(bCol).as("dst"))
-      else edgesAfter.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(edgesAfter.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct()
-    val sym = sym0.checkpointed()
+      deltaEdges: DataFrame): Routed = Checkpoints.scoped {
+    require(rounds >= 1)
+    val sym = symmetrized(edgesAfter, aCol, bCol).checkpointed()
     val seeds = deltaEdges
       .select(explode(array(col(aCol), col(bCol))).as("node")).distinct()
     // the probe ball carries hop numbers so the delta route can RESUME
     // the cone's BFS from it instead of re-expanding the same hops —
     // one shared [[ballBfs]] implementation keeps the resume contract
     val hops0 = seeds.select(col("node"), lit(0).as("hop")).checkpointed()
-    val hops = math.min(probeHops, 2 * rounds)
+    val hops = 2 // within the cone's 2k-hop ball for every k >= 1
     val ball = ballBfs(sym, hops0, fromHop = 0, maxH = hops)
     val n = math.max(1L, oldLabels.count())
-    val saturated = ball.count().toDouble / n >= saturationFraction
+    val saturated = ball.count().toDouble / n >= 0.2
     // both arms return self-contained checkpoints: the scope releases
     // the probe's pins on return
     if (saturated)
@@ -1027,11 +985,10 @@ object Graph {
       dstCol: String,
       oldHops: DataFrame,
       deltaEdges: DataFrame,
-      maxHops: Int,
-      checkpointEdges: Boolean = true): DataFrame = {
+      maxHops: Int): DataFrame = {
     require(maxHops >= 1)
-    val e0 = edgesAfter.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.checkpointed() else e0
+    val e = edgesAfter.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .checkpointed()
     val d = deltaEdges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     def improvements(cand: DataFrame, hops: DataFrame): DataFrame = cand
       .filter(col("cand") <= maxHops)
@@ -1377,18 +1334,14 @@ object Graph {
     */
   def rebuildTriangleCounts(
       spark: org.apache.spark.sql.SparkSession,
-      stateDir: String,
-      partitions: Option[Int] = None): Unit = {
+      stateDir: String): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // preserve the table's pinned modulus by default (read BEFORE the
-    // wipe): a recovery run must not silently change the layout contract
-    // out from under the maintainer's partitions argument (r16
-    // self-review); pass Some(p) only to deliberately re-partition
-    val p = partitions
-      .orElse(Incremental.pinnedPartitions(spark, s"$stateDir/counts"))
-      .getOrElse(64)
+    // preserve the table's pinned modulus (read BEFORE the wipe): a
+    // recovery run must not silently change the layout contract out from
+    // under the maintainer's partitions argument (r16 self-review)
+    val p = Incremental.pinnedPartitions(spark, s"$stateDir/counts").getOrElse(64)
     fs.delete(new Path(s"$stateDir/counts"), true)
     val (log, batches) =
       if (Incremental.hasLivePartitions(spark, s"$stateDir/edges", "batch=")) {
@@ -1523,8 +1476,7 @@ object Graph {
   def maintainTriangleCountsStream(
       edgeBatches: DataFrame,
       stateDir: String,
-      checkpointDir: String,
-      partitions: Int = 64)
+      checkpointDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     edgeBatches.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -1532,7 +1484,7 @@ object Graph {
           batchId: Long) =>
         val (edges, sgn) = splitUniformSign(batch.toDF(), batchId)
         maintainTriangleCounts(batch.sparkSession, stateDir, edges, batchId,
-          partitions, sgn)
+          sign = sgn)
         ()
       }
 
@@ -1611,7 +1563,6 @@ object Graph {
       batchId: Long,
       rounds: Int,
       partitions: Int = 64,
-      saturationFraction: Double = 0.2,
       sign: Long = 1L): Boolean = {
     import org.apache.hadoop.fs.Path
     require(rounds >= 1)
@@ -1656,7 +1607,7 @@ object Graph {
       val fresh = oldLabels match {
         case None => communityLabels(after, "src", "dst", rounds)
         case Some(old) => communityLabelsRefreshAuto(after, "src", "dst",
-          rounds, old, delta, saturationFraction).result
+          rounds, old, delta).result
       }
       // only CHANGED assignments upsert — ball-sized under the cone route
       val changed = oldLabels match {
@@ -1808,8 +1759,8 @@ object Graph {
     * round bit-for-bit, exactly the [[pageRank]] contract.
     *
     * Scale shape per round: the edge list joins the node-sized survivor
-    * frame twice (LEFT SEMI on src and dst — broadcast when nodes fit,
-    * the [[pageRank]] `broadcastRanks` trade-off) and one partial-agg
+    * frame twice (LEFT SEMI on src and dst, the survivor side
+    * broadcast) and one partial-agg
     * degree groupBy. Nothing larger than the edge list ever shuffles,
     * and the survivor frame only shrinks. Peeling depth on real graphs
     * is small (the degeneracy ordering converges in O(log n) synchronous
@@ -1822,16 +1773,14 @@ object Graph {
       srcCol: String,
       dstCol: String,
       k: Int,
-      rounds: Int,
-      broadcastAlive: Boolean = true,
-      checkpointEdges: Boolean = true): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.checkpointed() else e0
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .checkpointed()
     def degrees(ed: DataFrame): DataFrame =
       ed.groupBy(col("src")).agg(count(lit(1)).as("d"))
     def surviving(ed: DataFrame, alive: DataFrame): DataFrame = {
-      val a = if (broadcastAlive) broadcast(alive) else alive
+      val a = broadcast(alive)
       ed.join(a, ed("src") === a("node"), "left_semi")
         .join(a, ed("dst") === a("node"), "left_semi")
     }
@@ -1878,26 +1827,13 @@ object Graph {
   def kCoreHalf(
       half: DataFrame,
       k: Int,
-      rounds: Int,
-      broadcastDead: Boolean = true,
-      checkpointEdges: Boolean = true,
-      halfByDst: Option[DataFrame] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    // checkpointEdges = false: keep a stored bucketed table's scan (a
-    // checkpoint erases bucketing and reinstates the per-round Exchange)
-    val e0 = half.select(col("src"), col("dst"))
-    val e = if (checkpointEdges) e0.checkpointed() else e0
-    // the loss step joins the edge list on BOTH keys, so the cluster
-    // layout (broadcastDead = false — round 1's dead set is node-scale
-    // when k peels aggressively) is the hits edgesByDst device: the half
-    // table stored twice, bucketed by src and by dst, each join riding
-    // its own bucketing with zero edge-side exchanges (GraphOpsSpec
-    // asserts the plans; SCALING.md has the 1M-node A/B)
-    val eDst = halfByDst.map(_.select(col("src"), col("dst"))).getOrElse(e)
+    val e = half.select(col("src"), col("dst")).checkpointed()
     // losses toward BOTH endpoints from edges whose other endpoint died
     def loss(dead: DataFrame): DataFrame = {
-      val nb = if (broadcastDead) broadcast(dead) else dead
-      eDst.join(nb, eDst("dst") === nb("node")).select(eDst("src").as("n"))
+      val nb = broadcast(dead)
+      e.join(nb, e("dst") === nb("node")).select(e("src").as("n"))
         .unionAll(e.join(nb, e("src") === nb("node")).select(e("dst").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("l"))
     }
@@ -2118,9 +2054,7 @@ object Graph {
     * on a symmetric graph).
     *
     * Scale shape per step: the edge list joins the walk-sized frontier
-    * (broadcast by default; `broadcastFrontier = false` shuffles the
-    * frontier to the edge partitioning for walk sets beyond executor
-    * memory), then a narrow min(struct) argmax per walk — the hash
+    * (broadcast), then a narrow min(struct) argmax per walk — the hash
     * ride-along costs one md5 per candidate edge, and nothing larger
     * than (frontier x avg-degree) ever materializes. Output:
     * (walk_id, step, node), step 0 = the seed.
@@ -2131,7 +2065,6 @@ object Graph {
       dstCol: String,
       seeds: DataFrame,
       steps: Int,
-      broadcastFrontier: Boolean = true,
       checkpointEdges: Boolean = true): DataFrame = {
     require(steps >= 1)
     // checkpointEdges = false is the stored-bucketed-table escape: a
@@ -2144,7 +2077,7 @@ object Graph {
       .checkpointed()
     var walks = frontier.select(col("wid"), lit(0).as("step"), col("cur").as("node"))
     for (s <- 1 to steps) {
-      val f = if (broadcastFrontier) broadcast(frontier) else frontier
+      val f = broadcast(frontier)
       val cand = e.join(f, e("src") === f("cur"))
         .select(col("wid"), col("dst"),
           conv(substring(md5(
@@ -2171,33 +2104,24 @@ object Graph {
     * frontier (the hop-(i-1) discoveries, never the full visited set),
     * new nodes are a distinct + LEFT ANTI against the visited frame, and
     * the visited frame grows monotonically — the standard iterative BFS
-    * on joins. Frontier and visited frames are node-sized; the edge list
-    * is never mutated or re-shuffled. `broadcastFrontier = false` is the
-    * cluster escape for small-diameter power-law graphs where hop 2
-    * already reaches most nodes (a graph-sized broadcast would not fit
-    * an executor): the frontier then shuffles to the edge partitioning
-    * instead — pair with a src-bucketed stored edge table for the
-    * zero-exchange edge side, the [[pageRank]] `broadcastRanks` pattern.
+    * on joins. Frontier and visited frames are node-sized (the frontier
+    * broadcast); the edge list is never mutated or re-shuffled.
     */
   def bfsHops(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       seeds: Seq[Long],
-      maxHops: Int,
-      broadcastFrontier: Boolean = true,
-      checkpointEdges: Boolean = true): DataFrame = {
+      maxHops: Int): DataFrame = {
     require(seeds.nonEmpty && maxHops >= 1)
     val spark = edges.sparkSession
     import spark.implicits._
-    // checkpointEdges = false: keep a stored bucketed table's scan (a
-    // checkpoint erases bucketing and reinstates the per-round Exchange)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.checkpointed() else e0
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .checkpointed()
     var visited = seeds.toDF("node").select(col("node"), lit(0).as("hop"))
     var frontier = visited.select(col("node"))
     for (h <- 1 to maxHops) {
-      val f = if (broadcastFrontier) broadcast(frontier) else frontier
+      val f = broadcast(frontier)
       val next = e.join(f, e("src") === f("node"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
@@ -2248,12 +2172,10 @@ object Graph {
       steps: Int,
       retPermille: Int,
       inPermille: Int,
-      outPermille: Int,
-      broadcastFrontier: Boolean = true,
-      checkpointEdges: Boolean = true): DataFrame = {
+      outPermille: Int): DataFrame = {
     require(steps >= 1 && retPermille >= 1 && inPermille >= 1 && outPermille >= 1)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = if (checkpointEdges) e0.checkpointed() else e0
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .checkpointed()
     // node-sized adjacency for the distance-1 test, built once — per-step
     // probes join it on the walk's previous node, never the edge list
     val adj = e.groupBy(col("src").as("prev"))
@@ -2264,7 +2186,7 @@ object Graph {
       .checkpointed()
     var walks = frontier.select(col("wid"), lit(0).as("step"), col("cur").as("node"))
     for (s <- 1 to steps) {
-      val f = if (broadcastFrontier) broadcast(frontier) else frontier
+      val f = broadcast(frontier)
       val cand = e.join(f, e("src") === f("cur"))
         .select(col("wid"), col("prev"), col("cur"), col("dst"),
           conv(substring(md5(
@@ -2278,13 +2200,8 @@ object Graph {
       // stops broadcasting at cluster node counts while the slice stays
       // frontier-sized at ANY graph size — the same reasoning as the
       // frontier broadcast itself
-      lazy val prevAdj = {
-        val pset = frontier.select(col("prev")).distinct()
-        val slice = adj.join(
-          if (broadcastFrontier) broadcast(pset) else pset,
-          Seq("prev"), "left_semi")
-        if (broadcastFrontier) broadcast(slice) else slice
-      }
+      lazy val prevAdj = broadcast(adj.join(
+        broadcast(frontier.select(col("prev")).distinct()), Seq("prev"), "left_semi"))
       val weighted =
         if (s == 1) cand.withColumn("w", lit(1000L)) // no prev yet: unbiased
         else cand.join(prevAdj, Seq("prev"), "left")
@@ -2407,7 +2324,7 @@ object Graph {
     * `negatives` — independent of |E| (the edge list never appears;
     * SCALING.md smoke-pins flatness at 5× edges). The interval lookup is
     * an EQUI-join, not a range join: the `[0, total)` axis splits into
-    * `buckets` fixed-width buckets, each noise interval explodes onto
+    * 1024 fixed-width buckets, each noise interval explodes onto
     * the buckets it overlaps (vocab + buckets rows — intervals are
     * near-uniform after the 3/4-power flattening, so overlap fan-out is
     * ~2), each draw hashes to its bucket, and the residual `lo <= draw
@@ -2419,9 +2336,9 @@ object Graph {
   def sgnsNegatives(
       walks: DataFrame,
       window: Int,
-      negatives: Int,
-      buckets: Int = 1024): DataFrame = {
-    require(negatives >= 1 && buckets >= 1)
+      negatives: Int): DataFrame = {
+    require(negatives >= 1)
+    val buckets = 1024
     val noise = sgnsNoiseTable(walks).checkpointed() // vocab-sized
     val total = noise.agg(max(col("hi"))).head().getLong(0)
     val bw = (total + buckets - 1) / buckets // bucket width, >= 1

@@ -228,18 +228,17 @@ object Similarity {
       repartitionCols = Nil, targetFiles = targetFiles)
   }
 
-  /** [[compactInt8Index]] for the IVF+PQ layout (cell-pruned codes). */
-  def compactIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      targetFiles: Int = 64): Unit = {
+  /** [[compactInt8Index]] for the IVF+PQ layout (cell-pruned codes), into
+    * 64 files.
+    */
+  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     IndexLayout.resumeCompaction(spark, path)
     val through = IndexLayout.maxBatchId(spark, path)
     // marker FIRST — same crash-window rationale as [[compactInt8Index]]
     IndexLayout.writeCompactedThrough(spark, s"$path.meta/compacted", through)
     IndexLayout.compactTable(spark, path, Seq("cell", "batch"),
       toBatch = through, keep = identity,
-      repartitionCols = Seq("cell"), targetFiles = targetFiles)
+      repartitionCols = Seq("cell"), targetFiles = 64)
   }
 
   /** GDPR-style delete from a [[writeInt8Index]] layout: copy-on-write
@@ -931,25 +930,24 @@ object Similarity {
   }
 
   /** Random-hyperplane (sign) LSH near-duplicate pairs — the scale path
-    * for [[cosineNearDupPairs]]. Each vector gets `bands` bucket keys
-    * (one per band of `rowsPerBand` hyperplane sign bits); only vectors
-    * sharing a (band, bucket) are paired, then verified with the exact
-    * quantized cosine. Shuffle cost O(vectors x bands) instead of
-    * O(vectors^2); recall < 1 by design (governed by bands x rows).
+    * for [[cosineNearDupPairs]]. Each vector gets 8 bucket keys (one
+    * per band of 4 hyperplane sign bits); only vectors sharing a (band,
+    * bucket) are paired, then verified with the exact quantized cosine.
+    * Shuffle cost O(vectors x bands) instead of O(vectors^2); recall < 1
+    * by design (governed by bands x rows).
     *
-    * SCALE TUNING: random pairs collide with prob 2^-rowsPerBand per
+    * SCALE NOTE: random pairs collide with prob 2^-rowsPerBand per
     * band, so fixed-width bands make candidate volume quadratic as the
-    * corpus grows. Set rowsPerBand ~ ceil(log2(corpus size)) to keep the
+    * corpus grows; rowsPerBand ~ ceil(log2(corpus size)) keeps the
     * expected random-collision volume O(bands x n) — measured flat at
     * ~9-12 candidates/vector up to 2M vectors (SCALING.md, candidate-
-    * volume curve). The 4-bit default fits the sf-scale oracle corpora.
+    * volume curve). 4 bits fit the sf-scale oracle corpora.
     */
   def signLshNearDupPairs(
       corpus: DataFrame,
       minScoreQ4: Long,
-      dim: Int,
-      bands: Int = 8,
-      rowsPerBand: Int = 4): DataFrame = {
+      dim: Int): DataFrame = {
+    val (bands, rowsPerBand) = (8, 4)
     val c = withNorm(corpus, "vec", "v")
     // plane i dotted with the vector, as a native dot product against a
     // literal ±1 vector

@@ -126,8 +126,8 @@ object TextAnalysis {
     * broadcast back, and the top-k is orderBy+limit — Spark plans
     * `TakeOrderedAndProject` (per-partition heap + driver merge of k
     * rows), never a global sort or single-partition window.
-    * Scoring: standard Robertson BM25 with k1 = `k1Milli`/1000 and
-    * b = `bMilli`/1000; `idf_q10 = log2(N/df) * 1024` (non-negative,
+    * Scoring: standard Robertson BM25 with k1 = 1.2 and b = 0.75
+    * (`K1Milli`, `BMilli`); `idf_q10 = log2(N/df) * 1024` (non-negative,
     * unlike the log((N-df+.5)/(df+.5)) variant, and exactly portable).
     * Output: (doc_id, score_q10) top `topK` by (score desc, id).
     */
@@ -136,8 +136,6 @@ object TextAnalysis {
       textCol: String,
       idCol: String,
       queryTerms: Seq[String],
-      k1Milli: Long = 1200L,
-      bMilli: Long = 750L,
       topK: Int = 50): DataFrame = {
     val base = df.select(col(idCol).as("doc_id"),
       filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0).as("toks"))
@@ -150,7 +148,7 @@ object TextAnalysis {
     val tf = base.select(col("doc_id"), explode(col("toks")).as("t"))
       .filter(col("t").isin(qTerms: _*)) // prune BEFORE any shuffle
       .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
-    bm25Rank(tf.join(lens, "doc_id"), stats, k1Milli, bMilli, topK)
+    bm25Rank(tf.join(lens, "doc_id"), stats, topK)
   }
 
   /** Shared BM25 scoring tail: `withLen` = (doc_id, t, tf, len) rows for
@@ -158,37 +156,36 @@ object TextAnalysis {
     * corpus path and the materialized-index path end here, which is what
     * makes their rankings identical by construction.
     */
-  private def bm25Rank(
-      withLen: DataFrame,
-      stats: DataFrame,
-      k1Milli: Long,
-      bMilli: Long,
-      topK: Int): DataFrame = {
+  private def bm25Rank(withLen: DataFrame, stats: DataFrame, topK: Int): DataFrame = {
     val dfq = withLen.groupBy(col("t")).agg(count(lit(1)).as("dfreq"))
-    bm25Contrib(
-      withLen.join(broadcast(dfq), "t").crossJoin(broadcast(stats)),
-      k1Milli, bMilli)
+    bm25Contrib(withLen.join(broadcast(dfq), "t").crossJoin(broadcast(stats)))
       .groupBy(col("doc_id"))
       .agg(sum(col("contrib_q10")).as("score_q10"))
       .orderBy(col("score_q10").desc, col("doc_id"))
       .limit(topK)
   }
 
+  /** BM25 term-frequency saturation k1, in thousandths (1.2). */
+  private val K1Milli = 1200L
+
+  /** BM25 length normalization b, in thousandths (0.75). */
+  private val BMilli = 750L
+
   /** The per-(doc, term) BM25 contribution arithmetic, shared verbatim by
     * every scoring path (direct, from-index, multi-query) so rankings
     * agree by construction. Input needs (tf, len, dfreq, n, tot).
     */
-  private def bm25Contrib(rows: DataFrame, k1Milli: Long, bMilli: Long): DataFrame =
+  private def bm25Contrib(rows: DataFrame): DataFrame =
     rows
       .withColumn("idf_q10",
         expr(s"cast(${log2Q10Sql("n")} - ${log2Q10Sql("dfreq")} as bigint)"))
       .withColumn("avgl_milli", expr("(tot * 1000) div n"))
       .withColumn("rel_milli", expr("(len * 1000000) div avgl_milli"))
       .withColumn("norm_milli",
-        expr(s"(1000 - $bMilli) + ($bMilli * rel_milli) div 1000"))
+        expr(s"(1000 - $BMilli) + ($BMilli * rel_milli) div 1000"))
       .withColumn("tfn_milli",
-        expr(s"(tf * ($k1Milli + 1000) * 1000) div " +
-          s"(tf * 1000 + ($k1Milli * norm_milli) div 1000)"))
+        expr(s"(tf * ($K1Milli + 1000) * 1000) div " +
+          s"(tf * 1000 + ($K1Milli * norm_milli) div 1000)"))
       .withColumn("contrib_q10", expr("(idf_q10 * tfn_milli) div 1000"))
 
   /** Materialize an inverted index for [[bm25Search]]: postings
@@ -715,8 +712,6 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
       queryTerms: Seq[String],
-      k1Milli: Long = 1200L,
-      bMilli: Long = 750L,
       topK: Int = 50): DataFrame = {
     val ((n, tot, buckets), committed) = indexStatsSnapshot(spark, indexPath)
     val stats = spark.range(1).select(lit(n).as("n"), lit(tot).as("tot"))
@@ -729,7 +724,7 @@ object TextAnalysis {
       .filter(col("t").isin(qTerms: _*))        // parquet-pushed within bucket
       .transform(committedOnly(_, committed))   // commit-marker visibility
       .select(col("doc_id"), col("t"), col("tf"), col("len"))
-    bm25Rank(postings, stats.select(col("n"), col("tot")), k1Milli, bMilli, topK)
+    bm25Rank(postings, stats.select(col("n"), col("tot")), topK)
   }
 
   /** Multi-query BM25 against a materialized index: ONE bucket-pruned
@@ -752,8 +747,6 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
       queries: DataFrame,
-      k1Milli: Long = 1200L,
-      bMilli: Long = 750L,
       topK: Int = 50,
       statsRow: Option[(Long, Long, Long)] = None,
       committedIds: Option[Seq[Long]] = None): DataFrame = {
@@ -800,8 +793,7 @@ object TextAnalysis {
       postings
         .join(broadcast(qt), "t")
         .join(broadcast(dfq), "t")
-        .crossJoin(broadcast(statsDf)),
-      k1Milli, bMilli)
+        .crossJoin(broadcast(statsDf)))
       .groupBy(col("qid"), col("doc_id"))
       .agg(sum(col("contrib_q10")).as("score_q10"))
       .withColumn("r", row_number().over(rankW))
@@ -1068,11 +1060,11 @@ object TextAnalysis {
   /** Trained Naive Bayes text classifier — the in-engine analog of the
     * fastText-style curation classifiers (language ID, domain routing,
     * quality gating) every large training-data pipeline runs: hashed
-    * char-trigram bag features (`buckets`-way), add-one smoothing,
+    * char-trigram bag features (`NbBuckets`-way), add-one smoothing,
     * integer-exact log2 scores (see [[log2Q10Sql]] — no libm, so the
     * DuckDB oracle reproduces every score bit-for-bit).
     *
-    * Trains on the content-hash split `md5(text) % 1000 < trainPermille`
+    * Trains on the content-hash split `md5(text) % 1000 < 800`
     * (the `Curation.datasetSplit` convention — exact dups co-assign, so
     * the held-out side is leakage-free by construction) and scores EVERY
     * doc with >= 1 trigram:
@@ -1084,7 +1076,7 @@ object TextAnalysis {
     * Scale shape: the trigram explode is the one corpus-sized pass,
     * collapsed immediately to per-(doc, bucket) multiplicities and
     * lazily checkpointed — the model and the scorer share that frame.
-    * The model is <= |classes| x `buckets` rows and the class table
+    * The model is <= |classes| x `NbBuckets` rows and the class table
     * <= |classes| rows, both broadcast; scoring fans each (doc, bucket)
     * row out exactly |classes| ways, re-aggregates per (doc, class), and
     * picks the argmax with a window over |classes| rows per doc — no
@@ -1096,14 +1088,12 @@ object TextAnalysis {
       df: DataFrame,
       textCol: String,
       idCol: String,
-      labelCol: String,
-      trainPermille: Int = 800,
-      buckets: Int = 4096): DataFrame = {
+      labelCol: String): DataFrame = {
     val base = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       col(labelCol).as("__label"),
-      (pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille).as("__train"))
+      (pmod(Curation.hash48(col(textCol)), lit(1000)) < 800).as("__train"))
     val td = charTrigrams(base, "__text", "doc_id", carryCols = Seq("__train", "__label"))
-      .withColumn("b", pmod(portableHash48(col("t")), lit(buckets)))
+      .withColumn("b", pmod(portableHash48(col("t")), lit(NbBuckets)))
       .groupBy(col("doc_id"), col("__label"), col("__train"), col("b"))
       .agg(count(lit(1)).as("k"))
       .checkpointed(eager = false)
@@ -1116,11 +1106,14 @@ object TextAnalysis {
     val priors = base.filter(col("__train"))
       .groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c"))
     val classes = classTot.join(priors, "c")
-    nbScoreCore(td.select(col("doc_id"), col("b"), col("k")), m, classes, buckets)
+    nbScoreCore(td.select(col("doc_id"), col("b"), col("k")), m, classes)
   }
 
+  /** Hashed trigram buckets of every NB model (the feature width B). */
+  private val NbBuckets = 4096
+
   /** Bounded (__label, __tr, b, k) trigram-bucket counts — ONE
-    * extraction pass whose aggregate output is <= 2 x |C| x `buckets`
+    * extraction pass whose aggregate output is <= 2 x |C| x `NbBuckets`
     * rows no matter the corpus size, from which both the model counts
     * (the `__tr` rows) and the drift mass (summed over both split
     * sides) derive. Never materializes per-doc rows — a per-doc
@@ -1131,16 +1124,13 @@ object TextAnalysis {
       df: DataFrame,
       textCol: String,
       idCol: String,
-      labelCol: String,
-      trainPermille: Int,
-      buckets: Int): DataFrame =
+      labelCol: String): DataFrame =
     charTrigrams(
       df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
         col(labelCol).as("__label"),
-        (pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille)
-          .as("__tr")),
+        (pmod(Curation.hash48(col(textCol)), lit(1000)) < 800).as("__tr")),
       "__text", "doc_id", carryCols = Seq("__label", "__tr"))
-      .withColumn("b", pmod(portableHash48(col("t")), lit(buckets)))
+      .withColumn("b", pmod(portableHash48(col("t")), lit(NbBuckets)))
       .groupBy(col("__label"), col("__tr"), col("b"))
       .agg(count(lit(1)).as("k"))
 
@@ -1153,16 +1143,13 @@ object TextAnalysis {
       df: DataFrame,
       textCol: String,
       idCol: String,
-      labelCol: String,
-      trainPermille: Int,
-      buckets: Int): DataFrame =
+      labelCol: String): DataFrame =
     charTrigrams(
       df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
         col(labelCol).as("__label"),
-        (pmod(Curation.hash48(col(textCol)), lit(1000)) < trainPermille)
-          .as("__tr")),
+        (pmod(Curation.hash48(col(textCol)), lit(1000)) < 800).as("__tr")),
       "__text", "doc_id", carryCols = Seq("__label", "__tr"))
-      .withColumn("b", pmod(portableHash48(col("t")), lit(buckets)))
+      .withColumn("b", pmod(portableHash48(col("t")), lit(NbBuckets)))
       .groupBy(col("doc_id"), col("__label"), col("__tr"), col("b"))
       .agg(count(lit(1)).as("k"))
 
@@ -1196,7 +1183,7 @@ object TextAnalysis {
     *
     *  - distribution drift: per-bucket trigram-MASS share (per-mille^2,
     *    q6) of the appended slice vs the frozen slice, summarized to
-    *    max/mean absolute share delta over the `buckets` hash buckets —
+    *    max/mean absolute share delta over the `NbBuckets` hash buckets —
     *    the text analog of the embedding per-dim mean shift;
     *  - model erosion: every appended doc classified by the FROZEN
     *    model and by the model a fresh retrain would produce (derived by
@@ -1221,8 +1208,7 @@ object TextAnalysis {
       textCol: String,
       idCol: String,
       labelCol: String,
-      isFrozen: Column,
-      buckets: Int = 4096): DataFrame = {
+      isFrozen: Column): DataFrame = {
     val spark = df.sparkSession
     val flagged = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       col(labelCol).as("__label"), isFrozen.as("__fr"),
@@ -1238,9 +1224,9 @@ object TextAnalysis {
       // scoring needs them — and its model/mass aggregates derive from
       // those for free
       val ccF = nbClassBucketCounts(flagged.filter(col("__fr")),
-        "__text", "doc_id", "__label", 800, buckets)
+        "__text", "doc_id", "__label")
       val triA = nbDocBucketCounts(flagged.filter(!col("__fr")),
-        "__text", "doc_id", "__label", 800, buckets)
+        "__text", "doc_id", "__label")
         .checkpointed()
       // ONE (fr, tr, label)-cube scan (r18, guide §1.2) replaces three
       // separate doc-level scans of the source (the slice-count agg +
@@ -1262,105 +1248,81 @@ object TextAnalysis {
       // ccF feeds the frozen model AND the frozen mass: pin the bounded
       // cube so the extraction is not replayed per consumer
       val ccFp = ccF.checkpointed()
-      nbStalenessCore(spark,
-        frozenModel = ccFp.filter(col("__tr"))
-          .select(col("__label").as("c"), col("b"), col("k").as("n_cb")),
-        frozenPriors = priorsF,
-        frozenMass = ccFp.groupBy(col("b")).agg(sum(col("k")).as("k")),
-        nFrozen = cnt.getAs[Long]("n_frozen"),
-        appendedModel = triA.filter(col("__tr"))
-          .groupBy(col("__label").as("c"), col("b"))
+      // the report's tail: score the appended docs with the frozen model
+      // and with the MERGED (= retrained, bit-equal) fresh model, fold
+      // the erosion and drift aggregates EAGERLY (their inputs are
+      // checkpoints this scope releases on return; the returned frame is
+      // literals only), and emit the one report row
+      val frozenModel = ccFp.filter(col("__tr"))
+        .select(col("__label").as("c"), col("b"), col("k").as("n_cb"))
+      val appendedTri = triA.select(col("doc_id"), col("b"), col("k"))
+      val clsF = frozenModel.groupBy(col("c")).agg(sum(col("n_cb")).as("n_c"))
+        .join(priorsF, "c")
+      val (mR, clsR) = nbMergeModels(frozenModel, priorsF,
+        triA.filter(col("__tr")).groupBy(col("__label").as("c"), col("b"))
           .agg(sum(col("k")).as("n_cb")),
-        appendedPriors = priorsA,
-        appendedMass = triA.groupBy(col("b")).agg(sum(col("k")).as("k")),
-        appendedTri = triA.select(col("doc_id"), col("b"), col("k")),
-        appendedLabels = flagged.filter(!col("__fr"))
-          .select(col("doc_id"), col("__label")),
-        nAppended = cnt.getAs[Long]("n_appended"),
-        buckets = buckets)
+        priorsA)
+      val sF = nbScoreCore(appendedTri, frozenModel, clsF)
+      val sR = nbScoreCore(appendedTri, mR, clsR)
+      // the erosion row is forced eagerly: n_scored = 0 must fail loudly
+      // here (the repo's fail-loud convention; the oracle's floor division
+      // would error while a lazy frame would silently null the rates)
+      val ero = sF.select(col("doc_id"), col("pred_label").as("pf"))
+        .join(sR.select(col("doc_id"), col("pred_label").as("pr")), "doc_id")
+        .join(flagged.filter(!col("__fr")).select(col("doc_id"), col("__label")),
+          "doc_id")
+        .agg(count(lit(1)).as("n_scored"),
+          sum(when(col("pf") =!= col("pr"), lit(1L)).otherwise(lit(0L)))
+            .as("disagree"),
+          sum(when(col("pf") === col("__label"), lit(1L)).otherwise(lit(0L)))
+            .as("frozen_hits"),
+          sum(when(col("pr") === col("__label"), lit(1L)).otherwise(lit(0L)))
+            .as("fresh_hits"))
+        .head()
+      require(ero.getAs[Long]("n_scored") > 0L,
+        "nbModelStalenessReport: the appended slice has no scorable docs " +
+          "(no >= 3-char texts, or isFrozen matched every doc)")
+      // per-bucket trigram-mass share per slice (ALL docs of each slice —
+      // distribution monitoring, not the train split). k * 10^6 stays far
+      // below int64 for any per-bucket trigram mass a shard can hold.
+      val share = ccFp.groupBy(col("b")).agg(sum(col("k")).as("k"))
+        .withColumn("__fr", lit(true))
+        .unionByName(triA.groupBy(col("b")).agg(sum(col("k")).as("k"))
+          .withColumn("__fr", lit(false)))
+      val drift = share
+        .join(share.groupBy(col("__fr")).agg(sum(col("k")).as("tk")), "__fr")
+        .select(col("__fr"), col("b"), expr("k * 1000000 div tk").as("s_q6"))
+        .groupBy(col("b"))
+        .agg(sum(when(col("__fr"), col("s_q6"))).as("sf"),
+          sum(when(!col("__fr"), col("s_q6"))).as("sa"))
+        .select(abs(coalesce(col("sa"), lit(0L)) -
+          coalesce(col("sf"), lit(0L))).as("ad"))
+        .agg(max(col("ad")).as("max_share_delta_q6"),
+          expr("sum(ad) div count(1)").as("mean_share_delta_q6"))
+        .head()
+      spark.range(1).select(
+        lit(cnt.getAs[Long]("n_frozen")).as("n_frozen"),
+        lit(cnt.getAs[Long]("n_appended")).as("n_appended"),
+        lit(drift.getAs[Long]("max_share_delta_q6")).as("max_share_delta_q6"),
+        lit(drift.getAs[Long]("mean_share_delta_q6")).as("mean_share_delta_q6"),
+        lit(ero.getAs[Long]("n_scored")).as("n_scored"),
+        lit(ero.getAs[Long]("disagree")).as("disagree"),
+        lit(ero.getAs[Long]("frozen_hits")).as("frozen_hits"),
+        lit(ero.getAs[Long]("fresh_hits")).as("fresh_hits"))
+        .select(col("n_frozen"), col("n_appended"),
+          col("max_share_delta_q6"), col("mean_share_delta_q6"),
+          col("n_scored"), col("disagree"),
+          expr("disagree * 1000 div n_scored").as("disagree_q3"),
+          col("frozen_hits"), col("fresh_hits"),
+          expr("frozen_hits * 1000 div n_scored").as("acc_frozen_q3"),
+          expr("fresh_hits * 1000 div n_scored").as("acc_fresh_q3"),
+          (expr("fresh_hits * 1000 div n_scored") -
+            expr("frozen_hits * 1000 div n_scored")).as("acc_gap_q3"))
     }
   }
 
-  /** The staleness report's tail: score the appended docs with
-    * the frozen model and with the MERGED (= retrained, bit-equal) fresh
-    * model, fold the erosion and drift aggregates EAGERLY (inputs may be
-    * checkpoint-backed frames the caller's scope releases on return; the
-    * returned frame is literals only), and emit the one report row.
-    */
-  private def nbStalenessCore(
-      spark: org.apache.spark.sql.SparkSession,
-      frozenModel: DataFrame, // (c, b, n_cb)
-      frozenPriors: DataFrame, // (c, d_c)
-      frozenMass: DataFrame, // (b, k)
-      nFrozen: Long,
-      appendedModel: DataFrame,
-      appendedPriors: DataFrame,
-      appendedMass: DataFrame,
-      appendedTri: DataFrame,
-      appendedLabels: DataFrame,
-      nAppended: Long,
-      buckets: Int): DataFrame = {
-    val clsF = frozenModel.groupBy(col("c")).agg(sum(col("n_cb")).as("n_c"))
-      .join(frozenPriors, "c")
-    val (mR, clsR) =
-      nbMergeModels(frozenModel, frozenPriors, appendedModel, appendedPriors)
-    val sF = nbScoreCore(appendedTri, frozenModel, clsF, buckets)
-    val sR = nbScoreCore(appendedTri, mR, clsR, buckets)
-    // the erosion row is forced eagerly: n_scored = 0 must fail loudly
-    // here (the repo's fail-loud convention; the oracle's floor division
-    // would error while a lazy frame would silently null the rates)
-    val ero = sF.select(col("doc_id"), col("pred_label").as("pf"))
-      .join(sR.select(col("doc_id"), col("pred_label").as("pr")), "doc_id")
-      .join(appendedLabels, "doc_id")
-      .agg(count(lit(1)).as("n_scored"),
-        sum(when(col("pf") =!= col("pr"), lit(1L)).otherwise(lit(0L)))
-          .as("disagree"),
-        sum(when(col("pf") === col("__label"), lit(1L)).otherwise(lit(0L)))
-          .as("frozen_hits"),
-        sum(when(col("pr") === col("__label"), lit(1L)).otherwise(lit(0L)))
-          .as("fresh_hits"))
-      .head()
-    require(ero.getAs[Long]("n_scored") > 0L,
-      "nbModelStalenessReport: the appended slice has no scorable docs " +
-        "(no >= 3-char texts, or isFrozen matched every doc)")
-    // per-bucket trigram-mass share per slice (ALL docs of each slice —
-    // distribution monitoring, not the train split). k * 10^6 stays far
-    // below int64 for any per-bucket trigram mass a shard can hold.
-    val share = frozenMass.withColumn("__fr", lit(true))
-      .unionByName(appendedMass.withColumn("__fr", lit(false)))
-    val drift = share
-      .join(share.groupBy(col("__fr")).agg(sum(col("k")).as("tk")), "__fr")
-      .select(col("__fr"), col("b"), expr("k * 1000000 div tk").as("s_q6"))
-      .groupBy(col("b"))
-      .agg(sum(when(col("__fr"), col("s_q6"))).as("sf"),
-        sum(when(!col("__fr"), col("s_q6"))).as("sa"))
-      .select(abs(coalesce(col("sa"), lit(0L)) -
-        coalesce(col("sf"), lit(0L))).as("ad"))
-      .agg(max(col("ad")).as("max_share_delta_q6"),
-        expr("sum(ad) div count(1)").as("mean_share_delta_q6"))
-      .head()
-    spark.range(1).select(
-      lit(nFrozen).as("n_frozen"),
-      lit(nAppended).as("n_appended"),
-      lit(drift.getAs[Long]("max_share_delta_q6")).as("max_share_delta_q6"),
-      lit(drift.getAs[Long]("mean_share_delta_q6")).as("mean_share_delta_q6"),
-      lit(ero.getAs[Long]("n_scored")).as("n_scored"),
-      lit(ero.getAs[Long]("disagree")).as("disagree"),
-      lit(ero.getAs[Long]("frozen_hits")).as("frozen_hits"),
-      lit(ero.getAs[Long]("fresh_hits")).as("fresh_hits"))
-      .select(col("n_frozen"), col("n_appended"),
-        col("max_share_delta_q6"), col("mean_share_delta_q6"),
-        col("n_scored"), col("disagree"),
-        expr("disagree * 1000 div n_scored").as("disagree_q3"),
-        col("frozen_hits"), col("fresh_hits"),
-        expr("frozen_hits * 1000 div n_scored").as("acc_frozen_q3"),
-        expr("fresh_hits * 1000 div n_scored").as("acc_fresh_q3"),
-        (expr("fresh_hits * 1000 div n_scored") -
-          expr("frozen_hits * 1000 div n_scored")).as("acc_gap_q3"))
-  }
-
   /** Class scores WITHOUT the per-class row fan-out: the model pivots to
-    * ONE class-indexed weight array per bucket (`mvec`, <= `buckets`
+    * ONE class-indexed weight array per bucket (`mvec`, <= `NbBuckets`
     * broadcast rows), each (doc, bucket) row multiply-adds its whole
     * weight column into a fixed-width accumulator
     * ([[graft.expressions.SumScaledLongArrays]]), and only the final
@@ -1378,8 +1340,7 @@ object TextAnalysis {
   private def nbScoreCore(
       td: DataFrame,
       model: DataFrame,
-      classes: DataFrame,
-      buckets: Int): DataFrame = {
+      classes: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = td.sparkSession
     import spark.implicits._
@@ -1419,7 +1380,7 @@ object TextAnalysis {
         posexplode(col("s1arr")).as(Seq("ci", "s1")))
       .join(broadcast(clsMeta), "ci")
       .withColumn("score_q10",
-        expr(s"cast(${log2Q10Sql("d_c")} + s1 - n_occ * ${log2Q10Sql(s"(n_c + $buckets)")} as bigint)"))
+        expr(s"cast(${log2Q10Sql("d_c")} + s1 - n_occ * ${log2Q10Sql(s"(n_c + $NbBuckets)")} as bigint)"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score_q10").desc, col("c"))
     scored.withColumn("rn", row_number().over(w))

@@ -751,56 +751,31 @@ object CoreOps {
     * data. Cost accounting (16M rows, SCALING "Skewed keys"): the probe
     * IS the key-column scan — row-sampling does not avoid it (measured
     * sampled 1.1 s vs exact 1.1 s; the per-row RNG cancels the smaller
-    * agg), so the default is the exact, deterministic probe. On parquet
-    * input the scan is column-pruned to the key alone; at cluster scale
-    * amortize further by probing once per table epoch (the share is a
-    * property of the DATA, not of the query) and passing the decision
-    * through explicitly. `sampleFraction < 1` remains for callers whose
-    * agg (very wide key domains) dominates the scan; a sample under 50k
-    * rows falls back to exact — small corpora make the exact scan cheap
-    * precisely when the sample is unstable. Returns 0.0 on an empty
-    * frame.
+    * agg), so the probe is exact and deterministic. On parquet input the
+    * scan is column-pruned to the key alone; at cluster scale amortize
+    * further by probing once per table epoch (the share is a property of
+    * the DATA, not of the query) and passing the decision through
+    * explicitly. Returns 0.0 on an empty frame.
     */
-  def topKeyShare(
-      df: DataFrame,
-      key: String,
-      sampleFraction: Double = 1.0,
-      seed: Long = 42L): Double = {
-    require(sampleFraction > 0 && sampleFraction <= 1.0,
-      s"sampleFraction in (0, 1], got $sampleFraction")
-    def probe(frame: DataFrame): (Long, Long) = {
-      val row = frame.groupBy(col(key)).agg(count(lit(1)).as("__n"))
-        .agg(max(col("__n")).as("__mx"), sum(col("__n")).as("__tot"))
-        .collect()(0) // exactly one row by construction
-      if (row.isNullAt(0) || row.isNullAt(1)) (0L, 0L)
-      else (row.getLong(0), row.getLong(1))
-    }
-    val keys = df.select(col(key))
-    val (mx, tot) =
-      if (sampleFraction >= 1.0) probe(keys)
-      else {
-        val est = probe(keys.sample(sampleFraction, seed))
-        if (est._2 >= 50000L) est else probe(keys)
-      }
-    if (tot == 0L) 0.0 else mx.toDouble / tot.toDouble
+  def topKeyShare(df: DataFrame, key: String): Double = {
+    val row = df.select(col(key)).groupBy(col(key)).agg(count(lit(1)).as("__n"))
+      .agg(max(col("__n")).as("__mx"), sum(col("__n")).as("__tot"))
+      .collect()(0) // exactly one row by construction
+    if (row.isNullAt(0) || row.isNullAt(1) || row.getLong(1) == 0L) 0.0
+    else row.getLong(0).toDouble / row.getLong(1).toDouble
   }
 
   /** True iff the corpus should take the chunked (skew-immune) twin.
     *
     * Exposed separately so tests and telemetry can observe the decision
     * itself, not just the plan it produced. Threshold semantics: a key
-    * holding more than `skewThreshold` of all rows makes the direct
+    * holding more than 5% of all rows makes the direct
     * form's slowest task do that share of ALL per-key window work — at
     * 0.05 and 1000 executors that is a 50x straggler, well past the
     * chunked twin's bounded summary-pass overhead.
     */
-  def routeChunked(
-      df: DataFrame,
-      key: String,
-      skewThreshold: Double = 0.05,
-      sampleFraction: Double = 1.0,
-      seed: Long = 42L): Boolean =
-    topKeyShare(df, key, sampleFraction, seed) > skewThreshold
+  def routeChunked(df: DataFrame, key: String): Boolean =
+    topKeyShare(df, key) > 0.05
 
   /** [[asofJoin]] / [[asofJoinChunked]] with skew-routed dispatch. The
     * probe runs over BOTH sides' keys unioned: a hot key on either side
@@ -811,12 +786,9 @@ object CoreOps {
       right: DataFrame,
       key: String,
       tsCol: String,
-      bucketUs: Long,
-      skewThreshold: Double = 0.05,
-      sampleFraction: Double = 1.0,
-      seed: Long = 42L): DataFrame = {
+      bucketUs: Long): DataFrame = {
     val keys = left.select(col(key)).unionAll(right.select(col(key)))
-    if (routeChunked(keys, key, skewThreshold, sampleFraction, seed))
+    if (routeChunked(keys, key))
       asofJoinChunked(left, right, key, tsCol, bucketUs)
     else asofJoin(left, right, key, tsCol)
   }
@@ -830,11 +802,8 @@ object CoreOps {
       tsCol: String,
       gapUs: Long,
       bucketUs: Long,
-      valueCol: String,
-      skewThreshold: Double = 0.05,
-      sampleFraction: Double = 1.0,
-      seed: Long = 42L): DataFrame =
-    if (routeChunked(df, key, skewThreshold, sampleFraction, seed))
+      valueCol: String): DataFrame =
+    if (routeChunked(df, key))
       sessionSummaryChunked(df, key, tsCol, gapUs, bucketUs, valueCol)
     else sessionSummary(df, key, tsCol, s"$gapUs microseconds", valueCol)
 
@@ -847,11 +816,8 @@ object CoreOps {
       tsCol: String,
       valueCol: String,
       rangeUs: Long,
-      bucketUs: Long,
-      skewThreshold: Double = 0.05,
-      sampleFraction: Double = 1.0,
-      seed: Long = 42L): DataFrame =
-    if (routeChunked(df, key, skewThreshold, sampleFraction, seed))
+      bucketUs: Long): DataFrame =
+    if (routeChunked(df, key))
       rollingRangeStatsChunked(df, key, tsCol, valueCol, rangeUs, bucketUs)
     else rollingRangeStats(df, key, tsCol, valueCol, rangeUs)
 }

@@ -334,34 +334,6 @@ object Lake {
     }
   }
 
-  /** Z-order clustered write: the data-LAYOUT operator a 100 TB lake
-    * runs so that multi-dimensional range queries prune files instead of
-    * scanning the corpus. Rows sort by their interleaved-bit
-    * [[zOrderValue]], range-partition into `numFiles` writer tasks, and
-    * each parquet file ends up covering a small hyper-rectangle of the
-    * key space — its row-group min/max stats then exclude it from any
-    * query whose predicate misses that rectangle (the same mechanic as
-    * Delta's OPTIMIZE ZORDER BY, expressed over plain parquet).
-    * Single-dimension sorts cluster one column perfectly and scatter the
-    * rest; the Z curve buys locality in EVERY listed dimension at once
-    * (LayoutSpec measures the file-touch counts).
-    *
-    * Scale shape: one 1-row span aggregate, one range shuffle (sampled
-    * bounds), a within-partition sort — no global sort, no driver data.
-    */
-  def writeZOrdered(
-      df: org.apache.spark.sql.DataFrame,
-      cols: Seq[String],
-      path: String,
-      numFiles: Int): Unit = {
-    val spans = zOrderSpans(df, cols)
-    df.withColumn("__z", zOrderValue(cols.map(col), spans))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-  }
-
   def compactPartitions(
       spark: SparkSession,
       dir: String,

@@ -19,10 +19,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
   */
 object Sinks {
 
-  /** K1: append text/csv files under `path`, checkpoint under `checkpoint`. */
-  def fileSink(df: DataFrame, path: String, checkpoint: String, format: String = "csv"): DataStreamWriter[Row] =
+  /** K1: append csv files under `path`, checkpoint under `checkpoint`. */
+  def fileSink(df: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
     df.writeStream
-      .format(format)
+      .format("csv")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
@@ -98,28 +98,18 @@ object Sinks {
       }
   }
 
-  /** K3: console sink (the reference's `print()`). */
-  def consoleSink(df: DataFrame, numRows: Int = 20): DataStreamWriter[Row] =
-    df.writeStream.format("console").option("numRows", numRows.toString)
+  /** K3: console sink (the reference's `print()`), 20 rows per batch. */
+  def consoleSink(df: DataFrame): DataStreamWriter[Row] =
+    df.writeStream.format("console").option("numRows", "20")
 
-  /** X1 at scale: single-pass fan-out to N branch handlers. The micro-batch
-    * is cached once, every branch filters/transforms/writes from the cached
+  /** X1 at scale: single-pass fan-out to N branch handlers, with the
+    * micro-batch id passed through to every branch. The micro-batch is
+    * cached once, every branch filters/transforms/writes from the cached
     * batch, then the cache is released — one source read feeds all
     * branches (the reference's side-output split without re-scanning).
-    */
-  def fanoutSink(
-      df: DataFrame,
-      branches: Seq[(String, DataFrame => Unit)]): DataStreamWriter[Row] =
-    // one persist/try/unpersist contract, implemented once below
-    fanoutSinkById(df, branches.map { case (name, handle) =>
-      name -> ((b: DataFrame, _: Long) => handle(b))
-    })
-
-  /** [[fanoutSink]] with the micro-batch id passed through to every
-    * branch — for branches whose writes are idempotent PER BATCH ID
-    * (batch-partition sinks, index appends): one cached source read feeds
-    * all branches AND a replayed micro-batch overwrites its own output
-    * instead of duplicating it (exactly-once contents under
+    * Branches whose writes are idempotent PER BATCH ID (batch-partition
+    * sinks, index appends) make a replayed micro-batch overwrite its own
+    * output instead of duplicating it (exactly-once contents under
     * foreachBatch's at-least-once replay).
     */
   def fanoutSinkById(

@@ -91,7 +91,9 @@ object CurationPipeline {
 
   /** One gated doc stream fanned into curate + metrics. Caller sets the
     * checkpoint location and starts the returned writer; restarting from
-    * the same checkpoint resumes exactly where the crash left off.
+    * the same checkpoint resumes exactly where the crash left off. The
+    * dedup probe matches the index's LSH layout: 3-gram shingles, 4 bands
+    * of 4 rows, near-dups at Jaccard >= 0.6.
     */
   def start(
       docs: DataFrame,
@@ -102,17 +104,13 @@ object CurationPipeline {
       dupsPath: String,
       indexPath: String,
       metricsPath: String,
-      n: Int = 3,
-      bands: Int = 4,
-      rowsPerBand: Int = 4,
-      minJaccardMilli: Int = 600,
       buckets: Int = 16): DataStreamWriter[Row] = {
     val gated = StreamingCuration.annotateAndGate(docs, textCol, minQualityMilli)
     Sinks.fanoutSinkById(gated, Seq(
       "curate" -> ((b: DataFrame, id: Long) =>
         if (!b.isEmpty)
           curateBatch(b, id, textCol, idCol, keptPath, dupsPath, indexPath,
-            n, bands, rowsPerBand, minJaccardMilli, buckets)),
+            n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 600, buckets)),
       "metrics" -> ((b: DataFrame, id: Long) =>
         if (!b.isEmpty)
           metricsBatch(b, id, metricsPath))))

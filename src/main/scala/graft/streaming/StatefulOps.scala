@@ -267,7 +267,7 @@ object StatefulOps {
     * `funnel_click_purchase` query (forward as-of window): each click is
     * resolved by the FIRST (ts, event_id)-later purchase of the same user
     * — `converted` iff that purchase's ts is strictly later and within
-    * `windowUs`. A purchase at the exact click timestamp resolves the
+    * one hour. A purchase at the exact click timestamp resolves the
     * click unconverted, exactly like the batch running-min (which that
     * purchase masks).
     *
@@ -277,9 +277,8 @@ object StatefulOps {
     * a production deployment. Pending state per user is capped by the
     * clicks between two purchases, not the stream length.
     */
-  def funnelConversions(
-      events: Dataset[FunnelEvent],
-      windowUs: Long = 3600000000L): Dataset[FunnelResolution] = {
+  def funnelConversions(events: Dataset[FunnelEvent]): Dataset[FunnelResolution] = {
+    val windowUs = 3600000000L
     implicit val outEnc = Encoders.product[FunnelResolution]
     implicit val stateEnc = Encoders.product[PendingClicks]
     implicit val longEnc = Encoders.scalaLong

@@ -41,14 +41,13 @@ object StreamOps {
   def runningKeyedSum(df: DataFrame, key: String, valueCol: String): DataFrame =
     df.groupBy(col(key)).agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
 
-  /** A3: sliding window summary. */
+  /** A3: sliding window summary, watermarked 2 seconds behind. */
   def slidingSummary(
       df: DataFrame,
       tsCol: String,
       width: String,
-      slide: String,
-      watermark: String = "2 seconds"): DataFrame =
-    df.withWatermark(tsCol, watermark)
+      slide: String): DataFrame =
+    df.withWatermark(tsCol, "2 seconds")
       .groupBy(window(col(tsCol), width, slide).as("w"))
       .agg(count(lit(1)).as("n"), min(col(tsCol)).as("min_ts"), max(col(tsCol)).as("max_ts"))
       .select(col("w.start").as("window_start"), col("n"), col("min_ts"), col("max_ts"))
@@ -107,9 +106,8 @@ object StreamOps {
       tsCol: String,
       gap: String,
       typeCol: String,
-      idCol: String,
-      watermark: String = "2 seconds"): DataFrame =
-    df.withWatermark(tsCol, watermark)
+      idCol: String): DataFrame =
+    df.withWatermark(tsCol, "2 seconds")
       .groupBy(col(key), session_window(col(tsCol), gap).as("w"))
       .agg(array_join(transform(array_sort(collect_list(struct(
         unix_micros(col(tsCol)).as("t"), col(idCol).as("i"),
@@ -127,62 +125,6 @@ object StreamOps {
     df.withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), width).as("w") +: keys.map(col): _*)
       .agg(count(lit(1)).as("n"))
-
-  /** Streaming deduplication (training-pipeline staple; no reference
-    * counterpart). Exact key dedup with bounded state: rows whose key was
-    * already seen inside the watermark horizon are dropped, state for
-    * expired event times is evicted. Use a digest column (md5/fingerprint)
-    * as the key for document streams.
-    */
-  def streamingDedup(
-      df: DataFrame,
-      tsCol: String,
-      watermark: String,
-      keys: String*): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Streaming NEAR-duplicate detection (training-pipeline staple beyond
-    * [[streamingDedup]]'s exact keys): minhash-LSH band keys over the
-    * document stream, paired by a windowed stream-stream self-join and
-    * verified with exact Jaccard over the shingle sets carried through
-    * the join. Only documents in the same time window pair up — the
-    * window equality is what lets Spark evict join state at the
-    * watermark, so state is bounded by (window x ingest rate), not the
-    * corpus. A pair colliding in multiple bands is emitted once per
-    * band; dedup downstream with `dropDuplicatesWithinWatermark` if a
-    * unique pair stream is needed.
-    */
-  def streamingNearDupPairs(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      tsCol: String,
-      width: String,
-      watermark: String,
-      n: Int = 3,
-      bands: Int = 4,
-      rowsPerBand: Int = 4,
-      minJaccardMilli: Int = 500): DataFrame = {
-    def side(aId: String, shName: String, suffix: String) =
-      graft.functions.Dedup.bandKeys(docs, textCol, idCol, n, bands, rowsPerBand,
-        passthrough = Seq(tsCol))
-        .withWatermark(tsCol, watermark)
-        .withColumn("w" + suffix, window(col(tsCol), width))
-        .select(col("doc").as(aId), col("sh").as(shName),
-          col("band").as("band" + suffix), col("bh").as("bh" + suffix), col("w" + suffix))
-    val l = side("a", "sha", "")
-    val r = side("b", "shb", "_r")
-    l.join(r,
-        col("band") === col("band_r") && col("bh") === col("bh_r") &&
-          col("w") === col("w_r") && col("a") < col("b"))
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("uni", size(col("sha")) + size(col("shb")) - col("inter"))
-      .withColumn("jaccard_milli",
-        floor(col("inter") * lit(1000.0) / col("uni")).cast("long"))
-      .filter(col("jaccard_milli") >= minJaccardMilli)
-      .select(col("w"), col("a"), col("b"), col("band"), col("jaccard_milli"))
-  }
 
   /** J1 (`WindowJoins.java:110-144`): stream-stream inner equi-join per
     * tumbling window. Both sides are bucketed with `window()` and joined on
@@ -435,11 +377,10 @@ object StreamOps {
     * so a duplicate arriving minutes after its original is caught by
     * index rows the stream itself wrote (spec-proven). Within-batch
     * duplicates: exact dups collapse upstream via
-    * `dropDuplicatesWithinWatermark` on a fingerprint
-    * ([[streamingDedup]]); intra-batch NEAR-dups both enter the index
-    * (caught by the batch LSH pass on the backlog — the documented
-    * batch-tier responsibility, same split as [[streamingNearDupPairs]]'
-    * window bound). `indexPath` must hold a seeded `writeLshIndex`
+    * `dropDuplicatesWithinWatermark` on a fingerprint; intra-batch
+    * NEAR-dups both enter the index (caught by the batch LSH pass on the
+    * backlog — the documented batch-tier responsibility).
+    * `indexPath` must hold a seeded `writeLshIndex`
     * layout (>= 1 document) before the stream starts.
     */
   def dedupIngestStream(

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   * (PushedFilters/ReadSchema row-group pushdown on the shipped queries).
   */
 class LayoutSpec extends SparkSpec {
-  import spark.implicits._
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec =
     df.queryExecution.executedPlan.collectLeaves().collectFirst {
@@ -38,36 +37,6 @@ class LayoutSpec extends SparkSpec {
     val fullFiles = scanOf(full).metrics("numFiles").value
     assert(prunedFiles > 0 && prunedFiles * 5 <= fullFiles,
       s"expected <=1/5 of files read, got $prunedFiles of $fullFiles")
-  }
-
-  test("z-ordered layout clusters multi-dimensional ranges into few files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    val n = 40000L
-    val df = spark.range(n).select(
-      col("id"),
-      pmod(xxhash64(col("id")), lit(1000)).as("x"),
-      pmod(xxhash64(col("id"), lit(1)), lit(1000)).as("y"))
-    graft.sinks.Lake.writeZOrdered(df, Seq("x", "y"), s"$dir/z", numFiles = 16)
-    df.repartition(16).write.mode("overwrite").parquet(s"$dir/naive")
-
-    // lossless: same rows, same content checksum
-    val z = spark.read.parquet(s"$dir/z")
-    assert(z.count() === n)
-    assert(z.agg(sum(col("x") + col("y") + col("id"))).head.getLong(0) ===
-      df.agg(sum(col("x") + col("y") + col("id"))).head.getLong(0))
-
-    // a query selecting 1/16 of the (x, y) space: under the Z layout the
-    // matching rows live in a few files; round-robin scatters them
-    // everywhere (this measures CLUSTERING — row-group stat pruning then
-    // follows from it for free)
-    def filesWithHits(path: String): Long =
-      spark.read.parquet(path).filter(col("x") < 250 && col("y") < 250)
-        .select(input_file_name()).distinct().count()
-    val zTouch = filesWithHits(s"$dir/z")
-    val naiveTouch = filesWithHits(s"$dir/naive")
-    assert(naiveTouch >= 12, s"round-robin should scatter (got $naiveTouch files)")
-    assert(zTouch * 2 <= naiveTouch,
-      s"z-order should halve file touches at worst: $zTouch vs $naiveTouch")
   }
 
   test("deleteByIds rewrites only affected partitions, drops emptied ones") {

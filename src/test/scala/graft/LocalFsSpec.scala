@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FileContext, FileStatus, FileSystem, Path,
+import org.apache.hadoop.fs.{ChecksumException, FileContext, FileSystem, Path,
   RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

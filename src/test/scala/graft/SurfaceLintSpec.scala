@@ -6,15 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every object-level public `def` in the engine packages (`functions`,
-  * `operators`, `streaming`, `sinks`, `sources`) has a caller in
-  * `src/main` or `streambench/src`, or an entry here that says why not.
+/** Every object-level member of the engine packages (`functions`,
+  * `operators`, `streaming`, `sinks`, `sources`) that code outside its
+  * object can reach (a public or `private[pkg]` `def`, `val` or
+  * `case class`) has a caller in `src/main` or `streambench/src`, or an
+  * entry here that says why not.
   *
   * A caller is a use in the comment- and string-stripped sources outside
-  * the def's own definition that resolves to the def's object: `Obj.name`,
+  * the member's own definition that resolves to its object: `Obj.name`,
   * `name` inside `Obj`'s own file, or `name` in a file importing `Obj._`
   * or `Obj.name` (a scaladoc `[[name]]` is not a caller; an overload's
-  * body or another object's use is; a namesake is not). A def with no
+  * body or another object's use is; a namesake is not). A member with no
   * caller must be in [[kept]], with a reason citing one of the rules:
   *  - (a) ConvergenceSpec replays it against an oracle-gated query;
   *  - (b) it is a writer, reader, compaction, rebuild or foreachBatch
@@ -22,10 +24,21 @@ import org.scalatest.funsuite.AnyFunSuite
   *    enumeration's subjects);
   *  - (c) a spec uses it as the reference for a shipped function;
   *  - (d) it is the course's Kafka surface (needs a broker).
-  * or in [[deferred]]: surface with no rule, still to be deleted, kept
-  * until then only because the named spec tests go with it.
   *
-  * A stale entry fails too: one whose def is gone, or now has a caller.
+  * The callers that justify a def justify its default-valued parameters
+  * too: its callers in `src/main` or `streambench/src` when it has any,
+  * else (a [[kept]] def) its callers in the specs. A default that no
+  * justifying caller passes, by name or by position, is a constant: it
+  * must be written as one, or be in [[keptParams]] with a reason citing:
+  *  - (e) it is a deployment setting: an address, path, offset or
+  *    credential;
+  *  - (s) it is an operator safety or recovery guard that the named
+  *    spec turns on;
+  *  - (t) the named spec passes another value, to reach on small input a
+  *    branch the shipped value takes at scale, or to substitute a fake.
+  *
+  * A stale entry fails too: one whose member or parameter is gone, or
+  * now has a caller or a passer.
   */
 class SurfaceLintSpec extends AnyFunSuite {
 
@@ -74,14 +87,22 @@ class SurfaceLintSpec extends AnyFunSuite {
     "Sinks.kafkaSink" -> "(d) Kafka sink",
     "Sources.kafkaLines" -> "(d) Kafka source")
 
-  private val deferred: Map[String, String] = Map(
-    "Dedup.lshParams" -> "StreamingExtrasSpec 1",
-    "Skew.saltedCountSum" -> "InvariantSpec 1",
-    "Skew.saltedJoin" -> "InvariantSpec 1",
-    "Lake.writeZOrdered" -> "LayoutSpec 1",
-    "Sinks.fanoutSink" -> "StreamingExtrasSpec 1",
-    "StreamOps.streamingDedup" -> "StreamingExtrasSpec 1",
-    "StreamOps.streamingNearDupPairs" -> "StreamingExtrasSpec 1")
+  private val keptParams: Map[String, String] = Map(
+    "Sources.kafkaLines.startingOffsets" -> "(e) Kafka starting offsets",
+    "Graph.hits.verifyEdgeSets" ->
+      "(s) edgesByDst edge-set equality guard; GraphOpsSpec turns it on",
+    "TextAnalysis.compactInvertedIndex.reclaimOrphans" ->
+      "(s) drops crashed ad-hoc orphan batches; FunctionsSpec turns it on",
+    "Graph.pageRank.checkpointEvery" ->
+      "(t) CheckpointsSpec cuts every 2 rounds to reach the periodic cut in few rounds",
+    "Graph.sgnsNoiseTable.chunkDiv" ->
+      "(t) GraphOpsSpec and CurationPropertySpec cross chunk boundaries on a small vocab",
+    "Graph.triangleCountDelta.adjMaxBytes" ->
+      "(t) GraphOpsSpec shrinks the broadcast size gate to reach its wedge-join fallback",
+    "Curation.refreshClusters.mergeEdgesOut" ->
+      "(t) IncrementalClusterSpec passes a counter: the merge graph stays delta-sized",
+    "Curation.refreshClustersRetract.mergeEdgesOut" ->
+      "(t) IncrementalClusterSpec passes a counter: the re-solve stays cluster-sized")
 
   /** `src` with comments and string-literal text blanked (offsets and
     * newlines kept). Code inside an interpolation (`$name`, `${...}`)
@@ -162,31 +183,40 @@ class SurfaceLintSpec extends AnyFunSuite {
     new String(out)
   }
 
-  /** A public def directly in an object body: its `Object.name` key,
-    * its name, and where its definition starts.
+  /** A member directly in an object body that code outside the object
+    * can reach (public or qualified-private: a `def`, `val` or
+    * `case class`): its `Object.name` key, its name, and where its
+    * definition starts (the `def`, `val` or `class` keyword).
     */
   private case class Def(key: String, name: String, start: Int)
 
   private def objectDefs(code: String): Seq[Def] = {
-    val tok = """\b(object|class|trait|def)\b|[{}()\[\]]""".r
+    val tok = """\b(object|class|trait|def|val)\b|[{}()\[\]]""".r
+    // `private`/`protected`, except a qualified `private[pkg]`
+    val hidden = """\b(private|protected)\b(?!\[(?!this\])\w+\])""".r
     val stack = scala.collection.mutable.Stack.empty[Option[String]] // Some(obj) for an object body
     var pending: Option[Option[String]] = None
     var paren = 0
     val out = Seq.newBuilder[Def]
+    def member(at: Int, kw: String, caseOnly: Boolean): Unit =
+      if (paren == 0) stack.headOption.flatten.foreach { obj =>
+        val mods = code.substring(code.lastIndexOf('\n', at) + 1, at)
+        (kw + """\s+([A-Za-z_][A-Za-z0-9_]*)""").r.findPrefixMatchOf(code.substring(at))
+          .filterNot(_ => hidden.findFirstIn(mods).isDefined)
+          .filter(_ => !caseOnly || """\bcase\s+$""".r.findFirstIn(mods).isDefined)
+          .foreach(d => out += Def(s"$obj.${d.group(1)}", d.group(1), at))
+      }
     tok.findAllMatchIn(code).foreach { m =>
       m.matched match {
         case "object" if paren == 0 =>
           pending = Some("""object\s+([A-Za-z_][A-Za-z0-9_]*)""".r
             .findPrefixMatchOf(code.substring(m.start)).map(_.group(1)))
-        case "class" | "trait" if paren == 0 => pending = Some(None)
-        case "def" =>
-          if (paren == 0) stack.headOption.flatten.foreach { obj =>
-            val lineStart = code.lastIndexOf('\n', m.start) + 1
-            val mods = code.substring(lineStart, m.start)
-            """def\s+([A-Za-z_][A-Za-z0-9_]*)""".r.findPrefixMatchOf(code.substring(m.start))
-              .filterNot(_ => """\b(private|protected)\b""".r.findFirstIn(mods).isDefined)
-              .foreach(d => out += Def(s"$obj.${d.group(1)}", d.group(1), m.start))
-          }
+        case "class" if paren == 0 =>
+          member(m.start, "class", caseOnly = true)
+          pending = Some(None)
+        case "trait" if paren == 0 => pending = Some(None)
+        case kw @ ("def" | "val") =>
+          member(m.start, kw, caseOnly = false)
           pending = None
         case "(" | "[" => paren += 1
         case ")" | "]" => paren -= 1
@@ -233,15 +263,18 @@ class SurfaceLintSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  /** `Object.def` keys of the defs of `engine` files with no caller in `code`.
+  /** Every member of the `engine` files, by `Object.name` key: its
+    * definitions (overloads), each with its end, and the sites in `code`
+    * that call it, as (file, offset of the name).
     *
     * A use of `name` counts as a call of `Obj.name` only when it is
     * written `Obj.name`, is unqualified inside `Obj`'s own file, or is
     * unqualified in a file that imports `Obj._` or `Obj.name`. So a
     * namesake (another object's def, a local val, a method on a value)
-    * is no caller.
+    * is no caller. Nor is a use inside the definition itself.
     */
-  private def uncalledIn(code: Map[Path, String], engine: Set[Path]): Set[String] = {
+  private def callersIn(code: Map[Path, String], engine: Set[Path])
+      : Map[String, (Seq[(Path, Def, Int)], Seq[(Path, Int)])] = {
     val defs = for {
       p <- engine.toSeq
       d <- objectDefs(code(p))
@@ -257,50 +290,200 @@ class SurfaceLintSpec extends AnyFunSuite {
     def imports(c: String, obj: String, name: String): Boolean =
       ("""\bimport\s+[\w.]*\b""" + obj + """\.(_|""" + name + """\b|\{[^}]*\b""" + name +
         """\b[^}]*\})""").r.findFirstIn(c).isDefined
-    val defToken = """def\s+$""".r
-    defs.groupBy(_._2.key).collect { case (key, spans) if {
+    val defToken = """(def|val|class)\s+$""".r
+    defs.groupBy(_._2.key).map { case (key, spans) =>
       val (home, d0, _) = spans.head
       val obj = key.stripSuffix("." + d0.name)
-      uses.getOrElse(d0.name, Nil).forall { case (p, at) =>
+      key -> (spans, uses.getOrElse(d0.name, Nil).filter { case (p, at) =>
         val c = code(p)
         val call = qualifier(c, at) match {
           case Some(q) => q.contains(obj)
           case None => p == home || imports(c, obj, d0.name)
         }
-        !call || spans.exists { case (dp, d, end) => dp == p && at >= d.start && at < end } ||
-          defToken.findFirstIn(c.substring(math.max(0, at - 12), at)).isDefined
-      }
-    } => key }.toSet
-  }
-
-  /** `Object.def` keys of the engine-package defs with no caller. */
-  private lazy val uncalled: Set[String] = {
-    val roots = Seq(Paths.get("src/main/scala"), Paths.get("streambench/src"))
-    roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
-    val code = roots.flatMap(scalaFiles).map(p => p -> strip(Files.readString(p))).toMap
-    val engine = code.keys.filter { p =>
-      val rel = Paths.get("src/main/scala/graft").relativize(p)
-      !rel.startsWith("..") && rel.getNameCount == 2 && packages.contains(rel.getName(0).toString)
+        call && !spans.exists { case (dp, d, end) => dp == p && at >= d.start && at < end } &&
+          defToken.findFirstIn(c.substring(math.max(0, at - 12), at)).isEmpty
+      })
     }
-    uncalledIn(code, engine.toSet)
   }
 
-  test("every engine def without a caller is kept by a rule or deferred with its tests") {
-    val unlisted = uncalled.diff(kept.keySet ++ deferred.keySet).toSeq.sorted
+  /** `Object.name` keys of the members of `engine` files with no caller in `code`. */
+  private def uncalledIn(code: Map[Path, String], engine: Set[Path]): Set[String] =
+    callersIn(code, engine).collect { case (key, (_, Seq())) => key }.toSet
+
+  /** Index just past the bracket that closes the one at `i`. */
+  private def closing(code: String, i: Int): Int = {
+    var depth = 0
+    var j = i
+    while (j < code.length) {
+      code(j) match {
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' =>
+          depth -= 1
+          if (depth == 0) return j + 1
+        case _ =>
+      }
+      j += 1
+    }
+    code.length
+  }
+
+  /** `s` split at its top-level commas, blank pieces dropped. */
+  private def topLevelSplit(s: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var depth = 0
+    var from = 0
+    s.indices.foreach { k =>
+      s(k) match {
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' => depth -= 1
+        case ',' if depth == 0 => out += s.substring(from, k); from = k + 1
+        case _ =>
+      }
+    }
+    out += s.substring(from)
+    out.result().filter(_.trim.nonEmpty)
+  }
+
+  /** The argument (or parameter) lists that follow offset `from`: an
+    * optional type-argument list, then each `( ... )` (and, at a call, each
+    * `{ ... }` block), split at top-level commas. A declaration's lists may
+    * sit on separate lines; a call's may not.
+    */
+  private def argLists(code: String, from: Int, declaration: Boolean): Seq[Seq[String]] = {
+    var i = from
+    def skip(): Unit =
+      while (i < code.length && (code(i) == ' ' || code(i) == '\t' ||
+          declaration && code(i).isWhitespace)) i += 1
+    skip()
+    if (i < code.length && code(i) == '[') { i = closing(code, i); skip() }
+    val out = Seq.newBuilder[Seq[String]]
+    while (i < code.length && (code(i) == '(' || !declaration && code(i) == '{')) {
+      val j = closing(code, i)
+      val inner = code.substring(i + 1, j - 1)
+      out += (if (code(i) == '{') Seq(inner) else topLevelSplit(inner))
+      i = j
+      skip()
+    }
+    out.result()
+  }
+
+  /** A parameter of a def: its name and whether it has a default. */
+  private case class Param(name: String, default: Boolean)
+
+  private def paramLists(code: String, d: Def): Seq[Seq[Param]] =
+    argLists(code, d.start + """def\s+""".r.findPrefixOf(code.substring(d.start)).get.length +
+      d.name.length, declaration = true).map(_.map { text =>
+      val p = text.trim.stripPrefix("implicit").trim
+      // a default follows the first top-level `=` that is not part of `=>`
+      var depth = 0
+      val eq = p.indices.find { k =>
+        p(k) match {
+          case '(' | '[' | '{' => depth += 1; false
+          case ')' | ']' | '}' => depth -= 1; false
+          case '=' => depth == 0 && !p.startsWith("=>", k)
+          case _ => false
+        }
+      }
+      Param("""[A-Za-z_][A-Za-z0-9_]*""".r.findPrefixOf(p).getOrElse(""), eq.isDefined)
+    })
+
+  /** Every default-valued parameter of a def of `engine` files, by
+    * `Object.def.param` key, and whether a caller that justifies the def
+    * passes it. A def's justifying callers are its callers in files where
+    * `shipped` holds, when it has any; otherwise (a def kept by a rule)
+    * its callers in the other files, the specs. A call passes a parameter
+    * when it gives it by name, or by position in the same list. With
+    * overloads, a call counts for each alternative whose lists fit it.
+    */
+  private def defaultsIn(code: Map[Path, String], engine: Set[Path], shipped: Path => Boolean)
+      : Map[String, Boolean] = {
+    val named = """^\s*([A-Za-z_][A-Za-z0-9_]*)\s*=(?![=>])""".r
+    callersIn(code, engine).toSeq.flatMap { case (_, (spans, calls)) =>
+      val name = spans.head._2.name
+      val alts = spans.collect { case (p, d, _) if code(p).startsWith("def", d.start) =>
+        (d, paramLists(code(p), d))
+      }
+      val justifying = {
+        val (main, specs) = calls.partition(c => shipped(c._1))
+        (if (main.nonEmpty) main else specs).map { case (p, at) =>
+          argLists(code(p), at + name.length, declaration = false)
+            .map(_.map(a => named.findPrefixMatchOf(a).map(_.group(1))))
+        }
+      }
+      def fits(lists: Seq[Seq[Param]], args: Seq[Seq[Option[String]]]): Boolean =
+        lists.zip(args).forall { case (ps, as) =>
+          as.count(_.isEmpty) <= ps.size && as.flatten.forall(n => ps.exists(_.name == n))
+        }
+      for {
+        (d, lists) <- alts
+        (ps, k) <- lists.zipWithIndex
+        (p, i) <- ps.zipWithIndex if p.default
+      } yield s"${d.key}.${p.name}" -> justifying.exists { args =>
+        (alts.size == 1 || fits(lists, args)) && args.size > k &&
+          (args(k).count(_.isEmpty) > i || args(k).contains(Some(p.name)))
+      }
+    }.toMap
+  }
+
+  private lazy val code: Map[Path, String] = {
+    val roots = Seq(Paths.get("src/main/scala"), Paths.get("streambench/src"), Paths.get("src/test/scala"))
+    roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
+    roots.flatMap(scalaFiles).map(p => p -> strip(Files.readString(p))).toMap
+  }
+
+  private def isSpec(p: Path): Boolean = p.startsWith(Paths.get("src/test"))
+
+  private lazy val engine: Set[Path] = code.keys.filter { p =>
+    val rel = Paths.get("src/main/scala/graft").relativize(p)
+    !rel.startsWith("..") && rel.getNameCount == 2 && packages.contains(rel.getName(0).toString)
+  }.toSet
+
+  /** `Object.name` keys of the engine-package members with no caller. */
+  private lazy val uncalled: Set[String] = uncalledIn(code.filterNot(c => isSpec(c._1)), engine)
+
+  /** Default-valued parameters of the engine-package defs, and whether
+    * a justifying caller passes each.
+    */
+  private lazy val defaults: Map[String, Boolean] = defaultsIn(code, engine, p => !isSpec(p))
+
+  test("every engine member without a caller is kept by a rule") {
+    val unlisted = uncalled.diff(kept.keySet).toSeq.sorted
     assert(unlisted.isEmpty,
-      "public defs with no caller in src/main or streambench/src; call, delete or list them:\n" +
+      "public members with no caller in src/main or streambench/src; call, delete or list them:\n" +
+        unlisted.mkString("\n"))
+  }
+
+  test("every default-valued parameter is passed by a caller that justifies its def, or kept by a rule") {
+    val unpassed = defaults.collect { case (k, false) => k }.toSet
+    info(s"${defaults.size} default-valued parameters on " +
+      s"${defaults.keys.map(_.split('.').take(2).mkString(".")).toSet.size} engine defs; " +
+      s"${unpassed.size} passed by no justifying caller")
+    val unlisted = unpassed.diff(keptParams.keySet).toSeq.sorted
+    assert(unlisted.isEmpty,
+      "default-valued parameters no justifying caller passes; make each a constant or list it:\n" +
         unlisted.mkString("\n"))
   }
 
   test("no stale entry: every listed def exists and still has no caller") {
-    val stale = (kept.keySet ++ deferred.keySet).diff(uncalled).toSeq.sorted
+    val stale = kept.keySet.diff(uncalled).toSeq.sorted
     assert(stale.isEmpty, "entries whose def is gone or now has a caller:\n" + stale.mkString("\n"))
-    assert(kept.keySet.intersect(deferred.keySet).isEmpty)
   }
 
-  test("every kept reason cites rule (a)-(d); every deferral names its spec") {
-    val bad = kept.filterNot(_._2.matches("""\([a-d]\) \S.*""")).keys ++
-      deferred.filterNot(_._2.matches("""[A-Za-z]+Spec \d+(, [A-Za-z]+Spec \d+)*""")).keys
+  test("no stale parameter entry: every listed parameter exists and still has no passer") {
+    val stale = keptParams.keySet.diff(defaults.collect { case (k, false) => k }.toSet)
+    assert(stale.isEmpty, "entries whose parameter is gone or now has a passer:\n" +
+      stale.toSeq.sorted.mkString("\n"))
+  }
+
+  test("every kept reason cites rule (a)-(d)") {
+    val bad = kept.filterNot(_._2.matches("""\([a-d]\) \S.*""")).keys
+    assert(bad.isEmpty, bad.toSeq.sorted.mkString("\n"))
+  }
+
+  test("every kept parameter cites (e), (s) or (t), and an (s) or (t) names its spec") {
+    val bad = keptParams.filterNot { case (_, r) =>
+      r.matches("""\(e\) \S.*""") || r.matches("""\([st]\) .*\b[A-Z][A-Za-z]*Spec\b.*""")
+    }.keys
     assert(bad.isEmpty, bad.toSeq.sorted.mkString("\n"))
   }
 
@@ -339,5 +522,49 @@ class SurfaceLintSpec extends AnyFunSuite {
       Set("P.run"))
     assert(lint(base :+ ("u/V.scala" -> "object V { def go() = P\n    .run(1) + solo() }"): _*) ===
       Set("Q.solo"))
+  }
+
+  test("lint self-check: vals, case classes and private[pkg] members are scanned") {
+    val src =
+      """object O {
+        |  val v = 1
+        |  lazy val w = v
+        |  case class C(x: Int)
+        |  class Plain { val inside = 1 }
+        |  private[p] def pp = 1
+        |  private[this] def own = 1
+        |  private val hidden = 2
+        |  def f(c: C): Int = { val local = c.x; local }
+        |}""".stripMargin
+    assert(objectDefs(strip(src)).map(_.key) === Seq("O.v", "O.w", "O.C", "O.pp", "O.f"))
+    val o = Paths.get("o/O.scala")
+    assert(uncalledIn(Map(o -> strip(src)), Set(o)) === Set("O.w", "O.pp", "O.f"))
+  }
+
+  test("lint self-check: a default no justifying caller passes is reported") {
+    val p = Paths.get("p/P.scala")
+    val main = Paths.get("m/M.scala")
+    val spec = Paths.get("s/S.scala")
+    val files = Map(
+      p -> """object P {
+             |  def f(a: Int, b: Int = 1, c: Int = 2)(d: Int = 3): Int = a + b + c + d
+             |  def g(x: Int = 1, y: Int => Int = identity): Int = y(x)
+             |  def kept(z: Int = 1, q: Int = 2): Int = z + q
+             |  def over(s: String, t: String, u: String): Int = s.length
+             |  def over(n: Int, m: Int = 0): Int = n + m
+             |}""".stripMargin,
+      main -> """object M {
+                |  def go(): Int = P.f(1, 2)(d = 4) + P.f(0)() + P.g() + P.over("a", "b", "c") + P.over(2)
+                |}""".stripMargin,
+      spec -> """object S {
+                |  def t(): Int = P.f(0, c = 5)() + P.g(y = _ + 1) + P.kept(q = 3)
+                |}""".stripMargin)
+    val defaults = defaultsIn(files.map { case (k, v) => k -> strip(v) }, Set(p), _ != spec)
+    assert(defaults.keySet === Set("P.f.b", "P.f.c", "P.f.d", "P.g.x", "P.g.y", "P.kept.z",
+      "P.kept.q", "P.over.m"))
+    // a spec does not justify a shipped def's parameter (P.f.c, P.g.y); it
+    // justifies a def only specs call (P.kept.q)
+    assert(defaults.collect { case (k, false) => k }.toSet ===
+      Set("P.f.c", "P.g.x", "P.g.y", "P.kept.z", "P.over.m"))
   }
 }

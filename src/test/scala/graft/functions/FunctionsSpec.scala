@@ -91,7 +91,7 @@ class FunctionsSpec extends SparkSpec {
         .filter(p => p._1 != p._2).distinct
       val sym = (raw ++ raw.map(_.swap)).distinct
       val got = Graph.pageRank(sym.toDF("src", "dst"), "src", "dst",
-        iterations = 4, dampMilli = 850)
+        iterations = 4)
         .as[(Long, Long)].collect().toMap
       // naive reference: same integer fixed-point recurrence in plain Scala
       val outd = sym.groupBy(_._1).view.mapValues(_.size.toLong).toMap
@@ -655,6 +655,40 @@ class FunctionsSpec extends SparkSpec {
     }
     assert(ex2.getMessage.contains("predates"))
     Seq(baseOnly, full, idx, old).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+  }
+
+  test("compactInvertedIndex refuses an orphan postings batch; " +
+      "reclaimOrphans = true drops it and search equals a clean index") {
+    val all = (0L until 120L).map { i =>
+      val rare = if (i % 30 == 0) " zeta" else ""
+      (i, s"alpha filler words w${i % 7} here$rare")
+    }.toDF("doc_id", "text")
+    val base = all.filter(col("doc_id") < 100)
+    val q = Seq("alpha", "zeta")
+    def rank(path: String) = TextAnalysis.bm25SearchFromIndex(spark, path, q,
+      topK = 20).as[(Long, Long)].collect().toSeq
+    val clean = java.nio.file.Files.createTempDirectory("graft-inv-cl").toString
+    TextAnalysis.writeInvertedIndex(base, "text", "doc_id", clean, buckets = 16)
+    val idx = java.nio.file.Files.createTempDirectory("graft-inv-or").toString
+    TextAnalysis.writeInvertedIndex(base, "text", "doc_id", idx, buckets = 16)
+    TextAnalysis.appendToInvertedIndex(all.filter(col("doc_id") >= 100),
+      "text", "doc_id", idx, buckets = 16, batchId = Some(5L))
+    // a crashed append: batch 5's postings are on disk, its commit is not
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$idx/stats/batch=5"))
+    def orphanDirs(): Int = new java.io.File(s"$idx/postings").listFiles()
+      .filter(_.isDirectory).flatMap(_.listFiles()).count(_.getName == "batch=5")
+    assert(orphanDirs() > 0)
+    val ex = intercept[IllegalArgumentException] {
+      TextAnalysis.compactInvertedIndex(spark, idx)
+    }
+    assert(ex.getMessage.contains("UNCOMMITTED postings batches 5"), ex.getMessage)
+    assert(orphanDirs() > 0, "the refused compaction touched the orphan batch")
+    TextAnalysis.compactInvertedIndex(spark, idx, reclaimOrphans = true)
+    assert(orphanDirs() === 0, "the reclaiming compaction kept the orphan batch")
+    assert(rank(idx) === rank(clean))
+    Seq(clean, idx).foreach(p =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 

@@ -251,6 +251,22 @@ class GraphOpsSpec extends SparkSpec {
         .select(col("src"), col("a")))
   }
 
+  test("hits(verifyEdgeSets = true) throws when the two edge frames differ") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
+    val direct = Graph.hits(edges, "src", "dst", iterations = 2)
+      .as[(Long, Long, Long)].collect().toSet
+    // the same edge set in a second frame passes the guard unchanged
+    val same = Graph.hits(edges, "src", "dst", iterations = 2,
+        edgesByDst = Some(edges.orderBy("dst")), verifyEdgeSets = true)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(same === direct)
+    val ex = intercept[IllegalArgumentException] {
+      Graph.hits(edges, "src", "dst", iterations = 2,
+        edgesByDst = Some(edges.filter($"src" =!= 1L)), verifyEdgeSets = true)
+    }
+    assert(ex.getMessage.contains("edgesByDst (2 rows) differ"), ex.getMessage)
+  }
+
   test("skipGramPairs: window band, both directions, repeat counting") {
     val walks = Seq(
       (10L, 0, 0L), (10L, 1, 1L), (10L, 2, 2L), (10L, 3, 3L), // distinct chain
@@ -309,7 +325,6 @@ class GraphOpsSpec extends SparkSpec {
     assert(viaW === plain, "w=1 weighted pagerank diverges from pageRank")
     // deterministic weights (hash-derived, 1..5), naive JVM fixed point
     val weighted = sym.map { case (s, d) => (s, d, 1L + math.abs((s * 31 + d) % 5)) }
-    val w = weighted.map { case (s, d, ww) => ((s, d), ww) }.toMap
     val tw = weighted.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
     var r = adj.keys.map(_ -> 1000000L).toMap
     for (_ <- 1 to 5) {
@@ -433,63 +448,6 @@ class GraphOpsSpec extends SparkSpec {
     assert(got === Map(0L -> 0, 1L -> 1, 2L -> 2)) // 3,4 beyond; 8,9 disconnected
   }
 
-  test("node2vecWalks served from a bucketed edge table equals the direct path") {
-    // the cluster serving form (r13): src-bucketed stored edges with
-    // broadcastFrontier=false + checkpointEdges=false — bit-equality on
-    // the real co-purchase graph, and the per-step candidate join moves
-    // only the frontier
-    import org.apache.spark.sql.functions._
-    val d = "/root/testdata/sf0.001"
-    val edges = Graph.copurchaseEdges(graft.sources.Tables.lineitem(spark, d))
-    def seedsOf(e: org.apache.spark.sql.DataFrame) =
-      e.select(col("src").as("node")).distinct()
-        .filter(pmod(col("node"), lit(40)) === 0)
-    val direct = Graph.node2vecWalks(edges, "src", "dst", seedsOf(edges),
-        steps = 4, retPermille = 100, inPermille = 1000, outPermille = 2500)
-      .as[(Long, Int, Long)].collect().toSet
-    spark.sql("DROP TABLE IF EXISTS n2v_edges_spec")
-    val base = java.nio.file.Files.createTempDirectory("graft-n2vedges").toString
-    graft.sinks.Lake.writeBucketed(edges, "n2v_edges_spec", s"$base/edges",
-      Seq("src"), numBuckets = 8)
-    val bucketed = spark.table("n2v_edges_spec")
-    val served = Graph.node2vecWalks(bucketed, "src", "dst", seedsOf(bucketed),
-        steps = 4, retPermille = 100, inPermille = 1000, outPermille = 2500,
-        broadcastFrontier = false, checkpointEdges = false)
-      .as[(Long, Int, Long)].collect().toSet
-    assert(served === direct,
-      "bucketed/non-broadcast node2vec serving path diverges from direct walks")
-    val frontier = bucketed.select(col("src").as("wid"),
-        col("src").as("prev"), col("src").as("cur"))
-      .distinct().checkpointed()
-    assertEdgeSideUnshuffled("candidate join" ->
-      bucketed.join(frontier, bucketed("src") === frontier("cur"))
-        .select(col("wid"), col("prev"), col("dst")))
-  }
-
-  test("kCoreHalf served from src- and dst-bucketed half-edge tables equals direct") {
-    // the hits device for the k-core loss step: the half table stored
-    // twice, each loss join riding its own bucketing with
-    // broadcastDead=false + checkpointEdges=false
-    import org.apache.spark.sql.functions._
-    val half = Graph.copurchaseHalfEdges(lineitem).checkpointed()
-    val direct = Graph.kCoreHalf(half, k = 3, rounds = 5)
-      .as[(Long, Long)].collect().toSet
-    assert(direct.nonEmpty, "the 3-core of the sf0.001 co-purchase graph is empty")
-    val eSrc = bucketed(half, "kcore_half_src", "src")
-    val eDst = bucketed(half, "kcore_half_dst", "dst")
-    val served = Graph.kCoreHalf(eSrc, k = 3, rounds = 5, broadcastDead = false,
-        checkpointEdges = false, halfByDst = Some(eDst))
-      .as[(Long, Long)].collect().toSet
-    assert(served === direct, "bucketed kCoreHalf serving path diverges from direct")
-    val dead = eSrc.select(col("src").as("node")).distinct()
-      .select(col("node"), (col("node") * 2).as("pay")).checkpointed()
-    assertEdgeSideUnshuffled(
-      "loss(dst)" -> eDst.join(dead, eDst("dst") === dead("node"))
-        .select(eDst("src").as("n")),
-      "loss(src)" -> eSrc.join(dead, eSrc("src") === dead("node"))
-        .select(eSrc("dst").as("n")))
-  }
-
   test("communityLabels served from a dst-bucketed symmetric edge table equals direct") {
     // pre-symmetrized edges stored bucketed by dst with
     // assumeSymmetric=true + checkpointEdges=false: the per-round vote
@@ -510,28 +468,6 @@ class GraphOpsSpec extends SparkSpec {
       .select(col("src"), col("label")))
   }
 
-  test("bfsHops served from a src-bucketed edge table equals direct") {
-    // broadcastFrontier=false + checkpointEdges=false over the stored
-    // table: per hop only the frontier shuffles to the edge bucketing
-    import org.apache.spark.sql.functions._
-    val edges = Graph.copurchaseEdges(lineitem)
-    val seeds = edges.select(col("src")).distinct().orderBy("src")
-      .as[Long].take(5).toSeq
-    val direct = Graph.bfsHops(edges, "src", "dst", seeds, maxHops = 3)
-      .as[(Long, Int)].collect().toMap
-    assert(direct.values.exists(_ > 1), "fixture never reaches hop 2")
-    val edgesB = bucketed(edges, "bfs_edges_spec", "src")
-    val served = Graph.bfsHops(edgesB, "src", "dst", seeds, maxHops = 3,
-        broadcastFrontier = false, checkpointEdges = false)
-      .as[(Long, Int)].collect().toMap
-    assert(served === direct, "bucketed bfs serving path diverges from direct")
-    val frontier = edgesB.select(col("src").as("node")).distinct()
-      .select(col("node"), (col("node") * 2).as("p1"), (col("node") * 3).as("p2"))
-      .checkpointed()
-    assertEdgeSideUnshuffled("hop join" ->
-      edgesB.join(frontier, edgesB("src") === frontier("node")).select(col("dst")))
-  }
-
   test("sgnsNegatives: exactly k per pair; the bucketed equi-join equals " +
       "a naive range join; weights follow the integer cnt^(3/4)") {
     import org.apache.spark.sql.functions._
@@ -542,7 +478,7 @@ class GraphOpsSpec extends SparkSpec {
     val walks = Graph.deterministicWalks(e, "src", "dst", seeds, steps = 4)
       .checkpointed()
     val k = 4
-    val got = Graph.sgnsNegatives(walks, window = 2, negatives = k, buckets = 64)
+    val got = Graph.sgnsNegatives(walks, window = 2, negatives = k)
       .checkpointed()
     // every (center, context) pair emits exactly k negatives — i.e. each
     // draw lands in exactly ONE noise interval through the bucketed join
@@ -585,31 +521,17 @@ class GraphOpsSpec extends SparkSpec {
       "chunked noise-table prefix sum diverges from the single-chunk layout")
   }
 
-  test("cluster-path knobs are result-invariant: kCoreHalf halfByDst, " +
-      "communityLabels assumeSymmetric, labelPropagation checkpointEdges") {
+  test("communityLabels: assumeSymmetric input is result-invariant") {
     import org.apache.spark.sql.functions._
     val (sym, _) = randomGraph(seed = 77L, nodes = 120, draws = 900)
     val symDf = sym.toDF("src", "dst").checkpointed()
     val half = symDf.filter(col("src") < col("dst"))
-    // kCoreHalf: the two-table non-broadcast path (the probe's cluster
-    // layout) must be bit-identical to the default single-frame path
-    val a = Graph.kCoreHalf(half, k = 6, rounds = 4)
-    val b = Graph.kCoreHalf(half, k = 6, rounds = 4,
-      broadcastDead = false, checkpointEdges = false, halfByDst = Some(half))
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    // communityLabels: pre-symmetrized input with the symmetrize skipped
-    // equals the symmetrize-inside default
+    // pre-symmetrized input with the symmetrize skipped equals the
+    // symmetrize-inside default
     val c = Graph.communityLabels(half, "src", "dst", rounds = 3)
     val d = Graph.communityLabels(symDf.distinct(), "src", "dst", rounds = 3,
       assumeSymmetric = true, checkpointEdges = false)
     assert(c.exceptAll(d).isEmpty && d.exceptAll(c).isEmpty)
-    // labelPropagation: skipping the edge checkpoint changes no rows
-    val knn = symDf.select(col("src").as("qid"), col("dst").as("vec_id"),
-      pmod(col("dst"), lit(5)).as("rank"))
-    val seeds = Seq((0L, 1L), (1L, 2L)).toDF("node", "label")
-    val e = Graph.labelPropagation(knn, seeds, rounds = 2)
-    val f = Graph.labelPropagation(knn, seeds, rounds = 2, checkpointEdges = false)
-    assert(e.exceptAll(f).isEmpty && f.exceptAll(e).isEmpty)
   }
 
   test("maintained co-purchase weight table equals the full rebuild " +
@@ -837,7 +759,6 @@ class GraphOpsSpec extends SparkSpec {
       "over the union; seeding a non-empty state dir refuses; the legacy " +
       "counts/v= layout fails fast; rebuildTriangleCounts recovers a " +
       "mangled count table from the edge log") {
-    import org.apache.spark.sql.functions._
     def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     val (sym, _) = randomGraph(83L, 30, 220)
@@ -962,7 +883,6 @@ class GraphOpsSpec extends SparkSpec {
       val baseSeq = (half.filter(p => (p._1 * 11 + p._2) % fracMod != 0)
         ++ k5.filterNot(withheld)).distinct
       val fullSeq = (half ++ k5).distinct
-      val deltaSeq = fullSeq.diff(baseSeq)
       val base = baseSeq.toDF("src", "dst")
       val full = fullSeq.toDF("src", "dst")
       val old = Graph.kCoreHalf(base, kk, rounds = 12)
@@ -983,7 +903,6 @@ class GraphOpsSpec extends SparkSpec {
   test("compactTriangleLog / compactCommunityLabelsLog: maintained state " +
       "byte-identical across the log fold; consumed ids refuse loudly; " +
       "maintenance (incl. a delete) continues on the folded log") {
-    import org.apache.spark.sql.functions._
     def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     val (sym, _) = randomGraph(67L, 24, 150)
@@ -1056,7 +975,6 @@ class GraphOpsSpec extends SparkSpec {
   test("communityLabelsRefreshAuto: routes delta on a delta-local ring " +
       "and cold on a hub graph — both arms bit-identical to the cold " +
       "fixed-round recompute") {
-    import org.apache.spark.sql.functions._
     def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     val rounds = 3

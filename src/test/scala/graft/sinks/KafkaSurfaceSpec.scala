@@ -3,7 +3,6 @@ package graft.sinks
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.sources.Sources

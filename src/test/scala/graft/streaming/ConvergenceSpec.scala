@@ -141,7 +141,7 @@ class ConvergenceSpec extends SparkSpec {
   }
 
   test("T2 resample-ffill streaming replay converges to the batch (oracled) answer") {
-    import StatefulOps.{ResampleEvent, ResampleCell}
+    import StatefulOps.ResampleEvent
     val stepUs = 21600000000L
     val input = MemoryStream[ResampleEvent]
     val cells = StatefulOps.resampleCells(input.toDS(), stepUs)
@@ -376,7 +376,7 @@ class ConvergenceSpec extends SparkSpec {
     val summary = StreamOps.slidingSummary(
       input.toDF().toDF("event_id", "ts_us")
         .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us"),
-      "ts", "10 seconds", "5 seconds", watermark = "1 second")
+      "ts", "10 seconds", "5 seconds")
     val q = summary.writeStream.format("memory").queryName("conv_a3")
       .outputMode(OutputMode.Append).start()
     try {

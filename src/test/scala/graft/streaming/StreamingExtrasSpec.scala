@@ -1,25 +1,17 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
-import graft.sinks.Sinks
 
-final case class DocEv(ts: Timestamp, fp: String, payload: String)
-
-/** Streaming dedup, single-pass fanout sink, and the index and
-  * maintained-state stream wrappers: each streamed run converges to its
-  * batch answer.
+/** The index and maintained-state stream wrappers: each streamed run
+  * converges to its batch answer.
   */
 class StreamingExtrasSpec extends SparkSpec {
   import spark.implicits._
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private def t(sec: Long) = new Timestamp(sec * 1000)
 
   test("maintainTriangleCountsStream: micro-batched edge ingest maintains " +
       "per-node triangle counts equal to the full recompute; a DELETE " +
@@ -74,47 +66,6 @@ class StreamingExtrasSpec extends SparkSpec {
     } finally q2.stop()
     Seq(stateDir, ckpt).foreach(p =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-  }
-
-  test("streaming dedup drops repeated fingerprints within the watermark") {
-    val input = MemoryStream[DocEv]
-    val deduped = StreamOps.streamingDedup(input.toDF(), "ts", "10 seconds", "fp")
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(DocEv(t(1), "A", "a1"), DocEv(t(2), "A", "a2"), DocEv(t(3), "B", "b1"))
-      q.processAllAvailable()
-      input.addData(DocEv(t(4), "A", "a3"), DocEv(t(5), "C", "c1"))
-      q.processAllAvailable()
-      val fps = spark.table("dedup_out").select("fp").as[String].collect().sorted
-      assert(fps.toSeq === Seq("A", "B", "C"))
-    } finally q.stop()
-  }
-
-  test("streaming near-dup pairs: LSH self-join finds planted near-dups in-window") {
-    val near1 = "the quick brown fox jumps over the lazy dog again and again today"
-    val near2 = "the quick brown fox jumps over the lazy dog again and again tonight"
-    val far = "completely unrelated text with different words entirely disjoint tokens"
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val pairs = StreamOps.streamingNearDupPairs(
-      input.toDF().toDF("doc_id", "text", "ts"),
-      "text", "doc_id", "ts", width = "1 minute", watermark = "10 seconds")
-    val q = pairs.writeStream.format("memory").queryName("neardup_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // 1 and 2 are near-dups in the same window; 3 is unrelated; 4 is an
-      // exact copy of 1 but hours later — outside the window, no pair
-      input.addData((1L, near1, t(1)), (2L, near2, t(5)), (3L, far, t(9)))
-      q.processAllAvailable()
-      input.addData((4L, near1, t(7200)))
-      q.processAllAvailable()
-      val got = spark.table("neardup_out")
-        .select("a", "b", "jaccard_milli").as[(Long, Long, Long)]
-        .collect().toSet // multi-band collisions collapse here
-      assert(got.map(p => (p._1, p._2)) === Set((1L, 2L)),
-        s"expected exactly the planted pair, got $got")
-      assert(got.head._3 >= 500L, "planted near-dups must verify above threshold")
-    } finally q.stop()
   }
 
   test("streaming token-window chunking equals the batch answer") {
@@ -382,40 +333,6 @@ class StreamingExtrasSpec extends SparkSpec {
       vecs.take(1).toDF("qid", "qvec"), streamedIdx, k = 79)
       .select("vec_id").as[Long].collect()
     assert(got.exists(_ >= 50L))
-  }
-
-  test("fanout sink: one cached batch feeds all branches") {
-    val input = MemoryStream[DocEv]
-    val seenA = scala.collection.mutable.ArrayBuffer[String]()
-    val seenRest = scala.collection.mutable.ArrayBuffer[String]()
-    val q = Sinks.fanoutSink(input.toDF(), Seq(
-      "a-branch" -> { df =>
-        seenA.synchronized {
-          seenA ++= df.filter(col("fp") === "A").select("payload").as[String](
-            org.apache.spark.sql.Encoders.STRING).collect()
-        }
-      },
-      "rest" -> { df =>
-        seenRest.synchronized {
-          seenRest ++= df.filter(col("fp") =!= "A").select("payload").as[String](
-            org.apache.spark.sql.Encoders.STRING).collect()
-        }
-      })).start()
-    try {
-      input.addData(DocEv(t(1), "A", "a1"), DocEv(t(2), "B", "b1"), DocEv(t(3), "A", "a2"))
-      q.processAllAvailable()
-      assert(seenA.sorted.toSeq === Seq("a1", "a2"))
-      assert(seenRest.toSeq === Seq("b1"))
-    } finally q.stop()
-  }
-
-  test("lshParams picks sensible band splits for the threshold") {
-    import graft.functions.Dedup.lshParams
-    assert(lshParams(0.7, 16) === (4, 4))
-    val (bLow, rLow) = lshParams(0.2, 16)
-    val (bHigh, rHigh) = lshParams(0.9, 16)
-    assert(rLow < rHigh, "low thresholds need fewer rows per band")
-    assert(bLow > bHigh)
   }
 
   test("bm25SearchStream serves batch-identical rankings from the index") {
