@@ -333,14 +333,6 @@ object Dedup {
     }: _*)
   }
 
-  /** MinHash + LSH candidate pairs with exact-Jaccard verification.
-    *
-    * `bands` bands of `rowsPerBand` signature rows each; docs colliding in
-    * any band become candidates; candidates are verified with exact
-    * Jaccard over their shingle sets. This is the scale path: shuffle
-    * cost is O(docs x bands), never O(docs^2).
-    * Output: (a, b, jaccard_milli).
-    */
   /** Per-document LSH band keys: one (doc, band, bh) row per band, plus
     * the shingle set (`sh`). The shared
     * core of batch [[minhashLshPairs]] and the maintained LSH index —
@@ -427,6 +419,14 @@ object Dedup {
       .select(col("a"), col("b"), col("est_milli"), col("jaccard_milli"))
   }
 
+  /** MinHash + LSH candidate pairs with exact-Jaccard verification.
+    *
+    * `bands` bands of `rowsPerBand` signature rows each; docs colliding in
+    * any band become candidates; candidates are verified with exact
+    * Jaccard over their shingle sets. This is the scale path: shuffle
+    * cost is O(docs x bands), never O(docs^2).
+    * Output: (a, b, jaccard_milli).
+    */
   def minhashLshPairs(
       df: DataFrame,
       textCol: String,
@@ -642,7 +642,7 @@ object Dedup {
       .write.mode("overwrite").partitionBy("batch").parquet(s"$path/shingles")
     if (IndexLayout.hasBatchDirs(spark, s"$path/shingles"))
       writeBands(bandKeysFromShingles(
-        spark.read.parquet(s"$path/shingles").select(col("doc"), col("sh")),
+        IndexLayout.readTable(spark, s"$path/shingles").select(col("doc"), col("sh")),
         bands, rowsPerBand))
     else // all-token-less corpus: no shingle files to read back
       writeBands(bandKeys(df, textCol, idCol, n, bands, rowsPerBand))
@@ -698,7 +698,7 @@ object Dedup {
       s"$path/shingles", Seq("batch"))
     if (IndexLayout.hasBatchDirs(spark, s"$path/shingles"))
       writeBands(bandKeysFromShingles(
-        spark.read.parquet(s"$path/shingles")
+        IndexLayout.readTable(spark, s"$path/shingles")
           .filter(col("batch").cast("long") === id)
           .select(col("doc"), col("sh")),
         bands, rowsPerBand))
@@ -855,7 +855,7 @@ object Dedup {
     val notOwnBatch = excludeBatchId
       .map(id => col("batch") =!= lit(id))
       .getOrElse(lit(true))
-    val idxBands = spark.read.parquet(s"$indexPath/bands")
+    val idxBands = IndexLayout.readTable(spark, s"$indexPath/bands")
       .filter(col("bucket").isin(qBuckets: _*) && notOwnBatch)
     val candIds = newBk.as("x")
       .join(idxBands.as("y"),
@@ -867,7 +867,7 @@ object Dedup {
       // here lets the scope release newBk on return instead of it backing
       // the lazily returned frame (r17 fourth review)
       .checkpointed()
-    val corpusSh = spark.read.parquet(s"$indexPath/shingles").filter(notOwnBatch)
+    val corpusSh = IndexLayout.readTable(spark, s"$indexPath/shingles").filter(notOwnBatch)
     candIds
       .join(newSh.select(col("doc").as("a"), col("sh").as("sha")), "a")
       .join(corpusSh.select(col("doc").as("b"), col("sh").as("shb")), "b")
@@ -940,7 +940,7 @@ object Dedup {
       minJaccardMilli: Int): DataFrame = {
     val docs = Similarity.oneIdCol(ids, "doc")
     def latestOf(table: String, valCols: Seq[String]): DataFrame =
-      lastWriterRows(spark.read.parquet(s"$indexPath/$table")
+      lastWriterRows(IndexLayout.readTable(spark, s"$indexPath/$table")
         .join(broadcast(docs), Seq("doc"), "left_semi"))
         .select((col("doc") +: valCols.map(col)): _*)
     val banded = latestOf("bands", Seq("band", "bh"))

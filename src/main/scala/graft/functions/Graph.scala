@@ -1149,7 +1149,7 @@ object Graph {
     // as mergeCountsPartitioned
     val oldOpt =
       if (Incremental.hasLivePartitions(spark, edgesDir, "batch="))
-        Some(spark.read.parquet(edgesDir)
+        Some(IndexLayout.readTable(spark, edgesDir)
           .filter(col("batch") < batchId).select(col("src"), col("dst")))
       else None
     if (sign == 1L) Checkpoints.scoped {
@@ -1230,8 +1230,8 @@ object Graph {
       // the whole log (bare _SUCCESS breaks schema inference).
       if (fs.exists(new Path(delDir)) &&
           Incremental.hasLivePartitions(spark, edgesDir, "batch=")) {
-        val delSet = spark.read.parquet(delDir).select(col("src"), col("dst"))
-        val log = spark.read.parquet(edgesDir)
+        val delSet = IndexLayout.readTable(spark, delDir).select(col("src"), col("dst"))
+        val log = IndexLayout.readTable(spark, edgesDir)
           .select(col("src"), col("dst"), col("batch"))
         val affected = log.join(delSet, Seq("src", "dst"))
           .select(col("batch").cast("long")).distinct()
@@ -1345,7 +1345,7 @@ object Graph {
     fs.delete(new Path(s"$stateDir/counts"), true)
     val (log, batches) =
       if (Incremental.hasLivePartitions(spark, s"$stateDir/edges", "batch=")) {
-        val l = spark.read.parquet(s"$stateDir/edges")
+        val l = IndexLayout.readTable(spark, s"$stateDir/edges")
         (l.select(col("src"), col("dst")),
           l.select(col("batch").cast("long")).distinct()
             .collect().map(_.getLong(0)).toSeq) // bounded by batch count
@@ -1590,7 +1590,7 @@ object Graph {
       .distinct()
     val oldOpt =
       if (Incremental.hasLivePartitions(spark, edgesDir, "batch="))
-        Some(spark.read.parquet(edgesDir)
+        Some(IndexLayout.readTable(spark, edgesDir)
           .filter(col("batch") < batchId).select(col("src"), col("dst")))
       else None
     if (sign == 1L) Checkpoints.scoped {
@@ -1671,8 +1671,8 @@ object Graph {
       // simply stops matching the join
       if (fs.exists(new Path(delDir)) &&
           Incremental.hasLivePartitions(spark, edgesDir, "batch=")) {
-        val delSet = spark.read.parquet(delDir).select(col("src"), col("dst"))
-        val log = spark.read.parquet(edgesDir)
+        val delSet = IndexLayout.readTable(spark, delDir).select(col("src"), col("dst"))
+        val log = IndexLayout.readTable(spark, edgesDir)
           .select(col("src"), col("dst"), col("batch"))
         val affected = log.join(delSet, Seq("src", "dst"))
           .select(col("batch").cast("long")).distinct()
@@ -1919,6 +1919,21 @@ object Graph {
       .limit(topK)
   }
 
+  /** The max-rescale of [[hits]] — one broadcast
+    * 1-row aggregate; input must be cheap to consume twice (checkpointed
+    * or a thin projection of a checkpoint).
+    */
+  private def rescaledScores(r: DataFrame, keyCol: String, vCol: String)
+      : DataFrame = {
+    val mx = r.agg(max(col(vCol)).as("mx"))
+    r.crossJoin(broadcast(mx))
+      .select(col(keyCol).as("node"),
+        // widen the multiply: raw * 10^6 overflows a long for
+        // maxdeg > ~3034; the quotient itself is always <= 10^6
+        expr(s"CAST(CAST($vCol AS DECIMAL(38,0)) * 1000000 div mx AS BIGINT)")
+          .as("s"))
+  }
+
   /** HITS (hubs & authorities, Kleinberg 1999) in integer fixed-point.
     * Per round: raw authority = sum of in-neighbor hub scores, raw hub =
     * sum of out-neighbor RAW authorities, then the hub frame alone is
@@ -1966,21 +1981,6 @@ object Graph {
     * wrong. `verifyEdgeSets = true` adds a debug count-equality guard
     * (two extra passes over the edge tables; leave off in production).
     */
-  /** The max-rescale of [[hits]] — one broadcast
-    * 1-row aggregate; input must be cheap to consume twice (checkpointed
-    * or a thin projection of a checkpoint).
-    */
-  private def rescaledScores(r: DataFrame, keyCol: String, vCol: String)
-      : DataFrame = {
-    val mx = r.agg(max(col(vCol)).as("mx"))
-    r.crossJoin(broadcast(mx))
-      .select(col(keyCol).as("node"),
-        // widen the multiply: raw * 10^6 overflows a long for
-        // maxdeg > ~3034; the quotient itself is always <= 10^6
-        expr(s"CAST(CAST($vCol AS DECIMAL(38,0)) * 1000000 div mx AS BIGINT)")
-          .as("s"))
-  }
-
   def hits(
       edges: DataFrame,
       srcCol: String,

@@ -131,7 +131,7 @@ object Incremental {
           "mid-overwrite race, or the committer writes no success markers " +
           "(marksuccessfuljobs=false); the maintained summary reads as absent")
       if (versions.isEmpty) None
-      else Some(spark.read.parquet(s"$summaryDir/v=${versions.max}"))
+      else Some(IndexLayout.readTable(spark, s"$summaryDir/v=${versions.max}"))
     }
   }
 
@@ -542,7 +542,7 @@ object Incremental {
           if (!hasState) deltaAgg.drop("__p")
           else {
             // partition-pruned read of ONLY the affected state slices
-            val slice = spark.read.parquet(dataDir)
+            val slice = IndexLayout.readTable(spark, dataDir)
               .where(col("__p").isin(affected: _*))
               .select((keys :+ cnt).map(col): _*)
             mergeCounts(slice, deltaAgg.drop("__p"), keys, cnt)
@@ -642,7 +642,7 @@ object Incremental {
         val merged0 =
           if (!hasLivePartitions(spark, dataDir, "__p=")) delta
           else {
-            val survivors0 = spark.read.parquet(dataDir)
+            val survivors0 = IndexLayout.readTable(spark, dataDir)
               .where(col("__p").isin(affected: _*))
               .select((keys :+ valCol).map(col): _*)
               .join(delta.select(keys.map(col): _*), keys, "left_anti")
@@ -714,7 +714,7 @@ object Incremental {
     // same live-partition gate as the merge: an all-cancelling batch can
     // leave a bare _SUCCESS with no schema to infer
     if (!hasLivePartitions(spark, s"$stateDir/data", "__p=")) None
-    else Some(spark.read.parquet(s"$stateDir/data")
+    else Some(IndexLayout.readTable(spark, s"$stateDir/data")
       .select((keys :+ cnt).map(col): _*))
   }
 
@@ -750,9 +750,9 @@ object Incremental {
       else {
         val v = versions.max
         Some(DatasheetState(
-          scalars = spark.read.parquet(s"$stateDir/v=$v/scalars"),
-          digests = spark.read.parquet(s"$stateDir/v=$v/digests"),
-          langs = spark.read.parquet(s"$stateDir/v=$v/langs")))
+          scalars = IndexLayout.readTable(spark, s"$stateDir/v=$v/scalars"),
+          digests = IndexLayout.readTable(spark, s"$stateDir/v=$v/digests"),
+          langs = IndexLayout.readTable(spark, s"$stateDir/v=$v/langs")))
       }
     }
   }

@@ -1,8 +1,11 @@
 package graft.functions
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared layout rules for the materialized index families (LSH band
   * buckets, IVF+PQ cells): every write — the base build and each append —
@@ -32,6 +35,54 @@ private[graft] object IndexLayout {
 
   /** Batch id of the base (non-incremental) build. */
   val BaseBatch = -1L
+
+  /** Open the engine table at `dir`: the same columns, types and rows as
+    * `spark.read.parquet(dir)`, without the one-task job Spark runs to
+    * infer the schema of every plain parquet read (its parallel footer
+    * merge runs even when `mergeSchema` is off). The data schema is the
+    * one Spark wrote into the footer of one data file, read here on the
+    * driver; partition columns are still inferred from the paths. With no
+    * data file (an empty dir, or one holding only `_SUCCESS`) or no Spark
+    * schema in the footer, the table opens with the plain read, so an
+    * empty dir still raises its `AnalysisException`.
+    *
+    * Every table read in the engine's functions and sinks goes through
+    * here. Listing the table is unchanged: a level with more subdirs than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) is
+    * still listed by a Spark job, as in the plain read.
+    */
+  def readTable(spark: SparkSession, dir: String): DataFrame =
+    footerSchema(spark, new Path(dir)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+
+  /** The Spark schema in the footer of the first data file under `root`
+    * (depth first; names starting with `_` or `.` are skipped, as Spark's
+    * own listing skips them), or None.
+    */
+  private def footerSchema(spark: SparkSession, root: Path): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def firstFile(fs: FileSystem, p: Path): Option[Path] = {
+      val (dirs, files) = fs.listStatus(p).toSeq.filterNot { s =>
+        val n = s.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }.partition(_.isDirectory)
+      files.headOption.map(_.getPath)
+        .orElse(dirs.view.flatMap(d => firstFile(fs, d.getPath)).headOption)
+    }
+    scala.util.Try {
+      firstFile(root.getFileSystem(conf), root).flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(SparkSchemaKey))
+        finally reader.close()
+      }.map(DataType.fromJson).collect { case s: StructType => s }
+    }.toOption.flatten
+  }
+
+  /** The footer key Spark's parquet writer stores the row schema under. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Largest `batch=<id>` value present under `root` (searched at depth 1
     * and 2, covering both `batch=N` and `<prune>=K/batch=N` layouts), or
@@ -89,7 +140,7 @@ private[graft] object IndexLayout {
     val p = new Path(s"$root/params")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
-      val stored = spark.read.parquet(s"$root/params")
+      val stored = readTable(spark, s"$root/params")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val diff = expected.filter { case (k, v) => stored.get(k).exists(_ != v) }
       val built = diff.keys.map(k => k -> stored(k)).toMap
@@ -104,7 +155,7 @@ private[graft] object IndexLayout {
     val p = new Path(s"$root/params")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else spark.read.parquet(p.toString)
+    else readTable(spark, p.toString)
       .collect().collectFirst {
         case r if r.getString(0) == key => r.getLong(1)
       }
@@ -172,7 +223,7 @@ private[graft] object IndexLayout {
     // a resumed swap IS the completed compaction — unlike the rebuilds,
     // there is nothing fresher to derive, so return
     if (resumeCompaction(spark, tableDir)) return
-    val rows = keep(spark.read.parquet(tableDir))
+    val rows = keep(readTable(spark, tableDir))
       .drop("batch").withColumn("batch", lit(toBatch))
     val shaped =
       if (repartitionCols.isEmpty) rows.repartition(targetFiles)

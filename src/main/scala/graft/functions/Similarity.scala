@@ -319,7 +319,7 @@ object Similarity {
       indexPath: String,
       k: Int): DataFrame =
     int8TopKOverCodes(
-      spark.read.parquet(indexPath).select(col("vec_id"), col("scale"), col("code")),
+      IndexLayout.readTable(spark, indexPath).select(col("vec_id"), col("scale"), col("code")),
       queries, k)
 
   /** Product-quantization encode (Jegou et al. 2011): split each
@@ -715,7 +715,7 @@ object Similarity {
     // <= queries x nprobe cell ids regardless of corpus size
     val probedCells = probes.select("cell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val codes = spark.read.parquet(indexPath)
+    val codes = IndexLayout.readTable(spark, indexPath)
       .filter(col("cell").isin(probedCells: _*))
     val dtable = pqDistanceTable(queries, pqCodebook(corpus, centroidEvery, m, sub), sub)
     val scored = codes

@@ -214,7 +214,7 @@ object TextAnalysis {
     postingsOf(df, textCol, idCol, buckets, IndexLayout.BaseBatch)
       .write.mode("overwrite").partitionBy("bucket", "batch")
       .parquet(s"$path/postings")
-    batchStats(df, path, buckets, IndexLayout.BaseBatch)
+    batchStats(spark, df.count(), path, buckets, IndexLayout.BaseBatch)
       .write.mode("overwrite").partitionBy("batch").parquet(s"$path/stats")
   }
 
@@ -236,19 +236,17 @@ object TextAnalysis {
   /** One batch's stats row (n, tot, buckets, batch), taken AFTER its
     * postings are written: tot = sum(tf) over the written partitions
     * (every token contributes exactly 1 to its (doc, t) posting) and
-    * n = a column-pruned count of the input (token-less docs hold no
+    * n = the caller's count of the input docs (token-less docs hold no
     * postings but count toward n). The caller writes it LAST — the
     * batch's commit marker.
     */
-  private def batchStats(df: DataFrame, path: String, buckets: Int,
-      batch: Long): DataFrame = {
-    val spark = df.sparkSession
-    val n = df.count()
+  private def batchStats(spark: org.apache.spark.sql.SparkSession, n: Long, path: String,
+      buckets: Int, batch: Long): DataFrame = {
     // an all-token-less batch lands no postings files at all; its tot is
     // 0 by construction (AnalysisException = empty-dir schema inference,
     // the only failure a just-written dir can produce)
     val tot =
-      try spark.read.parquet(s"$path/postings")
+      try IndexLayout.readTable(spark, s"$path/postings")
         .filter(col("batch").cast("long") === batch)
         .agg(coalesce(sum(col("tf")), lit(0L)).as("tot"))
         .head().getAs[Long]("tot")
@@ -316,7 +314,9 @@ object TextAnalysis {
       s"inverted index at $path predates the batch=<id> layout " +
         "(flat bucket partitions) — rebuild it with writeInvertedIndex " +
         "before appending; appending would corrupt the partition tree")
-    if (df.isEmpty) return // nothing to land; keeps empty micro-batches free
+    // one count serves the empty check and the stats row's n
+    val n = df.count()
+    if (n == 0L) return // nothing to land; keeps empty micro-batches free
     val id = batchId.getOrElse(
       IndexLayout.maxBatchId(spark, s"$path/postings") + 1)
     // a compaction consumed batches <= through: a replay of one would
@@ -330,7 +330,7 @@ object TextAnalysis {
       postingsOf(df, textCol, idCol, buckets, id),
       s"$path/postings", Seq("bucket", "batch"))
     IndexLayout.overwriteBatchPartitions(
-      batchStats(df, path, buckets, id), s"$path/stats", Seq("batch"))
+      batchStats(spark, n, path, buckets, id), s"$path/stats", Seq("batch"))
   }
 
   /** GDPR-style delete from a [[writeInvertedIndex]] layout — the
@@ -431,9 +431,11 @@ object TextAnalysis {
     if (resolvedDone &&
         fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats/batch=$internal")))
       return graft.sinks.Lake.DeleteStats(0L, 0L, 0L, 0L)
+    // one open of the postings serves the resolution and the rewrite
+    val postings = IndexLayout.readTable(spark, s"$path/postings")
     if (!resolvedDone) {
       // one committed-postings scan resolves lens AND affected partitions
-      committedOnly(spark.read.parquet(s"$path/postings"), committed)
+      committedOnly(postings, committed)
         .join(broadcast(docIds), Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("len"),
           col("bucket").cast("long").as("bucket"),
@@ -441,7 +443,7 @@ object TextAnalysis {
         .distinct()
         .write.mode("overwrite").parquet(delDir.toString)
     }
-    val resolved = spark.read.parquet(delDir.toString)
+    val resolved = IndexLayout.readTable(spark, delDir.toString)
     // per (doc_id, BATCH), not per doc_id: the append stats are
     // per-batch monoid rows, so a doc_id appended in two committed
     // batches is counted twice in cumulative n/tot — collapsing it to
@@ -473,7 +475,7 @@ object TextAnalysis {
       .select(col("bucket").cast("string"), col("batch").cast("string"))
       .distinct().collect().map(r => Seq(r.getString(0), r.getString(1)))
     val stats = graft.sinks.Lake.cowDeleteFromPartitions(
-      spark, s"$path/postings", Seq("bucket", "batch"), "doc_id", docIds,
+      spark, s"$path/postings", postings, Seq("bucket", "batch"), "doc_id", docIds,
       affected.toSeq, rowsDeletedKnown = None)
     IndexLayout.overwriteBatchPartitions(
       spark.range(1).select(lit(-nDel).as("n"), lit(-totDel).as("tot"),
@@ -647,7 +649,7 @@ object TextAnalysis {
   def readIndexStats(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String): (Long, Long, Long) = {
-    val r = spark.read.parquet(s"$indexPath/stats")
+    val r = IndexLayout.readTable(spark, s"$indexPath/stats")
       .agg(sum(col("n")).as("n"), sum(col("tot")).as("tot"),
         max(col("buckets")).as("buckets")).head()
     (r.getAs[Long]("n"), r.getAs[Long]("tot"), r.getAs[Long]("buckets"))
@@ -664,7 +666,7 @@ object TextAnalysis {
   def committedBatchIds(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Seq[Long] =
-    spark.read.parquet(s"$indexPath/stats")
+    IndexLayout.readTable(spark, s"$indexPath/stats")
       .select(col("batch").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq
 
@@ -680,7 +682,7 @@ object TextAnalysis {
   def indexStatsSnapshot(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String): ((Long, Long, Long), Seq[Long]) = {
-    val rows = spark.read.parquet(s"$indexPath/stats")
+    val rows = IndexLayout.readTable(spark, s"$indexPath/stats")
       .select(col("n"), col("tot"), col("buckets"),
         col("batch").cast("long").as("batch"))
       .collect()
@@ -719,7 +721,7 @@ object TextAnalysis {
     // mixed-case query reads the wrong bucket partition and finds nothing
     val qTerms = queryTerms.map(_.toLowerCase)
     val qBuckets = qTerms.map(t => hash48Local(t) % buckets).distinct
-    val postings = spark.read.parquet(s"$indexPath/postings")
+    val postings = IndexLayout.readTable(spark, s"$indexPath/postings")
       .filter(col("bucket").isin(qBuckets: _*))   // partition filter
       .filter(col("t").isin(qTerms: _*))        // parquet-pushed within bucket
       .transform(committedOnly(_, committed))   // commit-marker visibility
@@ -776,11 +778,11 @@ object TextAnalysis {
       // 0 rows, but doc_id's TYPE must match the index's (string ids are
       // legal): derive the empty frame from the postings schema so a
       // union with other batches can't hit a batch-dependent type error
-      return spark.read.parquet(s"$indexPath/postings")
+      return IndexLayout.readTable(spark, s"$indexPath/postings")
         .select(lit(0L).as("qid"), col("doc_id"), lit(0L).as("score_q10"))
         .limit(0)
     val qBuckets = terms.map(t => hash48Local(t) % buckets).distinct
-    val postings = spark.read.parquet(s"$indexPath/postings")
+    val postings = IndexLayout.readTable(spark, s"$indexPath/postings")
       .filter(col("bucket").isin(qBuckets: _*))   // partition filter
       .filter(col("t").isin(terms: _*))         // parquet-pushed within bucket
       .transform(committedOnly(_, committed))   // commit-marker visibility

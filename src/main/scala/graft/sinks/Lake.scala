@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.functions.Checkpoints
+import graft.functions.{Checkpoints, IndexLayout}
 import graft.functions.Checkpoints.Owned
 
 /** Lake-maintenance operators for a partitioned parquet corpus: targeted
@@ -128,7 +128,7 @@ object Lake {
     // partition values travel as strings throughout (partition discovery
     // may have type-inferred the column to date/int; directory names are
     // its string form either way)
-    val lake = spark.read.parquet(dir)
+    val lake = IndexLayout.readTable(spark, dir)
     val allParts = lake.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0))
 
@@ -144,8 +144,7 @@ object Lake {
 
     // 2. partition-pruned re-read of the affected slice, minus the dead rows
     val survivors = surviveOf(
-      spark.read.parquet(dir)
-        .where(col(partCol).cast("string").isin(affected: _*)))
+      lake.where(col(partCol).cast("string").isin(affected: _*)))
       .checkpointed()
 
     val perPart = survivors
@@ -191,7 +190,11 @@ object Lake {
     * partition-tuple filter so sibling partitions sharing a coarse value
     * are not rewritten). Partition values must round-trip through their
     * string form (the numeric bucket/cell/batch columns all do); same
-    * crash-atomicity caveat as [[deleteWhere]].
+    * crash-atomicity caveat as [[deleteWhere]]. The table is opened
+    * ONCE ([[IndexLayout.readTable]]): discovery, the rewrite's pruned
+    * re-read and `partitionsUntouched` all use that one relation, the
+    * last counted from its file listing (distinct leaf dirs of its
+    * input files), not by a job.
     *
     * OPERATING RULE (measured, SCALING "Delete-family pricing"): the
     * discovery scan is the
@@ -207,13 +210,13 @@ object Lake {
       partCols: Seq[String],
       idCol: String,
       ids: org.apache.spark.sql.DataFrame): DeleteStats = {
-    val lake = spark.read.parquet(dir)
+    val lake = IndexLayout.readTable(spark, dir)
     val partStr = partCols.map(c => col(c).cast("string").as(c))
     val hits = lake.join(broadcast(ids), Seq(idCol), "left_semi")
       .groupBy(partStr: _*).agg(count(lit(1)).as("__n"))
       .collect() // bounded by the number of affected partition dirs
     val keys = hits.toSeq.map(r => partCols.map(r.getAs[String]))
-    cowDeleteFromPartitions(spark, dir, partCols, idCol, ids, keys,
+    cowDeleteFromPartitions(spark, dir, lake, partCols, idCol, ids, keys,
       rowsDeletedKnown = Some(hits.map(_.getAs[Long]("__n")).sum))
   }
 
@@ -224,18 +227,23 @@ object Lake {
     * discovery scan. When `rowsDeletedKnown` is absent the affected
     * slice is counted before and after the anti-join (delete-set-
     * proportional, never corpus-proportional).
+    *
+    * `lake` is the caller's open relation over `dir`
+    * ([[IndexLayout.readTable]]); the rewrite reads its affected slice
+    * from it, and `partitionsUntouched` is the number of distinct leaf
+    * dirs of its input files (the file listing it already holds) less
+    * the affected count, so no job counts the partitions.
     */
   private[graft] def cowDeleteFromPartitions(
       spark: SparkSession,
       dir: String,
+      lake: org.apache.spark.sql.DataFrame,
       partCols: Seq[String],
       idCol: String,
       ids: org.apache.spark.sql.DataFrame,
       keys: Seq[Seq[String]],
       rowsDeletedKnown: Option[Long]): DeleteStats = {
-    val partStr = partCols.map(c => col(c).cast("string").as(c))
-    val allParts = spark.read.parquet(dir).select(partStr: _*)
-      .distinct().count()
+    val allParts = lake.inputFiles.map(f => new Path(f).getParent).distinct.length.toLong
     if (keys.isEmpty) return DeleteStats(0L, 0L, 0L, allParts)
     val Sep = "\u0001" // non-printing separator: ("1","12") vs ("11","2") must not collide
     val keyCol = concat_ws(Sep, partCols.map(c => col(c).cast("string")): _*)
@@ -248,7 +256,7 @@ object Lake {
     val coarse = partCols.zipWithIndex.map { case (c, i) =>
       col(c).cast("string").isin(keys.map(_(i)).distinct: _*)
     }.reduce(_ && _)
-    val pruned = spark.read.parquet(dir).where(coarse)
+    val pruned = lake.where(coarse)
     val slice =
       if (keyStrs.length <= MaxInlineIds) pruned.where(keyCol.isin(keyStrs: _*))
       else {
@@ -340,7 +348,7 @@ object Lake {
       partCol: String,
       partitions: Seq[String],
       filesPerPartition: Int): Unit = {
-    val raw = spark.read.parquet(dir)
+    val raw = IndexLayout.readTable(spark, dir)
       .where(col(partCol).isin(partitions: _*))
     // deterministic salt (row-content hash) splits each partition's rows
     // across exactly filesPerPartition writer tasks

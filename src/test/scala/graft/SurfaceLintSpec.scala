@@ -425,6 +425,23 @@ class SurfaceLintSpec extends AnyFunSuite {
     }.toMap
   }
 
+  /** Plain parquet reads (`<session>.read.parquet(`) in `code`, as
+    * "file:line", outside the body of `IndexLayout.readTable`: each one
+    * runs a one-task schema-inference job that the opener does not.
+    */
+  private def plainParquetReadsIn(code: Map[Path, String]): Seq[String] = {
+    val read = """\bread\s*\.\s*parquet\s*\(""".r
+    code.toSeq.flatMap { case (p, c) =>
+      val opener = objectDefs(c).filter(_.key == "IndexLayout.readTable")
+        .map(d => d.start until defEnd(c, d.start))
+      read.findAllMatchIn(c).filterNot(m => opener.exists(_.contains(m.start)))
+        .map(m => s"$p:${c.substring(0, m.start).count(_ == '\n') + 1}")
+    }.sorted
+  }
+
+  /** Where every table read must go through the opener. */
+  private val openerScope = Seq("functions", "sinks").map(d => Paths.get(s"src/main/scala/graft/$d"))
+
   private lazy val code: Map[Path, String] = {
     val roots = Seq(Paths.get("src/main/scala"), Paths.get("streambench/src"), Paths.get("src/test/scala"))
     roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
@@ -485,6 +502,34 @@ class SurfaceLintSpec extends AnyFunSuite {
       r.matches("""\(e\) \S.*""") || r.matches("""\([st]\) .*\b[A-Z][A-Za-z]*Spec\b.*""")
     }.keys
     assert(bad.isEmpty, bad.toSeq.sorted.mkString("\n"))
+  }
+
+  test("every parquet table read in functions and sinks goes through IndexLayout.readTable") {
+    val scoped = code.filter { case (p, _) => openerScope.exists(p.startsWith) }
+    assert(scoped.keySet.exists(_.endsWith("IndexLayout.scala")), "the scan found no opener")
+    val plain = plainParquetReadsIn(scoped)
+    assert(plain.isEmpty,
+      "plain parquet reads, each a schema-inference job; open the table with " +
+        "IndexLayout.readTable:\n" + plain.mkString("\n"))
+  }
+
+  test("lint self-check: the plain-read scan skips the opener, comments and strings") {
+    val files = Map(
+      "f/IndexLayout.scala" ->
+        """object IndexLayout {
+          |  /** like `spark.read.parquet(dir)` */
+          |  def readTable(spark: S, dir: String): D =
+          |    if (ok) spark.read.schema(s).parquet(dir) else spark.read.parquet(dir)
+          |  def other(spark: S): D = spark.read.parquet("x")
+          |}""".stripMargin,
+      "f/U.scala" ->
+        """object U {
+          |  val s = "spark.read.parquet(p)" // spark.read.parquet(q)
+          |  def go(spark: S): D = spark.read
+          |    .parquet(p)
+          |}""".stripMargin)
+    assert(plainParquetReadsIn(files.map { case (p, c) => Paths.get(p) -> strip(c) }) ===
+      Seq("f/IndexLayout.scala:5", "f/U.scala:3"))
   }
 
   test("lint self-check: the stripper and the def scanner") {
