@@ -1139,19 +1139,8 @@ object Graph {
       require(p == partitions,
         s"triangle count table at $countsDir was built with partitions=$p; " +
           s"refusing to merge with partitions=$partitions"))
-    val canon = edgeBatchHalf
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    // a fully-emptied log (every partition deleted) leaves a bare
-    // _SUCCESS that breaks schema inference — same live-partition gate
-    // as mergeCountsPartitioned
-    val oldOpt =
-      if (Incremental.hasLivePartitions(spark, edgesDir, "batch="))
-        Some(IndexLayout.readTable(spark, edgesDir)
-          .filter(col("batch") < batchId).select(col("src"), col("dst")))
-      else None
+    val canon = canonicalEdges(edgeBatchHalf)
+    val oldOpt = edgesBefore(spark, edgesDir, batchId)
     if (sign == 1L) Checkpoints.scoped {
       val delta = oldOpt.map(old => canon.join(old, Seq("src", "dst"), "left_anti"))
         .getOrElse(canon)
@@ -1224,34 +1213,60 @@ object Graph {
           dAgg.select(col("node"), col("tri_cnt")),
           Seq("node"), "tri_cnt", partitions, batchId)
       }
-      // log rewrite — idempotent from the on-disk resolved set: an
-      // already-rewritten partition simply stops matching the join. The
-      // live-partition guard covers the replay of a delete that emptied
-      // the whole log (bare _SUCCESS breaks schema inference).
-      if (fs.exists(new Path(delDir)) &&
-          Incremental.hasLivePartitions(spark, edgesDir, "batch=")) {
-        val delSet = IndexLayout.readTable(spark, delDir).select(col("src"), col("dst"))
-        val log = IndexLayout.readTable(spark, edgesDir)
-          .select(col("src"), col("dst"), col("batch"))
-        val affected = log.join(delSet, Seq("src", "dst"))
-          .select(col("batch").cast("long")).distinct()
-          .collect().map(_.getLong(0)) // bounded by the batch count
-        if (affected.nonEmpty) Checkpoints.scoped {
-          val survivors = log
-            .filter(col("batch").isin(affected: _*))
-            .join(delSet, Seq("src", "dst"), "left_anti")
-            .checkpointed() // consumed by liveness accounting + write
-          val live = survivors.select(col("batch").cast("long")).distinct()
-            .collect().map(_.getLong(0)).toSet
-          if (!survivors.isEmpty)
-            IndexLayout.overwriteBatchPartitions(
-              survivors, edgesDir, Seq("batch"))
-          affected.filterNot(live).foreach(b =>
-            fs.delete(new Path(edgesDir, s"batch=$b"), true))
-        }
-      }
+      deleteFromEdgeLog(spark, edgesDir, delDir)
       fs.mkdirs(doneMarker)
       true
+    }
+  }
+
+  /** Canonical undirected edges of a half-edge frame (`src`, `dst`):
+    * each edge as (least, greatest), self-loops dropped, deduplicated —
+    * the one form every maintained edge log stores.
+    */
+  private def canonicalEdges(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
+
+  /** The edges a maintainer's log held before batch `batchId`, or None
+    * while it holds no live batch: a fully-emptied log (every partition
+    * deleted) leaves a bare _SUCCESS that breaks schema inference — the
+    * live-partition gate of [[Incremental.mergeCountsPartitioned]].
+    */
+  private def edgesBefore(
+      spark: org.apache.spark.sql.SparkSession,
+      edgesDir: String,
+      batchId: Long): Option[DataFrame] =
+    if (Incremental.hasLivePartitions(spark, edgesDir, "batch="))
+      Some(IndexLayout.readTable(spark, edgesDir)
+        .filter(col("batch") < batchId).select(col("src"), col("dst")))
+    else None
+
+  /** A delete batch's edge-log rewrite, shared by the triangle and label
+    * maintainers: the `batch=<id>` partitions holding an edge of the
+    * resolved delete set at `delDir` rewrite without it
+    * ([[IndexLayout.rewritePartitions]]; emptied ones are removed).
+    * Idempotent from the on-disk resolved set: an already-rewritten
+    * partition simply stops matching the join. The live-partition guard
+    * covers the replay of a delete that emptied the whole log.
+    */
+  private def deleteFromEdgeLog(
+      spark: org.apache.spark.sql.SparkSession,
+      edgesDir: String,
+      delDir: String): Unit = {
+    val del = new org.apache.hadoop.fs.Path(delDir)
+    if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del) &&
+        Incremental.hasLivePartitions(spark, edgesDir, "batch=")) {
+      val delSet = IndexLayout.readTable(spark, delDir).select(col("src"), col("dst"))
+      val log = IndexLayout.readTable(spark, edgesDir)
+      val affected = log.join(delSet, Seq("src", "dst"))
+        .select(col("batch").cast("string")).distinct()
+        .collect().map(r => Seq(r.getString(0))) // bounded by the batch count
+      IndexLayout.rewritePartitions(spark, edgesDir, Seq("batch"), affected.toSeq, Some(log))(
+        _.get.select(col("src"), col("dst"), col("batch"))
+          .join(delSet, Seq("src", "dst"), "left_anti"))
+      ()
     }
   }
 
@@ -1303,11 +1318,7 @@ object Graph {
         "seed only an empty state dir (incremental batches go through " +
         "maintainTriangleCounts; a rebuild goes through " +
         "rebuildTriangleCounts)")
-    val canon = edgesHalf
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val canon = canonicalEdges(edgesHalf)
       .checkpointed() // consumed by the log write + the cold count
     if (!canon.isEmpty)
       IndexLayout.overwriteBatchPartitions(
@@ -1583,16 +1594,8 @@ object Graph {
       require(p == partitions,
         s"label table at $labelsDir was built with partitions=$p; " +
           s"refusing to upsert with partitions=$partitions"))
-    val canon = edgeBatchHalf
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val oldOpt =
-      if (Incremental.hasLivePartitions(spark, edgesDir, "batch="))
-        Some(IndexLayout.readTable(spark, edgesDir)
-          .filter(col("batch") < batchId).select(col("src"), col("dst")))
-      else None
+    val canon = canonicalEdges(edgeBatchHalf)
+    val oldOpt = edgesBefore(spark, edgesDir, batchId)
     if (sign == 1L) Checkpoints.scoped {
       // the scope releases the delta pin and the refresh result
       val delta = oldOpt.map(old => canon.join(old, Seq("src", "dst"), "left_anti"))
@@ -1666,31 +1669,7 @@ object Graph {
         }
       }
       if (nothingResolved) { fs.mkdirs(doneMarker); return true }
-      // log rewrite — idempotent from the on-disk resolved set (the
-      // triangle maintainer's block): an already-rewritten partition
-      // simply stops matching the join
-      if (fs.exists(new Path(delDir)) &&
-          Incremental.hasLivePartitions(spark, edgesDir, "batch=")) {
-        val delSet = IndexLayout.readTable(spark, delDir).select(col("src"), col("dst"))
-        val log = IndexLayout.readTable(spark, edgesDir)
-          .select(col("src"), col("dst"), col("batch"))
-        val affected = log.join(delSet, Seq("src", "dst"))
-          .select(col("batch").cast("long")).distinct()
-          .collect().map(_.getLong(0)) // bounded by the batch count
-        if (affected.nonEmpty) Checkpoints.scoped {
-          val survivors = log
-            .filter(col("batch").isin(affected: _*))
-            .join(delSet, Seq("src", "dst"), "left_anti")
-            .checkpointed() // consumed by liveness accounting + write
-          val live = survivors.select(col("batch").cast("long")).distinct()
-            .collect().map(_.getLong(0)).toSet
-          if (!survivors.isEmpty)
-            IndexLayout.overwriteBatchPartitions(
-              survivors, edgesDir, Seq("batch"))
-          affected.filterNot(live).foreach(b =>
-            fs.delete(new Path(edgesDir, s"batch=$b"), true))
-        }
-      }
+      deleteFromEdgeLog(spark, edgesDir, delDir)
       fs.mkdirs(doneMarker)
       true
     }

@@ -407,6 +407,40 @@ object Incremental {
         ()
       }
 
+  /** The partition modulus a [[mergeCountsPartitioned]] table was built
+    * with (None before the first batch) — the single source of truth for
+    * the `meta/partitions=<P>` pin, shared by the merge's own fail-fast
+    * and by composing maintainers that must reject a mismatched P BEFORE
+    * writing their own state (e.g. the triangle maintainer's edge log).
+    */
+  def pinnedPartitions(
+      spark: org.apache.spark.sql.SparkSession,
+      stateDir: String): Option[Int] = {
+    import org.apache.hadoop.fs.Path
+    val metaRoot = new Path(s"$stateDir/meta")
+    val fs = metaRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(metaRoot)) None
+    else fs.listStatus(metaRoot).map(_.getPath.getName)
+      .collectFirst { case s if s.startsWith("partitions=") =>
+        s.stripPrefix("partitions=").toInt }
+  }
+
+  /** True when a partitioned state directory holds live data slices —
+    * an all-cancelling batch can empty a table to a bare `_SUCCESS`,
+    * which breaks schema inference on a naive read. Shared by the merge,
+    * the reader, and composing maintainers' partitioned logs (the
+    * prefix distinguishes `__p=` count slices from e.g. `batch=` logs).
+    */
+  def hasLivePartitions(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      prefix: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith(prefix))
+  }
+
   /** The large-state graduation of [[mergeCounts]] (the `digests` scale
     * note in [[maintainDatasheet]]): maintain a keyed count table as a
     * parquet table PARTITIONED by a stable hash of the key,
@@ -414,11 +448,12 @@ object Incremental {
     * rewrites ONLY the partitions its keys hash into — maintenance is
     * priced by the delta (its own aggregate + a merge over the affected
     * partition slices), never by the distinct-key-sized state. This is
-    * exactly [[graft.sinks.Lake.deleteByIds]]'s copy-on-write discipline
-    * applied to a maintained view: locate affected partitions, re-read
-    * only them (partition-pruned scan), dynamic-partition-overwrite only
-    * them; untouched partition directories are never opened and stay
-    * byte-identical (IncrementalSpec asserts this on the file bytes).
+    * the copy-on-write rewrite [[graft.sinks.Lake.deleteByIds]] runs
+    * ([[IndexLayout.rewritePartitions]]) applied to a maintained view:
+    * locate affected partitions, re-read only them (partition-pruned
+    * scan), dynamic-partition-overwrite only them; untouched partition
+    * directories are never opened and stay byte-identical
+    * (IncrementalSpec asserts this on the file bytes).
     *
     * Layout under `stateDir`: `data/__p=N/...` (the state rows, columns
     * `keys :+ cnt`) and `applied/batch=<id>` (commit markers).
@@ -455,40 +490,6 @@ object Incremental {
     * Returns true when the batch applied, false when its marker already
     * existed (replay no-op).
     */
-  /** The partition modulus a [[mergeCountsPartitioned]] table was built
-    * with (None before the first batch) — the single source of truth for
-    * the `meta/partitions=<P>` pin, shared by the merge's own fail-fast
-    * and by composing maintainers that must reject a mismatched P BEFORE
-    * writing their own state (e.g. the triangle maintainer's edge log).
-    */
-  def pinnedPartitions(
-      spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Option[Int] = {
-    import org.apache.hadoop.fs.Path
-    val metaRoot = new Path(s"$stateDir/meta")
-    val fs = metaRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaRoot)) None
-    else fs.listStatus(metaRoot).map(_.getPath.getName)
-      .collectFirst { case s if s.startsWith("partitions=") =>
-        s.stripPrefix("partitions=").toInt }
-  }
-
-  /** True when a partitioned state directory holds live data slices —
-    * an all-cancelling batch can empty a table to a bare `_SUCCESS`,
-    * which breaks schema inference on a naive read. Shared by the merge,
-    * the reader, and composing maintainers' partitioned logs (the
-    * prefix distinguishes `__p=` count slices from e.g. `batch=` logs).
-    */
-  def hasLivePartitions(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      prefix: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith(prefix))
-  }
-
   def mergeCountsPartitioned(
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
@@ -516,55 +517,35 @@ object Incremental {
         fs.mkdirs(new Path(s"$stateDir/meta/partitions=$partitions"))
     }
     val part = pmod(xxhash64(keys.map(col): _*), lit(partitions)).as("__p")
-    // the scope releases both pins on return (a days-long maintainer
+    // the scope releases the delta pin on return (a days-long maintainer
     // stream would otherwise grow one block set per micro-batch)
     Checkpoints.scoped {
       // pre-aggregate the delta to one row per key BEFORE the merge (the
-      // delta may carry repeats), then pin it: it is consumed up to three
-      // times (affected-partition listing, merge, survivor accounting)
+      // delta may carry repeats), then pin it: it is consumed twice
+      // (affected-partition listing, merge)
       val deltaAgg = delta.select((keys :+ cnt).map(col): _*)
         .groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))
         .filter(col(cnt) =!= 0)
         .select(col("*"), part)
         .checkpointed()
       val affected = deltaAgg.select(col("__p")).distinct()
-        .collect().map(_.getLong(0)) // bounded by `partitions`, never key-sized
+        .collect().map(r => Seq(r.getLong(0).toString)) // bounded by `partitions`, never key-sized
       // empty or fully-cancelling delta (streaming routinely delivers
       // empty micro-batches): writing an empty frame would create a
       // schemaless data/ dir that poisons every later read — commit the
       // marker and touch nothing
-      if (affected.nonEmpty) {
+      if (affected.nonEmpty)
         // state exists only when actual partition data survives — an
-        // all-cancelling batch can empty the table to a bare _SUCCESS, and
-        // reading that fails with "unable to infer schema"
-        val hasState = hasLivePartitions(spark, dataDir, "__p=")
-        val merged0 =
-          if (!hasState) deltaAgg.drop("__p")
-          else {
-            // partition-pruned read of ONLY the affected state slices
-            val slice = IndexLayout.readTable(spark, dataDir)
-              .where(col("__p").isin(affected: _*))
-              .select((keys :+ cnt).map(col): _*)
-            mergeCounts(slice, deltaAgg.drop("__p"), keys, cnt)
-          }
-        // re-derive __p (a pure function of the keys) and pin the result:
-        // Spark refuses to overwrite a path still feeding the running plan
-        val merged = merged0.select(col("*"), part).checkpointed()
-        val emptied = {
-          val live = merged.select(col("__p")).distinct()
-            .collect().map(_.getLong(0)).toSet
-          affected.filterNot(live)
+        // all-cancelling batch can empty the table to a bare _SUCCESS,
+        // and reading that fails with "unable to infer schema"
+        IndexLayout.rewritePartitions(spark, dataDir, Seq("__p"), affected,
+          Option.when(hasLivePartitions(spark, dataDir, "__p="))(
+            IndexLayout.readTable(spark, dataDir))) { slice =>
+          val merged = slice.fold(deltaAgg.drop("__p"))(s =>
+            mergeCounts(s.select((keys :+ cnt).map(col): _*), deltaAgg.drop("__p"), keys, cnt))
+          // re-derive __p (a pure function of the keys) for the write
+          merged.select(col("*"), part)
         }
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try
-          merged.write.mode("overwrite").partitionBy("__p").parquet(dataDir)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        emptied.foreach(p => fs.delete(new Path(dataDir, s"__p=$p"), true))
-      }
       fs.mkdirs(marker)
       true
     }
@@ -637,39 +618,22 @@ object Incremental {
       val affected = (delta.select(col("__p")) +:
         drops.map(_.select(col("__p"))).toSeq)
         .reduce(_.unionAll(_)).distinct()
-        .collect().map(_.getLong(0)) // bounded by `partitions`
-      if (affected.nonEmpty) {
-        val merged0 =
-          if (!hasLivePartitions(spark, dataDir, "__p=")) delta
-          else {
-            val survivors0 = IndexLayout.readTable(spark, dataDir)
-              .where(col("__p").isin(affected: _*))
-              .select((keys :+ valCol).map(col): _*)
+        .collect().map(r => Seq(r.getLong(0).toString)) // bounded by `partitions`
+      // a slice fully emptied by drops has its directory removed by the
+      // rewrite, or the dropped rows would silently survive
+      if (affected.nonEmpty)
+        IndexLayout.rewritePartitions(spark, dataDir, Seq("__p"), affected,
+          Option.when(hasLivePartitions(spark, dataDir, "__p="))(
+            IndexLayout.readTable(spark, dataDir))) {
+          _.fold(delta) { s =>
+            val survivors0 = s.select((keys :+ valCol).map(col): _*)
               .join(delta.select(keys.map(col): _*), keys, "left_anti")
             drops.fold(survivors0)(dr =>
                 survivors0.join(dr.select(keys.map(col): _*), keys, "left_anti"))
               .select(col("*"), part)
               .unionByName(delta)
           }
-        // pinned: the overwrite below replaces slices this plan reads
-        val merged = merged0.checkpointed()
-        if (!merged.isEmpty)
-          merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__p").parquet(dataDir)
-        // a slice fully emptied by drops cannot be expressed by dynamic
-        // overwrite (nothing to write) — remove its directory, or the
-        // dropped rows would silently survive. Pure upserts can never
-        // empty a slice, so the liveness collect (an extra driver job on
-        // the hot per-micro-batch path) runs only when drops exist
-        // (r17 review).
-        if (drops.isDefined) {
-          val live = merged.select(col("__p")).distinct()
-            .collect().map(_.getLong(0)).toSet
-          affected.filterNot(live).foreach(p =>
-            fs.delete(new Path(dataDir, s"__p=$p"), true))
         }
-      }
       fs.mkdirs(marker)
       true
     }

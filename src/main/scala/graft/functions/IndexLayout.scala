@@ -1,11 +1,16 @@
 package graft.functions
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{broadcast, col, concat_ws, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.functions.Checkpoints.Owned
 
 /** Shared layout rules for the materialized index families (LSH band
   * buckets, IVF+PQ cells): every write — the base build and each append —
@@ -281,9 +286,11 @@ private[graft] object IndexLayout {
     } else false
   }
 
-  /** Write `df` (which must carry a literal `batch` column) into `path`
-    * replacing only the partitions present in `df` — the idempotent
-    * append primitive. `partCols` must end with `batch`.
+  /** Write `df` into `path` replacing only the partitions present in
+    * `df` — the idempotent append primitive, and the one dynamic
+    * partition overwrite of the engine. The mode rides this write's
+    * options, never the session conf, so no concurrent write on the
+    * session sees it.
     */
   def overwriteBatchPartitions(df: DataFrame, path: String, partCols: Seq[String]): Unit = {
     df.write
@@ -291,5 +298,81 @@ private[graft] object IndexLayout {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCols: _*)
       .parquet(path)
+  }
+
+  /** Copy-on-write rewrite of the partitions of the table at `dir` whose
+    * `partCols` values are in `keys` (string forms, `partCols` order) —
+    * the one write path of every maintained partitioned table (lake
+    * deletes, partitioned count and upsert state, graph edge logs):
+    *  1. prune `table` to exactly the affected tuples ([[affectedSlice]]);
+    *  2. pin `rewrite(slice)`, the rows that replace them (Spark refuses
+    *     to overwrite a path the running plan still reads);
+    *  3. one collect counts the pinned rows per tuple;
+    *  4. when any are left, ONE dynamic overwrite
+    *     ([[overwriteBatchPartitions]]) replaces the tuples they hold;
+    *  5. the dirs of affected tuples left with no rows are deleted
+    *     (dynamic overwrite cannot express "write nothing").
+    * Untouched partitions are never opened for write and stay
+    * byte-identical. `table` is the caller's open relation over `dir`
+    * ([[readTable]]), None while `dir` holds no rows yet; `rewrite` then
+    * gets None for the slice. Partition values must round-trip through
+    * their string form. NOT crash-atomic: a failure inside 4 or between
+    * 4 and 5 leaves affected partitions half-rewritten (untouched ones
+    * are never at risk); each caller's commit marker, written after
+    * this returns, is what a replay checks.
+    *
+    * Returns the row count of every affected tuple that still holds rows.
+    */
+  private[graft] def rewritePartitions(
+      spark: SparkSession,
+      dir: String,
+      partCols: Seq[String],
+      keys: Seq[Seq[String]],
+      table: Option[DataFrame])(
+      rewrite: Option[DataFrame] => DataFrame): Map[Seq[String], Long] =
+    if (keys.isEmpty) Map.empty
+    else Checkpoints.scoped { // releases the pin once the rewrite is done
+      val rows = rewrite(table.map(affectedSlice(_, partCols, keys))).checkpointed()
+      // counted per pinned partition and merged on the driver: one job
+      // and no shuffle, where a groupBy collect runs two
+      val n = partCols.length
+      val live = rows.select(partCols.map(c => col(c).cast("string")): _*).rdd
+        .mapPartitions { it =>
+          val counts = mutable.Map.empty[Seq[String], Long].withDefaultValue(0L)
+          it.foreach(r => counts(Seq.tabulate(n)(r.getString)) += 1L)
+          counts.iterator
+        }
+        .collect() // bounded by pinned partitions x affected tuples
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      if (live.nonEmpty) overwriteBatchPartitions(rows, dir, partCols)
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // dir names escaped as the writer escapes them (`50%` is `50%25`)
+      keys.filterNot(live.contains).foreach { k =>
+        fs.delete(new Path(dir, partCols.zip(k).map { case (c, v) =>
+          ExternalCatalogUtils.getPartitionPathString(c, v) }.mkString("/")), true)
+      }
+      live
+    }
+
+  /** The rows of `table` in the partitions `keys` names: per-column
+    * `isin` prunes directories at the scan, and an exact tuple filter
+    * keeps sibling partitions that share a coarse value out (they must
+    * stay byte-identical). A tuple set larger than
+    * [[graft.sinks.Lake.MaxInlineIds]] rides a broadcast semi-join,
+    * never plan text.
+    */
+  private[graft] def affectedSlice(
+      table: DataFrame, partCols: Seq[String], keys: Seq[Seq[String]]): DataFrame = {
+    val Sep = "\u0001" // non-printing separator: ("1","12") vs ("11","2") must not collide
+    val keyCol = concat_ws(Sep, partCols.map(c => col(c).cast("string")): _*)
+    val keyStrs = keys.map(_.mkString(Sep))
+    val pruned = table.where(partCols.zipWithIndex.map { case (c, i) =>
+      col(c).cast("string").isin(keys.map(_(i)).distinct: _*)
+    }.reduce(_ && _))
+    if (keyStrs.length <= graft.sinks.Lake.MaxInlineIds) pruned.where(keyCol.isin(keyStrs: _*))
+    else {
+      import table.sparkSession.implicits._
+      pruned.join(broadcast(keyStrs.toDF("__k")), keyCol === col("__k"), "left_semi")
+    }
   }
 }

@@ -475,8 +475,8 @@ object TextAnalysis {
       .select(col("bucket").cast("string"), col("batch").cast("string"))
       .distinct().collect().map(r => Seq(r.getString(0), r.getString(1)))
     val stats = graft.sinks.Lake.cowDeleteFromPartitions(
-      spark, s"$path/postings", postings, Seq("bucket", "batch"), "doc_id", docIds,
-      affected.toSeq, rowsDeletedKnown = None)
+      spark, s"$path/postings", postings, Seq("bucket", "batch"), affected.toSeq,
+      rowsDeleted = None)(_.join(broadcast(docIds), Seq("doc_id"), "left_anti"))
     IndexLayout.overwriteBatchPartitions(
       spark.range(1).select(lit(-nDel).as("n"), lit(-totDel).as("tot"),
         lit(buckets).as("buckets"), lit(internal).as("batch")),
@@ -1093,19 +1093,16 @@ object TextAnalysis {
       labelCol: String): DataFrame = {
     val base = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
       col(labelCol).as("__label"),
-      (pmod(Curation.hash48(col(textCol)), lit(1000)) < 800).as("__train"))
-    val td = charTrigrams(base, "__text", "doc_id", carryCols = Seq("__train", "__label"))
-      .withColumn("b", pmod(portableHash48(col("t")), lit(NbBuckets)))
-      .groupBy(col("doc_id"), col("__label"), col("__train"), col("b"))
-      .agg(count(lit(1)).as("k"))
+      (pmod(Curation.hash48(col(textCol)), lit(1000)) < 800).as("__tr"))
+    val td = nbBucketCounts(base, "doc_id", "__label", "__tr")
       .checkpointed(eager = false)
-    val m = td.filter(col("__train"))
+    val m = td.filter(col("__tr"))
       .groupBy(col("__label").as("c"), col("b"))
       .agg(sum(col("k")).as("n_cb"))
     val classTot = m.groupBy(col("c")).agg(sum(col("n_cb")).as("n_c"))
     // priors count ALL train docs of the class (trigram-less docs still
     // vote for their class's prior), a second narrow pass over the scan
-    val priors = base.filter(col("__train"))
+    val priors = base.filter(col("__tr"))
       .groupBy(col("__label").as("c")).agg(count(lit(1)).as("d_c"))
     val classes = classTot.join(priors, "c")
     nbScoreCore(td.select(col("doc_id"), col("b"), col("k")), m, classes)
@@ -1114,45 +1111,20 @@ object TextAnalysis {
   /** Hashed trigram buckets of every NB model (the feature width B). */
   private val NbBuckets = 4096
 
-  /** Bounded (__label, __tr, b, k) trigram-bucket counts — ONE
-    * extraction pass whose aggregate output is <= 2 x |C| x `NbBuckets`
-    * rows no matter the corpus size, from which both the model counts
-    * (the `__tr` rows) and the drift mass (summed over both split
-    * sides) derive. Never materializes per-doc rows — a per-doc
-    * granularity here is docs x buckets rows, a non-plan at 100 TB
-    * (measured 2.5x slower than the r15 form before this fix).
+  /** Hashed trigram-bucket counts `(keys..., b, k)` of `docs`, a frame
+    * in the NB shape (`doc_id`, `__text`, `__label`, `__tr`: the train
+    * split flag) — the ONE feature extraction of every NB model and
+    * scorer; `keys` picks the granularity. Per doc (`doc_id` among the
+    * keys) is what scoring needs; without it the aggregate is bounded,
+    * <= 2 x |C| x `NbBuckets` rows for (`__label`, `__tr`) no matter the
+    * corpus size — a per-doc granularity where only the model and drift
+    * mass are needed is docs x buckets rows, a non-plan at 100 TB
+    * (measured 2.5x slower than the bounded form).
     */
-  private def nbClassBucketCounts(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      labelCol: String): DataFrame =
-    charTrigrams(
-      df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-        col(labelCol).as("__label"),
-        (pmod(Curation.hash48(col(textCol)), lit(1000)) < 800).as("__tr")),
-      "__text", "doc_id", carryCols = Seq("__label", "__tr"))
+  private def nbBucketCounts(docs: DataFrame, keys: String*): DataFrame =
+    charTrigrams(docs, "__text", "doc_id", carryCols = Seq("__label", "__tr"))
       .withColumn("b", pmod(portableHash48(col("t")), lit(NbBuckets)))
-      .groupBy(col("__label"), col("__tr"), col("b"))
-      .agg(count(lit(1)).as("k"))
-
-  /** (doc_id, __label, __tr, b, k): per-doc trigram-bucket counts with
-    * the label/split flags carried — the APPENDED-slice extraction,
-    * which scoring genuinely needs at per-doc granularity (and from
-    * which the appended model/mass aggregates then derive for free).
-    */
-  private def nbDocBucketCounts(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      labelCol: String): DataFrame =
-    charTrigrams(
-      df.select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-        col(labelCol).as("__label"),
-        (pmod(Curation.hash48(col(textCol)), lit(1000)) < 800).as("__tr")),
-      "__text", "doc_id", carryCols = Seq("__label", "__tr"))
-      .withColumn("b", pmod(portableHash48(col("t")), lit(NbBuckets)))
-      .groupBy(col("doc_id"), col("__label"), col("__tr"), col("b"))
+      .groupBy((keys :+ "b").map(col): _*)
       .agg(count(lit(1)).as("k"))
 
   /** NB counts are an ADDITIVE MONOID: the model a retrain over
@@ -1225,10 +1197,8 @@ object TextAnalysis {
       // (label, split, bucket) cube; appended keeps per-doc rows because
       // scoring needs them — and its model/mass aggregates derive from
       // those for free
-      val ccF = nbClassBucketCounts(flagged.filter(col("__fr")),
-        "__text", "doc_id", "__label")
-      val triA = nbDocBucketCounts(flagged.filter(!col("__fr")),
-        "__text", "doc_id", "__label")
+      val ccF = nbBucketCounts(flagged.filter(col("__fr")), "__label", "__tr")
+      val triA = nbBucketCounts(flagged.filter(!col("__fr")), "doc_id", "__label", "__tr")
         .checkpointed()
       // ONE (fr, tr, label)-cube scan (r18, guide §1.2) replaces three
       // separate doc-level scans of the source (the slice-count agg +

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Checkpoints, IndexLayout}
 import graft.functions.Checkpoints.Owned
@@ -54,7 +54,7 @@ object Lake {
     * list — the predicate pushes into the parquet reader, so untouched
     * partitions cost row-group stats only. A larger delete set (a real
     * GDPR batch can be millions of ids) would bloat the plan itself, so
-    * it switches to [[deleteMatching]]'s broadcast-join form.
+    * it switches to [[deleteMatchingNested]]'s broadcast-join form.
     */
   def deleteByIds(
       spark: SparkSession,
@@ -66,7 +66,7 @@ object Lake {
       deleteWhere(spark, dir, partCol, col(idCol).isin(ids: _*))
     else {
       import spark.implicits._
-      deleteMatching(spark, dir, partCol, idCol, ids.toDF(idCol))
+      deleteMatchingNested(spark, dir, Seq(partCol), idCol, ids.toDF(idCol))
     }
 
   /** Ids above this count go through the join path instead of plan-literal
@@ -74,33 +74,11 @@ object Lake {
     */
   val MaxInlineIds = 10000
 
-  /** [[deleteByIds]] with the delete set as a DataFrame (one `idCol`
-    * column) — the form that scales to arbitrarily large delete sets:
-    * hits are located with a broadcast LEFT SEMI join, survivors with a
-    * broadcast LEFT ANTI join, so the delete set never becomes plan text
-    * and never shuffles the lake.
-    */
-  def deleteMatching(
-      spark: SparkSession,
-      dir: String,
-      partCol: String,
-      idCol: String,
-      ids: org.apache.spark.sql.DataFrame): DeleteStats =
-    deleteImpl(spark, dir, partCol,
-      hitOf = lake => lake.join(broadcast(ids), Seq(idCol), "left_semi"),
-      surviveOf = slice => slice.join(broadcast(ids), Seq(idCol), "left_anti"))
-
   /** Copy-on-write delete of every row matching `predicate` — the general
     * form (`deleteWhere(..., col("user_id") === 42)`, retention cutoffs,
-    * etc.); only partitions containing a match are rewritten.
-    *
-    * The survivors of affected partitions are localCheckpoint'd before the
-    * overwrite: Spark (correctly) refuses to overwrite a path that is
-    * still an input of the plan being executed, and the checkpoint
-    * materializes exactly the affected slice — the copy-on-write cost
-    * floor any engine pays for this operation. A partition whose every
-    * row dies cannot be expressed by dynamic overwrite (there is nothing
-    * to write), so its directory is removed directly.
+    * etc.); only partitions containing a match are rewritten. Discovery
+    * pushes the predicate into the parquet reader; the rewrite is
+    * [[IndexLayout.rewritePartitions]] keeping `!predicate`.
     *
     * NULL predicate results count as NOT matched (SQL `DELETE WHERE`
     * semantics): a row whose predicate evaluates to NULL — e.g. a NULL id
@@ -112,72 +90,17 @@ object Lake {
       spark: SparkSession,
       dir: String,
       partCol: String,
-      predicate: org.apache.spark.sql.Column): DeleteStats = {
+      predicate: Column): DeleteStats = {
     val hit = coalesce(predicate, lit(false))
-    deleteImpl(spark, dir, partCol,
-      hitOf = _.where(hit), surviveOf = _.where(!hit))
-  }
-
-  private def deleteImpl(
-      spark: SparkSession,
-      dir: String,
-      partCol: String,
-      hitOf: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      surviveOf: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : DeleteStats = {
-    // partition values travel as strings throughout (partition discovery
-    // may have type-inferred the column to date/int; directory names are
-    // its string form either way)
     val lake = IndexLayout.readTable(spark, dir)
-    val allParts = lake.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0))
-
-    // 1. locate affected partitions
-    val hits = hitOf(lake)
-      .groupBy(col(partCol).cast("string").as(partCol)).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (hits.isEmpty)
-      return DeleteStats(0L, 0L, 0L, allParts.length.toLong)
-
-    val affected = hits.keys.toSeq
-    val rowsDeleted = hits.values.sum
-
-    // 2. partition-pruned re-read of the affected slice, minus the dead rows
-    val survivors = surviveOf(
-      lake.where(col(partCol).cast("string").isin(affected: _*)))
-      .checkpointed()
-
-    val perPart = survivors
-      .groupBy(col(partCol).cast("string").as(partCol)).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val emptied = affected.filterNot(perPart.contains)
-
-    // 3. dynamic partition overwrite touches only partitions present in
-    //    the written frame; the untouched directories keep their files
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      survivors.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-
-    // fully-emptied partitions have nothing to overwrite with: drop them
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    emptied.foreach { p =>
-      fs.delete(new Path(dir, s"$partCol=$p"), true)
-    }
-
-    DeleteStats(rowsDeleted, affected.length.toLong, emptied.length.toLong,
-      (allParts.length - affected.length).toLong)
+    deleteFound(spark, dir, lake, Seq(partCol), lake.where(hit))(_.where(!hit))
   }
 
-  /** Copy-on-write delete from a MULTI-LEVEL partitioned layout — the
-    * [[deleteMatching]] discipline generalized to the materialized index
-    * families' nested trees (`bucket=K/batch=N`, `cell=K/batch=N`):
-    * remove every row whose `idCol` value appears in `ids` (a one-column
-    * DataFrame), rewriting ONLY partition directories that actually held
+  /** Copy-on-write delete from a (possibly MULTI-LEVEL) partitioned
+    * layout — the lake's `day=` tree or the materialized index families'
+    * nested trees (`bucket=K/batch=N`, `cell=K/batch=N`): remove every
+    * row whose `idCol` value appears in `ids` (a one-column DataFrame of
+    * any size), rewriting ONLY partition directories that actually held
     * a matching row. Untouched directories are never opened for write
     * (byte-identical after the call — spec-pinned), fully-emptied
     * directories are dropped, and re-running the same delete is a
@@ -185,16 +108,14 @@ object Lake {
     *
     * Discovery is one scan with the id predicate as a broadcast
     * LEFT SEMI join (pushes nothing into parquet, but reads only the id
-    * column + partition values); the rewrite re-reads ONLY the affected
-    * directories (per-column `isin` partition pruning + an exact
-    * partition-tuple filter so sibling partitions sharing a coarse value
-    * are not rewritten). Partition values must round-trip through their
-    * string form (the numeric bucket/cell/batch columns all do); same
-    * crash-atomicity caveat as [[deleteWhere]]. The table is opened
+    * column + partition values); the rewrite
+    * ([[IndexLayout.rewritePartitions]]) re-reads ONLY the affected
+    * directories and keeps a broadcast LEFT ANTI join of them, so the
+    * delete set never becomes plan text and never shuffles the table.
+    * Same crash-atomicity caveat as the rewrite. The table is opened
     * ONCE ([[IndexLayout.readTable]]): discovery, the rewrite's pruned
     * re-read and `partitionsUntouched` all use that one relation, the
-    * last counted from its file listing (distinct leaf dirs of its
-    * input files), not by a job.
+    * last counted from its file listing, not by a job.
     *
     * OPERATING RULE (measured, SCALING "Delete-family pricing"): the
     * discovery scan is the
@@ -209,95 +130,65 @@ object Lake {
       dir: String,
       partCols: Seq[String],
       idCol: String,
-      ids: org.apache.spark.sql.DataFrame): DeleteStats = {
+      ids: DataFrame): DeleteStats = {
     val lake = IndexLayout.readTable(spark, dir)
-    val partStr = partCols.map(c => col(c).cast("string").as(c))
-    val hits = lake.join(broadcast(ids), Seq(idCol), "left_semi")
-      .groupBy(partStr: _*).agg(count(lit(1)).as("__n"))
-      .collect() // bounded by the number of affected partition dirs
-    val keys = hits.toSeq.map(r => partCols.map(r.getAs[String]))
-    cowDeleteFromPartitions(spark, dir, lake, partCols, idCol, ids, keys,
-      rowsDeletedKnown = Some(hits.map(_.getAs[Long]("__n")).sum))
+    deleteFound(spark, dir, lake, partCols, lake.join(broadcast(ids), Seq(idCol), "left_semi"))(
+      _.join(broadcast(ids), Seq(idCol), "left_anti"))
   }
 
-  /** The rewrite half of [[deleteMatchingNested]], with the affected
-    * partition-value tuples ALREADY KNOWN (`keys`, string forms in
-    * `partCols` order) — lets a caller that resolved the delete set in
-    * its own pass (the inverted index's stats protocol) skip the second
-    * discovery scan. When `rowsDeletedKnown` is absent the affected
-    * slice is counted before and after the anti-join (delete-set-
-    * proportional, never corpus-proportional).
+  /** The delete once `hits` (the matching rows of `lake`) are known: one
+    * collect groups them by partition, giving the affected tuples and
+    * the rows deleted, then [[cowDeleteFromPartitions]] keeps `survive`
+    * of those partitions.
+    */
+  private def deleteFound(
+      spark: SparkSession,
+      dir: String,
+      lake: DataFrame,
+      partCols: Seq[String],
+      hits: DataFrame)(
+      survive: DataFrame => DataFrame): DeleteStats = {
+    val found = hits.groupBy(partCols.map(c => col(c).cast("string").as(c)): _*)
+      .agg(count(lit(1)).as("__n"))
+      .collect() // bounded by the number of affected partition dirs
+    cowDeleteFromPartitions(spark, dir, lake, partCols,
+      found.toSeq.map(r => partCols.map(r.getAs[String])),
+      rowsDeleted = Some(found.map(_.getAs[Long]("__n")).sum))(survive)
+  }
+
+  /** The rewrite half of a delete, with the affected partition-value
+    * tuples ALREADY KNOWN (`keys`, string forms in `partCols` order) —
+    * lets a caller that resolved the delete set in its own pass (the
+    * inverted index's stats protocol) skip the second discovery scan.
+    * The partitions rewrite through [[IndexLayout.rewritePartitions]]
+    * keeping `survive` of their rows. When `rowsDeleted` is absent the
+    * affected slice is counted before the rewrite (delete-set-
+    * proportional, never corpus-proportional) and the survivors come
+    * from the rewrite's own per-partition counts.
     *
     * `lake` is the caller's open relation over `dir`
-    * ([[IndexLayout.readTable]]); the rewrite reads its affected slice
-    * from it, and `partitionsUntouched` is the number of distinct leaf
-    * dirs of its input files (the file listing it already holds) less
-    * the affected count, so no job counts the partitions.
+    * ([[IndexLayout.readTable]]); `partitionsUntouched` is the number of
+    * distinct leaf dirs of its input files (the file listing it already
+    * holds) less the affected count, so no job counts the partitions.
     */
   private[graft] def cowDeleteFromPartitions(
       spark: SparkSession,
       dir: String,
-      lake: org.apache.spark.sql.DataFrame,
+      lake: DataFrame,
       partCols: Seq[String],
-      idCol: String,
-      ids: org.apache.spark.sql.DataFrame,
       keys: Seq[Seq[String]],
-      rowsDeletedKnown: Option[Long]): DeleteStats = {
+      rowsDeleted: Option[Long])(
+      survive: DataFrame => DataFrame): DeleteStats = {
     val allParts = lake.inputFiles.map(f => new Path(f).getParent).distinct.length.toLong
-    if (keys.isEmpty) return DeleteStats(0L, 0L, 0L, allParts)
-    val Sep = "\u0001" // non-printing separator: ("1","12") vs ("11","2") must not collide
-    val keyCol = concat_ws(Sep, partCols.map(c => col(c).cast("string")): _*)
-    val keyStrs = keys.map(_.mkString(Sep))
-    // per-column isin prunes directories at the scan; the exact tuple
-    // filter keeps sibling partitions that share a coarse value out of
-    // the rewrite (they must stay byte-identical). Tuple sets larger
-    // than the inline bound ride as a broadcast semi-join, never plan
-    // text (the MaxInlineIds rule applied to partition keys).
-    val coarse = partCols.zipWithIndex.map { case (c, i) =>
-      col(c).cast("string").isin(keys.map(_(i)).distinct: _*)
-    }.reduce(_ && _)
-    val pruned = lake.where(coarse)
-    val slice =
-      if (keyStrs.length <= MaxInlineIds) pruned.where(keyCol.isin(keyStrs: _*))
-      else {
-        import spark.implicits._
-        pruned.join(broadcast(keyStrs.toDF("__k")),
-          keyCol === col("__k"), "left_semi")
-      }
-    // the scope releases the survivor pin once the rewrite is done
-    Checkpoints.scoped {
-      val survivors = slice.join(broadcast(ids), Seq(idCol), "left_anti")
-        .checkpointed()
-      val rowsDeleted = rowsDeletedKnown.getOrElse(
-        slice.count() - survivors.count())
-      val survivorKeys = survivors
-        .select(concat_ws(Sep, partCols.map(c => col(c).cast("string")): _*)
-          .as("__k"))
-        .distinct().collect().map(_.getString(0)).toSet
-      val emptied = keys.filterNot(k => survivorKeys(k.mkString(Sep)))
-      // a fully-emptied affected set has nothing to overwrite with —
-      // skip the write (it would only churn a _SUCCESS at the root)
-      if (survivorKeys.nonEmpty)
-        survivors.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partCols: _*).parquet(dir)
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { k =>
-        val sub = partCols.zip(k).map { case (c, v) => s"$c=$v" }.mkString("/")
-        fs.delete(new Path(dir, sub), true); ()
-      }
-      DeleteStats(rowsDeleted, keys.length.toLong, emptied.length.toLong,
-        allParts - keys.length)
-    }
+    val before =
+      if (rowsDeleted.isDefined || keys.isEmpty) 0L
+      else IndexLayout.affectedSlice(lake, partCols, keys).count()
+    val live = IndexLayout.rewritePartitions(spark, dir, partCols, keys, Some(lake))(
+      slice => survive(slice.get))
+    DeleteStats(rowsDeleted.getOrElse(before - live.values.sum), keys.length.toLong,
+      keys.count(k => !live.contains(k)).toLong, allParts - keys.length)
   }
 
-  /** Compact the named partitions of the lake at `dir` down to
-    * `filesPerPartition` files each — the maintenance pass every
-    * streaming/micro-batch sink needs (each trigger writes a file per
-    * task; a day of 1-minute triggers is 1440+ small files whose open
-    * cost dominates scans). Rows are untouched; only the file layout
-    * changes, and only inside the named partitions.
-    */
   /** Z-order key for `cols` (2-4 long-typed dimensions): each column
     * quantizes to an 8-bit bucket over its [min, max] span by a pure
     * RIGHT SHIFT (overflow-free for any long range, integer-exact), and
@@ -310,8 +201,8 @@ object Lake {
     * [[zOrderSpans]] — computed once with a 1-row aggregate and passed
     * in as plan literals.
     */
-  def zOrderValue(cols: Seq[org.apache.spark.sql.Column],
-      spans: Seq[(Long, Int)]): org.apache.spark.sql.Column = {
+  def zOrderValue(cols: Seq[Column],
+      spans: Seq[(Long, Int)]): Column = {
     require(cols.size >= 2 && cols.size <= 4,
       s"z-order wants 2-4 dimensions, got ${cols.size}")
     require(cols.size == spans.size, "one (min, shift) span per column")
@@ -329,7 +220,7 @@ object Lake {
   /** (min, shift) spans for [[zOrderValue]]: shift is the smallest right
     * shift that maps the column's full [min, max] range into [0, 255].
     */
-  def zOrderSpans(df: org.apache.spark.sql.DataFrame,
+  def zOrderSpans(df: DataFrame,
       cols: Seq[String]): Seq[(Long, Int)] = {
     val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
     val row = df.agg(aggs.head, aggs.tail: _*).head()
@@ -342,28 +233,30 @@ object Lake {
     }
   }
 
+  /** Compact the named partitions of the lake at `dir` down to
+    * `filesPerPartition` files each — the maintenance pass every
+    * streaming/micro-batch sink needs (each trigger writes a file per
+    * task; a day of 1-minute triggers is 1440+ small files whose open
+    * cost dominates scans). Rows are untouched; only the file layout
+    * changes, and only inside the named partitions, through one dynamic
+    * overwrite ([[IndexLayout.overwriteBatchPartitions]]).
+    */
   def compactPartitions(
       spark: SparkSession,
       dir: String,
       partCol: String,
       partitions: Seq[String],
-      filesPerPartition: Int): Unit = {
+      filesPerPartition: Int): Unit = Checkpoints.scoped {
     val raw = IndexLayout.readTable(spark, dir)
       .where(col(partCol).isin(partitions: _*))
     // deterministic salt (row-content hash) splits each partition's rows
     // across exactly filesPerPartition writer tasks
     val salt = pmod(hash(raw.columns.map(col): _*), lit(filesPerPartition))
+    // pinned: the overwrite replaces the partitions this plan reads
     val slice = raw
       .repartition(partitions.length * filesPerPartition, col(partCol), salt)
       .checkpointed()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      slice.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    IndexLayout.overwriteBatchPartitions(slice, dir, Seq(partCol))
   }
 
   /** Bucket-clustered write: hash-partition `df` into `numBuckets` files
@@ -387,7 +280,7 @@ object Lake {
     * first join would have paid), zero at read time, forever after.
     */
   def writeBucketed(
-      df: org.apache.spark.sql.DataFrame,
+      df: DataFrame,
       table: String,
       path: String,
       bucketCols: Seq[String],

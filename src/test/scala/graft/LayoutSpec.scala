@@ -82,7 +82,7 @@ class LayoutSpec extends SparkSpec {
     assert(filesOf("2024-01-03") !== before("2024-01-03"))
   }
 
-  test("deleteMatching (join form) and deleteWhere match the isin form") {
+  test("deleteMatchingNested (join form) and deleteWhere match the isin form") {
     import spark.implicits._
     def mkLake(): String = {
       val dir = java.nio.file.Files.createTempDirectory("graft-del2").toString
@@ -94,7 +94,7 @@ class LayoutSpec extends SparkSpec {
     val targets = (0L until 400L).filter(i => i % 4 == 1 || i == 2)
 
     val viaJoin = mkLake()
-    val s1 = graft.sinks.Lake.deleteMatching(spark, viaJoin, "day", "id",
+    val s1 = graft.sinks.Lake.deleteMatchingNested(spark, viaJoin, Seq("day"), "id",
       targets.toDF("id"))
     val viaPred = mkLake()
     val s2 = graft.sinks.Lake.deleteWhere(spark, viaPred, "day",
@@ -139,6 +139,25 @@ class LayoutSpec extends SparkSpec {
     val s2 = graft.sinks.Lake.deleteByIds(spark, dir2, "day", "id", Seq(1L, 2L, 3L, 5L))
     assert(s2.rowsDeleted === 4L)
     assert(spark.read.parquet(dir2).where(col("id").isNull).count() === 2L)
+  }
+
+  test("deleteWhere drops an emptied partition whose dir name Spark escaped") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-del5").toString
+    spark.range(20)
+      .select(col("id"), when(col("id") < 10, lit("50%")).otherwise(lit("a:b")).as("day"))
+      .write.mode("overwrite").partitionBy("day").parquet(dir)
+    // the writer escapes '%' and ':' in partition dir names
+    assert(new java.io.File(s"$dir/day=50%25").isDirectory)
+    assert(new java.io.File(s"$dir/day=a%3Ab").isDirectory)
+    // every row of "50%" dies, two of "a:b"
+    val stats = graft.sinks.Lake.deleteWhere(spark, dir, "day", col("id") < 12)
+    assert(stats.rowsDeleted === 12L)
+    assert(stats.partitionsEmptied === 1L)
+    assert(!new java.io.File(s"$dir/day=50%25").exists(),
+      "the emptied partition's dir must be dropped")
+    val after = spark.read.parquet(dir)
+    assert(after.count() === 8L)
+    assert(after.where(col("day") === "a:b").count() === 8L)
   }
 
   test("compactPartitions shrinks file count without changing rows") {

@@ -108,11 +108,20 @@ class SurfaceLintSpec extends AnyFunSuite {
     * newlines kept). Code inside an interpolation (`$name`, `${...}`)
     * stays, since it can call a def.
     */
-  private def strip(src: String): String = {
+  private def strip(src: String): String = blankOut(src, strings = true)
+
+  /** `src` with comments blanked and string literals kept (offsets and
+    * newlines kept, as [[strip]]).
+    */
+  private def stripComments(src: String): String = blankOut(src, strings = false)
+
+  private def blankOut(src: String, strings: Boolean): String = {
     val out = src.toCharArray
     val n = src.length
-    def blank(a: Int, b: Int): Unit =
+    def blankAll(a: Int, b: Int): Unit =
       (a until math.min(b, n)).foreach(k => if (out(k) != '\n') out(k) = ' ')
+    // literal text: blanked only when `strings`
+    def blank(a: Int, b: Int): Unit = if (strings) blankAll(a, b)
     def isIdStart(c: Char) = c.isLetter || c == '_'
     def isId(c: Char) = c.isLetterOrDigit || c == '_'
     // `i0` is just past the opening quote(s); returns the index past the close
@@ -157,7 +166,7 @@ class SurfaceLintSpec extends AnyFunSuite {
     while (i < n) {
       if (src.startsWith("//", i)) {
         val j = { val e = src.indexOf('\n', i); if (e < 0) n else e }
-        blank(i, j)
+        blankAll(i, j)
         i = j
       } else if (src.startsWith("/*", i)) {
         var depth = 0
@@ -168,7 +177,7 @@ class SurfaceLintSpec extends AnyFunSuite {
           else if (src.startsWith("*/", j)) { depth -= 1; j += 2; done = depth == 0 }
           else j += 1
         }
-        blank(i, j)
+        blankAll(i, j)
         i = j
       } else if (src(i) == '"') {
         val t = src.startsWith("\"\"\"", i)
@@ -439,6 +448,23 @@ class SurfaceLintSpec extends AnyFunSuite {
     }.sorted
   }
 
+  /** Uses of the dynamic-overwrite key (`partitionOverwriteMode`) in the
+    * raw sources `src`, as "file:line", outside the body of
+    * `IndexLayout.overwriteBatchPartitions`: each is a session-wide
+    * `spark.conf` flip (a concurrent static overwrite on the session runs
+    * dynamic) or a second hand-written copy of the rewrite. Comments do
+    * not count; string literals do, since the key is one.
+    */
+  private def overwriteModesIn(src: Map[Path, String]): Seq[String] =
+    src.toSeq.flatMap { case (p, raw) =>
+      val c = strip(raw)
+      val writer = objectDefs(c).filter(_.key == "IndexLayout.overwriteBatchPartitions")
+        .map(d => d.start until defEnd(c, d.start))
+      "partitionOverwriteMode".r.findAllMatchIn(stripComments(raw))
+        .filterNot(m => writer.exists(_.contains(m.start)))
+        .map(m => s"$p:${raw.substring(0, m.start).count(_ == '\n') + 1}")
+    }.sorted
+
   /** Where every table read must go through the opener. */
   private val openerScope = Seq("functions", "sinks").map(d => Paths.get(s"src/main/scala/graft/$d"))
 
@@ -530,6 +556,36 @@ class SurfaceLintSpec extends AnyFunSuite {
           |}""".stripMargin)
     assert(plainParquetReadsIn(files.map { case (p, c) => Paths.get(p) -> strip(c) }) ===
       Seq("f/IndexLayout.scala:5", "f/U.scala:3"))
+  }
+
+  test("the dynamic partition overwrite is set only by IndexLayout.overwriteBatchPartitions") {
+    val src = scalaFiles(Paths.get("src/main/scala")).map(p => p -> Files.readString(p)).toMap
+    assert(src.exists { case (p, c) =>
+      p.endsWith("IndexLayout.scala") && stripComments(c).contains("\"partitionOverwriteMode\"")
+    }, "the scan found no writer")
+    val uses = overwriteModesIn(src)
+    assert(uses.isEmpty,
+      "partitionOverwriteMode outside IndexLayout.overwriteBatchPartitions; write through " +
+        "it (or IndexLayout.rewritePartitions), never the session conf:\n" + uses.mkString("\n"))
+  }
+
+  test("lint self-check: the overwrite-mode scan keeps strings, skips comments and the writer") {
+    val files = Map(
+      "f/IndexLayout.scala" ->
+        """object IndexLayout {
+          |  /** sets "partitionOverwriteMode" on this write alone */
+          |  def overwriteBatchPartitions(df: D, path: String, cols: Seq[String]): Unit =
+          |    df.write.option("partitionOverwriteMode", "dynamic").parquet(path)
+          |  def other(df: D): Unit = df.write.option("partitionOverwriteMode", "dynamic")
+          |}""".stripMargin,
+      "f/U.scala" ->
+        """object U {
+          |  // spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+          |  def go(spark: S): Unit =
+          |    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+          |}""".stripMargin)
+    assert(overwriteModesIn(files.map { case (p, c) => Paths.get(p) -> c }) ===
+      Seq("f/IndexLayout.scala:5", "f/U.scala:4"))
   }
 
   test("lint self-check: the stripper and the def scanner") {

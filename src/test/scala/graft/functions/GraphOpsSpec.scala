@@ -755,6 +755,62 @@ class GraphOpsSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir))
   }
 
+  test("a delete batch of the triangle and the label maintainer rewrites " +
+      "only the edge-log batches holding a deleted edge: the others stay " +
+      "byte-identical, a batch whose edges all died loses its dir") {
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    // per-file CRC32 of the edge log, keyed by log-relative path
+    def logCrcs(stateDir: String): Map[String, Long] = {
+      val root = java.nio.file.Paths.get(stateDir, "edges")
+      val it = java.nio.file.Files.walk(root).iterator()
+      val out = scala.collection.mutable.Map[String, Long]()
+      while (it.hasNext) {
+        val p = it.next()
+        if (java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".parquet")) {
+          val crc = new java.util.zip.CRC32()
+          crc.update(java.nio.file.Files.readAllBytes(p))
+          out(root.relativize(p).toString) = crc.getValue
+        }
+      }
+      out.toMap
+    }
+    def inBatch(crcs: Map[String, Long], b: Long) = crcs.filter(_._1.startsWith(s"batch=$b/"))
+    val batches = Seq(
+      Seq((1L, 2L), (2L, 3L), (1L, 3L)),
+      Seq((3L, 4L), (4L, 5L)),
+      Seq((5L, 6L), (6L, 7L), (5L, 7L)))
+    // every edge of batch 2 and one of batch 3, delivered reversed
+    val deleted = Seq((4L, 3L), (5L, 4L), (7L, 6L))
+    val surviving = batches(0) ++ batches(2).filterNot(_ == ((6L, 7L)))
+    val maintainers: Seq[(String, (String, Seq[(Long, Long)], Long, Long) => Boolean)] = Seq(
+      "triangles" -> ((dir, edges, id, sign) =>
+        Graph.maintainTriangleCounts(spark, dir, edges.toDF("src", "dst"), id, sign = sign)),
+      "labels" -> ((dir, edges, id, sign) =>
+        Graph.maintainCommunityLabels(spark, dir, edges.toDF("src", "dst"), id,
+          rounds = 3, sign = sign)))
+    for ((name, maintain) <- maintainers) {
+      val stateDir = java.nio.file.Files.createTempDirectory(s"graft-log-$name").toString
+      batches.zipWithIndex.foreach { case (b, i) =>
+        assert(maintain(stateDir, b, i + 1L, 1L), s"$name: insert batch ${i + 1}")
+      }
+      val before = logCrcs(stateDir)
+      assert(Seq(1L, 2L, 3L).forall(b => inBatch(before, b).nonEmpty),
+        s"$name: the fixture logged an empty batch")
+      assert(maintain(stateDir, deleted, 4L, -1L), s"$name: delete batch")
+      val after = logCrcs(stateDir)
+      assert(inBatch(after, 1L) === inBatch(before, 1L),
+        s"$name: batch=1 holds no deleted edge but was rewritten")
+      assert(!new java.io.File(s"$stateDir/edges/batch=2").exists(),
+        s"$name: batch=2 lost every edge but its dir stayed")
+      assert(inBatch(after, 3L).nonEmpty && inBatch(after, 3L) != inBatch(before, 3L),
+        s"$name: batch=3 held a deleted edge but was not rewritten")
+      assert(same(spark.read.parquet(s"$stateDir/edges").select($"src", $"dst"),
+        surviving.toDF("src", "dst")), s"$name: the log holds other than the survivors")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir))
+    }
+  }
+
   test("seedTriangleCounts: seed + incremental batches == cold recompute " +
       "over the union; seeding a non-empty state dir refuses; the legacy " +
       "counts/v= layout fails fast; rebuildTriangleCounts recovers a " +
