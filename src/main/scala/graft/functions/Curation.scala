@@ -1037,6 +1037,18 @@ object Curation {
           col("r_stop") * col("r_rep"))
   }
 
+  /** The (doc_id, src, s) per-doc surprisal frame the buckets derive
+    * from.
+    */
+  private def surprisalFrame(
+      docs: DataFrame,
+      textCol: String,
+      idCol: String,
+      srcCol: String): DataFrame =
+    TextAnalysis.lmSurprisalScore(docs, textCol, idCol)
+      .join(docs.select(col(idCol).as("doc_id"), col(srcCol).as("src")), "doc_id")
+      .select(col("doc_id"), col("src"), col("avg_surprisal_q10").as("s"))
+
   /** CCNet perplexity buckets (Wenzek et al. 2020): split each source's
     * documents into head / middle / tail thirds by corpus-LM surprisal
     * ([[TextAnalysis.lmSurprisalScore]]) — the mixture knob web-scale
@@ -1060,18 +1072,6 @@ object Curation {
     * values); thresholds are a 2-column-per-source broadcast back.
     * Output: (doc_id, source, avg_surprisal_q10, ppl_bucket).
     */
-  /** The (doc_id, src, s) per-doc surprisal frame the buckets derive
-    * from.
-    */
-  private def surprisalFrame(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      srcCol: String): DataFrame =
-    TextAnalysis.lmSurprisalScore(docs, textCol, idCol)
-      .join(docs.select(col(idCol).as("doc_id"), col(srcCol).as("src")), "doc_id")
-      .select(col("doc_id"), col("src"), col("avg_surprisal_q10").as("s"))
-
   def ccnetBuckets(
       docs: DataFrame,
       textCol: String,

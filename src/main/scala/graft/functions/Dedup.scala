@@ -675,14 +675,8 @@ object Dedup {
     IndexLayout.requireParams(df.sparkSession, path, Map(
       "n" -> n.toLong, "bands" -> bands.toLong,
       "rowsPerBand" -> rowsPerBand.toLong, "buckets" -> buckets.toLong))
-    val id = batchId.getOrElse(
-      IndexLayout.maxBatchId(df.sparkSession, s"$path/bands") + 1)
-    // a compaction consumed batches <= through: a replay would duplicate
-    // its rows beside the compacted copy — fail loudly instead
-    IndexLayout.compactedThrough(df.sparkSession, s"$path/compacted")
-      .foreach(t => require(id > t,
-        s"batch $id was consumed by a compaction (through=$t) — a replay " +
-          "here would duplicate its rows; appends must resume above it"))
+    val id = IndexLayout.allocateBatchId(df.sparkSession, batchId, s"$path/bands",
+      s"$path/compacted", "compaction")
     val spark = df.sparkSession
     def writeBands(keys: DataFrame): Unit = IndexLayout.overwriteBatchPartitions(
       keys.select(col("doc"), col("band"), col("bh"))

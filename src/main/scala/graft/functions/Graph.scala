@@ -326,14 +326,7 @@ object Graph {
       .withColumn("label", col("node"))
       .checkpointed()
     for (_ <- 1 to rounds) {
-      val next = sym
-        .join(labels.select(col("node").as("dst"), col("label")), "dst")
-        .groupBy(col("src"), col("label"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("src"))
-        .agg(max(struct(col("n"), (-col("label")).as("neg"))).as("b"))
-        .select(col("src").as("node"), (-col("b.neg")).as("label"))
-        .checkpointed()
+      val next = lpaVote(sym, labels).checkpointed()
       // superseded round frames release as the chain advances — a
       // per-micro-batch caller (the refresh router's cold arm) would
       // otherwise pin `rounds` node-sized blocks per refresh until GC
@@ -409,14 +402,6 @@ object Graph {
     communityLabelsDeltaFrom(sym, rounds, oldLabels, hops0, hopsDone = 0)
   }
 
-  /** [[communityLabelsDelta]]'s core with the delta-endpoint ball BFS
-    * RESUMABLE from a partial `(node, hop)` frame — so the router
-    * ([[communityLabelsRefreshAuto]]) hands its probe ball over instead
-    * of the cone re-expanding the same hops from scratch. `hopsDone`
-    * hops must already be complete in `hops`; the continuation frontier
-    * re-derives as the nodes at exactly that hop (empty if the ball
-    * already saturated — the loop then exits immediately).
-    */
   /** Multi-source BFS ball over `sym` resuming a `(node, hop)` frame at
     * `fromHop` — the frontier-only expansion shared by the cone refresh,
     * the refresh router's saturation probe, and the probe tool (one
@@ -452,6 +437,14 @@ object Graph {
     hops
   }
 
+  /** [[communityLabelsDelta]]'s core with the delta-endpoint ball BFS
+    * RESUMABLE from a partial `(node, hop)` frame — so the router
+    * ([[communityLabelsRefreshAuto]]) hands its probe ball over instead
+    * of the cone re-expanding the same hops from scratch. `hopsDone`
+    * hops must already be complete in `hops`; the continuation frontier
+    * re-derives as the nodes at exactly that hop (empty if the ball
+    * already saturated — the loop then exits immediately).
+    */
   private def communityLabelsDeltaFrom(
       sym: DataFrame,
       rounds: Int,
@@ -1115,109 +1108,138 @@ object Graph {
       batchId: Long,
       partitions: Int = 64,
       sign: Long = 1L): Boolean = {
-    import org.apache.hadoop.fs.Path
-    require(sign == 1L || sign == -1L, "sign must be +1 (inserts) or -1 (deletes)")
     val countsDir = s"$stateDir/counts"
-    val edgesDir = s"$stateDir/edges"
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNotLegacyCountsLayout(fs, countsDir)
-    val countsApplied = fs.exists(new Path(s"$countsDir/applied/batch=$batchId"))
-    val doneMarker = new Path(s"$stateDir/deletes_done/batch=$batchId")
-    if (sign == 1L && countsApplied) return false
-    if (sign == -1L && countsApplied && fs.exists(doneMarker)) return false
-    // ids folded by a log compaction are invisible to this batch's
-    // `batch < id` dedup read — reusing one would silently duplicate
-    IndexLayout.compactedThrough(spark, s"$stateDir/compacted").foreach(t =>
-      require(batchId > t,
-        s"batch $batchId was consumed by a log compaction (through=$t) " +
-          "— maintenance must resume above it"))
-    // fail-fast on a partition-modulus mismatch BEFORE any state write —
-    // mergeCountsPartitioned re-checks, but only after the edge log had
-    // already absorbed the batch
-    Incremental.pinnedPartitions(spark, countsDir).foreach(p =>
-      require(p == partitions,
-        s"triangle count table at $countsDir was built with partitions=$p; " +
-          s"refusing to merge with partitions=$partitions"))
-    val canon = canonicalEdges(edgeBatchHalf)
-    val oldOpt = edgesBefore(spark, edgesDir, batchId)
-    if (sign == 1L) Checkpoints.scoped {
-      val delta = oldOpt.map(old => canon.join(old, Seq("src", "dst"), "left_anti"))
-        .getOrElse(canon)
-        .checkpointed() // consumed by the log write, T1/T2/T3, and full
-      val full = oldOpt.map(_.unionAll(delta)).getOrElse(delta)
-      val d = triangleCountDelta(full, delta, pinDelta = false)
-      // §2.6 overlap (r18): the edge-log write and the DOMINANT job of
-      // the batch — folding the T1-T2+T3 triangle delta — are
-      // independent; only the counts merge (whose applied/ marker
-      // commits the batch) must follow the completed edge write (the
-      // crash-ordering contract above). The log write runs on a pool
-      // thread while this thread folds the delta into its checkpoint;
-      // the merge then re-aggregates the tiny node-delta frame (a
-      // no-op pass the overlap pays for the ordering). oldOpt's file
-      // listing snapshotted at frame creation, so the concurrent
-      // batch=<id> write is invisible to the fold's scans.
-      val writeF =
-        if (delta.isEmpty) None
-        else Some(scala.concurrent.Future {
-          IndexLayout.overwriteBatchPartitions(
-            delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
-        }(scala.concurrent.ExecutionContext.global))
-      val dAgg =
-        try d.groupBy(col("node"))
-          .agg(sum(col("tri_delta")).as("tri_cnt"))
+    requireNotLegacyCountsLayout(spark, countsDir)
+    edgeLogBatch(spark, stateDir, countsDir, edgeBatchHalf, batchId, partitions, sign) {
+      (before, batch) =>
+        // T1-T2+T3 over the graph the batch changes: the log after an
+        // insert, the log before a delete (whose delta merges negated)
+        val d = triangleCountDelta(
+          if (sign == 1L) before.map(_.unionAll(batch)).getOrElse(batch)
+          else before.getOrElse(batch),
+          batch, pinDelta = false)
+        val total = sum(col("tri_delta"))
+        d.groupBy(col("node"))
+          .agg((if (sign == 1L) total else -total).as("tri_cnt"))
           .filter(col("tri_cnt") =!= 0)
           .checkpointed()
-        catch { case t: Throwable =>
-          // the pool write must land (or fail) before the scope
-          // releases the delta blocks it reads
-          writeF.foreach(f => scala.concurrent.Await.ready(f,
-            scala.concurrent.duration.Duration.Inf))
-          throw t
-        }
-      writeF.foreach(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
+    } { dAgg =>
       Incremental.mergeCountsPartitioned(spark, countsDir,
-        dAgg.select(col("node"), col("tri_cnt")),
+        dAgg.getOrElse(edgeBatchHalf.select(col("src").as("node"), col("src").as("tri_cnt"))
+          .limit(0)).select(col("node"), col("tri_cnt")),
         Seq("node"), "tri_cnt", partitions, batchId)
-    } else {
-      val delDir = s"$stateDir/deletes/batch=$batchId"
-      if (!countsApplied) Checkpoints.scoped {
-        val resolved = oldOpt
-          .map(old => canon.join(old, Seq("src", "dst"), "left_semi"))
-          .getOrElse(canon.limit(0))
-          .checkpointed() // consumed by the delete-set write + T1/T2/T3
-        // same §2.6 overlap as the insert path: the resolved-set write
-        // (crash-replay evidence, must land before the merge's marker)
-        // runs on a pool thread under the delta fold
+    }
+  }
+
+  /** The commit protocol of one edge-log batch, shared by
+    * [[maintainTriangleCounts]] and [[maintainCommunityLabels]]: each
+    * supplies only its `fold` of the batch into a state delta and the
+    * `commit` that merges that delta into its keyed-state table at
+    * `stateRoot` and writes the batch's applied marker
+    * ([[Incremental.mergeCountsPartitioned]] /
+    * [[Incremental.upsertPartitioned]]).
+    *
+    * This def owns the rest, in this order: the replay checks on the
+    * applied marker and `deletes_done/batch=<id>`; the compaction and
+    * partition-modulus guards (both before any state write); the
+    * canonical batch and the log before it; the pinned insert delta
+    * (deduplicated against that log) or the pinned delete resolved set
+    * (present in it); the landing of `edges/batch=<id>` (insert) or
+    * `deletes/batch=<id>` (delete); then the commit, and for a delete
+    * the log rewrite and `deletes_done`. `fold(before, batch)` sees the
+    * log before the batch (None while it holds no live batch) and the
+    * pinned batch.
+    *
+    * §2.6 overlap (r18): the log or resolved-set write runs on a pool
+    * thread while this thread runs the fold — the two are independent,
+    * and only the commit must follow the completed write (the crash
+    * ordering in [[maintainTriangleCounts]]). The fold reads only the
+    * pinned batch and `before`, whose file listing snapshotted at frame
+    * creation, so the concurrent `batch=<id>` write is invisible to it.
+    *
+    * A delete that resolves to no logged edge (a re-issued GDPR batch,
+    * or edges that never existed) leaves the log as it was, and by the
+    * maintained invariant the state already matches it: it commits
+    * `commit(None)` without paying for a fold (r17 review).
+    */
+  private def edgeLogBatch[A](
+      spark: org.apache.spark.sql.SparkSession,
+      stateDir: String,
+      stateRoot: String,
+      edgeBatchHalf: DataFrame,
+      batchId: Long,
+      partitions: Int,
+      sign: Long)(
+      fold: (Option[DataFrame], DataFrame) => A)(
+      commit: Option[A] => Boolean): Boolean = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    require(sign == 1L || sign == -1L, "sign must be +1 (inserts) or -1 (deletes)")
+    val edgesDir = s"$stateDir/edges"
+    val delDir = s"$stateDir/deletes/batch=$batchId"
+    val fs = new org.apache.hadoop.fs.Path(stateDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val applied = Incremental.isApplied(spark, stateRoot, batchId)
+    val done = deletesDone(stateDir, batchId.toString)
+    if (applied && (sign == 1L || fs.exists(done))) return false
+    // ids folded by a log compaction are invisible to this batch's
+    // `batch < id` dedup read — reusing one would silently duplicate
+    IndexLayout.allocateBatchId(spark, Some(batchId), edgesDir,
+      s"$stateDir/compacted", "log compaction")
+    // the commit re-checks the modulus, but only after the edge log had
+    // already absorbed the batch
+    Incremental.requirePinnedPartitions(spark, stateRoot, partitions)
+    val canon = canonicalEdges(edgeBatchHalf)
+    val before = edgesBefore(spark, edgesDir, batchId)
+    // Some(commit's result) once the batch committed; None for a delete
+    // that resolved to no logged edge. A delete whose marker already
+    // landed only finishes its log rewrite from the on-disk resolved set.
+    val committed = if (applied) Some(true) else Checkpoints.scoped {
+      val pinned = before
+        .map(old => canon.join(old, Seq("src", "dst"),
+          if (sign == 1L) "left_anti" else "left_semi"))
+        .getOrElse(if (sign == 1L) canon else canon.limit(0))
+        .checkpointed() // consumed by the log or resolved-set write and the fold
+      val empty = pinned.isEmpty
+      if (sign == -1L && empty) { commit(None); None }
+      else {
+        // an EMPTY insert delta skips the write (a zero-row dynamic
+        // overwrite would leave a bare _SUCCESS under edges/ and poison
+        // schema inference); its marker still commits
         val writeF =
-          if (resolved.isEmpty) None
-          else Some(scala.concurrent.Future {
-            resolved.write.mode("overwrite").parquet(delDir)
-          }(scala.concurrent.ExecutionContext.global))
-        val d = triangleCountDelta(
-          oldOpt.getOrElse(resolved), resolved, pinDelta = false)
-        val dAgg =
-          try d.groupBy(col("node"))
-            .agg((-sum(col("tri_delta"))).as("tri_cnt"))
-            .filter(col("tri_cnt") =!= 0)
-            .checkpointed()
+          if (empty) None
+          else Some(Future {
+            if (sign == 1L)
+              IndexLayout.overwriteBatchPartitions(
+                pinned.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
+            else pinned.write.mode("overwrite").parquet(delDir)
+          }(ExecutionContext.global))
+        val delta =
+          try fold(before, pinned)
           catch { case t: Throwable =>
-            writeF.foreach(f => scala.concurrent.Await.ready(f,
-              scala.concurrent.duration.Duration.Inf))
+            // the pool write must land (or fail) before the scope
+            // releases the pinned batch it reads
+            writeF.foreach(Await.ready(_, Duration.Inf))
             throw t
           }
-        writeF.foreach(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-        Incremental.mergeCountsPartitioned(spark, countsDir,
-          dAgg.select(col("node"), col("tri_cnt")),
-          Seq("node"), "tri_cnt", partitions, batchId)
+        writeF.foreach(Await.result(_, Duration.Inf))
+        Some(commit(Some(delta)))
       }
-      deleteFromEdgeLog(spark, edgesDir, delDir)
-      fs.mkdirs(doneMarker)
+    }
+    if (sign == 1L) committed.contains(true)
+    else {
+      if (committed.nonEmpty) deleteFromEdgeLog(spark, edgesDir, delDir)
+      fs.mkdirs(done)
       true
     }
   }
+
+  /** `<stateDir>/deletes_done/batch=<id>`: the marker that a delete
+    * batch's edge-log rewrite finished. The one place the marker path is
+    * built.
+    */
+  private def deletesDone(stateDir: String, id: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"$stateDir/deletes_done/batch=$id")
 
   /** Canonical undirected edges of a half-edge frame (`src`, `dst`):
     * each edge as (least, greatest), self-loops dropped, deduplicated —
@@ -1281,8 +1303,9 @@ object Graph {
     * (r15 ADVICE).
     */
   private def requireNotLegacyCountsLayout(
-      fs: org.apache.hadoop.fs.FileSystem, countsDir: String): Unit = {
+      spark: org.apache.spark.sql.SparkSession, countsDir: String): Unit = {
     import org.apache.hadoop.fs.Path
+    val fs = new Path(countsDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snaps = fs.globStatus(new Path(s"$countsDir/v=*"))
     require(snaps == null || snaps.isEmpty ||
       fs.exists(new Path(s"$countsDir/meta")),
@@ -1366,7 +1389,7 @@ object Graph {
       triangleCountsAdj(log).select(col("node"), col("tri_cnt")),
       Seq("node"), "tri_cnt", p, batchId = batches.max)
     batches.foreach(b =>
-      fs.mkdirs(new Path(s"$stateDir/counts/applied/batch=$b")))
+      fs.mkdirs(Incremental.appliedMarker(s"$stateDir/counts", b.toString)))
     ()
   }
 
@@ -1390,7 +1413,7 @@ object Graph {
   private def compactMaintainerLog(
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
-      appliedRoot: String,
+      stateRoot: String,
       targetFiles: Int): Unit = {
     import org.apache.hadoop.fs.Path
     val edgesDir = s"$stateDir/edges"
@@ -1399,7 +1422,7 @@ object Graph {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val unfinished = Option(fs.globStatus(new Path(s"$stateDir/deletes/batch=*")))
       .map(_.toSeq.map(_.getPath.getName)
-        .filterNot(b => fs.exists(new Path(s"$stateDir/deletes_done/$b"))))
+        .filterNot(b => fs.exists(deletesDone(stateDir, b.stripPrefix("batch=")))))
       .getOrElse(Nil)
     require(unfinished.isEmpty,
       s"delete batches ${unfinished.mkString(",")} at $stateDir resolved " +
@@ -1410,7 +1433,7 @@ object Graph {
         s.getPath.getName.stripPrefix("batch=").toLong).toOption))
       .getOrElse(Nil)
     if (logged.length > 1) {
-      val applied = Option(fs.globStatus(new Path(s"$appliedRoot/batch=*")))
+      val applied = Option(fs.globStatus(Incremental.appliedMarker(stateRoot, "*")))
         .map(_.toSeq.flatMap(s => scala.util.Try(
           s.getPath.getName.stripPrefix("batch=").toLong).toOption).toSet)
         .getOrElse(Set.empty[Long])
@@ -1443,7 +1466,7 @@ object Graph {
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
       targetFiles: Int = 32): Unit =
-    compactMaintainerLog(spark, stateDir, s"$stateDir/counts/applied",
+    compactMaintainerLog(spark, stateDir, s"$stateDir/counts",
       targetFiles)
 
   /** [[compactMaintainerLog]] for [[maintainCommunityLabels]] state
@@ -1454,7 +1477,7 @@ object Graph {
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
       targetFiles: Int = 32): Unit =
-    compactMaintainerLog(spark, stateDir, s"$stateDir/labels/applied",
+    compactMaintainerLog(spark, stateDir, s"$stateDir/labels",
       targetFiles)
 
   /** The maintained triangle counts as a frame (`node`, `tri_cnt`);
@@ -1463,9 +1486,7 @@ object Graph {
   def readTriangleCounts(
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNotLegacyCountsLayout(fs, s"$stateDir/counts")
+    requireNotLegacyCountsLayout(spark, s"$stateDir/counts")
     Incremental.readCountsPartitioned(
       spark, s"$stateDir/counts", Seq("node"), "tri_cnt")
   }
@@ -1536,8 +1557,9 @@ object Graph {
     *    set, so steady-state maintenance I/O is ball-sized, never
     *    node-sized), with `labels/applied/batch=<id>` the commit marker.
     *
-    * Batch flow: canonicalize, dedupe against the prior log, land the
-    * edge delta, refresh labels — the FIRST batch runs the cold
+    * Batch flow ([[edgeLogBatch]], the triangle maintainer's protocol):
+    * canonicalize, dedupe against the prior log, land the edge delta
+    * while the labels refresh — the FIRST batch runs the cold
     * fixed-round [[communityLabels]]; later batches route through the
     * auto-dispatcher (cone refresh when the 2k-ball stays delta-local,
     * cold otherwise — both exact, so the state equals the cold
@@ -1575,103 +1597,46 @@ object Graph {
       rounds: Int,
       partitions: Int = 64,
       sign: Long = 1L): Boolean = {
-    import org.apache.hadoop.fs.Path
     require(rounds >= 1)
-    require(sign == 1L || sign == -1L, "sign must be +1 (inserts) or -1 (deletes)")
     val labelsDir = s"$stateDir/labels"
-    val edgesDir = s"$stateDir/edges"
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val labelsApplied = fs.exists(new Path(s"$labelsDir/applied/batch=$batchId"))
-    val doneMarker = new Path(s"$stateDir/deletes_done/batch=$batchId")
-    if (sign == 1L && labelsApplied) return false
-    if (sign == -1L && labelsApplied && fs.exists(doneMarker)) return false
-    IndexLayout.compactedThrough(spark, s"$stateDir/compacted").foreach(t =>
-      require(batchId > t,
-        s"batch $batchId was consumed by a log compaction (through=$t) " +
-          "— maintenance must resume above it"))
-    Incremental.pinnedPartitions(spark, labelsDir).foreach(p =>
-      require(p == partitions,
-        s"label table at $labelsDir was built with partitions=$p; " +
-          s"refusing to upsert with partitions=$partitions"))
-    val canon = canonicalEdges(edgeBatchHalf)
-    val oldOpt = edgesBefore(spark, edgesDir, batchId)
-    if (sign == 1L) Checkpoints.scoped {
-      // the scope releases the delta pin and the refresh result
-      val delta = oldOpt.map(old => canon.join(old, Seq("src", "dst"), "left_anti"))
-        .getOrElse(canon)
-        .checkpointed() // consumed by the log write, the router, the union
-      val after = oldOpt.map(_.unionAll(delta)).getOrElse(delta)
-      if (!delta.isEmpty)
-        IndexLayout.overwriteBatchPartitions(
-          delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
-      val oldLabels =
-        Incremental.readCountsPartitioned(spark, labelsDir, Seq("node"), "label")
-      val fresh = oldLabels match {
-        case None => communityLabels(after, "src", "dst", rounds)
-        case Some(old) => communityLabelsRefreshAuto(after, "src", "dst",
-          rounds, old, delta).result
-      }
-      // only CHANGED assignments upsert — ball-sized under the cone route
-      val changed = oldLabels match {
-        case None => fresh
-        case Some(old) => fresh.exceptAll(old)
-      }
-      Incremental.upsertPartitioned(spark, labelsDir,
-        changed.select(col("node"), col("label")),
-        Seq("node"), "label", partitions, batchId)
-    } else {
-      val delDir = s"$stateDir/deletes/batch=$batchId"
-      val nothingResolved = !labelsApplied && Checkpoints.scoped {
-        val resolved = oldOpt
-          .map(old => canon.join(old, Seq("src", "dst"), "left_semi"))
-          .getOrElse(canon.limit(0))
-          .checkpointed() // consumed by the delete-set write + refresh
-        if (resolved.isEmpty) {
-          // nothing matched the log (a re-issued GDPR batch, or edges
-          // that never existed): the surviving log IS the old log and
-          // by the maintained invariant the stored labels already
-          // equal its cold recompute — commit the marker without
-          // paying a whole-graph fixed-round pass (r17 review)
-          Incremental.upsertPartitioned(spark, labelsDir,
-            canon.select(col("src").as("node"), col("src").as("label"))
-              .limit(0),
-            Seq("node"), "label", partitions, batchId)
-          true
-        } else {
-          resolved.write.mode("overwrite").parquet(delDir)
-          val surviving = oldOpt
-            .map(_.join(resolved, Seq("src", "dst"), "left_anti"))
-            .getOrElse(resolved.limit(0))
-            .checkpointed() // consumed by emptiness probe + recompute
-          val oldLabels = Incremental.readCountsPartitioned(
-            spark, labelsDir, Seq("node"), "label")
-          // label deletions are non-local: COLD fixed-round recompute
-          // over the surviving log (the dispatcher's cold arm — a cone
-          // cannot bound a removal's influence); the empty frame is free
-          val fresh =
-            if (surviving.isEmpty)
-              surviving.select(col("src").as("node"), col("src").as("label"))
-            else communityLabels(surviving, "src", "dst", rounds)
-          val changed = oldLabels match {
-            case None => fresh
-            case Some(old) => fresh.exceptAll(old)
+    edgeLogBatch(spark, stateDir, labelsDir, edgeBatchHalf, batchId, partitions, sign) {
+      (before, batch) =>
+        // the scope releases the refresh result and the surviving log
+        val oldLabels =
+          Incremental.readCountsPartitioned(spark, labelsDir, Seq("node"), "label")
+        val (fresh, vanished) =
+          if (sign == 1L) {
+            val after = before.map(_.unionAll(batch)).getOrElse(batch)
+            (oldLabels match {
+              case None => communityLabels(after, "src", "dst", rounds)
+              case Some(old) => communityLabelsRefreshAuto(after, "src", "dst",
+                rounds, old, batch).result
+            }, None)
+          } else {
+            val surviving = before
+              .map(_.join(batch, Seq("src", "dst"), "left_anti"))
+              .getOrElse(batch.limit(0))
+              .checkpointed() // consumed by emptiness probe + recompute
+            // label deletions are non-local: COLD fixed-round recompute
+            // over the surviving log (the dispatcher's cold arm — a cone
+            // cannot bound a removal's influence); the empty frame is free
+            val f =
+              if (surviving.isEmpty)
+                surviving.select(col("src").as("node"), col("src").as("label"))
+              else communityLabels(surviving, "src", "dst", rounds)
+            // a node that lost its last edge leaves the label table —
+            // a stale row would diverge from the cold recompute forever
+            (f, oldLabels.map(_.select(col("node"))
+              .join(f.select(col("node")), Seq("node"), "left_anti")))
           }
-          // a node that lost its last edge leaves the label table —
-          // a stale row would diverge from the cold recompute forever
-          val vanished = oldLabels.map(_.select(col("node"))
-            .join(fresh.select(col("node")), Seq("node"), "left_anti"))
-          Incremental.upsertPartitioned(spark, labelsDir,
-            changed.select(col("node"), col("label")),
-            Seq("node"), "label", partitions, batchId,
-            dropKeys = vanished)
-          false
-        }
-      }
-      if (nothingResolved) { fs.mkdirs(doneMarker); return true }
-      deleteFromEdgeLog(spark, edgesDir, delDir)
-      fs.mkdirs(doneMarker)
-      true
+        // only CHANGED assignments upsert — ball-sized under the cone route
+        (oldLabels.map(fresh.exceptAll).getOrElse(fresh), vanished)
+    } { folded =>
+      Incremental.upsertPartitioned(spark, labelsDir,
+        folded.map(_._1).getOrElse(edgeBatchHalf.select(col("src").as("node"),
+          col("src").as("label")).limit(0)).select(col("node"), col("label")),
+        Seq("node"), "label", partitions, batchId,
+        dropKeys = folded.flatMap(_._2))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.CoreOps
@@ -425,6 +425,23 @@ object Incremental {
         s.stripPrefix("partitions=").toInt }
   }
 
+  /** Fail fast when the keyed-state table at `stateDir` was built with
+    * another partition modulus than `partitions`; true when a modulus is
+    * pinned. Composing maintainers call it BEFORE writing their own state
+    * (the graph maintainers' edge logs), the batch itself before its
+    * rewrite.
+    */
+  private[functions] def requirePinnedPartitions(
+      spark: org.apache.spark.sql.SparkSession,
+      stateDir: String,
+      partitions: Int): Boolean = {
+    val pinned = pinnedPartitions(spark, stateDir)
+    pinned.foreach(p => require(p == partitions,
+      s"state table at $stateDir was built with partitions=$p; " +
+        s"refusing to maintain it with partitions=$partitions"))
+    pinned.nonEmpty
+  }
+
   /** True when a partitioned state directory holds live data slices —
     * an all-cancelling batch can empty a table to a bare `_SUCCESS`,
     * which breaks schema inference on a naive read. Shared by the merge,
@@ -497,29 +514,8 @@ object Incremental {
       keys: Seq[String],
       cnt: String,
       partitions: Int,
-      batchId: Long): Boolean = {
-    import org.apache.hadoop.fs.Path
-    require(partitions >= 1)
-    val dataDir = s"$stateDir/data"
-    val marker = new Path(s"$stateDir/applied/batch=$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return false
-    // `partitions` is baked into every stored __p value, so a caller
-    // passing a different P than the table was built with would prune
-    // the wrong slices and strand stale rows under the old modulus —
-    // silently wrong counts. Pin P in a meta marker on the first batch
-    // and fail fast on any later mismatch.
-    pinnedPartitions(spark, stateDir) match {
-      case Some(p) => require(p == partitions,
-        s"count table at $stateDir was built with partitions=$p; " +
-          s"refusing to merge with partitions=$partitions")
-      case None =>
-        fs.mkdirs(new Path(s"$stateDir/meta/partitions=$partitions"))
-    }
-    val part = pmod(xxhash64(keys.map(col): _*), lit(partitions)).as("__p")
-    // the scope releases the delta pin on return (a days-long maintainer
-    // stream would otherwise grow one block set per micro-batch)
-    Checkpoints.scoped {
+      batchId: Long): Boolean =
+    keyedStateBatch(spark, stateDir, keys, partitions, batchId) { part =>
       // pre-aggregate the delta to one row per key BEFORE the merge (the
       // delta may carry repeats), then pin it: it is consumed twice
       // (affected-partition listing, merge)
@@ -528,28 +524,13 @@ object Incremental {
         .filter(col(cnt) =!= 0)
         .select(col("*"), part)
         .checkpointed()
-      val affected = deltaAgg.select(col("__p")).distinct()
-        .collect().map(r => Seq(r.getLong(0).toString)) // bounded by `partitions`, never key-sized
-      // empty or fully-cancelling delta (streaming routinely delivers
-      // empty micro-batches): writing an empty frame would create a
-      // schemaless data/ dir that poisons every later read — commit the
-      // marker and touch nothing
-      if (affected.nonEmpty)
-        // state exists only when actual partition data survives — an
-        // all-cancelling batch can empty the table to a bare _SUCCESS,
-        // and reading that fails with "unable to infer schema"
-        IndexLayout.rewritePartitions(spark, dataDir, Seq("__p"), affected,
-          Option.when(hasLivePartitions(spark, dataDir, "__p="))(
-            IndexLayout.readTable(spark, dataDir))) { slice =>
-          val merged = slice.fold(deltaAgg.drop("__p"))(s =>
-            mergeCounts(s.select((keys :+ cnt).map(col): _*), deltaAgg.drop("__p"), keys, cnt))
-          // re-derive __p (a pure function of the keys) for the write
-          merged.select(col("*"), part)
-        }
-      fs.mkdirs(marker)
-      true
+      (deltaAgg, { slice =>
+        val merged = slice.fold(deltaAgg.drop("__p"))(s =>
+          mergeCounts(s.select((keys :+ cnt).map(col): _*), deltaAgg.drop("__p"), keys, cnt))
+        // re-derive __p (a pure function of the keys) for the write
+        merged.select(col("*"), part)
+      })
     }
-  }
 
   /** UPSERT sibling of [[mergeCountsPartitioned]] for NON-monoid state
     * (label assignments, latest-value tables): the batch's rows REPLACE
@@ -580,23 +561,8 @@ object Incremental {
       valCol: String,
       partitions: Int,
       batchId: Long,
-      dropKeys: Option[DataFrame] = None): Boolean = {
-    import org.apache.hadoop.fs.Path
-    require(partitions >= 1)
-    val dataDir = s"$stateDir/data"
-    val marker = new Path(s"$stateDir/applied/batch=$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return false
-    pinnedPartitions(spark, stateDir) match {
-      case Some(p) => require(p == partitions,
-        s"state table at $stateDir was built with partitions=$p; " +
-          s"refusing to upsert with partitions=$partitions")
-      case None =>
-        fs.mkdirs(new Path(s"$stateDir/meta/partitions=$partitions"))
-    }
-    val part = pmod(xxhash64(keys.map(col): _*), lit(partitions)).as("__p")
-    // the scope releases the delta and drop pins on return
-    Checkpoints.scoped {
+      dropKeys: Option[DataFrame] = None): Boolean =
+    keyedStateBatch(spark, stateDir, keys, partitions, batchId) { part =>
       val delta = rows.select((keys :+ valCol).map(col): _*)
         .select(col("*"), part)
         .checkpointed() // consumed by the dup check, listing, and merge
@@ -615,28 +581,90 @@ object Incremental {
             "— a contradictory batch would make the outcome an accident " +
             "of evaluation order")
       }
-      val affected = (delta.select(col("__p")) +:
-        drops.map(_.select(col("__p"))).toSeq)
-        .reduce(_.unionAll(_)).distinct()
-        .collect().map(r => Seq(r.getLong(0).toString)) // bounded by `partitions`
       // a slice fully emptied by drops has its directory removed by the
       // rewrite, or the dropped rows would silently survive
+      ((delta.select(col("__p")) +: drops.map(_.select(col("__p"))).toSeq)
+          .reduce(_.unionAll(_)),
+        _.fold(delta) { s =>
+          val survivors0 = s.select((keys :+ valCol).map(col): _*)
+            .join(delta.select(keys.map(col): _*), keys, "left_anti")
+          drops.fold(survivors0)(dr =>
+              survivors0.join(dr.select(keys.map(col): _*), keys, "left_anti"))
+            .select(col("*"), part)
+            .unionByName(delta)
+        })
+    }
+
+  /** The commit protocol of a keyed-state batch, shared by
+    * [[mergeCountsPartitioned]] and [[upsertPartitioned]]: the replay
+    * check on the batch's applied marker, the partition-modulus pin, the
+    * `__p` hash of the keys, and — inside one checkpoint scope — the
+    * affected-partition collect, the copy-on-write rewrite of those
+    * partitions over the live table ([[IndexLayout.rewritePartitions]])
+    * and the marker write that commits the batch. `stage(part)` pins the
+    * batch's rows and returns a frame carrying `__p` for every partition
+    * the batch touches, plus the merge of an affected slice (None while
+    * the table holds no live partition) into the rows to write.
+    */
+  private def keyedStateBatch(
+      spark: org.apache.spark.sql.SparkSession,
+      stateDir: String,
+      keys: Seq[String],
+      partitions: Int,
+      batchId: Long)(
+      stage: Column => (DataFrame, Option[DataFrame] => DataFrame)): Boolean = {
+    import org.apache.hadoop.fs.Path
+    require(partitions >= 1)
+    if (isApplied(spark, stateDir, batchId)) return false
+    val dataDir = s"$stateDir/data"
+    val marker = appliedMarker(stateDir, batchId.toString)
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // `partitions` is baked into every stored __p value, so a caller
+    // passing a different P than the table was built with would prune
+    // the wrong slices and strand stale rows under the old modulus —
+    // silently wrong state. Pin P in a meta marker on the first batch
+    // and fail fast on any later mismatch.
+    if (!requirePinnedPartitions(spark, stateDir, partitions))
+      fs.mkdirs(new Path(s"$stateDir/meta/partitions=$partitions"))
+    val part = pmod(xxhash64(keys.map(col): _*), lit(partitions)).as("__p")
+    // the scope releases the batch's pins on return (a days-long
+    // maintainer stream would otherwise grow one block set per batch)
+    Checkpoints.scoped {
+      val (touched, merge) = stage(part)
+      val affected = touched.select(col("__p")).distinct()
+        .collect().map(r => Seq(r.getLong(0).toString)) // bounded by `partitions`, never key-sized
+      // an empty or fully-cancelling batch (streaming routinely delivers
+      // empty micro-batches) writes nothing: an empty frame would create
+      // a schemaless data/ dir that poisons every later read — commit
+      // the marker and touch nothing
       if (affected.nonEmpty)
+        // state exists only when actual partition data survives — an
+        // all-cancelling batch can empty the table to a bare _SUCCESS,
+        // and reading that fails with "unable to infer schema"
         IndexLayout.rewritePartitions(spark, dataDir, Seq("__p"), affected,
           Option.when(hasLivePartitions(spark, dataDir, "__p="))(
-            IndexLayout.readTable(spark, dataDir))) {
-          _.fold(delta) { s =>
-            val survivors0 = s.select((keys :+ valCol).map(col): _*)
-              .join(delta.select(keys.map(col): _*), keys, "left_anti")
-            drops.fold(survivors0)(dr =>
-                survivors0.join(dr.select(keys.map(col): _*), keys, "left_anti"))
-              .select(col("*"), part)
-              .unionByName(delta)
-          }
-        }
+            IndexLayout.readTable(spark, dataDir)))(merge)
       fs.mkdirs(marker)
       true
     }
+  }
+
+  /** `<stateDir>/applied/batch=<id>`: the marker that commits batch `id`
+    * of a keyed-state table (`id` = "*" globs every marker). The one
+    * place the marker path is built.
+    */
+  private[functions] def appliedMarker(stateDir: String, id: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"$stateDir/applied/batch=$id")
+
+  /** True when batch `batchId` of the keyed-state table at `stateDir` is
+    * committed (its [[appliedMarker]] exists): a replay of it is a no-op.
+    */
+  private[functions] def isApplied(
+      spark: org.apache.spark.sql.SparkSession,
+      stateDir: String,
+      batchId: Long): Boolean = {
+    val marker = appliedMarker(stateDir, batchId.toString)
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
   }
 
   /** Streaming maintainer for the [[mergeCountsPartitioned]] state table

@@ -183,6 +183,26 @@ private[graft] object IndexLayout {
       .filter(_.nonEmpty).map(_.max)
   }
 
+  /** The batch id an append or maintainer batch lands under: `explicit`,
+    * else one above the largest `batch=<id>` under `root`
+    * ([[maxBatchId]]). An id at or below the compaction bound under
+    * `markerRoot` ([[compactedThrough]]) is refused: its rows already
+    * live in the compacted batch, so landing it again would silently
+    * duplicate them. `compaction` names the compaction in the message.
+    */
+  private[functions] def allocateBatchId(
+      spark: SparkSession,
+      explicit: Option[Long],
+      root: String,
+      markerRoot: String,
+      compaction: String): Long = {
+    val id = explicit.getOrElse(maxBatchId(spark, root) + 1)
+    compactedThrough(spark, markerRoot).foreach(t => require(id > t,
+      s"batch $id was consumed by a $compaction (through=$t) — a replay " +
+        "here would duplicate its rows; writes must resume above it"))
+    id
+  }
+
   /** Record `through` as the compaction bound (rotate: write the new
     * marker BEFORE removing older ones, so the guard never lapses).
     */

@@ -1482,9 +1482,6 @@ object LlmQueries {
         .orderBy("media_id")
     })
 
-  /** Contamination oracle — shared verbatim by `contamination` and
-    * `contamination_bloom` (the bloom prefilter is output-invariant).
-    */
   /** Contamination candidate CTEs ending in `p(doc_id, bench_id, inter)`
     * and `nbt(bench_id, nb)` — shared by the pair report and the
     * decontaminated keep-list.
@@ -1502,6 +1499,9 @@ object LlmQueries {
               FROM rare c JOIN rare b ON c.g = b.g
               WHERE NOT c.is_bench AND b.is_bench GROUP BY 1, 2)"""
 
+  /** Contamination oracle — shared verbatim by `contamination` and
+    * `contamination_bloom` (the bloom prefilter is output-invariant).
+    */
   private def contaminationOracleSql: String =
     s"""WITH $contaminationCtes
         SELECT doc_id, bench_id, inter, nb,

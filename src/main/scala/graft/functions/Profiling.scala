@@ -25,13 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Profiling {
 
-  /** Profile `columns` of `df` in one aggregate pass.
-    *
-    * @param columns (name, kind) pairs; kind ∈ long | string |
-    *                double_centi | ts_us (see object doc for the repr)
-    * @return one row per profiled column:
-    *         (column, n_rows, n_nulls, n_distinct, min_repr, max_repr)
-    */
   /** Portable min/max rendering per declared kind (see object doc).
     * NTZ-safe for `ts_us`: parquet may surface the column as
     * TIMESTAMP_NTZ; the cast is an identity under the engine's pinned
@@ -46,6 +39,13 @@ object Profiling {
       throw new IllegalArgumentException(s"unknown profile kind: $other")
   }
 
+  /** Profile `columns` of `df` in one aggregate pass.
+    *
+    * @param columns (name, kind) pairs; kind ∈ long | string |
+    *                double_centi | ts_us (see object doc for the repr)
+    * @return one row per profiled column:
+    *         (column, n_rows, n_nulls, n_distinct, min_repr, max_repr)
+    */
   def tableProfile(df: DataFrame, columns: Seq[(String, String)]): DataFrame = {
     val aggs: Seq[Column] = columns.flatMap { case (c, kind) =>
       Seq(

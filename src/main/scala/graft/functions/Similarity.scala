@@ -186,14 +186,8 @@ object Similarity {
       path: String,
       batchId: Option[Long] = None): Unit = {
     val q8 = quantizeInt8(col("vec"))
-    val id = batchId.getOrElse(
-      IndexLayout.maxBatchId(newVecs.sparkSession, path) + 1)
-    // a compaction consumed batches <= through: a replay would duplicate
-    // its rows beside the compacted copy — fail loudly instead
-    IndexLayout.compactedThrough(newVecs.sparkSession, s"$path.meta/compacted")
-      .foreach(t => require(id > t,
-        s"batch $id was consumed by a compaction (through=$t) — a replay " +
-          "here would duplicate its rows; appends must resume above it"))
+    val id = IndexLayout.allocateBatchId(newVecs.sparkSession, batchId, path,
+      s"$path.meta/compacted", "compaction")
     IndexLayout.overwriteBatchPartitions(
       newVecs.select(col("vec_id"),
           q8.getField("scale").as("scale"), q8.getField("q").as("code"))
@@ -398,19 +392,6 @@ object Similarity {
         col("am.d_q6").as("d_q6"))
   }
 
-  /** Asymmetric-distance (ADC) top-k over a PQ-coded corpus: the query
-    * stays in float space; per (subspace, codebook entry) squared-L2
-    * partials are precomputed into a tiny distance table, and each
-    * corpus vector's estimated distance is the INTEGER sum of its m
-    * table lookups. Returns the k nearest (smallest estimated distance,
-    * ties to the lower vec_id) per query.
-    *
-    * Plan shape for 100 TB: scans ONLY the codes table (m BIGINTs per
-    * vector), broadcast-joins the queries x m x k distance table, and
-    * partial-aggregates the integer sums — the float corpus is never
-    * read at query time. That is the PQ payoff: the hot scan shrinks
-    * from dim floats to m codes per vector.
-    */
   /** Per-subspace PQ codebook `(cid, j, cv)` — the seed vectors'
     * subvectors, shared by [[pqEncode]]'s callers ([[adcTopK]],
     * [[ivfPqTopK]]).
@@ -439,6 +420,19 @@ object Similarity {
   private def adcRank(scored: DataFrame, k: Int): DataFrame =
     topKByPair(scored, negate = false, "adc_q6", k)
 
+  /** Asymmetric-distance (ADC) top-k over a PQ-coded corpus: the query
+    * stays in float space; per (subspace, codebook entry) squared-L2
+    * partials are precomputed into a tiny distance table, and each
+    * corpus vector's estimated distance is the INTEGER sum of its m
+    * table lookups. Returns the k nearest (smallest estimated distance,
+    * ties to the lower vec_id) per query.
+    *
+    * Plan shape for 100 TB: scans ONLY the codes table (m BIGINTs per
+    * vector), broadcast-joins the queries x m x k distance table, and
+    * partial-aggregates the integer sums — the float corpus is never
+    * read at query time. That is the PQ payoff: the hot scan shrinks
+    * from dim floats to m codes per vector.
+    */
   def adcTopK(
       queries: DataFrame,
       corpus: DataFrame,
@@ -672,12 +666,8 @@ object Similarity {
     val base = withNorm(baseCorpus, "vec", "v")
     val centroids = seedCentroids(base, centroidEvery)
     val cells = cellAssign(c, centroids).withColumnRenamed("cid", "cell")
-    val id = batchId.getOrElse(
-      IndexLayout.maxBatchId(newVecs.sparkSession, path) + 1)
-    IndexLayout.compactedThrough(newVecs.sparkSession, s"$path.meta/compacted")
-      .foreach(t => require(id > t,
-        s"batch $id was consumed by a compaction (through=$t) — a replay " +
-          "here would duplicate its rows; appends must resume above it"))
+    val id = IndexLayout.allocateBatchId(newVecs.sparkSession, batchId, path,
+      s"$path.meta/compacted", "compaction")
     IndexLayout.overwriteBatchPartitions(
       pqEncodeWith(newVecs, baseCorpus, centroidEvery, m, dim)
         .select(col("vec_id"), col("j"), col("code"))
@@ -1014,22 +1004,6 @@ object Similarity {
       .orderBy(col("rrf_score").desc, col("id"))
       .limit(topK)
 
-  /** SemDeDup (Abbas et al., 2023, arXiv:2303.09540): semantic dedup by
-    * clustering the embedding space and pruning near-duplicates ONLY
-    * within each cluster — the trick that makes embedding-level dedup
-    * tractable at corpus scale. The all-pairs form is O(n^2) in the
-    * corpus; here the pairwise join is confined to cluster cells, so the
-    * cost is sum over clusters of |cell|^2 — with k-means-balanced cells
-    * (cell ~ n/k), that is n^2/k, and k grows with the corpus.
-    *
-    * Per vector: assign to its nearest centroid (same broadcast +
-    * max(struct) argmax as the IVF probe path — one thin shuffled row per
-    * vector), self-join within the cell on (cid, a < b), and mark the
-    * LARGER id of every pair scoring >= `minScoreQ4` as a duplicate. The
-    * kept set is then the per-group minimum representative, matching the
-    * exact-dedup keep-min convention. Output: (vec_id, cid, keep 0/1) —
-    * one row per input vector, so downstream filters compose.
-    */
   /** D4-style semantic diversity sampling (Tirumala et al. 2023,
     * arXiv:2308.12284 — after SemDeDup, drop the most PROTOTYPICAL
     * points per cluster, i.e. those closest to their centroid, to
@@ -1067,6 +1041,22 @@ object Similarity {
             col("rn") === 1L, lit(1L)).otherwise(lit(0L)).as("keep"))
   }
 
+  /** SemDeDup (Abbas et al., 2023, arXiv:2303.09540): semantic dedup by
+    * clustering the embedding space and pruning near-duplicates ONLY
+    * within each cluster — the trick that makes embedding-level dedup
+    * tractable at corpus scale. The all-pairs form is O(n^2) in the
+    * corpus; here the pairwise join is confined to cluster cells, so the
+    * cost is sum over clusters of |cell|^2 — with k-means-balanced cells
+    * (cell ~ n/k), that is n^2/k, and k grows with the corpus.
+    *
+    * Per vector: assign to its nearest centroid (same broadcast +
+    * max(struct) argmax as the IVF probe path — one thin shuffled row per
+    * vector), self-join within the cell on (cid, a < b), and mark the
+    * LARGER id of every pair scoring >= `minScoreQ4` as a duplicate. The
+    * kept set is then the per-group minimum representative, matching the
+    * exact-dedup keep-min convention. Output: (vec_id, cid, keep 0/1) —
+    * one row per input vector, so downstream filters compose.
+    */
   def semDedupKeep(
       corpus: DataFrame,
       centroids: DataFrame,

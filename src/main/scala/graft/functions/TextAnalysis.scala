@@ -317,15 +317,8 @@ object TextAnalysis {
     // one count serves the empty check and the stats row's n
     val n = df.count()
     if (n == 0L) return // nothing to land; keeps empty micro-batches free
-    val id = batchId.getOrElse(
-      IndexLayout.maxBatchId(spark, s"$path/postings") + 1)
-    // a compaction consumed batches <= through: a replay of one would
-    // re-write batch partitions whose rows already live in the compacted
-    // batch — silent duplication; fail loudly instead
-    IndexLayout.compactedThrough(spark, s"$path/compacted").foreach(t =>
-      require(id > t,
-        s"batch $id was consumed by a compaction (through=$t) — a replay " +
-          "here would duplicate its rows; appends must resume above it"))
+    val id = IndexLayout.allocateBatchId(spark, batchId, s"$path/postings",
+      s"$path/compacted", "compaction")
     IndexLayout.overwriteBatchPartitions(
       postingsOf(df, textCol, idCol, buckets, id),
       s"$path/postings", Seq("bucket", "batch"))

@@ -465,6 +465,42 @@ class SurfaceLintSpec extends AnyFunSuite {
         .map(m => s"$p:${raw.substring(0, m.start).count(_ == '\n') + 1}")
     }.sorted
 
+  /** The defs that build the commit-marker paths of the maintained-state
+    * protocols, by file and name: every protocol step reaches a marker
+    * through them.
+    */
+  private val markerOwners = Seq("Incremental.scala" -> "appliedMarker", "Graph.scala" -> "deletesDone")
+
+  /** Commit-marker paths (`applied/batch=`, `deletes_done/`) in the raw
+    * sources `src`, as "file:line", outside the bodies of the
+    * [[markerOwners]]: each is a second place a marker path is built, so
+    * a change to the protocol's layout could miss it. Comments do not
+    * count; string literals do, since the paths are built in them.
+    */
+  private def markerPathsIn(src: Map[Path, String]): Seq[String] =
+    src.toSeq.flatMap { case (p, raw) =>
+      val c = stripComments(raw)
+      val owners = markerOwners.filter { case (file, _) => p.endsWith(file) }.flatMap { case (_, name) =>
+        s"""\\bdef\\s+$name\\b""".r.findAllMatchIn(c).map(m => m.start until defEnd(c, m.start))
+      }
+      """applied/batch=|deletes_done/""".r.findAllMatchIn(c)
+        .filterNot(m => owners.exists(_.contains(m.start)))
+        .map(m => s"$p:${raw.substring(0, m.start).count(_ == '\n') + 1}")
+    }.sorted
+
+  /** Scaladoc blocks stacked directly on another comment block in the raw
+    * sources `src`, as "file:line" of the second block: the first
+    * describes a def it does not sit on, which then has no doc.
+    */
+  private def stackedDocsIn(src: Map[Path, String]): Seq[String] =
+    src.toSeq.flatMap { case (p, raw) =>
+      """\*/\s*(/\*\*)""".r.findAllMatchIn(raw)
+        .map(m => s"$p:${raw.substring(0, m.start(1)).count(_ == '\n') + 1}")
+    }.sorted
+
+  private lazy val mainSources: Map[Path, String] =
+    scalaFiles(Paths.get("src/main/scala")).map(p => p -> Files.readString(p)).toMap
+
   /** Where every table read must go through the opener. */
   private val openerScope = Seq("functions", "sinks").map(d => Paths.get(s"src/main/scala/graft/$d"))
 
@@ -559,11 +595,10 @@ class SurfaceLintSpec extends AnyFunSuite {
   }
 
   test("the dynamic partition overwrite is set only by IndexLayout.overwriteBatchPartitions") {
-    val src = scalaFiles(Paths.get("src/main/scala")).map(p => p -> Files.readString(p)).toMap
-    assert(src.exists { case (p, c) =>
+    assert(mainSources.exists { case (p, c) =>
       p.endsWith("IndexLayout.scala") && stripComments(c).contains("\"partitionOverwriteMode\"")
     }, "the scan found no writer")
-    val uses = overwriteModesIn(src)
+    val uses = overwriteModesIn(mainSources)
     assert(uses.isEmpty,
       "partitionOverwriteMode outside IndexLayout.overwriteBatchPartitions; write through " +
         "it (or IndexLayout.rewritePartitions), never the session conf:\n" + uses.mkString("\n"))
@@ -586,6 +621,61 @@ class SurfaceLintSpec extends AnyFunSuite {
           |}""".stripMargin)
     assert(overwriteModesIn(files.map { case (p, c) => Paths.get(p) -> c }) ===
       Seq("f/IndexLayout.scala:5", "f/U.scala:4"))
+  }
+
+  test("commit-marker paths are built only by Incremental.appliedMarker and Graph.deletesDone") {
+    assert(markerOwners.forall { case (file, name) =>
+      mainSources.exists { case (p, c) => p.endsWith(file) && c.contains(s"def $name(") }
+    }, "the scan found no marker owner")
+    val built = markerPathsIn(mainSources)
+    assert(built.isEmpty,
+      "applied/batch= or deletes_done/ paths built outside their owner defs; reach the " +
+        "marker through Incremental.appliedMarker or Graph.deletesDone:\n" + built.mkString("\n"))
+  }
+
+  test("lint self-check: the marker scan keeps strings, skips comments and the owners") {
+    val files = Map(
+      "f/Incremental.scala" ->
+        """object Incremental {
+          |  /** `<dir>/applied/batch=<id>` */
+          |  private[f] def appliedMarker(dir: String, id: String): P =
+          |    new P(s"$dir/applied/batch=$id")
+          |  def check(fs: F, dir: String): Boolean = fs.exists(new P(s"$dir/applied/batch=1"))
+          |}""".stripMargin,
+      "f/Graph.scala" ->
+        """object Graph {
+          |  private def deletesDone(dir: String, id: String): P =
+          |    new P(s"$dir/deletes_done/batch=$id")
+          |  // fs.mkdirs(new P(s"$dir/deletes_done/batch=1"))
+          |  def glob(dir: String): P = new P(dir + "/deletes_done/" + "*")
+          |}""".stripMargin)
+    assert(markerPathsIn(files.map { case (p, c) => Paths.get(p) -> c }) ===
+      Seq("f/Graph.scala:5", "f/Incremental.scala:5"))
+  }
+
+  test("every scaladoc block sits on its own def, not on another comment block") {
+    assert(mainSources.values.exists(_.contains("*/")), "the scan found no comment")
+    val stacked = stackedDocsIn(mainSources)
+    assert(stacked.isEmpty,
+      "scaladoc blocks stacked on another comment block; move the upper one onto the def " +
+        "it describes:\n" + stacked.mkString("\n"))
+  }
+
+  test("lint self-check: the stacked-doc scan") {
+    val src =
+      """object O {
+        |  /** doc of b */
+        |  /** doc of a */
+        |  def a = 1
+        |  /* a note */
+        |
+        |  /** doc of c */
+        |  def c = 1
+        |  /** doc of d */
+        |  // a line comment
+        |  def d = 1
+        |}""".stripMargin
+    assert(stackedDocsIn(Map(Paths.get("f/O.scala") -> src)) === Seq("f/O.scala:3", "f/O.scala:7"))
   }
 
   test("lint self-check: the stripper and the def scanner") {
