@@ -23,6 +23,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - A checkpoint made with no scope open, or escaping the outermost
   *    one, is the caller's, released with [[unpersist]].
   *  - A scope that exits by an exception releases everything it owns.
+  *  - A round loop runs in [[iterate]], a scope that also releases its
+  *    superseded rounds.
   *  - Units of work open a scope (each foreachBatch body, Verify query,
   *    Bench row and run, test), so state a callback keeps past its batch
   *    must be materialized by the callback (its own raw checkpoint).
@@ -65,11 +67,40 @@ private[graft] object Checkpoints {
         throw t
       }
     open.set(outer)
-    val kept = reached(result)
-    val (pass, drop) = scope.partition { case (id, _) => kept(id) }
-    drop.values.foreach(_.unpersist(blocking = false))
-    outer.headOption.foreach(_ ++= pass)
+    releaseUnreached(scope, result)
+    outer.headOption.foreach(_ ++= scope)
     result
+  }
+
+  /** A round loop in a scope of its own: `state = step(state, round)` for
+    * rounds 1, 2, ... while rounds remain and `!done(state)` (the cap is
+    * tested first, so a spent budget runs no convergence job). Returns the
+    * final state and the rounds run. After every round it releases each
+    * checkpoint the loop (`init` included) made that the state no longer
+    * reaches, so a superseded round goes at once while a lazy state keeps
+    * what it derives from; checkpoints made before the call are never
+    * touched. A step carries in its state all that later rounds or the
+    * caller read, its convergence facts (a changed count, a flag) included.
+    */
+  def iterate[S](init: => S, maxRounds: Int)(done: S => Boolean)(step: (S, Int) => S): (S, Int) =
+    scoped {
+      val loop = open.get.head
+      var state = init
+      var round = 0
+      while (round < maxRounds && !done(state)) {
+        round += 1
+        state = step(state, round)
+        releaseUnreached(loop, state)
+      }
+      (state, round)
+    }
+
+  /** Release, and drop from `scope`, what it owns that `result` does not reach. */
+  private def releaseUnreached(scope: mutable.LinkedHashMap[Int, RDD[_]], result: Any): Unit = {
+    val kept = reached(result)
+    val drop = scope.filter { case (id, _) => !kept(id) }
+    drop.values.foreach(_.unpersist(blocking = false))
+    scope --= drop.keys
   }
 
   /** Ids of the RDDs `result`'s frames scan, with their dependencies. */
@@ -112,9 +143,9 @@ private[graft] object Checkpoints {
     strip(df.queryExecution.logical)
   }
 
-  /** Release `df`'s checkpoint now: a loop's superseded round, or a
-    * caller-owned frame. One an ENCLOSING scope owns is left to it, so a
-    * nested scope never frees its caller's blocks.
+  /** Release `df`'s checkpoint now: a caller-owned frame (a round loop's
+    * superseded rounds go through [[iterate]]). One an ENCLOSING scope
+    * owns is left to it, so a nested scope never frees its caller's blocks.
     */
   def unpersist(df: DataFrame): Unit = rddOf(df).foreach { r =>
     val scopes = open.get

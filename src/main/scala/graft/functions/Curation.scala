@@ -1225,12 +1225,13 @@ object Curation {
         .repartition(p.toInt, col("dst"))
         .checkpointed()
     }
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .checkpointed()
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
+    // the state is (labels, converged); the changed-count materializes
+    // the round, so the previous one goes and storage stays flat
+    val ((labels, converged), _) = Checkpoints.iterate(
+        (edges.select(col("src").as("node")).distinct()
+          .withColumn("label", col("node"))
+          .checkpointed(), false),
+        maxIters)(_._2) { case ((labels, _), round) =>
       val prop = edges.join(labels, edges("dst") === labels("node"))
         .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
       // carry the previous label through the checkpoint so convergence is
@@ -1240,7 +1241,7 @@ object Curation {
         .select(labels("node"),
           least(labels("label"), coalesce(col("nlabel"), labels("label"))).as("label"),
           labels("label").as("__old"))
-      // pointer-jump (path compression) from round 3 on: also adopt the
+      // pointer-jump (path compression) after round 3: also adopt the
       // label OF the current label — every label value is itself a node
       // id in the same component, so each jump round halves remaining
       // chain depth, bounding total rounds at ~3 + log2(diameter). Dup
@@ -1248,10 +1249,8 @@ object Curation {
       // converge before the jump ever runs, so the common case pays
       // nothing; the jump's extra join only spends where a chain-shaped
       // component would otherwise need O(diameter) rounds.
-      var mid: Option[DataFrame] = None
-      val next = (if (it < 3) merged else {
+      val next = (if (round <= 3) merged else {
         val m = merged.checkpointed(eager = false)
-        mid = Some(m)
         val byNode = m.select(col("node").as("pn"), col("label").as("plabel"))
         m.join(byNode, m("label") === byNode("pn"), "left")
           .select(m("node"),
@@ -1259,14 +1258,7 @@ object Curation {
             col("__old"))
       }).checkpointed(eager = false)
       val changed = next.filter(col("label") =!= col("__old")).count()
-      // `next` is materialized by the count above; the previous round's
-      // checkpoint blocks (and the jump intermediate) are now unreachable
-      // — release them so executor storage stays flat across rounds
-      Checkpoints.unpersist(labels)
-      mid.foreach(Checkpoints.unpersist)
-      labels = next.drop("__old")
-      converged = changed == 0
-      it += 1
+      (next.drop("__old"), changed == 0)
     }
     // A silent exit via the iteration cap would hand the caller unmerged
     // (wrong) cluster labels; a chain-shaped component longer than

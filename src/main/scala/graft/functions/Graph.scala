@@ -17,6 +17,11 @@ object Graph {
   /** PageRank damping in thousandths (0.85), shared by every PageRank form. */
   private val DampMilli = 850
 
+  /** Rounds between the rank frame's lineage cuts, shared by every
+    * PageRank form (see [[pageRank]]).
+    */
+  private val CutEvery = 8
+
   /** PageRank over an edge list, `iterations` synchronous rounds.
     *
     * Semantics (fixed-point, per node v with at least one in-edge):
@@ -34,7 +39,7 @@ object Graph {
     * whenever nodes << edges, so the edge list is NEVER re-shuffled — and
     * one partial-aggregating groupBy(dst). The plan grows linearly with
     * rounds (each round's agg is consumed exactly once), so lineage is
-    * cut only every `checkpointEvery` rounds (eager `localCheckpoint`;
+    * cut only every `CutEvery` rounds (eager `localCheckpoint`;
     * swap for reliable `checkpoint` on a real cluster) — an every-round
     * cut would serialize a full materialization job per round for
     * nothing. Dangling-mass
@@ -51,7 +56,6 @@ object Graph {
       dstCol: String,
       iterations: Int,
       broadcastRanks: Boolean = true,
-      checkpointEvery: Int = 8,
       checkpointEdges: Boolean = true): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1 (got $iterations)")
     // materialize the edge list ONCE — it is re-read every round, and an
@@ -71,33 +75,31 @@ object Graph {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
       .checkpointed()
     val base = (1000L - DampMilli) * 1000L
-    var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-    var cut: Option[DataFrame] = None // the last periodic cut, read by `rank`
-    for (i <- 1 to iterations) {
-      // the rank side is node-sized; checkpointed frames carry no size
-      // stats, so without the explicit hint the optimizer shuffles the
-      // EDGE list every round (measured 3.3 s vs 0.9 s per round at 2.4M
-      // edges). Disable only when nodes outgrow executor memory — then
-      // pre-bucket the edge table by src instead.
-      val ranks = deg.join(rank, deg("src") === rank("node"))
-        .select(col("src"), col("outd"), col("r"))
-      rank = e
-        .join(if (broadcastRanks) broadcast(ranks) else ranks, "src")
-        .select(col("dst").as("node"), expr("r div outd").as("c"))
-        .groupBy(col("node"))
-        .agg(expr(s"${base}L + ($DampMilli * sum(c)) div 1000").as("r"))
-      // the plan grows LINEARLY with rounds (each round consumes the
-      // previous agg exactly once), so cut lineage only periodically —
-      // an every-round checkpoint serializes a full materialization job
-      // per round for nothing
-      if (i % checkpointEvery == 0 && i < iterations) {
-        rank = rank.checkpointed()
-        cut.foreach(Checkpoints.unpersist)
-        cut = Some(rank)
-      }
+    val (rank, _) = Checkpoints.iterate(
+        deg.select(col("src").as("node"), lit(1000000L).as("r")), iterations)(_ => false) {
+      (rank, i) =>
+        // the rank side is node-sized; checkpointed frames carry no size
+        // stats, so without the explicit hint the optimizer shuffles the
+        // EDGE list every round (measured 3.3 s vs 0.9 s per round at 2.4M
+        // edges). Disable only when nodes outgrow executor memory — then
+        // pre-bucket the edge table by src instead.
+        val ranks = deg.join(rank, deg("src") === rank("node"))
+          .select(col("src"), col("outd"), col("r"))
+        periodicCut(e
+          .join(if (broadcastRanks) broadcast(ranks) else ranks, "src")
+          .select(col("dst").as("node"), expr("r div outd").as("c"))
+          .groupBy(col("node"))
+          .agg(expr(s"${base}L + ($DampMilli * sum(c)) div 1000").as("r")),
+          i, iterations)
     }
     rank.select(col("node"), col("r").as("rank_micro"))
   }
+
+  /** A PageRank round's rank frame, cut every [[CutEvery]] rounds short of
+    * the last: the plan grows only LINEARLY with rounds (see [[pageRank]]).
+    */
+  private def periodicCut(rank: DataFrame, round: Int, rounds: Int): DataFrame =
+    if (round % CutEvery == 0 && round < rounds) rank.checkpointed() else rank
 
   /** Weighted PageRank — [[pageRank]] with per-edge long weights (the
     * real-graph form: co-purchase counts, interaction strengths, link
@@ -134,20 +136,16 @@ object Graph {
     val deg = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
       .checkpointed()
     val base = (1000L - DampMilli) * 1000L
-    var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-    var cut: Option[DataFrame] = None // the last periodic cut, read by `rank`
-    for (i <- 1 to iterations) {
-      val ranks = deg.join(rank, deg("src") === rank("node"))
-        .select(col("src"), col("tw"), col("r"))
-      rank = e.join(broadcast(ranks), "src")
-        .select(col("dst").as("node"), expr("(r * w) div tw").as("c"))
-        .groupBy(col("node"))
-        .agg(expr(s"${base}L + ($DampMilli * sum(c)) div 1000").as("r"))
-      if (i % 8 == 0 && i < iterations) {
-        rank = rank.checkpointed()
-        cut.foreach(Checkpoints.unpersist)
-        cut = Some(rank)
-      }
+    val (rank, _) = Checkpoints.iterate(
+        deg.select(col("src").as("node"), lit(1000000L).as("r")), iterations)(_ => false) {
+      (rank, i) =>
+        val ranks = deg.join(rank, deg("src") === rank("node"))
+          .select(col("src"), col("tw"), col("r"))
+        periodicCut(e.join(broadcast(ranks), "src")
+          .select(col("dst").as("node"), expr("(r * w) div tw").as("c"))
+          .groupBy(col("node"))
+          .agg(expr(s"${base}L + ($DampMilli * sum(c)) div 1000").as("r")),
+          i, iterations)
     }
     rank.select(col("node"), col("r").as("rank_micro"))
   }
@@ -179,20 +177,20 @@ object Graph {
       .checkpointed()
     val base = (1000L - DampMilli) * 1000L
     val seedDf = seeds.toDF("node").select(col("node"), lit(base).as("sb"))
-    var rank = seeds.toDF("node")
-      .select(col("node"), lit(1000000L).as("r"))
-    for (i <- 1 to iterations) {
-      val ranks = deg.join(rank, deg("src") === rank("node"))
-        .select(col("src"), col("outd"), col("r"))
-      val contrib = e
-        .join(broadcast(ranks), "src")
-        .select(col("dst").as("node"), expr("r div outd").as("c"))
-        .groupBy(col("node"))
-        .agg(expr(s"($DampMilli * sum(c)) div 1000").as("cr"))
-      rank = seedDf.join(contrib, Seq("node"), "full_outer")
-        .select(col("node"),
-          (coalesce(col("sb"), lit(0L)) + coalesce(col("cr"), lit(0L))).as("r"))
-      if (i % 8 == 0 && i < iterations) rank = rank.checkpointed()
+    val (rank, _) = Checkpoints.iterate(
+        seeds.toDF("node").select(col("node"), lit(1000000L).as("r")), iterations)(_ => false) {
+      (rank, i) =>
+        val ranks = deg.join(rank, deg("src") === rank("node"))
+          .select(col("src"), col("outd"), col("r"))
+        val contrib = e
+          .join(broadcast(ranks), "src")
+          .select(col("dst").as("node"), expr("r div outd").as("c"))
+          .groupBy(col("node"))
+          .agg(expr(s"($DampMilli * sum(c)) div 1000").as("cr"))
+        periodicCut(seedDf.join(contrib, Seq("node"), "full_outer")
+          .select(col("node"),
+            (coalesce(col("sb"), lit(0L)) + coalesce(col("cr"), lit(0L))).as("r")),
+          i, iterations)
     }
     rank.select(col("node"), col("r").as("rank_micro"))
   }
@@ -269,11 +267,10 @@ object Graph {
     val edges = knn
       .select(col("qid").as("node"), col("vec_id").as("nbr"), col("rank"))
       .checkpointed()
-    var labels = seeds
-      .select(col("node"), col("label").cast("long").as("label"),
-        lit(0L).as("hops"))
-      .checkpointed()
-    for (r <- 1 to rounds) {
+    val (labels, _) = Checkpoints.iterate(
+        seeds.select(col("node"), col("label").cast("long").as("label"), lit(0L).as("hops"))
+          .checkpointed(),
+        rounds)(_ => false) { (labels, r) =>
       val votes = edges
         .join(labels.select(col("node").as("nbr"), col("label")), "nbr")
         .groupBy(col("node"), col("label"))
@@ -284,9 +281,7 @@ object Graph {
         .filter(col("rn") === 1)
         .join(labels.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), col("label"), lit(r.toLong).as("hops"))
-      val next = labels.unionByName(picked).checkpointed()
-      Checkpoints.unpersist(labels) // superseded: `next` is materialized
-      labels = next
+      labels.unionByName(picked).checkpointed()
     }
     labels
   }
@@ -322,17 +317,14 @@ object Graph {
       if (assumeSymmetric) edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       else symmetrized(edges, aCol, bCol)
     val sym = if (checkpointEdges) sym0.checkpointed() else sym0
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .checkpointed()
-    for (_ <- 1 to rounds) {
-      val next = lpaVote(sym, labels).checkpointed()
-      // superseded round frames release as the chain advances — a
-      // per-micro-batch caller (the refresh router's cold arm) would
-      // otherwise pin `rounds` node-sized blocks per refresh until GC
-      Checkpoints.unpersist(labels)
-      labels = next
-    }
+    // superseded round frames release as the chain advances — a
+    // per-micro-batch caller (the refresh router's cold arm) would
+    // otherwise pin `rounds` node-sized blocks per refresh until GC
+    val (labels, _) = Checkpoints.iterate(
+        sym.select(col("src").as("node")).distinct()
+          .withColumn("label", col("node"))
+          .checkpointed(),
+        rounds)(_ => false) { (labels, _) => lpaVote(sym, labels).checkpointed() }
     // the returned labels are a self-contained checkpoint
     labels
   }
@@ -408,20 +400,21 @@ object Graph {
     * implementation, so the `hopsDone` resume contract cannot drift).
     * Superseded per-hop checkpoints unpersist as the chain advances (a
     * per-micro-batch caller would otherwise pin one dead ball frame per
-    * hop until garbage collection — the dedupIngestStream rule). `hops0` belongs
-    * to the caller's scope, so the first swap leaves it alone; the
-    * returned frame (`hops0` itself when the loop never grew the ball)
-    * passes to the caller's scope.
+    * hop until garbage collection — the dedupIngestStream rule). `hops0`
+    * belongs to the caller, so the loop never releases it; the returned
+    * frame (`hops0` itself when the loop never grew the ball) passes to
+    * the caller's scope.
     */
   private[graft] def ballBfs(
       sym: DataFrame,
       hops0: DataFrame,
       fromHop: Int,
-      maxH: Int): DataFrame = Checkpoints.scoped {
-    var hops = hops0
-    var h = fromHop
-    var frontierLive = !hops.filter(col("hop") === h).isEmpty
-    while (h < maxH && frontierLive) {
+      maxH: Int): DataFrame = {
+    // the state carries whether the newest hop is non-empty
+    def live(hops: DataFrame, h: Int): Boolean = !hops.filter(col("hop") === h).isEmpty
+    val ((hops, _), _) = Checkpoints.iterate((hops0, live(hops0, fromHop)), maxH - fromHop)(
+        s => !s._2) { case ((hops, _), r) =>
+      val h = fromHop + r - 1
       val nxt = sym
         .join(hops.filter(col("hop") === h).select(col("node").as("src")),
           Seq("src"), "left_semi")
@@ -429,10 +422,7 @@ object Graph {
         .join(hops, Seq("node"), "left_anti")
         .withColumn("hop", lit(h + 1))
       val grown = hops.unionAll(nxt).checkpointed()
-      Checkpoints.unpersist(hops)
-      hops = grown
-      h += 1
-      frontierLive = !hops.filter(col("hop") === h).isEmpty
+      (grown, live(grown, h + 1))
     }
     hops
   }
@@ -465,16 +455,13 @@ object Graph {
         Seq("src"), "left_semi")
       .checkpointed()
     // cone recompute: round-0 labels are ids over the full 2k-ball
-    var labels = hops.select(col("node"), col("node").as("label"))
-      .checkpointed()
-    for (j <- 1 to rounds) {
+    val (labels, _) = Checkpoints.iterate(
+        hops.select(col("node"), col("node").as("label")).checkpointed(),
+        rounds)(_ => false) { (labels, j) =>
       val domain = hops.filter(col("hop") <= maxH - j)
         .select(col("node").as("src"))
-      val next = lpaVote(
-        coneEdges.join(domain, Seq("src"), "left_semi"), labels)
+      lpaVote(coneEdges.join(domain, Seq("src"), "left_semi"), labels)
         .checkpointed()
-      Checkpoints.unpersist(labels)
-      labels = next
     }
     val ballK = hops.filter(col("hop") <= rounds).select(col("node"))
     // pin the merged answer; the scope then releases every cone-internal
@@ -853,38 +840,12 @@ object Graph {
       .select(col("src"), col("dst")).checkpointed()
     val degH = h.select(explode(array(col("src"), col("dst"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("dh"))
-    val deg0 = base.join(degH, Seq("node"), "full_outer")
-      .select(col("node"),
-        (coalesce(col("b"), lit(0L)) + coalesce(col("dh"), lit(0L))).as("d"))
-      .checkpointed()
-    def loss(dead: DataFrame): DataFrame = {
-      val nb = broadcast(dead)
-      h.join(nb, h("dst") === dead("node")).select(h("src").as("n"))
-        .unionAll(
-          h.join(nb, h("src") === dead("node")).select(h("dst").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("l"))
-    }
-    var degAlive = deg0.filter(col("d") >= k)
-    // newDead stays EAGERLY checkpointed: the r18 lazy form (filter over
-    // the round's checkpointed degree blocks, re-run by the isEmpty
-    // probe and the loss build) measured 1.05-1.10x WORSE interleaved —
-    // the tiny per-round materialization is cheaper than re-filtering
-    // node-sized blocks inside the round's dominant join job
-    var newDead = deg0.filter(col("d") < k).select(col("node")).checkpointed()
-    var degHeld = deg0 // the checkpoint `degAlive` filters
-    var r = 0
-    while (r < maxRounds && !newDead.isEmpty) {
-      val upd = degAlive.join(loss(newDead), degAlive("node") === col("n"), "left")
-        .select(col("node"), (col("d") - coalesce(col("l"), lit(0L))).as("d"))
-        .checkpointed()
-      // the round's inputs are superseded once `upd` is materialized
-      Checkpoints.unpersist(degHeld)
-      Checkpoints.unpersist(newDead)
-      newDead = upd.filter(col("d") < k).select(col("node")).checkpointed()
-      degAlive = upd.filter(col("d") >= k)
-      degHeld = upd
-      r += 1
-    }
+    val (degAlive, newDead, _) = peel(h,
+      base.join(degH, Seq("node"), "full_outer")
+        .select(col("node"),
+          (coalesce(col("b"), lit(0L)) + coalesce(col("dh"), lit(0L))).as("d"))
+        .checkpointed(),
+      k, maxRounds)
     require(newDead.isEmpty,
       s"restricted k-core peel did not converge in $maxRounds rounds")
     // the exact new core; in-core degrees need one pass over the full
@@ -990,29 +951,24 @@ object Graph {
       .filter(col("hop").isNull || col("cand") < col("hop"))
       .select(col("node"), col("cand").cast("int").as("hop"))
       .checkpointed()
-    var hops = oldHops.select(col("node"), col("hop")).checkpointed()
-    var frontier = improvements(
-      d.join(hops.select(col("node").as("src"), col("hop").as("hs")), "src")
-        .select(col("dst").as("node"), (col("hs") + 1).as("cand")),
-      hops)
-    var round = 0
-    while (round < maxHops && !frontier.isEmpty) {
-      // merge the strict improvements, then relax them one hop outward
-      val merged = hops.join(frontier.select(col("node"), col("hop").as("hn")),
-          Seq("node"), "full_outer")
-        .select(col("node"), coalesce(least(col("hop"), col("hn")),
-          col("hop"), col("hn")).as("hop"))
-        .checkpointed()
-      val next = improvements(
-        broadcast(frontier).join(e, frontier("node") === e("src"))
-          .select(col("dst").as("node"), (frontier("hop") + 1).as("cand")),
-        merged)
-      // superseded: both replacements are materialized
-      Checkpoints.unpersist(hops)
-      Checkpoints.unpersist(frontier)
-      hops = merged
-      frontier = next
-      round += 1
+    val ((hops, _), _) = Checkpoints.iterate({
+        val hops = oldHops.select(col("node"), col("hop")).checkpointed()
+        (hops, improvements(
+          d.join(hops.select(col("node").as("src"), col("hop").as("hs")), "src")
+            .select(col("dst").as("node"), (col("hs") + 1).as("cand")),
+          hops))
+      }, maxHops)(_._2.isEmpty) {
+      case ((hops, frontier), _) =>
+        // merge the strict improvements, then relax them one hop outward
+        val merged = hops.join(frontier.select(col("node"), col("hop").as("hn")),
+            Seq("node"), "full_outer")
+          .select(col("node"), coalesce(least(col("hop"), col("hn")),
+            col("hop"), col("hn")).as("hop"))
+          .checkpointed()
+        (merged, improvements(
+          broadcast(frontier).join(e, frontier("node") === e("src"))
+            .select(col("dst").as("node"), (frontier("hop") + 1).as("cand")),
+          merged))
     }
     hops
   }
@@ -1734,14 +1690,12 @@ object Graph {
     // node-sized frame every round keeps the plan constant-size; unlike
     // pageRank's once-per-round rank frame (linear growth, periodic
     // cuts), here the cut must be per-round.
-    var alive = degrees(e).filter(col("d") >= k).select(col("src").as("node"))
-      .checkpointed()
-    for (_ <- 1 to rounds) {
-      val next = degrees(surviving(e, alive))
+    val (alive, _) = Checkpoints.iterate(
+        degrees(e).filter(col("d") >= k).select(col("src").as("node")).checkpointed(),
+        rounds)(_ => false) { (alive, _) =>
+      degrees(surviving(e, alive))
         .filter(col("d") >= k).select(col("src").as("node"))
         .checkpointed()
-      Checkpoints.unpersist(alive) // superseded: `next` is materialized
-      alive = next
     }
     degrees(surviving(e, alive))
       .select(col("src").as("node"), col("d").as("core_deg"))
@@ -1774,44 +1728,57 @@ object Graph {
       rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
     val e = half.select(col("src"), col("dst")).checkpointed()
-    // losses toward BOTH endpoints from edges whose other endpoint died
-    def loss(dead: DataFrame): DataFrame = {
-      val nb = broadcast(dead)
-      e.join(nb, e("dst") === nb("node")).select(e("src").as("n"))
-        .unionAll(e.join(nb, e("src") === nb("node")).select(e("dst").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("l"))
-    }
-    def minus(deg: DataFrame, lo: DataFrame): DataFrame =
-      deg.join(lo, deg("node") === lo("n"), "left")
-        .select(col("node"), (col("d") - coalesce(col("l"), lit(0L))).as("d"))
-    val deg0 = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      .checkpointed()
-    var degAlive = deg0.filter(col("d") >= k)
-    // newDead stays EAGERLY checkpointed (see kCoreDelta's note: the
-    // lazy form measured 1.05-1.10x worse interleaved)
-    var newDead = deg0.filter(col("d") < k).select(col("node")).checkpointed()
-    var degHeld = deg0 // the checkpoint `degAlive` filters
-    var r = 0
-    while (r < rounds && !newDead.isEmpty) {
-      val upd = minus(degAlive, loss(newDead)).checkpointed()
-      // the round's inputs are superseded once `upd` is materialized;
-      // `fin` reads only the last round's `upd` and `newDead`
-      Checkpoints.unpersist(degHeld)
-      Checkpoints.unpersist(newDead)
-      newDead = upd.filter(col("d") < k).select(col("node")).checkpointed()
-      degAlive = upd.filter(col("d") >= k)
-      degHeld = upd
-      r += 1
-    }
+    val (degAlive, newDead, r) = peel(e,
+      e.select(explode(array(col("src"), col("dst"))).as("node"))
+        .groupBy(col("node")).agg(count(lit(1)).as("d"))
+        .checkpointed(),
+      k, rounds)
     val fin =
       if (r == rounds && !newDead.isEmpty)
         // budget exhausted mid-peel: align to degrees WITHIN the final
         // survivor set and drop zero-in-core-edge survivors (absent from
         // an edge-list degree aggregate)
-        minus(degAlive, loss(newDead)).filter(col("d") >= 1)
+        minusLoss(e, degAlive, newDead).filter(col("d") >= 1)
       else degAlive
     fin.select(col("node"), col("d").as("core_deg"))
+  }
+
+  /** The incremental peel of [[kCoreHalf]] and [[kCoreDelta]] over half
+    * edges `e` from node degrees `deg0`: each round subtracts from every
+    * live node (degree >= k) its edges to the nodes that died LAST round.
+    * Returns the live degrees, the last newly-dead set (empty iff the
+    * peel converged) and the rounds run.
+    */
+  private def peel(
+      e: DataFrame,
+      deg0: => DataFrame,
+      k: Int,
+      maxRounds: Int): (DataFrame, DataFrame, Int) = {
+    // newDead stays EAGERLY checkpointed: the r18 lazy form (filter over
+    // the round's checkpointed degree blocks, re-run by the isEmpty
+    // probe and the loss build) measured 1.05-1.10x WORSE interleaved —
+    // the tiny per-round materialization is cheaper than re-filtering
+    // node-sized blocks inside the round's dominant join job
+    def dead(deg: DataFrame): DataFrame =
+      deg.filter(col("d") < k).select(col("node")).checkpointed()
+    val ((deg, newDead), r) = Checkpoints.iterate({ val d = deg0; (d, dead(d)) }, maxRounds)(
+        _._2.isEmpty) { case ((deg, newDead), _) =>
+      val upd = minusLoss(e, deg.filter(col("d") >= k), newDead).checkpointed()
+      (upd, dead(upd))
+    }
+    (deg.filter(col("d") >= k), newDead, r)
+  }
+
+  /** `deg` less each node's edges in the half-edge frame `e` toward the
+    * `dead` nodes, counted at BOTH endpoints.
+    */
+  private def minusLoss(e: DataFrame, deg: DataFrame, dead: DataFrame): DataFrame = {
+    val nb = broadcast(dead)
+    val lo = e.join(nb, e("dst") === nb("node")).select(e("src").as("n"))
+      .unionAll(e.join(nb, e("src") === nb("node")).select(e("dst").as("n")))
+      .groupBy(col("n")).agg(count(lit(1)).as("l"))
+    deg.join(lo, deg("node") === lo("n"), "left")
+      .select(col("node"), (col("d") - coalesce(col("l"), lit(0L))).as("d"))
   }
 
   /** Link prediction over a SYMMETRIC edge list: score each non-adjacent
@@ -1953,34 +1920,28 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
       .distinct().checkpointed()
-    def rescaled(r: DataFrame, keyCol: String, vCol: String): DataFrame =
-      rescaledScores(r, keyCol, vCol)
-    var hub = nodes.select(col("node"), lit(1000000L).as("s"))
-    var auth: DataFrame = null
-    var prevRawH: DataFrame = null
-    for (i <- 1 to iterations) {
-      val rawA0 = e.join(
-          hint(hub.select(col("node").as("src"), col("s").as("h"))), "src")
-        .groupBy(col("dst")).agg(sum(col("h")).as("ra"))
-      // consumed twice only in the final round (hub chain + the reported
-      // authority) — cut it just there
-      val rawA = if (i == iterations) rawA0.checkpointed() else rawA0
-      val rawH = eD.join(
-          hint(rawA.select(col("dst"), col("ra").as("a"))), "dst")
-        .groupBy(col("src")).agg(sum(col("a")).as("rh"))
-        .checkpointed()
-      // the previous round's rawH backed the old hub; this round's
-      // checkpoint just consumed it — release (the LAST rawH stays: it
-      // backs the returned hub scores; r17 fourth review)
-      if (prevRawH != null) Checkpoints.unpersist(prevRawH)
-      prevRawH = rawH
-      hub = rescaled(rawH, "src", "rh")
-      if (i == iterations) auth = rescaled(rawA, "dst", "ra")
+    // the state is (hub, the final round's authority); each round's rawH
+    // backs its hub and goes with the next round (r17 fourth review)
+    val ((hub, auth), _) = Checkpoints.iterate[(DataFrame, Option[DataFrame])](
+        (nodes.select(col("node"), lit(1000000L).as("s")), None), iterations)(_ => false) {
+      case ((hub, _), i) =>
+        val rawA0 = e.join(
+            hint(hub.select(col("node").as("src"), col("s").as("h"))), "src")
+          .groupBy(col("dst")).agg(sum(col("h")).as("ra"))
+        // consumed twice only in the final round (hub chain + the reported
+        // authority) — cut it just there
+        val rawA = if (i == iterations) rawA0.checkpointed() else rawA0
+        val rawH = eD.join(
+            hint(rawA.select(col("dst"), col("ra").as("a"))), "dst")
+          .groupBy(col("src")).agg(sum(col("a")).as("rh"))
+          .checkpointed()
+        (rescaledScores(rawH, "src", "rh"),
+          if (i == iterations) Some(rescaledScores(rawA, "dst", "ra")) else None)
     }
     // the returned frame reads nodes + the final rawH/rawA checkpoints
     nodes
       .join(hub.select(col("node"), col("s").as("hub_m")), Seq("node"), "left")
-      .join(auth.select(col("node"), col("s").as("auth_m")), Seq("node"), "left")
+      .join(auth.get.select(col("node"), col("s").as("auth_m")), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub_m"), lit(0L)).as("hub_m"),
         coalesce(col("auth_m"), lit(0L)).as("auth_m"))
@@ -2017,10 +1978,12 @@ object Graph {
     // input is already a cheap-to-rescan src-bucketed table
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = if (checkpointEdges) e0.checkpointed() else e0
-    var frontier = seeds.select(col("node").as("wid"), col("node").as("cur"))
+    val frontier0 = seeds.select(col("node").as("wid"), col("node").as("cur"))
       .checkpointed()
-    var walks = frontier.select(col("wid"), lit(0).as("step"), col("cur").as("node"))
-    for (s <- 1 to steps) {
+    // the walk trace reads every step's frontier, so no round is released
+    val ((_, walks), _) = Checkpoints.iterate(
+        (frontier0, frontier0.select(col("wid"), lit(0).as("step"), col("cur").as("node"))),
+        steps)(_ => false) { case ((frontier, walks), s) =>
       val f = broadcast(frontier)
       val cand = e.join(f, e("src") === f("cur"))
         .select(col("wid"), col("dst"),
@@ -2029,12 +1992,12 @@ object Graph {
             .cast("long").as("h"))
       // frontier is consumed twice (trace union + next step's join) —
       // cut the walk-sized frame per step, the kCoreHalf posture
-      frontier = cand.groupBy(col("wid"))
+      val next = cand.groupBy(col("wid"))
         .agg(min(struct(col("h"), col("dst"))).as("pick"))
         .select(col("wid"), col("pick.dst").as("cur"))
         .checkpointed()
-      walks = walks.unionAll(
-        frontier.select(col("wid"), lit(s).as("step"), col("cur").as("node")))
+      (next, walks.unionAll(
+        next.select(col("wid"), lit(s).as("step"), col("cur").as("node"))))
     }
     walks
   }
@@ -2062,20 +2025,19 @@ object Graph {
     import spark.implicits._
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .checkpointed()
-    var visited = seeds.toDF("node").select(col("node"), lit(0).as("hop"))
-    var frontier = visited.select(col("node"))
-    for (h <- 1 to maxHops) {
-      val f = broadcast(frontier)
-      val next = e.join(f, e("src") === f("node"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-      // one cut per round, of the visited set itself: the frontier is
-      // its newest hop, so no earlier round's blocks stay reachable
-      val grown = visited.unionAll(next.select(col("node"), lit(h).as("hop")))
-        .checkpointed()
-      Checkpoints.unpersist(visited)
-      visited = grown
-      frontier = visited.filter(col("hop") === h).select(col("node"))
+    val visited0 = seeds.toDF("node").select(col("node"), lit(0).as("hop"))
+    val ((visited, _), _) = Checkpoints.iterate(
+        (visited0, visited0.select(col("node"))), maxHops)(_ => false) {
+      case ((visited, frontier), h) =>
+        val f = broadcast(frontier)
+        val next = e.join(f, e("src") === f("node"))
+          .select(col("dst").as("node")).distinct()
+          .join(visited.select(col("node")), Seq("node"), "left_anti")
+        // one cut per round, of the visited set itself: the frontier is
+        // its newest hop, so no earlier round's blocks stay reachable
+        val grown = visited.unionAll(next.select(col("node"), lit(h).as("hop")))
+          .checkpointed()
+        (grown, grown.filter(col("hop") === h).select(col("node")))
     }
     visited
   }
@@ -2125,11 +2087,13 @@ object Graph {
     val adj = e.groupBy(col("src").as("prev"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       .checkpointed()
-    var frontier = seeds
+    val frontier0 = seeds
       .select(col("node").as("wid"), col("node").as("prev"), col("node").as("cur"))
       .checkpointed()
-    var walks = frontier.select(col("wid"), lit(0).as("step"), col("cur").as("node"))
-    for (s <- 1 to steps) {
+    // the walk trace reads every step's frontier, so no round is released
+    val ((_, walks), _) = Checkpoints.iterate(
+        (frontier0, frontier0.select(col("wid"), lit(0).as("step"), col("cur").as("node"))),
+        steps)(_ => false) { case ((frontier, walks), s) =>
       val f = broadcast(frontier)
       val cand = e.join(f, e("src") === f("cur"))
         .select(col("wid"), col("prev"), col("cur"), col("dst"),
@@ -2158,14 +2122,14 @@ object Graph {
           .drop("nbrs")
       // h < 2^48, so h * 1000 stays far inside a long; the race key is
       // floor(h * 1000 / w) — weight-proportional and engine-portable
-      frontier = weighted
+      val next = weighted
         .withColumn("k", expr("(h * 1000L) div w"))
         .groupBy(col("wid"), col("cur"))
         .agg(min(struct(col("k"), col("dst"))).as("pick"))
         .select(col("wid"), col("cur").as("prev"), col("pick.dst").as("cur"))
         .checkpointed()
-      walks = walks.unionAll(
-        frontier.select(col("wid"), lit(s).as("step"), col("cur").as("node")))
+      (next, walks.unionAll(
+        next.select(col("wid"), lit(s).as("step"), col("cur").as("node"))))
     }
     walks
   }

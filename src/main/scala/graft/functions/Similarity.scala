@@ -822,10 +822,8 @@ object Similarity {
     // scan per pass dominates the index build (iterative-kmeans caching,
     // same practice as MLlib's)
     val c = withNorm(corpus, "vec", "v").checkpointed()
-    var cent = c
-      .filter(col("vec_id") % centroidEvery === 0)
-      .select(col("vec_id").as("cid"), col("vd").as("cd"), col("vn").as("cn"))
-    for (_ <- 0 until iters) {
+    val (cent, _) =
+      Checkpoints.iterate(seedCentroids(c, centroidEvery), iters)(_ => false) { (cent, _) =>
       val cells = cellAssign(c, cent)
       val means = c.join(cells, "vec_id")
         .select(col("cid"), posexplode(col("vd")).as(Seq("pos", "x")))
@@ -839,15 +837,15 @@ object Similarity {
           array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m")).as("cd"))
         .withColumn("cn", l2Norm(col("cd")))
-      val prev = cent
-      cent = cent.select(col("cid"), col("cd").as("cd0"), col("cn").as("cn0"))
+      // cut the per-iteration lineage growth; the previous iteration's
+      // blocks go with their round
+      cent.select(col("cid"), col("cd").as("cd0"), col("cn").as("cn0"))
         .join(means, Seq("cid"), "left")
         .select(
           col("cid"),
           coalesce(col("cd"), col("cd0")).as("cd"),
           coalesce(col("cn"), col("cn0")).as("cn"))
-        .checkpointed() // cut the per-iteration lineage growth
-      Checkpoints.unpersist(prev) // release the previous iteration's blocks
+        .checkpointed()
     }
     cent
   }

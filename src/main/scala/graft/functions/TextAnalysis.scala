@@ -885,14 +885,15 @@ object TextAnalysis {
     val words = df.select(explode(filter(split(lower(col(textCol)), "\\s+"),
         t => length(t) > 0)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    var cur = words.select(
-      concat(concat_ws(" ", filter(split(col("w"), ""), c => length(c) > 0)),
-        lit(" </w>")).as("s"),
-      col("cnt")).checkpointed()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= merges && !exhausted) {
+    // the state is (symbol strings, merge table so far, exhausted): an
+    // empty top-pair collect ends the loop
+    val ((_, out, _), _) =
+      Checkpoints.iterate[(DataFrame, Vector[(Long, String, String, String, Long)], Boolean)](
+        (words.select(
+          concat(concat_ws(" ", filter(split(col("w"), ""), c => length(c) > 0)),
+            lit(" </w>")).as("s"),
+          col("cnt")).checkpointed(), Vector.empty, false),
+        merges)(_._3) { case ((cur, out, _), step) =>
       val top = cur
         .select(col("cnt"), split(col("s"), " ").as("syms"))
         .filter(size(col("syms")) >= 2)
@@ -904,21 +905,18 @@ object TextAnalysis {
         .agg(sum(col("cnt")).as("pc"))
         .orderBy(col("pc").desc, col("a"), col("b"))
         .limit(1).as[(String, String, Long)].collect()
-      if (top.isEmpty) exhausted = true
+      if (top.isEmpty) (cur, out, true)
       else {
         val (a, b, pc) = top.head
-        out += ((step.toLong, a, b, a + b, pc))
         def merge(c: Column): Column =
           call_function("replace", c, lit(s" $a $b "), lit(s" $a$b "))
-        val next = cur.select(
+        // eager: materialized before the old round's blocks are dropped
+        (cur.select(
           trim(merge(merge(concat(lit(" "), col("s"), lit(" "))))).as("s"),
-          col("cnt")).checkpointed() // eager: materialized before the
-        Checkpoints.unpersist(cur)      // old round's blocks are dropped
-        cur = next
-        step += 1
+          col("cnt")).checkpointed(), out :+ ((step.toLong, a, b, a + b, pc)), false)
       }
     }
-    out.toSeq.toDF("step", "lhs", "rhs", "merged", "pair_cnt")
+    out.toDF("step", "lhs", "rhs", "merged", "pair_cnt")
       .orderBy("step")
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.StageInfo
 
 import graft.{Bench, GraftSession, SparkEntry}
 
@@ -24,10 +24,6 @@ import graft.{Bench, GraftSession, SparkEntry}
   * Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 corpus, as Bench), SPARK_GRAFT_CPUS.
   */
 object Probe {
-  private final case class Stage(id: Int, name: String, tasks: Int,
-      runMs: Long, cpuMs: Long, gcMs: Long,
-      shRead: Long, shWrite: Long, wallMs: Long)
-
   def main(args: Array[String]): Unit = {
     val modes = Set("time", "stages", "plan")
     require(args.length >= 2 && modes(args(0)),
@@ -57,51 +53,26 @@ object Probe {
             println(fn(spark, sf).queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode))
           case _ =>
-            val stages = scala.collection.mutable.ArrayBuffer.empty[Stage]
-            val jobs = new java.util.concurrent.atomic.AtomicInteger()
-            // listener events arrive asynchronously, in order: a sentinel
-            // job run after the timed one marks the end of its events
-            val sentinel = "probe-sentinel"
-            @volatile var sentinelId = -1
-            val drained = new java.util.concurrent.CountDownLatch(1)
-            val listener = new SparkListener {
-              override def onJobStart(e: SparkListenerJobStart): Unit =
-                if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
-                  sentinelId = e.jobId
-              override def onJobEnd(e: SparkListenerJobEnd): Unit =
-                if (e.jobId == sentinelId) drained.countDown() else jobs.incrementAndGet()
-              override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-                val si = e.stageInfo
-                val m = si.taskMetrics
-                val wall = (for { a <- si.completionTime; b <- si.submissionTime }
-                  yield a - b).getOrElse(0L)
-                if (sentinelId < 0) stages.synchronized {
-                  stages += Stage(si.stageId, si.name, si.numTasks,
-                    m.executorRunTime, m.executorCpuTime / 1000000,
-                    m.jvmGCTime, m.shuffleReadMetrics.totalBytesRead,
-                    m.shuffleWriteMetrics.bytesWritten, wall)
-                }
-              }
+            val (total, jobs, stages) = JobCounter.during(spark.sparkContext) {
+              val t0 = System.nanoTime()
+              Bench.exec(fn(spark, sf))
+              (System.nanoTime() - t0) / 1e9
             }
-            spark.sparkContext.addSparkListener(listener)
-            val t0 = System.nanoTime()
-            Bench.exec(fn(spark, sf))
-            val total = (System.nanoTime() - t0) / 1e9
-            spark.sparkContext.setJobDescription(sentinel)
-            spark.sparkContext.parallelize(Seq(1), 1).count()
-            drained.await(60, java.util.concurrent.TimeUnit.SECONDS)
-            spark.sparkContext.removeSparkListener(listener)
-            println(f"\n===== $q: $total%.2f s, ${jobs.get} jobs, ${stages.size} stages =====")
+            def wallMs(si: StageInfo): Long =
+              (for { a <- si.completionTime; b <- si.submissionTime } yield a - b).getOrElse(0L)
+            println(f"\n===== $q: $total%.2f s, $jobs jobs, ${stages.size} stages =====")
             println(f"${"stage"}%6s ${"tasks"}%5s ${"wall_s"}%7s ${"run_s"}%7s " +
               f"${"cpu_s"}%7s ${"gc_s"}%5s ${"shR_MB"}%7s ${"shW_MB"}%7s  name")
-            stages.sortBy(-_.wallMs).take(40).foreach { r =>
-              println(f"${r.id}%6d ${r.tasks}%5d ${r.wallMs / 1e3}%7.2f " +
-                f"${r.runMs / 1e3}%7.2f ${r.cpuMs / 1e3}%7.2f ${r.gcMs / 1e3}%5.1f " +
-                f"${r.shRead / 1e6}%7.1f ${r.shWrite / 1e6}%7.1f  ${r.name.take(90)}")
+            stages.sortBy(-wallMs(_)).take(40).foreach { si =>
+              val m = si.taskMetrics
+              println(f"${si.stageId}%6d ${si.numTasks}%5d ${wallMs(si) / 1e3}%7.2f " +
+                f"${m.executorRunTime / 1e3}%7.2f ${m.executorCpuTime / 1e9}%7.2f " +
+                f"${m.jvmGCTime / 1e3}%5.1f ${m.shuffleReadMetrics.totalBytesRead / 1e6}%7.1f " +
+                f"${m.shuffleWriteMetrics.bytesWritten / 1e6}%7.1f  ${si.name.take(90)}")
             }
-            val sumWall = stages.map(_.wallMs).sum / 1e3
+            val sumWall = stages.map(wallMs).sum / 1e3
             println(f"[probe] $q total=$total%.2f s, sum stage wall=$sumWall%.2f s, " +
-              f"jobs=${jobs.get}, stages=${stages.size}")
+              f"jobs=$jobs, stages=${stages.size}")
         }
         spark.stop()
         System.gc()

@@ -17,7 +17,7 @@ class LayoutSpec extends SparkSpec {
     }.getOrElse(fail("no file scan in plan"))
 
   test("date-partitioned writes prune partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val dir = tempDir("graft-layout").toString
     spark.range(10000)
       .select(col("id"),
         concat(lit("2024-01-"), lpad((col("id") % 10 + 1).cast("string"), 2, "0"))
@@ -40,7 +40,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("deleteByIds rewrites only affected partitions, drops emptied ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-del").toString
+    val dir = tempDir("graft-del").toString
     // 10 days x 100 rows; day 2024-01-10 will be emptied entirely
     spark.range(1000)
       .select(col("id"),
@@ -85,7 +85,7 @@ class LayoutSpec extends SparkSpec {
   test("deleteMatchingNested (join form) and deleteWhere match the isin form") {
     import spark.implicits._
     def mkLake(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-del2").toString
+      val dir = tempDir("graft-del2").toString
       spark.range(400)
         .select(col("id"), (col("id") % 4).cast("string").as("day"))
         .write.mode("overwrite").partitionBy("day").parquet(dir)
@@ -109,7 +109,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("deleteWhere keeps NULL-predicate rows (SQL DELETE semantics)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-del3").toString
+    val dir = tempDir("graft-del3").toString
     // two partitions; day=1 contains two NULL-id rows (7,9 nulled) that
     // any id-based predicate evaluates to NULL on — and day=1 IS rewritten
     // by this delete. DELETE WHERE semantics: NULL is not a match, so
@@ -131,7 +131,7 @@ class LayoutSpec extends SparkSpec {
       "NULL-id rows in rewritten partitions must survive")
 
     // and the isin fast path of deleteByIds (<= MaxInlineIds) agrees
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-del4").toString
+    val dir2 = tempDir("graft-del4").toString
     spark.range(100)
       .select(when(col("id").isin(7L, 9L), lit(null)).otherwise(col("id")).as("id"),
         (col("id") % 2).cast("string").as("day"))
@@ -142,7 +142,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("deleteWhere drops an emptied partition whose dir name Spark escaped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-del5").toString
+    val dir = tempDir("graft-del5").toString
     spark.range(20)
       .select(col("id"), when(col("id") < 10, lit("50%")).otherwise(lit("a:b")).as("day"))
       .write.mode("overwrite").partitionBy("day").parquet(dir)
@@ -161,7 +161,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactPartitions shrinks file count without changing rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     // simulate a micro-batch sink: 16 writer tasks -> 16 files per partition
     spark.range(2000).repartition(16)
       .select(col("id"), (col("id") % 2).cast("string").as("day"))
@@ -180,7 +180,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("non-partition predicates still push to the parquet reader") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout2").toString
+    val dir = tempDir("graft-layout2").toString
     spark.range(10000)
       .select(col("id"), (col("id") % 7).as("k"))
       .write.mode("overwrite").parquet(dir)

@@ -25,7 +25,7 @@ class LocalFsSpec extends SparkSpec {
 
   private def init[F <: FileSystem](fs: F): F = { fs.initialize(URI.create("file:///"), new Configuration()); fs }
 
-  private def tmp(name: String): JPath = Files.createTempDirectory(name)
+  private def tmp(name: String): JPath = tempDir(name)
 
   /** One stateful micro-batch to a `file:` checkpoint on the session's
     * default (HDFS-backed) state store.

@@ -124,7 +124,7 @@ class ModelSpec extends SparkSpec {
         .map { case (us, i) => (i.toLong, us * scale) }
         .toDF("event_id", "ts")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val base = java.nio.file.Files.createTempDirectory("evt-units").toString
+    val base = tempDir("evt-units").toString
     val dirs = Seq("nanos" -> 1000L, "micros" -> 1L).map { case (n, sc) =>
       val d = s"$base/$n"; write(d, sc); n -> d
     } ++ Seq({ // millis and seconds from truncated micros

@@ -93,8 +93,6 @@ class SurfaceLintSpec extends AnyFunSuite {
       "(s) edgesByDst edge-set equality guard; GraphOpsSpec turns it on",
     "TextAnalysis.compactInvertedIndex.reclaimOrphans" ->
       "(s) drops crashed ad-hoc orphan batches; FunctionsSpec turns it on",
-    "Graph.pageRank.checkpointEvery" ->
-      "(t) CheckpointsSpec cuts every 2 rounds to reach the periodic cut in few rounds",
     "Graph.sgnsNoiseTable.chunkDiv" ->
       "(t) GraphOpsSpec and CurationPropertySpec cross chunk boundaries on a small vocab",
     "Graph.triangleCountDelta.adjMaxBytes" ->
@@ -488,6 +486,27 @@ class SurfaceLintSpec extends AnyFunSuite {
         .map(m => s"$p:${raw.substring(0, m.start).count(_ == '\n') + 1}")
     }.sorted
 
+  /** Hand-released checkpoints (`Checkpoints.unpersist(`) in the code of
+    * `src`, as "file:line", outside `Checkpoints.scala`: a round loop
+    * releases its superseded rounds through `Checkpoints.iterate`, so a
+    * second copy of that discipline cannot drift from it.
+    */
+  private def handReleasesIn(src: Map[Path, String]): Seq[String] =
+    src.toSeq.filterNot(_._1.endsWith("Checkpoints.scala")).flatMap { case (p, raw) =>
+      """\bCheckpoints\s*\.\s*unpersist\s*\(""".r.findAllMatchIn(strip(raw))
+        .map(m => s"$p:${raw.substring(0, m.start).count(_ == '\n') + 1}")
+    }.sorted
+
+  /** Temporary directories made in the code of `src`, as "file:line",
+    * outside `SparkSpec.scala`: its `tempDir` puts every spec's directory
+    * under one per-run root that is deleted when the run ends.
+    */
+  private def tempDirsIn(src: Map[Path, String]): Seq[String] =
+    src.toSeq.filterNot(_._1.endsWith("SparkSpec.scala")).flatMap { case (p, raw) =>
+      """\bcreateTemp(Directory|File)\b""".r.findAllMatchIn(strip(raw))
+        .map(m => s"$p:${raw.substring(0, m.start).count(_ == '\n') + 1}")
+    }.sorted
+
   /** Scaladoc blocks stacked directly on another comment block in the raw
     * sources `src`, as "file:line" of the second block: the first
     * describes a def it does not sit on, which then has no doc.
@@ -651,6 +670,52 @@ class SurfaceLintSpec extends AnyFunSuite {
           |}""".stripMargin)
     assert(markerPathsIn(files.map { case (p, c) => Paths.get(p) -> c }) ===
       Seq("f/Graph.scala:5", "f/Incremental.scala:5"))
+  }
+
+  test("src/main releases checkpoints by hand only in Checkpoints.scala") {
+    assert(mainSources.exists { case (p, c) =>
+      p.endsWith("Checkpoints.scala") && c.contains("def iterate[")
+    }, "the scan found no round loop owner")
+    val released = handReleasesIn(mainSources)
+    assert(released.isEmpty,
+      "Checkpoints.unpersist outside Checkpoints.scala; run the loop through " +
+        "Checkpoints.iterate, which releases superseded rounds:\n" + released.mkString("\n"))
+  }
+
+  test("lint self-check: the hand-release scan skips comments, strings and the owner") {
+    val files = Map(
+      "f/Checkpoints.scala" -> "object Checkpoints {\n  def f(d: D): Unit = Checkpoints.unpersist(d)\n}",
+      "f/G.scala" ->
+        """object G {
+          |  // Checkpoints.unpersist(old)
+          |  def go(d: D): String = "Checkpoints.unpersist(d)"
+          |  def run(d: D): Unit = Checkpoints
+          |    .unpersist(d)
+          |}""".stripMargin)
+    assert(handReleasesIn(files.map { case (p, c) => Paths.get(p) -> c }) === Seq("f/G.scala:4"))
+  }
+
+  test("src/test makes temporary directories only through SparkSpec.tempDir") {
+    val testSources = scalaFiles(Paths.get("src/test/scala")).map(p => p -> Files.readString(p)).toMap
+    assert(testSources.exists { case (p, c) => p.endsWith("SparkSpec.scala") && c.contains("def tempDir(") },
+      "the scan found no SparkSpec.tempDir")
+    val made = tempDirsIn(testSources)
+    assert(made.isEmpty,
+      "temporary directories made outside SparkSpec; use tempDir, whose root the run " +
+        "deletes:\n" + made.mkString("\n"))
+  }
+
+  test("lint self-check: the temp-dir scan skips comments, strings and SparkSpec") {
+    val make = "Files.create" + "TempDirectory"
+    val files = Map(
+      "t/SparkSpec.scala" -> s"object SparkSpec {\n  def tempDir(p: String): P = $make(root, p)\n}",
+      "t/A.scala" ->
+        (s"""class A {
+          |  // $make("x")
+          |  val s = "$make(x)"
+          |  val d = $make("a")
+          |  val f = java.io.File.create""".stripMargin + "TempFile(\"b\", \"c\")\n}"))
+    assert(tempDirsIn(files.map { case (p, c) => Paths.get(p) -> c }) === Seq("t/A.scala:4", "t/A.scala:5"))
   }
 
   test("every scaladoc block sits on its own def, not on another comment block") {

@@ -183,45 +183,100 @@ class CheckpointsSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("iterate releases each superseded round at its boundary") {
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def pinned(df: DataFrame): DataFrame = { val c = Checkpoints.local(df); ids += idOf(c); c }
+    val (out, rounds) = Checkpoints.iterate(pinned(frame), 4)(_ => false) { (s, r) =>
+      assert(ids.filter(held) === Seq(idOf(s)), s"round $r started holding more than its input")
+      pinned(s.filter($"x" > r))
+    }
+    assert(rounds === 4 && ids.size === 5)
+    assert(ids.filter(held) === Seq(idOf(out)), "the final state's checkpoint is the only one held")
+    assert(out.count() === 996)
+  }
+
+  test("iterate keeps an older checkpoint a lazy state still derives from") {
+    var first = -1
+    val (out, _) = Checkpoints.iterate(frame, 4)(_ => false) { (s, r) =>
+      if (r == 1) { val c = Checkpoints.local(s); first = idOf(c); c }
+      else {
+        assert(held(first), s"round $r lost the checkpoint its lazy input reads")
+        s.filter($"x" > r)
+      }
+    }
+    assert(held(first))
+    assert(out.count() === 996)
+    // a lazy checkpoint keeps the eager one it reads until it runs
+    var eagerId = -1
+    val (lazyOut, _) = Checkpoints.iterate(frame, 2)(_ => false) { (s, r) =>
+      if (r == 1) { val c = Checkpoints.local(s); eagerId = idOf(c); c }
+      else Checkpoints.local(s.filter($"x" > 10), eager = false)
+    }
+    assert(held(eagerId), "the unrun lazy checkpoint's input was released")
+    assert(lazyOut.count() === 990)
+  }
+
+  test("iterate never releases a checkpoint made before the loop") {
+    val before = Checkpoints.local(frame)
+    var madeInInit = -1
+    val (out, _) = Checkpoints.iterate(before, 3)(_ => false) { (s, r) =>
+      Checkpoints.local(s.filter($"x" > r))
+    }
+    assert(held(idOf(before)), "the loop released its caller's input")
+    assert(out.count() === 997)
+    // a checkpoint `init` makes is the loop's: it goes with round 1
+    Checkpoints.iterate({ val c = Checkpoints.local(before.select($"x")); madeInInit = idOf(c); c },
+      2)(_ => false) { (s, r) => Checkpoints.local(s.filter($"x" > r)) }
+    assert(madeInInit >= 0 && !held(madeInInit) && held(idOf(before)))
+    // an enclosing scope's checkpoint is left to that scope
+    var outer = -1
+    Checkpoints.scoped {
+      val o = Checkpoints.local(frame)
+      outer = idOf(o)
+      Checkpoints.scoped(Checkpoints.iterate(o, 2)(_ => false) { (s, r) =>
+        Checkpoints.local(s.filter($"x" > r))
+      }._2)
+      assert(held(outer))
+    }
+    assert(!held(outer))
+  }
+
+  test("iterate tests the round cap before done and stops at done") {
+    var probes = 0
+    val (capped, n) = Checkpoints.iterate(0, 3) { s => probes += 1; s >= 10 }((s, _) => s + 1)
+    assert((capped, n, probes) === ((3, 3, 3)), "a spent budget ran the convergence test")
+    val (stopped, m) = Checkpoints.iterate(0, 10)(_ >= 2)((s, _) => s + 1)
+    assert((stopped, m) === ((2, 2)))
+  }
+
+  test("an exception in iterate releases what the loop made") {
+    val before = Checkpoints.local(frame)
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Int]
+    intercept[IllegalStateException] {
+      Checkpoints.iterate(before, 5)(_ => false) { (s, r) =>
+        if (r == 3) throw new IllegalStateException("boom")
+        val c = Checkpoints.local(s.filter($"x" > r))
+        ids += idOf(c)
+        s.unionAll(c) // keeps every round's checkpoint reachable
+      }
+    }
+    assert(ids.size === 2 && ids.forall(!held(_)))
+    assert(held(idOf(before)))
+  }
+
   test("the iterative graph loops hold a round-independent number of checkpoints") {
-    // a 400-node chain plus a 50-node ring: with k = 2 the chain peels
-    // one node per end per round and the ring is the core, so every
-    // loop below still runs at 8 rounds
-    val chain = (0L until 399L).map(i => (i, i + 1))
-    val ring = (0L until 50L).map(i => (1000L + i, 1000L + (i + 1) % 50))
-    val half = (chain ++ ring).toDF("src", "dst")
-    val sym = half.union(half.select($"dst".as("src"), $"src".as("dst")))
-    val knn = sym.select($"src".as("qid"), $"dst".as("vec_id"), lit(1L).as("rank"))
-    val seeds = Seq((0L, 7L)).toDF("node", "label")
-    // the delta forms peel or relax only what a delta touched, so their
-    // round count is set by the delta: a pendant chain of `r` nodes off
-    // the ring, and a shortcut from the seed to the chain's middle
-    def pendant(r: Int) = (0 until r).map(i => (2000L + i, if (i == 0) 1000L else 1999L + i))
-    val shortcut = Seq((0L, 200L), (200L, 0L)).toDF("src", "dst")
-    val loops: Seq[(String, Int => DataFrame)] = Seq(
-      "kCore" -> (r => Graph.kCore(sym, "src", "dst", k = 2, rounds = r)),
-      "kCoreHalf" -> (r => Graph.kCoreHalf(half, k = 2, rounds = r)),
-      "kCoreDelta" -> { r =>
-        val before = ring.toDF("src", "dst")
-        val old = Graph.kCoreHalf(before, k = 2, rounds = 4)
-        Graph.kCoreDelta(before.union(pendant(r).toDF("src", "dst")), old, k = 2)
-      },
-      "bfsHops" -> (r => Graph.bfsHops(sym, "src", "dst", Seq(0L), maxHops = r)),
-      "bfsHopsDelta" -> { r =>
-        val old = Graph.bfsHops(sym, "src", "dst", Seq(0L), maxHops = r)
-        Graph.bfsHopsDelta(sym.union(shortcut), "src", "dst", old, shortcut, maxHops = r)
-      },
-      "labelPropagation" -> (r => Graph.labelPropagation(knn, seeds, rounds = r)),
-      "pageRank" -> (r => Graph.pageRank(sym, "src", "dst", iterations = r, checkpointEvery = 2)))
+    // every round loop whose result does not grow with rounds; the walks
+    // are left out, since their trace reads every step's frontier
     val sc = spark.sparkContext
-    def heldAfter(f: Int => DataFrame, rounds: Int): Int = Checkpoints.scoped {
+    def heldAfter(run: Int => DataFrame, rounds: Int): Int = Checkpoints.scoped {
       val before = sc.getPersistentRDDs.size
-      f(rounds).count()
+      run(rounds).count()
       sc.getPersistentRDDs.size - before
     }
-    val grew = loops.flatMap { case (name, f) =>
-      val (at4, at8) = (heldAfter(f, 4), heldAfter(f, 8))
-      if (at8 > at4) Some(s"$name held $at4 at 4 rounds, $at8 at 8") else None
+    val grew = LoopFixtures.loops(spark).filterNot(_.traced).flatMap { l =>
+      val (atLo, atHi) = (heldAfter(l.run, l.rounds), heldAfter(l.run, 2 * l.rounds))
+      if (atHi > atLo) Some(s"${l.name} held $atLo at ${l.rounds} rounds, $atHi at ${2 * l.rounds}")
+      else None
     }
     assert(grew.isEmpty, grew.mkString("; "))
   }

@@ -111,7 +111,7 @@ class EdgeLogCrashSpec extends SparkSpec {
   for (m <- maintainers)
     test(s"${m.name}: a replay heals every crash window of an insert and a delete batch " +
         "to the uncrashed twin; partitions the batch does not touch stay byte-identical") {
-      val tmp = Files.createTempDirectory(s"graft-crash-${m.name}")
+      val tmp = tempDir(s"graft-crash-${m.name}")
       def dir(n: String): String = tmp.resolve(n).toString
       def snap(n: String): String = { FileUtils.copyDirectory(new File(dir("twin")), new File(dir(n))); dir(n) }
       inserts.take(2).zipWithIndex.foreach { case (b, i) => assert(m.run(dir("twin"), b, i + 1L, 1L)) }

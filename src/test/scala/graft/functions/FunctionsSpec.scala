@@ -458,7 +458,7 @@ class FunctionsSpec extends SparkSpec {
     val direct = TextAnalysis.bm25Search(dd, "text", "doc_id",
       Seq("alpha", "zeta"), topK = 25).as[(Long, Long)].collect().toSeq
 
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv").toString
+    val idx = tempDir("graft-inv").toString
     TextAnalysis.writeInvertedIndex(dd, "text", "doc_id", idx, buckets = 16)
     val fromIndex = TextAnalysis.bm25SearchFromIndex(spark, idx,
       Seq("alpha", "zeta"), topK = 25)
@@ -500,9 +500,9 @@ class FunctionsSpec extends SparkSpec {
     def rank(path: String) = TextAnalysis.bm25SearchFromIndex(spark, path, q,
       topK = 25).as[(Long, Long)].collect().toSeq
     // one-shot rebuild over everything = the reference ranking
-    val full = java.nio.file.Files.createTempDirectory("graft-inv-full").toString
+    val full = tempDir("graft-inv-full").toString
     TextAnalysis.writeInvertedIndex(all, "text", "doc_id", full, buckets = 16)
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-app").toString
+    val idx = tempDir("graft-inv-app").toString
     TextAnalysis.writeInvertedIndex(base, "text", "doc_id", idx, buckets = 16)
     TextAnalysis.appendToInvertedIndex(b1, "text", "doc_id", idx, buckets = 16,
       batchId = Some(0L))
@@ -557,7 +557,7 @@ class FunctionsSpec extends SparkSpec {
       .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
 
     // inverted index vs a plain-Scala tokenize of the same 120 docs
-    val inv = java.nio.file.Files.createTempDirectory("graft-op-inv").toString
+    val inv = tempDir("graft-op-inv").toString
     TextAnalysis.writeInvertedIndex(base, "text", "doc_id", inv, buckets = 8)
     TextAnalysis.appendToInvertedIndex(b1, "text", "doc_id", inv,
       buckets = 8, batchId = Some(0L))
@@ -580,7 +580,7 @@ class FunctionsSpec extends SparkSpec {
       "stats diverged from the plain tokenize (token-less docs count toward n)")
 
     // LSH index vs bandKeys / withHashedShingles over the same docs
-    val lsh = java.nio.file.Files.createTempDirectory("graft-op-lsh").toString
+    val lsh = tempDir("graft-op-lsh").toString
     Dedup.writeLshIndex(base, "text", "doc_id", lsh,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 8)
     Dedup.appendToLshIndex(b1, "text", "doc_id", lsh,
@@ -617,12 +617,12 @@ class FunctionsSpec extends SparkSpec {
     val q = Seq("alpha", "zeta")
     def rank(path: String) = TextAnalysis.bm25SearchFromIndex(spark, path, q,
       topK = 20).as[(Long, Long)].collect().toSeq
-    val baseOnly = java.nio.file.Files.createTempDirectory("graft-inv-b").toString
+    val baseOnly = tempDir("graft-inv-b").toString
     TextAnalysis.writeInvertedIndex(base, "text", "doc_id", baseOnly, buckets = 16)
-    val full = java.nio.file.Files.createTempDirectory("graft-inv-f").toString
+    val full = tempDir("graft-inv-f").toString
     TextAnalysis.writeInvertedIndex(all, "text", "doc_id", full, buckets = 16)
 
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-c").toString
+    val idx = tempDir("graft-inv-c").toString
     TextAnalysis.writeInvertedIndex(base, "text", "doc_id", idx, buckets = 16)
     TextAnalysis.appendToInvertedIndex(b1, "text", "doc_id", idx, buckets = 16,
       batchId = Some(5L))
@@ -645,7 +645,7 @@ class FunctionsSpec extends SparkSpec {
     // pre-batch-convention layout: postings under flat bucket=K/ with no
     // batch level — an append would write a mixed-depth partition tree
     // that bricks partition discovery for the whole index. Must refuse.
-    val old = java.nio.file.Files.createTempDirectory("graft-inv-old").toString
+    val old = tempDir("graft-inv-old").toString
     base.select(col("doc_id"), lit("alpha").as("t"), lit(1L).as("tf"),
         lit(5L).as("len"), pmod(col("doc_id"), lit(16)).as("bucket"))
       .write.partitionBy("bucket").parquet(s"$old/postings")
@@ -668,9 +668,9 @@ class FunctionsSpec extends SparkSpec {
     val q = Seq("alpha", "zeta")
     def rank(path: String) = TextAnalysis.bm25SearchFromIndex(spark, path, q,
       topK = 20).as[(Long, Long)].collect().toSeq
-    val clean = java.nio.file.Files.createTempDirectory("graft-inv-cl").toString
+    val clean = tempDir("graft-inv-cl").toString
     TextAnalysis.writeInvertedIndex(base, "text", "doc_id", clean, buckets = 16)
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-or").toString
+    val idx = tempDir("graft-inv-or").toString
     TextAnalysis.writeInvertedIndex(base, "text", "doc_id", idx, buckets = 16)
     TextAnalysis.appendToInvertedIndex(all.filter(col("doc_id") >= 100),
       "text", "doc_id", idx, buckets = 16, batchId = Some(5L))
@@ -699,7 +699,7 @@ class FunctionsSpec extends SparkSpec {
       (2L, "completely different text with other words entirely disjoint tokens here"),
       (3L, "yet another unrelated document about mountains rivers and weather"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-lsh-idx").toString
+    val idx = tempDir("graft-lsh-idx").toString
     Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
 
@@ -728,7 +728,7 @@ class FunctionsSpec extends SparkSpec {
     val corpus = Seq(
       (1L, "seed corpus document about entirely unrelated matters and topics"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-lsh-replay").toString
+    val idx = tempDir("graft-lsh-replay").toString
     Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     val batch = Seq(
@@ -762,7 +762,7 @@ class FunctionsSpec extends SparkSpec {
     }
     val base = vecs.filter(_._1 < 30).toDF("vec_id", "vec")
     val later = vecs.filter(_._1 >= 30).toDF("vec_id", "vec")
-    val pqIdx = java.nio.file.Files.createTempDirectory("graft-pq-replay").toString
+    val pqIdx = tempDir("graft-pq-replay").toString
     Similarity.writeIvfPqIndex(base, pqIdx, centroidEvery = 10, m = 4, dim = 16)
     Similarity.appendToIvfPqIndex(base, later, pqIdx,
       centroidEvery = 10, m = 4, dim = 16, batchId = Some(0L))
@@ -783,7 +783,7 @@ class FunctionsSpec extends SparkSpec {
     // can see the batch's OWN index rows, an intra-batch near-dup pair is
     // suddenly flagged against its indexed copy and the verdicts diverge
     val tpl = "the quick brown fox jumps over the lazy dog again and again today"
-    val idx = java.nio.file.Files.createTempDirectory("graft-lsh-det").toString
+    val idx = tempDir("graft-lsh-det").toString
     Dedup.writeLshIndex(
       Seq((1L, "seed corpus document about entirely unrelated matters and topics"))
         .toDF("doc_id", "text"),
@@ -836,7 +836,7 @@ class FunctionsSpec extends SparkSpec {
     val later = vecs.filter(_._1 >= 800L).toDF("vec_id", "vec").coalesce(1)
     val all = vecs.toDF("vec_id", "vec").coalesce(1)
     val queries = vecs.take(5).toDF("qid", "qvec")
-    val idx = java.nio.file.Files.createTempDirectory("graft-int8").toString
+    val idx = tempDir("graft-int8").toString
 
     Similarity.writeInt8Index(corpus, idx)
     Similarity.appendToInt8Index(later, idx, batchId = Some(0L))
@@ -855,7 +855,7 @@ class FunctionsSpec extends SparkSpec {
 
     // the compressed-scan claim, measured: the codes layout bit-packs
     // below the float bytes it replaces
-    val floats = java.nio.file.Files.createTempDirectory("graft-int8f").toString
+    val floats = tempDir("graft-int8f").toString
     all.write.mode("overwrite").parquet(floats)
     def bytes(p: String): Long = {
       def walk(f: java.io.File): Long =
@@ -1050,7 +1050,7 @@ class FunctionsSpec extends SparkSpec {
 
     // materialized index: same ranking, and the probe becomes a
     // partition filter on the codes read (unprobed cells never opened)
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val idx = tempDir("graft-ivfpq").toString
     Similarity.writeIvfPqIndex(corpus, idx, centroidEvery = 10, m = 4, dim = 16)
     val fromIndex = Similarity.ivfPqTopKFromIndex(spark, queries, corpus, idx,
       k = 5, centroidEvery = 10, nprobe = 2, m = 4, dim = 16)
@@ -1182,7 +1182,7 @@ class FunctionsSpec extends SparkSpec {
     def rank(path: String) = TextAnalysis.bm25SearchFromIndex(spark, path, q,
       topK = 25).as[(Long, Long)].collect().toSeq
 
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-del").toString
+    val idx = tempDir("graft-inv-del").toString
     TextAnalysis.writeInvertedIndex(all.filter(col("doc_id") < 200),
       "text", "doc_id", idx, buckets = 16)
     TextAnalysis.appendToInvertedIndex(
@@ -1197,7 +1197,7 @@ class FunctionsSpec extends SparkSpec {
     assert(st.partitionsUntouched > 0, "a 4-doc delete must not touch every partition")
 
     // the reference: a one-shot rebuild over exactly the survivors
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-inv-del-rb").toString
+    val rebuilt = tempDir("graft-inv-del-rb").toString
     TextAnalysis.writeInvertedIndex(all.filter(!col("doc_id").isin(deadIds: _*)),
       "text", "doc_id", rebuilt, buckets = 16)
     assert(TextAnalysis.readIndexStats(spark, idx) ===
@@ -1244,7 +1244,7 @@ class FunctionsSpec extends SparkSpec {
     // delete ids live below BaseBatch: a later append still allocates
     // from the append namespace and the index keeps ranking exactly
     TextAnalysis.appendToInvertedIndex(b3, "text", "doc_id", idx, buckets = 16)
-    val rebuilt2 = java.nio.file.Files.createTempDirectory("graft-inv-del-r2").toString
+    val rebuilt2 = tempDir("graft-inv-del-r2").toString
     TextAnalysis.writeInvertedIndex(
       all.filter(!col("doc_id").isin(deadIds: _*)).unionByName(b3),
       "text", "doc_id", rebuilt2, buckets = 16)
@@ -1263,7 +1263,7 @@ class FunctionsSpec extends SparkSpec {
       "predecessor's resolution; healing a crashed batch restores exact stats") {
     val all = (0L until 80L).map(i => (i, s"alpha words w${i % 5} here"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-proto").toString
+    val idx = tempDir("graft-inv-proto").toString
     TextAnalysis.writeInvertedIndex(all, "text", "doc_id", idx, buckets = 8)
     // matched-nothing AD-HOC delete (auto id): leaves NO trace — no
     // pending batch, no committed slot, no stats-table growth
@@ -1298,7 +1298,7 @@ class FunctionsSpec extends SparkSpec {
       Seq(9999L).toDF("doc_id"), idx, batchId = Some(7L))
     assert(TextAnalysis.pendingDeletes(spark, idx).isEmpty,
       "a matched-nothing stream batch must commit, not dangle")
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-inv-proto-rb").toString
+    val rebuilt = tempDir("graft-inv-proto-rb").toString
     TextAnalysis.writeInvertedIndex(
       all.filter(!col("doc_id").isin(10L, 20L)), "text", "doc_id", rebuilt,
       buckets = 8)
@@ -1316,14 +1316,14 @@ class FunctionsSpec extends SparkSpec {
     // both posting copies
     val base = (0L until 60L).map(i => (i, s"alpha words w${i % 5} here"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-dup").toString
+    val idx = tempDir("graft-inv-dup").toString
     TextAnalysis.writeInvertedIndex(base, "text", "doc_id", idx, buckets = 8)
     // doc 50 re-ingested verbatim (identical len) in a second committed batch
     TextAnalysis.appendToInvertedIndex(base.filter(col("doc_id") === 50L),
       "text", "doc_id", idx, buckets = 8, batchId = Some(0L))
     val st = TextAnalysis.deleteFromInvertedIndex(spark, Seq(50L), idx)
     assert(st.rowsDeleted > 0L)
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-inv-dup-rb").toString
+    val rebuilt = tempDir("graft-inv-dup-rb").toString
     TextAnalysis.writeInvertedIndex(base.filter(col("doc_id") =!= 50L),
       "text", "doc_id", rebuilt, buckets = 8)
     assert(TextAnalysis.readIndexStats(spark, idx) ===
@@ -1347,14 +1347,14 @@ class FunctionsSpec extends SparkSpec {
       n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 500, buckets = 16)
       .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
 
-    val idx = java.nio.file.Files.createTempDirectory("graft-lsh-del").toString
+    val idx = tempDir("graft-lsh-del").toString
     Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     assert(verdicts(idx) === Set((1000L, 5L), (1000L, 25L), (1000L, 45L)))
 
     val st = Dedup.deleteFromLshIndex(spark, dead, idx)
     assert(st.bands.rowsDeleted > 0 && st.shingles.rowsDeleted > 0)
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-lsh-del-rb").toString
+    val rebuilt = tempDir("graft-lsh-del-rb").toString
     Dedup.writeLshIndex(corpus.filter(!col("doc_id").isin(dead: _*)),
       "text", "doc_id", rebuilt, n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     assert(verdicts(idx) === verdicts(rebuilt))
@@ -1379,7 +1379,7 @@ class FunctionsSpec extends SparkSpec {
     val q = Seq("alpha", "zeta")
     def rank(p: String) = TextAnalysis.bm25SearchFromIndex(spark, p, q,
       topK = 25).as[(Long, Long)].collect().toSeq
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-cmp").toString
+    val idx = tempDir("graft-inv-cmp").toString
     TextAnalysis.writeInvertedIndex(all.filter(col("doc_id") < 120),
       "text", "doc_id", idx, buckets = 16)
     TextAnalysis.appendToInvertedIndex(
@@ -1425,7 +1425,7 @@ class FunctionsSpec extends SparkSpec {
       buckets = 16, batchId = Some(5L))
     TextAnalysis.deleteFromInvertedIndex(spark, Seq(80L).toDF("doc_id"),
       idx, batchId = Some(3L))
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-inv-cmp-rb").toString
+    val rebuilt = tempDir("graft-inv-cmp-rb").toString
     TextAnalysis.writeInvertedIndex(
       all.filter(!col("doc_id").isin(30L, 150L, 80L)).unionByName(b2),
       "text", "doc_id", rebuilt, buckets = 16)
@@ -1458,7 +1458,7 @@ class FunctionsSpec extends SparkSpec {
       spark, probe, "text", "doc_id", path,
       n = 3, bands = 4, rowsPerBand = 4, minJaccardMilli = 500, buckets = 16)
       .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
-    val lsh = java.nio.file.Files.createTempDirectory("graft-lsh-cmp").toString
+    val lsh = tempDir("graft-lsh-cmp").toString
     Dedup.writeLshIndex(corpus.filter(col("doc_id") < 40), "text", "doc_id",
       lsh, n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     Dedup.appendToLshIndex(corpus.filter(col("doc_id") >= 40), "text",
@@ -1485,7 +1485,7 @@ class FunctionsSpec extends SparkSpec {
     }.toDF("vec_id", "vec")
     val queries = vecs.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    val i8 = java.nio.file.Files.createTempDirectory("graft-i8-cmp").toString
+    val i8 = tempDir("graft-i8-cmp").toString
     Similarity.writeInt8Index(vecs.filter(col("vec_id") < 100), i8)
     Similarity.appendToInt8Index(vecs.filter(col("vec_id") >= 100), i8,
       batchId = Some(0L))
@@ -1501,7 +1501,7 @@ class FunctionsSpec extends SparkSpec {
         batchId = Some(0L))
     }
 
-    val pq = java.nio.file.Files.createTempDirectory("graft-pq-cmp").toString
+    val pq = tempDir("graft-pq-cmp").toString
     Similarity.writeIvfPqIndex(vecs.filter(col("vec_id") < 100), pq,
       centroidEvery = 10, m = 4, dim = dim)
     Similarity.appendToIvfPqIndex(vecs.filter(col("vec_id") < 100),
@@ -1534,13 +1534,13 @@ class FunctionsSpec extends SparkSpec {
     val dead = Seq(13L, 57L, 88L)
     val survivors = vecs.filter(!col("vec_id").isin(dead: _*))
 
-    val i8 = java.nio.file.Files.createTempDirectory("graft-i8-del").toString
+    val i8 = tempDir("graft-i8-del").toString
     Similarity.writeInt8Index(vecs.filter(col("vec_id") < 100), i8)
     Similarity.appendToInt8Index(vecs.filter(col("vec_id") >= 100), i8,
       batchId = Some(0L))
     val st8 = Similarity.deleteFromInt8Index(spark, dead, i8)
     assert(st8.rowsDeleted === 3L)
-    val i8rb = java.nio.file.Files.createTempDirectory("graft-i8-del-rb").toString
+    val i8rb = tempDir("graft-i8-del-rb").toString
     Similarity.writeInt8Index(survivors, i8rb)
     def r8(p: String) = Similarity.int8TopKFromIndex(spark, queries, p, k = 5)
       .orderBy("qid", "rank")
@@ -1548,7 +1548,7 @@ class FunctionsSpec extends SparkSpec {
     assert(r8(i8) === r8(i8rb))
     assert(!r8(i8).exists(r => dead.contains(r._2)), "a deleted vector ranked")
 
-    val pq = java.nio.file.Files.createTempDirectory("graft-pq-del").toString
+    val pq = tempDir("graft-pq-del").toString
     Similarity.writeIvfPqIndex(vecs.filter(col("vec_id") < 100), pq,
       centroidEvery = 10, m = 4, dim = dim)
     Similarity.appendToIvfPqIndex(vecs.filter(col("vec_id") < 100),
@@ -1557,7 +1557,7 @@ class FunctionsSpec extends SparkSpec {
     val stPq = Similarity.deleteFromIvfPqIndex(spark, dead, pq)
     assert(stPq.rowsDeleted === 3L * 4L, "one code row per subspace per vector")
     assert(stPq.partitionsUntouched > 0)
-    val pqRb = java.nio.file.Files.createTempDirectory("graft-pq-del-rb").toString
+    val pqRb = tempDir("graft-pq-del-rb").toString
     Similarity.writeIvfPqIndex(survivors.filter(col("vec_id") < 100), pqRb,
       centroidEvery = 10, m = 4, dim = dim)
     Similarity.appendToIvfPqIndex(vecs.filter(col("vec_id") < 100),
@@ -1589,7 +1589,7 @@ class FunctionsSpec extends SparkSpec {
 
     // a lived-in index: base + append + delete, then the staleness alarm
     // fires and the operator rebuilds over the survivors
-    val pq = java.nio.file.Files.createTempDirectory("graft-pq-rb").toString
+    val pq = tempDir("graft-pq-rb").toString
     Similarity.writeIvfPqIndex(vecs.filter(col("vec_id") < 100), pq,
       centroidEvery = 10, m = 4, dim = dim)
     Similarity.appendToIvfPqIndex(vecs.filter(col("vec_id") < 100),
@@ -1600,7 +1600,7 @@ class FunctionsSpec extends SparkSpec {
       centroidEvery = 10, m = 4, dim = dim)
     // the reference: writeIvfPqIndex from scratch over the same corpus;
     // BOTH arms search with the rebuild corpus as codebook source
-    val pqFresh = java.nio.file.Files.createTempDirectory("graft-pq-rb-f").toString
+    val pqFresh = tempDir("graft-pq-rb-f").toString
     Similarity.writeIvfPqIndex(survivors, pqFresh,
       centroidEvery = 10, m = 4, dim = dim)
     def rPq(p: String) = Similarity.ivfPqTopKFromIndex(spark, queries,
@@ -1642,13 +1642,13 @@ class FunctionsSpec extends SparkSpec {
     assert(rPq(pq) === rPq(pqFresh), "post-rebuild append diverged")
 
     // int8: same protocol, self-contained codes
-    val i8 = java.nio.file.Files.createTempDirectory("graft-i8-rb").toString
+    val i8 = tempDir("graft-i8-rb").toString
     Similarity.writeInt8Index(vecs.filter(col("vec_id") < 100), i8)
     Similarity.appendToInt8Index(vecs.filter(col("vec_id") >= 100), i8,
       batchId = Some(0L))
     Similarity.deleteFromInt8Index(spark, dead, i8)
     Similarity.rebuildInt8Index(spark, survivors, i8, targetFiles = 4)
-    val i8Fresh = java.nio.file.Files.createTempDirectory("graft-i8-rb-f").toString
+    val i8Fresh = tempDir("graft-i8-rb-f").toString
     Similarity.writeInt8Index(survivors, i8Fresh)
     def r8(p: String) = Similarity.int8TopKFromIndex(spark, queries, p, k = 5)
       .orderBy("qid", "rank").as[(Long, Long, Long, Long)].collect().toSeq

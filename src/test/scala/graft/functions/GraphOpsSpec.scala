@@ -62,7 +62,7 @@ class GraphOpsSpec extends SparkSpec {
   private def bucketed(df: org.apache.spark.sql.DataFrame, table: String,
       key: String): org.apache.spark.sql.DataFrame = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val path = java.nio.file.Files.createTempDirectory(s"graft-$table").toString
+    val path = tempDir(s"graft-$table").toString
     graft.sinks.Lake.writeBucketed(df, table, path, Seq(key), numBuckets = 8)
     spark.table(table)
   }
@@ -226,7 +226,7 @@ class GraphOpsSpec extends SparkSpec {
     val edges = Graph.copurchaseEdges(graft.sources.Tables.lineitem(spark, d))
     val direct = Graph.hits(edges, "src", "dst", iterations = 3)
       .as[(Long, Long, Long)].collect().toSet
-    val base = java.nio.file.Files.createTempDirectory("graft-hitsedges").toString
+    val base = tempDir("graft-hitsedges").toString
     spark.sql("DROP TABLE IF EXISTS hits_edges_src")
     spark.sql("DROP TABLE IF EXISTS hits_edges_dst")
     graft.sinks.Lake.writeBucketed(edges, "hits_edges_src", s"$base/src",
@@ -426,7 +426,7 @@ class GraphOpsSpec extends SparkSpec {
     val direct = Graph.pageRank(edges, "src", "dst", iterations = 5)
       .as[(Long, Long)].collect().toMap
     spark.sql("DROP TABLE IF EXISTS pr_edges_spec")
-    val base = java.nio.file.Files.createTempDirectory("graft-predges").toString
+    val base = tempDir("graft-predges").toString
     graft.sinks.Lake.writeBucketed(edges, "pr_edges_spec", s"$base/edges",
       Seq("src"), numBuckets = 8)
     val served = Graph.pageRank(spark.table("pr_edges_spec"), "src", "dst",
@@ -539,7 +539,7 @@ class GraphOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val li = graft.sources.Tables.lineitem(spark, d)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-cpw").toString
+    val stateDir = tempDir("graft-cpw").toString
     // three order-batches (split by l_orderkey → COMPLETE baskets, the
     // maintenance contract), applied in sequence
     val batches = (0 to 2).map(r => li.filter(pmod(col("l_orderkey"), lit(3)) === r))
@@ -639,7 +639,7 @@ class GraphOpsSpec extends SparkSpec {
       parts(1) :+ ((200L, 202L)),
       parts(2) :+ ((201L, 202L)))
     val P = 16
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-tri").toString
+    val stateDir = tempDir("graft-tri").toString
     // per-file CRC32 of the count table's data slices, keyed by
     // partition-relative path — the untouched-partition byte-identity probe
     def countCrcs(): Map[String, Long] = {
@@ -790,7 +790,7 @@ class GraphOpsSpec extends SparkSpec {
         Graph.maintainCommunityLabels(spark, dir, edges.toDF("src", "dst"), id,
           rounds = 3, sign = sign)))
     for ((name, maintain) <- maintainers) {
-      val stateDir = java.nio.file.Files.createTempDirectory(s"graft-log-$name").toString
+      val stateDir = tempDir(s"graft-log-$name").toString
       batches.zipWithIndex.foreach { case (b, i) =>
         assert(maintain(stateDir, b, i + 1L, 1L), s"$name: insert batch ${i + 1}")
       }
@@ -827,7 +827,7 @@ class GraphOpsSpec extends SparkSpec {
     val (b1i, b2i) = later.zipWithIndex.partition(_._2 % 2 == 0)
     val (b1, b2) = (b1i.map(_._1), b2i.map(_._1))
     val P = 8
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-triseed").toString
+    val stateDir = tempDir("graft-triseed").toString
     Graph.seedTriangleCounts(spark, stateDir, seedEdges.toDF("src", "dst"),
       partitions = P)
     assert(same(Graph.readTriangleCounts(spark, stateDir).get,
@@ -865,7 +865,7 @@ class GraphOpsSpec extends SparkSpec {
       Seq((900L, 901L)).toDF("src", "dst"), batchId = 3L, partitions = P))
     // legacy r13 layout (counts/v=<id>, no counts/meta): fail fast with
     // the migration pointer instead of silently seeding fresh state
-    val legacyDir = java.nio.file.Files.createTempDirectory("graft-trileg").toString
+    val legacyDir = tempDir("graft-trileg").toString
     new java.io.File(s"$legacyDir/counts/v=3").mkdirs()
     val exLeg = intercept[IllegalArgumentException] {
       Graph.maintainTriangleCounts(spark, legacyDir,
@@ -967,7 +967,7 @@ class GraphOpsSpec extends SparkSpec {
     val (b1, b2) = (b1i.map(_._1), b2i.map(_._1))
     val P = 8
     // triangles: two insert batches + a delete, then fold the log
-    val tri = java.nio.file.Files.createTempDirectory("graft-trilog").toString
+    val tri = tempDir("graft-trilog").toString
     Graph.maintainTriangleCounts(spark, tri, b1.toDF("src", "dst"), 0L, P)
     Graph.maintainTriangleCounts(spark, tri, b2.toDF("src", "dst"), 1L, P)
     val del = Seq(half.head)
@@ -1007,7 +1007,7 @@ class GraphOpsSpec extends SparkSpec {
       "post-fold maintenance diverges from the cold recompute")
 
     // community labels: same shape
-    val lpa = java.nio.file.Files.createTempDirectory("graft-lpalog").toString
+    val lpa = tempDir("graft-lpalog").toString
     Graph.maintainCommunityLabels(spark, lpa, b1.toDF("src", "dst"), 0L,
       rounds = 3, partitions = P)
     Graph.maintainCommunityLabels(spark, lpa, b2.toDF("src", "dst"), 1L,

@@ -69,7 +69,7 @@ class IncrementalClusterSpec extends SparkSpec {
       (5L, tplB.replace("training", "serving")),
       (8L, "a unique document about gardening tools sharing nothing with others"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-inc-cc").toString
+    val idx = tempDir("graft-inc-cc").toString
     Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     val state0 = Curation.connectedComponents(
@@ -151,7 +151,7 @@ class IncrementalClusterSpec extends SparkSpec {
     val tpl = "the quick brown fox jumps over the lazy dog every single day"
     val corpus = Seq((1L, tpl), (2L, tpl.replace("day", "night")))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-inc-stream").toString
+    val idx = tempDir("graft-inc-stream").toString
     Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     var state = Curation.connectedComponents(
@@ -195,7 +195,7 @@ class IncrementalClusterSpec extends SparkSpec {
     val tpl = "the quick brown fox jumps over the lazy dog every single day"
     val corpus = Seq((1L, tpl), (2L, tpl.replace("day", "night")))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-inc-held").toString
+    val idx = tempDir("graft-inc-held").toString
     Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     // the caller keeps its state as its own raw checkpoint and releases
@@ -250,7 +250,7 @@ class IncrementalClusterSpec extends SparkSpec {
       (5L, tplB.replace("training", "serving")),
       (8L, "a unique document about gardening tools sharing nothing with others"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-retract-cc").toString
+    val idx = tempDir("graft-retract-cc").toString
     Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     def pairsOf(docs: org.apache.spark.sql.DataFrame) =
@@ -317,7 +317,7 @@ class IncrementalClusterSpec extends SparkSpec {
     val tplB = "completely different content discussing machine learning model training"
     val v1 = Seq((1L, tplA), (2L, tplA.replace("day", "night")), (4L, tplB))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-lw").toString
+    val idx = tempDir("graft-lw").toString
     Dedup.writeLshIndex(v1, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     // doc 2 is UPDATED: its new text leaves cluster A for cluster B —
@@ -361,7 +361,7 @@ class IncrementalClusterSpec extends SparkSpec {
       (1L, tpl), (2L, tpl.replace("day", "night")),
       (10L, tpl.replace("day", "morning")))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-retract-stream").toString
+    val idx = tempDir("graft-retract-stream").toString
     Dedup.writeLshIndex(corpus, "text", "doc_id", idx,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 16)
     var state = Curation.connectedComponents(

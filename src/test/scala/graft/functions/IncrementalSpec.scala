@@ -50,7 +50,7 @@ class IncrementalSpec extends SparkSpec {
       .collect().toSeq
     val full = collectSummary(
       Incremental.pricingSummary(graft.sources.Tables.lineitem(spark, d)))
-    val base = java.nio.file.Files.createTempDirectory("graft-ivm").toString
+    val base = tempDir("graft-ivm").toString
     val input = MemoryStream[(java.sql.Timestamp, String, String, Double, Double, Double, Double)]
     val delta = input.toDF().toDF("l_shipdate", "l_returnflag", "l_linestatus",
       "l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -115,7 +115,7 @@ class IncrementalSpec extends SparkSpec {
     // with its last copy.
     val docs = graft.sources.Tables.documents(spark, d)
       .select("doc_id", "text", "source", "lang")
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft-ds-lake").toString
+    val lakeDir = tempDir("graft-ds-lake").toString
     docs.write.mode("overwrite").partitionBy("source").parquet(lakeDir)
     val state0 = Incremental.datasheetState(docs, "text", "source", "lang")
     // delete every 7th doc (hits several sources and some duplicate texts)
@@ -152,7 +152,7 @@ class IncrementalSpec extends SparkSpec {
       .select("doc_id", "text", "source", "lang")
     val rows = docs.as[(Long, String, String, String)].collect().toSeq
     val full = collectDatasheet(Curation.datasheet(docs, "text", "source", "lang"))
-    val base = java.nio.file.Files.createTempDirectory("graft-ds-ivm").toString
+    val base = tempDir("graft-ds-ivm").toString
     val input = MemoryStream[(Long, String, String, String)]
     val delta = input.toDF().toDF("doc_id", "text", "source", "lang")
     val q = Incremental.maintainDatasheet(delta, "text", "source", "lang",
@@ -285,7 +285,7 @@ class IncrementalSpec extends SparkSpec {
     def digests(df: org.apache.spark.sql.DataFrame) =
       df.groupBy(col("source"), md5(col("text")).as("digest"))
         .agg(count(lit(1)).as("cnt"))
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-cntpart").toString
+    val stateDir = tempDir("graft-cntpart").toString
     val keys = Seq("source", "digest")
     val parts = 8
     val b0 = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
@@ -355,7 +355,7 @@ class IncrementalSpec extends SparkSpec {
       df.groupBy(col("source"), md5(col("text")).as("digest"))
         .agg(count(lit(1)).as("cnt"))
     val keys = Seq("source", "digest")
-    val base = java.nio.file.Files.createTempDirectory("graft-cntstream").toString
+    val base = tempDir("graft-cntstream").toString
     val input = MemoryStream[(Long, String, String)]
     val delta = input.toDF().toDF("doc_id", "text", "source")
       .select(col("source"), md5(col("text")).as("digest"), lit(1L).as("cnt"))
@@ -384,7 +384,7 @@ class IncrementalSpec extends SparkSpec {
   test("partitioned count table: empty first batch cannot poison the state, " +
       "an all-cancelling table read is None, and a partition-count mismatch " +
       "fails fast") {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-cntedge").toString
+    val stateDir = tempDir("graft-cntedge").toString
     val keys = Seq("k")
     val empty = Seq.empty[(String, Long)].toDF("k", "cnt")
     // batch 0 is EMPTY (streaming routinely delivers empty micro-batches):
@@ -426,7 +426,7 @@ class IncrementalSpec extends SparkSpec {
   test("upsertPartitioned dropKeys: dropped keys leave the table, emptied " +
       "slices lose their directory, a contradictory batch fails loudly, " +
       "replay is marker-detected") {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-upd").toString
+    val stateDir = tempDir("graft-upd").toString
     val keys = Seq("k")
     def read() = Incremental.readCountsPartitioned(spark, stateDir, keys, "v")
       .map(_.as[(Long, Long)].collect().toMap).getOrElse(Map.empty[Long, Long])

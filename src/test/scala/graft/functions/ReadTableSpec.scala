@@ -1,10 +1,7 @@
 package graft.functions
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 
 import graft.SparkSpec
@@ -22,35 +19,6 @@ class ReadTableSpec extends SparkSpec {
     i -> Seq.tabulate(6 + (i % 5).toInt)(k => s"w${(i * 7 + k * 3) % 23}").mkString(" ")
   }
 
-  /** `body`'s result and the number of jobs Spark started while it ran.
-    * Listener events arrive asynchronously, in order: a sentinel job run
-    * afterwards marks the end of the body's events.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val sentinel = "read-table-sentinel"
-    val jobs = new AtomicInteger
-    @volatile var sentinelId = -1
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
-          sentinelId = e.jobId
-        else if (sentinelId < 0) jobs.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelId) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(drained.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   /** The opener's frame equals the plain read's, and opening starts no job. */
@@ -65,14 +33,14 @@ class ReadTableSpec extends SparkSpec {
   }
 
   test("the listener sees the plain read's schema-inference job") {
-    val dir = Files.createTempDirectory("graft-rt-plain").toString
+    val dir = tempDir("graft-rt-plain").toString
     docs.toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     val (_, jobs) = jobsDuring(spark.read.parquet(dir))
     assert(jobs >= 1, "a plain parquet read infers its schema in a job")
   }
 
   test("LSH bands, shingles and params open like the plain read, with no job") {
-    val lsh = Files.createTempDirectory("graft-rt-lsh").toString
+    val lsh = tempDir("graft-rt-lsh").toString
     val all = docs.toDF("doc_id", "text")
     Dedup.writeLshIndex(all.filter($"doc_id" < 40), "text", "doc_id", lsh,
       n = 3, bands = 4, rowsPerBand = 4, buckets = 8)
@@ -82,7 +50,7 @@ class ReadTableSpec extends SparkSpec {
   }
 
   test("BM25 postings, stats, deletes/ and params open like the plain read, with no job") {
-    val bm25 = Files.createTempDirectory("graft-rt-bm25").toString
+    val bm25 = tempDir("graft-rt-bm25").toString
     val all = docs.toDF("doc_id", "text")
     TextAnalysis.writeInvertedIndex(all.filter($"doc_id" < 40), "text", "doc_id", bm25,
       buckets = 8)
@@ -97,7 +65,7 @@ class ReadTableSpec extends SparkSpec {
   }
 
   test("a BM25 index with string doc_ids opens like the plain read, with no job") {
-    val bm25 = Files.createTempDirectory("graft-rt-bm25s").toString
+    val bm25 = tempDir("graft-rt-bm25s").toString
     TextAnalysis.writeInvertedIndex(
       docs.map { case (i, t) => (s"doc-$i", t) }.toDF("doc_id", "text"),
       "text", "doc_id", bm25, buckets = 8)
@@ -108,7 +76,7 @@ class ReadTableSpec extends SparkSpec {
   }
 
   test("a dir with no data file raises the plain read's AnalysisException") {
-    val empty = Files.createTempDirectory("graft-rt-empty")
+    val empty = tempDir("graft-rt-empty")
     Files.createFile(empty.resolve("_SUCCESS"))
     Files.createDirectory(empty.resolve(".hidden"))
     val missing = empty.resolve("absent").toString

@@ -303,7 +303,7 @@ class RecallSpec extends SparkSpec {
 
     // the lived-in index: frozen base + drifted append under the FROZEN
     // centroids/codebooks — the state indexStalenessReport alarms on
-    val idx = java.nio.file.Files.createTempDirectory("graft-pq-drift").toString
+    val idx = tempDir("graft-pq-drift").toString
     Similarity.writeIvfPqIndex(frozen, idx, centroidEvery = 25, m = 4, dim = dim)
     Similarity.appendToIvfPqIndex(frozen, drifted.toDF("vec_id", "vec"), idx,
       centroidEvery = 25, m = 4, dim = dim, batchId = Some(0L))
@@ -314,7 +314,7 @@ class RecallSpec extends SparkSpec {
     Similarity.rebuildIvfPqIndex(spark, emb, idx,
       centroidEvery = 25, m = 4, dim = dim)
     val rebuilt = recall(idx, emb)
-    val fresh = java.nio.file.Files.createTempDirectory("graft-pq-drift-f").toString
+    val fresh = tempDir("graft-pq-drift-f").toString
     Similarity.writeIvfPqIndex(emb, fresh, centroidEvery = 25, m = 4, dim = dim)
     val freshRecall = recall(fresh, emb)
     assert(rebuilt === freshRecall,

@@ -19,7 +19,7 @@ class BucketingSpec extends SparkSpec {
     try {
       spark.sql("DROP TABLE IF EXISTS li_bucketed")
       spark.sql("DROP TABLE IF EXISTS ord_bucketed")
-      val base = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+      val base = tempDir("graft-bucketed").toString
       graft.sinks.Lake.writeBucketed(Tables.lineitem(spark, d),
         "li_bucketed", s"$base/li", Seq("l_orderkey"), numBuckets = 8)
       graft.sinks.Lake.writeBucketed(Tables.orders(spark, d),
@@ -57,7 +57,7 @@ class BucketingSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       spark.sql("DROP TABLE IF EXISTS reg_edges")
-      val base = java.nio.file.Files.createTempDirectory("graft-regbucket").toString
+      val base = tempDir("graft-regbucket").toString
       val edges = graft.functions.Graph.copurchaseEdges(Tables.lineitem(spark, d))
       graft.sinks.Lake.writeBucketed(edges, "reg_edges", s"$base/e",
         Seq("src"), numBuckets = 8)

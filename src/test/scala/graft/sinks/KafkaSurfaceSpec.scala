@@ -53,7 +53,7 @@ class KafkaSurfaceSpec extends SparkSpec {
   }
 
   test("exactly-once recipe: replayed batch ids write exactly once") {
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-ck").toString
+    val checkpoint = tempDir("graft-ck").toString
     val ledger = s"$checkpoint/${Sinks.LedgerSubdir}"
     val writes = scala.collection.mutable.ArrayBuffer[(Long, Long)]() // (batchId, rows)
     val input = MemoryStream[Long]

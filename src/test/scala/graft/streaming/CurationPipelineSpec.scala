@@ -107,8 +107,8 @@ class CurationPipelineSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
   test("crash-restart converges to the never-crashed run's outputs") {
-    val a = Dirs(Files.createTempDirectory("cur_a").toString)
-    val b = Dirs(Files.createTempDirectory("cur_b").toString)
+    val a = Dirs(tempDir("cur_a").toString)
+    val b = Dirs(tempDir("cur_b").toString)
     seedIndex(a.idx); seedIndex(b.idx)
 
     run(a, 0, 4) // "crash" after 4 files
@@ -129,7 +129,7 @@ class CurationPipelineSpec extends SparkSpec {
 
   test("replaying a micro-batch with the same batch id changes nothing") {
     import spark.implicits._
-    val d = Dirs(Files.createTempDirectory("cur_replay").toString)
+    val d = Dirs(tempDir("cur_replay").toString)
     seedIndex(d.idx)
     val gated = StreamingCuration.annotateAndGate(
       Seq((10L, "src0", tpl1), (11L, "src1", tpl2))

@@ -22,9 +22,9 @@ class RecoverySpec extends SparkSpec {
   }
 
   test("windowed agg restart from checkpoint: no lost or duplicated windows") {
-    val src = Files.createTempDirectory("rec_src").toString
-    val out = Files.createTempDirectory("rec_out").toString
-    val ckpt = Files.createTempDirectory("rec_ckpt").toString
+    val src = tempDir("rec_src").toString
+    val out = tempDir("rec_out").toString
+    val ckpt = tempDir("rec_ckpt").toString
 
     def pipeline() = StreamOps.windowedCount(
       AuditTrail.fromLines(Sources.fileLines(spark, src)),

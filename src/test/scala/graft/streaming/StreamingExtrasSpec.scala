@@ -18,8 +18,8 @@ class StreamingExtrasSpec extends SparkSpec {
       "batch (sign = -1) through the same stream lands on the cold " +
       "recompute over the surviving log; a mixed-sign batch fails loudly") {
     import graft.functions.Graph
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-tri-s").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tri-c").toString
+    val stateDir = tempDir("graft-tri-s").toString
+    val ckpt = tempDir("graft-tri-c").toString
     val input = MemoryStream[(Long, Long, Long)]
     val q = Graph.maintainTriangleCountsStream(
       input.toDF().toDF("src", "dst", "sign"), stateDir, ckpt).start()
@@ -100,7 +100,7 @@ class StreamingExtrasSpec extends SparkSpec {
     }
     val corpus = vecs.toDF("vec_id", "vec")
     // serving reads the MATERIALIZED codes, never the float corpus
-    val idx = java.nio.file.Files.createTempDirectory("graft-int8-idx").toString
+    val idx = tempDir("graft-int8-idx").toString
     graft.functions.Similarity.writeInt8Index(corpus, idx)
     val input = MemoryStream[(Long, Array[Float])]
     val got = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
@@ -132,8 +132,8 @@ class StreamingExtrasSpec extends SparkSpec {
     val cliqueB = for (i <- 20L until 30L; j <- (i + 1) until 30L) yield (i, j)
     val b3 = Seq((9L, 20L), (0L, 5L)) // bridge + an already-logged edge (dedup)
     val rounds = 3
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-lpam").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lpam-ck").toString
+    val stateDir = tempDir("graft-lpam").toString
+    val ckpt = tempDir("graft-lpam-ck").toString
     val input = MemoryStream[(Long, Long)]
     val q = Graph.maintainCommunityLabelsStream(
       input.toDF().toDF("src", "dst"), stateDir, ckpt, rounds,
@@ -192,8 +192,8 @@ class StreamingExtrasSpec extends SparkSpec {
     val cliqueB = for (i <- 20L until 30L; j <- (i + 1) until 30L) yield (i, j)
     val extras = Seq((9L, 20L), (0L, 50L))
     val rounds = 3
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-lpam-del").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lpam-del-ck").toString
+    val stateDir = tempDir("graft-lpam-del").toString
+    val ckpt = tempDir("graft-lpam-del-ck").toString
     val input = MemoryStream[(Long, Long, Long)]
     val q = Graph.maintainCommunityLabelsStream(
       input.toDF().toDF("src", "dst", "sign"), stateDir, ckpt, rounds,
@@ -281,7 +281,7 @@ class StreamingExtrasSpec extends SparkSpec {
       (i, Array.tabulate(dim)(j => (((i * 31 + j * 17) % 23).toFloat - 11f) / 7f))
     }
     val dead = Seq(13L, 57L)
-    val idx = java.nio.file.Files.createTempDirectory("graft-i8-dstr").toString
+    val idx = tempDir("graft-i8-dstr").toString
     Similarity.writeInt8Index(vecs.toDF("vec_id", "vec"), idx)
     val input = MemoryStream[Long]
     val q = StreamOps.annDeleteStream(input.toDF().toDF("vec_id"), "vec_id",
@@ -290,7 +290,7 @@ class StreamingExtrasSpec extends SparkSpec {
       input.addData(13L); q.processAllAvailable()
       input.addData(57L); q.processAllAvailable()
     } finally q.stop()
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-i8-dstr-rb").toString
+    val rebuilt = tempDir("graft-i8-dstr-rb").toString
     Similarity.writeInt8Index(
       vecs.filterNot(v => dead.contains(v._1)).toDF("vec_id", "vec"), rebuilt)
     val queries = vecs.take(4).toDF("qid", "qvec")
@@ -308,8 +308,8 @@ class StreamingExtrasSpec extends SparkSpec {
     }
     val base = vecs.filter(_._1 < 50).toDF("vec_id", "vec")
     val later = vecs.filter(_._1 >= 50)
-    val streamedIdx = java.nio.file.Files.createTempDirectory("graft-i8-s").toString
-    val oneshotIdx = java.nio.file.Files.createTempDirectory("graft-i8-b").toString
+    val streamedIdx = tempDir("graft-i8-s").toString
+    val oneshotIdx = tempDir("graft-i8-b").toString
     Similarity.writeInt8Index(base, streamedIdx)
     Similarity.writeInt8Index(vecs.toDF("vec_id", "vec"), oneshotIdx)
 
@@ -341,7 +341,7 @@ class StreamingExtrasSpec extends SparkSpec {
       val rare = if (i % 25 == 0) " zeta" else ""
       (i, s"alpha filler words w${i % 7} here$rare")
     }.toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-s").toString
+    val idx = tempDir("graft-inv-s").toString
     TextAnalysis.writeInvertedIndex(dd, "text", "doc_id", idx, buckets = 8)
     val expect = TextAnalysis.bm25SearchFromIndex(spark, idx, Seq("zeta", "alpha"),
       topK = 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -375,7 +375,7 @@ class StreamingExtrasSpec extends SparkSpec {
       val rare = if (i % 25 == 0) " zeta" else ""
       (i, s"alpha filler words w${i % 7} here$rare")
     }
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-ing").toString
+    val idx = tempDir("graft-inv-ing").toString
     // seed with the first 50 docs, stream the rest in two micro-batches
     TextAnalysis.writeInvertedIndex(all.take(50).toDF("doc_id", "text"),
       "text", "doc_id", idx, buckets = 8)
@@ -387,7 +387,7 @@ class StreamingExtrasSpec extends SparkSpec {
       input.addData(all.slice(50, 100): _*); q.processAllAvailable()
       input.addData(all.slice(100, 150): _*); q.processAllAvailable()
     } finally q.stop()
-    val full = java.nio.file.Files.createTempDirectory("graft-inv-ing-f").toString
+    val full = tempDir("graft-inv-ing-f").toString
     TextAnalysis.writeInvertedIndex(all.toDF("doc_id", "text"),
       "text", "doc_id", full, buckets = 8)
     def rank(p: String) = TextAnalysis.bm25SearchFromIndex(spark, p,
@@ -405,7 +405,7 @@ class StreamingExtrasSpec extends SparkSpec {
       val rare = if (i % 25 == 0) " zeta" else ""
       (i, s"alpha filler words w${i % 7} here$rare")
     }
-    val idx = java.nio.file.Files.createTempDirectory("graft-inv-dstr").toString
+    val idx = tempDir("graft-inv-dstr").toString
     TextAnalysis.writeInvertedIndex(all.toDF("doc_id", "text"),
       "text", "doc_id", idx, buckets = 8)
     // two delete micro-batches: each folds a negated stats row under its
@@ -418,7 +418,7 @@ class StreamingExtrasSpec extends SparkSpec {
       input.addData(25L, 50L); q.processAllAvailable()
       input.addData(101L); q.processAllAvailable()
     } finally q.stop()
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-inv-dstr-f").toString
+    val rebuilt = tempDir("graft-inv-dstr-f").toString
     TextAnalysis.writeInvertedIndex(
       all.filterNot(d => dead.contains(d._1)).toDF("doc_id", "text"),
       "text", "doc_id", rebuilt, buckets = 8)
@@ -434,7 +434,7 @@ class StreamingExtrasSpec extends SparkSpec {
   test("dedupIngestStream catches dups against rows the stream itself wrote") {
     import graft.functions.Dedup
     val tpl = "the quick brown fox jumps over the lazy dog again and again today"
-    val idx = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val idx = tempDir("graft-ingest").toString
     Dedup.writeLshIndex(
       Seq((1L, "seed corpus document about entirely unrelated matters and topics"))
         .toDF("doc_id", "text"),
@@ -481,8 +481,8 @@ class StreamingExtrasSpec extends SparkSpec {
     }
     val base = vecs.filter(_._1 < 60).toDF("vec_id", "vec")
     val later = vecs.filter(_._1 >= 60)
-    val streamedIdx = java.nio.file.Files.createTempDirectory("graft-idx-s").toString
-    val oneshotIdx = java.nio.file.Files.createTempDirectory("graft-idx-b").toString
+    val streamedIdx = tempDir("graft-idx-s").toString
+    val oneshotIdx = tempDir("graft-idx-b").toString
 
     Similarity.writeIvfPqIndex(base, streamedIdx, centroidEvery = 10, m = 4, dim = 16)
     Similarity.writeIvfPqIndex(base, oneshotIdx, centroidEvery = 10, m = 4, dim = 16)
